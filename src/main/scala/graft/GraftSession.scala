@@ -12,29 +12,26 @@ import org.apache.spark.sql.SparkSession
   * - AQE ON: runtime coalescing/skew-join handling is the 100 TB posture.
   * - shuffle.partitions defaults to the local core count, not 200 — at
   *   cluster scale this is expected to be overridden (or left to AQE).
-  * - GraftExtensions ON by default: the canonical session carries the
+  * - GraftExtensions always installed: the session carries the
   *   engine's SQL functions (parse_magnitude / dot_product /
   *   byte_histogram) AND the [[graft.catalyst.ApproxAboveThreshold]]
-  *   safety valve — above ~1 GiB of estimated aggregate input, exact
+  *   safety valve — the one switch between exact and approximate
+  *   percentiles. Above ~1 GiB of estimated aggregate input, exact
   *   `percentile` (a single-reducer value collector) rewrites to the
   *   mergeable approx sketch. Below the threshold nothing changes, so
   *   every oracle-checked result at test scale is identical; at 100 TB
-  *   the exact-percentile barriers (q07/q08/q59/q65, clean-path A1/A2)
-  *   degrade to bounded-memory sketches instead of a straggler/OOM.
+  *   the exact-percentile barriers (q07/q08/q59/q65, clean-path A1/A2,
+  *   profiler quantiles) degrade to bounded-memory sketches instead of
+  *   a straggler/OOM. No caller chooses approximate results itself.
   */
 object GraftSession {
   def local(cpus: Int = 32, shufflePartitions: Int = 32,
-            appName: String = "graft",
-            withGraftExtensions: Boolean = true): SparkSession = {
-    val builder0 = SparkSession.builder()
+            appName: String = "graft"): SparkSession = {
     // Programmatic injection: the spark.sql.extensions config is static
     // (read at SparkContext creation) and silently no-ops on an
     // existing context; withExtensions always applies.
-    val builder =
-      if (withGraftExtensions)
-        builder0.withExtensions(new graft.catalyst.GraftExtensions)
-      else builder0
-    val spark = builder
+    val spark = SparkSession.builder()
+      .withExtensions(new graft.catalyst.GraftExtensions)
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

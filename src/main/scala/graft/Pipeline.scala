@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.Classify
 import graft.io.{CoinGecko, CryptoCsv, Publish}
 import graft.operators.{ClassifyApi, CleanHistorical}
 import graft.profile.{HtmlReport, Profiler}
@@ -8,9 +7,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** §2.5 orchestrator: the reference DAG `[t1, t2] >> t3 >> [t4, t5]`
   * (crypto_etl_pipeline.py:367-392) re-expressed as lazy DataFrame
-  * stages. Where the reference materializes every task boundary to CSV
-  * (P33-35), stages here hand off in-memory Catalyst plans; the
-  * `materialize` flag restores file handoffs for parity debugging.
+  * stages. Stages hand off in-memory Catalyst plans; the cleaned and
+  * classified outputs are always written to CSV, as the reference
+  * writes them (P90, P208), and publish copies them from there.
+  *
+  * Exact vs approximate is not a pipeline setting: the medians and IQR
+  * bounds are exact `percentile` aggregates, and the session's
+  * [[graft.catalyst.ApproxAboveThreshold]] valve alone rewrites them to
+  * sketches when the input is large.
   *
   * Scheduling (the 6-hour cron, P370) stays external — the engine
   * exposes one `run` per invocation.
@@ -22,17 +26,14 @@ object Pipeline {
       apiFixturePath: Option[String], // None → live CoinGecko fetch
       outDir: String,
       order: CleanHistorical.FillOrder = CleanHistorical.ColabOrder,
-      labels: Classify.TrendLabels = Classify.ColabLabels,
-      approxQuantiles: Boolean = false,
-      materialize: Boolean = true,
       publish: Boolean = true,
       reports: Boolean = true,
       /** Multi-partition processing with the explicit row-order contract
         * (SURVEY §7.4.2): stamp `_row_id` on the ordered read, spread the
-        * work across `scalePartitions`, restore order at the output edge.
-        * Same golden output as parity mode (PipelineSpec). */
-      atScale: Boolean = false,
-      scalePartitions: Int = 8)
+        * work across the session's `spark.sql.shuffle.partitions`,
+        * restore order at the output edge. Same golden output as parity
+        * mode (PipelineSpec). */
+      atScale: Boolean = false)
 
   case class Result(
       cleaned: DataFrame, classified: DataFrame,
@@ -45,22 +46,19 @@ object Pipeline {
       case None => CoinGecko.ingest(spark)
     }
     // t2: clean historical data (independent of t1 — two lazy plans)
+    val raw = CryptoCsv.readRaw(spark, cfg.rawCsvPath)
     val cleaned = if (cfg.atScale) {
-      val stamped = graft.io.RowOrder.stamp(CryptoCsv.readRaw(spark, cfg.rawCsvPath))
-        .repartition(cfg.scalePartitions)
-      graft.io.RowOrder.restore(
-        CleanHistorical(stamped, cfg.order, cfg.approxQuantiles))
-    } else CleanHistorical(
-      CryptoCsv.readRaw(spark, cfg.rawCsvPath), cfg.order, cfg.approxQuantiles)
+      val stamped = graft.io.RowOrder.stamp(raw)
+        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      graft.io.RowOrder.restore(CleanHistorical(stamped, cfg.order))
+    } else CleanHistorical(raw, cfg.order)
     // t3: classify API data (depends on t1)
-    val classified = ClassifyApi(api, labels = cfg.labels)
+    val classified = ClassifyApi(api)
 
     val cleanedOut = s"${cfg.outDir}/cleaned_cryptocurrency_data"
     val classifiedOut = s"${cfg.outDir}/api_cryptocurrency_data"
-    if (cfg.materialize || cfg.publish) {
-      CryptoCsv.write(cleaned, cleanedOut)
-      CryptoCsv.write(classified, classifiedOut)
-    }
+    CryptoCsv.write(cleaned, cleanedOut)
+    CryptoCsv.write(classified, classifiedOut)
 
     // t4: profiling reports (full over API data, minimal-ish over
     // historical — reference P261-287, implemented per the working
@@ -71,7 +69,7 @@ object Pipeline {
       HtmlReport.toFile("Cryptos API report",
         Profiler.profile(classified), apiReport)
       HtmlReport.toFile("Cryptos historical report",
-        Profiler.profile(cleaned, approxQuantiles = cfg.approxQuantiles), histReport)
+        Profiler.profile(cleaned), histReport)
       Seq(apiReport, histReport)
     } else Seq.empty
 

@@ -95,14 +95,15 @@ final class SpaceSavingSummary(val capacity: Int) {
   }
 }
 
-/** Native single-pass heavy-hitter top-k: the `TypedImperativeAggregate`
-  * form of [[graft.profile.Profiler.topKSketch]]'s phase 1, named by
-  * that method's scaladoc as the shape a production profiler wants. One
-  * ObjectHashAggregate over the column — partial summaries of ≤
-  * `capacity` entries per partition, merged on the driver-side final
-  * aggregation — instead of a mapPartitions candidate pass PLUS an
-  * exact recount scan. Emits the top `k` (cnt desc, value asc) as
-  * `struct<floor:bigint, top:array<struct<value:string, cnt:bigint,
+/** Native single-pass heavy-hitter top-k behind
+  * [[graft.profile.Profiler.topKNative]]. The profiler reaches it only
+  * through its top-k valve
+  * ([[graft.profile.Profiler.TopkSketchThresholdKey]]: a string column
+  * whose distinct count exceeds the threshold); below it the exact
+  * groupBy runs. One ObjectHashAggregate over the column — partial
+  * summaries of ≤ `capacity` entries per partition, merged on the
+  * driver-side final aggregation. Emits the top `k` (cnt desc, value
+  * asc) as `struct<floor:bigint, top:array<struct<value:string, cnt:bigint,
   * err:bigint>>>`. Two levels of self-certification ride the result:
   *  - `floor == 0` — no value was ever evicted or merge-trimmed
   *    anywhere in the aggregation: the summary tracked EVERY distinct
@@ -112,7 +113,7 @@ final class SpaceSavingSummary(val capacity: Int) {
   *    values churned around it.
   * The caller reads the certificate off the result instead of assuming
   * it, and schedules a recount pass only when the certificate fails
-  * (see [[graft.profile.Profiler.topKSketch]]).
+  * (see [[graft.profile.Profiler.topKNative]]).
   *
   * Beyond-reference scale infrastructure (the reference profiles
   * 4,150-row frames where exact groupBy is free); at 100 TB this is the

@@ -71,10 +71,8 @@ object CryptoCsv {
     spark.read.option("header", "true").schema(schema).csv(path).coalesce(1)
   }
 
-  /** S3: CSV sink (`to_csv(path, index=False)` equivalent). Single file
-    * for golden parity; partitioned writes are the scale path. */
-  def write(df: DataFrame, path: String, singleFile: Boolean = true): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite").option("header", "true").csv(path)
-  }
+  /** S3: CSV sink (`to_csv(path, index=False)` equivalent): one part
+    * file, as golden parity and [[Publish.publishCsv]] expect. */
+  def write(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 }

@@ -28,9 +28,7 @@ object Publish {
   def publishCsv(spark: SparkSession, src: String, destDir: String,
                  baseName: String,
                  ts: String = timestampSuffix()): PublishedFile = {
-    val srcPath = resolveCsv(Paths.get(src))
-    if (!Files.exists(srcPath))
-      throw new java.io.FileNotFoundException(s"missing pipeline output: $src")
+    val srcPath = resolveCsv(src)
     Files.createDirectories(Paths.get(destDir))
     val target = Paths.get(destDir, s"${baseName}_$ts.csv")
     Files.copy(srcPath, target, StandardCopyOption.REPLACE_EXISTING)
@@ -39,11 +37,18 @@ object Publish {
       df.columns.length, Files.size(target))
   }
 
-  /** A Spark `write.csv(dir)` produces a directory; take its part file. */
-  private def resolveCsv(p: Path): Path =
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-"))
-        .toSeq.headOption.getOrElse(p)
-    else p
+  /** A Spark `write.csv(dir)` produces a directory; take its part file.
+    * A missing file, or a directory without a part file, fails here —
+    * before anything is created in the publish directory. */
+  private def resolveCsv(src: String): Path = {
+    val p = Paths.get(src)
+    val found =
+      if (Files.isDirectory(p)) {
+        val ls = Files.list(p)
+        try ls.iterator().asScala.find(_.getFileName.toString.startsWith("part-"))
+        finally ls.close()
+      } else Some(p).filter(Files.exists(_))
+    found.getOrElse(
+      throw new java.io.FileNotFoundException(s"missing pipeline output: $src"))
+  }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions.col
   *
   * The colab (golden) variant median-fills the numeric API columns before
   * classifying (crypto_etl_colab.py:79-82); the Airflow variant does not
-  * (SURVEY.md §2.6.3). `fillFirst` selects the variant; golden default on.
+  * (SURVEY.md §2.6.3). This reproduces the golden colab variant: fill,
+  * then label with the colab sentence-case labels into `tendencia`.
   */
 object ClassifyApi {
 
@@ -18,12 +19,7 @@ object ClassifyApi {
     "price_change_percentage_24h", "market_cap", "total_volume",
     "high_24h", "low_24h")
 
-  def apply(api: DataFrame, fillFirst: Boolean = true,
-            labels: Classify.TrendLabels = Classify.ColabLabels,
-            outputCol: String = "tendencia"): DataFrame = {
-    val base =
-      if (fillFirst) fillWith(api, medians(api, numericCols)) else api
-    base.withColumn(outputCol,
-      Classify.classifyTrend(col("price_change_percentage_24h"), labels))
-  }
+  def apply(api: DataFrame): DataFrame =
+    fillWith(api, medians(api, numericCols)).withColumn("tendencia",
+      Classify.classifyTrend(col("price_change_percentage_24h")))
 }

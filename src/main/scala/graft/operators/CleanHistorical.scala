@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Parsers._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The historical-cleaning pipeline (reference task t2; SURVEY.md §3.2):
@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
   * (the quantile aggregates feed literal values back into the plan, the
   * same dataflow as the reference). Everything else is narrow and fuses
   * into whole-stage codegen. At 100 TB the exact `percentile` barrier is
-  * the watch item — `approxQuantiles=true` switches both barriers to
-  * `approx_percentile` (partial+final, no single fat reducer).
+  * the watch item — the session's [[graft.catalyst.ApproxAboveThreshold]]
+  * valve, the one exact/approximate switch, rewrites both barriers to
+  * `approx_percentile` (partial+final, no single fat reducer) when the
+  * input is large; this code always asks for the exact aggregate.
   */
 object CleanHistorical {
 
@@ -61,23 +63,15 @@ object CleanHistorical {
       parseCurrency(col("market_cap")).as("market_cap")): _*)
   }
 
-  /** A2: exact (or approx, at scale) median per column, one agg pass. */
-  def medians(df: DataFrame, cols: Seq[String],
-              approx: Boolean = false): Map[String, Double] = {
-    val aggs = cols.map { c =>
-      val d = col(c).cast("double")
-      (if (approx) expr(s"approx_percentile(`$c`, 0.5, 10000)").cast("double")
-       else percentile_approx_exact(d)).as(c)
-    }
+  /** A2: exact linear-interpolation median per column (pandas
+    * `.median()` ≡ type-7), one agg pass. */
+  def medians(df: DataFrame, cols: Seq[String]): Map[String, Double] = {
+    val aggs = cols.map(c => percentile(col(c).cast("double"), lit(0.5)).as(c))
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     cols.zipWithIndex.collect {
       case (c, i) if !row.isNullAt(i) => c -> row.getDouble(i)
     }.toMap
   }
-
-  /** Exact linear-interpolation median (pandas `.median()` ≡ type-7). */
-  private def percentile_approx_exact(d: Column): Column =
-    percentile(d, lit(0.5))
 
   /** A3: fill nulls with per-column values, preserving column types. */
   def fillWith(df: DataFrame, fills: Map[String, Double]): DataFrame =
@@ -89,24 +83,15 @@ object CleanHistorical {
   /** A1 + O9: IQR bounds on `current_price` and the outlier flag.
     * `nullIsOutlier` reproduces the Airflow-ordering pandas quirk
     * (`~NaN.between(...)` → True). */
-  def withOutlierFlag(df: DataFrame, nullIsOutlier: Boolean,
-                      approx: Boolean = false): DataFrame = {
+  def withOutlierFlag(df: DataFrame, nullIsOutlier: Boolean): DataFrame = {
     // Quantiles of an empty/all-null column are null in Spark and NaN in
     // pandas. NaN bounds reproduce the pandas behavior downstream:
     // `x.between(NaN, NaN)` is false for every x in both engines, so the
     // flag becomes all-true, matching `~NaN.between()` semantics.
-    val q = if (approx) {
-      val r = df.agg(
-        expr("approx_percentile(current_price, array(0.25, 0.75), 10000)"))
-        .head()
-      if (r.isNullAt(0)) Seq(Double.NaN, Double.NaN) else r.getSeq[Double](0)
-    } else {
-      val r = df.agg(percentile(col("current_price"), lit(0.25)),
-                     percentile(col("current_price"), lit(0.75))).head()
-      Seq(if (r.isNullAt(0)) Double.NaN else r.getDouble(0),
-          if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
-    }
-    val (q1, q3) = (q(0), q(1))
+    val r = df.agg(percentile(col("current_price"), lit(0.25)),
+                   percentile(col("current_price"), lit(0.75))).head()
+    val q1 = if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
+    val q3 = if (r.isNullAt(1)) Double.NaN else r.getDouble(1)
     val iqr = q3 - q1
     val (lo, hi) = (q1 - 1.5 * iqr, q3 + 1.5 * iqr)
     val flag = !col("current_price").between(lo, hi)
@@ -115,18 +100,15 @@ object CleanHistorical {
   }
 
   /** Full t2 pipeline over a raw (all-string) historical frame. */
-  def apply(raw: DataFrame, order: FillOrder = ColabOrder,
-            approxQuantiles: Boolean = false): DataFrame = {
+  def apply(raw: DataFrame, order: FillOrder = ColabOrder): DataFrame = {
     val parsed = parse(raw)
     order match {
       case ColabOrder =>
-        val filled = fillWith(parsed,
-          medians(parsed, numericCols, approxQuantiles))
-        withOutlierFlag(filled, nullIsOutlier = false, approxQuantiles)
+        val filled = fillWith(parsed, medians(parsed, numericCols))
+        withOutlierFlag(filled, nullIsOutlier = false)
       case AirflowOrder =>
-        val flagged = withOutlierFlag(parsed, nullIsOutlier = true,
-          approxQuantiles)
-        fillWith(flagged, medians(parsed, numericCols, approxQuantiles))
+        val flagged = withOutlierFlag(parsed, nullIsOutlier = true)
+        fillWith(flagged, medians(parsed, numericCols))
     }
   }
 }

@@ -54,18 +54,22 @@ case class TableProfile(
     tailRows: Seq[Seq[String]] = Seq.empty)
 
 /** One-pass-per-concern profiler:
-  *   pass 1 — one wide aggregate: every numeric stat (including exact
-  *            quantiles) + string lengths + pairwise correlations + all
-  *            null/zero/negative censuses, for every column at once;
+  *   pass 1 — one wide aggregate: the row count, every numeric stat
+  *            (including exact quantiles) + string lengths + pairwise
+  *            correlations + all null/zero/negative censuses, for every
+  *            column at once;
   *   pass 2 — histograms for all numeric columns in ONE aggregate
   *            (bins need pass-1 min/max — a data-dependent barrier,
   *            same shape as the reference's quantile→fill dataflow);
   *   pass 3 — duplicate-row count (groupBy all columns);
   *   pass 4 — per-string-column top-k (k small; TakeOrdered per column).
   *
-  * At 100 TB: pass 1 is a single scan with partial aggregation except
-  * the exact percentiles (flip `approxQuantiles` on to make the whole
-  * pass map-combinable); histograms stay one scan regardless.
+  * Exact vs approximate is decided by input size alone, never by the
+  * caller: the session's [[graft.catalyst.ApproxAboveThreshold]] valve
+  * rewrites pass 1's exact percentiles to mergeable sketches above its
+  * byte threshold (making the whole pass map-combinable), and
+  * [[TopkSketchThresholdKey]] sends high-cardinality string columns to
+  * the heavy-hitter sketch. Histograms stay one scan regardless.
   */
 object Profiler {
 
@@ -81,18 +85,8 @@ object Profiler {
   val TopkSketchThresholdKey = "spark.graft.profile.topkSketchThresholdDistinct"
   val DefaultTopkSketchThreshold = 100000L
 
-  /** Observable for the valve spec (the ArtifactStore `trainRuns`
-    * pattern): number of sketch-path top-k executions this JVM. */
-  val sketchTopKRuns = new java.util.concurrent.atomic.AtomicLong
-
-  /** Sub-valve INSIDE the sketch path: `true` (default) = the native
-    * single-pass [[graft.catalyst.SpaceSavingTopK]] aggregate;
-    * `false` = the original two-phase mapPartitions candidates + exact
-    * recount. Both produce identical output (ProfilerSpec pins it);
-    * the native path usually does it in ONE scan. */
-  val TopkNativeKey = "spark.graft.profile.topkNativeEnabled"
-
-  /** Observables for the native-path spec: single-pass executions, and
+  /** Observables for the valve and native-path specs (the ArtifactStore
+    * `trainRuns` pattern): sketch-path top-k executions this JVM, and
     * how many of those failed self-certification and recounted. */
   val nativeTopKRuns = new java.util.concurrent.atomic.AtomicLong
   val nativeRecountRuns = new java.util.concurrent.atomic.AtomicLong
@@ -107,32 +101,19 @@ object Profiler {
       .map(r => (r.getString(0), r.getLong(1))).toSeq
 
   /** Heavy-hitter top-k for HIGH-cardinality columns — the sketch side
-    * of the valve. Dispatches on [[TopkNativeKey]] between the native
-    * single-pass aggregate ([[topKNative]], default) and the original
-    * two-phase candidates-then-recount path ([[topKTwoPhase]]); both
-    * keep the same contract — reported counts are exact, approximation
-    * risk lives only in candidate selection, and a column with no
-    * repeated values yields k count-1 values whose pure-lexicographic
-    * selection no frequency sketch can (or should) reproduce. */
-  def topKSketch(df: DataFrame, c: String, topK: Int): Seq[(String, Long)] = {
-    sketchTopKRuns.incrementAndGet()
-    if (df.sparkSession.conf.getOption(TopkNativeKey).forall(_.toBoolean))
-      topKNative(df, c, topK)
-    else topKTwoPhase(df, c, topK)
-  }
-
-  /** Heavy-hitter top-k, native form (the shape [[topKTwoPhase]]'s
-    * scaladoc always named): ONE ObjectHashAggregate pass with the
+    * of the valve. ONE ObjectHashAggregate pass with the
     * [[graft.catalyst.SpaceSavingTopK]] `TypedImperativeAggregate` —
-    * per-partition Space-Saving summaries (≤ capacity entries each)
-    * merged by the aggregation itself, no mapPartitions, no candidate
-    * union job. The result carries its own exactness certificate
-    * (floor == 0 ⟹ every distinct value was tracked with an exact
-    * count — see the expression's scaladoc); only when the certificate
-    * FAILS does a second, candidate-restricted exact recount run — so
-    * the common case is one scan, and the exactness contract of the
-    * two-phase path is kept either way. Shuffle cost: capacity rows
-    * per partition, independent of column cardinality. */
+    * per-partition Space-Saving summaries (Metwally et al. 2005,
+    * ≤ capacity entries each) merged by the aggregation itself. The
+    * result carries its own exactness certificate (floor == 0 ⟹ every
+    * distinct value was tracked with an exact count — see the
+    * expression's scaladoc); only when the certificate FAILS does a
+    * second, candidate-restricted exact recount run. Either way the
+    * reported counts are exact and approximation risk lives only in
+    * candidate selection; a column with no repeated values yields k
+    * count-1 values whose pure-lexicographic selection no frequency
+    * sketch can (or should) reproduce. Shuffle cost: capacity rows per
+    * partition, independent of column cardinality. */
   def topKNative(df: DataFrame, c: String, topK: Int): Seq[(String, Long)] = {
     nativeTopKRuns.incrementAndGet()
     val spark = df.sparkSession
@@ -156,45 +137,6 @@ object Profiler {
         .orderBy(desc("count"), asc(c)).limit(topK).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
     }
-  }
-
-  /** Heavy-hitter top-k, two-phase form (kept as the
-    * `TopkNativeKey = false` fallback and the parity yardstick):
-    *  1. Per-partition Space-Saving (Metwally et al. 2005) with
-    *     capacity max(20·k, 256): each partition emits ≤ capacity
-    *     candidate values, and any value whose in-partition count
-    *     exceeds partitionRows/capacity is GUARANTEED present (the
-    *     Space-Saving bound) — so a genuinely frequent value survives
-    *     into the candidate union.
-    *  2. One exact recount restricted to the broadcast candidate set
-    *     (semi-join): reported counts are EXACT for every candidate.
-    * Shuffle cost: candidates × partitions rows, independent of column
-    * cardinality — vs the exact path's distinct-values × partitions.
-    * The candidate pass is the documented mapPartitions exception
-    * (genuine per-partition imperative state — the state the native
-    * [[graft.catalyst.SpaceSavingTopK]] aggregate now owns). */
-  def topKTwoPhase(df: DataFrame, c: String, topK: Int): Seq[(String, Long)] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cap = math.max(topK * 20, 256)
-    val cand = df.select(col(c)).filter(col(c).isNotNull).as[String]
-      .mapPartitions { it =>
-        val m = scala.collection.mutable.HashMap.empty[String, Long]
-        it.foreach { v =>
-          if (m.contains(v) || m.size < cap) m(v) = m.getOrElse(v, 0L) + 1L
-          else { // evict the current min; the newcomer inherits its count
-            val (mk, mv) = m.minBy(_._2)
-            m.remove(mk)
-            m.update(v, mv + 1L)
-          }
-        }
-        m.keysIterator
-      }.distinct().toDF(c)
-    df.filter(col(c).isNotNull)
-      .join(broadcast(cand), Seq(c), "left_semi")
-      .groupBy(c).count()
-      .orderBy(desc("count"), asc(c)).limit(topK).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
   }
 
   /** Spearman rank-correlation matrix (the profiling suite's second
@@ -235,16 +177,12 @@ object Profiler {
   }
 
   def profile(df: DataFrame, bins: Int = DefaultBins, topK: Int = DefaultTopK,
-              approxQuantiles: Boolean = false,
               withSpearman: Boolean = true): TableProfile = {
     val numCols = df.schema.fields.filter(isNumeric).map(_.name).toSeq
     val strCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
-    val nRows = df.count()
 
     // ---- pass 1: one wide aggregate ----------------------------------
-    def pct(c: String, q: Double): Column =
-      if (approxQuantiles) expr(s"approx_percentile(`$c`, $q, 10000)").cast("double")
-      else expr(s"percentile(`$c`, $q)")
+    def pct(c: String, q: Double): Column = expr(s"percentile(`$c`, $q)")
     val numAggs = numCols.flatMap { c =>
       val d = col(c).cast("double")
       Seq(
@@ -280,12 +218,13 @@ object Profiler {
       corr(col(a).cast("double"), col(b).cast("double")).as(s"$a!corr!$b")
     }
     val aggs = numAggs ++ strAggs ++ corrAggs
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val row = df.agg(count(lit(1)).as("!rows"), aggs: _*).head()
     def g[T](k: String): Option[T] = {
       val i = row.fieldIndex(k)
       if (row.isNullAt(i)) None else Some(row.getAs[T](i))
     }
     def gl(k: String): Long = g[Long](k).getOrElse(0L)
+    val nRows = gl("!rows")
 
     // ---- pass 2: all histograms in one aggregate ---------------------
     val bounds = numCols.map(c => c -> (g[Double](s"$c!min"), g[Double](s"$c!max"))).toMap
@@ -347,7 +286,7 @@ object Profiler {
       .getOrElse(DefaultTopkSketchThreshold)
     val tops = strCols.map { c =>
       c -> (if (topkThresh >= 0 && gl(s"$c!dist") > topkThresh)
-              topKSketch(df, c, topK)
+              topKNative(df, c, topK)
             else topKExact(df, c, topK))
     }.toMap
 

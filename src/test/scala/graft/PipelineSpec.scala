@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.CryptoCsv
 import graft.operators.CleanHistorical
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -55,7 +56,7 @@ class PipelineSpec extends AnyFunSuite {
       apiFixturePath = Some(s"$ref/api_cryptocurrency_data_final.csv"),
       outDir = out,
       order = CleanHistorical.AirflowOrder,
-      reports = false, publish = false, materialize = false))
+      reports = false, publish = false))
     val outliers = result.cleaned.filter("is_outlier").count()
     assert(outliers === 2094) // SURVEY §2.6.1 divergence pinned
   }
@@ -65,7 +66,7 @@ class PipelineSpec extends AnyFunSuite {
     val cfg = Pipeline.Config(
       rawCsvPath = s"$ref/CryptocurrencyData.csv",
       apiFixturePath = Some(s"$ref/api_cryptocurrency_data_final.csv"),
-      outDir = out, reports = false, publish = false, materialize = false)
+      outDir = out, reports = false, publish = false)
     val parity = Pipeline.run(spark, cfg).cleaned.collect()
     val scaled = Pipeline.run(spark, cfg.copy(atScale = true)).cleaned.collect()
     assert(scaled.length === parity.length)
@@ -80,6 +81,67 @@ class PipelineSpec extends AnyFunSuite {
     intercept[java.io.FileNotFoundException] {
       graft.io.Publish.publishCsv(spark, "/nonexistent/file.csv",
         Files.createTempDirectory("graft-pub").toString, "x")
+    }
+    // a Spark output directory without a part file: fails naming the
+    // source, before the publish directory is created
+    val empty = Files.createTempDirectory("graft-pub-empty").toString
+    val dest = Files.createTempDirectory("graft-pub").resolve("published")
+    val e = intercept[java.io.FileNotFoundException] {
+      graft.io.Publish.publishCsv(spark, empty, dest.toString, "x")
+    }
+    assert(e.getMessage.contains(empty), e.getMessage)
+    assert(!Files.exists(dest), "nothing may be published for a missing output")
+  }
+
+  test("synthetic dirty CSV: parity and atScale runs agree, reports and publish land") {
+    // FIXTURES.md §1 quirks: padded headers, quoted comma numbers, `$-`
+    // prices, `-` and empty percents, Million/Billion/Thousand supplies
+    val dir = Files.createTempDirectory("graft-pipeline-synth")
+    val header = "Rank,Coin Name,Symbol, Price ,1h,24h,7d,30d, 24h Volume ," +
+      "Circulating Supply,Total Supply, Market Cap "
+    def quoted(v: String) = "\"" + v + "\""
+    def money(x: Double) = "%,.2f".formatLocal(java.util.Locale.US, x)
+    val rows = (1 to 20).map { i =>
+      val price = if (i % 4 == 0) quoted(" $-   ") else quoted(money(i * 1234.5))
+      val pct = i % 5 match { case 0 => "-"; case 1 => ""; case k => s"${k - 2}.${i % 10}0%" }
+      val supply = i % 6 match {
+        case 0 => "21 Million"; case 1 => "88.3 Billion"; case 2 => "1.17 Thousand"
+        case 3 => "-"; case 4 => s"${i * 1000}"; case _ => "120 Million" }
+      val cap = if (i % 7 == 0) "-" else quoted("$" + money(i * 98765.0) + " ")
+      Seq(s"$i", s"Coin $i", s"C$i", price, pct, "-1.70%", s"${i % 3}.00%", pct,
+        quoted("$" + money(i * 1000.0) + " "), quoted(money(i * 19549.0).dropRight(3)),
+        supply, cap).mkString(",")
+    }
+    val raw = dir.resolve("raw.csv")
+    Files.write(raw, (header +: rows).asJava)
+    val api = dir.resolve("api.csv")
+    Files.write(api, Seq(
+      "symbol,current_price,price_change_percentage_24h,market_cap,total_volume,high_24h,low_24h",
+      "btc,122080.0,6.0,2433107962907,1.0E10,123000.0,121000.0",
+      "eth,4500.0,2.0,540000000000,3.0E9,4600.0,4400.0",
+      "usdt,1.0,0.01,170000000000,,1.0,1.0",
+      "xrp,2.9,-2.5,170000000000,5.0E8,3.0,2.8",
+      "sol,,-6.0,120000000000,0.0,230.0,220.0").asJava)
+
+    val cfg = Pipeline.Config(rawCsvPath = raw.toString,
+      apiFixturePath = Some(api.toString),
+      outDir = dir.resolve("parity").toString)
+    val parity = Pipeline.run(spark, cfg)
+    val scaled = Pipeline.run(spark,
+      cfg.copy(outDir = dir.resolve("scaled").toString, atScale = true))
+
+    val (p, s) = (parity.cleaned.collect(), scaled.cleaned.collect())
+    assert(p.length === 20)
+    assert(p.map(_.getString(0)).toSeq === (1 to 20).map(i => s"Coin $i"))
+    assert(s.toSeq === p.toSeq, "atScale rows or order differ from parity mode")
+    for (r <- Seq(parity, scaled)) {
+      assert(r.cleaned.columns.toSeq === CryptoCsv.cleanSchema.fieldNames.toSeq,
+        "no _row_id may leak into the output")
+      assert(r.reportPaths.size === 2)
+      r.reportPaths.foreach(f => assert(Files.size(Paths.get(f)) > 0, f))
+      assert(r.published.map(_.rows) === Seq(20L, 5L))
+      assert(r.published.map(_.cols) === Seq(12, 8))
+      r.published.foreach(f => assert(Files.exists(Paths.get(f.target)), f.target))
     }
   }
 }

@@ -140,8 +140,8 @@ class CatalystExtensionsSpec extends AnyFunSuite {
 
   test("DEFAULT session carries the extensions: functions registered and the " +
     "percentile rewrite fires above threshold with no opt-in") {
-    // GraftSession.local now defaults withGraftExtensions = true — the
-    // safety valve must be active in the session users (and Bench/Verify)
+    // GraftSession.local always installs the extensions — the safety
+    // valve must be active in the session users (and Bench/Verify)
     // actually get, not only in a specially-built one.
     assert(base.sql("SELECT parse_magnitude('21 Million') AS v").head().getLong(0)
       === 21000000L)

@@ -1,6 +1,7 @@
 package graft.profile
 
 import graft.TestSpark
+import graft.catalyst.ApproxAboveThreshold
 import graft.io.{CryptoCsv, Tables}
 import graft.operators.CleanHistorical
 import org.scalatest.funsuite.AnyFunSuite
@@ -60,8 +61,16 @@ class ProfilerSpec extends AnyFunSuite {
   test("synthetic lineitem profile: correlations + approx mode agree") {
     val li = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
       .select("l_quantity", "l_extendedprice", "l_discount")
-    val exact = Profiler.profile(li)
-    val approx = Profiler.profile(li, approxQuantiles = true)
+    val (exact, exactPlans) = TestSpark.withOptimizedPlans(spark)(Profiler.profile(li))
+    assert(!exactPlans.exists(_.contains("percentile_approx")),
+      "below the valve threshold the quantiles stay exact")
+    // approximate mode is the size valve's call alone: force it
+    spark.conf.set(ApproxAboveThreshold.ThresholdKey, "0")
+    val (approx, approxPlans) =
+      try TestSpark.withOptimizedPlans(spark)(Profiler.profile(li))
+      finally spark.conf.unset(ApproxAboveThreshold.ThresholdKey)
+    assert(approxPlans.exists(_.contains("percentile_approx")),
+      "the forced valve must rewrite the profiler's percentiles")
     val e = exact.numeric.find(_.name === "l_quantity").get
     val a = approx.numeric.find(_.name === "l_quantity").get
     assert(math.abs(e.median.get - a.median.get) <= 1.0) // quantities 1..50
@@ -183,44 +192,22 @@ class ProfilerSpec extends AnyFunSuite {
     assert(!html.contains("<script"), "report should be static")
   }
 
-  test("top-k sketch path equals the exact path where heavy hitters exist") {
-    import org.apache.spark.sql.functions.{col, concat, lit, when}
-    // real low-cardinality skew: every value fits in capacity, no eviction
-    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    assert(Profiler.topKSketch(docs, "source", 10) ===
-      Profiler.topKExact(docs, "source", 10))
-    // high-cardinality skew: ~16k unique cold values (count 1) + 10 hot
-    // values at ~400 each. Per 4-partition split each hot value's
-    // in-partition count (~100) far exceeds rows/capacity (~20), so the
-    // Space-Saving bound guarantees all ten surface as candidates and
-    // the exact recount ranks them identically to the full groupBy.
-    val skewed = spark.range(20000)
-      .select(when(col("id") % 5 === 0,
-          concat(lit("hot"), org.apache.spark.sql.functions.expr("(id div 5) % 10")))
-        .otherwise(concat(lit("cold"), col("id"))).as("v"))
-      .repartition(4)
-    val exact = Profiler.topKExact(skewed, "v", 10)
-    assert(exact.forall(_._2 === 400L), "expected the 10 hot values on top")
-    assert(Profiler.topKSketch(skewed, "v", 10) === exact,
-      "sketch top-k diverged from exact on skewed high-cardinality data")
-  }
-
   test("valve: high-cardinality columns take the sketch path above threshold, exact below") {
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val strCols = docs.schema.fields
       .count(_.dataType == org.apache.spark.sql.types.StringType)
     assert(strCols > 0)
-    val before = Profiler.sketchTopKRuns.get()
+    val before = Profiler.nativeTopKRuns.get()
     try {
       // threshold 0: every string column's distinct count exceeds it
       spark.conf.set(Profiler.TopkSketchThresholdKey, "0")
       val p1 = Profiler.profile(docs, withSpearman = false)
-      assert(Profiler.sketchTopKRuns.get() === before + strCols,
+      assert(Profiler.nativeTopKRuns.get() === before + strCols,
         "every string column must take the sketch path at threshold 0")
       // threshold -1: valve disarmed, exact path only
       spark.conf.set(Profiler.TopkSketchThresholdKey, "-1")
       val p2 = Profiler.profile(docs, withSpearman = false)
-      assert(Profiler.sketchTopKRuns.get() === before + strCols,
+      assert(Profiler.nativeTopKRuns.get() === before + strCols,
         "disarmed valve must never sketch")
       // the two paths agree wherever frequency carries signal; on the
       // all-unique text column only the (exact) counts are comparable —
@@ -235,20 +222,27 @@ class ProfilerSpec extends AnyFunSuite {
     } finally spark.conf.unset(Profiler.TopkSketchThresholdKey)
   }
 
-  test("native one-pass top-k: parity with the two-phase path, exact and skewed") {
+  test("top-k sketch path equals the exact path where heavy hitters exist") {
     import org.apache.spark.sql.functions.{col, concat, lit, when}
+    // the sketch path is topKNative: the profiler calls it above
+    // TopkSketchThresholdKey and topKExact below it
+    // real low-cardinality skew: every value fits in capacity, no eviction
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    assert(Profiler.topKNative(docs, "source", 10) ===
+      Profiler.topKExact(docs, "source", 10))
+    // high-cardinality skew: ~16k unique cold values (count 1) + 10 hot
+    // values at ~400 each. Per 4-partition split each hot value's
+    // in-partition count (~100) far exceeds rows/capacity (~20), so the
+    // Space-Saving bound keeps all ten in the summary and the result
+    // ranks them identically to the full groupBy.
     val skewed = spark.range(20000)
       .select(when(col("id") % 5 === 0,
           concat(lit("hot"), org.apache.spark.sql.functions.expr("(id div 5) % 10")))
         .otherwise(concat(lit("cold"), col("id"))).as("v"))
       .repartition(4)
-    assert(Profiler.topKNative(docs, "source", 10) ===
-      Profiler.topKTwoPhase(docs, "source", 10))
-    assert(Profiler.topKNative(docs, "source", 10) ===
-      Profiler.topKExact(docs, "source", 10))
-    assert(Profiler.topKNative(skewed, "v", 10) ===
-      Profiler.topKExact(skewed, "v", 10),
+    val exact = Profiler.topKExact(skewed, "v", 10)
+    assert(exact.forall(_._2 === 400L), "expected the 10 hot values on top")
+    assert(Profiler.topKNative(skewed, "v", 10) === exact,
       "native top-k diverged from exact on skewed high-cardinality data")
   }
 
@@ -265,7 +259,7 @@ class ProfilerSpec extends AnyFunSuite {
       "certified result must not schedule a recount")
     // cardinality far beyond capacity: evictions happen, floor > 0 —
     // certificate fails, recount runs (and still lands exact: see the
-    // parity test)
+    // exact-path test)
     val churny = spark.range(20000)
       .select(when(col("id") % 5 === 0,
           concat(lit("hot"), org.apache.spark.sql.functions.expr("(id div 5) % 10")))
