@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Fuzzy, Provenance, QualityModel}
+import graft.operators.Provenance.Evidence
 
 /** The DEPLOYMENT form of the multi-tick ingest loop (q106,
   * `Provenance.q106MultiTickIngest`) — the r9 verdict's top item: the
@@ -746,62 +747,31 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
         resolved(st, st.shingles.currentUpTo(t - 1).get),
         batchDocs, threshold)
       .select(col("eval_id").as("fid")).distinct()
-    // the q103/q106 kernel — or, with extra evidence legs attached
-    // (q135 semantic, q136 contamination), the extended precedence
-    // exact → fuzzy → semantic → contaminated → quality; the returned
-    // frame is checkpointed, so the fold-back writes and the report
-    // never re-run the chain
-    val extras: Seq[(String, DataFrame)] =
-      sem.map(leg => ("sid",
-        semFlags(st, leg, t, batchDocs.select("doc_id")))).toSeq ++
-      eval.map(leg => ("cid", contamFlags(leg, batchDocs))).toSeq
-    val extraNames = Map("sid" -> "n_dup_semantic",
-      "cid" -> "n_contaminated")
-    val v =
-      if (extras.isEmpty)
-        Provenance.gatedTickFrame(batchDocs, state, fuzzy, w, lowFrac)
-      else
-        Provenance.gatedTickFrameWith(batchDocs, state, fuzzy, extras,
-          w, lowFrac)
+    // the q103/q106 kernel over the ladder of the attached legs (q135
+    // semantic, q136 contamination); the returned frame is
+    // checkpointed, so the fold-back writes and the report never re-run
+    // the chain
+    val flags = Seq(Evidence.Fuzzy -> fuzzy) ++
+      sem.map(leg => Evidence.Semantic ->
+        semFlags(st, leg, t, batchDocs.select("doc_id"))) ++
+      eval.map(leg => Evidence.Contaminated -> contamFlags(leg, batchDocs))
+    val ladder = Provenance.ladder(flags.map(_._1): _*)
+    val v = Provenance.gatedTickFrame(batchDocs, state, flags, w, lowFrac)
     // the admitted set: every novel doc — or, on a BUDGETED tick
     // (q130), the quality-ranked under-budget prefix per source, with
     // budgets derived from the maintained mix counts
     val (admIds, report) = quota match {
       case None =>
         (v.filter(col("lq") === false).select("doc_id"),
-          if (extras.isEmpty) Provenance.gatedTickReport(v)
-          else Provenance.gatedTickReportWith(v,
-            extras.map { case (c, _) => (c, extraNames(c)) }))
+          Provenance.gatedTickReport(v, ladder))
       case Some(q) =>
         val srcCounts = q.mix.mix()
           .select(col("source"), col("n_docs").as("n_src"))
         val bf = Provenance.budgetedFrame(v, batchDocs, srcCounts,
           q.budgetFrac)
-        val rep = Provenance.budgetedTickReport(v, bf, srcCounts,
-          q.budgetFrac)
-        // a budgeted tick WITH extra evidence legs: splice the class
-        // counts into the q130 columns (the budget algebra itself is
-        // class-agnostic — it ranks the post-gate novel set)
-        val rep2 = if (extras.isEmpty) rep else {
-          var prev: org.apache.spark.sql.Column =
-            col("ch").isNull && col("fid").isNull
-          val clsAggs = extras.map { case (c, _) =>
-            val e = count(when(prev, col(c))).as(extraNames(c))
-            prev = prev && col(c).isNull
-            e
-          }
-          val cls = v.groupBy("source").agg(clsAggs.head, clsAggs.tail: _*)
-          rep.join(cls, Seq("source"), "left")
-            .select((Seq(col("source"), col("n_batch"),
-              col("n_dup_exact"), col("n_dup_fuzzy")) ++
-              extras.map { case (c, _) => col(extraNames(c)) } ++
-              Seq(col("n_low_quality"), col("n_novel"),
-                col("novel_tokens"), col("budget_tokens"),
-                col("n_admitted"), col("admitted_tokens"),
-                col("n_over_budget"))): _*)
-            .orderBy("source")
-        }
-        (bf.filter(col("admitted")).select("doc_id"), rep2)
+        (bf.filter(col("admitted")).select("doc_id"),
+          Provenance.budgetedTickReport(v, bf, srcCounts, q.budgetFrac,
+            ladder))
     }
     val admDocs = batchDocs.join(admIds, Seq("doc_id"), "left_semi")
     // CURATED FOLD-BACK (q137): the serving consumers receive the
@@ -851,16 +821,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     // not rejected on evidence — see QuotaLeg). resolvedIds appends an
     // empty frame so both quarantine stores stay in the tick agreement.
     quar.foreach { qs =>
-      val sid = if (sem.isEmpty) lit(null).cast("long") else col("sid")
-      val cid = if (eval.isEmpty) lit(null).cast("long") else col("cid")
-      val rej = v.filter(col("ch").isNotNull || col("fid").isNotNull ||
-          sid.isNotNull || cid.isNotNull || col("lq") === true)
-        .withColumn("verdict",
-          when(col("ch").isNotNull, lit("dup_exact"))
-            .when(col("fid").isNotNull, lit("dup_fuzzy"))
-            .when(sid.isNotNull, lit("dup_semantic"))
-            .when(cid.isNotNull, lit("contaminated"))
-            .otherwise(lit("low_quality")))
+      val rej = v.filter(!Provenance.novel(ladder) || col("lq") === true)
+        .withColumn("verdict", Provenance.verdictOf(ladder))
         .join(batchDocs.select("doc_id", "text"), "doc_id")
         .select("doc_id", "source", "text", "verdict")
       qs.rows.appendTickAt(t, rej)
@@ -1324,14 +1286,13 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       quar.resolvedIds.currentUpTo(t - 1)
         .fold(rows)(r => rows.join(r.select("doc_id").distinct(),
           Seq("doc_id"), "left_anti")))
-    // dup_semantic / contaminated rows re-judge ONLY when their leg is
-    // attached — without its state the re-judgment would silently skip
-    // that gate and wrongly re-admit them
-    val dupClasses = Seq("dup_exact", "dup_fuzzy") ++
-      (if (sem.isDefined) Seq("dup_semantic") else Nil) ++
-      (if (eval.isDefined) Seq("contaminated") else Nil)
+    // the ladder of the attached legs: semantic / contaminated rows
+    // re-judge ONLY when their leg is attached — without its state the
+    // re-judgment would silently skip that gate and wrongly re-admit them
+    val ladder = Provenance.ladder(sem.map(_ => Evidence.Semantic).toSeq ++
+      eval.map(_ => Evidence.Contaminated): _*)
     val dupRows = liveRows
-      .filter(col("verdict").isin(dupClasses: _*))
+      .filter(col("verdict").isin(ladder.map(_.verdict): _*))
       .join(liveRows.filter(col("verdict") === "low_quality")
         .select("doc_id"), Seq("doc_id"), "left_anti")
       .localCheckpoint()
@@ -1343,17 +1304,14 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
         resolved(st, st.shingles.currentUpTo(t - 1).get),
         dupRows, threshold)
       .select(col("eval_id").as("fid")).distinct()
-    val extras: Seq[(String, DataFrame)] =
-      sem.map(leg => ("sid",
-        semFlags(st, leg, t, dupRows.select("doc_id")))).toSeq ++
-      eval.map(leg => ("cid",
-        contamFlags(leg, dupRows.select("doc_id", "text")))).toSeq
-    val v =
-      if (extras.isEmpty) Provenance.gatedTickFrame(
-        dupRows.select("doc_id", "source", "text"), state, fuzzy, w, lowFrac)
-      else Provenance.gatedTickFrameWith(
-        dupRows.select("doc_id", "source", "text"), state, fuzzy, extras,
-        w, lowFrac)
+    val v = Provenance.gatedTickFrame(
+      dupRows.select("doc_id", "source", "text"), state,
+      Seq(Evidence.Fuzzy -> fuzzy) ++
+        sem.map(leg => Evidence.Semantic ->
+          semFlags(st, leg, t, dupRows.select("doc_id"))) ++
+        eval.map(leg => Evidence.Contaminated ->
+          contamFlags(leg, dupRows.select("doc_id", "text"))),
+      w, lowFrac)
     val admIds = v.filter(col("lq") === false).select("doc_id")
     val admDocs = dupRows.join(admIds, Seq("doc_id"), "left_semi")
     // curated fold-back of RE-ADMITTED docs (the runTickImpl rule: raw
@@ -1418,54 +1376,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
         .select(Seq(col("doc_id"), col("source"), col("tick"), col("lq")) ++
           (0 until QualityModel.NumW).map(j => col(s"x$j")): _*))
     }
-    if (extras.isEmpty)
-      v.join(dupRows.select(col("doc_id").as("qid"),
-          (col("verdict") === "dup_exact").as("was_exact")),
-          col("doc_id") === col("qid"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_quarantined"),
-          count(when(col("was_exact"), lit(1))).as("n_exact_t1"),
-          count(when(!col("was_exact"), lit(1))).as("n_fuzzy_t1"),
-          count(col("ch")).as("n_still_exact"),
-          count(when(col("ch").isNull, col("fid"))).as("n_still_fuzzy"),
-          count(when(col("lq") === true, lit(1))).as("n_low_quality"),
-          count(when(col("lq") === false, lit(1))).as("n_readmitted"))
-        .orderBy("source")
-    else {
-      // the q131 columns with each attached class split out — original
-      // verdicts from the quarantine rows, re-judged ones from v
-      val clsInfo = Seq(
-        ("sid", "dup_semantic", "n_sem_t1", "n_still_semantic"),
-        ("cid", "contaminated", "n_contam_t1", "n_still_contaminated"))
-        .filter { case (c, _, _, _) => extras.exists(_._1 == c) }
-      val t1Aggs = Seq(
-        count(when(col("verdict_t1") === "dup_exact", lit(1)))
-          .as("n_exact_t1"),
-        count(when(col("verdict_t1") === "dup_fuzzy", lit(1)))
-          .as("n_fuzzy_t1")) ++
-        clsInfo.map { case (_, verdict, t1Name, _) =>
-          count(when(col("verdict_t1") === verdict, lit(1))).as(t1Name)
-        }
-      var prev: org.apache.spark.sql.Column =
-        col("ch").isNull && col("fid").isNull
-      val stillAggs = Seq(count(col("ch")).as("n_still_exact"),
-        count(when(col("ch").isNull, col("fid"))).as("n_still_fuzzy")) ++
-        clsInfo.map { case (c, _, _, stillName) =>
-          val e = count(when(prev, col(c))).as(stillName)
-          prev = prev && col(c).isNull
-          e
-        }
-      val aggs = Seq(count(lit(1)).as("n_quarantined")) ++ t1Aggs ++
-        stillAggs ++ Seq(
-        count(when(col("lq") === true, lit(1))).as("n_low_quality"),
-        count(when(col("lq") === false, lit(1))).as("n_readmitted"))
-      v.join(dupRows.select(col("doc_id").as("qid"),
-          col("verdict").as("verdict_t1")),
-          col("doc_id") === col("qid"))
-        .groupBy("source")
-        .agg(aggs.head, aggs.tail: _*)
-        .orderBy("source")
-    }
+    Provenance.readjReport(v,
+      dupRows.select(col("doc_id"), col("verdict").as("verdict_t1")), ladder)
   }
 
   /** RE-GATE the quality window under a NEW model — the deployment

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Fuzzy, Provenance, QualityModel}
+import graft.operators.Provenance.Evidence
 
 /** The unified MULTIMODAL admission section of [[IngestLoop]] (q118's
   * deployment form and its consumer/maintenance twins) — moved whole
@@ -100,23 +101,22 @@ trait IngestMmOps { self: IngestLoop.type =>
         resolved(st.text, st.audSigs.currentUpTo(t - 1).get),
         batchASigs, maxDist, maxBand)
       .select(col("fid").as("afid"))
-    val mmExtras: Seq[(String, DataFrame)] =
-      sem.map(leg => ("sid",
-        semFlags(st.text, leg, t, batchDocs.select("doc_id")))).toSeq ++
+    // the q118 rungs plus the classes of the attached legs
+    val flags = Seq(Evidence.Fuzzy -> fuzzy, Evidence.Image -> imFlag,
+        Evidence.Audio -> auFlag) ++
+      sem.map(leg => Evidence.Semantic ->
+        semFlags(st.text, leg, t, batchDocs.select("doc_id"))) ++
       eval.map { leg =>
         // text channels ∪ the q140 modality channels (when attached):
         // one `contaminated` class — every channel means "this doc
         // leaks the eval set", and it outranks the dup_image/dup_audio
         // DEDUP evidence below
-        ("cid", (Seq(contamFlags(leg, batchDocs)) ++
+        Evidence.Contaminated -> (Seq(contamFlags(leg, batchDocs)) ++
           mmContamFlags(leg, batchISigs, batchASigs))
-          .reduce(_ union _).distinct())
-      }.toSeq
-    val v =
-      if (mmExtras.isEmpty) Multimodal.mmGatedTickFrame(batchDocs, state,
-        fuzzy, imFlag, auFlag, w, lowFrac)
-      else Multimodal.mmGatedTickFrameWith(batchDocs, state, fuzzy,
-        mmExtras, imFlag, auFlag, w, lowFrac)
+          .reduce(_ union _).distinct()
+      }
+    val ladder = Provenance.ladder(flags.map(_._1): _*)
+    val v = Provenance.gatedTickFrame(batchDocs, state, flags, w, lowFrac)
     val admIds = v.filter(col("lq") === false).select("doc_id")
     val admDocs = batchDocs.join(admIds, Seq("doc_id"), "left_semi")
     st.text.hashes.appendTickAt(t, v.filter(col("lq") === false)
@@ -155,20 +155,8 @@ trait IngestMmOps { self: IngestLoop.type =>
     // doc's 8-byte signatures, so a re-adjudication re-judges the
     // image/audio legs without ever re-reading payloads
     quar.foreach { qs =>
-      val sid = if (sem.isEmpty) lit(null).cast("long") else col("sid")
-      val cid = if (eval.isEmpty) lit(null).cast("long") else col("cid")
-      val rej = v.filter(col("ch").isNotNull || col("fid").isNotNull ||
-          sid.isNotNull || cid.isNotNull ||
-          col("ifid").isNotNull || col("afid").isNotNull ||
-          col("lq") === true)
-        .withColumn("verdict",
-          when(col("ch").isNotNull, lit("dup_exact"))
-            .when(col("fid").isNotNull, lit("dup_fuzzy"))
-            .when(sid.isNotNull, lit("dup_semantic"))
-            .when(cid.isNotNull, lit("contaminated"))
-            .when(col("ifid").isNotNull, lit("dup_image"))
-            .when(col("afid").isNotNull, lit("dup_audio"))
-            .otherwise(lit("low_quality")))
+      val rej = v.filter(!Provenance.novel(ladder) || col("lq") === true)
+        .withColumn("verdict", Provenance.verdictOf(ladder))
         .join(batchDocs.select("doc_id", "text"), "doc_id")
         .join(batchISigs.select(col("doc_id"), col("sig").as("img_sig")),
           Seq("doc_id"), "left")
@@ -191,11 +179,7 @@ trait IngestMmOps { self: IngestLoop.type =>
         .select(Seq(col("doc_id"), col("source"), col("tick"), col("lq")) ++
           (0 until QualityModel.NumW).map(j => col(s"x$j")): _*))
     }
-    val mmExtraNames = Map("sid" -> "n_dup_semantic",
-      "cid" -> "n_contaminated")
-    if (mmExtras.isEmpty) Multimodal.mmGatedTickReport(v)
-    else Multimodal.mmGatedTickReportWith(v,
-      mmExtras.map { case (c, _) => (c, mmExtraNames(c)) })
+    Provenance.gatedTickReport(v, ladder)
   }
 
   /** RE-ADJUDICATE a multimodal quarantine — the deployment form of
@@ -244,10 +228,11 @@ trait IngestMmOps { self: IngestLoop.type =>
     // low_quality has already reached its post-dup verdict; semantic /
     // contaminated rows re-judge only with their leg attached (its
     // state is the gate)
-    val mmDupClasses = Seq("dup_exact", "dup_fuzzy", "dup_image",
-      "dup_audio") ++ (if (sem.isDefined) Seq("dup_semantic") else Nil) ++
-      (if (eval.isDefined) Seq("contaminated") else Nil)
-    val dupRows = liveRows.filter(col("verdict").isin(mmDupClasses: _*))
+    val ladder = Provenance.ladder(Seq(Evidence.Image, Evidence.Audio) ++
+      sem.map(_ => Evidence.Semantic) ++
+      eval.map(_ => Evidence.Contaminated): _*)
+    val dupRows = liveRows
+      .filter(col("verdict").isin(ladder.map(_.verdict): _*))
       .join(liveRows.filter(col("verdict") === "low_quality")
         .select("doc_id"), Seq("doc_id"), "left_anti")
       .localCheckpoint()
@@ -270,25 +255,23 @@ trait IngestMmOps { self: IngestLoop.type =>
         dupRows.select(col("doc_id"), col("aud_sig").as("sig")),
         maxDist, maxBand)
       .select(col("fid").as("afid"))
-    val mmExtras: Seq[(String, DataFrame)] =
-      sem.map(leg => ("sid",
-        semFlags(st.text, leg, t, dupRows.select("doc_id")))).toSeq ++
-      eval.map { leg =>
-        // the modality eval channels re-judge from the STORED 8-byte
-        // signatures, like the dup legs — no payload reads
-        ("cid", (Seq(contamFlags(leg, dupRows.select("doc_id", "text"))) ++
-          mmContamFlags(leg,
-            dupRows.select(col("doc_id"), col("img_sig").as("sig")),
-            dupRows.select(col("doc_id"), col("aud_sig").as("sig"))))
-          .reduce(_ union _).distinct())
-      }.toSeq
-    val v =
-      if (mmExtras.isEmpty) Multimodal.mmGatedTickFrame(
-        dupRows.select("doc_id", "source", "text"), state, fuzzy,
-        imFlag, auFlag, w, lowFrac)
-      else Multimodal.mmGatedTickFrameWith(
-        dupRows.select("doc_id", "source", "text"), state, fuzzy,
-        mmExtras, imFlag, auFlag, w, lowFrac)
+    val v = Provenance.gatedTickFrame(
+      dupRows.select("doc_id", "source", "text"), state,
+      Seq(Evidence.Fuzzy -> fuzzy, Evidence.Image -> imFlag,
+        Evidence.Audio -> auFlag) ++
+        sem.map(leg => Evidence.Semantic ->
+          semFlags(st.text, leg, t, dupRows.select("doc_id"))) ++
+        eval.map { leg =>
+          // the modality eval channels re-judge from the STORED 8-byte
+          // signatures, like the dup legs — no payload reads
+          Evidence.Contaminated ->
+            (Seq(contamFlags(leg, dupRows.select("doc_id", "text"))) ++
+              mmContamFlags(leg,
+                dupRows.select(col("doc_id"), col("img_sig").as("sig")),
+                dupRows.select(col("doc_id"), col("aud_sig").as("sig"))))
+              .reduce(_ union _).distinct()
+        },
+      w, lowFrac)
     val admIds = v.filter(col("lq") === false).select("doc_id")
     val admDocs = dupRows.join(admIds, Seq("doc_id"), "left_semi")
     st.text.hashes.appendTickAt(t, v.filter(col("lq") === false)
@@ -338,17 +321,8 @@ trait IngestMmOps { self: IngestLoop.type =>
         .select(Seq(col("doc_id"), col("source"), col("tick"), col("lq")) ++
           (0 until QualityModel.NumW).map(j => col(s"x$j")): _*))
     }
-    val mmClsInfo = Seq(
-      ("sid", "dup_semantic", "n_sem_t1", "n_still_semantic"),
-      ("cid", "contaminated", "n_contam_t1", "n_still_contaminated"))
-      .filter { case (c, _, _, _) => mmExtras.exists(_._1 == c) }
-    if (mmExtras.isEmpty)
-      Multimodal.mmReadjReport(v,
-        dupRows.select(col("doc_id"), col("verdict").as("verdict_t1")))
-    else
-      Multimodal.mmReadjReportWith(v,
-        dupRows.select(col("doc_id"), col("verdict").as("verdict_t1")),
-        mmClsInfo)
+    Provenance.readjReport(v,
+      dupRows.select(col("doc_id"), col("verdict").as("verdict_t1")), ladder)
   }
 
   /** RE-GATE the quality window of a MULTIMODAL loop under a NEW model

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Provenance.Evidence
+
 /** Multimodal column support: image/audio/video as opaque `binary`
   * payloads + typed metadata, with decode / feature-extraction /
   * resize / frame-sampling as partition-wise transforms.
@@ -606,166 +608,17 @@ object Multimodal {
 
   // ---- q118: UNIFIED multimodal admission tick -------------------------
 
-  /** One gated multimodal tick's labeled frame — the
-    * [[graft.operators.Provenance.gatedTickFrame]] kernel extended with
-    * the image and audio signature legs: per batch doc,
-    * (doc_id, source, h, ch, fid, ifid, afid, p, lq) under the verdict
-    * precedence exact text → fuzzy text → image sig → audio sig →
-    * low_quality → new. All five flag joins are ≤1-match (distinct
-    * state/flag ids), so the verdict classes partition the batch; the
-    * budget window ranges over docs NO modality flagged. Checkpointed
-    * twice (the q103 marker discipline). Shared by the live q118 and
-    * [[graft.io.IngestLoop.runMmTick]] — the one-kernel rule the r10
-    * runTick review established. */
-  private[graft] def mmGatedTickFrame(batch: DataFrame, state: DataFrame,
-                                      fuzzyIds: DataFrame, imgIds: DataFrame,
-                                      audIds: DataFrame, w: Seq[Double],
-                                      lowFrac: Double): DataFrame = {
-    import graft.operators.{Provenance, QualityModel}
-    val j = batch
-      .select(col("doc_id"), col("source"),
-        Provenance.contentHash60(col("text")).as("h"))
-      .join(state, col("h") === col("ch"), "left")
-      .join(fuzzyIds.select("fid"), col("doc_id") === col("fid"), "left")
-      .join(imgIds.select("ifid"), col("doc_id") === col("ifid"), "left")
-      .join(audIds.select("afid"), col("doc_id") === col("afid"), "left")
-      .join(QualityModel.scores(batch, w), "doc_id")
-      .localCheckpoint()
-    val lq = graft.operators.RankGate.lowFracFlags(
-      j.filter(col("ch").isNull && col("fid").isNull &&
-        col("ifid").isNull && col("afid").isNull), lowFrac)
-    j.join(lq, col("doc_id") === col("lqid"), "left").localCheckpoint()
-  }
+  /** The unified tick's rungs — the text ladder plus the image and
+    * audio signature legs ([[Evidence]]) — as the flag frames
+    * [[graft.operators.Provenance.gatedTickFrame]] joins and as the
+    * ladder its reports read. */
+  private def mmFlags(fuzzy: DataFrame, imFlag: DataFrame,
+                      auFlag: DataFrame): Seq[(Evidence, DataFrame)] =
+    Seq(Evidence.Fuzzy -> fuzzy, Evidence.Image -> imFlag,
+      Evidence.Audio -> auFlag)
 
-  /** [[mmGatedTickFrame]] with EXTRA text-evidence classes spliced
-    * between the fuzzy-text and image legs, in precedence order — the
-    * unified-loop precedence with q135's semantic and/or q136's
-    * contamination class live: exact → fuzzy → [semantic] →
-    * [contaminated] → image → audio → quality (text-derived evidence
-    * outranks modality signatures, the text-loop convention). */
-  private[graft] def mmGatedTickFrameWith(batch: DataFrame,
-                                          state: DataFrame,
-                                          fuzzyIds: DataFrame,
-                                          extra: Seq[(String, DataFrame)],
-                                          imgIds: DataFrame,
-                                          audIds: DataFrame, w: Seq[Double],
-                                          lowFrac: Double): DataFrame = {
-    import graft.operators.{Provenance, QualityModel}
-    val j0 = batch
-      .select(col("doc_id"), col("source"),
-        Provenance.contentHash60(col("text")).as("h"))
-      .join(state, col("h") === col("ch"), "left")
-      .join(fuzzyIds.select("fid"), col("doc_id") === col("fid"), "left")
-    val j = extra.foldLeft(j0) { case (acc, (c, ids)) =>
-        acc.join(ids.select(c), col("doc_id") === col(c), "left")
-      }
-      .join(imgIds.select("ifid"), col("doc_id") === col("ifid"), "left")
-      .join(audIds.select("afid"), col("doc_id") === col("afid"), "left")
-      .join(QualityModel.scores(batch, w), "doc_id")
-      .localCheckpoint()
-    val novel = (Seq("ch", "fid") ++ extra.map(_._1) ++
-      Seq("ifid", "afid")).map(col(_).isNull).reduce(_ && _)
-    val lq = graft.operators.RankGate.lowFracFlags(j.filter(novel), lowFrac)
-    j.join(lq, col("doc_id") === col("lqid"), "left").localCheckpoint()
-  }
-
-  private[graft] def mmSemGatedTickFrame(batch: DataFrame, state: DataFrame,
-                                         fuzzyIds: DataFrame,
-                                         semIds: DataFrame,
-                                         imgIds: DataFrame,
-                                         audIds: DataFrame, w: Seq[Double],
-                                         lowFrac: Double): DataFrame =
-    mmGatedTickFrameWith(batch, state, fuzzyIds, Seq(("sid", semIds)),
-      imgIds, audIds, w, lowFrac)
-
-  /** Report of a [[mmGatedTickFrameWith]] frame — the q118 columns
-    * with one precedence-positioned count per extra class. */
-  private[graft] def mmGatedTickReportWith(v: DataFrame,
-                                           extra: Seq[(String, String)])
-      : DataFrame = {
-    var prev: org.apache.spark.sql.Column =
-      col("ch").isNull && col("fid").isNull
-    val extraAggs = extra.map { case (c, name) =>
-      val e = count(when(prev, col(c))).as(name)
-      prev = prev && col(c).isNull
-      e
-    }
-    val imgAgg = count(when(prev, col("ifid"))).as("n_dup_image")
-    val audAgg = count(when(prev && col("ifid").isNull, col("afid")))
-      .as("n_dup_audio")
-    val aggs = Seq(count(lit(1)).as("n_batch"),
-      count(col("ch")).as("n_dup_exact"),
-      count(when(col("ch").isNull, col("fid"))).as("n_dup_fuzzy")) ++
-      extraAggs ++ Seq(imgAgg, audAgg,
-      count(when(col("lq") === true, lit(1))).as("n_low_quality"),
-      count(when(col("lq") === false, lit(1))).as("n_new"))
-    v.groupBy("source").agg(aggs.head, aggs.tail: _*).orderBy("source")
-  }
-
-  private[graft] def mmSemGatedTickReport(v: DataFrame): DataFrame =
-    mmGatedTickReportWith(v, Seq(("sid", "n_dup_semantic")))
-
-  /** [[mmReadjReport]] over an extras-extended frame — the q133
-    * columns with each attached class split out (`extra` = (flag col,
-    * t1 verdict, t1 name, still name)). */
-  private[graft] def mmReadjReportWith(vr: DataFrame, quar: DataFrame,
-                                       extra: Seq[(String, String, String,
-                                         String)]): DataFrame = {
-    val t1Aggs = Seq(
-      count(when(col("verdict_t1") === "dup_exact", lit(1)))
-        .as("n_exact_t1"),
-      count(when(col("verdict_t1") === "dup_fuzzy", lit(1)))
-        .as("n_fuzzy_t1")) ++
-      extra.map { case (_, verdict, t1Name, _) =>
-        count(when(col("verdict_t1") === verdict, lit(1))).as(t1Name)
-      } ++ Seq(
-      count(when(col("verdict_t1") === "dup_image", lit(1)))
-        .as("n_image_t1"),
-      count(when(col("verdict_t1") === "dup_audio", lit(1)))
-        .as("n_audio_t1"))
-    var prev: org.apache.spark.sql.Column =
-      col("ch").isNull && col("fid").isNull
-    val extraStill = extra.map { case (c, _, _, stillName) =>
-      val e = count(when(prev, col(c))).as(stillName)
-      prev = prev && col(c).isNull
-      e
-    }
-    val stillAggs = Seq(count(col("ch")).as("n_still_exact"),
-      count(when(col("ch").isNull, col("fid"))).as("n_still_fuzzy")) ++
-      extraStill ++ Seq(
-      count(when(prev, col("ifid"))).as("n_still_image"),
-      count(when(prev && col("ifid").isNull, col("afid")))
-        .as("n_still_audio"))
-    val aggs = Seq(count(lit(1)).as("n_quarantined")) ++ t1Aggs ++
-      stillAggs ++ Seq(
-      count(when(col("lq") === true, lit(1))).as("n_low_quality"),
-      count(when(col("lq") === false, lit(1))).as("n_readmitted"))
-    vr.join(quar.withColumnRenamed("doc_id", "qid"),
-        col("doc_id") === col("qid"))
-      .groupBy("source")
-      .agg(aggs.head, aggs.tail: _*)
-      .orderBy("source")
-  }
-
-  private[graft] def mmSemReadjReport(vr: DataFrame, quar: DataFrame)
-      : DataFrame =
-    mmReadjReportWith(vr, quar,
-      Seq(("sid", "dup_semantic", "n_sem_t1", "n_still_semantic")))
-
-  /** The per-source report of a [[mmGatedTickFrame]] — q103's columns
-    * with the two modality verdicts spliced into the precedence. */
-  private[graft] def mmGatedTickReport(v: DataFrame): DataFrame =
-    v.groupBy("source")
-      .agg(count(lit(1)).as("n_batch"),
-        count(col("ch")).as("n_dup_exact"),
-        count(when(col("ch").isNull, col("fid"))).as("n_dup_fuzzy"),
-        count(when(col("ch").isNull && col("fid").isNull, col("ifid")))
-          .as("n_dup_image"),
-        count(when(col("ch").isNull && col("fid").isNull &&
-          col("ifid").isNull, col("afid"))).as("n_dup_audio"),
-        count(when(col("lq") === true, lit(1))).as("n_low_quality"),
-        count(when(col("lq") === false, lit(1))).as("n_new"))
-      .orderBy("source")
+  private def mmLadder: Seq[Evidence] =
+    graft.operators.Provenance.ladder(Evidence.Image, Evidence.Audio)
 
   /** q118: the UNIFIED multimodal admission tick — r10 verdict item 2:
     * "a doc with text + image + audio columns gets no single verdict".
@@ -813,8 +666,9 @@ object Multimodal {
       sigsI.filter(m === 0), maxDist, maxBand).select(col("fid").as("ifid"))
     val auFlag = flaggedAgainstState(sigsA.filter(m =!= 0),
       sigsA.filter(m === 0), maxDist, maxBand).select(col("fid").as("afid"))
-    mmGatedTickReport(mmGatedTickFrame(batch,
-      Provenance.corpusHashState(corpus), fuzzy, imFlag, auFlag, w, lowFrac))
+    Provenance.gatedTickReport(Provenance.gatedTickFrame(batch,
+      Provenance.corpusHashState(corpus), mmFlags(fuzzy, imFlag, auFlag), w,
+      lowFrac), mmLadder)
   }
 
   def q118Sql(threshold: Double = 0.2, lowFrac: Double = 0.25,
@@ -937,9 +791,9 @@ object Multimodal {
       sigsI.filter(m === 0), maxDist, maxBand).select(col("fid").as("ifid"))
     val auFlag = flaggedAgainstState(sigsA.filter(m =!= 0 && keep),
       sigsA.filter(m === 0), maxDist, maxBand).select(col("fid").as("afid"))
-    mmGatedTickReport(mmGatedTickFrame(batch,
+    Provenance.gatedTickReport(Provenance.gatedTickFrame(batch,
       Provenance.corpusHashState(docs.filter(m =!= 0 && keep)),
-      fuzzy, imFlag, auFlag, w, lowFrac))
+      mmFlags(fuzzy, imFlag, auFlag), w, lowFrac), mmLadder)
   }
 
   def q126Sql(threshold: Double = 0.2, lowFrac: Double = 0.25,
@@ -1012,15 +866,11 @@ object Multimodal {
       sigsI.filter(m === 0), maxDist, maxBand).select(col("fid").as("ifid"))
     val auFull = flaggedAgainstState(sigsA.filter(m =!= 0),
       sigsA.filter(m === 0), maxDist, maxBand).select(col("fid").as("afid"))
-    val v = mmGatedTickFrame(batch, Provenance.corpusHashState(corpus),
-      fzFull, imFull, auFull, w, lowFrac)
-    val quar = v.filter(col("ch").isNotNull || col("fid").isNotNull ||
-        col("ifid").isNotNull || col("afid").isNotNull)
-      .select(col("doc_id"),
-        when(col("ch").isNotNull, lit("dup_exact"))
-          .when(col("fid").isNotNull, lit("dup_fuzzy"))
-          .when(col("ifid").isNotNull, lit("dup_image"))
-          .otherwise(lit("dup_audio")).as("verdict_t1"))
+    val v = Provenance.gatedTickFrame(batch,
+      Provenance.corpusHashState(corpus), mmFlags(fzFull, imFull, auFull), w,
+      lowFrac)
+    val quar = v.filter(!Provenance.novel(mmLadder))
+      .select(col("doc_id"), Provenance.verdictOf(mmLadder).as("verdict_t1"))
     val quarDocs = docs.join(quar.select("doc_id"), Seq("doc_id"),
       "left_semi")
     // ingested-through-the-tick = corpus ∪ the tick's ADMITTED docs
@@ -1044,37 +894,10 @@ object Multimodal {
       quarSem(sigsI), maxDist, maxBand).select(col("fid").as("ifid"))
     val auK = flaggedAgainstState(keepSem(sigsA),
       quarSem(sigsA), maxDist, maxBand).select(col("fid").as("afid"))
-    val vr = mmGatedTickFrame(quarDocs, ck, fzk, imK, auK, w, lowFrac)
-    mmReadjReport(vr, quar)
+    val vr = Provenance.gatedTickFrame(quarDocs, ck, mmFlags(fzk, imK, auK),
+      w, lowFrac)
+    Provenance.readjReport(vr, quar, mmLadder)
   }
-
-  /** The q133 report: per source, original evidence class ×
-    * re-adjudicated verdict — shared by the live form and
-    * [[graft.io.IngestLoop.readjudicateMmTick]]. `quar` carries
-    * (doc_id, verdict_t1). */
-  private[graft] def mmReadjReport(vr: DataFrame, quar: DataFrame)
-      : DataFrame =
-    vr.join(quar.withColumnRenamed("doc_id", "qid"),
-        col("doc_id") === col("qid"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_quarantined"),
-        count(when(col("verdict_t1") === "dup_exact", lit(1)))
-          .as("n_exact_t1"),
-        count(when(col("verdict_t1") === "dup_fuzzy", lit(1)))
-          .as("n_fuzzy_t1"),
-        count(when(col("verdict_t1") === "dup_image", lit(1)))
-          .as("n_image_t1"),
-        count(when(col("verdict_t1") === "dup_audio", lit(1)))
-          .as("n_audio_t1"),
-        count(col("ch")).as("n_still_exact"),
-        count(when(col("ch").isNull, col("fid"))).as("n_still_fuzzy"),
-        count(when(col("ch").isNull && col("fid").isNull, col("ifid")))
-          .as("n_still_image"),
-        count(when(col("ch").isNull && col("fid").isNull &&
-          col("ifid").isNull, col("afid"))).as("n_still_audio"),
-        count(when(col("lq") === true, lit(1))).as("n_low_quality"),
-        count(when(col("lq") === false, lit(1))).as("n_readmitted"))
-      .orderBy("source")
 
   def q133Sql(threshold: Double = 0.2, lowFrac: Double = 0.25,
               maxDist: Int = 10, maxBand: Int = 64,
@@ -1268,9 +1091,10 @@ object Multimodal {
       .join(corpusIds.withColumnRenamed("doc_id", "a"), Seq("a"),
         "left_semi")
       .select(col("b").as("fid")).distinct()
-    val v1 = Provenance.gatedTickFrameWith(t1,
-      Provenance.corpusHashState(corpus), fz1,
-      Seq(("cid", contamIds(t1Ids, eval1Ids))), w, lowFrac)
+    val v1 = Provenance.gatedTickFrame(t1,
+      Provenance.corpusHashState(corpus),
+      Seq(Evidence.Fuzzy -> fz1,
+        Evidence.Contaminated -> contamIds(t1Ids, eval1Ids)), w, lowFrac)
     val adm1 = v1.filter(col("lq") === false).select("doc_id")
     val ingIds = graft.operators.Materialize.sever(corpusIds.union(adm1))
     val ingDocs = docs.join(ingIds, Seq("doc_id"), "left_semi")
@@ -1284,10 +1108,11 @@ object Multimodal {
       .join(ingIds.withColumnRenamed("doc_id", "a"), Seq("a"),
         "left_semi")
       .select(col("b").as("fid")).distinct()
-    val vr = Provenance.gatedTickFrameWith(
+    val vr = Provenance.gatedTickFrame(
       quarDocs.select("doc_id", "source", "text"),
-      Provenance.corpusHashState(ingDocs), fz2,
-      Seq(("cid", contamIds(quarIds, liveEvalIds))), w, lowFrac)
+      Provenance.corpusHashState(ingDocs),
+      Seq(Evidence.Fuzzy -> fz2,
+        Evidence.Contaminated -> contamIds(quarIds, liveEvalIds)), w, lowFrac)
 
     val caught = contamIds(ingIds, addIds)
     val rCatch = docs.join(
@@ -1295,8 +1120,8 @@ object Multimodal {
         "left_semi")
       .groupBy("source").agg(count(lit(1)).as("n_caught"))
 
-    val r1 = Provenance.gatedTickReportWith(v1,
-      Seq(("cid", "n_contaminated")))
+    val r1 = Provenance.gatedTickReport(v1,
+      Provenance.ladder(Evidence.Contaminated))
     val rReadj = vr.groupBy("source")
       .agg(count(when(col("lq") === false, lit(1))).as("n_readmitted"),
         count(when(col("ch").isNull && col("fid").isNull, col("cid")))

@@ -89,7 +89,8 @@ object CurateTick {
     val w = QualityModel.weights(corpus,
       scope = s"curated${Provenance.BatchMod}")
     val v = Provenance.gatedTickFrame(batch,
-      Provenance.corpusHashState(corpus), fuzzy, w, lowFrac)
+      Provenance.corpusHashState(corpus),
+      Seq(Provenance.Evidence.Fuzzy -> fuzzy), w, lowFrac)
     val admIds = v.filter(col("lq") === false).select("doc_id")
     val admDocs = batch.join(admIds, Seq("doc_id"), "left_semi")
     // severed: the audit aggregate is the only consumer, but the strip
@@ -106,7 +107,7 @@ object CurateTick {
         sum("n_removed").as("tokens_removed"),
         sum("chars_redacted").as("chars_redacted"),
         expr("bit_xor(chc)").as("exact_curated_sig"))
-    Provenance.gatedTickReport(v)
+    Provenance.gatedTickReport(v, Provenance.ladder())
       .join(audit, Seq("source"), "left")
       .select(col("source"), col("n_batch"), col("n_dup_exact"),
         col("n_dup_fuzzy"), col("n_low_quality"), col("n_new"),

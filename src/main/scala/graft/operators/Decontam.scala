@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import Provenance.Evidence
+
 /** The DECONTAMINATION leg of the deployment tick (q136) — the r11
   * verdict's item 2: q66 (verbatim 8-gram) and q88 (fuzzy LSH) were
   * standalone batch passes, so benchmark-contaminated docs admitted
@@ -144,9 +146,9 @@ object Decontam {
         "left_semi")
       .select(col("b").as("fid")).distinct()
     val cid1 = contamIds(gr, adj, t1Ids, eval1Ids)
-    val v1 = Provenance.gatedTickFrameWith(t1,
-      Provenance.corpusHashState(corpus), fz1, Seq(("cid", cid1)), w,
-      lowFrac)
+    val v1 = Provenance.gatedTickFrame(t1,
+      Provenance.corpusHashState(corpus),
+      Seq(Evidence.Fuzzy -> fz1, Evidence.Contaminated -> cid1), w, lowFrac)
     val adm1 = v1.filter(col("lq") === false).select("doc_id")
     val ingIds = Materialize.sever(corpusIds.union(adm1))
     val ingDocs = documents.join(ingIds, Seq("doc_id"), "left_semi")
@@ -162,10 +164,10 @@ object Decontam {
         "left_semi")
       .select(col("b").as("fid")).distinct()
     val cid2 = contamIds(gr, adj, quarIds, liveEvalIds)
-    val vr = Provenance.gatedTickFrameWith(
+    val vr = Provenance.gatedTickFrame(
       quarDocs.select("doc_id", "source", "text"),
-      Provenance.corpusHashState(ingDocs), fz2, Seq(("cid", cid2)), w,
-      lowFrac)
+      Provenance.corpusHashState(ingDocs),
+      Seq(Evidence.Fuzzy -> fz2, Evidence.Contaminated -> cid2), w, lowFrac)
 
     // 3b: retro-catch over the ingested corpus vs the ADDED items only
     val caught = contamIds(gr, adj, ingIds, addIds)
@@ -174,8 +176,8 @@ object Decontam {
         "left_semi")
       .groupBy("source").agg(count(lit(1)).as("n_caught"))
 
-    val r1 = Provenance.gatedTickReportWith(v1,
-      Seq(("cid", "n_contaminated")))
+    val r1 = Provenance.gatedTickReport(v1,
+      Provenance.ladder(Evidence.Contaminated))
     val rReadj = vr.groupBy("source")
       .agg(count(when(col("lq") === false, lit(1))).as("n_readmitted"),
         count(when(col("ch").isNull && col("fid").isNull, col("cid")))

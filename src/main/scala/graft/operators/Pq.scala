@@ -1205,7 +1205,8 @@ object Pq {
     // the q103 verdict frame (checkpointed inside): the admitted set is
     // derived ONCE — the same discipline as IngestLoop.runFullTick
     val v = Provenance.gatedTickFrame(batch,
-      Provenance.corpusHashState(corpus), fuzzy, w, lowFrac)
+      Provenance.corpusHashState(corpus),
+      Seq(Provenance.Evidence.Fuzzy -> fuzzy), w, lowFrac)
     val admIds = v.filter(col("lq") === false).select(col("doc_id").as("vid"))
     // FROZEN serving artifacts: trained on the ingested corpus only
     val corpusEmb = embeddings.filter(pmod(col("vec_id"), lit(bm)) =!= 0)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The ADMISSION-GATE operator family of [[Provenance]] (q103 and its
@@ -48,6 +48,15 @@ trait ProvenanceGateOps { self: Provenance.type =>
     * the same cume_dist over the novel slice. */
   def q103AdmissionGate(documents: DataFrame, threshold: Double = 0.2,
                         lowFrac: Double = 0.25): DataFrame = {
+    val (_, _, v) = admissionFrame(documents, threshold, lowFrac)
+    gatedTickReport(v, ladder())
+  }
+
+  /** The q103 split and verdict frame — (corpus, batch, v) — shared by
+    * q103's report and q130's budget accounting. */
+  private def admissionFrame(documents: DataFrame, threshold: Double,
+                             lowFrac: Double)
+      : (DataFrame, DataFrame, DataFrame) = {
     val isBatch = (c: org.apache.spark.sql.Column) =>
       pmod(c, lit(BatchMod)) === 0
     val corpus = documents.filter(!isBatch(col("doc_id")))
@@ -55,26 +64,8 @@ trait ProvenanceGateOps { self: Provenance.type =>
     val fuzzy = Fuzzy.lshCrossPairs(documents, isBatch, threshold)
       .select(col("eval_id").as("fid")).distinct()
     val w = QualityModel.weights(corpus, scope = s"admission$BatchMod")
-    // localCheckpoint (the CurateV2 marker discipline): j is read twice
-    // below — by the budget window AND the final report join — and
-    // Catalyst plans are trees, so the un-severed frame would re-expand
-    // and RE-EXECUTE the whole LSH cross-pair chain once per reference
-    val j = batch
-      .select(col("doc_id"), col("source"), contentHash60(col("text")).as("h"))
-      .join(corpusHashState(corpus), col("h") === col("ch"), "left")
-      .join(fuzzy, col("doc_id") === col("fid"), "left")
-      .join(QualityModel.scores(batch, w), "doc_id")
-      .localCheckpoint()
-    val lq = RankGate.lowFracFlags(
-      j.filter(col("ch").isNull && col("fid").isNull), lowFrac)
-    j.join(lq, col("doc_id") === col("lqid"), "left")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_batch"),
-        count(col("ch")).as("n_dup_exact"),
-        count(when(col("ch").isNull, col("fid"))).as("n_dup_fuzzy"),
-        count(when(col("lq") === true, lit(1))).as("n_low_quality"),
-        count(when(col("lq") === false, lit(1))).as("n_new"))
-      .orderBy("source")
+    (corpus, batch, gatedTickFrame(batch, corpusHashState(corpus),
+      Seq(Evidence.Fuzzy -> fuzzy), w, lowFrac))
   }
 
   /** The q103 oracle chain through the verdict CTEs (`... j, lq`) —
@@ -176,7 +167,8 @@ trait ProvenanceGateOps { self: Provenance.type =>
     // tick 1 against the base-corpus state
     val fz1 = adj.filter(m(col("b")) >= 10 && m(col("a")).between(1, 9))
       .select(col("b").as("fid")).distinct()
-    val v1 = gatedTickFrame(t1, corpusHashState(corpus), fz1, w, lowFrac)
+    val v1 = gatedTickFrame(t1, corpusHashState(corpus),
+      Seq(Evidence.Fuzzy -> fz1), w, lowFrac)
     // fold-back: ONLY tick 1's admitted docs join the state tick 2 sees
     val adm1 = v1.filter(col("lq") === false).select(col("doc_id"), col("h"))
     val c1 = corpusHashState(corpus)
@@ -192,14 +184,15 @@ trait ProvenanceGateOps { self: Provenance.type =>
                                      threshold: Double, lowFrac: Double)
       : (DataFrame, DataFrame, Seq[Double]) = {
     val p = multiTickParts(documents, threshold, lowFrac)
-    (p.v1, gatedTickFrame(p.t2, p.c1, p.fz2, p.w, lowFrac), p.w)
+    (p.v1, gatedTickFrame(p.t2, p.c1, Seq(Evidence.Fuzzy -> p.fz2), p.w,
+      lowFrac), p.w)
   }
 
   def q106MultiTickIngest(documents: DataFrame, threshold: Double = 0.2,
                           lowFrac: Double = 0.25): DataFrame = {
     val (v1, v2, _) = multiTickFrames(documents, threshold, lowFrac)
-    gatedTickReport(v1).withColumn("tick", lit(1))
-      .union(gatedTickReport(v2).withColumn("tick", lit(2)))
+    gatedTickReport(v1, ladder()).withColumn("tick", lit(1))
+      .union(gatedTickReport(v2, ladder()).withColumn("tick", lit(2)))
       .select(col("tick"), col("source"), col("n_batch"), col("n_dup_exact"),
         col("n_dup_fuzzy"), col("n_low_quality"), col("n_new"))
       .orderBy("tick", "source")
@@ -337,87 +330,131 @@ trait ProvenanceGateOps { self: Provenance.type =>
        |FROM hx GROUP BY tick, bucket ORDER BY tick, bucket""".stripMargin
   }
 
-  /** One gated tick's labeled frame — the q103/q106 j∘lq kernel against
-    * an ARBITRARY exact-hash state (`ch` column) and fuzzy-flagged id
-    * set (`fid` column) under frozen weights `w`: per batch doc,
-    * (doc_id, source, h, ch, fid, p, lq) with `lq` true = bottom
-    * `lowFrac` of the tick's novel docs by score, false = admitted,
-    * null = dup. Checkpointed twice (the q103 marker discipline): `j`
-    * is read by the budget window and the final join; the returned
-    * frame by the report AND any fold-back consumer
-    * ([[graft.io.IngestLoop.runTick]]). Both joins are ≤1-match, so
-    * the verdict classes partition the batch. */
-  private[graft] def gatedTickFrame(batch: DataFrame, state: DataFrame,
-                                    fuzzyIds: DataFrame, w: Seq[Double],
-                                    lowFrac: Double): DataFrame = {
-    val j = batch
-      .select(col("doc_id"), col("source"), contentHash60(col("text")).as("h"))
-      .join(state, col("h") === col("ch"), "left")
-      .join(fuzzyIds.select("fid"), col("doc_id") === col("fid"), "left")
-      .join(QualityModel.scores(batch, w), "doc_id")
-      .localCheckpoint()
-    val lq = RankGate.lowFracFlags(
-      j.filter(col("ch").isNull && col("fid").isNull), lowFrac)
-    j.join(lq, col("doc_id") === col("lqid"), "left").localCheckpoint()
+  /** One rung of the ADMISSION LADDER — an evidence class: its ≤1-match
+    * flag column on the verdict frame, its quarantine verdict label, its
+    * tick-report column, and its two re-adjudication report columns
+    * (the original class, the class that still holds). */
+  private[graft] final case class Evidence(flag: String, verdict: String,
+                                           nTick: String, nT1: String,
+                                           nStill: String)
+
+  /** THE admission ladder, the one definition of verdict precedence
+    * every gate in the engine reads (q103 and its loop family, the
+    * semantic/decontamination legs, the unified multimodal tick, their
+    * deployment forms and re-adjudications):
+    *
+    *   exact → fuzzy → [semantic] → [contaminated] → [image → audio]
+    *   → low_quality → new
+    *
+    * A doc takes the verdict of the FIRST rung whose flag is set; a doc
+    * no rung flags enters the quality window (`low_quality` for the
+    * bottom `lowFrac`, else `new`). Exact (the hash join of `h` against
+    * the state's `ch`) and fuzzy are always attached; a bracketed rung
+    * only when its leg is. Text-derived evidence outranks the modality
+    * signatures. Report specs read columns by position, so this order
+    * and these names are the contract. */
+  private[graft] object Evidence {
+    val Exact = Evidence("ch", "dup_exact", "n_dup_exact",
+      "n_exact_t1", "n_still_exact")
+    val Fuzzy = Evidence("fid", "dup_fuzzy", "n_dup_fuzzy",
+      "n_fuzzy_t1", "n_still_fuzzy")
+    val Semantic = Evidence("sid", "dup_semantic", "n_dup_semantic",
+      "n_sem_t1", "n_still_semantic")
+    val Contaminated = Evidence("cid", "contaminated", "n_contaminated",
+      "n_contam_t1", "n_still_contaminated")
+    val Image = Evidence("ifid", "dup_image", "n_dup_image",
+      "n_image_t1", "n_still_image")
+    val Audio = Evidence("afid", "dup_audio", "n_dup_audio",
+      "n_audio_t1", "n_still_audio")
+    val Ladder = Seq(Exact, Fuzzy, Semantic, Contaminated, Image, Audio)
   }
 
-  /** [[gatedTickFrame]] generalized to EXTRA evidence classes spliced
-    * between the fuzzy and quality gates, in precedence order — the one
-    * kernel behind the q135 semantic leg (`sid`) and the q136
-    * decontamination leg (`cid`), alone or composed: each extra is a
-    * ≤1-match id join; the quality window ranks the docs NO class
-    * flagged. Same checkpoint discipline as the base kernel. */
-  private[graft] def gatedTickFrameWith(batch: DataFrame, state: DataFrame,
-                                        fuzzyIds: DataFrame,
-                                        extra: Seq[(String, DataFrame)],
-                                        w: Seq[Double],
-                                        lowFrac: Double): DataFrame = {
+  /** The rungs a gate runs, in precedence order: exact and fuzzy plus
+    * the classes of the legs it has attached. Its `verdict`s are the
+    * quarantine classes a re-adjudication can re-judge. */
+  private[graft] def ladder(legs: Evidence*): Seq[Evidence] =
+    Evidence.Ladder.filter(e =>
+      e == Evidence.Exact || e == Evidence.Fuzzy || legs.contains(e))
+
+  /** No rung of `ladder` flagged the doc — the quality window's cohort. */
+  private[graft] def novel(ladder: Seq[Evidence]): Column =
+    ladder.map(e => col(e.flag).isNull).reduce(_ && _)
+
+  /** The quarantine verdict label: the first flagged rung's, else
+    * `low_quality` (callers filter to rejected docs). */
+  private[graft] def verdictOf(ladder: Seq[Evidence]): Column =
+    ladder.tail.foldLeft(
+      when(col(ladder.head.flag).isNotNull, lit(ladder.head.verdict))) {
+      (c, e) => c.when(col(e.flag).isNotNull, lit(e.verdict))
+    }.otherwise(lit("low_quality"))
+
+  /** Per rung, the count of docs whose FIRST flagged rung it is. */
+  private def firstHits(ladder: Seq[Evidence],
+                        name: Evidence => String): Seq[Column] =
+    ladder.zipWithIndex.map { case (e, i) =>
+      val hit =
+        if (i == 0) col(e.flag) else when(novel(ladder.take(i)), col(e.flag))
+      count(hit).as(name(e))
+    }
+
+  /** One gated tick's labeled frame — the q103/q106 j∘lq kernel against
+    * an ARBITRARY exact-hash state (`ch` column) under frozen weights
+    * `w`, with `flags` the flag-id frames of every other attached rung
+    * (fuzzy always; id column named as the rung's flag), joined in
+    * [[Evidence]] ladder order. Per batch doc: (doc_id, source, h, ch,
+    * the flags, p, lq) with `lq` true = bottom `lowFrac` of the docs no
+    * rung flagged, by score; false = admitted; null = dup. Every join is
+    * ≤1-match, so the verdict classes partition the batch. Checkpointed
+    * twice (the q103 marker discipline — un-severed, each reference
+    * would re-expand and RE-EXECUTE the flag chains): `j` is read by the
+    * budget window and the final join; the returned frame by the report
+    * AND any fold-back consumer ([[graft.io.IngestLoop.runTick]]). */
+  private[graft] def gatedTickFrame(batch: DataFrame, state: DataFrame,
+                                    flags: Seq[(Evidence, DataFrame)],
+                                    w: Seq[Double],
+                                    lowFrac: Double): DataFrame = {
+    val ids = flags.toMap
+    val rungs = ladder(flags.map(_._1): _*)
     val j0 = batch
       .select(col("doc_id"), col("source"), contentHash60(col("text")).as("h"))
       .join(state, col("h") === col("ch"), "left")
-      .join(fuzzyIds.select("fid"), col("doc_id") === col("fid"), "left")
-    val j = extra.foldLeft(j0) { case (acc, (c, ids)) =>
-        acc.join(ids.select(c), col("doc_id") === col(c), "left")
+    val j = rungs.tail.foldLeft(j0) { (acc, e) =>
+        acc.join(ids(e).select(e.flag), col("doc_id") === col(e.flag), "left")
       }
       .join(QualityModel.scores(batch, w), "doc_id")
       .localCheckpoint()
-    val novel = (Seq("ch", "fid") ++ extra.map(_._1))
-      .map(col(_).isNull).reduce(_ && _)
-    val lq = RankGate.lowFracFlags(j.filter(novel), lowFrac)
+    val lq = RankGate.lowFracFlags(j.filter(novel(rungs)), lowFrac)
     j.join(lq, col("doc_id") === col("lqid"), "left").localCheckpoint()
   }
 
-  /** Per-source report of a [[gatedTickFrameWith]] frame: the q103
-    * columns with one precedence-positioned count per extra class
-    * (`extra` = (flag column, report column) pairs, gate order). */
-  private[graft] def gatedTickReportWith(v: DataFrame,
-                                         extra: Seq[(String, String)])
-      : DataFrame = {
-    var prev: org.apache.spark.sql.Column =
-      col("ch").isNull && col("fid").isNull
-    val extraAggs = extra.map { case (c, name) =>
-      val e = count(when(prev, col(c))).as(name)
-      prev = prev && col(c).isNull
-      e
-    }
-    val aggs = Seq(count(lit(1)).as("n_batch"),
-      count(col("ch")).as("n_dup_exact"),
-      count(when(col("ch").isNull, col("fid"))).as("n_dup_fuzzy")) ++
-      extraAggs ++ Seq(
-      count(when(col("lq") === true, lit(1))).as("n_low_quality"),
-      count(when(col("lq") === false, lit(1))).as("n_new"))
+  /** The per-source report of a [[gatedTickFrame]]: n_batch, one
+    * count per rung of `ladder`, n_low_quality, n_new. */
+  private[graft] def gatedTickReport(v: DataFrame,
+                                     ladder: Seq[Evidence]): DataFrame = {
+    val aggs = count(lit(1)).as("n_batch") +: firstHits(ladder, _.nTick) ++:
+      Seq(count(when(col("lq") === true, lit(1))).as("n_low_quality"),
+        count(when(col("lq") === false, lit(1))).as("n_new"))
     v.groupBy("source").agg(aggs.head, aggs.tail: _*).orderBy("source")
   }
 
-  /** The per-source report of a [[gatedTickFrame]] (q103's columns). */
-  private[graft] def gatedTickReport(v: DataFrame): DataFrame =
-    v.groupBy("source")
-      .agg(count(lit(1)).as("n_batch"),
-        count(col("ch")).as("n_dup_exact"),
-        count(when(col("ch").isNull, col("fid"))).as("n_dup_fuzzy"),
-        count(when(col("lq") === true, lit(1))).as("n_low_quality"),
-        count(when(col("lq") === false, lit(1))).as("n_new"))
+  /** The per-source RE-ADJUDICATION report of a re-judged quarantine
+    * frame `vr` (q131/q133 and their deployment forms): quarantine size
+    * split by ORIGINAL verdict (`quar` carries (doc_id, verdict_t1))
+    * and by re-adjudicated verdict, one count per rung of `ladder`. */
+  private[graft] def readjReport(vr: DataFrame, quar: DataFrame,
+                                 ladder: Seq[Evidence]): DataFrame = {
+    val aggs = count(lit(1)).as("n_quarantined") +:
+      ladder.map(e =>
+        count(when(col("verdict_t1") === e.verdict, lit(1))).as(e.nT1)) ++:
+      firstHits(ladder, _.nStill) ++:
+      Seq(count(when(col("lq") === true, lit(1))).as("n_low_quality"),
+        count(when(col("lq") === false, lit(1))).as("n_readmitted"))
+    vr.join(quar.withColumnRenamed("doc_id", "qid"),
+        col("doc_id") === col("qid"))
+      .groupBy("source")
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy("source")
+  }
 
   /** The q106 oracle chain through tick 1, the fold-back state, and
     * tick 2's features/candidates (`...v1, adm1, c1, t2, b2_feat,
@@ -582,11 +619,11 @@ trait ProvenanceGateOps { self: Provenance.type =>
       scope = s"adaptive$BatchMod")
     val flips = QualityModel.flipCount(documents, p.w, wFresh, lowFrac, evalN)
     val retrain = flips > maxFlips
-    val v2 = gatedTickFrame(p.t2, p.c1, p.fz2,
+    val v2 = gatedTickFrame(p.t2, p.c1, Seq(Evidence.Fuzzy -> p.fz2),
       if (retrain) wFresh else p.w, lowFrac)
-    gatedTickReport(p.v1)
+    gatedTickReport(p.v1, ladder())
       .withColumn("tick", lit(1)).withColumn("model", lit("base"))
-      .union(gatedTickReport(v2)
+      .union(gatedTickReport(v2, ladder())
         .withColumn("tick", lit(2))
         .withColumn("model", lit(if (retrain) "fresh" else "base")))
       .select(col("tick"), col("source"), col("model"), col("n_batch"),
@@ -701,11 +738,13 @@ trait ProvenanceGateOps { self: Provenance.type =>
     val fz2r = p.adj.filter(m(col("b")) === 0)
       .join(keep.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
       .select(col("b").as("fid")).distinct()
-    val v2 = gatedTickFrame(p.t2, c1r, fz2r, p.w, lowFrac)
+    val v2 = gatedTickFrame(p.t2, c1r, Seq(Evidence.Fuzzy -> fz2r), p.w,
+      lowFrac)
     val ns1 = corpusHashState(corpus).agg(count(lit(1)).as("n_state"))
     val ns2 = c1r.agg(count(lit(1)).as("n_state"))
-    gatedTickReport(p.v1).withColumn("tick", lit(1)).crossJoin(broadcast(ns1))
-      .union(gatedTickReport(v2).withColumn("tick", lit(2))
+    gatedTickReport(p.v1, ladder()).withColumn("tick", lit(1))
+      .crossJoin(broadcast(ns1))
+      .union(gatedTickReport(v2, ladder()).withColumn("tick", lit(2))
         .crossJoin(broadcast(ns2)))
       .select(col("tick"), col("source"), col("n_batch"), col("n_dup_exact"),
         col("n_dup_fuzzy"), col("n_low_quality"), col("n_new"), col("n_state"))
@@ -943,17 +982,10 @@ trait ProvenanceGateOps { self: Provenance.type =>
                             lowFrac: Double = 0.25,
                             budgetFrac: Double = DefaultBudgetFrac)
       : DataFrame = {
-    val isBatch = (c: org.apache.spark.sql.Column) =>
-      pmod(c, lit(BatchMod)) === 0
-    val corpus = documents.filter(!isBatch(col("doc_id")))
-    val batch = documents.filter(isBatch(col("doc_id")))
-    val fuzzy = Fuzzy.lshCrossPairs(documents, isBatch, threshold)
-      .select(col("eval_id").as("fid")).distinct()
-    val w = QualityModel.weights(corpus, scope = s"admission$BatchMod")
-    val v = gatedTickFrame(batch, corpusHashState(corpus), fuzzy, w, lowFrac)
+    val (corpus, batch, v) = admissionFrame(documents, threshold, lowFrac)
     val srcCounts = corpus.groupBy("source").agg(count(lit(1)).as("n_src"))
-    budgetedTickReport(v,
-      budgetedFrame(v, batch, srcCounts, budgetFrac), srcCounts, budgetFrac)
+    budgetedTickReport(v, budgetedFrame(v, batch, srcCounts, budgetFrac),
+      srcCounts, budgetFrac, ladder())
   }
 
   /** The per-doc budget annotation of a tick's NOVEL docs: quality-rank
@@ -989,11 +1021,13 @@ trait ProvenanceGateOps { self: Provenance.type =>
       .localCheckpoint()
   }
 
-  /** The q130 report: q103's verdict columns + the budget accounting
-    * over a precomputed [[budgetedFrame]] `bf`. */
+  /** The q130 report: the [[gatedTickReport]] verdict columns of
+    * `ladder` (n_new as n_novel) + the budget accounting over a
+    * precomputed [[budgetedFrame]] `bf`. */
   private[graft] def budgetedTickReport(v: DataFrame, bf: DataFrame,
                                         srcCounts: DataFrame,
-                                        budgetFrac: Double): DataFrame = {
+                                        budgetFrac: Double,
+                                        ladder: Seq[Evidence]): DataFrame = {
     val nrep = bf.groupBy("source")
       .agg(sum("n_tokens").as("novel_tokens"),
         count(when(col("admitted"), lit(1))).as("n_admitted"),
@@ -1005,16 +1039,17 @@ trait ProvenanceGateOps { self: Provenance.type =>
       .select(col("source"), greatest(lit(1L),
         round(lit(budgetFrac) * col("t_novel") * col("n_src") / col("tc"))
           .cast("long")).as("budget_tokens"))
-    gatedTickReport(v).withColumnRenamed("n_new", "n_novel")
+    gatedTickReport(v, ladder).withColumnRenamed("n_new", "n_novel")
       .join(broadcast(bud), Seq("source"), "left")
       .join(broadcast(nrep), Seq("source"), "left")
-      .select(col("source"), col("n_batch"), col("n_dup_exact"),
-        col("n_dup_fuzzy"), col("n_low_quality"), col("n_novel"),
+      .select(Seq(col("source"), col("n_batch")) ++
+        ladder.map(e => col(e.nTick)) ++ Seq(
+        col("n_low_quality"), col("n_novel"),
         coalesce(col("novel_tokens"), lit(0L)).as("novel_tokens"),
         coalesce(col("budget_tokens"), lit(1L)).as("budget_tokens"),
         coalesce(col("n_admitted"), lit(0L)).as("n_admitted"),
         coalesce(col("admitted_tokens"), lit(0L)).as("admitted_tokens"),
-        coalesce(col("n_over_budget"), lit(0L)).as("n_over_budget"))
+        coalesce(col("n_over_budget"), lit(0L)).as("n_over_budget")): _*)
       .orderBy("source")
   }
 
@@ -1122,8 +1157,8 @@ trait ProvenanceGateOps { self: Provenance.type =>
     val p = multiTickParts(documents, threshold, lowFrac)
     val m = (c: org.apache.spark.sql.Column) => pmod(c, lit(BatchMod))
     val corpus = documents.filter(m(col("doc_id")).between(1, 9))
-    val quar = p.v1.filter(col("ch").isNotNull || col("fid").isNotNull)
-      .select(col("doc_id"), col("ch").isNotNull.as("was_exact"))
+    val quar = p.v1.filter(!novel(ladder()))
+      .select(col("doc_id"), verdictOf(ladder()).as("verdict_t1"))
     val quarDocs = documents.join(quar.select("doc_id"),
       Seq("doc_id"), "left_semi")
     val ing1 = corpus.select("doc_id")
@@ -1135,18 +1170,9 @@ trait ProvenanceGateOps { self: Provenance.type =>
       .join(quar.select(col("doc_id").as("b")), Seq("b"), "left_semi")
       .join(keep.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
       .select(col("b").as("fid")).distinct()
-    val vr = gatedTickFrame(quarDocs, c1r, fzq, p.w, lowFrac)
-    vr.join(quar.withColumnRenamed("doc_id", "qid"),
-        col("doc_id") === col("qid"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_quarantined"),
-        count(when(col("was_exact"), lit(1))).as("n_exact_t1"),
-        count(when(!col("was_exact"), lit(1))).as("n_fuzzy_t1"),
-        count(col("ch")).as("n_still_exact"),
-        count(when(col("ch").isNull, col("fid"))).as("n_still_fuzzy"),
-        count(when(col("lq") === true, lit(1))).as("n_low_quality"),
-        count(when(col("lq") === false, lit(1))).as("n_readmitted"))
-      .orderBy("source")
+    val vr = gatedTickFrame(quarDocs, c1r, Seq(Evidence.Fuzzy -> fzq), p.w,
+      lowFrac)
+    readjReport(vr, quar, ladder())
   }
 
   def q131Sql(threshold: Double = 0.2, lowFrac: Double = 0.25,
@@ -1239,7 +1265,8 @@ trait ProvenanceGateOps { self: Provenance.type =>
       .join(live.select(col("doc_id").as("b")), Seq("b"), "left_semi")
       .join(keep.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
       .select(col("b").as("fid")).distinct()
-    val vr = gatedTickFrame(liveDocs, c1r, fzq, p.w, lowFrac)
+    val vr = gatedTickFrame(liveDocs, c1r, Seq(Evidence.Fuzzy -> fzq), p.w,
+      lowFrac)
     val quarSrc = quar.groupBy("source")
       .agg(count(lit(1)).as("n_quarantined"))
     val sevSrc = severed.groupBy("source")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import Provenance.Evidence
+
 /** The SEMANTIC-DEDUP leg of the admission gate (q135) — the r11
   * verdict's top ask: the q103/q106 verdict precedence was blind to
   * embedding-level near-duplicates, so a paraphrase of an ingested doc
@@ -143,22 +145,6 @@ object SemanticGate {
       .select(col("sb").as("sid")).distinct()
   }
 
-  /** The gated tick kernel with the semantic class spliced in — the
-    * [[Provenance.gatedTickFrame]] j∘lq shape plus a ≤1-match `sid`
-    * join; the quality window ranks the TRIPLE-novel cohort (no exact,
-    * no fuzzy, no semantic evidence). Same checkpoint discipline. */
-  private[graft] def semGatedTickFrame(batch: DataFrame, state: DataFrame,
-                                       fuzzyIds: DataFrame,
-                                       semIds: DataFrame, w: Seq[Double],
-                                       lowFrac: Double): DataFrame =
-    Provenance.gatedTickFrameWith(batch, state, fuzzyIds,
-      Seq(("sid", semIds)), w, lowFrac)
-
-  /** Per-source report of a [[semGatedTickFrame]] — q103's columns with
-    * `n_dup_semantic` in precedence position. */
-  private[graft] def semGatedTickReport(v: DataFrame): DataFrame =
-    Provenance.gatedTickReportWith(v, Seq(("sid", "n_dup_semantic")))
-
   /** q135: the SEMANTIC admission loop, decisive in BOTH directions in
     * one oracle-checked frame — three phases (the q117 shape with the
     * semantic class live in every gate):
@@ -230,8 +216,8 @@ object SemanticGate {
       .select(col("b").as("fid")).distinct()
     val sm1 = sadj.filter(m(col("b")) >= 10 && m(col("a")).between(1, 9))
       .select(col("b").as("sid")).distinct()
-    val v1 = semGatedTickFrame(t1, Provenance.corpusHashState(corpus),
-      fz1, sm1, w, lowFrac)
+    val v1 = Provenance.gatedTickFrame(t1, Provenance.corpusHashState(corpus),
+      Seq(Evidence.Fuzzy -> fz1, Evidence.Semantic -> sm1), w, lowFrac)
     val adm1 = v1.filter(col("lq") === false).select("doc_id")
     val ing1 = Materialize.sever(corpus.select("doc_id").union(adm1))
     val keep = ing1.filter(
@@ -250,8 +236,10 @@ object SemanticGate {
     val sm2p = sadj.filter(m(col("b")) === 0)
       .join(ing1.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
       .select(col("b").as("spre")).distinct()
-    val v2 = semGatedTickFrame(t2, c1r, fz2r, sm2r, w, lowFrac)
-    val r1 = semGatedTickReport(v1)
+    val v2 = Provenance.gatedTickFrame(t2, c1r,
+      Seq(Evidence.Fuzzy -> fz2r, Evidence.Semantic -> sm2r), w, lowFrac)
+    val r1 = Provenance.gatedTickReport(v1,
+      Provenance.ladder(Evidence.Semantic))
       .withColumn("tick", lit(1))
       .withColumn("n_sem_readmitted", lit(0L))
     val r2 = v2.join(sm2p, col("doc_id") === col("spre"), "left")

@@ -659,8 +659,8 @@ object DocStream {
         // classes; the stream applies the same extra evidence legs
         // here, BEFORE the dedup modality signatures — eval/text
         // evidence outranks modality DEDUP signatures (the q133
-        // cross-evidence discipline, same precedence as
-        // mmGatedTickFrameWith), and an mm eval leg's q140 channels
+        // cross-evidence discipline, the Provenance.Evidence ladder's
+        // precedence), and an mm eval leg's q140 channels
         // judge the batch sigs against the LIVE eval media
         val evaled = refineMmEvalLeg(
           refineContamLeg(

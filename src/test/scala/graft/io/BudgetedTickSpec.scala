@@ -71,7 +71,8 @@ class BudgetedTickSpec extends AnyFunSuite {
         pmod(c, lit(Provenance.BatchMod)) === 0, 0.2)
       .select(col("eval_id").as("fid")).distinct()
     val v = Provenance.gatedTickFrame(batch,
-      Provenance.corpusHashState(corpus), fuzzy, w, 0.25)
+      Provenance.corpusHashState(corpus),
+      Seq(Provenance.Evidence.Fuzzy -> fuzzy), w, 0.25)
     val srcCounts = corpus.groupBy("source").agg(count(lit(1)).as("n_src"))
     val bf = Provenance.budgetedFrame(v, batch, srcCounts,
       Provenance.DefaultBudgetFrac)
@@ -96,5 +97,43 @@ class BudgetedTickSpec extends AnyFunSuite {
       docs.join(admIds, Seq("doc_id"), "left_semi"), w).collect()
     assert(admRep.map(_.getLong(2)).sum === nAdm,
       "every resubmitted admitted doc must be dup_exact")
+  }
+
+  test("budgeted tick with a semantic leg: n_dup_semantic between n_dup_fuzzy and n_low_quality; verdict counts ≡ the unbudgeted tick") {
+    // the SemIngestSpec fixture: base corpus doc_id % 17 in 1..9, batch
+    // = its tick 1 (doc_id % 17 ≥ 10), the planted embedding pairs
+    val root = Files.createTempDirectory("graft_budget_sem").toString
+    val emb = Tables.load(spark, sf, "embeddings")
+    val m = pmod(col("doc_id"), lit(Provenance.BatchMod))
+    val corpus = docs.filter(m.between(1, 9))
+    val t1 = docs.filter(m >= 10)
+    val w = QualityModel.weights(corpus,
+      scope = s"multitick${Provenance.BatchMod}")
+    def build(name: String): (IngestLoop.Stores, IngestLoop.SemLeg) = {
+      val st = IngestLoop.stores(spark, root, name)
+      val leg = IngestLoop.semLeg(spark, root, name, emb)
+      IngestLoop.bootstrap(st, corpus)
+      IngestLoop.bootstrapSem(leg, corpus)
+      (st, leg)
+    }
+
+    val (stB, legB) = build("sem_budget")
+    val mixIdx = ArtifactStore.mixIncremental(spark, root, "sem_budget")
+    mixIdx.bootstrap(corpus)
+    val budgeted = IngestLoop.runBudgetedTick(stB, t1, w,
+      IngestLoop.QuotaLeg(mixIdx), sem = Some(legB))
+    assert(budgeted.columns.toSeq === Seq("source", "n_batch",
+      "n_dup_exact", "n_dup_fuzzy", "n_dup_semantic", "n_low_quality",
+      "n_novel", "novel_tokens", "budget_tokens", "n_admitted",
+      "admitted_tokens", "n_over_budget"))
+
+    // an identically bootstrapped state judged by the unbudgeted tick:
+    // the budget only splits n_new, so every verdict count agrees
+    val (stU, legU) = build("sem_plain")
+    val plain = rows(IngestLoop.runTick(stU, t1, w, sem = Some(legU)))
+    assert(plain.map(_(4).asInstanceOf[Long]).sum > 0,
+      "the semantic leg must reject someone")
+    assert(rows(budgeted).map(_.take(7)) === plain,
+      "per source: n_batch, the four verdict classes and n_novel = n_new")
   }
 }
