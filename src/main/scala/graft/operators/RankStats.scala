@@ -30,6 +30,14 @@ import org.apache.spark.sql.functions._
   *      documented scalar barrier, like the quantile barriers in
   *      CleanHistorical) and folded back in as a when-ladder of
   *      literals, so the hot path stays in whole-stage codegen.
+  *
+  * For several columns ([[rankTables]]) the barriers are shared: one
+  * severed distinct-value table for all columns, one multi-column
+  * sketch for every column's cut points, one query for every
+  * (column, bucket) total. Only step 2 runs per column, as a small
+  * bucket-partitioned window over that column's slice — so Spearman
+  * over a wide frame costs the same number of barrier jobs as over a
+  * two-column one.
   */
 object RankStats {
 
@@ -43,54 +51,64 @@ object RankStats {
     cuts.map(cut => when(v > lit(cut), 1).otherwise(0))
       .foldLeft(lit(0): Column)(_ + _)
 
-  /** Exclusive prefix offsets from per-bucket row totals. */
-  private def exclusivePrefix(totals: Map[Int, Long], nBuckets: Int): Map[Int, Long] = {
-    var acc = 0L
-    (0 until nBuckets).map { b =>
-      val off = b -> acc; acc += totals.getOrElse(b, 0L); off
-    }.toMap
-  }
-
-  /** (value, avg_rank) table built from a column's SEVERED
-    * distinct-value relation `dist(v, n)`: the quantile sketch, the
-    * per-bucket totals and the rank window all read the small severed
-    * table, whose size is the column's cardinality — not the base row
-    * count. Exactness is unchanged: cut points only PARTITION the
-    * prefix-sum work (for any monotone bucketing the exclusive offsets
-    * reproduce the global cumulative sum exactly), and the totals are
-    * exact long sums of `n`. r17: the former shape ran the sketch and
-    * a wide indicator aggregate as two extra FULL scans of the base
-    * table; q38's lineitem scans drop 5 → 3 (one groupBy per column +
-    * the final rank-attach join). */
-  private def rankTableFromDistinct(dist: DataFrame): DataFrame = {
-    val probs = (1 until Buckets).map(_.toDouble / Buckets).toArray
-    val cuts = dist.stat.approxQuantile("v", probs, 0.01).distinct.sorted
-    val b = bucketOf(col("v"), cuts)
-    val aggs = (0 to cuts.length).map(i =>
-      coalesce(sum(when(b === i, col("n"))), lit(0L)).as(s"t$i"))
-    val row = dist.agg(aggs.head, aggs.tail: _*).head()
-    val totals = (0 to cuts.length).map(i => i -> row.getLong(i)).toMap
-    val offsets = exclusivePrefix(totals, cuts.length + 1)
-    val offsetCol = offsets.toSeq.sortBy(_._1).foldLeft(lit(0L): Column) {
-      case (acc, (bb, off)) => when(col("b") === bb, lit(off)).otherwise(acc)
-    }
-    val wIn = Window.partitionBy("b").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    dist.withColumn("b", b)
-      .withColumn("cum", sum("n").over(wIn) + offsetCol)
-      .select(col("v"), (col("cum") - (col("n") - lit(1)) / 2.0).as("r"))
-  }
-
-  /** (value, avg_rank) tables for several columns. Each column costs
-    * ONE scan of the base table (its distinct-count groupBy, severed);
-    * the sketch/totals barriers read the severed cardinality-sized
-    * relation. Ties get the average rank of their run, matching
+  /** (value, avg_rank) tables for several columns. The prefix-sum
+    * barriers are SHARED: their count does not grow with the columns.
+    *   - ONE sever: every column melts into one distinct-value relation
+    *     `dist(k, v0…, n)` (k = column index) — one scan of the base
+    *     table for all columns. The melt keeps each column's own type:
+    *     it holds one value slot per distinct data type and a column's
+    *     values sit in its type's slot (a shared double slot would
+    *     merge distinct longs above 2^53);
+    *   - ONE sketch: every column's cut points from one multi-column
+    *     `approxQuantile` over the `when(k === i, v)` slices;
+    *   - ONE totals query: all per-(column, bucket) row totals in one
+    *     `groupBy(k, b)`;
+    *   - per column, a small bucket-partitioned window over its own
+    *     slice `dist.filter(k === i)`, the exclusive offsets folded in
+    *     as a when-ladder of literals.
+    * All barriers read the severed table, whose size is the columns'
+    * cardinality — not the base row count. Exactness is unchanged:
+    * cut points only PARTITION the prefix-sum work (for any monotone
+    * bucketing the exclusive offsets reproduce the global cumulative
+    * sum exactly), and the totals are exact long sums of `n`. Ties get
+    * the average rank of their run, matching
     * `pandas.rank(method="average")` — the Spearman convention. */
   def rankTables(df: DataFrame, cols: Seq[String]): Map[String, DataFrame] = {
-    cols.map { c =>
-      val dist = Materialize.sever(
-        df.groupBy(col(c).as("v")).agg(count(lit(1)).as("n")))
-      c -> rankTableFromDistinct(dist)
+    if (cols.isEmpty) return Map.empty
+    val types = cols.map(c => df.schema(c).dataType).distinct
+    val slotNames = types.indices.map(j => s"v$j")
+    def slot(c: String): String = slotNames(types.indexOf(df.schema(c).dataType))
+    val melted = cols.zipWithIndex.map { case (c, i) =>
+      struct(lit(i).as("k") +: slotNames.zip(types).map { case (s, t) =>
+        (if (s == slot(c)) col(c) else lit(null).cast(t)).as(s)
+      }: _*)
+    }
+    val dist = Materialize.sever(
+      df.select(explode(array(melted: _*)).as("m")).select("m.*")
+        .groupBy("k", slotNames: _*).agg(count(lit(1)).as("n")))
+    val probs = (1 until Buckets).map(_.toDouble / Buckets).toArray
+    val sliced = dist.select(cols.zipWithIndex.map { case (c, i) =>
+      when(col("k") === i, col(slot(c))).as(s"s$i")
+    }: _*)
+    val cuts = sliced.stat.approxQuantile(sliced.columns, probs, 0.01).map(_.distinct.sorted)
+    val bucket = cols.zipWithIndex.foldLeft(lit(0): Column) { case (acc, (c, i)) =>
+      when(col("k") === i, bucketOf(col(slot(c)), cuts(i))).otherwise(acc)
+    }
+    val totals = dist.groupBy(col("k"), bucket.as("b")).agg(sum("n"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val wIn = Window.partitionBy("b").orderBy("v")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cols.zipWithIndex.map { case (c, i) =>
+      // exclusive prefix over the column's per-bucket row totals
+      val buckets = 0 to cuts(i).length
+      val offsets = buckets.scanLeft(0L)((acc, b) => acc + totals.getOrElse((i, b), 0L))
+      val offsetCol = buckets.foldLeft(lit(0L): Column) { (acc, b) =>
+        when(col("b") === b, lit(offsets(b))).otherwise(acc)
+      }
+      c -> dist.filter(col("k") === i).select(col(slot(c)).as("v"), col("n"))
+        .withColumn("b", bucketOf(col("v"), cuts(i)))
+        .withColumn("cum", sum("n").over(wIn) + offsetCol)
+        .select(col("v"), (col("cum") - (col("n") - lit(1)) / 2.0).as("r"))
     }.toMap
   }
 
@@ -101,9 +119,9 @@ object RankStats {
 
   /** q38: Spearman rank correlation of quantity vs extended price.
     * Exercises both rank-join regimes: l_quantity's 50-value rank table
-    * broadcasts; l_extendedprice's ~N-value table shuffle-joins. Each
-    * column's prefix-sum barriers run on its severed distinct-value
-    * relation ([[rankTables]]). */
+    * broadcasts; l_extendedprice's ~N-value table shuffle-joins. Both
+    * columns' prefix-sum barriers run once, on their shared severed
+    * distinct-value relation ([[rankTables]]). */
   def q38Spearman(lineitem: DataFrame): DataFrame = {
     val tabs = rankTables(lineitem, Seq("l_quantity", "l_extendedprice"))
     val rq = tabs("l_quantity")

@@ -57,7 +57,16 @@ case class TableProfile(
   *   pass 1 — one wide aggregate: the row count, every numeric stat
   *            (including exact quantiles) + string lengths + pairwise
   *            correlations + all null/zero/negative censuses, for every
-  *            column at once;
+  *            column at once — a plain global aggregate with no
+  *            distinct counts in it;
+  *   pass 1b — every column's exact distinct count in one aggregate of
+  *            its own. Several distinct aggregates in one `agg` plan as
+  *            an Expand (every row copied once per distinct column)
+  *            grouped by (gid, value); in pass 1 that would also keep
+  *            every exact percentile buffer once per group, in a
+  *            single-task stage. Kept apart, the Expand carries only
+  *            counts. The counts are report values, so they stay
+  *            eligible for [[graft.catalyst.ApproxDistinctAboveThreshold]];
   *   pass 2 — histograms for all numeric columns in ONE aggregate
   *            (bins need pass-1 min/max — a data-dependent barrier,
   *            same shape as the reference's quantile→fill dataflow);
@@ -141,10 +150,12 @@ object Profiler {
 
   /** Spearman rank-correlation matrix (the profiling suite's second
     * correlation method, SURVEY A10): per-column average ranks via the
-    * grouped-CDF ([[graft.operators.RankStats.avgRanks]] — no global
+    * grouped-CDF ([[graft.operators.RankStats.rankTables]] — no global
     * row window), joined back by value, then ONE wide Pearson pass over
-    * all rank columns. Cost: one value-join per column + one aggregate
-    * scan; every join key table is bounded by column cardinality. */
+    * all rank columns. Cost: the rank tables' shared barriers (one
+    * sever, one sketch, one totals query for all columns) + one
+    * value-join per column inside the final aggregate scan; every join
+    * key table is bounded by column cardinality. */
   def spearmanMatrix(df: DataFrame, cols: Seq[String]): Seq[(String, String, Double)] = {
     // Listwise semantics for real: rank AFTER dropping rows with a null
     // in any profiled column (= pandas df[cols].dropna().corr("spearman")).
@@ -152,8 +163,8 @@ object Profiler {
     // ranks to rows that later drop out, skewing the surviving ranks when
     // nulls are staggered across columns.
     val base = df.select(cols.map(col): _*).na.drop(cols)
-    // ONE shared prefix plan for every column (one sketch job + one
-    // totals scan), not a pair of barrier jobs per column
+    // ONE shared prefix plan for every column (one sever, one sketch
+    // job, one totals scan), not a set of barrier jobs per column
     val rankTabs = graft.operators.RankStats.rankTables(base, cols)
     val ranked = cols.foldLeft(base) { (acc, c) =>
       val r = rankTabs(c)
@@ -188,7 +199,6 @@ object Profiler {
       Seq(
         count(col(c)).as(s"$c!n"),
         sum(col(c).isNull.cast("long")).as(s"$c!miss"),
-        countDistinct(col(c)).as(s"$c!dist"),
         sum((d === 0.0).cast("long")).as(s"$c!zeros"),
         sum((d < 0.0).cast("long")).as(s"$c!neg"),
         sum((isnan(d) || d === Double.PositiveInfinity || d === Double.NegativeInfinity)
@@ -206,7 +216,6 @@ object Profiler {
       Seq(
         count(col(c)).as(s"$c!n"),
         sum(col(c).isNull.cast("long")).as(s"$c!miss"),
-        countDistinct(col(c)).as(s"$c!dist"),
         min(length(col(c)).cast("long")).as(s"$c!minlen"),
         max(length(col(c)).cast("long")).as(s"$c!maxlen"),
         avg(length(col(c))).as(s"$c!avglen"))
@@ -225,6 +234,13 @@ object Profiler {
     }
     def gl(k: String): Long = g[Long](k).getOrElse(0L)
     val nRows = gl("!rows")
+
+    // ---- pass 1b: all distinct counts in their own aggregate ---------
+    val distAggs = (numCols ++ strCols).map(c => countDistinct(col(c)).as(c))
+    val distRow =
+      if (distAggs.nonEmpty) Some(df.agg(distAggs.head, distAggs.tail: _*).head())
+      else None
+    def dist(c: String): Long = distRow.fold(0L)(_.getAs[Long](c))
 
     // ---- pass 2: all histograms in one aggregate ---------------------
     val bounds = numCols.map(c => c -> (g[Double](s"$c!min"), g[Double](s"$c!max"))).toMap
@@ -279,20 +295,20 @@ object Profiler {
     // ---- pass 4: string top-k (valve-selected path) ------------------
     // Same discipline as the percentile valve (ApproxAboveThreshold):
     // exact below the threshold, sketch above — keyed here on the exact
-    // per-column distinct count pass 1 already computed, so the valve
+    // per-column distinct count pass 1b already computed, so the valve
     // decision is free.
     val topkThresh = df.sparkSession.conf
       .getOption(TopkSketchThresholdKey).map(_.toLong)
       .getOrElse(DefaultTopkSketchThreshold)
     val tops = strCols.map { c =>
-      c -> (if (topkThresh >= 0 && gl(s"$c!dist") > topkThresh)
+      c -> (if (topkThresh >= 0 && dist(c) > topkThresh)
               topKNative(df, c, topK)
             else topKExact(df, c, topK))
     }.toMap
 
     val numeric = numCols.map { c =>
       NumericProfile(c, df.schema(c).dataType.simpleString,
-        gl(s"$c!n"), gl(s"$c!miss"), gl(s"$c!dist"), gl(s"$c!zeros"),
+        gl(s"$c!n"), gl(s"$c!miss"), dist(c), gl(s"$c!zeros"),
         gl(s"$c!neg"), gl(s"$c!inf"),
         g[Double](s"$c!mean"), g[Double](s"$c!min"), g[Double](s"$c!max"),
         g[Double](s"$c!std"), g[Double](s"$c!skew"), g[Double](s"$c!kurt"),
@@ -300,7 +316,7 @@ object Profiler {
         g[Double](s"$c!q75"), g[Double](s"$c!q95"), hist(c))
     }
     val strings = strCols.map { c =>
-      StringProfile(c, gl(s"$c!n"), gl(s"$c!miss"), gl(s"$c!dist"),
+      StringProfile(c, gl(s"$c!n"), gl(s"$c!miss"), dist(c),
         g[Long](s"$c!minlen"), g[Long](s"$c!maxlen"), g[Double](s"$c!avglen"),
         tops(c))
     }

@@ -38,4 +38,11 @@ object TestSpark {
       (out, seen.result())
     } finally s.listenerManager.unregister(listener)
   }
+
+  /** Runs `body` and returns its result with the number of queries it
+    * ran on `s` (the capture marker not counted). */
+  def withQueryCount[T](s: SparkSession)(body: => T): (T, Int) = {
+    val (out, plans) = withOptimizedPlans(s)(body)
+    (out, plans.size - 1)
+  }
 }

@@ -158,6 +158,87 @@ class ProfilerSpec extends AnyFunSuite {
     assert(math.abs(rho - want) < 1e-12, s"got $rho want $want")
   }
 
+  /** Seeded frame with nulls, heavy ties, negatives and a LongType
+    * column holding 2^53 and 2^53 + 1 (equal once cast to double). */
+  private def tiedFrame(nRows: Int) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val big = 1L << 53
+    val rows = (0 until nRows).map { i =>
+      (if (i % 11 == 3) None else Some((rnd.nextInt(9) - 4) * 0.5),
+       if (i % 7 == 5) None else Some(rnd.nextInt(5) - 2),
+       if (i < 2) big + i else rnd.nextInt(40).toLong - 20,
+       rnd.nextGaussian())
+    }
+    (rows, rows.toDF("a", "b", "c", "d"))
+  }
+
+  test("synthetic exactness: distinct counts and Spearman match a brute-force computation") {
+    val (rows, df) = tiedFrame(600)
+    val p = Profiler.profile(df)
+    // brute-force distinct counts of the non-null values (c by its longs:
+    // 2^53 and 2^53 + 1 are two values)
+    val want = Map("a" -> rows.flatMap(_._1).distinct.size,
+      "b" -> rows.flatMap(_._2).distinct.size,
+      "c" -> rows.map(_._3).distinct.size, "d" -> rows.map(_._4).distinct.size)
+    p.numeric.foreach(n => assert(n.nDistinct === want(n.name).toLong, n.name))
+    // average ranks + Pearson over the listwise-complete rows; c is
+    // ranked by its longs so the two large values stay apart
+    val keep = rows.indices.filter(i => rows(i)._1.isDefined && rows(i)._2.isDefined)
+    def avgRank[T](xs: Seq[T])(implicit o: Ordering[T]): Seq[Double] = {
+      val sorted = xs.sorted
+      xs.map { x =>
+        val lo = sorted.indexWhere(o.equiv(_, x))
+        val hi = sorted.lastIndexWhere(o.equiv(_, x))
+        (lo + hi) / 2.0 + 1.0
+      }
+    }
+    val ranks = Map(
+      "a" -> avgRank(keep.map(rows(_)._1.get)), "b" -> avgRank(keep.map(rows(_)._2.get)),
+      "c" -> avgRank(keep.map(rows(_)._3)), "d" -> avgRank(keep.map(rows(_)._4)))
+    def pearson(x: Seq[Double], y: Seq[Double]): Double = {
+      val (mx, my) = (x.sum / x.size, y.sum / y.size)
+      val sxy = x.zip(y).map { case (u, v) => (u - mx) * (v - my) }.sum
+      sxy / math.sqrt(x.map(u => (u - mx) * (u - mx)).sum * y.map(v => (v - my) * (v - my)).sum)
+    }
+    assert(p.spearman.size === 6)
+    p.spearman.foreach { case (x, y, rho) =>
+      val w = pearson(ranks(x), ranks(y))
+      assert(math.abs(rho - w) < 1e-12, s"$x~$y: got $rho want $w")
+    }
+    // the large longs keep distinct ranks through the mixed-type melt
+    val cRanks = graft.operators.RankStats.rankTables(df, Seq("a", "c", "d"))("c")
+      .filter(org.apache.spark.sql.functions.col("v") >= (1L << 53))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(cRanks.size === 2 && cRanks((1L << 53) + 1) === cRanks(1L << 53) + 1.0, cRanks)
+  }
+
+  test("structural pin: no Expand beside exact percentiles; Spearman barriers do not grow with columns") {
+    import org.apache.spark.sql.functions.col
+    val (_, df) = tiedFrame(300)
+    val nine = df.select(df.columns.map(col) ++ Seq(
+      (col("a") * 2).as("e"), (col("b") + 1).as("f"), (col("c") - 3).as("g"),
+      (col("d") * col("d")).as("h"), (col("a") + col("d")).as("i")): _*)
+    val three = df.select("a", "b", "d")
+    val (_, plans) = TestSpark.withOptimizedPlans(spark)(Profiler.profile(nine))
+    plans.foreach(p => assert(!(p.contains("Expand") && p.contains("percentile(")),
+      "distinct counts must not share an aggregate with exact percentiles:\n" + p))
+    val (_, n3) = TestSpark.withQueryCount(spark)(Profiler.profile(three))
+    val (_, n9) = TestSpark.withQueryCount(spark)(Profiler.profile(nine))
+    assert(n9 === n3, "profile queries grew with the numeric column count")
+  }
+
+  test("empty shapes: a boolean-only frame profiles; an all-dropped Spearman is NaN") {
+    import spark.implicits._
+    val flags = Profiler.profile(Seq(true, false, true).toDF("flag"))
+    assert(flags.nRows === 3 && flags.nCols === 1 && flags.nDuplicateRows === 1)
+    assert(flags.numeric.isEmpty && flags.strings.isEmpty)
+    val dropped = Seq[(Option[Double], Option[Long])]((Some(1.0), None), (None, Some(2L)))
+      .toDF("x", "y")
+    val m = Profiler.spearmanMatrix(dropped, Seq("x", "y"))
+    assert(m.size === 1 && m.head._3.isNaN, m)
+  }
+
   test("A11 missing patterns partition the rows; all-present pattern dominates post-fill") {
     import spark.implicits._
     val df = Seq(
