@@ -41,6 +41,15 @@ import graft.operators.Provenance.Evidence
   * shingle strings — identical up to 2^-60/pair md5 collisions
   * ([[Fuzzy.lshPairsAgainstState]]); the spec pins equality on real
   * data.
+  *
+  * One tick = agreement → judge → [[foldAdmitted]]. Every tick kind —
+  * ingest, budgeted, re-adjudication, re-gate, their multimodal forms
+  * and the streaming folds — first fixes its tick from the one store
+  * list every attached store shares ([[Legs]]`.tick`, a takedown
+  * included), then judges its cohort against the state as of the
+  * previous tick, then appends the admitted docs' increments through
+  * the one fold-back. Compaction, quiesce and takedowns walk the one
+  * tombstone [[lineage]].
   */
 object IngestLoop extends IngestLegOps with IngestMmOps {
 
@@ -58,7 +67,10 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
   final case class Stores(hashes: ArtifactStore.IngestStateStore,
                           bands: ArtifactStore.IngestStateStore,
                           shingles: ArtifactStore.IngestStateStore,
-                          tombs: ArtifactStore.IngestStateStore)
+                          tombs: ArtifactStore.IngestStateStore) {
+    private[io] def all: Seq[ArtifactStore.IngestStateStore] =
+      Seq(hashes, bands, shingles)
+  }
 
   def stores(spark: SparkSession, root: String, name: String): Stores =
     Stores(
@@ -120,7 +132,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                   sem: Option[SemLeg] = None,
                   eval: Option[EvalLeg] = None)
       : Long =
-    retractTickImpl(st, Seq.empty, docIds, idx, census, ann, export, mix,
+    retractTickImpl(st, st.all, docIds, idx, census, ann, export, mix,
       model, quar, replay, sem, eval)
 
   /** [[retractTick]] for a MULTIMODAL loop: the per-modality signature
@@ -141,15 +153,15 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                     sem: Option[SemLeg] = None,
                     eval: Option[EvalLeg] = None)
       : Long =
-    retractTickImpl(st.text, Seq(st.imgSigs, st.audSigs), docIds, idx,
-      census, ann, export, mix, model, quar, replay, sem, eval)
+    retractTickImpl(st.text, st.all, docIds, idx, census, ann, export, mix,
+      model, quar, replay, sem, eval)
 
-  /** A TAKEDOWN IS A TICK (review finding, closed): the subtraction
-    * legs (census, mix) land their negative increments as tick-keyed
-    * writes, so every store ATTACHED to the deployment must advance to
-    * the takedown tick `k` TOGETHER — stores with nothing to subtract
-    * get an empty tick. Without this, the census/mix stores would sit
-    * one tick ahead of the dedup stores, the next ingest tick's
+  /** A TAKEDOWN IS A TICK: the subtraction legs (census, mix) land
+    * their negative increments as tick-keyed writes, so every store
+    * ATTACHED to the deployment must advance to the takedown tick `k`
+    * TOGETHER ([[tickOf]]'s one store list) — stores with nothing to
+    * subtract get an empty tick. Without this, the census/mix stores
+    * would sit one tick ahead of the dedup stores, the next ingest tick's
     * agreement would resolve to `k`, and its fold-back would OVERWRITE
     * the negative increment — silently losing the takedown from the
     * maintained census/mix while every verdict still looked right.
@@ -165,7 +177,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * batch-id-keyed fold ticks would otherwise collide with the
     * takedown tick. */
   private def retractTickImpl(st: Stores,
-                              extraStores: Seq[ArtifactStore.IngestStateStore],
+                              core: Seq[ArtifactStore.IngestStateStore],
                               docIds: DataFrame,
                               idx: Option[ArtifactStore.Bm25IncrementalIndex],
                               census: Option[
@@ -178,8 +190,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                               model: Option[ArtifactStore.ModelStore],
                               quar: Option[Quarantine],
                               replay: Option[ReplayLeg],
-                              sem: Option[SemLeg] = None,
-                              eval: Option[EvalLeg] = None)
+                              sem: Option[SemLeg],
+                              eval: Option[EvalLeg])
       : Long = {
     // Docs already tombstoned are dropped BEFORE any leg runs: the
     // anti-join legs (dedup stores, BM25 postings, IVF-PQ codes) are
@@ -196,13 +208,9 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     // carry doc_id, so the shared tombstone anti-join IS their
     // retraction (the bands/shingles algebra) — they only need the
     // empty takedown tick for the agreement
-    val dataStores = Seq(st.hashes, st.bands, st.shingles) ++ extraStores ++
-      quar.toSeq.flatMap(q => Seq(q.rows, q.resolvedIds)) ++
-      replay.map(_.feats) ++ sem.map(_.sigs) ++ eval.map(_.docGrams)
-    val k = nextTickOf((dataStores ++ idx.map(_.tfStore)
-      ++ census.map(_._1.censusStore) ++ ann.map(_.codeStore)
-      ++ mix.map(_._1.mixStore)).map(_.maxTick)
-      ++ export.map(_.maxTick))
+    val dataStores = lineage(core, sem, eval, quar, replay)
+    val k = tickOf(dataStores, idx, census.map(_._1), ann, mix.map(_._1),
+      export)
     def emptyTick(s: ArtifactStore.IngestStateStore): Unit =
       s.appendTickAt(k, s.current().get.limit(0))
     dataStores.foreach(emptyTick)
@@ -259,9 +267,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
   def rollover(st: Stores, spark: SparkSession, root: String,
                name: String): Stores = {
     val next = stores(spark, root, name)
-    next.hashes.appendTickAt(1, resolved(st, st.hashes.current().get))
-    next.bands.appendTickAt(1, resolved(st, st.bands.current().get))
-    next.shingles.appendTickAt(1, resolved(st, st.shingles.current().get))
+    next.all.zip(st.all).foreach { case (n, s) =>
+      n.appendTickAt(1, resolved(st, s.current().get)) }
     next
   }
 
@@ -273,26 +280,12 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
   def rolloverMm(st: MmStores, spark: SparkSession, root: String,
                  name: String): MmStores = {
     val next = mmStores(spark, root, name)
-    next.text.hashes.appendTickAt(1,
-      resolved(st.text, st.text.hashes.current().get))
-    next.text.bands.appendTickAt(1,
-      resolved(st.text, st.text.bands.current().get))
-    next.text.shingles.appendTickAt(1,
-      resolved(st.text, st.text.shingles.current().get))
-    next.imgSigs.appendTickAt(1, resolved(st.text, st.imgSigs.current().get))
-    next.audSigs.appendTickAt(1, resolved(st.text, st.audSigs.current().get))
+    next.all.zip(st.all).foreach { case (n, s) =>
+      n.appendTickAt(1, resolved(st.text, s.current().get)) }
     next
   }
 
-  /** Roll an attached quarantine into the same fresh generation as
-    * [[rollover]]'s stores: the LIVE quarantine (rows minus resolved
-    * ids minus corpus tombstones) re-seeds as tick 1 of a new
-    * [[Quarantine]], with an empty resolvedIds base — so the rolled
-    * bundle's tick agreement aligns with the rolled stores' (both at
-    * tick 1) and a quiesce-point [[readjudicateTick]] recovers
-    * stream-rejected docs after a takedown (the streaming quarantine
-    * fold's restart-boundary contract). */
-  /** [[rollover]] for an attached SEMANTIC leg (r12 advice): the sig
+  /** [[rollover]] for an attached SEMANTIC leg: the sig
     * store re-seeds — resolved through the OLD generation's tombstones
     * — as tick 1 of a fresh store under the rolled loop's name, so a
     * sem-attached tick after rollover starts from an aligned agreement
@@ -354,17 +347,48 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     next
   }
 
+  /** Roll an attached quarantine into the same fresh generation as
+    * [[rollover]]'s stores: the LIVE quarantine ([[quarantineRows]])
+    * re-seeds as tick 1 of a new
+    * [[Quarantine]], with an empty resolvedIds base — so the rolled
+    * bundle's tick agreement aligns with the rolled stores' (both at
+    * tick 1) and a quiesce-point [[readjudicateTick]] recovers
+    * stream-rejected docs after a takedown (the streaming quarantine
+    * fold's restart-boundary contract). */
   def rolloverQuarantine(st: Stores, quar: Quarantine, spark: SparkSession,
                          root: String, name: String): Quarantine = {
     val next = quarantine(spark, root, name)
-    val rows = quar.rows.current().get
-    val live = resolved(st,
-      quar.resolvedIds.current()
-        .fold(rows)(r => rows.join(r.select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")))
+    val (rows, live) = quarantineRows(st, quar, _.current())
     next.rows.appendTickAt(1, live)
     next.resolvedIds.appendTickAt(1, rows.select("doc_id").limit(0))
     next
+  }
+
+  /** The quarantine rows `read` returns, and the LIVE part of them: rows
+    * minus the ids a re-adjudication or re-gate resolved, minus the
+    * corpus tombstones (a doc taken down while quarantined never
+    * re-admits). */
+  private def quarantineRows(st: Stores, quar: Quarantine,
+                             read: ArtifactStore.IngestStateStore =>
+                               Option[DataFrame]): (DataFrame, DataFrame) = {
+    val rows = read(quar.rows).getOrElse(
+      sys.error("quarantine not bootstrapped: no tick-1 base"))
+    (rows, resolved(st, read(quar.resolvedIds)
+      .fold(rows)(r => rows.join(r.select("doc_id").distinct(),
+        Seq("doc_id"), "left_anti"))))
+  }
+
+  /** The live quarantine's RE-JUDGEABLE rows as of tick `t − 1`: rows
+    * whose verdict is a dup class of `ladder`, minus docs re-quarantined
+    * as low_quality (they already reached a post-dup verdict — the
+    * low_quality row supersedes their dup rows). Severed. */
+  private[io] def rejudgeable(st: Stores, quar: Quarantine, t: Long,
+                              ladder: Seq[Evidence]): DataFrame = {
+    val live = quarantineRows(st, quar, _.currentUpTo(t - 1))._2
+    live.filter(col("verdict").isin(ladder.map(_.verdict): _*))
+      .join(live.filter(col("verdict") === "low_quality").select("doc_id"),
+        Seq("doc_id"), "left_anti")
+      .localCheckpoint()
   }
 
   /** The tick this run should PRODUCE, with crash recovery: normally
@@ -376,14 +400,14 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * (IngestLoopSpec pins the replay).
     *
     * When a BM25 index rides the tick ([[runTickWithRetrieval]]) its
-    * tf store participates in the agreement check (r10 advice): a
+    * tf store participates in the agreement check: a
     * crash AFTER the shingles append but BEFORE the postings append
     * would otherwise leave the three dedup stores agreeing at tick T —
     * the replay would compute T+1, judge the replayed batch against
     * its own tick-T admissions (all dup_exact), and the index would
     * permanently miss tick T's postings. Including the tf store makes
     * the lag visible and tick T is redone across all FOUR stores. */
-  private[io] def nextTickOf(done: Seq[Long]): Long = {
+  private def nextTickOf(done: Seq[Long]): Long = {
     require(done.min >= 1,
       "ingest loop not bootstrapped (every store — including the BM25 " +
         "index / census / ANN / export legs when attached — needs its " +
@@ -391,26 +415,168 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     if (done.distinct.size == 1) done.head + 1 else done.max
   }
 
-  private def nextTick(st: Stores,
-                       idx: Option[ArtifactStore.Bm25IncrementalIndex],
-                       census: Option[ArtifactStore.GramCensusIncrementalIndex]
-                         = None,
-                       ann: Option[AnnLeg] = None,
-                       export: Option[ExportLeg] = None,
-                       mix: Option[ArtifactStore.MixIncrementalIndex] = None,
-                       quar: Option[Quarantine] = None,
-                       replay: Option[ReplayLeg] = None,
-                       sem: Option[SemLeg] = None,
-                       eval: Option[EvalLeg] = None,
-                       curate: Option[CurateLeg] = None)
-      : Long =
-    nextTickOf((Seq(st.hashes, st.bands, st.shingles) ++ idx.map(_.tfStore)
-      ++ census.map(_.censusStore) ++ ann.map(_.idx.codeStore)
-      ++ mix.map(_.mixStore)
-      ++ quar.toSeq.flatMap(q => Seq(q.rows, q.resolvedIds))
-      ++ replay.map(_.feats) ++ sem.map(_.sigs) ++ eval.map(_.docGrams)
-      ++ curate.map(_.census.censusStore))
-      .map(_.maxTick) ++ export.map(_.store.maxTick))
+  /** THE TICK AGREEMENT — the one list of stores a tick advances
+    * together: the `lineage` stores plus every attached consumer index
+    * (BM25 postings, gram census, ANN codes, domain mix, export).
+    * [[nextTickOf]] over their maxTicks fixes the tick. */
+  private def tickOf(lineage: Seq[ArtifactStore.IngestStateStore],
+                     idx: Option[ArtifactStore.Bm25IncrementalIndex],
+                     census: Option[ArtifactStore.GramCensusIncrementalIndex],
+                     ann: Option[ArtifactStore.IvfPqIncrementalIndex],
+                     mix: Option[ArtifactStore.MixIncrementalIndex],
+                     export: Option[ArtifactStore.PackedExportStore]): Long =
+    nextTickOf((lineage ++ idx.map(_.tfStore) ++ census.map(_.censusStore)
+      ++ ann.map(_.codeStore) ++ mix.map(_.mixStore)).map(_.maxTick)
+      ++ export.map(_.maxTick))
+
+  /** Every store in the CORPUS tombstone lineage: the `core` dedup
+    * stores plus the attached legs' doc-keyed stores (sem sigs, eval
+    * docGrams, quarantine rows/resolvedIds, replay feats). All of them
+    * read through [[resolved]], so a takedown tick advances every one,
+    * and a compaction that resets the tombstones must fold every one in
+    * the same pass — folding a subset and resetting would resurface a
+    * retracted doc's rows (and a re-adjudication could then RE-ADMIT a
+    * doc the takedown named). */
+  private def lineage(core: Seq[ArtifactStore.IngestStateStore],
+                      sem: Option[SemLeg], eval: Option[EvalLeg],
+                      quar: Option[Quarantine], replay: Option[ReplayLeg])
+      : Seq[ArtifactStore.IngestStateStore] =
+    core ++ sem.map(_.sigs) ++ eval.map(_.docGrams) ++
+      quar.toSeq.flatMap(q => Seq(q.rows, q.resolvedIds)) ++
+      replay.map(_.feats)
+
+  /** The optional legs one tick runs with — every store a deployment
+    * attaches beyond the dedup stores. Every tick entry point builds
+    * one before reading or writing any store, so the curate rule below
+    * refuses a bad configuration before anything moves. */
+  private[graft] final case class Legs(
+      idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
+      census: Option[ArtifactStore.GramCensusIncrementalIndex] = None,
+      ann: Option[AnnLeg] = None,
+      export: Option[ExportLeg] = None,
+      mix: Option[ArtifactStore.MixIncrementalIndex] = None,
+      quar: Option[Quarantine] = None,
+      replay: Option[ReplayLeg] = None,
+      sem: Option[SemLeg] = None,
+      eval: Option[EvalLeg] = None,
+      curate: Option[CurateLeg] = None) {
+    // a takedown subtracts from the census LEG only: a curate leg with a
+    // census of its own would lag the takedown tick, and the next tick
+    // would redo that tick, overwriting the takedown's negative census
+    // and mix increments
+    require(curate.forall(cl => census.forall(_ eq cl.census)),
+      "a curate leg's census must be the tick's census leg")
+
+    /** The census fed the RAW admitted text: the census leg, else the
+      * curate leg's (a tick kind without a census leg folds it). */
+    def rawCensus: Option[ArtifactStore.GramCensusIncrementalIndex] =
+      census.orElse(curate.map(_.census))
+
+    /** The tick a run over `core` plus these legs produces. */
+    def tick(core: Seq[ArtifactStore.IngestStateStore]): Long =
+      tickOf(lineage(core, sem, eval, quar, replay), idx, rawCensus,
+        ann.map(_.idx), mix, export.map(_.store))
+  }
+
+  /** THE FOLD-BACK — every tick kind's admitted docs append their
+    * increments at tick `t` through here, so dedup state and every
+    * consumer can never disagree about what was ingested: `hashes` (the
+    * caller's (doc_id, ch) frame), the admitted docs' bands and
+    * shingles, the modality `sigs` increments, and each attached leg —
+    * sem signature rows, eval docGrams (the retro-catch reverse index),
+    * BM25 postings and the packed export (from `served`: the curated
+    * text when a curate leg is attached), the RAW census increment, ANN
+    * codes under the index's CURRENT serving artifacts, and the mix
+    * counts. Every append is a tick-keyed overwrite, so a redone tick
+    * rewrites identical increments. */
+  private[graft] def foldAdmitted(t: Long, st: Stores, hashes: DataFrame,
+                                  admIds: DataFrame, admDocs: DataFrame,
+                                  served: DataFrame,
+                                  sigs: Seq[(ArtifactStore.IngestStateStore,
+                                             DataFrame)],
+                                  legs: Legs): Unit = {
+    st.hashes.appendTickAt(t, hashes)
+    st.bands.appendTickAt(t, Fuzzy.corpusBandState(admDocs))
+    st.shingles.appendTickAt(t, Fuzzy.corpusShingleHashes(admDocs))
+    sigs.foreach { case (s, df) => s.appendTickAt(t, df) }
+    legs.sem.foreach(leg => leg.sigs.appendTickAt(t,
+      graft.operators.SemanticGate.sigRowsOf(leg.vectors, admIds,
+        leg.nTables, leg.bits, leg.dim)))
+    legs.eval.foreach(leg => leg.docGrams.appendTickAt(t,
+      graft.operators.Contamination.grams(admDocs, leg.n)))
+    legs.idx.foreach(_.appendDocsAt(t, served))
+    legs.rawCensus.foreach(_.appendDocsAt(t, admDocs))
+    legs.ann.foreach { leg =>
+      val (c, r) = leg.idx.servingArtifacts().getOrElse((leg.cents, leg.rcb))
+      leg.idx.appendVectorsAt(t, leg.vectors.join(
+        admIds.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
+        c, r)
+    }
+    legs.export.foreach(leg => leg.store.appendDocsAt(t, served, leg.ms))
+    legs.mix.foreach(_.appendDocsAt(t, admDocs))
+  }
+
+  /** The exact-gate state and the fuzzy flags of `docs` against the
+    * text stores as of tick `t − 1`, both resolved through the
+    * tombstones. */
+  private[io] def textEvidence(st: Stores, t: Long, docs: DataFrame,
+                               threshold: Double): (DataFrame, DataFrame) = {
+    val state = resolved(st, st.hashes.currentUpTo(t - 1).getOrElse(
+        sys.error("ingest loop not bootstrapped: hash state is empty")))
+      .select("ch").distinct()
+    val fuzzy = Fuzzy.lshPairsAgainstState(
+        resolved(st, st.bands.currentUpTo(t - 1).get),
+        resolved(st, st.shingles.currentUpTo(t - 1).get),
+        docs, threshold)
+      .select(col("eval_id").as("fid")).distinct()
+    (state, fuzzy)
+  }
+
+  /** The REPLAY leg's append (q134): the cohort that reached the quality
+    * gate (`lq` non-null — no evidence of ANY dup class) with its gate
+    * features from `texts` and its tick-time verdict, so a later model
+    * re-gates it with zero text reads. */
+  private[io] def appendReplay(replay: Option[ReplayLeg], t: Long,
+                               v: DataFrame, texts: DataFrame): Unit =
+    replay.foreach(_.feats.appendTickAt(t, v.filter(col("lq").isNotNull)
+      .select(col("doc_id"), col("source"), col("lq"))
+      .join(QualityModel.gateFeatures(texts), "doc_id")
+      .withColumn("tick", lit(t))
+      .select(replayCols: _*)))
+
+  private def replayCols =
+    Seq(col("doc_id"), col("source"), col("tick"), col("lq")) ++
+      (0 until QualityModel.NumW).map(j => col(s"x$j"))
+
+  /** A curate leg's rows for `adm` (q137): census-stripped against the
+    * census as of tick `t − 1` ∪ `batch` (the winner rule), then
+    * PII-scrubbed — with the per-doc rewrite counts the audit reads.
+    * Severed: read by the consumer appends AND the audit. */
+  private[graft] def curatedRows(cl: CurateLeg, t: Long, adm: DataFrame,
+                                 batch: DataFrame): DataFrame =
+    graft.operators.CurateTick.curatedDocs(adm,
+      cl.census.censusStore.currentUpTo(t - 1).getOrElse(
+        sys.error("curate leg not bootstrapped: no census base")),
+      batch, cl.census.k, cl.topN).localCheckpoint()
+
+  /** The text the serving consumers receive: the curated (doc_id,
+    * source, text) rows with a curate leg, `adm` itself without. */
+  private def servedOf(curate: Option[CurateLeg], t: Long, adm: DataFrame,
+                       batch: DataFrame): DataFrame =
+    curate.map(curatedRows(_, t, adm, batch)
+      .select("doc_id", "source", "text")).getOrElse(adm)
+
+  /** The q137 rewrite audit per source: what was stripped/redacted, and
+    * the curated content signature the export serves. */
+  private[graft] def curateAudit(cur: DataFrame): DataFrame =
+    cur.select(col("source"), col("n_tokens"), col("n_removed"),
+        col("chars_redacted"),
+        Provenance.contentHash60(col("text")).as("chc"))
+      .groupBy("source")
+      .agg(sum("n_tokens").as("tokens_raw"),
+        sum("n_removed").as("tokens_removed"),
+        sum("chars_redacted").as("chars_redacted"),
+        expr("bit_xor(chc)").as("exact_curated_sig"))
 
   /** The QUOTA leg of a budgeted deployment tick (q130,
     * [[Provenance.q130BudgetedAdmission]]): per-source token budgets
@@ -485,8 +651,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       QualityModel.gateFeatures(corpusDocs)
         .join(corpusDocs.select("doc_id", "source"), "doc_id")
         .withColumn("tick", lit(1L)).withColumn("lq", lit(false))
-        .select(Seq(col("doc_id"), col("source"), col("tick"), col("lq")) ++
-          (0 until QualityModel.NumW).map(j => col(s"x$j")): _*)
+        .select(replayCols: _*)
         .limit(0))
 
   /** The MULTIMODAL quarantine's tick-1 base — the mm row layout
@@ -588,11 +753,15 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * and the quarantine keep the RAW text's evidence (a later raw copy
     * still rejects; takedowns and re-adjudication see raw), and the
     * census leg keeps folding RAW text (it is the strip-rule source).
-    * `census` is usually the SAME index passed as the tick's census
-    * leg — the agreement and fold-back handle either case without
-    * double-appending. CurateTickSpec pins store report ≡ live q137,
-    * the physical export slices carrying the curated hashes, and raw
-    * dedup behavior unchanged by the transform. */
+    * `census` must be the SAME index as the tick's census leg when the
+    * tick kind takes one (every entry point refuses another: a
+    * takedown subtracts from the census leg only, so a second census
+    * would lag the takedown tick); a tick kind without a census leg
+    * ([[runTick]]) folds the RAW increment into it, and its takedown
+    * passes it as [[retractTick]]'s census leg. CurateTickSpec pins
+    * store report ≡ live q137, the physical export slices carrying the
+    * curated hashes, and raw dedup behavior unchanged by the
+    * transform. */
   final case class CurateLeg(census: ArtifactStore.GramCensusIncrementalIndex,
                              topN: Int =
                                graft.operators.CurateTick.DefaultTopN)
@@ -702,8 +871,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * `w` is the frozen quality model — a deployment retrains between
     * ticks (the q104 monitoring read), never within one.
     *
-    * Crash discipline (review finding, closed): the tick number is
-    * fixed up front ([[nextTick]]), the state is read AS OF the
+    * Crash discipline: the tick number is
+    * fixed up front ([[Legs]]`.tick`), the state is read AS OF the
     * previous tick (`currentUpTo` — a half-written fold from a crashed
     * run of THIS tick is invisible), and all fold-back writes are
     * tick-keyed overwrites — so re-running a crashed tick reproduces
@@ -716,45 +885,25 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
               sem: Option[SemLeg] = None,
               eval: Option[EvalLeg] = None,
               curate: Option[CurateLeg] = None): DataFrame =
-    runTickImpl(st, None, batchDocs, w, threshold, lowFrac, quar = quar,
-      replay = replay, sem = sem, eval = eval, curate = curate)
+    runTickImpl(st, batchDocs, w, threshold, lowFrac, None,
+      Legs(quar = quar, replay = replay, sem = sem, eval = eval,
+        curate = curate))
 
-  private def runTickImpl(st: Stores,
-                          idx: Option[ArtifactStore.Bm25IncrementalIndex],
-                          batchDocs: DataFrame, w: Seq[Double],
+  private def runTickImpl(st: Stores, batchDocs: DataFrame, w: Seq[Double],
                           threshold: Double, lowFrac: Double,
-                          census: Option[
-                            ArtifactStore.GramCensusIncrementalIndex] = None,
-                          ann: Option[AnnLeg] = None,
-                          export: Option[ExportLeg] = None,
-                          mix: Option[ArtifactStore.MixIncrementalIndex] = None,
-                          quota: Option[QuotaLeg] = None,
-                          quar: Option[Quarantine] = None,
-                          replay: Option[ReplayLeg] = None,
-                          sem: Option[SemLeg] = None,
-                          eval: Option[EvalLeg] = None,
-                          curate: Option[CurateLeg] = None)
-      : DataFrame = {
-    val t = nextTick(st, idx, census, ann, export, mix, quar, replay, sem,
-      eval, curate)
+                          quota: Option[QuotaLeg], legs: Legs): DataFrame = {
+    val t = legs.tick(st.all)
     // every state read resolves through the tombstone store: retracted
     // docs' rows are invisible whether or not a compaction folded them
-    val state = resolved(st, st.hashes.currentUpTo(t - 1).getOrElse(
-        sys.error("ingest loop not bootstrapped: hash state is empty")))
-      .select("ch").distinct()
-    val fuzzy = Fuzzy.lshPairsAgainstState(
-        resolved(st, st.bands.currentUpTo(t - 1).get),
-        resolved(st, st.shingles.currentUpTo(t - 1).get),
-        batchDocs, threshold)
-      .select(col("eval_id").as("fid")).distinct()
+    val (state, fuzzy) = textEvidence(st, t, batchDocs, threshold)
     // the q103/q106 kernel over the ladder of the attached legs (q135
     // semantic, q136 contamination); the returned frame is
     // checkpointed, so the fold-back writes and the report never re-run
     // the chain
     val flags = Seq(Evidence.Fuzzy -> fuzzy) ++
-      sem.map(leg => Evidence.Semantic ->
+      legs.sem.map(leg => Evidence.Semantic ->
         semFlags(st, leg, t, batchDocs.select("doc_id"))) ++
-      eval.map(leg => Evidence.Contaminated -> contamFlags(leg, batchDocs))
+      legs.eval.map(leg => Evidence.Contaminated -> contamFlags(leg, batchDocs))
     val ladder = Provenance.ladder(flags.map(_._1): _*)
     val v = Provenance.gatedTickFrame(batchDocs, state, flags, w, lowFrac)
     // the admitted set: every novel doc — or, on a BUDGETED tick
@@ -775,52 +924,18 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     }
     val admDocs = batchDocs.join(admIds, Seq("doc_id"), "left_semi")
     // CURATED FOLD-BACK (q137): the serving consumers receive the
-    // transformed text; the dedup stores below keep folding RAW
-    // evidence (two-column provenance). Severed: read by the idx and
-    // export appends AND the audit aggregate.
-    val curRows = curate.map { cl =>
-      graft.operators.CurateTick.curatedDocs(admDocs,
-        cl.census.censusStore.currentUpTo(t - 1).getOrElse(
-          sys.error("curate leg not bootstrapped: no census base")),
-        batchDocs, cl.census.k, cl.topN).localCheckpoint()
-    }
-    val servedDocs = curRows.map(_.select("doc_id", "source", "text"))
-      .getOrElse(admDocs)
-    st.hashes.appendTickAt(t, v.join(admIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("h").as("ch")))
-    st.bands.appendTickAt(t, Fuzzy.corpusBandState(admDocs))
-    st.shingles.appendTickAt(t, Fuzzy.corpusShingleHashes(admDocs))
-    idx.foreach(_.appendDocsAt(t, servedDocs))
-    census.foreach(_.appendDocsAt(t, admDocs))
-    // a curate leg whose census is NOT the tick's census leg still
-    // folds the RAW admitted increment (same object → no double fold)
-    curate.filter(cl => !census.contains(cl.census))
-      .foreach(_.census.appendDocsAt(t, admDocs))
-    ann.foreach { leg =>
-      val (c, r) = leg.idx.servingArtifacts().getOrElse((leg.cents, leg.rcb))
-      leg.idx.appendVectorsAt(t, leg.vectors.join(
-        admIds.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
-        c, r)
-    }
-    // SEMANTIC leg (q135): admitted docs' signature rows — the state
-    // the next tick's semantic flags probe
-    sem.foreach(leg => leg.sigs.appendTickAt(t,
-      graft.operators.SemanticGate.sigRowsOf(leg.vectors, admIds,
-        leg.nTables, leg.bits, leg.dim)))
-    // DECONTAM leg (q136): admitted docs' gram rows — the reverse index
-    // an eval-set addition retro-catches from
-    eval.foreach(leg => leg.docGrams.appendTickAt(t,
-      graft.operators.Contamination.grams(admDocs, leg.n)))
-    // EXPORT leg: admitted docs pack as this tick's epoch under the
-    // frozen merges — the CURATED form when a curate leg is attached
-    export.foreach(leg => leg.store.appendDocsAt(t, servedDocs, leg.ms))
-    // MIX leg (q127's state): per-source admitted counts, additive
-    mix.foreach(_.appendDocsAt(t, admDocs))
+    // transformed text; the dedup stores keep folding RAW evidence
+    // (two-column provenance)
+    val curRows = legs.curate.map(curatedRows(_, t, admDocs, batchDocs))
+    foldAdmitted(t, st, v.join(admIds, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("h").as("ch")), admIds, admDocs,
+      curRows.map(_.select("doc_id", "source", "text")).getOrElse(admDocs),
+      Nil, legs)
     // QUARANTINE leg (q131): evidence/quality rejections are held
     // re-judgeable; over-budget docs are NOT quarantined (rate-limited,
     // not rejected on evidence — see QuotaLeg). resolvedIds appends an
     // empty frame so both quarantine stores stay in the tick agreement.
-    quar.foreach { qs =>
+    legs.quar.foreach { qs =>
       val rej = v.filter(!Provenance.novel(ladder) || col("lq") === true)
         .withColumn("verdict", Provenance.verdictOf(ladder))
         .join(batchDocs.select("doc_id", "text"), "doc_id")
@@ -828,34 +943,12 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       qs.rows.appendTickAt(t, rej)
       qs.resolvedIds.appendTickAt(t, admIds.limit(0))
     }
-    // REPLAY leg (q134): the tick's novel cohort's gate features + the
-    // tick-time quality verdict — what a later model re-gates (with a
-    // semantic leg, novel = no evidence of ANY dup class: lq non-null)
-    replay.foreach { leg =>
-      val nov = v.filter(col("lq").isNotNull)
-        .select(col("doc_id"), col("source"), col("lq"))
-      leg.feats.appendTickAt(t, nov
-        .join(QualityModel.gateFeatures(batchDocs), "doc_id")
-        .withColumn("tick", lit(t))
-        .select(Seq(col("doc_id"), col("source"), col("tick"), col("lq")) ++
-          (0 until QualityModel.NumW).map(j => col(s"x$j")): _*))
-    }
-    // with a curate leg the report carries the q137 rewrite audit —
-    // what was stripped/redacted, and the curated content signature
-    // the export now serves
+    appendReplay(legs.replay, t, v, batchDocs)
+    // with a curate leg the report carries the q137 rewrite audit
     curRows match {
       case None => report
       case Some(cr) =>
-        val audit = cr
-          .select(col("source"), col("n_tokens"), col("n_removed"),
-            col("chars_redacted"),
-            Provenance.contentHash60(col("text")).as("chc"))
-          .groupBy("source")
-          .agg(sum("n_tokens").as("tokens_raw"),
-            sum("n_removed").as("tokens_removed"),
-            sum("chars_redacted").as("chars_redacted"),
-            expr("bit_xor(chc)").as("exact_curated_sig"))
-        report.join(audit, Seq("source"), "left")
+        report.join(curateAudit(cr), Seq("source"), "left")
           .withColumn("tokens_raw", coalesce(col("tokens_raw"), lit(0L)))
           .withColumn("tokens_removed",
             coalesce(col("tokens_removed"), lit(0L)))
@@ -869,36 +962,33 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
 
   /** File-count-triggered compaction (the production trigger the r9
     * verdict names): when any store's backing data-file count crosses
-    * `maxDataFiles`, fold ALL three into their current generation —
+    * `maxDataFiles`, fold every store of the tombstone [[lineage]]
+    * (the three dedup stores and the attached legs' stores) into its
+    * current generation —
     * applying the tombstone anti-join while folding, so retracted docs'
     * rows physically leave the state. The tombstone store is cleared
     * only once every data store folded (a skipped single-gen fold keeps
     * it; the read-path anti-join makes either outcome verdict-invariant,
     * which is also why any crash ordering here is safe — spec-pinned).
     * Returns whether compaction ran. Run at quiesce points only (see
-    * `IngestStateStore.currentUpTo`). */
+    * `IngestStateStore.currentUpTo`). The eval-SIDE stores fold via
+    * compactEval — their tombstones are eval ids, a separate lineage. */
   def compactIfNeeded(st: Stores, maxDataFiles: Long = 64,
                       sem: Option[SemLeg] = None,
                       eval: Option[EvalLeg] = None,
                       quar: Option[Quarantine] = None,
-                      replay: Option[ReplayLeg] = None): Boolean = {
-    // an attached semantic leg's sig store (and a decontam leg's
-    // docGrams) resolves through st.tombs like the three dedup stores,
-    // so it MUST fold in the same pass — clearing the tombstones after
-    // folding only three stores would resurface retracted rows at the
-    // next flag read. The QUARANTINE stores and a replay leg's feats
-    // are in the same lineage (r16 self-audit — the same resurface
-    // class): readjudicateTick/regateTick read them through
-    // `resolved`, so folding the dedup stores and resetting without
-    // them would resurface a taken-down doc's quarantine/feats rows —
-    // and a later re-adjudication could RE-ADMIT a doc the takedown
-    // named (its dup partner left the state in the same takedown).
-    // (The eval-SIDE stores fold via compactEval — their tombstones
-    // are eval ids, a separate lineage.)
-    val all = Seq(st.hashes, st.bands, st.shingles) ++ sem.map(_.sigs) ++
-      eval.map(_.docGrams) ++
-      quar.toSeq.flatMap(q => Seq(q.rows, q.resolvedIds)) ++
-      replay.map(_.feats)
+                      replay: Option[ReplayLeg] = None): Boolean =
+    compactLineage(st, st.all, maxDataFiles, sem, eval, quar, replay)
+
+  /** [[compactIfNeeded]] over `core` plus the legs' stores, resolving
+    * through `st`'s tombstones. */
+  private[io] def compactLineage(st: Stores,
+                                 core: Seq[ArtifactStore.IngestStateStore],
+                                 maxDataFiles: Long, sem: Option[SemLeg],
+                                 eval: Option[EvalLeg],
+                                 quar: Option[Quarantine],
+                                 replay: Option[ReplayLeg]): Boolean = {
+    val all = lineage(core, sem, eval, quar, replay)
     val need = all.exists(_.dataFileCount > maxDataFiles)
     if (need) {
       val folded = all.map(_.compactWith(df => resolved(st, df)))
@@ -941,10 +1031,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     *  2. [[IngestLegOps.compactEvalIfNeeded]] when an eval leg is
     *     attached — the EVAL-side lineage (grams/bands/shingles +
     *     modality sigs, withdrawals via the eval tombstones) folds
-    *     under the same file-count trigger (r15 advice: the bundle
-    *     previously never folded eval withdrawals, while its scaladoc
-    *     claimed otherwise) — and so do the CONSUMER indexes (r16
-    *     self-audit, the completion of the same symmetry): an
+    *     under the same file-count trigger — and so do the CONSUMER
+    *     indexes: an
     *     attached BM25 posting index / gram census / domain mix / ANN
     *     code store compacts under the trigger via its own
     *     `compact()` (each carries its OWN retraction lineage — BM25
@@ -1006,18 +1094,13 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                 graft.operators.Packing.DefaultMixTolMicros,
               gcStores: Boolean = true)
       : QuiesceResult =
-    quiesceImpl("quiesce", st,
-      () => compactIfNeeded(st, maxDataFiles, sem, eval, quar, replay),
-      Seq(st.hashes, st.bands, st.shingles, st.tombs),
-      spark, root, sem, semNextName, ann, annBaseTick, annMinGainHits,
-      eval, export, docSources, quar, replay, idx, census, mix, model,
-      maxDataFiles, minFillMicro, mixTolMicros, gcStores)
+    quiesceImpl("quiesce", st, st.all, spark, root, sem, semNextName,
+      ann, annBaseTick, annMinGainHits, eval, export, docSources, quar,
+      replay, idx, census, mix, model, maxDataFiles, minFillMicro,
+      mixTolMicros, gcStores)
 
-  /** [[quiesce]] for a MULTIMODAL deployment (the r15 self-audit
-    * twin, now sharing ONE kernel — r15 verdict item 2: the two ~40
-    * line bundle bodies had already drifted into copies, the
-    * codebase's recurring defect class): identical bundle, except the
-    * compaction step is [[compactMmIfNeeded]] — the image/audio sig
+  /** [[quiesce]] for a MULTIMODAL deployment, on the same kernel:
+    * the core stores are all five — the image/audio sig
     * stores resolve through the SHARED text tombstones, so they must
     * fold in the same pass before those tombstones reset (folding only
     * the text stores and resetting would resurface retracted mm rows
@@ -1047,23 +1130,19 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                   graft.operators.Packing.DefaultMixTolMicros,
                 gcStores: Boolean = true)
       : QuiesceResult =
-    quiesceImpl("quiesceMm", st.text,
-      () => compactMmIfNeeded(st, maxDataFiles, sem, eval, quar, replay),
-      st.all :+ st.text.tombs,
-      spark, root, sem, semNextName, ann, annBaseTick, annMinGainHits,
-      eval, export, docSources, quar, replay, idx, census, mix, model,
-      maxDataFiles, minFillMicro, mixTolMicros, gcStores)
+    quiesceImpl("quiesceMm", st.text, st.all, spark, root, sem, semNextName,
+      ann, annBaseTick, annMinGainHits, eval, export, docSources, quar,
+      replay, idx, census, mix, model, maxDataFiles, minFillMicro,
+      mixTolMicros, gcStores)
 
-  /** The ONE bundle kernel both compose points delegate to (the
-    * [[runTickWithRetrieval]] precedent): `text` is the lineage the
-    * canaries/seal run on, `compactStep` the variant's compaction,
-    * `gcStateStores` the variant's full ingest-store set (including
-    * the tombstone store — its folded generations collect like any
+  /** The bundle kernel both compose points delegate to: `text` is the
+    * lineage the canaries/seal run on, `core` the variant's dedup
+    * stores (compacted and collected with the legs' [[lineage]] and the
+    * tombstone store — its folded generations collect like any
     * other's). Step order and the entry-time tombstone capture are
     * documented on [[quiesce]]. */
   private def quiesceImpl(what: String, text: Stores,
-                          compactStep: () => Boolean,
-                          gcStateStores: Seq[ArtifactStore.IngestStateStore],
+                          core: Seq[ArtifactStore.IngestStateStore],
                           spark: SparkSession, root: String,
                           sem: Option[SemLeg],
                           semNextName: Option[String],
@@ -1096,7 +1175,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     // localCheckpoint: the frame must survive the reset's file deletes
     val preTombs = export.flatMap(_ => text.tombs.current()
       .map(_.select("doc_id").localCheckpoint()))
-    val compacted = compactStep()
+    val compacted =
+      compactLineage(text, core, maxDataFiles, sem, eval, quar, replay)
     val evalCompacted = eval.exists(l =>
       compactEvalIfNeeded(l, maxDataFiles))
     // consumer-index folds under the same trigger (step 2 scaladoc):
@@ -1121,11 +1201,10 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     val gcBytes =
       if (!gcStores) 0L
       else {
-        val stateStores = gcStateStores ++ sem.map(_.sigs) ++
+        val stateStores =
+          lineage(core :+ text.tombs, sem, eval, quar, replay) ++
           eval.toSeq.flatMap(l => Seq(l.grams, l.bands, l.shingles,
-            l.tombs, l.docGrams) ++ l.imgSigs ++ l.audSigs) ++
-          quar.toSeq.flatMap(q => Seq(q.rows, q.resolvedIds)) ++
-          replay.map(_.feats) ++
+            l.tombs) ++ l.imgSigs ++ l.audSigs) ++
           idx.toSeq.flatMap(i => Seq(i.tfStore, i.tombStore)) ++
           census.map(_.censusStore) ++ mix.map(_.mixStore)
         stateStores.map(_.gc()).sum +
@@ -1152,8 +1231,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * ingested, and only admitted (novel) text is ever tokenized
     * (IngestLoopSpec pins the served ranking ≡ a full rebuild over
     * base ∪ all admissions, and reconciles the index's doc count with
-    * the admission reports). One shared kernel with [[runTick]]
-    * (review finding: the two bodies had drifted into copies) — the
+    * the admission reports). One shared kernel with [[runTick]] — the
     * postings append is tick-keyed like every other fold, so a crashed
     * tick replays idempotently across all FOUR stores. */
   def runTickWithRetrieval(st: Stores,
@@ -1161,7 +1239,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                            batchDocs: DataFrame, w: Seq[Double],
                            threshold: Double = 0.2,
                            lowFrac: Double = 0.25): DataFrame =
-    runTickImpl(st, Some(idx), batchDocs, w, threshold, lowFrac)
+    runTickImpl(st, batchDocs, w, threshold, lowFrac, None,
+      Legs(idx = Some(idx)))
 
   /** The FULL deployment tick — every maintained state family fed from
     * the one checkpointed verdict frame: the three dedup stores, the
@@ -1199,10 +1278,9 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                   eval: Option[EvalLeg] = None,
                   curate: Option[CurateLeg] = None)
       : DataFrame =
-    runTickImpl(st, Some(idx), batchDocs, w, threshold, lowFrac,
-      census = Some(census), ann = ann, export = export, mix = mix,
-      quota = quota, quar = quar, sem = sem, eval = eval,
-      curate = curate)
+    runTickImpl(st, batchDocs, w, threshold, lowFrac, quota,
+      Legs(Some(idx), Some(census), ann, export, mix, quar, None, sem, eval,
+        curate))
 
   /** One BUDGETED admission tick — the deployment form of
     * [[Provenance.q130BudgetedAdmission]]: the q103 gate runs
@@ -1225,10 +1303,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                       sem: Option[SemLeg] = None,
                       eval: Option[EvalLeg] = None,
                       curate: Option[CurateLeg] = None): DataFrame =
-    runTickImpl(st, idx, batchDocs, w, threshold, lowFrac,
-      census = census, ann = ann, export = export, mix = mix,
-      quota = Some(quota), quar = quar, replay = replay, sem = sem,
-      eval = eval, curate = curate)
+    runTickImpl(st, batchDocs, w, threshold, lowFrac, Some(quota),
+      Legs(idx, census, ann, export, mix, quar, replay, sem, eval, curate))
 
   /** RE-ADJUDICATE the quarantine — the deployment form of
     * [[Provenance.q131Readjudication]], run after a [[retractTick]]
@@ -1253,8 +1329,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * idempotence, and the fold-back (a later duplicate of a re-admitted
     * doc is rejected).
     *
-    * An attached [[ReplayLeg]] advances with this tick too (r11 advice:
-    * without it, a loop running ticks with both legs would leave feats
+    * An attached [[ReplayLeg]] advances with this tick too (without
+    * it, a loop running ticks with both legs would leave feats
     * one tick behind, and the NEXT replay-attached tick's agreement
     * would resolve to this tick and silently overwrite it — the same
     * class as the takedown-tick bug): the quality-windowed cohort's
@@ -1278,32 +1354,16 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                        eval: Option[EvalLeg] = None,
                        curate: Option[CurateLeg] = None)
       : DataFrame = {
-    val t = nextTick(st, idx, census, ann, export, mix, Some(quar), replay,
-      sem, eval, curate)
-    val rows = quar.rows.currentUpTo(t - 1).getOrElse(
-      sys.error("quarantine not bootstrapped: no tick-1 base"))
-    val liveRows = resolved(st,
-      quar.resolvedIds.currentUpTo(t - 1)
-        .fold(rows)(r => rows.join(r.select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")))
+    val legs = Legs(idx, census, ann, export, mix, Some(quar), replay, sem,
+      eval, curate)
+    val t = legs.tick(st.all)
     // the ladder of the attached legs: semantic / contaminated rows
     // re-judge ONLY when their leg is attached — without its state the
     // re-judgment would silently skip that gate and wrongly re-admit them
     val ladder = Provenance.ladder(sem.map(_ => Evidence.Semantic).toSeq ++
       eval.map(_ => Evidence.Contaminated): _*)
-    val dupRows = liveRows
-      .filter(col("verdict").isin(ladder.map(_.verdict): _*))
-      .join(liveRows.filter(col("verdict") === "low_quality")
-        .select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val state = resolved(st, st.hashes.currentUpTo(t - 1).getOrElse(
-        sys.error("ingest loop not bootstrapped: hash state is empty")))
-      .select("ch").distinct()
-    val fuzzy = Fuzzy.lshPairsAgainstState(
-        resolved(st, st.bands.currentUpTo(t - 1).get),
-        resolved(st, st.shingles.currentUpTo(t - 1).get),
-        dupRows, threshold)
-      .select(col("eval_id").as("fid")).distinct()
+    val dupRows = rejudgeable(st, quar, t, ladder)
+    val (state, fuzzy) = textEvidence(st, t, dupRows, threshold)
     val v = Provenance.gatedTickFrame(
       dupRows.select("doc_id", "source", "text"), state,
       Seq(Evidence.Fuzzy -> fuzzy) ++
@@ -1314,45 +1374,18 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       w, lowFrac)
     val admIds = v.filter(col("lq") === false).select("doc_id")
     val admDocs = dupRows.join(admIds, Seq("doc_id"), "left_semi")
-    // curated fold-back of RE-ADMITTED docs (the runTickImpl rule: raw
-    // evidence into the dedup stores, curated text to the serving
-    // consumers; the re-judged cohort is the batch for the winner rule)
-    val servedDocs = curate.map { cl =>
-      graft.operators.CurateTick.curatedDocs(
-        admDocs.select("doc_id", "source", "text"),
-        cl.census.censusStore.currentUpTo(t - 1).getOrElse(
-          sys.error("curate leg not bootstrapped: no census base")),
-        dupRows.select("doc_id", "source", "text"), cl.census.k, cl.topN)
-        .select("doc_id", "source", "text").localCheckpoint()
-    }.getOrElse(admDocs.select("doc_id", "source", "text"))
-    st.hashes.appendTickAt(t, v.filter(col("lq") === false)
-      .select(col("doc_id"), col("h").as("ch")))
-    st.bands.appendTickAt(t, Fuzzy.corpusBandState(admDocs))
-    st.shingles.appendTickAt(t, Fuzzy.corpusShingleHashes(admDocs))
-    sem.foreach(leg => leg.sigs.appendTickAt(t,
-      graft.operators.SemanticGate.sigRowsOf(leg.vectors, admIds,
-        leg.nTables, leg.bits, leg.dim)))
-    eval.foreach(leg => leg.docGrams.appendTickAt(t,
-      graft.operators.Contamination.grams(admDocs, leg.n)))
-    idx.foreach(_.appendDocsAt(t, servedDocs))
-    census.foreach(_.appendDocsAt(t, admDocs))
-    curate.filter(cl => !census.contains(cl.census))
-      .foreach(_.census.appendDocsAt(t, admDocs))
-    ann.foreach { leg =>
-      val (c, r) = leg.idx.servingArtifacts().getOrElse((leg.cents, leg.rcb))
-      leg.idx.appendVectorsAt(t, leg.vectors.join(
-        admIds.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
-        c, r)
-    }
-    export.foreach(leg => leg.store.appendDocsAt(t, servedDocs, leg.ms))
-    mix.foreach(_.appendDocsAt(t, admDocs))
+    // the re-judged cohort is the batch for the curate winner rule
+    foldAdmitted(t, st, v.filter(col("lq") === false)
+        .select(col("doc_id"), col("h").as("ch")), admIds, admDocs,
+      servedOf(curate, t, admDocs.select("doc_id", "source", "text"),
+        dupRows.select("doc_id", "source", "text")), Nil, legs)
     // docs that escaped the dup gates but landed in the quality window
-    // RE-QUARANTINE under their NEW evidence class (r11 advice: their
-    // dup verdicts are gone, and a low_quality row is what regateTick's
-    // model loop re-opens — dropping them would make re-adjudication-
-    // time quality rejections terminal, contradicting the q134
-    // symmetry). The new row supersedes the doc's dup rows in the
-    // live-dup selection above; tick-keyed, so a replay overwrites it.
+    // RE-QUARANTINE under their NEW evidence class: their dup verdicts
+    // are gone, and a low_quality row is what regateTick's model loop
+    // re-opens — dropping them would make re-adjudication-time quality
+    // rejections terminal, contradicting the q134 symmetry. The new row
+    // supersedes the doc's dup rows in [[rejudgeable]]; tick-keyed, so
+    // a replay overwrites it.
     quar.rows.appendTickAt(t, v.filter(col("lq") === true)
       .select("doc_id")
       .join(dupRows.select("doc_id", "source", "text"), "doc_id")
@@ -1363,19 +1396,9 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     // docs stay re-judgeable under their new low_quality rows.
     quar.resolvedIds.appendTickAt(t,
       v.filter(col("lq") === false).select("doc_id"))
-    // REPLAY leg: the re-adjudication's quality-windowed cohort is this
-    // tick's novel cohort — persist its gate features + verdicts so a
-    // later model re-gates it with zero text reads (runTick's contract)
-    replay.foreach { leg =>
-      val cohort = v.filter(col("lq").isNotNull)
-        .select(col("doc_id"), col("source"), col("lq"))
-      leg.feats.appendTickAt(t, cohort
-        .join(QualityModel.gateFeatures(
-          dupRows.select("doc_id", "text")), "doc_id")
-        .withColumn("tick", lit(t))
-        .select(Seq(col("doc_id"), col("source"), col("tick"), col("lq")) ++
-          (0 until QualityModel.NumW).map(j => col(s"x$j")): _*))
-    }
+    // the re-adjudication's quality-windowed cohort is this tick's
+    // novel cohort
+    appendReplay(replay, t, v, dupRows.select("doc_id", "text"))
     Provenance.readjReport(v,
       dupRows.select(col("doc_id"), col("verdict").as("verdict_t1")), ladder)
   }
@@ -1413,9 +1436,22 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                  sem: Option[SemLeg] = None,
                  eval: Option[EvalLeg] = None,
                  curate: Option[CurateLeg] = None)
-      : DataFrame = {
-    val t = nextTick(st, idx, census, ann, export, mix, Some(quar),
-      Some(replay), sem, eval, curate)
+      : DataFrame =
+    regateImpl(st, Nil, quar, replay, wNew, lowFrac,
+      Legs(idx, census, ann, export, mix, Some(quar), Some(replay), sem,
+        eval, curate))
+
+  /** The one re-gate kernel ([[regateTick]], [[regateMmTick]]): `sigCols`
+    * pairs each modality sig store with the quarantine column carrying
+    * the doc's STORED signature — re-admitted docs' signatures fold
+    * into those stores with no payload reads. */
+  private[io] def regateImpl(st: Stores,
+                             sigCols: Seq[(ArtifactStore.IngestStateStore,
+                                           String)],
+                             quar: Quarantine, replay: ReplayLeg,
+                             wNew: Seq[Double], lowFrac: Double,
+                             legs: Legs): DataFrame = {
+    val t = legs.tick(st.all ++ sigCols.map(_._1))
     val feats = resolved(st, replay.feats.currentUpTo(t - 1).getOrElse(
       sys.error("replay leg not bootstrapped: no tick-1 base")))
     val rescored = QualityModel.withScoreFromFeatures(
@@ -1428,54 +1464,21 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
         col("lq").as("lq2"))
       .localCheckpoint()
     // the actually-re-admittable set: flipped out of the window AND
-    // still quarantined (text lives there; already-resolved docs and
-    // takedowns drop out here)
-    val rows = quar.rows.currentUpTo(t - 1).getOrElse(
-      sys.error("quarantine not bootstrapped: no tick-1 base"))
-    val liveQuar = resolved(st,
-      quar.resolvedIds.currentUpTo(t - 1)
-        .fold(rows)(r => rows.join(r.select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")))
-      .filter(col("verdict") === "low_quality")
-    val admDocs = liveQuar
+    // still quarantined (text and stored signatures live there;
+    // already-resolved docs and takedowns drop out here)
+    val (rows, live) = quarantineRows(st, quar, _.currentUpTo(t - 1))
+    val admRows = live.filter(col("verdict") === "low_quality")
       .join(flipped.filter(col("was_lowq") && !col("lq2"))
         .select("doc_id"), Seq("doc_id"), "left_semi")
-      .select("doc_id", "source", "text")
+      .select((Seq("doc_id", "source", "text") ++ sigCols.map(_._2))
+        .map(col): _*)
       .localCheckpoint()
+    val admDocs = admRows.select("doc_id", "source", "text")
     val admIds = admDocs.select("doc_id")
-    val servedDocs = curate.map { cl =>
-      graft.operators.CurateTick.curatedDocs(admDocs,
-        cl.census.censusStore.currentUpTo(t - 1).getOrElse(
-          sys.error("curate leg not bootstrapped: no census base")),
-        admDocs, cl.census.k, cl.topN)
-        .select("doc_id", "source", "text").localCheckpoint()
-    }.getOrElse(admDocs)
-    st.hashes.appendTickAt(t, admDocs.select(col("doc_id"),
-      Provenance.contentHash60(col("text")).as("ch")))
-    st.bands.appendTickAt(t, Fuzzy.corpusBandState(admDocs))
-    st.shingles.appendTickAt(t, Fuzzy.corpusShingleHashes(admDocs))
-    sem.foreach(leg => leg.sigs.appendTickAt(t,
-      graft.operators.SemanticGate.sigRowsOf(leg.vectors, admIds,
-        leg.nTables, leg.bits, leg.dim)))
-    // DECONTAM leg (r12 advice): the docGrams reverse index advances
-    // with the regate tick too — regate-readmitted docs must enter it
-    // (an eval-set addition retro-catches them like any admission), and
-    // without the empty-or-not append the NEXT eval-attached tick's
-    // agreement would land ON this tick and silently overwrite it.
-    eval.foreach(leg => leg.docGrams.appendTickAt(t,
-      graft.operators.Contamination.grams(admDocs, leg.n)))
-    idx.foreach(_.appendDocsAt(t, servedDocs))
-    census.foreach(_.appendDocsAt(t, admDocs))
-    curate.filter(cl => !census.contains(cl.census))
-      .foreach(_.census.appendDocsAt(t, admDocs))
-    ann.foreach { leg =>
-      val (c, r) = leg.idx.servingArtifacts().getOrElse((leg.cents, leg.rcb))
-      leg.idx.appendVectorsAt(t, leg.vectors.join(
-        admIds.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
-        c, r)
-    }
-    export.foreach(leg => leg.store.appendDocsAt(t, servedDocs, leg.ms))
-    mix.foreach(_.appendDocsAt(t, admDocs))
+    foldAdmitted(t, st, admDocs.select(col("doc_id"),
+        Provenance.contentHash60(col("text")).as("ch")), admIds, admDocs,
+      servedOf(legs.curate, t, admDocs, admDocs),
+      sigCols.map { case (s, c) => s -> storedSigs(admRows, c) }, legs)
     quar.rows.appendTickAt(t, rows.limit(0))
     quar.resolvedIds.appendTickAt(t, admIds)
     replay.feats.appendTickAt(t, feats.limit(0))
@@ -1492,4 +1495,9 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
           .as("n_demoted"))
       .orderBy("source")
   }
+
+  /** A multimodal quarantine column's STORED signatures as sig-store rows
+    * (doc_id, sig) — docs without that modality drop out. */
+  private[io] def storedSigs(rows: DataFrame, c: String): DataFrame =
+    rows.select(col("doc_id"), col(c).as("sig")).filter(col("sig").isNotNull)
 }

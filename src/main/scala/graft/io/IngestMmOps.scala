@@ -3,16 +3,15 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Fuzzy, Provenance, QualityModel}
+import graft.operators.Provenance
 import graft.operators.Provenance.Evidence
 
 /** The unified MULTIMODAL admission section of [[IngestLoop]] (q118's
-  * deployment form and its consumer/maintenance twins) — moved whole
-  * from IngestLoop.scala (r15 verdict item 7: file hygiene before the
-  * 2k line mark; pure move, the IngestLegOps precedent). The
-  * self-type keeps every cross-reference (Stores, the leg case
-  * classes, `resolved`, `nextTickOf`, the leg-ops flags) identical,
-  * and `object IngestLoop extends ... with IngestMmOps`, so every
+  * deployment form and its consumer/maintenance twins), in its own
+  * file like IngestLegOps. The self-type reaches the loop's shared
+  * pieces (Stores, the leg case classes, `resolved`,
+  * [[IngestLoop.Legs]], `foldAdmitted`, the leg-ops flags), and
+  * `object IngestLoop extends ... with IngestMmOps`, so every
   * `IngestLoop.*` call site — including `IngestLoop.MmStores` —
   * reads unchanged. */
 trait IngestMmOps { self: IngestLoop.type =>
@@ -26,7 +25,11 @@ trait IngestMmOps { self: IngestLoop.type =>
                             imgSigs: ArtifactStore.IngestStateStore,
                             audSigs: ArtifactStore.IngestStateStore) {
     private[io] def all: Seq[ArtifactStore.IngestStateStore] =
-      Seq(text.hashes, text.bands, text.shingles, imgSigs, audSigs)
+      text.all ++ Seq(imgSigs, audSigs)
+    /** Each sig store with the mm quarantine column carrying its
+      * STORED signature. */
+    private[io] def sigCols: Seq[(ArtifactStore.IngestStateStore, String)] =
+      Seq(imgSigs -> "img_sig", audSigs -> "aud_sig")
   }
 
   def mmStores(spark: SparkSession, root: String, name: String): MmStores =
@@ -53,7 +56,7 @@ trait IngestMmOps { self: IngestLoop.type =>
     * into every store — so tick N+1 rejects an image/audio near-dup of
     * what tick N admitted (MmIngestSpec pins the fold-back per
     * modality, and the replay across a crash between any per-store
-    * writes: [[nextTickOf]] over all five stores redoes a lagging
+    * writes: the tick agreement over all five stores redoes a lagging
     * tick). State reads resolve through the shared tombstone store —
     * [[retractTick]] on `st.text` retracts a doc's signatures too.
     * The optional consumer legs (BM25 postings / gram census / served
@@ -75,20 +78,9 @@ trait IngestMmOps { self: IngestLoop.type =>
                 eval: Option[EvalLeg] = None)
       : DataFrame = {
     import graft.multimodal.Multimodal
-    val t = nextTickOf(st.all.map(_.maxTick)
-      ++ idx.map(_.tfStore.maxTick) ++ census.map(_.censusStore.maxTick)
-      ++ ann.map(_.idx.codeStore.maxTick) ++ export.map(_.store.maxTick)
-      ++ mix.map(_.mixStore.maxTick) ++ sem.map(_.sigs.maxTick)
-      ++ eval.map(_.docGrams.maxTick) ++ replay.map(_.feats.maxTick)
-      ++ quar.toSeq.flatMap(q => Seq(q.rows.maxTick, q.resolvedIds.maxTick)))
-    val state = resolved(st.text, st.text.hashes.currentUpTo(t - 1).getOrElse(
-        sys.error("multimodal loop not bootstrapped")))
-      .select("ch").distinct()
-    val fuzzy = Fuzzy.lshPairsAgainstState(
-        resolved(st.text, st.text.bands.currentUpTo(t - 1).get),
-        resolved(st.text, st.text.shingles.currentUpTo(t - 1).get),
-        batchDocs, threshold)
-      .select(col("eval_id").as("fid")).distinct()
+    val legs = Legs(idx, census, ann, export, mix, quar, replay, sem, eval)
+    val t = legs.tick(st.all)
+    val (state, fuzzy) = textEvidence(st.text, t, batchDocs, threshold)
     // batch signatures derive map-side at the codec seam; severed — the
     // flag chain reads each twice and the fold-back a third time
     val (batchISigs, batchASigs) = graft.operators.Materialize.par2(
@@ -119,38 +111,16 @@ trait IngestMmOps { self: IngestLoop.type =>
     val v = Provenance.gatedTickFrame(batchDocs, state, flags, w, lowFrac)
     val admIds = v.filter(col("lq") === false).select("doc_id")
     val admDocs = batchDocs.join(admIds, Seq("doc_id"), "left_semi")
-    st.text.hashes.appendTickAt(t, v.filter(col("lq") === false)
-      .select(col("doc_id"), col("h").as("ch")))
-    st.text.bands.appendTickAt(t, Fuzzy.corpusBandState(admDocs))
-    st.text.shingles.appendTickAt(t, Fuzzy.corpusShingleHashes(admDocs))
-    st.imgSigs.appendTickAt(t,
-      batchISigs.join(admIds, Seq("doc_id"), "left_semi"))
-    st.audSigs.appendTickAt(t,
-      batchASigs.join(admIds, Seq("doc_id"), "left_semi"))
-    sem.foreach(leg => leg.sigs.appendTickAt(t,
-      graft.operators.SemanticGate.sigRowsOf(leg.vectors, admIds,
-        leg.nTables, leg.bits, leg.dim)))
-    eval.foreach(leg => leg.docGrams.appendTickAt(t,
-      graft.operators.Contamination.grams(admDocs, leg.n)))
-    // consumer legs — the [[runFullTick]] symmetry for the multimodal
-    // loop: a deployment that ingests text+image+audio docs serves the
-    // same four consumers (retrieval, curation census, ANN, export)
-    // from the ONE mm verdict frame; every attached store participates
-    // in the tick agreement above, so a crash between any pair of
-    // appends (including across modality/consumer seams) redoes the
-    // whole tick idempotently (MmIngestSpec pins the legs).
-    idx.foreach(_.appendDocsAt(t, admDocs))
-    census.foreach(_.appendDocsAt(t, admDocs))
-    ann.foreach { leg =>
-      val (c, r) = leg.idx.servingArtifacts().getOrElse((leg.cents, leg.rcb))
-      leg.idx.appendVectorsAt(t, leg.vectors.join(
-        admIds.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
-        c, r)
-    }
-    export.foreach(leg => leg.store.appendDocsAt(t, admDocs, leg.ms))
-    // MIX leg (q127's state) — the runFullTick symmetry: the mm loop's
-    // admitted counts maintain the same domain-mix table
-    mix.foreach(_.appendDocsAt(t, admDocs))
+    // every consumer a text-only loop feeds, from the ONE mm verdict
+    // frame; every attached store is in the tick agreement above, so a
+    // crash between any pair of appends (including across modality/
+    // consumer seams) redoes the whole tick idempotently (MmIngestSpec
+    // pins the legs)
+    foldAdmitted(t, st.text, v.filter(col("lq") === false)
+        .select(col("doc_id"), col("h").as("ch")), admIds, admDocs, admDocs,
+      Seq(st.imgSigs -> batchISigs.join(admIds, Seq("doc_id"), "left_semi"),
+        st.audSigs -> batchASigs.join(admIds, Seq("doc_id"), "left_semi")),
+      legs)
     // QUARANTINE leg (q133): mm quarantine rows additionally carry the
     // doc's 8-byte signatures, so a re-adjudication re-judges the
     // image/audio legs without ever re-reading payloads
@@ -166,19 +136,9 @@ trait IngestMmOps { self: IngestLoop.type =>
       qs.rows.appendTickAt(t, rej)
       qs.resolvedIds.appendTickAt(t, admIds.limit(0))
     }
-    // REPLAY leg (r12 advice — the runTickImpl symmetry): the mm tick's
-    // novel cohort persists its gate features + tick-time verdict, so a
-    // replay-attached mmReadjudicateTick can never land its agreement
-    // on a lagging feats store and overwrite this tick's increments.
-    replay.foreach { leg =>
-      val cohort = v.filter(col("lq").isNotNull)
-        .select(col("doc_id"), col("source"), col("lq"))
-      leg.feats.appendTickAt(t, cohort
-        .join(QualityModel.gateFeatures(batchDocs), "doc_id")
-        .withColumn("tick", lit(t))
-        .select(Seq(col("doc_id"), col("source"), col("tick"), col("lq")) ++
-          (0 until QualityModel.NumW).map(j => col(s"x$j")): _*))
-    }
+    // REPLAY leg: a replay-attached readjudicateMmTick can never land
+    // its agreement on a lagging feats store
+    appendReplay(replay, t, v, batchDocs)
     Provenance.gatedTickReport(v, ladder)
   }
 
@@ -211,40 +171,16 @@ trait IngestMmOps { self: IngestLoop.type =>
                          eval: Option[EvalLeg] = None)
       : DataFrame = {
     import graft.multimodal.Multimodal
-    val t = nextTickOf(st.all.map(_.maxTick)
-      ++ idx.map(_.tfStore.maxTick) ++ census.map(_.censusStore.maxTick)
-      ++ ann.map(_.idx.codeStore.maxTick) ++ export.map(_.store.maxTick)
-      ++ mix.map(_.mixStore.maxTick) ++ sem.map(_.sigs.maxTick)
-      ++ eval.map(_.docGrams.maxTick)
-      ++ replay.map(_.feats.maxTick)
-      ++ Seq(quar.rows.maxTick, quar.resolvedIds.maxTick))
-    val rows = quar.rows.currentUpTo(t - 1).getOrElse(
-      sys.error("quarantine not bootstrapped: no tick-1 base"))
-    val liveRows = resolved(st.text,
-      quar.resolvedIds.currentUpTo(t - 1)
-        .fold(rows)(r => rows.join(r.select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")))
-    // the readjudicateTick supersede rule: a doc re-quarantined as
-    // low_quality has already reached its post-dup verdict; semantic /
-    // contaminated rows re-judge only with their leg attached (its
-    // state is the gate)
+    val legs = Legs(idx, census, ann, export, mix, Some(quar), replay, sem,
+      eval)
+    val t = legs.tick(st.all)
+    // semantic / contaminated rows re-judge only with their leg
+    // attached (its state is the gate)
     val ladder = Provenance.ladder(Seq(Evidence.Image, Evidence.Audio) ++
       sem.map(_ => Evidence.Semantic) ++
       eval.map(_ => Evidence.Contaminated): _*)
-    val dupRows = liveRows
-      .filter(col("verdict").isin(ladder.map(_.verdict): _*))
-      .join(liveRows.filter(col("verdict") === "low_quality")
-        .select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val state = resolved(st.text,
-        st.text.hashes.currentUpTo(t - 1).getOrElse(
-          sys.error("multimodal loop not bootstrapped")))
-      .select("ch").distinct()
-    val fuzzy = Fuzzy.lshPairsAgainstState(
-        resolved(st.text, st.text.bands.currentUpTo(t - 1).get),
-        resolved(st.text, st.text.shingles.currentUpTo(t - 1).get),
-        dupRows, threshold)
-      .select(col("eval_id").as("fid")).distinct()
+    val dupRows = rejudgeable(st.text, quar, t, ladder)
+    val (state, fuzzy) = textEvidence(st.text, t, dupRows, threshold)
     val imFlag = Multimodal.flaggedAgainstState(
         resolved(st.text, st.imgSigs.currentUpTo(t - 1).get),
         dupRows.select(col("doc_id"), col("img_sig").as("sig")),
@@ -274,31 +210,9 @@ trait IngestMmOps { self: IngestLoop.type =>
       w, lowFrac)
     val admIds = v.filter(col("lq") === false).select("doc_id")
     val admDocs = dupRows.join(admIds, Seq("doc_id"), "left_semi")
-    st.text.hashes.appendTickAt(t, v.filter(col("lq") === false)
-      .select(col("doc_id"), col("h").as("ch")))
-    st.text.bands.appendTickAt(t, Fuzzy.corpusBandState(admDocs))
-    st.text.shingles.appendTickAt(t, Fuzzy.corpusShingleHashes(admDocs))
-    st.imgSigs.appendTickAt(t, admDocs
-      .select(col("doc_id"), col("img_sig").as("sig"))
-      .filter(col("sig").isNotNull))
-    st.audSigs.appendTickAt(t, admDocs
-      .select(col("doc_id"), col("aud_sig").as("sig"))
-      .filter(col("sig").isNotNull))
-    sem.foreach(leg => leg.sigs.appendTickAt(t,
-      graft.operators.SemanticGate.sigRowsOf(leg.vectors, admIds,
-        leg.nTables, leg.bits, leg.dim)))
-    eval.foreach(leg => leg.docGrams.appendTickAt(t,
-      graft.operators.Contamination.grams(admDocs, leg.n)))
-    idx.foreach(_.appendDocsAt(t, admDocs))
-    census.foreach(_.appendDocsAt(t, admDocs))
-    ann.foreach { leg =>
-      val (c, r) = leg.idx.servingArtifacts().getOrElse((leg.cents, leg.rcb))
-      leg.idx.appendVectorsAt(t, leg.vectors.join(
-        admIds.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
-        c, r)
-    }
-    export.foreach(leg => leg.store.appendDocsAt(t, admDocs, leg.ms))
-    mix.foreach(_.appendDocsAt(t, admDocs))
+    foldAdmitted(t, st.text, v.filter(col("lq") === false)
+        .select(col("doc_id"), col("h").as("ch")), admIds, admDocs, admDocs,
+      st.sigCols.map { case (s, c) => s -> storedSigs(admDocs, c) }, legs)
     // quality-rejected docs RE-QUARANTINE (the readjudicateTick rule),
     // keeping their stored 8-byte signatures so a later mm
     // re-adjudication of a regate-readmitted partner still has them
@@ -311,30 +225,20 @@ trait IngestMmOps { self: IngestLoop.type =>
     // the q131 resolution rule: only RE-ADMITTED docs resolve
     quar.resolvedIds.appendTickAt(t,
       v.filter(col("lq") === false).select("doc_id"))
-    replay.foreach { leg =>
-      val cohort = v.filter(col("lq").isNotNull)
-        .select(col("doc_id"), col("source"), col("lq"))
-      leg.feats.appendTickAt(t, cohort
-        .join(QualityModel.gateFeatures(
-          dupRows.select("doc_id", "text")), "doc_id")
-        .withColumn("tick", lit(t))
-        .select(Seq(col("doc_id"), col("source"), col("tick"), col("lq")) ++
-          (0 until QualityModel.NumW).map(j => col(s"x$j")): _*))
-    }
+    appendReplay(replay, t, v, dupRows.select("doc_id", "text"))
     Provenance.readjReport(v,
       dupRows.select(col("doc_id"), col("verdict").as("verdict_t1")), ladder)
   }
 
   /** RE-GATE the quality window of a MULTIMODAL loop under a NEW model
-    * — [[regateTick]]'s mm twin (the r12 replay-leg symmetry carried to
-    * its conclusion: [[runMmTick]] now persists gate features, so the
-    * q134 model loop must reach mm deployments too, and a text-Stores
-    * regate against an mm loop would leave imgSigs/audSigs lagging one
-    * tick — the silent-overwrite class). Identical algebra to
-    * [[regateTick]]; additionally the re-admitted docs' STORED 8-byte
-    * signatures (the mm quarantine rows carry them) fold into the
-    * modality sig stores, so a later mm tick rejects an image/audio
-    * near-dup of a regate-readmitted doc — no payload reads. */
+    * — [[regateTick]]'s kernel over the five mm stores ([[runMmTick]]
+    * persists gate features, so the q134 model loop reaches mm
+    * deployments, and a text-Stores regate against an mm loop would
+    * leave imgSigs/audSigs lagging one tick — the silent-overwrite
+    * class). The re-admitted docs' STORED 8-byte signatures (the mm
+    * quarantine rows carry them) fold into the modality sig stores, so
+    * a later mm tick rejects an image/audio near-dup of a
+    * regate-readmitted doc — no payload reads. */
   def regateMmTick(st: MmStores, quar: Quarantine, replay: ReplayLeg,
                    wNew: Seq[Double], lowFrac: Double = 0.25,
                    idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
@@ -346,118 +250,19 @@ trait IngestMmOps { self: IngestLoop.type =>
                    sem: Option[SemLeg] = None,
                    eval: Option[EvalLeg] = None,
                    curate: Option[CurateLeg] = None)
-      : DataFrame = {
-    val t = nextTickOf(st.all.map(_.maxTick)
-      ++ idx.map(_.tfStore.maxTick) ++ census.map(_.censusStore.maxTick)
-      ++ ann.map(_.idx.codeStore.maxTick) ++ export.map(_.store.maxTick)
-      ++ mix.map(_.mixStore.maxTick) ++ sem.map(_.sigs.maxTick)
-      ++ eval.map(_.docGrams.maxTick)
-      ++ curate.map(_.census.censusStore.maxTick)
-      ++ Seq(replay.feats.maxTick, quar.rows.maxTick,
-        quar.resolvedIds.maxTick))
-    val feats = resolved(st.text, replay.feats.currentUpTo(t - 1).getOrElse(
-      sys.error("replay leg not bootstrapped: no tick-1 base")))
-    val rescored = QualityModel.withScoreFromFeatures(
-      feats.withColumnRenamed("lq", "was_lowq"), wNew)
-      .localCheckpoint()
-    val flipped = rescored
-      .join(graft.operators.RankGate.lowFracFlagsBy(rescored, "tick", lowFrac),
-        col("doc_id") === col("lqid"))
-      .select(col("doc_id"), col("source"), col("was_lowq"),
-        col("lq").as("lq2"))
-      .localCheckpoint()
-    val rows = quar.rows.currentUpTo(t - 1).getOrElse(
-      sys.error("quarantine not bootstrapped: no tick-1 base"))
-    val liveQuar = resolved(st.text,
-      quar.resolvedIds.currentUpTo(t - 1)
-        .fold(rows)(r => rows.join(r.select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")))
-      .filter(col("verdict") === "low_quality")
-    // admitted = flipped out of the window AND still quarantined; the
-    // mm quarantine row carries text AND the stored signatures
-    val admRows = liveQuar
-      .join(flipped.filter(col("was_lowq") && !col("lq2"))
-        .select("doc_id"), Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    val admDocs = admRows.select("doc_id", "source", "text")
-    val admIds = admDocs.select("doc_id")
-    val servedDocs = curate.map { cl =>
-      graft.operators.CurateTick.curatedDocs(admDocs,
-        cl.census.censusStore.currentUpTo(t - 1).getOrElse(
-          sys.error("curate leg not bootstrapped: no census base")),
-        admDocs, cl.census.k, cl.topN)
-        .select("doc_id", "source", "text").localCheckpoint()
-    }.getOrElse(admDocs)
-    st.text.hashes.appendTickAt(t, admDocs.select(col("doc_id"),
-      Provenance.contentHash60(col("text")).as("ch")))
-    st.text.bands.appendTickAt(t, Fuzzy.corpusBandState(admDocs))
-    st.text.shingles.appendTickAt(t, Fuzzy.corpusShingleHashes(admDocs))
-    st.imgSigs.appendTickAt(t, admRows
-      .select(col("doc_id"), col("img_sig").as("sig"))
-      .filter(col("sig").isNotNull))
-    st.audSigs.appendTickAt(t, admRows
-      .select(col("doc_id"), col("aud_sig").as("sig"))
-      .filter(col("sig").isNotNull))
-    sem.foreach(leg => leg.sigs.appendTickAt(t,
-      graft.operators.SemanticGate.sigRowsOf(leg.vectors, admIds,
-        leg.nTables, leg.bits, leg.dim)))
-    eval.foreach(leg => leg.docGrams.appendTickAt(t,
-      graft.operators.Contamination.grams(admDocs, leg.n)))
-    idx.foreach(_.appendDocsAt(t, servedDocs))
-    census.foreach(_.appendDocsAt(t, admDocs))
-    curate.filter(cl => !census.contains(cl.census))
-      .foreach(_.census.appendDocsAt(t, admDocs))
-    ann.foreach { leg =>
-      val (c, r) = leg.idx.servingArtifacts().getOrElse((leg.cents, leg.rcb))
-      leg.idx.appendVectorsAt(t, leg.vectors.join(
-        admIds.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
-        c, r)
-    }
-    export.foreach(leg => leg.store.appendDocsAt(t, servedDocs, leg.ms))
-    mix.foreach(_.appendDocsAt(t, admDocs))
-    quar.rows.appendTickAt(t, rows.limit(0))
-    quar.resolvedIds.appendTickAt(t, admIds)
-    replay.feats.appendTickAt(t, feats.limit(0))
-    val admSet = admIds.withColumnRenamed("doc_id", "aid")
-    flipped
-      .join(admSet, col("doc_id") === col("aid"), "left")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_novel"),
-        count(when(col("was_lowq"), lit(1))).as("n_lowq_t1"),
-        count(when(col("aid").isNotNull, lit(1))).as("n_readmitted"),
-        count(when(col("was_lowq") && col("lq2"), lit(1)))
-          .as("n_still_lowq"),
-        count(when(!col("was_lowq") && col("lq2"), lit(1)))
-          .as("n_demoted"))
-      .orderBy("source")
-  }
+      : DataFrame =
+    regateImpl(st.text, st.sigCols, quar, replay, wNew, lowFrac,
+      Legs(idx, census, ann, export, mix, Some(quar), Some(replay), sem,
+        eval, curate))
 
   /** [[compactIfNeeded]] over all five multimodal stores — tombstones
-    * fold out of every modality's state; cleared only when every store
-    * folded (same read-path-idempotence argument). An attached sem
-    * leg's sig store and an eval leg's docGrams resolve through the
-    * SAME shared tombstones, so they MUST fold in the same pass —
-    * clearing after folding only the five mm stores would resurface
-    * retracted rows at the next flag / retro-catch read (the
-    * compactIfNeeded argument, which the mm form was missing for the
-    * eval leg). */
+    * fold out of every modality's state, with the attached legs' stores
+    * of the same shared lineage, in one pass; cleared only when every
+    * store folded (same read-path-idempotence argument). */
   def compactMmIfNeeded(st: MmStores, maxDataFiles: Long = 64,
                         sem: Option[SemLeg] = None,
                         eval: Option[EvalLeg] = None,
                         quar: Option[Quarantine] = None,
-                        replay: Option[ReplayLeg] = None): Boolean = {
-    // quarantine rows / replay feats share the text tombstone lineage
-    // (readjudicateMmTick/regateMmTick read them through `resolved`) —
-    // the compactIfNeeded resurface argument, r16 self-audit
-    val all = st.all ++ sem.map(_.sigs) ++ eval.map(_.docGrams) ++
-      quar.toSeq.flatMap(q => Seq(q.rows, q.resolvedIds)) ++
-      replay.map(_.feats)
-    val need = all.exists(_.dataFileCount > maxDataFiles)
-    if (need) {
-      val folded = all.map(_.compactWith(df => resolved(st.text, df)))
-      if (st.text.tombs.current().isDefined && folded.forall(_ > 0))
-        st.text.tombs.reset()
-    }
-    need
-  }
+                        replay: Option[ReplayLeg] = None): Boolean =
+    compactLineage(st.text, st.all, maxDataFiles, sem, eval, quar, replay)
 }

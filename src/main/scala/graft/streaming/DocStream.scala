@@ -314,7 +314,20 @@ object DocStream {
     * `stores.hashes`: the seed must survive compaction of the fold
     * stores. Compact the stores only while the query is stopped and
     * committed (`IngestStateStore.currentUpTo` throws if a replay
-    * would need increments a compaction folded away). */
+    * would need increments a compaction folded away).
+    *
+    * Consumer legs (BM25 postings, gram census, ANN codes, packed
+    * export) fold each micro-batch's admitted docs through
+    * [[graft.io.IngestLoop.foldAdmitted]] — the batch ticks' one
+    * fold-back — under the same batch-id-keyed tick, so a replayed
+    * batch overwrites its own increments and no served state lags the
+    * stream's admissions (DocStreamSpec pins served ranking, census,
+    * codes and export slices ≡ a batch rebuild over base ∪ all
+    * admissions). Every index must be bootstrapped from the same
+    * corpus as the stores (tick 1) before the query starts. There is
+    * no mix leg: the stream wire schema carries no `source` column.
+    * Streaming export epochs are micro-batch-sized; a deployment with
+    * small batches compacts by re-exporting at quiesce points. */
   def foldingGatedAdmissionQuery(docs: DataFrame, corpusHashes: DataFrame,
                                  stores: graft.io.IngestLoop.Stores,
                                  weights: Seq[Double],
@@ -330,6 +343,9 @@ object DocStream {
                                  eval: Option[graft.io.IngestLoop.EvalLeg] = None,
                                  curate: Option[graft.io.IngestLoop.CurateLeg] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    val legs = graft.io.IngestLoop.Legs(idx = idx, census = census,
+      ann = ann, export = export, quar = quar, sem = sem, eval = eval,
+      curate = curate)
     admissionStreamWithText(docs, corpusHashes)
       .writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -356,23 +372,9 @@ object DocStream {
           .select("doc_id", "text")
         val served = curatedServed(refined, b.toDF().select("doc_id", "text"),
           stateTick, outPath, batchId, curate, adm)
-        stores.hashes.appendTickAt(stateTick + 1,
-          graft.operators.Provenance.corpusDocHashes(adm))
-        stores.bands.appendTickAt(stateTick + 1,
-          graft.operators.Fuzzy.corpusBandState(adm))
-        stores.shingles.appendTickAt(stateTick + 1,
-          graft.operators.Fuzzy.corpusShingleHashes(adm))
-        sem.foreach(leg => leg.sigs.appendTickAt(stateTick + 1,
-          graft.operators.SemanticGate.sigRowsOf(leg.vectors,
-            adm.select("doc_id"), leg.nTables, leg.bits, leg.dim)))
-        eval.foreach(leg => leg.docGrams.appendTickAt(stateTick + 1,
-          graft.operators.Contamination.grams(adm, leg.n)))
-        foldConsumerLegs(adm, served, stateTick + 1, idx, census, ann, export)
-        // a curate leg whose census is NOT the stream's census leg still
-        // folds the RAW admitted increment (same object → no double fold
-        // — the runTickImpl rule)
-        curate.filter(cl => !census.contains(cl.census))
-          .foreach(_.census.appendDocsAt(stateTick + 1, adm))
+        graft.io.IngestLoop.foldAdmitted(stateTick + 1, stores,
+          graft.operators.Provenance.corpusDocHashes(adm),
+          adm.select("doc_id"), adm, served, Nil, legs)
         foldQuarantine(refined, stateTick + 1, quar)
       }
       .start()
@@ -464,15 +466,15 @@ object DocStream {
     case _ => batch
   }
 
-  /** CURATE leg (the q137 symmetry in streaming — r12 verdict item 1):
-    * the batch tick serves census-stripped + PII-scrubbed text while
-    * the streaming folds served RAW admitted text, so a streaming
-    * deployment exported boilerplate and unscrubbed PII the batch path
-    * removed. Admitted docs strip against the maintained census ∪ the
-    * micro-batch's own increment (the q129/q137 winner rule, at the
-    * census's granularity) then scrub, and the CURATED form is what
-    * [[foldConsumerLegs]] feeds the serving consumers (BM25 postings,
-    * packed export) — while the dedup stores, the quarantine, and the
+  /** CURATE leg (the q137 symmetry in streaming): the stream serves
+    * the same census-stripped + PII-scrubbed text as the batch tick,
+    * through the same [[graft.io.IngestLoop.curatedRows]] and
+    * [[graft.io.IngestLoop.curateAudit]]. Admitted docs strip against
+    * the maintained census ∪ the micro-batch's own increment (the
+    * q129/q137 winner rule, at the census's granularity) then scrub,
+    * and the CURATED form is what the fold-back feeds the serving
+    * consumers (BM25 postings, packed export) — while the dedup
+    * stores, the quarantine, and the
     * census keep folding RAW text (the two-column provenance
     * discipline; the census is the strip-rule source). The per-batch
     * rewrite audit (the q137 report columns: tokens_raw /
@@ -490,22 +492,11 @@ object DocStream {
                             adm: DataFrame): DataFrame = curate match {
     case None => adm
     case Some(cl) =>
-      val cur = graft.operators.CurateTick.curatedDocs(
+      val cur = graft.io.IngestLoop.curatedRows(cl, stateTick + 1,
         refined.filter(col("verdict") === "new")
           .select(col("doc_id"), lit("stream").as("source"), col("text")),
-        cl.census.censusStore.currentUpTo(stateTick).getOrElse(
-          sys.error("curate leg not bootstrapped: no census base")),
-        rawBatch, cl.census.k, cl.topN)
-        // severed: read by the audit write AND the consumer folds
-        .localCheckpoint()
-      cur.select(col("source"), col("n_tokens"), col("n_removed"),
-          col("chars_redacted"),
-          graft.operators.Provenance.contentHash60(col("text")).as("chc"))
-        .groupBy("source")
-        .agg(sum("n_tokens").as("tokens_raw"),
-          sum("n_removed").as("tokens_removed"),
-          sum("chars_redacted").as("chars_redacted"),
-          expr("bit_xor(chc)").as("exact_curated_sig"))
+        rawBatch)
+      graft.io.IngestLoop.curateAudit(cur)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId/_audit")
       cur.select("doc_id", "text")
   }
@@ -541,58 +532,6 @@ object DocStream {
         refined.select("doc_id").limit(0))
     }
 
-  /** The consumer-leg folds one micro-batch's ADMITTED docs feed — the
-    * [[graft.io.IngestLoop.runFullTick]] symmetry in streaming, shared
-    * by the text and multimodal folding queries. All legs append under
-    * the same batch-id-keyed tick as the dedup folds, so a replayed
-    * batch overwrites its own increments (exactly-once effect under
-    * at-least-once foreachBatch) and no served state ever lags the
-    * stream's admissions:
-    *
-    *   - RETRIEVAL (r10 item 7): BM25 postings — DocStreamSpec pins
-    *     served ranking ≡ a batch rebuild over base ∪ all admissions
-    *     across kill/restart; each batch tokenized exactly once.
-    *   - CURATION: the gram census — same pin; a takedown's
-    *     subtraction leg composes via IngestLoop.retractTick as in
-    *     batch.
-    *   - ANN (the q124 symmetry): admitted docs' embeddings (semi-
-    *     joined from the leg's side table) encode under the index's
-    *     CURRENT serving artifacts; served codes ≡ a batch re-encode
-    *     over base ∪ all stream admissions.
-    *   - EXPORT (the q125 symmetry): admitted docs pack as the batch's
-    *     epoch under the frozen merges; a replayed batch writes an
-    *     identical next revision (complete-or-invisible). Streaming
-    *     epochs are micro-batch-sized — a deployment whose batches are
-    *     small compacts by re-exporting at quiesce points (the
-    *     PackedExportStore scaladoc's epoch-count argument).
-    *
-    * `served` is the text the SERVING consumers (postings, export)
-    * receive — the curated form when a [[curatedServed]] leg is
-    * attached, `adm` itself otherwise; the census and the ANN id
-    * semi-join always work from the RAW admitted frame (the q137
-    * two-column provenance rule). Every index must be bootstrapped
-    * from the same corpus as the stores (tick 1) before the query
-    * starts. */
-  private def foldConsumerLegs(adm: DataFrame, served: DataFrame, tick: Long,
-                               idx: Option[graft.io.ArtifactStore.Bm25IncrementalIndex],
-                               census: Option[graft.io.ArtifactStore.GramCensusIncrementalIndex],
-                               ann: Option[graft.io.IngestLoop.AnnLeg],
-                               export: Option[graft.io.IngestLoop.ExportLeg])
-      : Unit = {
-    // (no mix leg here: the stream wire schema carries no `source`
-    // column — the domain-mix state is a batch-loop leg)
-    idx.foreach(_.appendDocsAt(tick, served))
-    census.foreach(_.appendDocsAt(tick, adm))
-    ann.foreach { leg =>
-      val (c, r) = leg.idx.servingArtifacts()
-        .getOrElse((leg.cents, leg.rcb))
-      leg.idx.appendVectorsAt(tick, leg.vectors.join(
-        adm.select(col("doc_id").as("vec_id")), Seq("vec_id"),
-        "left_semi"), c, r)
-    }
-    export.foreach(leg => leg.store.appendDocsAt(tick, served, leg.ms))
-  }
-
   /** MULTIMODAL folding admission — the [[graft.io.IngestLoop
     * .runMmTick]] twin in streaming: per micro-batch, docs the exact
     * pass called 'new' refine through fuzzy text (persisted LSH state),
@@ -603,8 +542,7 @@ object DocStream {
     * ONLY admitted docs fold back into all five stores — so batch N+1
     * rejects an image/audio near-dup of what batch N admitted, without
     * waiting for a batch tick. Same batch-id-keyed replay discipline
-    * as [[foldingGatedAdmissionQuery]]; optional consumer legs via
-    * [[foldConsumerLegs]].
+    * as [[foldingGatedAdmissionQuery]], and the same consumer legs.
     *
     * Takedown caveat (both folding queries): the fuzzy/signature state
     * resolves through the shared tombstone store at every batch, so a
@@ -637,6 +575,9 @@ object DocStream {
                               curate: Option[graft.io.IngestLoop.CurateLeg] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.multimodal.Multimodal
+    val legs = graft.io.IngestLoop.Legs(idx = idx, census = census,
+      ann = ann, export = export, quar = quar, sem = sem, eval = eval,
+      curate = curate)
     admissionStreamWithText(docs, corpusHashes)
       .writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -691,24 +632,14 @@ object DocStream {
           .select("doc_id", "text")
         val served = curatedServed(refined, b.toDF().select("doc_id", "text"),
           stateTick, outPath, batchId, curate, adm)
-        stores.text.hashes.appendTickAt(stateTick + 1,
-          graft.operators.Provenance.corpusDocHashes(adm))
-        stores.text.bands.appendTickAt(stateTick + 1,
-          graft.operators.Fuzzy.corpusBandState(adm))
-        stores.text.shingles.appendTickAt(stateTick + 1,
-          graft.operators.Fuzzy.corpusShingleHashes(adm))
-        stores.imgSigs.appendTickAt(stateTick + 1,
-          bISigs.join(adm.select("doc_id"), Seq("doc_id"), "left_semi"))
-        stores.audSigs.appendTickAt(stateTick + 1,
-          bASigs.join(adm.select("doc_id"), Seq("doc_id"), "left_semi"))
-        sem.foreach(leg => leg.sigs.appendTickAt(stateTick + 1,
-          graft.operators.SemanticGate.sigRowsOf(leg.vectors,
-            adm.select("doc_id"), leg.nTables, leg.bits, leg.dim)))
-        eval.foreach(leg => leg.docGrams.appendTickAt(stateTick + 1,
-          graft.operators.Contamination.grams(adm, leg.n)))
-        foldConsumerLegs(adm, served, stateTick + 1, idx, census, ann, export)
-        curate.filter(cl => !census.contains(cl.census))
-          .foreach(_.census.appendDocsAt(stateTick + 1, adm))
+        graft.io.IngestLoop.foldAdmitted(stateTick + 1, stores.text,
+          graft.operators.Provenance.corpusDocHashes(adm),
+          adm.select("doc_id"), adm, served,
+          Seq(stores.imgSigs ->
+              bISigs.join(adm.select("doc_id"), Seq("doc_id"), "left_semi"),
+            stores.audSigs ->
+              bASigs.join(adm.select("doc_id"), Seq("doc_id"), "left_semi")),
+          legs)
         // the mm QUARANTINE fold (rejected ≠ discarded for stream
         // arrivals of every modality — the text twin's q131 symmetry):
         // rejected docs land with their 8-byte signatures so a
