@@ -1,15 +1,25 @@
 package graft
 
 import graft.io.{CoinGecko, CryptoCsv, Publish}
-import graft.operators.{ClassifyApi, CleanHistorical}
+import graft.operators.{ClassifyApi, CleanHistorical, Materialize}
 import graft.profile.{HtmlReport, Profiler}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** §2.5 orchestrator: the reference DAG `[t1, t2] >> t3 >> [t4, t5]`
   * (crypto_etl_pipeline.py:367-392) re-expressed as lazy DataFrame
-  * stages. Stages hand off in-memory Catalyst plans; the cleaned and
+  * stages. t1–t3 hand off in-memory Catalyst plans; the cleaned and
   * classified outputs are always written to CSV, as the reference
-  * writes them (P90, P208), and publish copies them from there.
+  * writes them (P90, P208), the two writes running concurrently.
+  *
+  * t4 ∥ t5 run as the DAG draws them: the two reports and the two
+  * publishes are four concurrent branches ([[Materialize.branches]]).
+  * Each report profiles its output AS WRITTEN, read back with the
+  * declared schema — as the reference re-reads its CSVs to profile them
+  * (P269, P280) — so the profile's queries scan one small file instead
+  * of each re-running the cleaning lineage. Publish copies the same
+  * files. `run` returns after every branch finished, rethrowing the
+  * first failure.
   *
   * Exact vs approximate is not a pipeline setting: the medians and IQR
   * bounds are exact `percentile` aggregates, and the session's
@@ -57,31 +67,36 @@ object Pipeline {
 
     val cleanedOut = s"${cfg.outDir}/cleaned_cryptocurrency_data"
     val classifiedOut = s"${cfg.outDir}/api_cryptocurrency_data"
-    CryptoCsv.write(cleaned, cleanedOut)
-    CryptoCsv.write(classified, classifiedOut)
+    Materialize.branches(spark, Seq(
+      () => CryptoCsv.write(cleaned, cleanedOut),
+      () => CryptoCsv.write(classified, classifiedOut)))
 
-    // t4: profiling reports (full over API data, minimal-ish over
-    // historical — reference P261-287, implemented per the working
-    // colab variant, SURVEY §2.1 note on the BASE_PATH bug)
-    val reportPaths = if (cfg.reports) {
-      val apiReport = s"${cfg.outDir}/cryptos_api_report.html"
-      val histReport = s"${cfg.outDir}/cryptos_kaggle_report.html"
-      HtmlReport.toFile("Cryptos API report",
-        Profiler.profile(classified), apiReport)
-      HtmlReport.toFile("Cryptos historical report",
-        Profiler.profile(cleaned), histReport)
-      Seq(apiReport, histReport)
-    } else Seq.empty
-
-    // t5: publish with timestamped names (depends on t3's output)
-    val published = if (cfg.publish) {
+    // t4 ∥ t5, four branches at once. t4: profiling reports (full over
+    // API data, minimal-ish over historical — reference P261-287,
+    // implemented per the working colab variant, SURVEY §2.1 note on
+    // the BASE_PATH bug), each over its output as written (P269, P280).
+    // t5: publish with timestamped names (depends on t3's output).
+    val apiReport = s"${cfg.outDir}/cryptos_api_report.html"
+    val histReport = s"${cfg.outDir}/cryptos_kaggle_report.html"
+    def report(title: String, out: String, schema: StructType, path: String)
+        : () => Option[Publish.PublishedFile] = () => {
+      HtmlReport.toFile(title,
+        Profiler.profile(CryptoCsv.readWritten(spark, out, schema)), path)
+      None
+    }
+    val reports = if (cfg.reports) Seq(
+      report("Cryptos API report", classifiedOut, CryptoCsv.classifiedSchema, apiReport),
+      report("Cryptos historical report", cleanedOut, CryptoCsv.cleanSchema, histReport))
+    else Seq.empty
+    val publishes = if (cfg.publish) {
       val ts = Publish.timestampSuffix()
-      Seq(
-        Publish.publishCsv(spark, cleanedOut, s"${cfg.outDir}/published",
-          "cleaned_cryptocurrency_data_final", ts),
-        Publish.publishCsv(spark, classifiedOut, s"${cfg.outDir}/published",
-          "api_cryptocurrency_data_final", ts))
+      Seq(cleanedOut -> "cleaned_cryptocurrency_data_final",
+          classifiedOut -> "api_cryptocurrency_data_final").map { case (out, name) =>
+        () => Some(Publish.publishCsv(spark, out, s"${cfg.outDir}/published", name, ts))
+      }
     } else Seq.empty
+    val published = Materialize.branches(spark, reports ++ publishes).flatten
+    val reportPaths = if (cfg.reports) Seq(apiReport, histReport) else Seq.empty
 
     Result(cleaned, classified, published, reportPaths)
   }

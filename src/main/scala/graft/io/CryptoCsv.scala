@@ -46,6 +46,10 @@ object CryptoCsv {
     StructField("high_24h", DoubleType),
     StructField("low_24h", DoubleType)))
 
+  /** Classified-output schema: the API columns plus the trend label. */
+  val classifiedSchema: StructType =
+    StructType(apiSchema.fields :+ StructField("tendencia", StringType))
+
   /** Raw historical read. Single partition: row order is semantically
     * meaningful in the reference (market-cap rank order, SURVEY.md §1.1);
     * parity mode preserves it. At scale, callers repartition after
@@ -65,11 +69,15 @@ object CryptoCsv {
     * optional trailing golden-classification column is read when present. */
   def readApiFixture(spark: SparkSession, path: String,
                      withGolden: Boolean = false): DataFrame = {
-    val schema = if (withGolden)
-      StructType(apiSchema.fields :+ StructField("tendencia", StringType))
-    else apiSchema
+    val schema = if (withGolden) classifiedSchema else apiSchema
     spark.read.option("header", "true").schema(schema).csv(path).coalesce(1)
   }
+
+  /** A pipeline output as [[write]] left it, read with its declared
+    * schema and split as the file reader splits it. Row order is the
+    * file's: partitions follow file offsets. */
+  def readWritten(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.option("header", "true").schema(schema).csv(path)
 
   /** S3: CSV sink (`to_csv(path, index=False)` equivalent): one part
     * file, as golden parity and [[Publish.publishCsv]] expect. */

@@ -1,11 +1,11 @@
 package graft.operators
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors, TimeUnit}
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.util.Try
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ExecBridge
 
 /** Concurrent materialization of INDEPENDENT intermediate frames.
   *
@@ -24,31 +24,42 @@ import org.apache.spark.sql.DataFrame
   * returned frame is the same severed checkpoint the sequential form
   * produced.
   *
+  * Pool work runs with the SUBMITTING thread's active session and local
+  * properties (job group, description, scheduler pool), captured per
+  * task; a pool thread would otherwise keep the snapshot it inherited
+  * when it was created.
+  *
   * Pool sizing: checkpoint fan-out in any one query is 2–4; a fixed
   * pool of 4 daemon threads bounds driver-side concurrency no matter
   * how many queries share the JVM (the bench runs 143 in sequence).
+  * Pool work never waits on other pool work.
   */
 private[graft] object Materialize {
 
-  private val pool = ExecutionContext.fromExecutorService(
-    Executors.newFixedThreadPool(4, r => {
-      val t = new Thread(r, "graft-materialize")
-      t.setDaemon(true)
-      t
-    }))
+  private val pool = Executors.newFixedThreadPool(4, r => {
+    val t = new Thread(r, "graft-materialize")
+    t.setDaemon(true)
+    t
+  })
 
-  /** Generous ceiling on any one concurrent checkpoint: a wedged job
-    * surfaces as a TimeoutException naming the materialization instead
-    * of hanging the query forever with no diagnostic. An hour is far
-    * above any legitimate checkpoint on any target (the 100 TB sizing
-    * puts the fattest severed marker minutes away, not hours). */
-  private val MaxWait = Duration(1, "hour")
+  /** `body` on the pool, with the caller's thread-local state. */
+  private def submit[T](spark: SparkSession)(body: => T): CompletableFuture[T] =
+    ExecBridge.withThreadLocalCaptured(spark, pool)(body)
+
+  /** The result of pool work; a failure rethrows the work's own
+    * exception. The generous ceiling makes a wedged job surface as a
+    * TimeoutException instead of hanging forever with no diagnostic —
+    * an hour is far above any legitimate checkpoint on any target (the
+    * 100 TB sizing puts the fattest severed marker minutes away). */
+  private def await[T](f: CompletableFuture[T]): T =
+    try f.get(1, TimeUnit.HOURS)
+    catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
 
   /** `dfs.map(_.localCheckpoint())`, submitted concurrently; each
     * result carries the size-gated broadcast hint ([[hintIfCompact]]). */
   def par(dfs: Seq[DataFrame]): Seq[DataFrame] = {
-    val fs = dfs.map(df => Future(df.localCheckpoint())(pool))
-    fs.map(f => hintIfCompact(Await.result(f, MaxWait)))
+    val fs = dfs.map(df => submit(df.sparkSession)(df.localCheckpoint()))
+    fs.map(f => hintIfCompact(await(f)))
   }
 
   /** `localCheckpoint` + size-gated broadcast hint — the severing the
@@ -63,27 +74,31 @@ private[graft] object Materialize {
 
   /** Broadcast-hint an eagerly-materialized (localCheckpoint-backed)
     * frame when its true cached size is under the session's broadcast
-    * threshold. The cached RDD is read via the analyzed LogicalRDD's
-    * `rdd` accessor (reflection: the class lives in Spark's
-    * private[sql] execution package) and its bytes from the driver's
-    * block-manager storage listing; any failure to resolve falls back
-    * to the unhinted frame. */
+    * threshold. The cached RDD comes from the typed checkpoint accessor
+    * ([[ExecBridge.checkpointRdd]]) and its bytes from the driver's
+    * block-manager storage listing. A frame that is not a checkpoint
+    * stays unhinted. */
   def hintIfCompact(out: DataFrame): DataFrame = {
     val spark = out.sparkSession
-    try {
-      val thresh = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-      if (thresh <= 0) return out
-      val plan = out.queryExecution.analyzed
-      val rdd = plan.getClass.getMethod("rdd").invoke(plan)
-        .asInstanceOf[org.apache.spark.rdd.RDD[_]]
-      val size = spark.sparkContext.getRDDStorageInfo
+    // a byte string, or a negative number (-1 = broadcasts disabled),
+    // parsed as Spark's own bytes configs parse it
+    val raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+    val thresh = if (raw.startsWith("-")) -1L
+      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
+    val size = if (thresh <= 0) None else ExecBridge.checkpointRdd(out).flatMap { rdd =>
+      spark.sparkContext.getRDDStorageInfo
         .find(_.id == rdd.id).map(i => i.memSize + i.diskSize)
-      if (size.exists(s => s >= 0 && s < thresh))
-        org.apache.spark.sql.functions.broadcast(out)
-      else out
-    } catch { case _: Throwable => out }
+    }
+    if (size.exists(s => s >= 0 && s < thresh))
+      org.apache.spark.sql.functions.broadcast(out)
+    else out
   }
+
+  /** Drop a severed frame's cached blocks now, instead of when Spark's
+    * context cleaner next collects them — for a checkpoint whose owner
+    * is done with it. A frame that is not a checkpoint is left alone. */
+  def release(df: DataFrame): Unit =
+    ExecBridge.checkpointRdd(df).foreach(_.unpersist(blocking = true))
 
   def par2(a: DataFrame, b: DataFrame): (DataFrame, DataFrame) = {
     val r = par(Seq(a, b)); (r(0), r(1))
@@ -99,9 +114,9 @@ private[graft] object Materialize {
     * (the Packing offsets sketch/totals, eager checkpoints inside).
     * Same §2.6 overlap as [[par2]], one level earlier. */
   def par2t(a: => DataFrame, b: => DataFrame): (DataFrame, DataFrame) = {
-    val fb = Future(b)(pool)
+    val fb = submit(SparkSession.active)(b)
     val ra = a
-    (ra, Await.result(fb, MaxWait))
+    (ra, await(fb))
   }
 
   /** Submit an INDEPENDENT severing now, collect at the use site —
@@ -110,7 +125,20 @@ private[graft] object Materialize {
     * first joined at stage 6): its jobs overlap the intervening
     * stages instead of serializing inside the consumer's job. */
   def defer(df: => DataFrame): () => DataFrame = {
-    val f = Future(hintIfCompact(df.localCheckpoint()))(pool)
-    () => Await.result(f, MaxWait)
+    val f = submit(SparkSession.active)(hintIfCompact(df.localCheckpoint()))
+    () => await(f)
+  }
+
+  /** Run independent branches of driver work concurrently — whole DAG
+    * branches, each submitting its own jobs (the pipeline's writes, its
+    * reports and its publishes). The first branch runs on the calling
+    * thread, the others on the pool. Every branch is waited for; only
+    * then is the first failure (in branch order) rethrown, so no
+    * sibling is still running jobs when the caller sees it. A branch
+    * must not itself wait on pool work. */
+  def branches[T](spark: SparkSession, work: Seq[() => T]): Seq[T] = {
+    val rest = work.drop(1).map(w => submit(spark)(w()))
+    val first = work.headOption.map(w => Try(w()))
+    (first.toSeq ++ rest.map(f => Try(await(f)))).map(_.get)
   }
 }

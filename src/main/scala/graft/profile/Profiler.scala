@@ -71,7 +71,9 @@ case class TableProfile(
   *            (bins need pass-1 min/max — a data-dependent barrier,
   *            same shape as the reference's quantile→fill dataflow);
   *   pass 3 — duplicate-row count (groupBy all columns);
-  *   pass 4 — per-string-column top-k (k small; TakeOrdered per column).
+  *   pass 4 — per-string-column top-k (k small; TakeOrdered per column);
+  *   pass 5 — Spearman over ONE rank table for every numeric column
+  *            ([[spearmanMatrix]]), its severed table released after.
   *
   * Exact vs approximate is decided by input size alone, never by the
   * caller: the session's [[graft.catalyst.ApproxAboveThreshold]] valve
@@ -149,37 +151,41 @@ object Profiler {
   }
 
   /** Spearman rank-correlation matrix (the profiling suite's second
-    * correlation method, SURVEY A10): per-column average ranks via the
-    * grouped-CDF ([[graft.operators.RankStats.rankTables]] — no global
-    * row window), joined back by value, then ONE wide Pearson pass over
-    * all rank columns. Cost: the rank tables' shared barriers (one
-    * sever, one sketch, one totals query for all columns) + one
-    * value-join per column inside the final aggregate scan; every join
-    * key table is bounded by column cardinality. */
+    * correlation method, SURVEY A10): every column's average ranks in
+    * ONE rank table ([[graft.operators.RankStats.rankTable]] — grouped
+    * CDF, no global row window). Each row is melted once to one entry
+    * per column, all entries are ranked by one join with that table,
+    * regrouped by a row id, and ONE wide Pearson pass runs over the rank
+    * columns. Cost: the rank table's shared barriers (one sever, one
+    * sketch, one totals query, one window) + one join and one regroup,
+    * whatever the column count; the join's table is bounded by the
+    * columns' cardinality. The severed distinct table is released once
+    * the matrix is computed. */
   def spearmanMatrix(df: DataFrame, cols: Seq[String]): Seq[(String, String, Double)] = {
+    val pairs = for { (a, i) <- cols.zipWithIndex; b <- cols.drop(i + 1) } yield (a, b)
+    if (pairs.isEmpty) return Seq.empty
     // Listwise semantics for real: rank AFTER dropping rows with a null
     // in any profiled column (= pandas df[cols].dropna().corr("spearman")).
     // Ranking the full per-column population first would hand tie-averaged
     // ranks to rows that later drop out, skewing the surviving ranks when
     // nulls are staggered across columns.
     val base = df.select(cols.map(col): _*).na.drop(cols)
-    // ONE shared prefix plan for every column (one sever, one sketch
-    // job, one totals scan), not a set of barrier jobs per column
-    val rankTabs = graft.operators.RankStats.rankTables(base, cols)
-    val ranked = cols.foldLeft(base) { (acc, c) =>
-      val r = rankTabs(c)
-        .withColumnsRenamed(Map("v" -> s"$c!v", "r" -> s"$c!rank"))
-      acc.join(r, acc(c) === r(s"$c!v")).drop(s"$c!v")
-    }
-    val pairs = for { (a, i) <- cols.zipWithIndex; b <- cols.drop(i + 1) } yield (a, b)
-    if (pairs.isEmpty) return Seq.empty
-    val aggs = pairs.map { case (a, b) =>
-      corr(col(s"$a!rank"), col(s"$b!rank")).as(s"$a!$b")
-    }
-    val row = ranked.agg(aggs.head, aggs.tail: _*).head()
-    pairs.zipWithIndex.map { case ((a, b), i) =>
-      (a, b, if (row.isNullAt(i)) Double.NaN else row.getDouble(i))
-    }
+    val ranks = graft.operators.RankStats.rankTable(base, cols)
+    try {
+      val rankCols = cols.zipWithIndex.map { case (c, i) =>
+        max(when(col("k") === i, col("r"))).as(s"$c!rank")
+      }
+      val rowRanks = ranks.rank(ranks.melted(
+          base.withColumn("row!", monotonically_increasing_id()), "row!"))
+        .groupBy("row!").agg(rankCols.head, rankCols.tail: _*)
+      val aggs = pairs.map { case (a, b) =>
+        corr(col(s"$a!rank"), col(s"$b!rank")).as(s"$a!$b")
+      }
+      val row = rowRanks.agg(aggs.head, aggs.tail: _*).head()
+      pairs.zipWithIndex.map { case ((a, b), i) =>
+        (a, b, if (row.isNullAt(i)) Double.NaN else row.getDouble(i))
+      }
+    } finally ranks.release()
   }
 
   def isNumeric(f: StructField): Boolean = f.dataType match {

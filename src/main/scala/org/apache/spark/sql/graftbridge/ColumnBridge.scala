@@ -10,8 +10,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * for Connect; a library adding native Catalyst expressions (here:
   * graft.catalyst) still needs the classic conversion, and placing this
   * shim inside the org.apache.spark.sql package tree is the standard
-  * ecosystem pattern for it. Keep this the ONLY file under
-  * org.apache.spark.*.
+  * ecosystem pattern for it. Keep this package the ONLY engine code
+  * under org.apache.spark.* ([[ExecBridge]] is its other file).
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

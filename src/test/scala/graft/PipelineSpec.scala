@@ -2,15 +2,19 @@ package graft
 
 import graft.io.CryptoCsv
 import graft.operators.CleanHistorical
+import graft.profile.{HtmlReport, Profiler, TableProfile}
+import org.apache.spark.sql.functions.{col, trim}
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** End-to-end DAG run in fixture mode against the reference data:
-  * t1 (fixture ingest) ∥ t2 (clean) → t3 (classify) → t4 (reports) ∥
-  * t5 (publish), then checks outputs, report files, and publish
-  * naming — the full S1–S5 surface in one pass. */
+/** End-to-end DAG run in fixture mode: t1 (fixture ingest) ∥ t2
+  * (clean) → t3 (classify) → t4 (reports) ∥ t5 (publish), then checks
+  * outputs, report files, and publish naming — the full S1–S5 surface
+  * in one pass, against the reference data and a synthetic fixture;
+  * plus the reports' read-back profiles and the branches' failure
+  * contract. */
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val ref = "/root/reference"
@@ -93,10 +97,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(!Files.exists(dest), "nothing may be published for a missing output")
   }
 
-  test("synthetic dirty CSV: parity and atScale runs agree, reports and publish land") {
-    // FIXTURES.md §1 quirks: padded headers, quoted comma numbers, `$-`
-    // prices, `-` and empty percents, Million/Billion/Thousand supplies
-    val dir = Files.createTempDirectory("graft-pipeline-synth")
+  /** FIXTURES.md §1 quirks: padded headers, quoted comma numbers, `$-`
+    * prices, `-` and empty percents, Million/Billion/Thousand supplies —
+    * a 20-row historical CSV (row i's coin named `coin(i)`) and a 5-row
+    * API CSV under `dir`. */
+  private def synthInputs(dir: Path, coin: Int => String = i => s"Coin $i"): (Path, Path) = {
     val header = "Rank,Coin Name,Symbol, Price ,1h,24h,7d,30d, 24h Volume ," +
       "Circulating Supply,Total Supply, Market Cap "
     def quoted(v: String) = "\"" + v + "\""
@@ -108,7 +113,7 @@ class PipelineSpec extends AnyFunSuite {
         case 0 => "21 Million"; case 1 => "88.3 Billion"; case 2 => "1.17 Thousand"
         case 3 => "-"; case 4 => s"${i * 1000}"; case _ => "120 Million" }
       val cap = if (i % 7 == 0) "-" else quoted("$" + money(i * 98765.0) + " ")
-      Seq(s"$i", s"Coin $i", s"C$i", price, pct, "-1.70%", s"${i % 3}.00%", pct,
+      Seq(s"$i", coin(i), s"C$i", price, pct, "-1.70%", s"${i % 3}.00%", pct,
         quoted("$" + money(i * 1000.0) + " "), quoted(money(i * 19549.0).dropRight(3)),
         supply, cap).mkString(",")
     }
@@ -122,7 +127,12 @@ class PipelineSpec extends AnyFunSuite {
       "usdt,1.0,0.01,170000000000,,1.0,1.0",
       "xrp,2.9,-2.5,170000000000,5.0E8,3.0,2.8",
       "sol,,-6.0,120000000000,0.0,230.0,220.0").asJava)
+    (raw, api)
+  }
 
+  test("synthetic dirty CSV: parity and atScale runs agree, reports and publish land") {
+    val dir = Files.createTempDirectory("graft-pipeline-synth")
+    val (raw, api) = synthInputs(dir)
     val cfg = Pipeline.Config(rawCsvPath = raw.toString,
       apiFixturePath = Some(api.toString),
       outDir = dir.resolve("parity").toString)
@@ -143,5 +153,69 @@ class PipelineSpec extends AnyFunSuite {
       assert(r.published.map(_.cols) === Seq(12, 8))
       r.published.foreach(f => assert(Files.exists(Paths.get(f.target)), f.target))
     }
+  }
+
+  /** Field by field. Doubles agree to 1e-12 relative (NaN equals NaN):
+    * the correlations sum in an order the shuffle decides. */
+  private def assertSameProfile(got: TableProfile, want: TableProfile): Unit = {
+    def same(g: Any, w: Any): Boolean = (g, w) match {
+      case (a: Double, b: Double) =>
+        (a.isNaN && b.isNaN) || math.abs(a - b) <= 1e-12 * math.max(1.0, math.abs(a))
+      case (a: Product, b: Product) if a.productArity == b.productArity =>
+        a.productIterator.zip(b.productIterator).forall { case (x, y) => same(x, y) }
+      case (a: Iterable[_], b: Iterable[_]) =>
+        a.size == b.size && a.zip(b).forall { case (x, y) => same(x, y) }
+      case _ => g == w
+    }
+    got.productElementNames.zip(got.productIterator.zip(want.productIterator))
+      .foreach { case (field, (g, w)) => assert(same(g, w), s"$field: $g != $w") }
+  }
+
+  test("reports profile the outputs as written: read-back profiles equal the in-memory ones") {
+    val dir = Files.createTempDirectory("graft-pipeline-readback")
+    val padded = "  Coin 10 "
+    val (raw, api) = synthInputs(dir, i => if (i == 10) padded else s"Coin $i")
+    val out = dir.resolve("out")
+    val r = Pipeline.run(spark, Pipeline.Config(rawCsvPath = raw.toString,
+      apiFixturePath = Some(api.toString), outDir = out.toString, publish = false))
+    val cleanedBack = Profiler.profile(CryptoCsv.readWritten(spark,
+      out.resolve("cleaned_cryptocurrency_data").toString, CryptoCsv.cleanSchema))
+    val classifiedBack = Profiler.profile(CryptoCsv.readWritten(spark,
+      out.resolve("api_cryptocurrency_data").toString, CryptoCsv.classifiedSchema))
+    assertSameProfile(classifiedBack, Profiler.profile(r.classified))
+    // the CSV writer trims leading and trailing whitespace, so the padded
+    // name is written trimmed and the report follows the written file:
+    // its profile is the in-memory frame's with that one name trimmed
+    assert(r.cleaned.filter(col("coin") === padded).count() === 1)
+    assertSameProfile(cleanedBack,
+      Profiler.profile(r.cleaned.withColumn("coin", trim(col("coin")))))
+    val coinLen = (p: TableProfile) => p.strings.find(_.name == "coin").get.maxLen
+    assert(coinLen(Profiler.profile(r.cleaned)) === Some(padded.length))
+    assert(coinLen(cleanedBack) === Some("Coin 10".length))
+    // each report is its read-back profile, rendered
+    assert(r.reportPaths.map(p => Files.readString(Paths.get(p))) === Seq(
+      HtmlReport.render("Cryptos API report", classifiedBack),
+      HtmlReport.render("Cryptos historical report", cleanedBack)))
+  }
+
+  test("a failed branch fails the run only after every sibling branch finished") {
+    val dir = Files.createTempDirectory("graft-pipeline-branch-fail")
+    val (raw, api) = synthInputs(dir)
+    val out = dir.resolve("out")
+    // the API report's path is a directory: writing that report fails
+    val apiReport = Files.createDirectories(out.resolve("cryptos_api_report.html"))
+    val (outcome, jobs) = TestSpark.withJobs(spark) {
+      val r = scala.util.Try(Pipeline.run(spark, Pipeline.Config(rawCsvPath = raw.toString,
+        apiFixturePath = Some(api.toString), outDir = out.toString)))
+      (r, System.currentTimeMillis(), spark.sparkContext.statusTracker.getActiveJobIds())
+    }
+    val (run, thrownAt, active) = outcome.get
+    val e = intercept[java.nio.file.FileSystemException](run.get)
+    assert(e.getMessage.contains(apiReport.toString), e.getMessage)
+    // no job was left running when run threw, and the siblings' work landed
+    assert(active.isEmpty, s"jobs still active when run threw: ${active.toSeq}")
+    jobs.foreach(j => assert(j.end >= 0 && j.end <= thrownAt, s"job $j outlived the run"))
+    assert(Files.size(out.resolve("cryptos_kaggle_report.html")) > 0)
+    assert(Files.list(out.resolve("published")).count() === 2)
   }
 }

@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.Properties
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, LinkedBlockingQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** One shared local session for the whole suite (Spark session startup is
   * the dominant test cost; suites must not stop() it). */
@@ -44,5 +48,44 @@ object TestSpark {
   def withQueryCount[T](s: SparkSession)(body: => T): (T, Int) = {
     val (out, plans) = withOptimizedPlans(s)(body)
     (out, plans.size - 1)
+  }
+
+  /** One Spark job as a listener saw it: the local properties it was
+    * submitted with, and the scheduler's times of its start and end (−1
+    * if it never ended). */
+  final case class Job(props: Properties, start: Long, end: Long)
+
+  /** Runs `body` and returns its outcome with every Spark job it ran on
+    * `s`, in start order. Job events arrive on Spark's asynchronous
+    * listener bus, so a marker job runs after `body` and its end is
+    * awaited: by then every earlier job's events have been seen. */
+  def withJobs[T](s: SparkSession)(body: => T): (Try[T], Seq[Job]) = {
+    val marker = "graft.test.jobMarker"
+    val starts = new ConcurrentHashMap[Int, (Properties, Long)]
+    val ends = new ConcurrentHashMap[Int, Long]
+    @volatile var markerId = -1
+    val markerDone = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties).getOrElse(new Properties)
+        if (props.getProperty(marker) != null) markerId = e.jobId
+        else starts.put(e.jobId, (props, e.time))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerId) markerDone.countDown() else ends.put(e.jobId, e.time)
+    }
+    val sc = s.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = Try(body)
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      if (!markerDone.await(60, TimeUnit.SECONDS))
+        throw new IllegalStateException("job listener timed out")
+      val jobs = starts.asScala.toSeq.sortBy(_._1).map { case (id, (props, start)) =>
+        Job(props, start, ends.asScala.getOrElse(id, -1L))
+      }
+      (out, jobs)
+    } finally sc.removeSparkListener(listener)
   }
 }

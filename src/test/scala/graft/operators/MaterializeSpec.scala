@@ -4,16 +4,16 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the two load-bearing mechanics of [[Materialize]]:
+/** Pins the load-bearing mechanics of [[Materialize]]:
   *
-  *  - `hintIfCompact` resolves the checkpoint's cached RDD via
-  *    reflection (`LogicalRDD.rdd` lives in a private[sql] package); a
-  *    Spark upgrade that renames the accessor would silently fall back
-  *    to the unhinted frame and the only symptom would be a slower
-  *    bench. This spec fails loudly instead: a small severed frame MUST
-  *    plan as the build side of a BroadcastHashJoin.
+  *  - `hintIfCompact` resolves the checkpoint's cached RDD through the
+  *    typed `ExecBridge.checkpointRdd` accessor: a small severed frame
+  *    MUST plan as the build side of a BroadcastHashJoin.
   *  - the size gate: with the broadcast threshold at -1 (disabled) the
-  *    hint must NOT be applied.
+  *    hint must NOT be applied; a frame that is not a checkpoint stays
+  *    unhinted.
+  *  - pool work runs with the caller's local properties, whatever the
+  *    pool thread inherited when it was created.
   */
 class MaterializeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -26,7 +26,7 @@ class MaterializeSpec extends AnyFunSuite {
     val plan = big.join(small, Seq("id"), "left")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
-      s"severed 100-row frame not broadcast — reflection fallback? plan:\n$plan")
+      s"severed 100-row frame not broadcast — checkpoint accessor? plan:\n$plan")
   }
 
   test("hint is size-gated: disabled threshold leaves the frame unhinted") {
@@ -40,5 +40,31 @@ class MaterializeSpec extends AnyFunSuite {
         !out.queryExecution.logical.toString.contains("UnresolvedHint"),
         "hint applied despite disabled threshold")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("a frame that is not a checkpoint stays unhinted; release frees a checkpoint") {
+    import spark.implicits._
+    val plain = (1L to 100L).toDF("id")
+    assert(Materialize.hintIfCompact(plain) eq plain)
+    val cp = Materialize.sever(plain)
+    val rdd = org.apache.spark.sql.graftbridge.ExecBridge.checkpointRdd(cp).get
+    assert(spark.sparkContext.getRDDStorageInfo.exists(_.id == rdd.id))
+    Materialize.release(cp)
+    assert(!spark.sparkContext.getRDDStorageInfo.exists(_.id == rdd.id))
+  }
+
+  test("pool work carries the caller's job group, not the pool thread's") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def parUnder(group: String): Unit = {
+      sc.setJobGroup(group, s"materialize under $group")
+      try Materialize.par(Seq(1, 2, 3, 4).map(i => (1 to 50).map(_ * i).toDF("x")))
+      finally sc.clearJobGroup()
+    }
+    parUnder("a")
+    val (out, jobs) = TestSpark.withJobs(spark)(parUnder("b"))
+    out.get
+    assert(jobs.nonEmpty)
+    jobs.foreach(j => assert(j.props.getProperty("spark.jobGroup.id") === "b"))
   }
 }

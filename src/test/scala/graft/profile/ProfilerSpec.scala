@@ -213,19 +213,34 @@ class ProfilerSpec extends AnyFunSuite {
     assert(cRanks.size === 2 && cRanks((1L << 53) + 1) === cRanks(1L << 53) + 1.0, cRanks)
   }
 
-  test("structural pin: no Expand beside exact percentiles; Spearman barriers do not grow with columns") {
+  /** The tied frame with 9 numeric columns, and with 3 of them. */
+  private def nineAndThree = {
     import org.apache.spark.sql.functions.col
     val (_, df) = tiedFrame(300)
     val nine = df.select(df.columns.map(col) ++ Seq(
       (col("a") * 2).as("e"), (col("b") + 1).as("f"), (col("c") - 3).as("g"),
       (col("d") * col("d")).as("h"), (col("a") + col("d")).as("i")): _*)
-    val three = df.select("a", "b", "d")
+    (nine, df.select("a", "b", "d"))
+  }
+
+  test("structural pin: no Expand beside exact percentiles; Spearman barriers do not grow with columns") {
+    val (nine, three) = nineAndThree
     val (_, plans) = TestSpark.withOptimizedPlans(spark)(Profiler.profile(nine))
     plans.foreach(p => assert(!(p.contains("Expand") && p.contains("percentile(")),
       "distinct counts must not share an aggregate with exact percentiles:\n" + p))
     val (_, n3) = TestSpark.withQueryCount(spark)(Profiler.profile(three))
     val (_, n9) = TestSpark.withQueryCount(spark)(Profiler.profile(nine))
     assert(n9 === n3, "profile queries grew with the numeric column count")
+  }
+
+  test("Spearman's Spark job count for 9 numeric columns equals that for 3") {
+    // one rank table, one join and one regroup for any column count: no
+    // job per column
+    val (nine, three) = nineAndThree
+    val (r3, j3) = TestSpark.withJobs(spark)(Profiler.spearmanMatrix(three, three.columns.toSeq))
+    val (r9, j9) = TestSpark.withJobs(spark)(Profiler.spearmanMatrix(nine, nine.columns.toSeq))
+    assert(r3.get.size === 3 && r9.get.size === 36)
+    assert(j9.size === j3.size, s"Spearman jobs grew with the columns: ${j3.size} → ${j9.size}")
   }
 
   test("empty shapes: a boolean-only frame profiles; an all-dropped Spearman is NaN") {
