@@ -216,7 +216,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                         served index; output = per-cluster census of
   *                         base ∪ admitted codes with the q122
   *                         positional checksum (deployment form:
-  *                         IngestLoop.runFullTick + AnnLeg; retraction
+  *                         IngestLoop.runTick + AnnLeg; retraction
   *                         via retractTick's ANN leg; streaming twin in
   *                         DocStream.foldingGatedAdmissionQuery)
   *  - q125_export_retraction: the takedown leg reaching the PHYSICAL
@@ -228,7 +228,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                         without the retracted docs, certifying
   *                         retraction ≡ re-export-without (deployment
   *                         form: io.ArtifactStore.PackedExportStore,
-  *                         riding IngestLoop.runFullTick's export leg)
+  *                         riding IngestLoop.runTick's export leg)
   *  - q126_multimodal_retraction: the MULTIMODAL takedown — q117's
   *                         retraction discipline over q118's unified
   *                         five-store state: one takedown retracts a

@@ -338,24 +338,11 @@ object ArtifactStore {
         tf.join(tb.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
 
     /** Retract docs (a `doc_id` column) from the served index — a
-      * takedown-sized tombstone append; no posting is rewritten until
-      * the next compaction folds them. */
-    def retractDocs(docIds: DataFrame): Long =
-      tombStore.appendTick(docIds.select("doc_id"))
-
-    /** Tick-keyed idempotent retraction (replayed takedown batches
-      * overwrite their own tombstone tick). */
+      * takedown-sized tombstone append, tick-keyed so a replayed
+      * takedown overwrites its own tombstone tick; no posting is
+      * rewritten until the next compaction folds them. */
     def retractDocsAt(t: Long, docIds: DataFrame): Unit =
       tombStore.appendTickAt(t, docIds.select("doc_id"))
-
-    /** Tokenize + append one batch's postings; tick 1 is the
-      * bootstrap corpus, later ticks are admitted ingest batches.
-      * Auto-increments — for the bootstrap itself use [[bootstrap]]
-      * (r10 advice): a crashed-then-retried auto-increment bootstrap
-      * would append a SECOND copy of the corpus postings as tick 2,
-      * doubling tf/df/dl and silently corrupting every ranking. */
-    def appendDocs(docs: DataFrame): Long =
-      tfStore.appendTick(graft.operators.Retrieval.tfOf(docs))
 
     /** IDEMPOTENT tick-1 bootstrap (mirrors [[IngestLoop.bootstrap]]):
       * a re-run after a crash overwrites the same tick-1 directory
@@ -363,8 +350,9 @@ object ArtifactStore {
     def bootstrap(corpusDocs: DataFrame): Unit =
       appendDocsAt(1, corpusDocs)
 
-    /** Tick-keyed idempotent append — the form [[IngestLoop]]'s
-      * composed tick uses so a crashed/replayed tick overwrites its
+    /** Tokenize + append one batch's postings at tick `t` (tick 1 is
+      * the bootstrap corpus, later ticks are admitted ingest batches) —
+      * an idempotent overwrite, so a crashed/replayed tick rewrites its
       * own postings instead of appending a duplicate copy. */
     def appendDocsAt(t: Long, docs: DataFrame): Unit =
       tfStore.appendTickAt(t, graft.operators.Retrieval.tfOf(docs))
@@ -513,25 +501,12 @@ object ArtifactStore {
       tombStore.current().fold(codes)(tb =>
         codes.join(tb.select("vec_id").distinct(), Seq("vec_id"), "left_anti"))
 
-    def retractVectors(vecIds: DataFrame): Long =
-      tombStore.appendTick(vecIds.select("vec_id"))
-
     def retractVectorsAt(t: Long, vecIds: DataFrame): Unit =
       tombStore.appendTickAt(t, vecIds.select("vec_id"))
 
     /** Encode + append one batch of admitted vectors under the frozen
-      * artifact tables; tick 1 is the bootstrap corpus.
-      * Auto-increments — for the bootstrap itself use [[bootstrap]]
-      * (r10 advice): a crashed-then-retried auto-increment bootstrap
-      * would append duplicate code rows as tick 2 with no error. */
-    def appendVectors(vectors: DataFrame, cents: DataFrame, rcb: DataFrame,
-                      m: Int = Pq.DefaultM,
-                      subDim: Int = Pq.DefaultSubDim): Long =
-      codeStore.appendTick(
-        graft.operators.Pq.residualCodes(vectors, cents, rcb, m, subDim))
-
-    /** Tick-keyed idempotent append — the [[Bm25IncrementalIndex]]
-      * replay form for the vector leg. */
+      * artifact tables at tick `t` (tick 1 is the bootstrap corpus) —
+      * the [[Bm25IncrementalIndex]] idempotent replay form. */
     def appendVectorsAt(t: Long, vectors: DataFrame, cents: DataFrame,
                         rcb: DataFrame, m: Int = Pq.DefaultM,
                         subDim: Int = Pq.DefaultSubDim): Unit =
@@ -617,9 +592,6 @@ object ArtifactStore {
     val censusStore: IngestStateStore =
       ingestState(spark, root, s"$name/gram_census")
 
-    def appendDocs(docs: DataFrame): Long =
-      censusStore.appendTick(graft.operators.SubstringDedup.censusOf(docs, k))
-
     def appendDocsAt(t: Long, docs: DataFrame): Unit =
       censusStore.appendTickAt(t,
         graft.operators.SubstringDedup.censusOf(docs, k))
@@ -643,20 +615,15 @@ object ArtifactStore {
       census().filter(col("exact_df_docs") >= 2).select("h")
 
     /** RETRACT docs from the maintained census (q123's store form) by
-      * appending their NEGATED increment — the census is the one state
-      * family an anti-join cannot retract from (no doc_id column), so
-      * the takedown leg subtracts instead: merged counts return to the
-      * re-mine-without-them values exactly ([[graft.operators
-      * .SubstringDedup.negCensusOf]]). Needs the docs' text; must not
-      * be called twice for the same doc (the caller's tombstone store
-      * is the existence check — [[IngestLoop.retractTick]]). */
-    def retractDocs(docs: DataFrame): Long =
-      censusStore.appendTick(
-        graft.operators.SubstringDedup.negCensusOf(docs, k))
-
-    /** Tick-keyed idempotent retraction — a replayed takedown
-      * overwrites its own negative increment instead of double-
-      * subtracting. */
+      * appending their NEGATED increment at tick `t` — the census is the
+      * one state family an anti-join cannot retract from (no doc_id
+      * column), so the takedown leg subtracts instead: merged counts
+      * return to the re-mine-without-them values exactly
+      * ([[graft.operators.SubstringDedup.negCensusOf]]). Needs the
+      * docs' text. Tick-keyed, so a replayed takedown overwrites its
+      * own negative increment; the caller's tombstone store keeps a
+      * doc from being retracted at two ticks
+      * ([[IngestLoop.retractTick]]). */
     def retractDocsAt(t: Long, docs: DataFrame): Unit =
       censusStore.appendTickAt(t,
         graft.operators.SubstringDedup.negCensusOf(docs, k))
@@ -707,10 +674,6 @@ object ArtifactStore {
     /** Retraction subtracts — tick-keyed like the census leg. */
     def retractDocsAt(t: Long, docs: DataFrame): Unit =
       mixStore.appendTickAt(t,
-        countsOf(docs).select(col("source"), (-col("n_docs")).as("n_docs")))
-
-    def retractDocs(docs: DataFrame): Long =
-      mixStore.appendTick(
         countsOf(docs).select(col("source"), (-col("n_docs")).as("n_docs")))
 
     /** The merged per-source counts over everything appended. */
@@ -1031,24 +994,25 @@ object ArtifactStore {
       (listNums("tick=", sucOnly = true) ++ listNums("gen=", sucOnly = true))
         .maxOption.getOrElse(0L)
 
-    private def currentPaths: Seq[String] = {
+    private def currentPaths: Seq[String] = pathsBelow(Long.MaxValue)
+
+    private def pathsBelow(maxT: Long): Seq[String] = {
       val gen = listNums("gen=", sucOnly = true).maxOption
       val ticks = listNums("tick=", sucOnly = true)
-        .filter(t => gen.forall(t > _))
+        .filter(t => t < maxT && gen.forall(t > _))
       gen.map(g => s"$base/gen=$g").toSeq ++ ticks.map(t => s"$base/tick=$t")
     }
 
     /** The accumulated state (None before the first tick). */
-    def current(): Option[DataFrame] = {
-      val paths = currentPaths
-      if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
-    }
+    def current(): Option[DataFrame] = currentBelow(Long.MaxValue)
 
-    /** Persist one tick's increment; returns the tick number. */
-    def appendTick(increment: DataFrame): Long = {
-      val t = maxTick + 1
-      increment.write.mode("overwrite").parquet(s"$base/tick=$t")
-      t
+    /** The accumulated state without the ticks at or above `t` — the
+      * read of a SPARSE store, whose tick numbers have gaps (the loop
+      * tombstones are keyed at takedown ticks), where [[currentUpTo]]'s
+      * coverage guard does not apply. */
+    def currentBelow(t: Long): Option[DataFrame] = {
+      val paths = pathsBelow(t)
+      if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
     }
 
     /** IDEMPOTENT per-tick write: the producer names the tick, so a

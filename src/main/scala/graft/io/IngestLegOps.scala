@@ -304,7 +304,7 @@ trait IngestLegOps { self: IngestLoop.type =>
     * already-ingested doc whose image renders a newly-held-out eval
     * image is caught with zero payload re-reads, exactly like the gram
     * channel. Returns the union of all channels' caught doc ids
-    * (severed), for [[retractMmTick]]. */
+    * (severed), for [[retractTick]]. */
   def evalUpdateMmTick(st: MmStores, leg: EvalLeg, addDocs: DataFrame,
                        withdrawIds: DataFrame,
                        updateId: Long = -1L): DataFrame = {

@@ -42,14 +42,22 @@ import graft.operators.Provenance.Evidence
   * ([[Fuzzy.lshPairsAgainstState]]); the spec pins equality on real
   * data.
   *
-  * One tick = agreement → judge → [[foldAdmitted]]. Every tick kind —
-  * ingest, budgeted, re-adjudication, re-gate, their multimodal forms
-  * and the streaming folds — first fixes its tick from the one store
-  * list every attached store shares ([[Legs]]`.tick`, a takedown
-  * included), then judges its cohort against the state as of the
-  * previous tick, then appends the admitted docs' increments through
+  * ONE [[Legs]] VALUE PER DEPLOYMENT: a deployment builds the legs it
+  * attaches beyond the dedup stores once and passes that same value as
+  * `legs` to every entry point — each tick kind (ingest, budgeted,
+  * re-adjudication, re-gate, their multimodal forms), the takedown
+  * ([[retractTick]]), maintenance ([[compactIfNeeded]], [[quiesce]])
+  * and the streaming folds. No entry point takes a leg of its own, so
+  * no step can run with a subset of the stores its neighbours advance.
+  * The text entry points take a [[StoreSet]], so one entry point serves
+  * a text and a multimodal loop.
+  *
+  * One tick = agreement → judge → [[foldAdmitted]]: fix the tick from
+  * the one store list every attached store shares ([[Legs]]`.tick`, a
+  * takedown included), judge the cohort against the state as of the
+  * previous tick, then append the admitted docs' increments through
   * the one fold-back. Compaction, quiesce and takedowns walk the one
-  * tombstone [[lineage]].
+  * tombstone lineage ([[Legs]]`.lineage`).
   */
 object IngestLoop extends IngestLegOps with IngestMmOps {
 
@@ -67,9 +75,38 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
   final case class Stores(hashes: ArtifactStore.IngestStateStore,
                           bands: ArtifactStore.IngestStateStore,
                           shingles: ArtifactStore.IngestStateStore,
-                          tombs: ArtifactStore.IngestStateStore) {
+                          tombs: ArtifactStore.IngestStateStore)
+      extends StoreSet {
+    def text: Stores = this
     private[io] def all: Seq[ArtifactStore.IngestStateStore] =
       Seq(hashes, bands, shingles)
+    private[io] def sigCols: Seq[(ArtifactStore.IngestStateStore, String)] =
+      Nil
+  }
+
+  /** The store bundle of a multimodal ingest loop: the text [[Stores]]
+    * (hashes/bands/shingles + the SHARED tombstone store — one takedown
+    * retracts a doc from every modality at once) plus per-modality
+    * 8-byte perceptual-signature stores (doc_id, sig). */
+  final case class MmStores(text: Stores,
+                            imgSigs: ArtifactStore.IngestStateStore,
+                            audSigs: ArtifactStore.IngestStateStore)
+      extends StoreSet {
+    private[io] def all: Seq[ArtifactStore.IngestStateStore] =
+      text.all ++ Seq(imgSigs, audSigs)
+    private[io] def sigCols: Seq[(ArtifactStore.IngestStateStore, String)] =
+      Seq(imgSigs -> "img_sig", audSigs -> "aud_sig")
+  }
+
+  /** The one store shape the shared entry points take: `text` (the
+    * dedup stores and the tombstones every read resolves through), the
+    * `all` core stores a tick advances, and each modality sig store
+    * paired with the mm quarantine column carrying the doc's STORED
+    * signature (`Nil` for a text loop). */
+  sealed trait StoreSet {
+    def text: Stores
+    private[io] def all: Seq[ArtifactStore.IngestStateStore]
+    private[io] def sigCols: Seq[(ArtifactStore.IngestStateStore, String)]
   }
 
   def stores(spark: SparkSession, root: String, name: String): Stores =
@@ -91,11 +128,11 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
   /** Seed the loop's state from the existing corpus — tick 1 in each
     * store, written IDEMPOTENTLY (`appendTickAt(1)`): a bootstrap that
     * crashed between the per-store writes is simply re-run and
-    * overwrites the same tick-1 directories — the auto-increment
-    * `appendTick` here would instead append a SECOND copy of the
-    * corpus state, whose duplicate rows break the ≤1-match state join
-    * and inflate fuzzy intersection counts (the review-found hazard).
-    * The only corpus-text scan the loop ever performs. */
+    * overwrites the same tick-1 directories — an auto-increment append
+    * here would instead add a SECOND copy of the corpus state, whose
+    * duplicate rows break the ≤1-match state join and inflate fuzzy
+    * intersection counts (the review-found hazard). The only
+    * corpus-text scan the loop ever performs. */
   def bootstrap(st: Stores, corpusDocs: DataFrame): Unit = {
     st.hashes.appendTickAt(1, Provenance.corpusDocHashes(corpusDocs))
     st.bands.appendTickAt(1, Fuzzy.corpusBandState(corpusDocs))
@@ -110,142 +147,78 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * band/shingle rows leave the fuzzy gate — so its duplicates stop
     * being rejected and the doc itself is re-admittable — and, when
     * the loop serves retrieval, its BM25 postings leave the index
-    * (df/dl/stats re-derive exactly; [[ArtifactStore
-    * .Bm25IncrementalIndex.retractDocs]]). Run at quiesce points only
-    * (no tick in flight), like compaction: a replayed crashed tick
-    * must see the same tombstone set its first run did.
+    * (df/dl/stats re-derive exactly). Run at quiesce points only (no
+    * tick in flight), like compaction: a replayed crashed tick must
+    * see the same tombstone set its first run did. Works on a text and
+    * a multimodal loop alike: the sig stores resolve through the shared
+    * tombstones and advance with the takedown tick.
+    *
+    * A TAKEDOWN IS A TICK, run with the deployment's one `legs` value:
+    * the subtraction legs (census, mix) land their negative increments
+    * as tick-keyed writes, so every attached store advances to the
+    * takedown tick `k` TOGETHER ([[Legs]]`.tick`) — stores with
+    * nothing to subtract get an empty tick. Otherwise the census/mix
+    * stores would sit one tick ahead, the next ingest tick would
+    * resolve to `k` and OVERWRITE the negative increment, silently
+    * losing the takedown. `docs` is the retracted documents' table
+    * (text and source): census and mix rows carry no doc_id to
+    * anti-join, so it is required exactly when a census (the census
+    * leg, else the curate leg's) or mix leg is attached.
+    *
+    * Replay rule, TOMBS FIRST: the takedown's ids are the ones not
+    * tombstoned by an EARLIER tick; they are tombstoned at `k` before
+    * anything else moves, the side effects that are not tick-keyed
+    * (model unlearn, the BM25/ANN tombstones, the export re-pack — each
+    * idempotent for one id set) run next, and the tick-keyed writes
+    * run last. A re-run after a crash therefore either redoes `k`
+    * (some store lags, the id set is the same) or finds every id
+    * tombstoned below the next tick (complete-replay no-op) — it can
+    * never subtract twice. Streaming deployments run takedowns at
+    * RESTART boundaries ([[rollover]]): batch-id-keyed fold ticks would
+    * otherwise collide with the takedown tick.
     *
     * Returns the tombstone tick number. The live, oracle-checked form
     * of the whole retraction loop is [[Provenance.q117RetractionTick]];
     * RetractionSpec pins this store form ≡ that live form. */
-  def retractTick(st: Stores, docIds: DataFrame,
-                  idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
-                  census: Option[(ArtifactStore.GramCensusIncrementalIndex,
-                                  DataFrame)] = None,
-                  ann: Option[ArtifactStore.IvfPqIncrementalIndex] = None,
-                  export: Option[ArtifactStore.PackedExportStore] = None,
-                  mix: Option[(ArtifactStore.MixIncrementalIndex, DataFrame)]
-                    = None,
-                  model: Option[ArtifactStore.ModelStore] = None,
-                  quar: Option[Quarantine] = None,
-                  replay: Option[ReplayLeg] = None,
-                  sem: Option[SemLeg] = None,
-                  eval: Option[EvalLeg] = None)
-      : Long =
-    retractTickImpl(st, st.all, docIds, idx, census, ann, export, mix,
-      model, quar, replay, sem, eval)
-
-  /** [[retractTick]] for a MULTIMODAL loop: the per-modality signature
-    * stores advance with the takedown tick too, so the next
-    * [[runMmTick]]'s five-store agreement cannot land ON the takedown
-    * tick and overwrite a subtraction leg. */
-  def retractMmTick(st: MmStores, docIds: DataFrame,
-                    idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
-                    census: Option[(ArtifactStore.GramCensusIncrementalIndex,
-                                    DataFrame)] = None,
-                    ann: Option[ArtifactStore.IvfPqIncrementalIndex] = None,
-                    export: Option[ArtifactStore.PackedExportStore] = None,
-                    mix: Option[(ArtifactStore.MixIncrementalIndex, DataFrame)]
-                      = None,
-                    model: Option[ArtifactStore.ModelStore] = None,
-                    quar: Option[Quarantine] = None,
-                    replay: Option[ReplayLeg] = None,
-                    sem: Option[SemLeg] = None,
-                    eval: Option[EvalLeg] = None)
-      : Long =
-    retractTickImpl(st.text, st.all, docIds, idx, census, ann, export, mix,
-      model, quar, replay, sem, eval)
-
-  /** A TAKEDOWN IS A TICK: the subtraction legs (census, mix) land
-    * their negative increments as tick-keyed writes, so every store
-    * ATTACHED to the deployment must advance to the takedown tick `k`
-    * TOGETHER ([[tickOf]]'s one store list) — stores with nothing to
-    * subtract get an empty tick. Without this, the census/mix stores
-    * would sit one tick ahead of the dedup stores, the next ingest tick's
-    * agreement would resolve to `k`, and its fold-back would OVERWRITE
-    * the negative increment — silently losing the takedown from the
-    * maintained census/mix while every verdict still looked right.
-    * The caller must pass the SAME legs its ticks run with (the
-    * agreement contract runTick already imposes); pass-less stores
-    * attached to the loop but omitted here would lag and force a
-    * spurious redo — visible, not silent. Crash discipline: all leg
-    * writes are keyed at `k` (a replayed partial takedown recomputes
-    * the same `k` from the agreement max and overwrites idempotently);
-    * the tombstone append runs LAST, and a takedown whose ids are all
-    * already tombstoned is a complete-replay no-op. Streaming
-    * deployments run takedowns at RESTART boundaries ([[rollover]]) —
-    * batch-id-keyed fold ticks would otherwise collide with the
-    * takedown tick. */
-  private def retractTickImpl(st: Stores,
-                              core: Seq[ArtifactStore.IngestStateStore],
-                              docIds: DataFrame,
-                              idx: Option[ArtifactStore.Bm25IncrementalIndex],
-                              census: Option[
-                                (ArtifactStore.GramCensusIncrementalIndex,
-                                 DataFrame)],
-                              ann: Option[ArtifactStore.IvfPqIncrementalIndex],
-                              export: Option[ArtifactStore.PackedExportStore],
-                              mix: Option[(ArtifactStore.MixIncrementalIndex,
-                                           DataFrame)],
-                              model: Option[ArtifactStore.ModelStore],
-                              quar: Option[Quarantine],
-                              replay: Option[ReplayLeg],
-                              sem: Option[SemLeg],
-                              eval: Option[EvalLeg])
-      : Long = {
-    // Docs already tombstoned are dropped BEFORE any leg runs: the
-    // anti-join legs (dedup stores, BM25 postings, IVF-PQ codes) are
-    // naturally idempotent under a repeated takedown, but the census
-    // leg SUBTRACTS (q123) — a double retraction would subtract twice.
-    // The tombstone store is the existence check for all of them.
+  def retractTick(st: StoreSet, docIds: DataFrame,
+                  docs: Option[DataFrame] = None,
+                  legs: Legs = Legs()): Long = {
+    require(docs.isDefined == (legs.rawCensus.isDefined || legs.mix.isDefined),
+      "retractTick takes the retracted documents (`docs`) exactly when " +
+        "a census or mix leg is attached: those legs subtract by text " +
+        "and source, not by doc_id")
+    val tombs = st.text.tombs
+    val k = legs.tick(st.all)
     val ids = docIds.select("doc_id")
-    val fresh = st.tombs.current()
+    val fresh = tombs.currentBelow(k)
       .fold(ids)(tb =>
         ids.join(tb.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
       .localCheckpoint()
-    if (fresh.isEmpty) return st.tombs.maxTick // complete-replay no-op
-    // the semantic leg's sig rows and the decontam leg's docGram rows
-    // carry doc_id, so the shared tombstone anti-join IS their
-    // retraction (the bands/shingles algebra) — they only need the
-    // empty takedown tick for the agreement
-    val dataStores = lineage(core, sem, eval, quar, replay)
-    val k = tickOf(dataStores, idx, census.map(_._1), ann, mix.map(_._1),
-      export)
+    if (fresh.isEmpty) return tombs.maxTick // complete-replay no-op
+    tombs.appendTickAt(k, fresh)
+    // MODEL leg (q128): unlearn — retrain from the persisted reservoir
+    // when the takedown reaches the serving model's training sample (a
+    // generation swap; a second call with the same ids finds none of
+    // them in the reservoir). The BM25 / ANN tombstones leave every
+    // postings / codes read, and the EXPORT leg (q125) re-packs the
+    // affected epochs — both idempotent.
+    legs.model.foreach(_.unlearn(fresh))
+    legs.idx.foreach(_.retractDocsAt(k, fresh))
+    legs.ann.foreach(_.idx.retractVectorsAt(k,
+      fresh.select(col("doc_id").as("vec_id"))))
+    legs.export.foreach(_.store.retractDocs(fresh))
+    // the tick-keyed writes, last. The sem sig rows and the decontam
+    // docGrams carry doc_id, so the shared tombstone anti-join IS their
+    // retraction — every lineage store only needs the empty tick.
     def emptyTick(s: ArtifactStore.IngestStateStore): Unit =
       s.appendTickAt(k, s.current().get.limit(0))
-    dataStores.foreach(emptyTick)
-    idx.foreach { i => i.retractDocs(fresh); emptyTick(i.tfStore) }
-    // census retraction needs the docs' TEXT (census rows carry no
-    // doc_id to anti-join) — the caller passes the retracted documents
-    census.foreach { case (cIdx, docs) =>
-      cIdx.retractDocsAt(k, docs.join(fresh, Seq("doc_id"), "left_semi"))
-    }
-    // ANN leg (the q124 serving index): a takedown's code rows leave
-    // every codes() read via the index's own vec_id tombstones —
-    // idempotent anti-join, folded out at the index's next compaction
-    // or baked into the next recluster's re-encode
-    ann.foreach { a =>
-      a.retractVectors(fresh.select(col("doc_id").as("vec_id")))
-      emptyTick(a.codeStore)
-    }
-    // EXPORT leg (q125): re-pack the affected epochs from stored counts
-    // so the physical training shards stop carrying the retracted docs
-    // — naturally idempotent (a repeated repack reproduces identical
-    // rows), still behind the tombstone existence check like every leg
-    export.foreach { e => e.retractDocs(fresh); e.appendEmptyEpochAt(k) }
-    // MIX leg (q127's state): subtraction, like the census — needs the
-    // docs' source column, so the caller passes the document table
-    mix.foreach { case (mIdx, docs) =>
-      mIdx.retractDocsAt(k, docs.join(fresh, Seq("doc_id"), "left_semi"))
-    }
-    // MODEL leg (q128): unlearn — if the takedown reaches the serving
-    // model's training sample, retrain from the persisted reservoir
-    // (zero text reads); membership decision + generation swap live in
-    // the store (not tick-keyed: generations). Behind the tombstone
-    // check like the subtraction legs: a replayed takedown must not
-    // re-shrink the reservoir.
-    model.foreach(_.unlearn(fresh))
-    st.tombs.appendTick(fresh)
+    (legs.lineage(st.all) ++ legs.idx.map(_.tfStore) ++
+      legs.ann.map(_.idx.codeStore)).foreach(emptyTick)
+    val gone = docs.map(_.join(fresh, Seq("doc_id"), "left_semi"))
+    legs.rawCensus.foreach(_.retractDocsAt(k, gone.get))
+    legs.mix.foreach(_.retractDocsAt(k, gone.get))
+    legs.export.foreach(_.store.appendEmptyEpochAt(k))
+    k
   }
 
   /** Roll the loop into a FRESH store generation at a stream restart
@@ -397,16 +370,11 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * incomplete tick (the max) must be REDONE — judged against
     * `currentUpTo(t−1)` and rewritten idempotently, so a partial fold
     * can neither self-dup the replayed batch nor leave a store behind
-    * (IngestLoopSpec pins the replay).
-    *
-    * When a BM25 index rides the tick ([[runTickWithRetrieval]]) its
-    * tf store participates in the agreement check: a
-    * crash AFTER the shingles append but BEFORE the postings append
-    * would otherwise leave the three dedup stores agreeing at tick T —
-    * the replay would compute T+1, judge the replayed batch against
-    * its own tick-T admissions (all dup_exact), and the index would
-    * permanently miss tick T's postings. Including the tf store makes
-    * the lag visible and tick T is redone across all FOUR stores. */
+    * (IngestLoopSpec pins the replay). Every attached consumer store
+    * takes part: a crash AFTER the shingles append but BEFORE the
+    * postings append would otherwise leave the three dedup stores
+    * agreeing at tick T, the replay would judge the batch against its
+    * own tick-T admissions, and the index would miss tick T for good. */
   private def nextTickOf(done: Seq[Long]): Long = {
     require(done.min >= 1,
       "ingest loop not bootstrapped (every store — including the BM25 " +
@@ -415,41 +383,12 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     if (done.distinct.size == 1) done.head + 1 else done.max
   }
 
-  /** THE TICK AGREEMENT — the one list of stores a tick advances
-    * together: the `lineage` stores plus every attached consumer index
-    * (BM25 postings, gram census, ANN codes, domain mix, export).
-    * [[nextTickOf]] over their maxTicks fixes the tick. */
-  private def tickOf(lineage: Seq[ArtifactStore.IngestStateStore],
-                     idx: Option[ArtifactStore.Bm25IncrementalIndex],
-                     census: Option[ArtifactStore.GramCensusIncrementalIndex],
-                     ann: Option[ArtifactStore.IvfPqIncrementalIndex],
-                     mix: Option[ArtifactStore.MixIncrementalIndex],
-                     export: Option[ArtifactStore.PackedExportStore]): Long =
-    nextTickOf((lineage ++ idx.map(_.tfStore) ++ census.map(_.censusStore)
-      ++ ann.map(_.codeStore) ++ mix.map(_.mixStore)).map(_.maxTick)
-      ++ export.map(_.maxTick))
-
-  /** Every store in the CORPUS tombstone lineage: the `core` dedup
-    * stores plus the attached legs' doc-keyed stores (sem sigs, eval
-    * docGrams, quarantine rows/resolvedIds, replay feats). All of them
-    * read through [[resolved]], so a takedown tick advances every one,
-    * and a compaction that resets the tombstones must fold every one in
-    * the same pass — folding a subset and resetting would resurface a
-    * retracted doc's rows (and a re-adjudication could then RE-ADMIT a
-    * doc the takedown named). */
-  private def lineage(core: Seq[ArtifactStore.IngestStateStore],
-                      sem: Option[SemLeg], eval: Option[EvalLeg],
-                      quar: Option[Quarantine], replay: Option[ReplayLeg])
-      : Seq[ArtifactStore.IngestStateStore] =
-    core ++ sem.map(_.sigs) ++ eval.map(_.docGrams) ++
-      quar.toSeq.flatMap(q => Seq(q.rows, q.resolvedIds)) ++
-      replay.map(_.feats)
-
-  /** The optional legs one tick runs with — every store a deployment
-    * attaches beyond the dedup stores. Every tick entry point builds
-    * one before reading or writing any store, so the curate rule below
-    * refuses a bad configuration before anything moves. */
-  private[graft] final case class Legs(
+  /** The legs a deployment attaches beyond the dedup stores — built
+    * ONCE and passed as the same value to every tick, takedown,
+    * compaction and quiesce entry point. Every entry point checks its
+    * legs before reading or writing any store, so a configuration it
+    * would mishandle is refused before anything moves. */
+  final case class Legs(
       idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
       census: Option[ArtifactStore.GramCensusIncrementalIndex] = None,
       ann: Option[AnnLeg] = None,
@@ -459,8 +398,9 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       replay: Option[ReplayLeg] = None,
       sem: Option[SemLeg] = None,
       eval: Option[EvalLeg] = None,
-      curate: Option[CurateLeg] = None) {
-    // a takedown subtracts from the census LEG only: a curate leg with a
+      curate: Option[CurateLeg] = None,
+      model: Option[ArtifactStore.ModelStore] = None) {
+    // a takedown subtracts from the raw census only: a curate leg with a
     // census of its own would lag the takedown tick, and the next tick
     // would redo that tick, overwriting the takedown's negative census
     // and mix increments
@@ -468,14 +408,75 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       "a curate leg's census must be the tick's census leg")
 
     /** The census fed the RAW admitted text: the census leg, else the
-      * curate leg's (a tick kind without a census leg folds it). */
-    def rawCensus: Option[ArtifactStore.GramCensusIncrementalIndex] =
+      * curate leg's. */
+    private[io] def rawCensus
+        : Option[ArtifactStore.GramCensusIncrementalIndex] =
       census.orElse(curate.map(_.census))
 
-    /** The tick a run over `core` plus these legs produces. */
-    def tick(core: Seq[ArtifactStore.IngestStateStore]): Long =
-      tickOf(lineage(core, sem, eval, quar, replay), idx, rawCensus,
-        ann.map(_.idx), mix, export.map(_.store))
+    /** Every store in the CORPUS tombstone lineage: the `core` dedup
+      * stores plus the legs' doc-keyed stores (sem sigs, eval docGrams,
+      * quarantine rows/resolvedIds, replay feats). All of them read
+      * through [[resolved]], so a takedown tick advances every one, and
+      * a compaction that resets the tombstones must fold every one in
+      * the same pass — folding a subset and resetting would resurface a
+      * retracted doc's rows (and a re-adjudication could then RE-ADMIT
+      * a doc the takedown named). */
+    private[io] def lineage(core: Seq[ArtifactStore.IngestStateStore])
+        : Seq[ArtifactStore.IngestStateStore] =
+      core ++ sem.map(_.sigs) ++ eval.map(_.docGrams) ++
+        quar.toSeq.flatMap(q => Seq(q.rows, q.resolvedIds)) ++
+        replay.map(_.feats)
+
+    /** The consumer indexes' tick-keyed stores (BM25 postings, raw
+      * census, ANN codes, domain mix), each with its own compaction —
+      * every index folds its OWN retraction lineage (BM25 and ANN their
+      * private tombstones; census and mix subtract). */
+    private def consumers
+        : Seq[(ArtifactStore.IngestStateStore, () => Int)] =
+      idx.map(i => i.tfStore -> (() => i.compact())).toSeq ++
+        rawCensus.map(c => c.censusStore -> (() => c.compact())) ++
+        ann.map(a => a.idx.codeStore -> (() => a.idx.compact())) ++
+        mix.map(m => m.mixStore -> (() => m.compact()))
+
+    /** THE TICK AGREEMENT — the tick a run over `core` plus these legs
+      * produces: [[nextTickOf]] over the lineage, every consumer store
+      * and the export. */
+    private[io] def tick(core: Seq[ArtifactStore.IngestStateStore]): Long =
+      nextTickOf((lineage(core) ++ consumers.map(_._1)).map(_.maxTick) ++
+        export.map(_.store.maxTick))
+
+    /** Compact each consumer index whose store crossed `maxDataFiles`. */
+    private[io] def compactConsumers(maxDataFiles: Long): Unit =
+      consumers.filter(_._1.dataFileCount > maxDataFiles).foreach(_._2())
+
+    /** gc every attached store — the lineage over `core` and `tombs`,
+      * the eval-side stores, the consumer indexes (BM25 with its
+      * tombstones), the ANN index, the export and the model. Returns
+      * the bytes freed. */
+    private[io] def gc(core: Seq[ArtifactStore.IngestStateStore],
+                       tombs: ArtifactStore.IngestStateStore): Long =
+      (lineage(core :+ tombs) ++
+        eval.toSeq.flatMap(l => Seq(l.grams, l.bands, l.shingles, l.tombs) ++
+          l.imgSigs ++ l.audSigs) ++
+        idx.toSeq.flatMap(i => Seq(i.tfStore, i.tombStore)) ++
+        rawCensus.map(_.censusStore) ++ mix.map(_.mixStore))
+        .map(_.gc()).sum +
+        ann.map(_.idx.gc()).getOrElse(0L) +
+        export.map(_.store.gc()).getOrElse(0L) +
+        model.map(_.gc()).getOrElse(0L)
+  }
+
+  /** `legs` with the quarantine (and replay leg) of `req` — what a
+    * re-judging tick requires — attached; a `legs` already carrying a
+    * different one is refused: the tick would advance one and re-judge
+    * the other. */
+  private[io] def withRequired(legs: Legs, req: Legs): Legs = {
+    require(legs.quar.forall(q => req.quar.forall(_ == q)),
+      "legs.quar must be the quarantine this tick re-judges")
+    require(legs.replay.forall(r => req.replay.forall(_ == r)),
+      "legs.replay must be the replay leg this tick re-gates")
+    legs.copy(quar = req.quar.orElse(legs.quar),
+      replay = req.replay.orElse(legs.replay))
   }
 
   /** THE FOLD-BACK — every tick kind's admitted docs append their
@@ -536,9 +537,9 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * gate (`lq` non-null — no evidence of ANY dup class) with its gate
     * features from `texts` and its tick-time verdict, so a later model
     * re-gates it with zero text reads. */
-  private[io] def appendReplay(replay: Option[ReplayLeg], t: Long,
+  private[io] def appendReplay(legs: Legs, t: Long,
                                v: DataFrame, texts: DataFrame): Unit =
-    replay.foreach(_.feats.appendTickAt(t, v.filter(col("lq").isNotNull)
+    legs.replay.foreach(_.feats.appendTickAt(t, v.filter(col("lq").isNotNull)
       .select(col("doc_id"), col("source"), col("lq"))
       .join(QualityModel.gateFeatures(texts), "doc_id")
       .withColumn("tick", lit(t))
@@ -561,9 +562,9 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
 
   /** The text the serving consumers receive: the curated (doc_id,
     * source, text) rows with a curate leg, `adm` itself without. */
-  private def servedOf(curate: Option[CurateLeg], t: Long, adm: DataFrame,
+  private def servedOf(legs: Legs, t: Long, adm: DataFrame,
                        batch: DataFrame): DataFrame =
-    curate.map(curatedRows(_, t, adm, batch)
+    legs.curate.map(curatedRows(_, t, adm, batch)
       .select("doc_id", "source", "text")).getOrElse(adm)
 
   /** The q137 rewrite audit per source: what was stripped/redacted, and
@@ -582,8 +583,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * [[Provenance.q130BudgetedAdmission]]): per-source token budgets
     * derived from the MAINTAINED mixture counts ([[ArtifactStore
     * .MixIncrementalIndex.mix]] — zero recounts; bootstrap the mix
-    * store from the corpus and usually ALSO pass it as [[runFullTick]]'s
-    * `mix` fold leg so the budgets track admissions and takedowns).
+    * store from the corpus and usually ALSO attach it as the [[Legs]]'
+    * `mix` leg so the budgets track admissions and takedowns).
     * Within each source, the tick's novel docs admit in quality-rank
     * order while the running token sum stays inside
     * `budgetFrac × novel_tokens × source_share` — only the under-budget
@@ -753,12 +754,11 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * and the quarantine keep the RAW text's evidence (a later raw copy
     * still rejects; takedowns and re-adjudication see raw), and the
     * census leg keeps folding RAW text (it is the strip-rule source).
-    * `census` must be the SAME index as the tick's census leg when the
-    * tick kind takes one (every entry point refuses another: a
-    * takedown subtracts from the census leg only, so a second census
-    * would lag the takedown tick); a tick kind without a census leg
-    * ([[runTick]]) folds the RAW increment into it, and its takedown
-    * passes it as [[retractTick]]'s census leg. CurateTickSpec pins
+    * `census` must be the SAME index as the [[Legs]]' census leg when
+    * one is attached ([[Legs]] refuses another: a takedown subtracts
+    * from one raw census only, so a second census would lag the
+    * takedown tick); without a census leg the RAW increment folds into
+    * it, and [[retractTick]] subtracts from it. CurateTickSpec pins
     * store report ≡ live q137, the physical export slices carrying the
     * curated hashes, and raw dedup behavior unchanged by the
     * transform. */
@@ -877,17 +877,18 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * run of THIS tick is invisible), and all fold-back writes are
     * tick-keyed overwrites — so re-running a crashed tick reproduces
     * identical verdicts and completes the missing store writes instead
-    * of judging admitted docs against their own half-folded hashes. */
+    * of judging admitted docs against their own half-folded hashes.
+    *
+    * The admitted set is derived once from the checkpointed verdict
+    * frame and feeds every store the `legs` attach — BM25 postings,
+    * the gram census, the served IVF-PQ codes, the packed export epoch
+    * and the domain mix — so no store can disagree about what was
+    * ingested, and every one of them takes part in the tick agreement
+    * (IngestLoopSpec pins the consumer legs and the replay). */
   def runTick(st: Stores, batchDocs: DataFrame, w: Seq[Double],
               threshold: Double = 0.2, lowFrac: Double = 0.25,
-              quar: Option[Quarantine] = None,
-              replay: Option[ReplayLeg] = None,
-              sem: Option[SemLeg] = None,
-              eval: Option[EvalLeg] = None,
-              curate: Option[CurateLeg] = None): DataFrame =
-    runTickImpl(st, batchDocs, w, threshold, lowFrac, None,
-      Legs(quar = quar, replay = replay, sem = sem, eval = eval,
-        curate = curate))
+              legs: Legs = Legs()): DataFrame =
+    runTickImpl(st, batchDocs, w, threshold, lowFrac, None, legs)
 
   private def runTickImpl(st: Stores, batchDocs: DataFrame, w: Seq[Double],
                           threshold: Double, lowFrac: Double,
@@ -943,7 +944,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       qs.rows.appendTickAt(t, rej)
       qs.resolvedIds.appendTickAt(t, admIds.limit(0))
     }
-    appendReplay(legs.replay, t, v, batchDocs)
+    appendReplay(legs, t, v, batchDocs)
     // with a curate leg the report carries the q137 rewrite audit
     curRows match {
       case None => report
@@ -962,9 +963,9 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
 
   /** File-count-triggered compaction (the production trigger the r9
     * verdict names): when any store's backing data-file count crosses
-    * `maxDataFiles`, fold every store of the tombstone [[lineage]]
-    * (the three dedup stores and the attached legs' stores) into its
-    * current generation —
+    * `maxDataFiles`, fold every store of the tombstone lineage
+    * ([[Legs]]`.lineage` over `st.all` — on a multimodal loop the sig
+    * stores too) into its current generation —
     * applying the tombstone anti-join while folding, so retracted docs'
     * rows physically leave the state. The tombstone store is cleared
     * only once every data store folded (a skipped single-gen fold keeps
@@ -973,27 +974,14 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * Returns whether compaction ran. Run at quiesce points only (see
     * `IngestStateStore.currentUpTo`). The eval-SIDE stores fold via
     * compactEval — their tombstones are eval ids, a separate lineage. */
-  def compactIfNeeded(st: Stores, maxDataFiles: Long = 64,
-                      sem: Option[SemLeg] = None,
-                      eval: Option[EvalLeg] = None,
-                      quar: Option[Quarantine] = None,
-                      replay: Option[ReplayLeg] = None): Boolean =
-    compactLineage(st, st.all, maxDataFiles, sem, eval, quar, replay)
-
-  /** [[compactIfNeeded]] over `core` plus the legs' stores, resolving
-    * through `st`'s tombstones. */
-  private[io] def compactLineage(st: Stores,
-                                 core: Seq[ArtifactStore.IngestStateStore],
-                                 maxDataFiles: Long, sem: Option[SemLeg],
-                                 eval: Option[EvalLeg],
-                                 quar: Option[Quarantine],
-                                 replay: Option[ReplayLeg]): Boolean = {
-    val all = lineage(core, sem, eval, quar, replay)
+  def compactIfNeeded(st: StoreSet, maxDataFiles: Long = 64,
+                      legs: Legs = Legs()): Boolean = {
+    val all = legs.lineage(st.all)
     val need = all.exists(_.dataFileCount > maxDataFiles)
     if (need) {
-      val folded = all.map(_.compactWith(df => resolved(st, df)))
-      if (st.tombs.current().isDefined && folded.forall(_ > 0))
-        st.tombs.reset()
+      val folded = all.map(_.compactWith(df => resolved(st.text, df)))
+      if (st.text.tombs.current().isDefined && folded.forall(_ > 0))
+        st.text.tombs.reset()
     }
     need
   }
@@ -1014,31 +1002,31 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
 
   /** THE QUIESCE COMPOSE-POINT (r14 verdict item 3): one call a
     * deployment makes between ticks that runs the whole maintenance
-    * bundle, so drift detection is STRUCTURAL — attached to the
-    * quiesce point itself, not to the caller remembering each canary
-    * (the same move [[ArtifactStore.PackedExportStore.seal]] made for
-    * certification: a deployment that grows 2×+ past its bootstrap
-    * sizing resizes because it quiesces, not because a test or an
-    * operator wired the canary). Runs, in order:
+    * bundle over its one `legs` value, so drift detection is STRUCTURAL
+    * — attached to the quiesce point itself, not to the caller
+    * remembering each canary (the same move [[ArtifactStore
+    * .PackedExportStore.seal]] made for certification: a deployment
+    * that grows 2×+ past its bootstrap sizing resizes because it
+    * quiesces, not because a test or an operator wired the canary).
+    * Works on a text and a multimodal loop alike: the image/audio sig
+    * stores resolve through the SHARED text tombstones, so they fold in
+    * the same pass before those tombstones reset, and gc covers them
+    * too. Runs, in order:
     *
     *  1. [[compactIfNeeded]] — loop-lineage store folds + the shared
     *     tombstone reset (an attached sem leg's sigs, an eval leg's
     *     docGrams, the quarantine stores, and a replay leg's feats
     *     fold in this pass — they all resolve through the SHARED
-    *     corpus tombstones, so a deployment that re-adjudicates or
-    *     re-gates MUST attach its quarantine/replay here or a
-    *     taken-down doc's rows resurface after the reset);
+    *     corpus tombstones, which is why the deployment's one `legs`
+    *     value matters: a leg left out here would resurface a
+    *     taken-down doc's rows after the reset);
     *  2. [[IngestLegOps.compactEvalIfNeeded]] when an eval leg is
     *     attached — the EVAL-side lineage (grams/bands/shingles +
     *     modality sigs, withdrawals via the eval tombstones) folds
     *     under the same file-count trigger — and so do the CONSUMER
-    *     indexes: an
-    *     attached BM25 posting index / gram census / domain mix / ANN
-    *     code store compacts under the trigger via its own
-    *     `compact()` (each carries its OWN retraction lineage — BM25
-    *     and ANN fold their private tombstones, census/mix are
-    *     subtraction-based), so a full runFullTick-shaped deployment
-    *     gets every maintained store's fold from the one bundle call;
+    *     indexes ([[Legs]]`.compactConsumers`: BM25 postings, raw
+    *     census, domain mix, ANN codes, each through its own
+    *     `compact()` and its own retraction lineage);
     *  3. [[semCanaryTick]] when a sem leg is attached — the ~1 s
     *     occupancy census (q141), resizing into `semNextName`'s
     *     generation at the occupancy width when drifted;
@@ -1049,17 +1037,12 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     *     costs a bounded retrain, so a deployment states the tick the
     *     rebuilt generation re-enters the agreement at);
     *  5. gc (opt-out via `gcStores = false`) — every attached store's
-    *     `gc()`: the loop stores, the sem/eval legs' stores, the
-    *     quarantine/replay stores, the consumer indexes (BM25 /
-    *     census / mix), the ANN index, the model store, and the
-    *     export store shed crash leftovers AND
-    *     whatever steps 1–4 just shadowed (folded generations,
-    *     superseded recluster generations, stale revisions). Runs
-    *     after the canaries so a bundle-triggered resize/recluster is
-    *     collected in the same quiesce, and before the seal so the
-    *     certificate still lands LAST (r15 verdict item 3: collection
-    *     was caller-discipline, the exact argument that put the
-    *     canaries in the bundle);
+    *     `gc()` ([[Legs]]`.gc`): whatever steps 1–4 just shadowed
+    *     (folded generations, superseded recluster generations, stale
+    *     revisions) and crash leftovers. Runs after the canaries so a
+    *     bundle-triggered resize/recluster is collected in the same
+    *     quiesce, and before the seal so the certificate still lands
+    *     LAST;
     *  6. [[sealExport]] when an export leg is attached — LAST, so the
     *     recorded certificate covers whatever state the bundle left.
     *     The seal's liveness input is the tombstone set CAPTURED AT
@@ -1071,148 +1054,47 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     *
     * Returns the serving legs; the deployment keeps what comes back
     * (the [[semCanaryTick]] contract, now bundle-wide). */
-  def quiesce(st: Stores, spark: SparkSession, root: String,
-              sem: Option[SemLeg] = None,
+  def quiesce(st: StoreSet, spark: SparkSession, root: String,
+              legs: Legs = Legs(),
               semNextName: Option[String] = None,
-              ann: Option[AnnLeg] = None,
               annBaseTick: Option[Long] = None,
               annMinGainHits: Long = 1L,
-              eval: Option[EvalLeg] = None,
-              export: Option[ExportLeg] = None,
               docSources: Option[DataFrame] = None,
-              quar: Option[Quarantine] = None,
-              replay: Option[ReplayLeg] = None,
-              idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
-              census: Option[ArtifactStore.GramCensusIncrementalIndex]
-                = None,
-              mix: Option[ArtifactStore.MixIncrementalIndex] = None,
-              model: Option[ArtifactStore.ModelStore] = None,
               maxDataFiles: Long = 64,
               minFillMicro: Long =
                 graft.operators.Packing.DefaultMinFillMicro,
               mixTolMicros: Long =
                 graft.operators.Packing.DefaultMixTolMicros,
               gcStores: Boolean = true)
-      : QuiesceResult =
-    quiesceImpl("quiesce", st, st.all, spark, root, sem, semNextName,
-      ann, annBaseTick, annMinGainHits, eval, export, docSources, quar,
-      replay, idx, census, mix, model, maxDataFiles, minFillMicro,
-      mixTolMicros, gcStores)
-
-  /** [[quiesce]] for a MULTIMODAL deployment, on the same kernel:
-    * the core stores are all five — the image/audio sig
-    * stores resolve through the SHARED text tombstones, so they must
-    * fold in the same pass before those tombstones reset (folding only
-    * the text stores and resetting would resurface retracted mm rows
-    * at the next flag read) — and the gc step covers the sig stores
-    * too. Everything else runs on the `st.text` lineage, exactly as
-    * [[sealExport]]'s mm contract states. */
-  def quiesceMm(st: MmStores, spark: SparkSession, root: String,
-                sem: Option[SemLeg] = None,
-                semNextName: Option[String] = None,
-                ann: Option[AnnLeg] = None,
-                annBaseTick: Option[Long] = None,
-                annMinGainHits: Long = 1L,
-                eval: Option[EvalLeg] = None,
-                export: Option[ExportLeg] = None,
-                docSources: Option[DataFrame] = None,
-                quar: Option[Quarantine] = None,
-                replay: Option[ReplayLeg] = None,
-                idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
-                census: Option[ArtifactStore.GramCensusIncrementalIndex]
-                  = None,
-                mix: Option[ArtifactStore.MixIncrementalIndex] = None,
-                model: Option[ArtifactStore.ModelStore] = None,
-                maxDataFiles: Long = 64,
-                minFillMicro: Long =
-                  graft.operators.Packing.DefaultMinFillMicro,
-                mixTolMicros: Long =
-                  graft.operators.Packing.DefaultMixTolMicros,
-                gcStores: Boolean = true)
-      : QuiesceResult =
-    quiesceImpl("quiesceMm", st.text, st.all, spark, root, sem, semNextName,
-      ann, annBaseTick, annMinGainHits, eval, export, docSources, quar,
-      replay, idx, census, mix, model, maxDataFiles, minFillMicro,
-      mixTolMicros, gcStores)
-
-  /** The bundle kernel both compose points delegate to: `text` is the
-    * lineage the canaries/seal run on, `core` the variant's dedup
-    * stores (compacted and collected with the legs' [[lineage]] and the
-    * tombstone store — its folded generations collect like any
-    * other's). Step order and the entry-time tombstone capture are
-    * documented on [[quiesce]]. */
-  private def quiesceImpl(what: String, text: Stores,
-                          core: Seq[ArtifactStore.IngestStateStore],
-                          spark: SparkSession, root: String,
-                          sem: Option[SemLeg],
-                          semNextName: Option[String],
-                          ann: Option[AnnLeg],
-                          annBaseTick: Option[Long],
-                          annMinGainHits: Long,
-                          eval: Option[EvalLeg],
-                          export: Option[ExportLeg],
-                          docSources: Option[DataFrame],
-                          quar: Option[Quarantine],
-                          replay: Option[ReplayLeg],
-                          idx: Option[ArtifactStore.Bm25IncrementalIndex],
-                          census: Option[
-                            ArtifactStore.GramCensusIncrementalIndex],
-                          mix: Option[ArtifactStore.MixIncrementalIndex],
-                          model: Option[ArtifactStore.ModelStore],
-                          maxDataFiles: Long,
-                          minFillMicro: Long,
-                          mixTolMicros: Long,
-                          gcStores: Boolean): QuiesceResult = {
-    require(sem.isEmpty || semNextName.isDefined,
-      s"$what with a sem leg needs semNextName — the fresh generation " +
+      : QuiesceResult = {
+    require(legs.sem.isEmpty || semNextName.isDefined,
+      "quiesce with a sem leg needs semNextName — the fresh generation " +
         "name a canary-triggered resize lands under (resizeSemLeg " +
         "refuses a committed name, so pass a new one per resize)")
-    require(export.isEmpty || docSources.isDefined,
-      s"$what with an export leg needs docSources — the (doc_id, " +
+    require(legs.export.isEmpty || docSources.isDefined,
+      "quiesce with an export leg needs docSources — the (doc_id, " +
         "source) relation the seal's mix certificate reads")
     // the seal's liveness input, captured BEFORE the fold can reset
     // the shared tombstone store (r15 advice — see step 6 above);
     // localCheckpoint: the frame must survive the reset's file deletes
-    val preTombs = export.flatMap(_ => text.tombs.current()
+    val preTombs = legs.export.flatMap(_ => st.text.tombs.current()
       .map(_.select("doc_id").localCheckpoint()))
-    val compacted =
-      compactLineage(text, core, maxDataFiles, sem, eval, quar, replay)
-    val evalCompacted = eval.exists(l =>
+    val compacted = compactIfNeeded(st, maxDataFiles, legs)
+    val evalCompacted = legs.eval.exists(l =>
       compactEvalIfNeeded(l, maxDataFiles))
-    // consumer-index folds under the same trigger (step 2 scaladoc):
-    // each index's own compact() applies its own retraction lineage
-    idx.filter(_.tfStore.dataFileCount > maxDataFiles)
-      .foreach(_.compact())
-    census.filter(_.censusStore.dataFileCount > maxDataFiles)
-      .foreach(_.compact())
-    mix.filter(_.mixStore.dataFileCount > maxDataFiles)
-      .foreach(_.compact())
-    ann.filter(_.idx.codeStore.dataFileCount > maxDataFiles)
-      .foreach(_.idx.compact())
-    val semServed = sem.map(l =>
-      semCanaryTick(text, l, spark, root, semNextName.get))
-    val semResized = sem.zip(semServed).exists { case (a, b) => a ne b }
-    val annServed = (ann, annBaseTick) match {
+    legs.compactConsumers(maxDataFiles)
+    val semServed = legs.sem.map(l =>
+      semCanaryTick(st.text, l, spark, root, semNextName.get))
+    val semResized = legs.sem.zip(semServed).exists { case (a, b) => a ne b }
+    val annServed = (legs.ann, annBaseTick) match {
       case (Some(l), Some(bt)) =>
         Some(annCanaryTick(l, bt, minGainHits = annMinGainHits))
-      case _ => ann
+      case _ => legs.ann
     }
-    val annReclustered = ann.zip(annServed).exists { case (a, b) => a ne b }
-    val gcBytes =
-      if (!gcStores) 0L
-      else {
-        val stateStores =
-          lineage(core :+ text.tombs, sem, eval, quar, replay) ++
-          eval.toSeq.flatMap(l => Seq(l.grams, l.bands, l.shingles,
-            l.tombs) ++ l.imgSigs ++ l.audSigs) ++
-          idx.toSeq.flatMap(i => Seq(i.tfStore, i.tombStore)) ++
-          census.map(_.censusStore) ++ mix.map(_.mixStore)
-        stateStores.map(_.gc()).sum +
-          ann.map(_.idx.gc()).getOrElse(0L) +
-          export.map(_.store.gc()).getOrElse(0L) +
-          model.map(_.gc()).getOrElse(0L)
-      }
-    val cert = export.map { leg =>
+    val annReclustered =
+      legs.ann.zip(annServed).exists { case (a, b) => a ne b }
+    val gcBytes = if (gcStores) legs.gc(st.all, st.text.tombs) else 0L
+    val cert = legs.export.map { leg =>
       val tombs = preTombs.getOrElse(
         docSources.get.select("doc_id").limit(0))
       leg.store.seal(docSources.get, tombs, minFillMicro, mixTolMicros)
@@ -1220,67 +1102,6 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     QuiesceResult(compacted, semServed, semResized,
       annServed, annReclustered, cert, evalCompacted, gcBytes)
   }
-
-  /** The ingest tick of a deployment that ALSO serves retrieval — the
-    * r9 verdict's "hit by every ingest tick on a deployment that also
-    * serves retrieval", closed: one [[runTick]] whose ADMITTED docs
-    * additionally append their postings to the incremental BM25 index
-    * ([[ArtifactStore.Bm25IncrementalIndex]]) — the admitted set is
-    * derived once from the tick's checkpointed verdict frame, so dedup
-    * state and retrieval postings can never disagree about what was
-    * ingested, and only admitted (novel) text is ever tokenized
-    * (IngestLoopSpec pins the served ranking ≡ a full rebuild over
-    * base ∪ all admissions, and reconciles the index's doc count with
-    * the admission reports). One shared kernel with [[runTick]] — the
-    * postings append is tick-keyed like every other fold, so a crashed
-    * tick replays idempotently across all FOUR stores. */
-  def runTickWithRetrieval(st: Stores,
-                           idx: ArtifactStore.Bm25IncrementalIndex,
-                           batchDocs: DataFrame, w: Seq[Double],
-                           threshold: Double = 0.2,
-                           lowFrac: Double = 0.25): DataFrame =
-    runTickImpl(st, batchDocs, w, threshold, lowFrac, None,
-      Legs(idx = Some(idx)))
-
-  /** The FULL deployment tick — every maintained state family fed from
-    * the one checkpointed verdict frame: the three dedup stores, the
-    * BM25 postings ([[runTickWithRetrieval]]'s leg), and the curation
-    * gram census ([[ArtifactStore.GramCensusIncrementalIndex]] —
-    * q121's state), so a deployment that deduplicates, serves
-    * retrieval, AND curates per-tick maintains all five stores in one
-    * pass: the admitted set is derived once, admitted text is
-    * tokenized once per consumer seam, and no store can disagree about
-    * what was ingested. The census store participates in the tick
-    * agreement, so a crash between ANY pair of appends (including
-    * after the postings but before the census) makes the lag visible
-    * and the whole tick is redone idempotently (IngestLoopSpec pins
-    * the five-store replay). Retraction composes: [[retractTick]]'s
-    * census leg subtracts what this tick's census appends added. With
-    * an [[AnnLeg]] the tick feeds the SIXTH store too — the served
-    * IVF-PQ codes (q124's deployment form; AnnIngestSpec pins the
-    * six-store agreement, the recluster tick alignment, and the ANN
-    * retraction leg). With an [[ExportLeg]] the admitted docs
-    * additionally pack as this tick's export epoch — the SEVENTH
-    * maintained family, the physical shards a training job streams
-    * (q125; ExportStoreSpec + IngestLoopSpec pin the leg). */
-  def runFullTick(st: Stores,
-                  idx: ArtifactStore.Bm25IncrementalIndex,
-                  census: ArtifactStore.GramCensusIncrementalIndex,
-                  batchDocs: DataFrame, w: Seq[Double],
-                  threshold: Double = 0.2,
-                  lowFrac: Double = 0.25,
-                  ann: Option[AnnLeg] = None,
-                  export: Option[ExportLeg] = None,
-                  mix: Option[ArtifactStore.MixIncrementalIndex] = None,
-                  quota: Option[QuotaLeg] = None,
-                  quar: Option[Quarantine] = None,
-                  sem: Option[SemLeg] = None,
-                  eval: Option[EvalLeg] = None,
-                  curate: Option[CurateLeg] = None)
-      : DataFrame =
-    runTickImpl(st, batchDocs, w, threshold, lowFrac, quota,
-      Legs(Some(idx), Some(census), ann, export, mix, quar, None, sem, eval,
-        curate))
 
   /** One BUDGETED admission tick — the deployment form of
     * [[Provenance.q130BudgetedAdmission]]: the q103 gate runs
@@ -1292,19 +1113,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
   def runBudgetedTick(st: Stores, batchDocs: DataFrame, w: Seq[Double],
                       quota: QuotaLeg,
                       threshold: Double = 0.2, lowFrac: Double = 0.25,
-                      idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
-                      census: Option[
-                        ArtifactStore.GramCensusIncrementalIndex] = None,
-                      ann: Option[AnnLeg] = None,
-                      export: Option[ExportLeg] = None,
-                      mix: Option[ArtifactStore.MixIncrementalIndex] = None,
-                      quar: Option[Quarantine] = None,
-                      replay: Option[ReplayLeg] = None,
-                      sem: Option[SemLeg] = None,
-                      eval: Option[EvalLeg] = None,
-                      curate: Option[CurateLeg] = None): DataFrame =
-    runTickImpl(st, batchDocs, w, threshold, lowFrac, Some(quota),
-      Legs(idx, census, ann, export, mix, quar, replay, sem, eval, curate))
+                      legs: Legs = Legs()): DataFrame =
+    runTickImpl(st, batchDocs, w, threshold, lowFrac, Some(quota), legs)
 
   /** RE-ADJUDICATE the quarantine — the deployment form of
     * [[Provenance.q131Readjudication]], run after a [[retractTick]]
@@ -1343,33 +1153,22 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * and its text is still at hand. Only RE-ADMITTED docs resolve. */
   def readjudicateTick(st: Stores, quar: Quarantine, w: Seq[Double],
                        threshold: Double = 0.2, lowFrac: Double = 0.25,
-                       idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
-                       census: Option[
-                         ArtifactStore.GramCensusIncrementalIndex] = None,
-                       ann: Option[AnnLeg] = None,
-                       export: Option[ExportLeg] = None,
-                       mix: Option[ArtifactStore.MixIncrementalIndex] = None,
-                       replay: Option[ReplayLeg] = None,
-                       sem: Option[SemLeg] = None,
-                       eval: Option[EvalLeg] = None,
-                       curate: Option[CurateLeg] = None)
-      : DataFrame = {
-    val legs = Legs(idx, census, ann, export, mix, Some(quar), replay, sem,
-      eval, curate)
-    val t = legs.tick(st.all)
+                       legs: Legs = Legs()): DataFrame = {
+    val l = withRequired(legs, Legs(quar = Some(quar)))
+    val t = l.tick(st.all)
     // the ladder of the attached legs: semantic / contaminated rows
     // re-judge ONLY when their leg is attached — without its state the
     // re-judgment would silently skip that gate and wrongly re-admit them
-    val ladder = Provenance.ladder(sem.map(_ => Evidence.Semantic).toSeq ++
-      eval.map(_ => Evidence.Contaminated): _*)
+    val ladder = Provenance.ladder(l.sem.map(_ => Evidence.Semantic).toSeq ++
+      l.eval.map(_ => Evidence.Contaminated): _*)
     val dupRows = rejudgeable(st, quar, t, ladder)
     val (state, fuzzy) = textEvidence(st, t, dupRows, threshold)
     val v = Provenance.gatedTickFrame(
       dupRows.select("doc_id", "source", "text"), state,
       Seq(Evidence.Fuzzy -> fuzzy) ++
-        sem.map(leg => Evidence.Semantic ->
+        l.sem.map(leg => Evidence.Semantic ->
           semFlags(st, leg, t, dupRows.select("doc_id"))) ++
-        eval.map(leg => Evidence.Contaminated ->
+        l.eval.map(leg => Evidence.Contaminated ->
           contamFlags(leg, dupRows.select("doc_id", "text"))),
       w, lowFrac)
     val admIds = v.filter(col("lq") === false).select("doc_id")
@@ -1377,8 +1176,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     // the re-judged cohort is the batch for the curate winner rule
     foldAdmitted(t, st, v.filter(col("lq") === false)
         .select(col("doc_id"), col("h").as("ch")), admIds, admDocs,
-      servedOf(curate, t, admDocs.select("doc_id", "source", "text"),
-        dupRows.select("doc_id", "source", "text")), Nil, legs)
+      servedOf(l, t, admDocs.select("doc_id", "source", "text"),
+        dupRows.select("doc_id", "source", "text")), Nil, l)
     // docs that escaped the dup gates but landed in the quality window
     // RE-QUARANTINE under their NEW evidence class: their dup verdicts
     // are gone, and a low_quality row is what regateTick's model loop
@@ -1398,7 +1197,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       v.filter(col("lq") === false).select("doc_id"))
     // the re-adjudication's quality-windowed cohort is this tick's
     // novel cohort
-    appendReplay(replay, t, v, dupRows.select("doc_id", "text"))
+    appendReplay(l, t, v, dupRows.select("doc_id", "text"))
     Provenance.readjReport(v,
       dupRows.select(col("doc_id"), col("verdict").as("verdict_t1")), ladder)
   }
@@ -1424,35 +1223,21 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * Returns per source: n_novel, n_lowq_t1, n_readmitted,
     * n_still_lowq, n_demoted (the q134 columns minus the live form's
     * decision column — the CHOICE happened upstream in the q113/q128
-    * machinery that produced `wNew`). */
-  def regateTick(st: Stores, quar: Quarantine, replay: ReplayLeg,
+    * machinery that produced `wNew`).
+    *
+    * On a MULTIMODAL loop ([[MmStores]]: [[runMmTick]] persists gate
+    * features too) the five mm stores advance together, and the
+    * re-admitted docs' STORED 8-byte signatures (the mm quarantine rows
+    * carry them) fold into the modality sig stores — a later mm tick
+    * rejects an image/audio near-dup of a regate-readmitted doc, with
+    * no payload reads. */
+  def regateTick(st: StoreSet, quar: Quarantine, replay: ReplayLeg,
                  wNew: Seq[Double], lowFrac: Double = 0.25,
-                 idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
-                 census: Option[
-                   ArtifactStore.GramCensusIncrementalIndex] = None,
-                 ann: Option[AnnLeg] = None,
-                 export: Option[ExportLeg] = None,
-                 mix: Option[ArtifactStore.MixIncrementalIndex] = None,
-                 sem: Option[SemLeg] = None,
-                 eval: Option[EvalLeg] = None,
-                 curate: Option[CurateLeg] = None)
-      : DataFrame =
-    regateImpl(st, Nil, quar, replay, wNew, lowFrac,
-      Legs(idx, census, ann, export, mix, Some(quar), Some(replay), sem,
-        eval, curate))
-
-  /** The one re-gate kernel ([[regateTick]], [[regateMmTick]]): `sigCols`
-    * pairs each modality sig store with the quarantine column carrying
-    * the doc's STORED signature — re-admitted docs' signatures fold
-    * into those stores with no payload reads. */
-  private[io] def regateImpl(st: Stores,
-                             sigCols: Seq[(ArtifactStore.IngestStateStore,
-                                           String)],
-                             quar: Quarantine, replay: ReplayLeg,
-                             wNew: Seq[Double], lowFrac: Double,
-                             legs: Legs): DataFrame = {
-    val t = legs.tick(st.all ++ sigCols.map(_._1))
-    val feats = resolved(st, replay.feats.currentUpTo(t - 1).getOrElse(
+                 legs: Legs = Legs()): DataFrame = {
+    val l = withRequired(legs, Legs(quar = Some(quar), replay = Some(replay)))
+    val t = l.tick(st.all)
+    val sigCols = st.sigCols
+    val feats = resolved(st.text, replay.feats.currentUpTo(t - 1).getOrElse(
       sys.error("replay leg not bootstrapped: no tick-1 base")))
     val rescored = QualityModel.withScoreFromFeatures(
       feats.withColumnRenamed("lq", "was_lowq"), wNew)
@@ -1466,7 +1251,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     // the actually-re-admittable set: flipped out of the window AND
     // still quarantined (text and stored signatures live there;
     // already-resolved docs and takedowns drop out here)
-    val (rows, live) = quarantineRows(st, quar, _.currentUpTo(t - 1))
+    val (rows, live) = quarantineRows(st.text, quar, _.currentUpTo(t - 1))
     val admRows = live.filter(col("verdict") === "low_quality")
       .join(flipped.filter(col("was_lowq") && !col("lq2"))
         .select("doc_id"), Seq("doc_id"), "left_semi")
@@ -1475,10 +1260,10 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       .localCheckpoint()
     val admDocs = admRows.select("doc_id", "source", "text")
     val admIds = admDocs.select("doc_id")
-    foldAdmitted(t, st, admDocs.select(col("doc_id"),
+    foldAdmitted(t, st.text, admDocs.select(col("doc_id"),
         Provenance.contentHash60(col("text")).as("ch")), admIds, admDocs,
-      servedOf(legs.curate, t, admDocs, admDocs),
-      sigCols.map { case (s, c) => s -> storedSigs(admRows, c) }, legs)
+      servedOf(l, t, admDocs, admDocs),
+      sigCols.map { case (s, c) => s -> storedSigs(admRows, c) }, l)
     quar.rows.appendTickAt(t, rows.limit(0))
     quar.resolvedIds.appendTickAt(t, admIds)
     replay.feats.appendTickAt(t, feats.limit(0))

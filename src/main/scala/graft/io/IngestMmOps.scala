@@ -7,30 +7,15 @@ import graft.operators.Provenance
 import graft.operators.Provenance.Evidence
 
 /** The unified MULTIMODAL admission section of [[IngestLoop]] (q118's
-  * deployment form and its consumer/maintenance twins), in its own
-  * file like IngestLegOps. The self-type reaches the loop's shared
-  * pieces (Stores, the leg case classes, `resolved`,
+  * deployment form and its re-adjudication), in its own file like
+  * IngestLegOps. The self-type reaches the loop's shared
+  * pieces ([[IngestLoop.MmStores]], the leg case classes, `resolved`,
   * [[IngestLoop.Legs]], `foldAdmitted`, the leg-ops flags), and
   * `object IngestLoop extends ... with IngestMmOps`, so every
-  * `IngestLoop.*` call site — including `IngestLoop.MmStores` —
-  * reads unchanged. */
+  * `IngestLoop.*` call site reads unchanged. The takedown, re-gate,
+  * compaction and quiesce entry points take any
+  * [[IngestLoop.StoreSet]], so they serve this loop too. */
 trait IngestMmOps { self: IngestLoop.type =>
-
-
-  /** The store bundle of a multimodal ingest loop: the text [[Stores]]
-    * (hashes/bands/shingles + the SHARED tombstone store — one takedown
-    * retracts a doc from every modality at once) plus per-modality
-    * 8-byte perceptual-signature stores (doc_id, sig). */
-  final case class MmStores(text: Stores,
-                            imgSigs: ArtifactStore.IngestStateStore,
-                            audSigs: ArtifactStore.IngestStateStore) {
-    private[io] def all: Seq[ArtifactStore.IngestStateStore] =
-      text.all ++ Seq(imgSigs, audSigs)
-    /** Each sig store with the mm quarantine column carrying its
-      * STORED signature. */
-    private[io] def sigCols: Seq[(ArtifactStore.IngestStateStore, String)] =
-      Seq(imgSigs -> "img_sig", audSigs -> "aud_sig")
-  }
 
   def mmStores(spark: SparkSession, root: String, name: String): MmStores =
     MmStores(stores(spark, root, name),
@@ -58,27 +43,18 @@ trait IngestMmOps { self: IngestLoop.type =>
     * modality, and the replay across a crash between any per-store
     * writes: the tick agreement over all five stores redoes a lagging
     * tick). State reads resolve through the shared tombstone store —
-    * [[retractTick]] on `st.text` retracts a doc's signatures too.
-    * The optional consumer legs (BM25 postings / gram census / served
-    * ANN codes / packed export / domain mix) mirror [[runFullTick]]'s
-    * exactly: the multimodal loop is not a reduced deployment — its
-    * admitted docs feed every consumer a text-only loop feeds, from
-    * the one mm verdict frame. */
+    * [[retractTick]] retracts a doc's signatures too. The consumer
+    * legs (BM25 postings / gram census / served ANN codes / packed
+    * export / domain mix) are [[runTick]]'s: the multimodal loop is not
+    * a reduced deployment — its admitted docs feed every consumer a
+    * text-only loop feeds, from the one mm verdict frame. A curate leg
+    * is refused: the mm fold serves the raw admitted text. */
   def runMmTick(st: MmStores, batchDocs: DataFrame, w: Seq[Double],
                 threshold: Double = 0.2, lowFrac: Double = 0.25,
                 maxDist: Int = 10, maxBand: Int = 64,
-                idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
-                census: Option[ArtifactStore.GramCensusIncrementalIndex] = None,
-                ann: Option[AnnLeg] = None,
-                export: Option[ExportLeg] = None,
-                mix: Option[ArtifactStore.MixIncrementalIndex] = None,
-                quar: Option[Quarantine] = None,
-                replay: Option[ReplayLeg] = None,
-                sem: Option[SemLeg] = None,
-                eval: Option[EvalLeg] = None)
-      : DataFrame = {
+                legs: Legs = Legs()): DataFrame = {
     import graft.multimodal.Multimodal
-    val legs = Legs(idx, census, ann, export, mix, quar, replay, sem, eval)
+    refuseCurate(legs)
     val t = legs.tick(st.all)
     val (state, fuzzy) = textEvidence(st.text, t, batchDocs, threshold)
     // batch signatures derive map-side at the codec seam; severed — the
@@ -96,9 +72,9 @@ trait IngestMmOps { self: IngestLoop.type =>
     // the q118 rungs plus the classes of the attached legs
     val flags = Seq(Evidence.Fuzzy -> fuzzy, Evidence.Image -> imFlag,
         Evidence.Audio -> auFlag) ++
-      sem.map(leg => Evidence.Semantic ->
+      legs.sem.map(leg => Evidence.Semantic ->
         semFlags(st.text, leg, t, batchDocs.select("doc_id"))) ++
-      eval.map { leg =>
+      legs.eval.map { leg =>
         // text channels ∪ the q140 modality channels (when attached):
         // one `contaminated` class — every channel means "this doc
         // leaks the eval set", and it outranks the dup_image/dup_audio
@@ -124,7 +100,7 @@ trait IngestMmOps { self: IngestLoop.type =>
     // QUARANTINE leg (q133): mm quarantine rows additionally carry the
     // doc's 8-byte signatures, so a re-adjudication re-judges the
     // image/audio legs without ever re-reading payloads
-    quar.foreach { qs =>
+    legs.quar.foreach { qs =>
       val rej = v.filter(!Provenance.novel(ladder) || col("lq") === true)
         .withColumn("verdict", Provenance.verdictOf(ladder))
         .join(batchDocs.select("doc_id", "text"), "doc_id")
@@ -138,9 +114,15 @@ trait IngestMmOps { self: IngestLoop.type =>
     }
     // REPLAY leg: a replay-attached readjudicateMmTick can never land
     // its agreement on a lagging feats store
-    appendReplay(replay, t, v, batchDocs)
+    appendReplay(legs, t, v, batchDocs)
     Provenance.gatedTickReport(v, ladder)
   }
+
+  /** The mm folds hand the consumers the raw admitted text: a curate
+    * leg would be silently skipped, so it is refused. */
+  private def refuseCurate(legs: Legs): Unit =
+    require(legs.curate.isEmpty,
+      "a multimodal tick has no curated fold-back: detach the curate leg")
 
   /** RE-ADJUDICATE a multimodal quarantine — the deployment form of
     * [[graft.multimodal.Multimodal.q133MmReadjudication]], run at a
@@ -158,27 +140,16 @@ trait IngestMmOps { self: IngestLoop.type =>
   def readjudicateMmTick(st: MmStores, quar: Quarantine, w: Seq[Double],
                          threshold: Double = 0.2, lowFrac: Double = 0.25,
                          maxDist: Int = 10, maxBand: Int = 64,
-                         idx: Option[ArtifactStore.Bm25IncrementalIndex]
-                           = None,
-                         census: Option[
-                           ArtifactStore.GramCensusIncrementalIndex] = None,
-                         ann: Option[AnnLeg] = None,
-                         export: Option[ExportLeg] = None,
-                         mix: Option[ArtifactStore.MixIncrementalIndex]
-                           = None,
-                         replay: Option[ReplayLeg] = None,
-                         sem: Option[SemLeg] = None,
-                         eval: Option[EvalLeg] = None)
-      : DataFrame = {
+                         legs: Legs = Legs()): DataFrame = {
     import graft.multimodal.Multimodal
-    val legs = Legs(idx, census, ann, export, mix, Some(quar), replay, sem,
-      eval)
-    val t = legs.tick(st.all)
+    refuseCurate(legs)
+    val l = withRequired(legs, Legs(quar = Some(quar)))
+    val t = l.tick(st.all)
     // semantic / contaminated rows re-judge only with their leg
     // attached (its state is the gate)
     val ladder = Provenance.ladder(Seq(Evidence.Image, Evidence.Audio) ++
-      sem.map(_ => Evidence.Semantic) ++
-      eval.map(_ => Evidence.Contaminated): _*)
+      l.sem.map(_ => Evidence.Semantic) ++
+      l.eval.map(_ => Evidence.Contaminated): _*)
     val dupRows = rejudgeable(st.text, quar, t, ladder)
     val (state, fuzzy) = textEvidence(st.text, t, dupRows, threshold)
     val imFlag = Multimodal.flaggedAgainstState(
@@ -195,9 +166,9 @@ trait IngestMmOps { self: IngestLoop.type =>
       dupRows.select("doc_id", "source", "text"), state,
       Seq(Evidence.Fuzzy -> fuzzy, Evidence.Image -> imFlag,
         Evidence.Audio -> auFlag) ++
-        sem.map(leg => Evidence.Semantic ->
+        l.sem.map(leg => Evidence.Semantic ->
           semFlags(st.text, leg, t, dupRows.select("doc_id"))) ++
-        eval.map { leg =>
+        l.eval.map { leg =>
           // the modality eval channels re-judge from the STORED 8-byte
           // signatures, like the dup legs — no payload reads
           Evidence.Contaminated ->
@@ -212,7 +183,7 @@ trait IngestMmOps { self: IngestLoop.type =>
     val admDocs = dupRows.join(admIds, Seq("doc_id"), "left_semi")
     foldAdmitted(t, st.text, v.filter(col("lq") === false)
         .select(col("doc_id"), col("h").as("ch")), admIds, admDocs, admDocs,
-      st.sigCols.map { case (s, c) => s -> storedSigs(admDocs, c) }, legs)
+      st.sigCols.map { case (s, c) => s -> storedSigs(admDocs, c) }, l)
     // quality-rejected docs RE-QUARANTINE (the readjudicateTick rule),
     // keeping their stored 8-byte signatures so a later mm
     // re-adjudication of a regate-readmitted partner still has them
@@ -225,44 +196,8 @@ trait IngestMmOps { self: IngestLoop.type =>
     // the q131 resolution rule: only RE-ADMITTED docs resolve
     quar.resolvedIds.appendTickAt(t,
       v.filter(col("lq") === false).select("doc_id"))
-    appendReplay(replay, t, v, dupRows.select("doc_id", "text"))
+    appendReplay(l, t, v, dupRows.select("doc_id", "text"))
     Provenance.readjReport(v,
       dupRows.select(col("doc_id"), col("verdict").as("verdict_t1")), ladder)
   }
-
-  /** RE-GATE the quality window of a MULTIMODAL loop under a NEW model
-    * — [[regateTick]]'s kernel over the five mm stores ([[runMmTick]]
-    * persists gate features, so the q134 model loop reaches mm
-    * deployments, and a text-Stores regate against an mm loop would
-    * leave imgSigs/audSigs lagging one tick — the silent-overwrite
-    * class). The re-admitted docs' STORED 8-byte signatures (the mm
-    * quarantine rows carry them) fold into the modality sig stores, so
-    * a later mm tick rejects an image/audio near-dup of a
-    * regate-readmitted doc — no payload reads. */
-  def regateMmTick(st: MmStores, quar: Quarantine, replay: ReplayLeg,
-                   wNew: Seq[Double], lowFrac: Double = 0.25,
-                   idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
-                   census: Option[
-                     ArtifactStore.GramCensusIncrementalIndex] = None,
-                   ann: Option[AnnLeg] = None,
-                   export: Option[ExportLeg] = None,
-                   mix: Option[ArtifactStore.MixIncrementalIndex] = None,
-                   sem: Option[SemLeg] = None,
-                   eval: Option[EvalLeg] = None,
-                   curate: Option[CurateLeg] = None)
-      : DataFrame =
-    regateImpl(st.text, st.sigCols, quar, replay, wNew, lowFrac,
-      Legs(idx, census, ann, export, mix, Some(quar), Some(replay), sem,
-        eval, curate))
-
-  /** [[compactIfNeeded]] over all five multimodal stores — tombstones
-    * fold out of every modality's state, with the attached legs' stores
-    * of the same shared lineage, in one pass; cleared only when every
-    * store folded (same read-path-idempotence argument). */
-  def compactMmIfNeeded(st: MmStores, maxDataFiles: Long = 64,
-                        sem: Option[SemLeg] = None,
-                        eval: Option[EvalLeg] = None,
-                        quar: Option[Quarantine] = None,
-                        replay: Option[ReplayLeg] = None): Boolean =
-    compactLineage(st.text, st.all, maxDataFiles, sem, eval, quar, replay)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** CURATED FOLD-BACK (q137) — the r11 verdict's item 3: the engine
   * KNEW how to strip boilerplate against its maintained census (q129)
-  * and scrub PII (q78), but `runFullTick` folded back and exported the
+  * and scrub PII (q78), but the deployment tick folded back and exported the
   * RAW text — the curation pipeline and the deployment loop ran as
   * parallel tracks, so packed shards carried boilerplate and unscrubbed
   * PII the engine itself could remove. Here the admitted docs'text is

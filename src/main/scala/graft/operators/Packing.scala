@@ -285,7 +285,7 @@ object Packing {
     * is still trained on — the takedown isn't done until the export
     * reflects it. This query runs the maintained-export algebra the
     * deployment form ([[graft.io.ArtifactStore.PackedExportStore]],
-    * riding [[graft.io.IngestLoop.runFullTick]]'s export leg) uses:
+    * riding [[graft.io.IngestLoop.runTick]]'s export leg) uses:
     *
     *   1. tick 1 — the base corpus (doc_id % BatchMod in 1..9) packs
     *      TICK-LOCALLY under the frozen tokenizer ([[tickSlices]]);

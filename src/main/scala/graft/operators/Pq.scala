@@ -1170,7 +1170,7 @@ object Pq {
     * the admission count attached as broadcast one-row aggregates (the
     * q103 pattern).
     *
-    * The deployment form is [[graft.io.IngestLoop.runFullTick]] with an
+    * The deployment form is [[graft.io.IngestLoop.runTick]] with an
     * [[graft.io.IngestLoop.AnnLeg]] — the code store participates in
     * the tick agreement, a crashed tick replays across all six stores,
     * and [[graft.io.IngestLoop.retractTick]]'s ANN leg removes a
@@ -1203,7 +1203,7 @@ object Pq {
       .select(col("eval_id").as("fid")).distinct()
     val w = QualityModel.weights(corpus, scope = s"admission$bm")
     // the q103 verdict frame (checkpointed inside): the admitted set is
-    // derived ONCE — the same discipline as IngestLoop.runFullTick
+    // derived ONCE — the same discipline as IngestLoop.runTick
     val v = Provenance.gatedTickFrame(batch,
       Provenance.corpusHashState(corpus),
       Seq(Provenance.Evidence.Fuzzy -> fuzzy), w, lowFrac)

@@ -137,7 +137,7 @@ trait ProvenanceGateOps { self: Provenance.type =>
     * DuckDB oracle can re-derive both ticks from one WITH clause; the
     * DEPLOYMENT form is [[graft.io.IngestLoop]], where the state lives
     * in [[graft.io.ArtifactStore.IngestStateStore]] parquet
-    * (appendTick per tick, generational compaction) and corpus text is
+    * (appendTickAt per tick, generational compaction) and corpus text is
     * never rescanned — IngestLoopSpec pins the two forms equal. */
   /** The two gated tick frames + frozen weights of the q106 split —
     * shared by the q106 report and the q111 drift series (both

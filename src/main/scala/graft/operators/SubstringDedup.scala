@@ -227,7 +227,7 @@ object SubstringDedup {
     * spans. Output: the q86 columns for the batch docs.
     *
     * Store form: [[graft.io.ArtifactStore.GramCensusIncrementalIndex
-    * .retractDocs]] (SubstringDedupSpec pins store ≡ live ≡ re-mine).
+    * .retractDocsAt]] (SubstringDedupSpec pins store ≡ live ≡ re-mine).
     *
     * Scale shape: q121's tick cost + one tick-sized census pass over
     * the retracted docs (their text only — the corpus is still never

@@ -14,6 +14,14 @@ object HtmlReport {
   private def fmt(o: Option[Double]): String =
     o.map(v => f"$v%.6g").getOrElse("—")
 
+  /** A correlation cell: a value that rounds to zero prints `0.0000`
+    * whatever its sign — the sign of an exact zero is summation
+    * order. */
+  private def corr(r: Double): String = {
+    val s = f"$r%.4f"
+    if (s == "-0.0000") "0.0000" else s
+  }
+
   private def bar(n: Long, maxN: Long): String = {
     val w = if (maxN <= 0) 0 else (n * 200 / maxN).toInt
     s"""<div style="background:#4a90d9;height:10px;width:${w}px"></div>"""
@@ -82,7 +90,7 @@ object HtmlReport {
     if (p.correlations.nonEmpty) {
       sb ++= "<h2>Correlations (Pearson)</h2><table><tr><th>A</th><th>B</th><th>r</th></tr>"
       p.correlations.foreach { case (a, b, r) =>
-        sb ++= s"<tr><td>${esc(a)}</td><td>${esc(b)}</td><td>${f"$r%.4f"}</td></tr>"
+        sb ++= s"<tr><td>${esc(a)}</td><td>${esc(b)}</td><td>${corr(r)}</td></tr>"
       }
       sb ++= "</table>"
     }
@@ -90,7 +98,7 @@ object HtmlReport {
     if (p.spearman.nonEmpty) {
       sb ++= "<h2>Correlations (Spearman)</h2><table><tr><th>A</th><th>B</th><th>ρ</th></tr>"
       p.spearman.foreach { case (a, b, r) =>
-        sb ++= s"<tr><td>${esc(a)}</td><td>${esc(b)}</td><td>${f"$r%.4f"}</td></tr>"
+        sb ++= s"<tr><td>${esc(a)}</td><td>${esc(b)}</td><td>${corr(r)}</td></tr>"
       }
       sb ++= "</table>"
     }

@@ -324,28 +324,21 @@ object DocStream {
     * stream's admissions (DocStreamSpec pins served ranking, census,
     * codes and export slices ≡ a batch rebuild over base ∪ all
     * admissions). Every index must be bootstrapped from the same
-    * corpus as the stores (tick 1) before the query starts. There is
-    * no mix leg: the stream wire schema carries no `source` column.
-    * Streaming export epochs are micro-batch-sized; a deployment with
-    * small batches compacts by re-exporting at quiesce points. */
+    * corpus as the stores (tick 1) before the query starts. `legs` is
+    * the deployment's one [[graft.io.IngestLoop.Legs]] value; a mix or
+    * replay leg is refused. Streaming export epochs are
+    * micro-batch-sized; a deployment with small batches compacts by
+    * re-exporting at quiesce points. */
   def foldingGatedAdmissionQuery(docs: DataFrame, corpusHashes: DataFrame,
                                  stores: graft.io.IngestLoop.Stores,
                                  weights: Seq[Double],
                                  outPath: String, checkpoint: String,
                                  threshold: Double = 0.2,
                                  lowFrac: Double = 0.25,
-                                 idx: Option[graft.io.ArtifactStore.Bm25IncrementalIndex] = None,
-                                 census: Option[graft.io.ArtifactStore.GramCensusIncrementalIndex] = None,
-                                 ann: Option[graft.io.IngestLoop.AnnLeg] = None,
-                                 export: Option[graft.io.IngestLoop.ExportLeg] = None,
-                                 quar: Option[graft.io.IngestLoop.Quarantine] = None,
-                                 sem: Option[graft.io.IngestLoop.SemLeg] = None,
-                                 eval: Option[graft.io.IngestLoop.EvalLeg] = None,
-                                 curate: Option[graft.io.IngestLoop.CurateLeg] = None)
+                                 legs: graft.io.IngestLoop.Legs =
+                                   graft.io.IngestLoop.Legs())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val legs = graft.io.IngestLoop.Legs(idx = idx, census = census,
-      ann = ann, export = export, quar = quar, sem = sem, eval = eval,
-      curate = curate)
+    streamLegs(legs)
     admissionStreamWithText(docs, corpusHashes)
       .writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -362,7 +355,7 @@ object DocStream {
           rs(stores.bands.currentUpTo(stateTick).get),
           rs(stores.shingles.currentUpTo(stateTick).get), threshold)
         val evaled = refineContamLeg(
-          refineSemanticLeg(fuzzed, stores, sem, stateTick), eval)
+          refineSemanticLeg(fuzzed, stores, legs, stateTick), legs)
         val refined = refineQuality(evaled, weights, lowFrac)
           // severed: read by the sink write AND the fold increments
           .localCheckpoint()
@@ -371,13 +364,26 @@ object DocStream {
         val adm = refined.filter(col("verdict") === "new")
           .select("doc_id", "text")
         val served = curatedServed(refined, b.toDF().select("doc_id", "text"),
-          stateTick, outPath, batchId, curate, adm)
+          stateTick, outPath, batchId, legs, adm)
         graft.io.IngestLoop.foldAdmitted(stateTick + 1, stores,
           graft.operators.Provenance.corpusDocHashes(adm),
           adm.select("doc_id"), adm, served, Nil, legs)
-        foldQuarantine(refined, stateTick + 1, quar)
+        foldQuarantine(refined, stateTick + 1, legs)
       }
       .start()
+  }
+
+  /** The legs a folding stream refuses before it starts: a mix leg (the
+    * wire schema carries no `source` column to count by) and a replay
+    * leg (the stream's quality gate persists no features, so the feats
+    * store would lag every fold tick). */
+  private def streamLegs(legs: graft.io.IngestLoop.Legs): Unit = {
+    require(legs.mix.isEmpty,
+      "a folding stream cannot maintain a mix leg: the wire schema has " +
+        "no source column")
+    require(legs.replay.isEmpty,
+      "a folding stream cannot maintain a replay leg: it persists no " +
+        "gate features")
   }
 
   /** SEMANTIC leg refinement (the q135 symmetry in streaming): docs the
@@ -390,8 +396,8 @@ object DocStream {
     * ([[graft.io.IngestLoop.rolloverSem]]). */
   private def refineSemanticLeg(batch: DataFrame,
                                 stores: graft.io.IngestLoop.Stores,
-                                sem: Option[graft.io.IngestLoop.SemLeg],
-                                stateTick: Long): DataFrame = sem match {
+                                legs: graft.io.IngestLoop.Legs,
+                                stateTick: Long): DataFrame = legs.sem match {
     case None => batch
     case Some(leg) =>
       val flags = graft.operators.SemanticGate.flaggedAgainstState(
@@ -418,8 +424,8 @@ object DocStream {
     * readjudicateTick recovers withdrawn-evidence rejections from the
     * quarantine. */
   private def refineContamLeg(batch: DataFrame,
-                              eval: Option[graft.io.IngestLoop.EvalLeg])
-      : DataFrame = eval match {
+                              legs: graft.io.IngestLoop.Legs)
+      : DataFrame = legs.eval match {
     case None => batch
     case Some(leg) =>
       val flags = graft.io.IngestLoop.contamFlags(leg,
@@ -440,9 +446,9 @@ object DocStream {
     * retro-catch from the loop's maintained doc sig stores. No-op for
     * a text-only eval leg. */
   private def refineMmEvalLeg(batch: DataFrame,
-                              eval: Option[graft.io.IngestLoop.EvalLeg],
+                              legs: graft.io.IngestLoop.Legs,
                               bISigs: DataFrame, bASigs: DataFrame)
-      : DataFrame = eval match {
+      : DataFrame = legs.eval match {
     case Some(leg) if leg.imgSigs.isDefined || leg.audSigs.isDefined =>
       import graft.multimodal.Multimodal
       val newIds = batch.filter(col("verdict") === "new").select("doc_id")
@@ -488,8 +494,8 @@ object DocStream {
     * unchanged when no leg is attached). */
   private def curatedServed(refined: DataFrame, rawBatch: DataFrame,
                             stateTick: Long, outPath: String, batchId: Long,
-                            curate: Option[graft.io.IngestLoop.CurateLeg],
-                            adm: DataFrame): DataFrame = curate match {
+                            legs: graft.io.IngestLoop.Legs,
+                            adm: DataFrame): DataFrame = legs.curate match {
     case None => adm
     case Some(cl) =>
       val cur = graft.io.IngestLoop.curatedRows(cl, stateTick + 1,
@@ -516,9 +522,8 @@ object DocStream {
     * keeps the two bundles' tick agreements aligned (DocStreamSpec pins
     * the full boundary flow). */
   private def foldQuarantine(refined: DataFrame, tick: Long,
-                             quar: Option[graft.io.IngestLoop.Quarantine])
-      : Unit =
-    quar.foreach { qs =>
+                             legs: graft.io.IngestLoop.Legs): Unit =
+    legs.quar.foreach { qs =>
       val rej = refined.filter(col("verdict") =!= "new")
         .select(col("doc_id"), lit("stream").as("source"), col("text"),
           when(col("verdict").isin("dup_corpus", "dup_stream"),
@@ -565,19 +570,11 @@ object DocStream {
                               threshold: Double = 0.2,
                               lowFrac: Double = 0.25,
                               maxDist: Int = 10, maxBand: Int = 64,
-                              idx: Option[graft.io.ArtifactStore.Bm25IncrementalIndex] = None,
-                              census: Option[graft.io.ArtifactStore.GramCensusIncrementalIndex] = None,
-                              ann: Option[graft.io.IngestLoop.AnnLeg] = None,
-                              export: Option[graft.io.IngestLoop.ExportLeg] = None,
-                              quar: Option[graft.io.IngestLoop.Quarantine] = None,
-                              sem: Option[graft.io.IngestLoop.SemLeg] = None,
-                              eval: Option[graft.io.IngestLoop.EvalLeg] = None,
-                              curate: Option[graft.io.IngestLoop.CurateLeg] = None)
+                              legs: graft.io.IngestLoop.Legs =
+                                graft.io.IngestLoop.Legs())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.multimodal.Multimodal
-    val legs = graft.io.IngestLoop.Legs(idx = idx, census = census,
-      ann = ann, export = export, quar = quar, sem = sem, eval = eval,
-      curate = curate)
+    streamLegs(legs)
     admissionStreamWithText(docs, corpusHashes)
       .writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -605,8 +602,8 @@ object DocStream {
         // judge the batch sigs against the LIVE eval media
         val evaled = refineMmEvalLeg(
           refineContamLeg(
-            refineSemanticLeg(fuzzed, stores.text, sem, stateTick), eval),
-          eval, bISigs, bASigs)
+            refineSemanticLeg(fuzzed, stores.text, legs, stateTick), legs),
+          legs, bISigs, bASigs)
         val imFlag = Multimodal.flaggedAgainstState(
             rs(stores.imgSigs.currentUpTo(stateTick).get),
             bISigs, maxDist, maxBand)
@@ -631,7 +628,7 @@ object DocStream {
         val adm = refined.filter(col("verdict") === "new")
           .select("doc_id", "text")
         val served = curatedServed(refined, b.toDF().select("doc_id", "text"),
-          stateTick, outPath, batchId, curate, adm)
+          stateTick, outPath, batchId, legs, adm)
         graft.io.IngestLoop.foldAdmitted(stateTick + 1, stores.text,
           graft.operators.Provenance.corpusDocHashes(adm),
           adm.select("doc_id"), adm, served,
@@ -648,7 +645,7 @@ object DocStream {
         // rolloverQuarantine re-seed the bundle (the restart-boundary
         // contract). Verdicts map to the batch evidence classes as in
         // the text fold.
-        quar.foreach { qs =>
+        legs.quar.foreach { qs =>
           val rej = refined.filter(col("verdict") =!= "new")
             .select(col("doc_id"), lit("stream").as("source"), col("text"),
               when(col("verdict").isin("dup_corpus", "dup_stream"),

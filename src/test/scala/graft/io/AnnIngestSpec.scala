@@ -67,8 +67,9 @@ class AnnIngestSpec extends AnyFunSuite {
     ann.bootstrap(corpusEmb, cents, rcb)
     val leg = IngestLoop.AnnLeg(ann, emb, cents, rcb)
 
-    val rep = rows(IngestLoop.runFullTick(st, idx, cen, batch, w,
-      ann = Some(leg)))
+    val rep = rows(IngestLoop.runTick(st, batch, w,
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+        ann = Some(leg))))
     assert(rep.nonEmpty)
     assert(ann.codeStore.maxTick === 2L,
       "the code append rides the same tick as the dedup folds")
@@ -108,21 +109,24 @@ class AnnIngestSpec extends AnyFunSuite {
     val (stA, idxA, cenA) = build(root, "ann_clean")
     val annA = ArtifactStore.ivfPqIncremental(spark, root, "ann_clean")
     annA.bootstrap(corpusEmb, cents, rcb)
-    val cleanRep = rows(IngestLoop.runFullTick(stA, idxA, cenA, batch, w,
-      ann = Some(IngestLoop.AnnLeg(annA, emb, cents, rcb))))
+    val cleanRep = rows(IngestLoop.runTick(stA, batch, w,
+      legs = IngestLoop.Legs(idx = Some(idxA), census = Some(cenA),
+        ann = Some(IngestLoop.AnnLeg(annA, emb, cents, rcb)))))
 
-    // the crashed loop: the five-store tick lands (runFullTick WITHOUT
+    // the crashed loop: the five-store tick lands (runTick WITHOUT
     // the ann leg is exactly the crash point — after the census append,
     // before appendVectorsAt) but the code append never does
     val (stB, idxB, cenB) = build(root, "ann_crash")
     val annB = ArtifactStore.ivfPqIncremental(spark, root, "ann_crash")
     annB.bootstrap(corpusEmb, cents, rcb)
-    IngestLoop.runFullTick(stB, idxB, cenB, batch, w)
+    IngestLoop.runTick(stB, batch, w,
+      legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB)))
     assert(stB.shingles.maxTick === 2L && annB.codeStore.maxTick === 1L,
       "precondition: five stores agree at tick 2, the code store lags")
 
-    val replay = rows(IngestLoop.runFullTick(stB, idxB, cenB, batch, w,
-      ann = Some(IngestLoop.AnnLeg(annB, emb, cents, rcb))))
+    val replay = rows(IngestLoop.runTick(stB, batch, w,
+      legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB),
+        ann = Some(IngestLoop.AnnLeg(annB, emb, cents, rcb)))))
     assert(replay === cleanRep,
       "six-store replay must reproduce the uncrashed verdicts")
     assert(annB.codeStore.maxTick === 2L, "the code append must be repaired")
@@ -145,7 +149,9 @@ class AnnIngestSpec extends AnyFunSuite {
     // the leg pins the BOOTSTRAP artifacts; post-recluster appends must
     // pick the generation's own artifacts over these
     val leg = IngestLoop.AnnLeg(ann, emb, cents, rcb)
-    IngestLoop.runFullTick(st, idx, cen, batchA, w, ann = Some(leg))
+    IngestLoop.runTick(st, batchA, w,
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+        ann = Some(leg)))
     val admA = admittedAt(st, 2)
 
     // recluster between loop ticks: retrained artifacts, every live
@@ -166,7 +172,9 @@ class AnnIngestSpec extends AnyFunSuite {
     // GENERATION's serving artifacts (cents2) — not the leg's bootstrap
     // pair; a fallback bug here would mis-encode every post-recluster
     // arrival
-    IngestLoop.runFullTick(st, idx, cen, batchB, w, ann = Some(leg))
+    IngestLoop.runTick(st, batchB, w,
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+        ann = Some(leg)))
     assert(ann.codeStore.maxTick === 3L)
     val admB = admittedAt(st, 3)
     assert(admB.count() > 0)
@@ -178,7 +186,7 @@ class AnnIngestSpec extends AnyFunSuite {
 
     // takedown: tick A's admissions leave the served index via the ANN
     // leg; compaction folds the tombstones without changing the codes
-    IngestLoop.retractTick(st, admA, ann = Some(ann))
+    IngestLoop.retractTick(st, admA, legs = IngestLoop.Legs(ann = Some(leg)))
     val expectAfter = codeSet(Pq.residualCodes(served(admB), cents2, rcb2))
     assert(codeSet(ann.codes()) === expectAfter,
       "retracted docs' codes must leave every codes() read")
@@ -196,14 +204,15 @@ class AnnIngestSpec extends AnyFunSuite {
     val ann = ArtifactStore.ivfPqIncremental(spark, root, "ann_q")
     ann.bootstrap(corpusEmb, cents, rcb)
     val leg = IngestLoop.AnnLeg(ann, emb, cents, rcb)
-    IngestLoop.runFullTick(st, idx, cen, batch, w, ann = Some(leg))
+    IngestLoop.runTick(st, batch, w,
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+        ann = Some(leg)))
     val live = served(admittedAt(st, 2))
 
     // keep branch: an unreachable gain bound → the bundle hands the
     // same leg back, generation untouched
-    val resKeep = IngestLoop.quiesce(st, spark, root,
-      ann = Some(leg), annBaseTick = Some(2L),
-      annMinGainHits = 1000000L)
+    val resKeep = IngestLoop.quiesce(st, spark, root, annBaseTick = Some(2L),
+      annMinGainHits = 1000000L, legs = IngestLoop.Legs(ann = Some(leg)))
     assert(!resKeep.annReclustered && (resKeep.ann.get eq leg))
     assert(ann.generation === 1L, "a keep decision swaps nothing")
 
@@ -213,9 +222,8 @@ class AnnIngestSpec extends AnyFunSuite {
     // bundle retrains, swaps the generation at the loop tick, and the
     // served codes are the full re-encode under the SAME retrained
     // artifacts the decision hook returns
-    val resRc = IngestLoop.quiesce(st, spark, root,
-      ann = Some(leg), annBaseTick = Some(2L),
-      annMinGainHits = Long.MinValue)
+    val resRc = IngestLoop.quiesce(st, spark, root, annBaseTick = Some(2L),
+      annMinGainHits = Long.MinValue, legs = IngestLoop.Legs(ann = Some(leg)))
     assert(resRc.annReclustered, "the bundle itself ran the canary")
     assert(ann.generation === 2L && ann.codeStore.maxTick === 2L,
       "the recluster re-enters the tick agreement at the loop tick")

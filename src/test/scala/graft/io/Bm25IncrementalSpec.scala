@@ -34,11 +34,11 @@ class Bm25IncrementalSpec extends AnyFunSuite {
 
     val inc = ArtifactStore.bm25Incremental(spark, root, "serveA")
     val tok0 = Retrieval.tokenizeRuns.get()
-    inc.appendDocs(corpus0)
-    inc.appendDocs(tick1)
+    inc.appendDocsAt(1L, corpus0)
+    inc.appendDocsAt(2L, tick1)
     // compaction mid-loop: ranking must be unaffected
     assert(inc.compact() > 0)
-    inc.appendDocs(tick2)
+    inc.appendDocsAt(3L, tick2)
     assert(Retrieval.tokenizeRuns.get() - tok0 === 3L,
       "exactly one tokenize pass per appended batch — compaction and " +
         "index() must never re-tokenize")

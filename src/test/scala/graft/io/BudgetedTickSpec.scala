@@ -121,7 +121,7 @@ class BudgetedTickSpec extends AnyFunSuite {
     val mixIdx = ArtifactStore.mixIncremental(spark, root, "sem_budget")
     mixIdx.bootstrap(corpus)
     val budgeted = IngestLoop.runBudgetedTick(stB, t1, w,
-      IngestLoop.QuotaLeg(mixIdx), sem = Some(legB))
+      IngestLoop.QuotaLeg(mixIdx), legs = IngestLoop.Legs(sem = Some(legB)))
     assert(budgeted.columns.toSeq === Seq("source", "n_batch",
       "n_dup_exact", "n_dup_fuzzy", "n_dup_semantic", "n_low_quality",
       "n_novel", "novel_tokens", "budget_tokens", "n_admitted",
@@ -130,7 +130,8 @@ class BudgetedTickSpec extends AnyFunSuite {
     // an identically bootstrapped state judged by the unbudgeted tick:
     // the budget only splits n_new, so every verdict count agrees
     val (stU, legU) = build("sem_plain")
-    val plain = rows(IngestLoop.runTick(stU, t1, w, sem = Some(legU)))
+    val plain = rows(IngestLoop.runTick(stU, t1, w,
+      legs = IngestLoop.Legs(sem = Some(legU))))
     assert(plain.map(_(4).asInstanceOf[Long]).sum > 0,
       "the semantic leg must reject someone")
     assert(rows(budgeted).map(_.take(7)) === plain,

@@ -46,9 +46,9 @@ class ComposedGateSpec extends AnyFunSuite {
     }
     // single-leg yardsticks over the SAME populations
     val semRep = IngestLoop.runTick(build("semonly"), t1, weights,
-      sem = Some(semLeg("semonly"))).collect()
+      legs = IngestLoop.Legs(sem = Some(semLeg("semonly")))).collect()
     val evalRep = IngestLoop.runTick(build("evalonly"), t1, weights,
-      eval = Some(evalLeg("evalonly"))).collect()
+      legs = IngestLoop.Legs(eval = Some(evalLeg("evalonly")))).collect()
     val nSem = semRep.map(_.getLong(4)).sum // n_dup_semantic
     val nCon = evalRep.map(_.getLong(4)).sum // n_contaminated
     assert(nSem > 0 && nCon > 0, "both yardstick legs must fire")
@@ -56,8 +56,9 @@ class ComposedGateSpec extends AnyFunSuite {
     val st = build("both")
     val quar = IngestLoop.quarantine(spark, root, "both")
     IngestLoop.bootstrapQuarantine(quar, corpus)
-    val rep = IngestLoop.runTick(st, t1, weights, quar = Some(quar),
-      sem = Some(semLeg("both")), eval = Some(evalLeg("both"))).collect()
+    val rep = IngestLoop.runTick(st, t1, weights,
+      legs = IngestLoop.Legs(quar = Some(quar), sem = Some(semLeg("both")),
+        eval = Some(evalLeg("both")))).collect()
     // composed columns: source, n_batch, exact, fuzzy, SEMANTIC,
     // CONTAMINATED, lowq, new
     assert(rep.map(_.getLong(4)).sum === nSem,
@@ -84,12 +85,13 @@ class ComposedGateSpec extends AnyFunSuite {
         Provenance.RetractRem)
     val leg2 = IngestLoop.semLeg(spark, root, "both", emb)
     val eleg2 = IngestLoop.evalLeg(spark, root, "both")
-    IngestLoop.retractTick(st, retracted, quar = Some(quar),
-      sem = Some(leg2), eval = Some(eleg2))
+    IngestLoop.retractTick(st, retracted,
+      legs = IngestLoop.Legs(quar = Some(quar), sem = Some(leg2),
+        eval = Some(eleg2)))
     IngestLoop.evalUpdateTick(st, eleg2, Decontam.eval2Docs(docs),
       Decontam.withdrawEvalIds(docs))
     val rr = IngestLoop.readjudicateTick(st, quar, weights,
-      sem = Some(leg2), eval = Some(eleg2)).collect()
+      legs = IngestLoop.Legs(sem = Some(leg2), eval = Some(eleg2))).collect()
     // extended report: source, n_quarantined, n_exact_t1, n_fuzzy_t1,
     // n_sem_t1, n_contam_t1, n_still_exact, n_still_fuzzy,
     // n_still_semantic, n_still_contaminated, n_low_quality,
@@ -121,8 +123,8 @@ class ComposedGateSpec extends AnyFunSuite {
     val quar = IngestLoop.quarantine(spark, root, "mmev")
     IngestLoop.bootstrapMmQuarantine(quar, corpus)
 
-    val rep = IngestLoop.runMmTick(st, t1, weights, quar = Some(quar),
-      eval = Some(eleg)).collect()
+    val rep = IngestLoop.runMmTick(st, t1, weights,
+      legs = IngestLoop.Legs(quar = Some(quar), eval = Some(eleg))).collect()
     // columns: source, n_batch, exact, fuzzy, CONTAMINATED, image,
     // audio, lowq, new
     assert(rep.map(_.getLong(4)).sum === 3L,
@@ -149,7 +151,7 @@ class ComposedGateSpec extends AnyFunSuite {
     IngestLoop.evalUpdateTick(st.text, eleg, Decontam.eval2Docs(docs),
       Decontam.withdrawEvalIds(docs))
     val rr = IngestLoop.readjudicateMmTick(st, quar, weights,
-      eval = Some(eleg)).collect()
+      legs = IngestLoop.Legs(eval = Some(eleg))).collect()
     // extras=[cid] columns: source, n_quarantined, n_exact_t1,
     // n_fuzzy_t1, n_contam_t1, n_image_t1, n_audio_t1, n_still_exact,
     // n_still_fuzzy, n_still_contaminated, n_still_image,
@@ -186,16 +188,18 @@ class ComposedGateSpec extends AnyFunSuite {
     def certify(tombs: org.apache.spark.sql.DataFrame) = ex.certify(
       docs.select("doc_id", "source"), tombs,
       minFillMicro = 0L, mixTolMicros = 1000000L)
-    IngestLoop.runFullTick(st, idx, cen, t1, weights,
-      export = Some(IngestLoop.ExportLeg(ex, ms)), eval = Some(eleg))
+    IngestLoop.runTick(st, t1, weights,
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+        export = Some(IngestLoop.ExportLeg(ex, ms)), eval = Some(eleg)))
     cs.record("job1", ex, certify(docs.select("doc_id").limit(0)))
 
     val caught = IngestLoop.evalUpdateTick(st, eleg,
       Decontam.eval2Docs(docs), Decontam.withdrawEvalIds(docs))
     assert(caught.count() > 0)
-    IngestLoop.retractTick(st, caught, idx = Some(idx),
-      census = Some((cen, docs.join(caught, Seq("doc_id"), "left_semi"))),
-      export = Some(ex), eval = Some(eleg))
+    IngestLoop.retractTick(st, caught,
+      docs = Some(docs.join(caught, Seq("doc_id"), "left_semi")),
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+        export = Some(IngestLoop.ExportLeg(ex, ms)), eval = Some(eleg)))
     cs.record("job2", ex, certify(caught))
 
     // the export physically dropped the caught doc; the ledger still

@@ -52,7 +52,7 @@ class CurateTickSpec extends AnyFunSuite {
 
     val (st, leg) = build(root, "cur1")
     assert(rows(IngestLoop.runTick(st, batch, weights,
-      curate = Some(leg))) === live,
+      legs = IngestLoop.Legs(curate = Some(leg)))) === live,
       "the curated deployment tick must equal the live q137 report")
   }
 
@@ -64,8 +64,9 @@ class CurateTickSpec extends AnyFunSuite {
     val ms = Bpe.merges(corpus)
     val ex = ArtifactStore.packedExport(spark, root, "cur2_ex")
     ex.bootstrap(corpus, ms)
-    IngestLoop.runFullTick(st, idx, leg.census, batch, weights,
-      export = Some(IngestLoop.ExportLeg(ex, ms)), curate = Some(leg))
+    IngestLoop.runTick(st, batch, weights,
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(leg.census),
+        export = Some(IngestLoop.ExportLeg(ex, ms)), curate = Some(leg)))
 
     // the expected curated form, re-derived with the shared transform
     val admDocs = batch.join(st.hashes.current().get
@@ -87,7 +88,7 @@ class CurateTickSpec extends AnyFunSuite {
     // raw provenance: an admitted doc's RAW copy still hits the exact
     // gate even though the stored serving text is curated
     val resub = IngestLoop.runTick(st, admDocs, weights,
-      curate = Some(leg)).collect()
+      legs = IngestLoop.Legs(curate = Some(leg))).collect()
     assert(resub.map(_.getLong(2)).sum === admDocs.count(),
       "every resubmitted raw copy must be dup_exact")
   }
@@ -96,7 +97,7 @@ class CurateTickSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_cur_crash").toString
     val (stA, legA) = build(root, "clean")
     val repClean = rows(IngestLoop.runTick(stA, batch, weights,
-      curate = Some(legA)))
+      legs = IngestLoop.Legs(curate = Some(legA))))
 
     val (stB, legB) = build(root, "crash")
     IngestLoop.runTick(stB, batch, weights)
@@ -104,7 +105,7 @@ class CurateTickSpec extends AnyFunSuite {
       legB.census.censusStore.maxTick === 1L,
       "precondition: dedup stores at tick 2, the census lags")
     assert(rows(IngestLoop.runTick(stB, batch, weights,
-      curate = Some(legB))) === repClean,
+      legs = IngestLoop.Legs(curate = Some(legB)))) === repClean,
       "the redone tick must reproduce the curated report")
     assert(legB.census.censusStore.maxTick === 2L)
   }

@@ -55,7 +55,7 @@ class DecontamIngestSpec extends AnyFunSuite {
 
     val (st, leg, quar) = build(root, "dc1")
     val rep1 = rows(IngestLoop.runTick(st, t1, weights,
-      quar = Some(quar), eval = Some(leg)))
+      legs = IngestLoop.Legs(quar = Some(quar), eval = Some(leg))))
     assert(rep1.map(r => r.slice(0, 7)) ===
       live.map(r => r.slice(0, 7)).filter(_(1) != 0L),
       "the gated tick must reproduce the live q136 tick-1 columns")
@@ -80,7 +80,7 @@ class DecontamIngestSpec extends AnyFunSuite {
     // re-adjudication with the leg attached (no retraction yet — the
     // live form's phase 3a population)
     val rr = IngestLoop.readjudicateTick(st, quar, weights,
-      eval = Some(leg)).collect()
+      legs = IngestLoop.Legs(eval = Some(leg))).collect()
     // cols: source, n_quarantined, n_exact_t1, n_fuzzy_t1, n_contam_t1,
     // n_still_exact, n_still_fuzzy, n_still_contaminated,
     // n_low_quality, n_readmitted
@@ -99,20 +99,20 @@ class DecontamIngestSpec extends AnyFunSuite {
   test("the caught docs' retraction composes; a resubmitted caught doc is now CONTAMINATED, not new") {
     val root = Files.createTempDirectory("graft_dc_retract").toString
     val (st, leg, quar) = build(root, "dc2")
-    IngestLoop.runTick(st, t1, weights, quar = Some(quar),
-      eval = Some(leg))
+    IngestLoop.runTick(st, t1, weights,
+      legs = IngestLoop.Legs(quar = Some(quar), eval = Some(leg)))
     val caught = IngestLoop.evalUpdateTick(st, leg,
       Decontam.eval2Docs(docs), Decontam.withdrawEvalIds(docs))
-    IngestLoop.retractTick(st, caught, quar = Some(quar),
-      eval = Some(leg))
+    IngestLoop.retractTick(st, caught,
+      legs = IngestLoop.Legs(quar = Some(quar), eval = Some(leg)))
     assert(Seq(st.hashes, st.bands, st.shingles, leg.docGrams,
         quar.rows, quar.resolvedIds).map(_.maxTick).distinct.size === 1,
       "the docGrams store advances with the takedown tick")
     // the caught doc's copy no longer hits the exact gate (retracted)
     // but the maintained eval state now REJECTS it as contaminated —
     // the loop keeps the eval-hitting content out for good
-    val resub = IngestLoop.runTick(st,
-      docs.filter(col("doc_id") === 8L), weights, eval = Some(leg))
+    val resub = IngestLoop.runTick(st, docs.filter(col("doc_id") === 8L),
+      weights, legs = IngestLoop.Legs(eval = Some(leg)))
       .collect()
     assert(resub.map(_.getLong(2)).sum === 0L, "exact gate released it")
     assert(resub.map(_.getLong(4)).sum === 1L,
@@ -123,14 +123,14 @@ class DecontamIngestSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_dc_crash").toString
     val (stA, legA, _) = build(root, "clean")
     val repClean = rows(IngestLoop.runTick(stA, t1, weights,
-      eval = Some(legA)))
+      legs = IngestLoop.Legs(eval = Some(legA))))
 
     val (stB, legB, _) = build(root, "crash")
     IngestLoop.runTick(stB, t1, weights)
     assert(stB.shingles.maxTick === 2L && legB.docGrams.maxTick === 1L,
       "precondition: dedup stores at tick 2, docGrams lags")
     assert(rows(IngestLoop.runTick(stB, t1, weights,
-      eval = Some(legB))) === repClean,
+      legs = IngestLoop.Legs(eval = Some(legB)))) === repClean,
       "the redone tick judges under the decontam gate like a clean run")
     assert(legB.docGrams.maxTick === 2L)
 
@@ -139,11 +139,12 @@ class DecontamIngestSpec extends AnyFunSuite {
     val retracted = stA.hashes.current().get.select("doc_id").filter(
       pmod(col("doc_id"), lit(Provenance.RetractMod)) ===
         Provenance.RetractRem)
-    IngestLoop.retractTick(stA, retracted, eval = Some(legA))
+    IngestLoop.retractTick(stA, retracted,
+      legs = IngestLoop.Legs(eval = Some(legA)))
     val liveGrams = IngestLoop.resolved(stA, legA.docGrams.current().get)
       .collect().map(_.toSeq).toSet
     assert(IngestLoop.compactIfNeeded(stA, maxDataFiles = 1,
-      eval = Some(legA)))
+      legs = IngestLoop.Legs(eval = Some(legA))))
     assert(stA.tombs.current().isEmpty)
     assert(IngestLoop.resolved(stA, legA.docGrams.current().get)
       .collect().map(_.toSeq).toSet === liveGrams)
@@ -166,8 +167,9 @@ class DecontamIngestSpec extends AnyFunSuite {
     val (st, leg, quar) = build(root, "dcrg")
     val replay = IngestLoop.replayLeg(spark, root, "dcrg")
     IngestLoop.bootstrapReplay(replay, corpus)
-    IngestLoop.runTick(st, t1, weights, quar = Some(quar),
-      replay = Some(replay), eval = Some(leg))
+    IngestLoop.runTick(st, t1, weights,
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay),
+        eval = Some(leg)))
     assert(leg.docGrams.maxTick === 2L)
 
     // the INVERTED model flips tick-1 quality rejections out of their
@@ -176,8 +178,8 @@ class DecontamIngestSpec extends AnyFunSuite {
     // tick 2, and the next eval-attached tick's agreement resolved to
     // the regate tick, silently overwriting it (the readmitted docs
     // vanished from dedup state and never entered the retro-catch index)
-    val rep = IngestLoop.regateTick(st, quar, replay,
-      weights.map(x => -x), eval = Some(leg)).collect()
+    val rep = IngestLoop.regateTick(st, quar, replay, weights.map(x => -x),
+      legs = IngestLoop.Legs(eval = Some(leg))).collect()
     val nReadm = rep.map(_.getLong(3)).sum
     assert(nReadm > 0, "the inverted model must re-admit someone")
     assert(leg.docGrams.maxTick === 3L,
@@ -192,8 +194,9 @@ class DecontamIngestSpec extends AnyFunSuite {
     val tick3Hashes = st.hashes.current().get
       .join(readmIds, Seq("doc_id"), "left_semi").count()
     assert(tick3Hashes === nReadm)
-    IngestLoop.runTick(st, t2, weights, quar = Some(quar),
-      replay = Some(replay), eval = Some(leg))
+    IngestLoop.runTick(st, t2, weights,
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay),
+        eval = Some(leg)))
     assert(st.hashes.maxTick === 4L && leg.docGrams.maxTick === 4L,
       "the next tick lands at 4, never ON the regate tick")
     assert(leg.docGrams.current().get

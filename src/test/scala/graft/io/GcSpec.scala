@@ -47,7 +47,7 @@ class GcSpec extends AnyFunSuite {
     assert(st.gc() > 0L && setOf(st.current().get) === before)
     assert(st.gc() === 0L, "a clean tree gc's to nothing")
     // the store still ticks and compacts on the gc'd tree
-    st.appendTick(docs.limit(5).select("doc_id"))
+    st.appendTickAt(5L, docs.limit(5).select("doc_id"))
     assert(st.maxTick === 5L)
   }
 

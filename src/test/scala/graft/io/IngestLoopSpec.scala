@@ -195,9 +195,9 @@ class IngestLoopSpec extends AnyFunSuite {
     // deployment form: one partial manifest appended per tick, merged
     // on read — O(buckets) rows per tick, never a corpus rescan
     val st = ArtifactStore.ingestState(spark, root, "manifests")
-    st.appendTick(Provenance.q70Manifest(corpus))
-    st.appendTick(Provenance.q70Manifest(adm1))
-    st.appendTick(Provenance.q70Manifest(adm2))
+    st.appendTickAt(1, Provenance.q70Manifest(corpus))
+    st.appendTickAt(2, Provenance.q70Manifest(adm1))
+    st.appendTickAt(3, Provenance.q70Manifest(adm2))
     val merged = Provenance.mergeManifests(st.current().get)
       .collect().map(_.toSeq)
 
@@ -238,8 +238,10 @@ class IngestLoopSpec extends AnyFunSuite {
       "re-run index bootstrap must overwrite tick 1, not append tick 2")
 
     val tok0 = Retrieval.tokenizeRuns.get()
-    val rep1 = IngestLoop.runTickWithRetrieval(st, idx, t1, w).collect()
-    val rep2 = IngestLoop.runTickWithRetrieval(st, idx, t2, w).collect()
+    val rep1 = IngestLoop.runTick(st, t1, w,
+      legs = IngestLoop.Legs(idx = Some(idx))).collect()
+    val rep2 = IngestLoop.runTick(st, t2, w,
+      legs = IngestLoop.Legs(idx = Some(idx))).collect()
     assert(Retrieval.tokenizeRuns.get() - tok0 === 2L,
       "each tick tokenizes exactly its admitted slice, nothing else")
 
@@ -276,7 +278,8 @@ class IngestLoopSpec extends AnyFunSuite {
     IngestLoop.bootstrap(stA, corpus)
     val idxA = ArtifactStore.bm25Incremental(spark, root, "retr_clean")
     idxA.bootstrap(corpus)
-    val cleanRep = rows(IngestLoop.runTickWithRetrieval(stA, idxA, t1, w))
+    val cleanRep = rows(IngestLoop.runTick(stA, t1, w,
+      legs = IngestLoop.Legs(idx = Some(idxA))))
 
     // the crashed loop: all three dedup folds of tick 2 landed (runTick
     // without the index is EXACTLY the r10-advice crash point — after
@@ -293,7 +296,8 @@ class IngestLoopSpec extends AnyFunSuite {
     // replay: nextTick must see the FOUR-store disagreement and redo
     // tick 2 (not compute tick 3 — which would judge the replayed batch
     // against its own tick-2 admissions and report everything dup_exact)
-    val replayRep = rows(IngestLoop.runTickWithRetrieval(stB, idxB, t1, w))
+    val replayRep = rows(IngestLoop.runTick(stB, t1, w,
+      legs = IngestLoop.Legs(idx = Some(idxB))))
     assert(replayRep === cleanRep,
       "replayed verdicts must be identical to the uncrashed run")
     assert(idxB.tfStore.maxTick === 2L,
@@ -326,8 +330,10 @@ class IngestLoopSpec extends AnyFunSuite {
       (st, idx, cen)
     }
     val (stA, idxA, cenA) = build("full_clean")
-    val rep1 = rows(IngestLoop.runFullTick(stA, idxA, cenA, t1, w))
-    val rep2 = rows(IngestLoop.runFullTick(stA, idxA, cenA, t2, w))
+    val rep1 = rows(IngestLoop.runTick(stA, t1, w,
+      legs = IngestLoop.Legs(idx = Some(idxA), census = Some(cenA))))
+    val rep2 = rows(IngestLoop.runTick(stA, t2, w,
+      legs = IngestLoop.Legs(idx = Some(idxA), census = Some(cenA))))
     assert(rep1.nonEmpty && rep2.nonEmpty)
 
     // the served census ≡ a full re-mine over base ∪ all admissions —
@@ -343,10 +349,11 @@ class IngestLoopSpec extends AnyFunSuite {
     // census append never does — the census store's lag must force the
     // REDO of the whole tick, reproducing identical verdicts
     val (stB, idxB, cenB) = build("full_crash")
-    IngestLoop.runTickWithRetrieval(stB, idxB, t1, w)
+    IngestLoop.runTick(stB, t1, w, legs = IngestLoop.Legs(idx = Some(idxB)))
     assert(stB.shingles.maxTick === 2L && cenB.censusStore.maxTick === 1L,
       "precondition: dedup+postings at tick 2, census lags")
-    val replay = rows(IngestLoop.runFullTick(stB, idxB, cenB, t1, w))
+    val replay = rows(IngestLoop.runTick(stB, t1, w,
+      legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB))))
     assert(replay === rep1,
       "five-store replay must reproduce the uncrashed verdicts")
     assert(cenB.censusStore.maxTick === 2L, "census append repaired")
@@ -356,8 +363,8 @@ class IngestLoopSpec extends AnyFunSuite {
     val t1Adm = stA.hashes.currentUpTo(2).get.select("doc_id")
       .join(stA.hashes.currentUpTo(1).get.select("doc_id"),
         Seq("doc_id"), "left_anti")
-    IngestLoop.retractTick(stA, t1Adm,
-      idx = Some(idxA), census = Some((cenA, docs)))
+    IngestLoop.retractTick(stA, t1Adm, docs = Some(docs),
+      legs = IngestLoop.Legs(idx = Some(idxA), census = Some(cenA)))
     val surviving = admitted.join(t1Adm, Seq("doc_id"), "left_anti")
     assert(cenA.winners().collect().map(_.getLong(0)).toSeq ===
       SubstringDedup.winnersFromCensus(SubstringDedup.censusOf(surviving))
@@ -391,7 +398,9 @@ class IngestLoopSpec extends AnyFunSuite {
     val mixIdx = ArtifactStore.mixIncremental(spark, root, "tdtick")
     mixIdx.bootstrap(corpus)
 
-    IngestLoop.runFullTick(st, idx, cen, t1, w, mix = Some(mixIdx))
+    IngestLoop.runTick(st, t1, w,
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+        mix = Some(mixIdx)))
     // takedown WITH subtraction legs, mid-loop — every attached store
     // advances to the takedown tick together
     val t1Adm = st.hashes.currentUpTo(2).get.select("doc_id")
@@ -400,8 +409,9 @@ class IngestLoopSpec extends AnyFunSuite {
       .filter(pmod(col("doc_id"), lit(Provenance.RetractMod)) ===
         Provenance.RetractRem)
     assert(t1Adm.count() > 0)
-    IngestLoop.retractTick(st, t1Adm, idx = Some(idx),
-      census = Some((cen, docs)), mix = Some((mixIdx, docs)))
+    IngestLoop.retractTick(st, t1Adm, docs = Some(docs),
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+        mix = Some(mixIdx)))
     assert(Seq(st.hashes.maxTick, st.bands.maxTick, st.shingles.maxTick,
       idx.tfStore.maxTick, cen.censusStore.maxTick,
       mixIdx.mixStore.maxTick).distinct === Seq(3L),
@@ -409,7 +419,9 @@ class IngestLoopSpec extends AnyFunSuite {
 
     // the regression this test exists for: the NEXT tick used to land
     // ON the takedown tick and overwrite the census/mix negatives
-    IngestLoop.runFullTick(st, idx, cen, t2, w, mix = Some(mixIdx))
+    IngestLoop.runTick(st, t2, w,
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+        mix = Some(mixIdx)))
     val ingested = docs.join(
       IngestLoop.resolved(st, st.hashes.current().get).select("doc_id"),
       Seq("doc_id"), "left_semi")
@@ -461,8 +473,9 @@ class IngestLoopSpec extends AnyFunSuite {
     val (stA, idxA, cenA, exA) = build("exp_clean")
     val mixA = ArtifactStore.mixIncremental(spark, root, "exp_clean_mix")
     mixA.bootstrap(corpus)
-    val rep1 = rows(IngestLoop.runFullTick(stA, idxA, cenA, t1, w,
-      export = Some(IngestLoop.ExportLeg(exA, ms)), mix = Some(mixA)))
+    val rep1 = rows(IngestLoop.runTick(stA, t1, w,
+      legs = IngestLoop.Legs(idx = Some(idxA), census = Some(cenA),
+        export = Some(IngestLoop.ExportLeg(exA, ms)), mix = Some(mixA))))
     assert(rep1.nonEmpty)
 
     // export epoch 2 ≡ a text-side pack of exactly the admitted docs
@@ -494,11 +507,13 @@ class IngestLoopSpec extends AnyFunSuite {
     // CRASH: the six-store tick lands but the export append never does
     // — the export's lag must force the REDO of the whole tick
     val (stB, idxB, cenB, exB) = build("exp_crash")
-    IngestLoop.runFullTick(stB, idxB, cenB, t1, w) // no export leg
+    IngestLoop.runTick(stB, t1, w, // no export leg
+      legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB)))
     assert(exB.maxTick === 1L && stB.shingles.maxTick === 2L,
       "precondition: every other store at tick 2, export lags")
-    val replay = rows(IngestLoop.runFullTick(stB, idxB, cenB, t1, w,
-      export = Some(IngestLoop.ExportLeg(exB, ms))))
+    val replay = rows(IngestLoop.runTick(stB, t1, w,
+      legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB),
+        export = Some(IngestLoop.ExportLeg(exB, ms)))))
     assert(replay === rep1,
       "the redone tick must reproduce the uncrashed verdicts")
     assert(exB.maxTick === 2L, "export epoch repaired")
@@ -509,9 +524,9 @@ class IngestLoopSpec extends AnyFunSuite {
     val takedown = adm1.filter(
       pmod(col("doc_id"), lit(Provenance.RetractMod)) === Provenance.RetractRem)
     assert(takedown.count() > 0)
-    IngestLoop.retractTick(stA, takedown,
-      idx = Some(idxA), census = Some((cenA, docs)), export = Some(exA),
-      mix = Some((mixA, docs)))
+    IngestLoop.retractTick(stA, takedown, docs = Some(docs),
+      legs = IngestLoop.Legs(idx = Some(idxA), census = Some(cenA),
+        export = Some(IngestLoop.ExportLeg(exA, ms)), mix = Some(mixA)))
     assert(sliceSet(exA.slices().filter(col("tick") === 2)) ===
       sliceSet(Packing.tickSlices(
         admDocs.join(takedown, Seq("doc_id"), "left_anti"), seqLen, ms)),

@@ -40,7 +40,7 @@ class IngestStateSpec extends AnyFunSuite {
         case Some(s) => tickHashes.join(s, Seq("ch"), "left_anti")
         case None => tickHashes
       }
-      state.appendTick(fresh)
+      state.appendTickAt(k + 1L, fresh)
     }
     assert(state.maxTick === 6L)
     val filesBefore = state.dataFileCount
@@ -69,7 +69,8 @@ class IngestStateSpec extends AnyFunSuite {
     val extra = Provenance.corpusHashState(
         docs.filter(pmod(col("doc_id"), lit(8L)) === 7))
       .join(state.current().get, Seq("ch"), "left_anti")
-    assert(state.appendTick(extra) === 7L)
+    state.appendTickAt(7L, extra)
+    assert(state.maxTick === 7L)
     val (n7, _) = checksum(state.current().get)
     assert(n7 > before._1, "tick 7 content must be visible")
   }
@@ -78,7 +79,7 @@ class IngestStateSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_ingest_crash").toString
     val state = ArtifactStore.ingestState(spark, root, "hashes")
     (0 until 3).foreach { k =>
-      state.appendTick(Provenance.corpusHashState(
+      state.appendTickAt(k + 1L, Provenance.corpusHashState(
         docs.filter(pmod(col("doc_id"), lit(8L)) === k)))
     }
     val before = checksum(state.current().get)
@@ -101,7 +102,7 @@ class IngestStateSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_upto_guard").toString
     val state = ArtifactStore.ingestState(spark, root, "hashes")
     (0 until 5).foreach { k =>
-      state.appendTick(Provenance.corpusHashState(
+      state.appendTickAt(k + 1L, Provenance.corpusHashState(
         docs.filter(pmod(col("doc_id"), lit(8L)) === k)))
     }
     // fold ticks 1..2 into gen=2 by compacting early: fabricate via a

@@ -163,8 +163,8 @@ class MmIngestSpec extends AnyFunSuite {
     val mx = ArtifactStore.mixIncremental(spark, root, "legs_mx")
     mx.bootstrap(corpus)
     val rep1 = rows(IngestLoop.runMmTick(st, t1, w,
-      idx = Some(idx), census = Some(cen),
-      export = Some(IngestLoop.ExportLeg(ex, ms)), mix = Some(mx)))
+      legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+        export = Some(IngestLoop.ExportLeg(ex, ms)), mix = Some(mx))))
     assert(rep1.nonEmpty)
 
     // every consumer serves exactly base ∪ the mm tick's admissions
@@ -194,11 +194,12 @@ class MmIngestSpec extends AnyFunSuite {
 
     // a lagging consumer leg forces the whole-tick redo
     val (stB, idxB, cenB, exB) = build("legs_crash")
-    IngestLoop.runMmTick(stB, t1, w, idx = Some(idxB), census = Some(cenB))
+    IngestLoop.runMmTick(stB, t1, w,
+      legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB)))
     assert(exB.maxTick === 1L && stB.audSigs.maxTick === 2L)
     val replay = rows(IngestLoop.runMmTick(stB, t1, w,
-      idx = Some(idxB), census = Some(cenB),
-      export = Some(IngestLoop.ExportLeg(exB, ms))))
+      legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB),
+        export = Some(IngestLoop.ExportLeg(exB, ms)))))
     assert(replay === rep1, "the redone mm tick must reproduce the verdicts")
     assert(exB.maxTick === 2L)
   }
@@ -219,15 +220,16 @@ class MmIngestSpec extends AnyFunSuite {
     IngestLoop.bootstrapSem(leg, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmsem")
     IngestLoop.bootstrapMmQuarantine(quar, corpus)
-    val rep1 = IngestLoop.runMmTick(st, t1, w, sem = Some(leg),
-      quar = Some(quar)).collect()
+    val rep1 = IngestLoop.runMmTick(st, t1, w,
+      legs = IngestLoop.Legs(sem = Some(leg), quar = Some(quar))).collect()
     // sem report: src, n_batch, exact, fuzzy, SEMANTIC, image, audio,
     // lowq, new
     assert(rep1.map(_.getLong(4)).sum > 0,
       "tick 1's semantic leg must fire in the unified loop")
     assert(rep1.map(_.getLong(5)).sum > 0 && rep1.map(_.getLong(6)).sum > 0,
       "the image/audio legs must keep firing next to the semantic one")
-    IngestLoop.runMmTick(st, t2, w, sem = Some(leg), quar = Some(quar))
+    IngestLoop.runMmTick(st, t2, w,
+      legs = IngestLoop.Legs(sem = Some(leg), quar = Some(quar)))
     assert(quar.rows.current().get.filter(col("doc_id") === 425L)
       .select("verdict").collect().map(_.getString(0)).toSeq
       === Seq("dup_semantic"),
@@ -238,11 +240,12 @@ class MmIngestSpec extends AnyFunSuite {
     val retracted = st.text.hashes.current().get.select("doc_id").filter(
       pmod(col("doc_id"), lit(Provenance.RetractMod)) ===
         Provenance.RetractRem)
-    IngestLoop.retractMmTick(st, retracted, quar = Some(quar),
-      sem = Some(leg))
+    IngestLoop.retractTick(st, retracted,
+      legs = IngestLoop.Legs(quar = Some(quar), sem = Some(leg)))
     assert((st.all.map(_.maxTick) :+ leg.sigs.maxTick).distinct.size === 1,
       "the sem sig store advances with the mm takedown tick")
-    val rep = IngestLoop.readjudicateMmTick(st, quar, w, sem = Some(leg))
+    val rep = IngestLoop.readjudicateMmTick(st, quar, w,
+      legs = IngestLoop.Legs(sem = Some(leg)))
       .collect()
     // sem readj report: src, n_quarantined, exact_t1, fuzzy_t1, sem_t1,
     // image_t1, audio_t1, still_exact, still_fuzzy, still_semantic,
@@ -274,15 +277,17 @@ class MmIngestSpec extends AnyFunSuite {
     IngestLoop.bootstrapMm(st, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmreadj")
     IngestLoop.bootstrapMmQuarantine(quar, corpus)
-    IngestLoop.runMmTick(st, batch, w, quar = Some(quar))
+    IngestLoop.runMmTick(st, batch, w,
+      legs = IngestLoop.Legs(quar = Some(quar)))
     val retracted = st.text.hashes.current().get.select("doc_id").filter(
       pmod(col("doc_id"), lit(Provenance.RetractMod)) ===
         Provenance.RetractRem)
     // the mm takedown form WITH the quarantine attached (r11 advice:
     // retractTick(st.text, …) left imgSigs/audSigs/quarantine one tick
     // behind, so the re-adjudication landed ON the takedown tick and
-    // overwrote its markers; retractMmTick was never exercised)
-    IngestLoop.retractMmTick(st, retracted, quar = Some(quar))
+    // overwrote its markers; the mm takedown was never exercised)
+    IngestLoop.retractTick(st, retracted,
+      legs = IngestLoop.Legs(quar = Some(quar)))
     assert((st.all.map(_.maxTick) ++
         Seq(quar.rows.maxTick, quar.resolvedIds.maxTick)).distinct
       === Seq(3L),
@@ -320,8 +325,9 @@ class MmIngestSpec extends AnyFunSuite {
     val replay = IngestLoop.replayLeg(spark, root, "mmrp")
     IngestLoop.bootstrapReplay(replay, corpus)
 
-    val rep = IngestLoop.runMmTick(st, t1, w, quar = Some(quar),
-      replay = Some(replay)).collect()
+    val rep = IngestLoop.runMmTick(st, t1, w,
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay)))
+      .collect()
     val novel = rep.map(r => r.getAs[Long]("n_low_quality") +
       r.getAs[Long]("n_new")).sum
     assert(novel > 0, "the pin needs a non-empty quality window")
@@ -336,7 +342,8 @@ class MmIngestSpec extends AnyFunSuite {
     // tick 1, and this replay-attached re-adjudication's agreement
     // resolved to tick 2 — silently overwriting the ingest tick's
     // five-store increments
-    IngestLoop.readjudicateMmTick(st, quar, w, replay = Some(replay))
+    IngestLoop.readjudicateMmTick(st, quar, w,
+      legs = IngestLoop.Legs(replay = Some(replay)))
     assert(st.text.hashes.maxTick === 3L && replay.feats.maxTick === 3L,
       "the re-adjudication lands at tick 3, never ON the ingest tick")
     assert(replay.feats.current().get.filter(col("tick") === 2L).count()
@@ -371,7 +378,8 @@ class MmIngestSpec extends AnyFunSuite {
     // 437 renders eval item 435's AUDIO (435 survives: the hold
     // direction) — neither eval item is in the corpus, so the only
     // evidence is the eval channel
-    IngestLoop.runMmTick(st, t1, w, quar = Some(quar), eval = Some(leg))
+    IngestLoop.runMmTick(st, t1, w,
+      legs = IngestLoop.Legs(quar = Some(quar), eval = Some(leg)))
     val qv = quar.rows.current().get
       .select("doc_id", "verdict").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -393,7 +401,8 @@ class MmIngestSpec extends AnyFunSuite {
 
     // re-adjudication with the leg: 10 re-admits (withdrawn evidence),
     // 437 stays held by the surviving item's signature
-    IngestLoop.readjudicateMmTick(st, quar, w, eval = Some(leg))
+    IngestLoop.readjudicateMmTick(st, quar, w,
+      legs = IngestLoop.Legs(eval = Some(leg)))
     val resolved = quar.resolvedIds.current().get
       .collect().map(_.getLong(0)).toSet
     assert(resolved.contains(10L),
@@ -416,16 +425,15 @@ class MmIngestSpec extends AnyFunSuite {
     IngestLoop.bootstrapMmQuarantine(quar, corpus)
     val replay = IngestLoop.replayLeg(spark, root, "mmrg")
     IngestLoop.bootstrapReplay(replay, corpus)
-    IngestLoop.runMmTick(st, t1, w, quar = Some(quar),
-      replay = Some(replay))
+    IngestLoop.runMmTick(st, t1, w,
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay)))
     assert(quar.rows.current().get
       .filter(col("verdict") === "low_quality").count() > 0)
 
     // the inverted model flips tick-1 quality rejections out of their
     // window — they re-admit from the mm quarantine, stored 8-byte
     // signatures folding into the modality stores (no payload reads)
-    val rep = IngestLoop.regateMmTick(st, quar, replay,
-      w.map(x => -x)).collect()
+    val rep = IngestLoop.regateTick(st, quar, replay, w.map(x => -x)).collect()
     val nReadm = rep.map(_.getLong(3)).sum
     assert(nReadm > 0, "the inverted model must re-admit someone")
     assert((st.all.map(_.maxTick) ++
@@ -459,7 +467,7 @@ class MmIngestSpec extends AnyFunSuite {
     IngestLoop.bootstrapMm(st, corpus)
     val leg = IngestLoop.evalLeg(spark, root, "mmce")
     IngestLoop.bootstrapEval(leg, corpus, Decontam.eval1Docs(docs))
-    IngestLoop.runMmTick(st, t1, w, eval = Some(leg))
+    IngestLoop.runMmTick(st, t1, w, legs = IngestLoop.Legs(eval = Some(leg)))
 
     // severed: re-read after the compaction deletes the folded tick
     // files it was derived from
@@ -467,11 +475,12 @@ class MmIngestSpec extends AnyFunSuite {
       pmod(col("doc_id"), lit(Provenance.RetractMod)) ===
         Provenance.RetractRem)
       .localCheckpoint()
-    IngestLoop.retractMmTick(st, retracted, eval = Some(leg))
+    IngestLoop.retractTick(st, retracted,
+      legs = IngestLoop.Legs(eval = Some(leg)))
     val liveGrams = IngestLoop.resolved(st.text,
       leg.docGrams.current().get).collect().map(_.toSeq).toSet
-    assert(IngestLoop.compactMmIfNeeded(st, maxDataFiles = 1,
-      eval = Some(leg)))
+    assert(IngestLoop.compactIfNeeded(st, maxDataFiles = 1,
+      legs = IngestLoop.Legs(eval = Some(leg))))
     assert(st.text.tombs.current().isEmpty,
       "tombstones cleared after every sharing store folded")
     assert(IngestLoop.resolved(st.text, leg.docGrams.current().get)
@@ -550,12 +559,11 @@ class MmIngestSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ex.servedSlices())
     val iSigRows = st.imgSigs.current().get.count()
 
-    val res = IngestLoop.quiesceMm(st, spark, root,
-      sem = Some(leg), semNextName = Some("mmq_v2"),
-      export = Some(IngestLoop.ExportLeg(ex, ms)),
-      docSources = Some(docs.select("doc_id", "source")),
-      maxDataFiles = 0L,
-      minFillMicro = 0L, mixTolMicros = 1000000L)
+    val res = IngestLoop.quiesce(st, spark, root, semNextName = Some("mmq_v2"),
+      docSources = Some(docs.select("doc_id", "source")), maxDataFiles = 0L,
+      minFillMicro = 0L, mixTolMicros = 1000000L,
+      legs = IngestLoop.Legs(sem = Some(leg),
+        export = Some(IngestLoop.ExportLeg(ex, ms))))
     assert(res.compacted,
       "the mm bundle's compaction step is the MM fold — it must reach " +
         "the modality sig stores, not just the text three")

@@ -144,7 +144,8 @@ class ModelStoreSpec extends AnyFunSuite {
       .orderBy("hv", "doc_id").select("doc_id")
       .collect().map(_.getLong(0)).toSeq
     val hit = ranked.take(6)
-    IngestLoop.retractTick(st, ids(hit), model = Some(ms))
+    IngestLoop.retractTick(st, ids(hit),
+      legs = IngestLoop.Legs(model = Some(ms)))
     assert(ms.generation === 2L)
     val w1 = ms.servingWeights()
     assert(w1 === QualityModel.train(
@@ -152,7 +153,8 @@ class ModelStoreSpec extends AnyFunSuite {
     assert(w1 !== w0)
 
     // replay: every id already tombstoned → the model leg must not run
-    IngestLoop.retractTick(st, ids(hit), model = Some(ms))
+    IngestLoop.retractTick(st, ids(hit),
+      legs = IngestLoop.Legs(model = Some(ms)))
     assert(ms.generation === 2L,
       "a replayed takedown must not open a new model generation")
     assert(ms.servingWeights() === w1)

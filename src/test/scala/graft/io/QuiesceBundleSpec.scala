@@ -35,9 +35,9 @@ class QuiesceBundleSpec extends AnyFunSuite {
 
     // quiesce #1 folds the stores to committed generations (so a
     // later interrupted-delete leftover is strictly shadowed)
-    IngestLoop.quiesce(st, spark, root, export = Some(leg),
-      docSources = Some(srcs), maxDataFiles = 0L,
-      minFillMicro = 0L, mixTolMicros = 1000000L)
+    IngestLoop.quiesce(st, spark, root, docSources = Some(srcs),
+      maxDataFiles = 0L, minFillMicro = 0L, mixTolMicros = 1000000L,
+      legs = IngestLoop.Legs(export = Some(leg)))
 
     // CRASH simulation: (a) an interrupted compaction delete left a
     // tick dir at/below the committed generation in a data store;
@@ -52,17 +52,17 @@ class QuiesceBundleSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(tickLeftover)))
 
     // opting out leaves the leftovers (and frees nothing)
-    val resNoGc = IngestLoop.quiesce(st, spark, root, export = Some(leg),
-      docSources = Some(srcs), gcStores = false,
-      minFillMicro = 0L, mixTolMicros = 1000000L)
+    val resNoGc = IngestLoop.quiesce(st, spark, root, docSources = Some(srcs),
+      gcStores = false, minFillMicro = 0L, mixTolMicros = 1000000L,
+      legs = IngestLoop.Legs(export = Some(leg)))
     assert(resNoGc.gcBytes === 0L && Files.exists(revLeftover) &&
       Files.exists(Paths.get(tickLeftover)),
       "gcStores = false must not collect")
 
     // the bare bundle sheds both — the test never calls gc()
-    val res = IngestLoop.quiesce(st, spark, root, export = Some(leg),
-      docSources = Some(srcs),
-      minFillMicro = 0L, mixTolMicros = 1000000L)
+    val res = IngestLoop.quiesce(st, spark, root, docSources = Some(srcs),
+      minFillMicro = 0L, mixTolMicros = 1000000L,
+      legs = IngestLoop.Legs(export = Some(leg)))
     assert(res.gcBytes > 0L, "the bundle must report the bytes it freed")
     assert(!Files.exists(Paths.get(tickLeftover)),
       "the ingest store's shadowed tick dir is gone")
@@ -82,8 +82,9 @@ class QuiesceBundleSpec extends AnyFunSuite {
     ex.bootstrap(corpus, ms)
     val leg = IngestLoop.ExportLeg(ex, ms)
     val srcs = corpus.select("doc_id", "source")
-    val res1 = IngestLoop.quiesce(st, spark, root, export = Some(leg),
-      docSources = Some(srcs), minFillMicro = 0L, mixTolMicros = 1000000L)
+    val res1 = IngestLoop.quiesce(st, spark, root, docSources = Some(srcs),
+      minFillMicro = 0L, mixTolMicros = 1000000L,
+      legs = IngestLoop.Legs(export = Some(leg)))
     assert(res1.cert.get.select("decision").collect()
       .forall(_.getString(0) == "serve"), "precondition: sealed serving")
 
@@ -97,9 +98,9 @@ class QuiesceBundleSpec extends AnyFunSuite {
     // RESETS the shared tombstone store) and then seals: the seal
     // must still see the retracted doc — pre-fix it read the
     // post-reset (empty) tombs and certified 'serve'
-    val res2 = IngestLoop.quiesce(st, spark, root, export = Some(leg),
-      docSources = Some(srcs), maxDataFiles = 0L,
-      minFillMicro = 0L, mixTolMicros = 1000000L)
+    val res2 = IngestLoop.quiesce(st, spark, root, docSources = Some(srcs),
+      maxDataFiles = 0L, minFillMicro = 0L, mixTolMicros = 1000000L,
+      legs = IngestLoop.Legs(export = Some(leg)))
     assert(res2.compacted, "precondition: the fold (and reset) ran")
     assert(st.tombs.current().isEmpty,
       "precondition: the bundle's fold consumed the tombstones")
@@ -113,8 +114,9 @@ class QuiesceBundleSpec extends AnyFunSuite {
     // the documented remediation path: re-pack the affected epochs,
     // re-seal at the next quiesce — serves again
     ex.retractDocs(Seq(victim).toDF("doc_id"))
-    val res3 = IngestLoop.quiesce(st, spark, root, export = Some(leg),
-      docSources = Some(srcs), minFillMicro = 0L, mixTolMicros = 1000000L)
+    val res3 = IngestLoop.quiesce(st, spark, root, docSources = Some(srcs),
+      minFillMicro = 0L, mixTolMicros = 1000000L,
+      legs = IngestLoop.Legs(export = Some(leg)))
     assert(res3.cert.get.select("decision").collect()
       .forall(_.getString(0) == "serve"))
     assert(ex.servedSlices().filter(col("doc_id") === victim).count() === 0L)
@@ -135,8 +137,8 @@ class QuiesceBundleSpec extends AnyFunSuite {
     assert(liveBands < leg.bands.current().get.count(),
       "precondition: withdrawn rows still physically present")
 
-    val res = IngestLoop.quiesce(st, spark, root, eval = Some(leg),
-      maxDataFiles = 0L)
+    val res = IngestLoop.quiesce(st, spark, root, maxDataFiles = 0L,
+      legs = IngestLoop.Legs(eval = Some(leg)))
     assert(res.evalCompacted, "the bundle must fold the eval lineage")
     assert(leg.tombs.current().isEmpty,
       "the eval tombstones reset once every eval store folded")
@@ -145,7 +147,8 @@ class QuiesceBundleSpec extends AnyFunSuite {
 
     // under the production trigger nothing folds on a tiny store —
     // the step is gated exactly like the loop-lineage compaction
-    val res2 = IngestLoop.quiesce(st, spark, root, eval = Some(leg))
+    val res2 = IngestLoop.quiesce(st, spark, root,
+      legs = IngestLoop.Legs(eval = Some(leg)))
     assert(!res2.evalCompacted)
   }
 
@@ -157,9 +160,9 @@ class QuiesceBundleSpec extends AnyFunSuite {
     val ex = ArtifactStore.packedExport(spark, root, "qlg_ex")
     ex.bootstrap(corpus, ms)
     IngestLoop.quiesce(st, spark, root,
-      export = Some(IngestLoop.ExportLeg(ex, ms)),
-      docSources = Some(corpus.select("doc_id", "source")),
-      minFillMicro = 0L, mixTolMicros = 1000000L)
+      docSources = Some(corpus.select("doc_id", "source")), minFillMicro = 0L,
+      mixTolMicros = 1000000L,
+      legs = IngestLoop.Legs(export = Some(IngestLoop.ExportLeg(ex, ms))))
     val cs = ArtifactStore.consumption(spark, root, "qlg_ex")
     cs.record("job_1", ex)
 
@@ -204,7 +207,7 @@ class QuiesceBundleSpec extends AnyFunSuite {
       (zid, "qsrc", (1 to 40).map(i => s"qz$i").mkString(" ")))
       .toDF("doc_id", "source", "text")
     IngestLoop.runTick(st, batch, w, lowFrac = 0.0,
-      quar = Some(quar), replay = Some(rleg))
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(rleg)))
     assert(quar.rows.current().get.filter(col("doc_id") === xid)
       .head().getAs[String]("verdict") === "dup_exact")
     assert(rleg.feats.current().get.filter(col("doc_id") === zid)
@@ -213,7 +216,7 @@ class QuiesceBundleSpec extends AnyFunSuite {
     // the takedown demand names the CONTENT — the ingested Y, its
     // quarantined copy X, and the admitted Z
     IngestLoop.retractTick(st, Seq(yid, xid, zid).toDF("doc_id"),
-      quar = Some(quar), replay = Some(rleg))
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(rleg)))
 
     // the bundle compacts WITH the quarantine/replay attached: their
     // rows fold out with the tombstones. Pre-fix, compactIfNeeded
@@ -221,8 +224,8 @@ class QuiesceBundleSpec extends AnyFunSuite {
     // EMPTY tombs, Y's hash had left the state in the same takedown,
     // and the next readjudicateTick re-judged X clean and RE-ADMITTED
     // a doc the takedown named.
-    val res = IngestLoop.quiesce(st, spark, root,
-      quar = Some(quar), replay = Some(rleg), maxDataFiles = 0L)
+    val res = IngestLoop.quiesce(st, spark, root, maxDataFiles = 0L,
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(rleg)))
     assert(res.compacted && st.tombs.current().isEmpty,
       "precondition: the fold consumed the tombstones")
     assert(quar.rows.current().get.filter(col("doc_id") === xid)
@@ -258,10 +261,10 @@ class QuiesceBundleSpec extends AnyFunSuite {
     quar.resolvedIds.appendTickAt(2,
       corpus.select("doc_id").limit(0))
     rleg.feats.appendTickAt(2, rleg.feats.current().get.limit(0))
-    st.text.tombs.appendTick(Seq(xid).toDF("doc_id"))
+    st.text.tombs.appendTickAt(2, Seq(xid).toDF("doc_id"))
 
-    val ran = IngestLoop.compactMmIfNeeded(st, 0L,
-      quar = Some(quar), replay = Some(rleg))
+    val ran = IngestLoop.compactIfNeeded(st, 0L,
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(rleg)))
     assert(ran && st.text.tombs.current().isEmpty,
       "the mm fold consumed the shared tombstones")
     assert(quar.rows.current().get.filter(col("doc_id") === xid)
@@ -279,14 +282,14 @@ class QuiesceBundleSpec extends AnyFunSuite {
     val victim = corpus.select("doc_id").orderBy("doc_id").limit(1)
       .collect().head.getLong(0)
     IngestLoop.retractTick(st, Seq(victim).toDF("doc_id"),
-      idx = Some(idx))
+      legs = IngestLoop.Legs(idx = Some(idx)))
     assert(idx.tombStore.current().isDefined &&
       idx.tfStore.current().get.filter(col("doc_id") === victim)
         .count() > 0L,
       "precondition: postings physically present behind the tombstone")
 
-    val res = IngestLoop.quiesce(st, spark, root, idx = Some(idx),
-      maxDataFiles = 0L)
+    val res = IngestLoop.quiesce(st, spark, root, maxDataFiles = 0L,
+      legs = IngestLoop.Legs(idx = Some(idx)))
     assert(res.compacted)
     assert(idx.tombStore.current().isEmpty,
       "the bundle folded the index's OWN tombstone lineage")

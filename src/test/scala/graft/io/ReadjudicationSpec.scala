@@ -35,7 +35,8 @@ class ReadjudicationSpec extends AnyFunSuite {
     val quar = IngestLoop.quarantine(spark, root, name)
     IngestLoop.bootstrap(st, corpus)
     IngestLoop.bootstrapQuarantine(quar, corpus)
-    IngestLoop.runTick(st, t1, weights, quar = Some(quar))
+    IngestLoop.runTick(st, t1, weights,
+      legs = IngestLoop.Legs(quar = Some(quar)))
     (st, quar)
   }
 
@@ -101,7 +102,7 @@ class ReadjudicationSpec extends AnyFunSuite {
     // fold-back: resubmitting a re-admitted doc hits the exact gate
     val resub = IngestLoop.runTick(st,
       docs.join(readmIds, Seq("doc_id"), "left_semi"), weights,
-      quar = Some(quar)).collect()
+      legs = IngestLoop.Legs(quar = Some(quar))).collect()
     assert(resub.map(_.getLong(2)).sum === nReadmitted,
       "every resubmitted re-admitted doc must be dup_exact")
 
@@ -134,7 +135,8 @@ class ReadjudicationSpec extends AnyFunSuite {
       "precondition: dedup stores agree at tick 2, the quarantine lags")
 
     // replay WITH the leg: the agreement sees the lag and redoes tick 2
-    IngestLoop.runTick(stB, t1, weights, quar = Some(quarB))
+    IngestLoop.runTick(stB, t1, weights,
+      legs = IngestLoop.Legs(quar = Some(quarB)))
     assert(quarB.rows.maxTick === 2L && quarB.resolvedIds.maxTick === 2L)
 
     // both loops now retract and re-adjudicate identically
@@ -159,17 +161,17 @@ class ReadjudicationSpec extends AnyFunSuite {
     IngestLoop.bootstrapQuarantine(quar, corpus)
     IngestLoop.bootstrapReplay(replay, corpus)
     IngestLoop.runTick(st, t1, weights, lowFrac = lf,
-      quar = Some(quar), replay = Some(replay))
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay)))
     val lowqBefore = quar.rows.current().get
       .filter(col("verdict") === "low_quality").select("doc_id")
       .localCheckpoint()
     val retracted = st.hashes.current().get.select("doc_id").filter(
       pmod(col("doc_id"), lit(Provenance.RetractMod)) ===
         Provenance.RetractRem)
-    IngestLoop.retractTick(st, retracted, quar = Some(quar),
-      replay = Some(replay))
+    IngestLoop.retractTick(st, retracted,
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay)))
     val rep = IngestLoop.readjudicateTick(st, quar, weights, lowFrac = lf,
-      replay = Some(replay)).collect()
+      legs = IngestLoop.Legs(replay = Some(replay))).collect()
     val nReadm = rep.map(_.getLong(7)).sum
     val nLowQ = rep.map(_.getLong(6)).sum
     assert(nReadm > 0 && nLowQ > 0,
@@ -191,7 +193,7 @@ class ReadjudicationSpec extends AnyFunSuite {
     // agreement resolved to 4 (feats lagged) and silently overwrote
     // the re-adjudication's appends
     IngestLoop.runTick(st, t2, weights, lowFrac = lf,
-      quar = Some(quar), replay = Some(replay))
+      legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay)))
     assert(st.hashes.maxTick === 5L && replay.feats.maxTick === 5L)
     assert(replay.feats.current().get.filter(col("tick") === 4L).count()
       === t4Feats,
@@ -234,8 +236,8 @@ class ReadjudicationSpec extends AnyFunSuite {
       IngestLoop.bootstrapQuarantine(quar, corpus)
       val replay = IngestLoop.replayLeg(spark, root, name)
       IngestLoop.bootstrapReplay(replay, corpus)
-      IngestLoop.runTick(st, t1, weights, quar = Some(quar),
-        replay = Some(replay))
+      IngestLoop.runTick(st, t1, weights,
+        legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay)))
       (st, quar, replay)
     }
     val (st, quar, replay) = build("regate1")

@@ -135,10 +135,10 @@ class RetractionSpec extends AnyFunSuite {
 
     val idx = ArtifactStore.bm25Incremental(spark, root, "retr_idx")
     idx.bootstrap(corpus)
-    idx.appendDocs(t1)
+    idx.appendDocsAt(2, t1)
     val retracted = docs.filter((m.between(1, 9) || m >= 10) &&
       pmod(col("doc_id"), lit(Provenance.RetractMod)) === Provenance.RetractRem)
-    idx.retractDocs(retracted.select("doc_id"))
+    idx.retractDocsAt(3, retracted.select("doc_id"))
 
     val remaining = corpus.union(t1).join(
       retracted.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -176,10 +176,10 @@ class RetractionSpec extends AnyFunSuite {
     val m = pmod(col("vec_id"), lit(17L))
     val idx = ArtifactStore.ivfPqIncremental(spark, root, "retr_codes")
     idx.bootstrap(emb.filter(m =!= 0), cents, rcb)
-    idx.appendVectors(emb.filter(m === 0), cents, rcb)
+    idx.appendVectorsAt(2, emb.filter(m === 0), cents, rcb)
     val retracted = emb.filter(pmod(col("vec_id"), lit(5L)) === 2)
       .select("vec_id")
-    idx.retractVectors(retracted)
+    idx.retractVectorsAt(3, retracted)
 
     def codeRows(df: DataFrame) =
       df.orderBy("vec_id", "sub").collect().map(_.toSeq).toSeq
@@ -203,11 +203,11 @@ class RetractionSpec extends AnyFunSuite {
       pmod(col("doc_id"), lit(Provenance.RetractMod)) === Provenance.RetractRem)
 
     val st = ArtifactStore.ingestState(spark, root, "manifests")
-    st.appendTick(Provenance.q70Manifest(corpus))
-    st.appendTick(Provenance.q70Manifest(t1))
+    st.appendTickAt(1, Provenance.q70Manifest(corpus))
+    st.appendTickAt(2, Provenance.q70Manifest(t1))
     // the takedown tick: one O(buckets) XOR-out partial — the corpus is
     // never rescanned to retract
-    st.appendTick(Provenance.retractionManifest(retracted))
+    st.appendTickAt(3, Provenance.retractionManifest(retracted))
 
     val merged = Provenance.mergeManifests(st.current().get)
     val remaining = corpus.union(t1).join(
@@ -245,8 +245,8 @@ class RetractionSpec extends AnyFunSuite {
     val cidx = ArtifactStore.gramCensusIncremental(spark, root, "retr_cen_idx")
     cidx.bootstrap(corpus)
 
-    IngestLoop.retractTick(st, retracted.select("doc_id"),
-      census = Some((cidx, docs)))
+    IngestLoop.retractTick(st, retracted.select("doc_id"), docs = Some(docs),
+      legs = IngestLoop.Legs(census = Some(cidx)))
     val expect = graft.operators.SubstringDedup
       .winnersFromCensus(graft.operators.SubstringDedup.censusOf(survivors))
       .collect().map(_.getLong(0)).toSeq
@@ -256,8 +256,8 @@ class RetractionSpec extends AnyFunSuite {
     // the SAME takedown arrives again (an at-least-once upstream): the
     // tombstone store already carries the ids, so the census leg gets
     // an empty fresh set — no second subtraction
-    IngestLoop.retractTick(st, retracted.select("doc_id"),
-      census = Some((cidx, docs)))
+    IngestLoop.retractTick(st, retracted.select("doc_id"), docs = Some(docs),
+      legs = IngestLoop.Legs(census = Some(cidx)))
     assert(cidx.winners().collect().map(_.getLong(0)).toSeq === expect,
       "a replayed takedown must not subtract twice")
   }

@@ -52,7 +52,8 @@ class SemIngestSpec extends AnyFunSuite {
     val retracted = st.hashes.current().get.select("doc_id").filter(
       pmod(col("doc_id"), lit(Provenance.RetractMod)) ===
         Provenance.RetractRem)
-    IngestLoop.retractTick(st, retracted, sem = Some(sem), quar = quar)
+    IngestLoop.retractTick(st, retracted,
+      legs = IngestLoop.Legs(sem = Some(sem), quar = quar))
   }
 
   test("store-backed semantic loop ≡ live q135 across both ticks and the takedown") {
@@ -68,11 +69,13 @@ class SemIngestSpec extends AnyFunSuite {
       "the takedown must re-admit a semantically flagged doc")
 
     val (st, leg) = build(root, "sem1")
-    val rep1 = rows(IngestLoop.runTick(st, t1, weights, sem = Some(leg)))
+    val rep1 = rows(IngestLoop.runTick(st, t1, weights,
+      legs = IngestLoop.Legs(sem = Some(leg))))
     assert(rep1 === tickOf(1),
       "tick 1 store report must equal the live q135 tick 1")
     retractQ117Class(st, leg)
-    val rep2 = rows(IngestLoop.runTick(st, t2, weights, sem = Some(leg)))
+    val rep2 = rows(IngestLoop.runTick(st, t2, weights,
+      legs = IngestLoop.Legs(sem = Some(leg))))
     assert(rep2 === tickOf(2),
       "post-takedown tick 2 store report must equal the live q135 tick 2")
   }
@@ -80,9 +83,10 @@ class SemIngestSpec extends AnyFunSuite {
   test("fold-back is decisive: tick-2 semantic rejects come from TICK-1 ADMISSIONS' signatures, absent in a bootstrap-only control") {
     val root = Files.createTempDirectory("graft_sem_fold").toString
     val (st, leg) = build(root, "fold")
-    IngestLoop.runTick(st, t1, weights, sem = Some(leg))
+    IngestLoop.runTick(st, t1, weights, legs = IngestLoop.Legs(sem = Some(leg)))
     retractQ117Class(st, leg)
-    val rep2 = IngestLoop.runTick(st, t2, weights, sem = Some(leg)).collect()
+    val rep2 = IngestLoop.runTick(st, t2, weights,
+      legs = IngestLoop.Legs(sem = Some(leg))).collect()
 
     // control: NO tick 1 — the same takedown class over the corpus
     // alone, then tick 2. t2's only corpus semantic partner (doc 7) is
@@ -91,7 +95,8 @@ class SemIngestSpec extends AnyFunSuite {
     // admission's signature.
     val (stC, legC) = build(root, "fold_ctrl")
     retractQ117Class(stC, legC)
-    val rep2C = IngestLoop.runTick(stC, t2, weights, sem = Some(legC))
+    val rep2C = IngestLoop.runTick(stC, t2, weights,
+      legs = IngestLoop.Legs(sem = Some(legC)))
       .collect()
     assert(rep2.map(_.getLong(4)).sum > 0)
     assert(rep2C.map(_.getLong(4)).sum === 0L,
@@ -105,10 +110,10 @@ class SemIngestSpec extends AnyFunSuite {
     val (stN, legN) = build(root, "td_no")
     val quarN = IngestLoop.quarantine(spark, root, "td_no")
     IngestLoop.bootstrapQuarantine(quarN, corpus)
-    IngestLoop.runTick(stN, t1, weights, sem = Some(legN),
-      quar = Some(quarN))
-    IngestLoop.runTick(stN, t2, weights, sem = Some(legN),
-      quar = Some(quarN))
+    IngestLoop.runTick(stN, t1, weights,
+      legs = IngestLoop.Legs(sem = Some(legN), quar = Some(quarN)))
+    IngestLoop.runTick(stN, t2, weights,
+      legs = IngestLoop.Legs(sem = Some(legN), quar = Some(quarN)))
     val v425 = quarN.rows.current().get.filter(col("doc_id") === 425L)
       .select("verdict").collect()
     assert(v425.map(_.getString(0)).toSeq === Seq("dup_semantic"),
@@ -116,9 +121,11 @@ class SemIngestSpec extends AnyFunSuite {
 
     // takedown world: doc 7 leaves the sig state, 425 admits
     val (stT, legT) = build(root, "td_yes")
-    IngestLoop.runTick(stT, t1, weights, sem = Some(legT))
+    IngestLoop.runTick(stT, t1, weights,
+      legs = IngestLoop.Legs(sem = Some(legT)))
     retractQ117Class(stT, legT)
-    IngestLoop.runTick(stT, t2, weights, sem = Some(legT))
+    IngestLoop.runTick(stT, t2, weights,
+      legs = IngestLoop.Legs(sem = Some(legT)))
     assert(stT.hashes.current().get.filter(col("doc_id") === 425L).count()
       === 1L, "with doc 7 retracted, 425 must fold into the state")
   }
@@ -127,7 +134,7 @@ class SemIngestSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_sem_crash").toString
     val (stA, legA) = build(root, "clean")
     val repClean = rows(IngestLoop.runTick(stA, t1, weights,
-      sem = Some(legA)))
+      legs = IngestLoop.Legs(sem = Some(legA))))
 
     // crashed run: the three dedup folds landed (a tick run WITHOUT
     // the sem leg is exactly that crash point), the sig store lags
@@ -136,7 +143,7 @@ class SemIngestSpec extends AnyFunSuite {
     assert(stB.shingles.maxTick === 2L && legB.sigs.maxTick === 1L,
       "precondition: dedup stores at tick 2, the sig store lags")
     val replayed = rows(IngestLoop.runTick(stB, t1, weights,
-      sem = Some(legB)))
+      legs = IngestLoop.Legs(sem = Some(legB))))
     assert(replayed === repClean,
       "the redone tick must judge under the semantic gate exactly " +
         "like the clean run")
@@ -148,15 +155,17 @@ class SemIngestSpec extends AnyFunSuite {
     val (st, leg) = build(root, "quar")
     val quar = IngestLoop.quarantine(spark, root, "quar")
     IngestLoop.bootstrapQuarantine(quar, corpus)
-    IngestLoop.runTick(st, t1, weights, sem = Some(leg), quar = Some(quar))
-    IngestLoop.runTick(st, t2, weights, sem = Some(leg), quar = Some(quar))
+    IngestLoop.runTick(st, t1, weights,
+      legs = IngestLoop.Legs(sem = Some(leg), quar = Some(quar)))
+    IngestLoop.runTick(st, t2, weights,
+      legs = IngestLoop.Legs(sem = Some(leg), quar = Some(quar)))
     val nSemQuar = quar.rows.current().get
       .filter(col("verdict") === "dup_semantic").count()
     assert(nSemQuar > 0, "the tick must quarantine semantic rejections")
 
     retractQ117Class(st, leg, quar = Some(quar))
     val rep = IngestLoop.readjudicateTick(st, quar, weights,
-      sem = Some(leg)).collect()
+      legs = IngestLoop.Legs(sem = Some(leg))).collect()
     // extended report: source, n_quarantined, n_exact_t1, n_fuzzy_t1,
     // n_sem_t1, n_still_exact, n_still_fuzzy, n_still_semantic,
     // n_low_quality, n_readmitted
@@ -169,7 +178,7 @@ class SemIngestSpec extends AnyFunSuite {
 
     // fold-back: 425's exact copy now rejects
     val resub = IngestLoop.runTick(st, docs.filter(col("doc_id") === 425L),
-      weights, sem = Some(leg)).collect()
+      weights, legs = IngestLoop.Legs(sem = Some(leg))).collect()
     assert(resub.map(_.getLong(2)).sum === 1L,
       "the re-admitted doc's resubmitted copy must be dup_exact")
 
@@ -181,7 +190,7 @@ class SemIngestSpec extends AnyFunSuite {
     val liveSigs = IngestLoop.resolved(st, leg.sigs.current().get)
       .collect().map(_.toSeq).toSet
     assert(IngestLoop.compactIfNeeded(st, maxDataFiles = 1,
-      sem = Some(leg)))
+      legs = IngestLoop.Legs(sem = Some(leg))))
     assert(st.tombs.current().isEmpty, "tombstones cleared after the fold")
     assert(IngestLoop.resolved(st, leg.sigs.current().get)
       .collect().map(_.toSeq).toSet === liveSigs,
@@ -206,7 +215,8 @@ class SemIngestSpec extends AnyFunSuite {
       leg.bits === SemanticGate.sizedBits(n),
       "the sizing rule picks bits ≈ log2(N) at bootstrap")
     IngestLoop.bootstrapSem(leg, corpus)
-    val rep1 = rows(IngestLoop.runTick(st, t1, weights, sem = Some(leg)))
+    val rep1 = rows(IngestLoop.runTick(st, t1, weights,
+      legs = IngestLoop.Legs(sem = Some(leg))))
     assert(rep1.map(_(4).asInstanceOf[Long]).sum > 0,
       "the sized knob must still reject semantic dups on this corpus")
 
@@ -366,11 +376,11 @@ class SemIngestSpec extends AnyFunSuite {
 
     // the ONE call — the test never touches semCanaryTick/sealExport:
     // drift detection and certification belong to the quiesce point
-    val res = IngestLoop.quiesce(st, spark, root,
-      sem = Some(leg), semNextName = Some("qsc_v2"),
-      export = Some(IngestLoop.ExportLeg(ex, ms)),
-      docSources = Some(docs.select("doc_id", "source")),
-      minFillMicro = 0L, mixTolMicros = 1000000L)
+    val res = IngestLoop.quiesce(st, spark, root, semNextName = Some("qsc_v2"),
+      docSources = Some(docs.select("doc_id", "source")), minFillMicro = 0L,
+      mixTolMicros = 1000000L,
+      legs = IngestLoop.Legs(sem = Some(leg),
+        export = Some(IngestLoop.ExportLeg(ex, ms))))
     assert(res.semResized, "the bundle itself must detect the drift")
     val next = res.sem.get
     assert(next.bits === SemanticGate.sizedBits(nLive),
@@ -386,17 +396,18 @@ class SemIngestSpec extends AnyFunSuite {
 
     // a green bundle is a no-op on the leg (no generation churn), and
     // the unused fresh name stays unclaimed for the next real resize
-    val res2 = IngestLoop.quiesce(st, spark, root,
-      sem = Some(next), semNextName = Some("qsc_v3"))
+    val res2 = IngestLoop.quiesce(st, spark, root, semNextName = Some("qsc_v3"),
+      legs = IngestLoop.Legs(sem = Some(next)))
     assert(!res2.semResized && (res2.sem.get eq next))
 
     // guard rails: a sem leg without a landing name / an export leg
     // without its mix relation refuse up front
     intercept[IllegalArgumentException](
-      IngestLoop.quiesce(st, spark, root, sem = Some(next)))
+      IngestLoop.quiesce(st, spark, root,
+        legs = IngestLoop.Legs(sem = Some(next))))
     intercept[IllegalArgumentException](
       IngestLoop.quiesce(st, spark, root,
-        export = Some(IngestLoop.ExportLeg(ex, ms))))
+        legs = IngestLoop.Legs(export = Some(IngestLoop.ExportLeg(ex, ms)))))
   }
 
   test("rolloverSem re-records the carried knob under the new generation (r14 self-audit): a restart via semLegSized serves the ROLLED width, not a fresh sizing; a committed-name roll is refused") {

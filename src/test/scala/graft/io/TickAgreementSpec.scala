@@ -4,44 +4,64 @@ import java.nio.file.Files
 
 import graft.TestSpark
 import graft.operators.{CurateTick, Provenance, QualityModel}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The tick agreement across every tick kind, kept in the fast gate
-  * (the composed-tick suites are all slow): with quarantine, replay,
-  * census and mix legs attached, each ingest tick, takedown,
+  * (the composed-tick suites are all slow): a deployment builds ONE
+  * [[IngestLoop.Legs]] value — quarantine, replay, census and mix legs
+  * here — and passes it to every step, and each ingest tick, takedown,
   * re-adjudication and re-gate advances EVERY attached store's maxTick
-  * together, by exactly one. sf0.01, the BudgetedTickSpec split.
-  * `runTick` has no census or mix parameter: its census rides as the
-  * curate leg's census, and the mix chain opens with
-  * `runBudgetedTick`, the ingest tick that carries all four legs. */
+  * together, by exactly one, on a text and on a multimodal loop. Also
+  * the refusals the entry points make before any store moves, and the
+  * takedown's replay rule. sf0.01 (the BudgetedTickSpec split); the
+  * takedown re-run on sf0.001. */
 class TickAgreementSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.01"
 
-  private def docs = Tables.load(spark, sf, "documents")
+  private def docsOf(sf: String) = Tables.load(spark, sf, "documents")
+  private def docs = docsOf(sf)
   private def isBatch = pmod(col("doc_id"), lit(Provenance.BatchMod)) === 0
   private def corpus = docs.filter(!isBatch)
   private def batch = docs.filter(isBatch)
   private def weights = QualityModel.weights(corpus,
     scope = s"admission${Provenance.BatchMod}")
 
-  private final class Loop(val st: IngestLoop.Stores,
+  private final class Loop(val st: IngestLoop.StoreSet,
                            val quar: IngestLoop.Quarantine,
                            val replay: IngestLoop.ReplayLeg,
                            val cen: ArtifactStore.GramCensusIncrementalIndex,
                            val mix: ArtifactStore.MixIncrementalIndex) {
+    /** The deployment's one legs value. */
+    def legs(withMix: Boolean,
+             curate: Boolean = false): IngestLoop.Legs =
+      IngestLoop.Legs(census = Some(cen),
+        mix = if (withMix) Some(mix) else None,
+        quar = Some(quar), replay = Some(replay),
+        curate = if (curate) Some(IngestLoop.CurateLeg(cen)) else None)
     def ticks(withMix: Boolean): Seq[Long] =
-      (Seq(st.hashes, st.bands, st.shingles, quar.rows, quar.resolvedIds,
-        replay.feats, cen.censusStore) ++
+      (st.all ++ Seq(quar.rows, quar.resolvedIds, replay.feats,
+        cen.censusStore) ++
         (if (withMix) Seq(mix.mixStore) else Nil)).map(_.maxTick)
   }
 
-  private def build(root: String, name: String): Loop = {
-    val st = IngestLoop.stores(spark, root, name)
-    IngestLoop.bootstrap(st, corpus)
+  private def build(root: String, name: String, mm: Boolean = false,
+                    corpus: DataFrame = corpus): Loop = {
+    val st: IngestLoop.StoreSet =
+      if (mm) {
+        val s = IngestLoop.mmStores(spark, root, name)
+        IngestLoop.bootstrapMm(s, corpus)
+        s
+      } else {
+        val s = IngestLoop.stores(spark, root, name)
+        IngestLoop.bootstrap(s, corpus)
+        s
+      }
     val quar = IngestLoop.quarantine(spark, root, name)
-    IngestLoop.bootstrapQuarantine(quar, corpus)
+    if (mm) IngestLoop.bootstrapMmQuarantine(quar, corpus)
+    else IngestLoop.bootstrapQuarantine(quar, corpus)
     val replay = IngestLoop.replayLeg(spark, root, name)
     IngestLoop.bootstrapReplay(replay, corpus)
     val cen = ArtifactStore.gramCensusIncremental(spark, root, s"${name}_cen",
@@ -52,11 +72,17 @@ class TickAgreementSpec extends AnyFunSuite {
     new Loop(st, quar, replay, cen, mix)
   }
 
-  /** Ingest tick → takedown → re-adjudication → re-gate, asserting
-    * after each step that every attached store moved to the same,
-    * next tick. */
-  private def chain(l: Loop, withMix: Boolean)(ingest: => Unit): Unit = {
-    val w = weights
+  private def takedownOf(l: Loop): DataFrame =
+    l.st.text.hashes.current().get.select("doc_id")
+      .filter(pmod(col("doc_id"), lit(Provenance.RetractMod)) ===
+        Provenance.RetractRem)
+
+  /** Ingest tick → takedown → re-adjudication → re-gate, every step
+    * with the same `legs`, asserting after each step that every
+    * attached store moved to the same, next tick. */
+  private def chain(l: Loop, legs: IngestLoop.Legs)(
+      ingest: => Unit)(readjudicate: => Unit): Unit = {
+    val withMix = legs.mix.isDefined
     def step(what: String)(run: => Unit): Unit = {
       val before = l.ticks(withMix)
       assert(before.distinct.size === 1, s"before $what: $before")
@@ -64,38 +90,67 @@ class TickAgreementSpec extends AnyFunSuite {
       assert(l.ticks(withMix).distinct === Seq(before.head + 1),
         s"$what must advance every attached store together by one")
     }
-    val mix = if (withMix) Some(l.mix) else None
     step("ingest tick")(ingest)
-    val takedown = l.st.hashes.current().get.select("doc_id")
-      .filter(pmod(col("doc_id"), lit(Provenance.RetractMod)) ===
-        Provenance.RetractRem)
-    step("retractTick")(IngestLoop.retractTick(l.st, takedown,
-      census = Some((l.cen, docs)), mix = mix.map(m => (m, docs)),
-      quar = Some(l.quar), replay = Some(l.replay)))
-    step("readjudicateTick")(IngestLoop.readjudicateTick(l.st, l.quar, w,
-      census = Some(l.cen), mix = mix, replay = Some(l.replay)).collect())
+    step("retractTick")(IngestLoop.retractTick(l.st, takedownOf(l),
+      docs = Some(docs), legs = legs))
+    step("readjudicate")(readjudicate)
     step("regateTick")(IngestLoop.regateTick(l.st, l.quar, l.replay,
-      w.map(x => -x), census = Some(l.cen), mix = mix).collect())
+      weights.map(x => -x), legs = legs).collect())
+  }
+
+  private def textChain(l: Loop, legs: IngestLoop.Legs)(
+      ingest: => Unit): Unit = {
+    val st = l.st.asInstanceOf[IngestLoop.Stores]
+    chain(l, legs)(ingest)(IngestLoop.readjudicateTick(st, l.quar, weights,
+      legs = legs).collect())
   }
 
   test("tick agreement: runTick → retractTick → readjudicateTick → regateTick advance every attached store together") {
     val root = Files.createTempDirectory("graft_agree").toString
     val l = build(root, "agree")
-    chain(l, withMix = false) {
-      IngestLoop.runTick(l.st, batch, weights, quar = Some(l.quar),
-        replay = Some(l.replay),
-        curate = Some(IngestLoop.CurateLeg(l.cen))).collect()
+    val legs = l.legs(withMix = true, curate = true)
+    textChain(l, legs) {
+      IngestLoop.runTick(l.st.asInstanceOf[IngestLoop.Stores], batch,
+        weights, legs = legs).collect()
     }
   }
 
   test("tick agreement with a mix leg: runBudgetedTick → retractTick → readjudicateTick → regateTick advance every attached store together") {
     val root = Files.createTempDirectory("graft_agree_mix").toString
     val l = build(root, "agree_mix")
-    chain(l, withMix = true) {
-      IngestLoop.runBudgetedTick(l.st, batch, weights,
-        IngestLoop.QuotaLeg(l.mix), census = Some(l.cen), mix = Some(l.mix),
-        quar = Some(l.quar), replay = Some(l.replay)).collect()
+    val legs = l.legs(withMix = true)
+    textChain(l, legs) {
+      IngestLoop.runBudgetedTick(l.st.asInstanceOf[IngestLoop.Stores], batch,
+        weights, IngestLoop.QuotaLeg(l.mix), legs = legs).collect()
     }
+  }
+
+  test("multimodal tick agreement: runMmTick → retractTick → readjudicateMmTick → regateTick advance all five stores and the legs together") {
+    val root = Files.createTempDirectory("graft_agree_mm").toString
+    val l = build(root, "agree_mm", mm = true)
+    val st = l.st.asInstanceOf[IngestLoop.MmStores]
+    val legs = l.legs(withMix = true)
+    chain(l, legs) {
+      IngestLoop.runMmTick(st, batch, weights, legs = legs).collect()
+    } {
+      IngestLoop.readjudicateMmTick(st, l.quar, weights, legs = legs)
+        .collect()
+    }
+    assert(st.all.size === 5)
+  }
+
+  /** Runs `refused`, expecting the refusal, and asserts that no store
+    * of `l` (nor `extra`) moved. */
+  private def refusedBeforeAnyMove(l: Loop,
+                                   extra: ArtifactStore.IngestStateStore*)(
+      refused: => Any): Unit = {
+    val stores = l.st.all ++ Seq(l.st.text.tombs, l.quar.rows,
+      l.quar.resolvedIds, l.replay.feats, l.cen.censusStore,
+      l.mix.mixStore) ++ extra
+    val before = stores.map(_.maxTick)
+    intercept[IllegalArgumentException](refused)
+    assert(stores.map(_.maxTick) === before,
+      "the refused call must not move any store")
   }
 
   test("a curate leg whose census is not the tick's census leg is refused before any store moves") {
@@ -106,14 +161,104 @@ class TickAgreementSpec extends AnyFunSuite {
     val other = ArtifactStore.gramCensusIncremental(spark, root,
       "agree_cur_other", k = CurateTick.DefaultStripK)
     other.bootstrap(corpus)
-    val stores = Seq(l.st.hashes, l.st.bands, l.st.shingles, idx.tfStore,
-      l.cen.censusStore, other.censusStore, l.mix.mixStore)
-    val before = stores.map(_.maxTick)
-    intercept[IllegalArgumentException] {
-      IngestLoop.runFullTick(l.st, idx, l.cen, batch, weights,
-        mix = Some(l.mix), curate = Some(IngestLoop.CurateLeg(other)))
+    refusedBeforeAnyMove(l, idx.tfStore, other.censusStore) {
+      IngestLoop.runTick(l.st.asInstanceOf[IngestLoop.Stores], batch,
+        weights, legs = IngestLoop.Legs(idx = Some(idx),
+          census = Some(l.cen), mix = Some(l.mix),
+          curate = Some(IngestLoop.CurateLeg(other))))
     }
-    assert(stores.map(_.maxTick) === before,
-      "the refused tick must not move any store")
+  }
+
+  test("retractTick takes the retracted documents exactly when a census or mix leg is attached") {
+    val root = Files.createTempDirectory("graft_agree_docs").toString
+    val l = build(root, "agree_docs")
+    refusedBeforeAnyMove(l) {
+      IngestLoop.retractTick(l.st, takedownOf(l),
+        legs = IngestLoop.Legs(mix = Some(l.mix)))
+    }
+    refusedBeforeAnyMove(l) {
+      IngestLoop.retractTick(l.st, takedownOf(l), docs = Some(docs))
+    }
+  }
+
+  test("a multimodal tick refuses a curate leg before any store moves") {
+    val root = Files.createTempDirectory("graft_agree_mmcur").toString
+    val l = build(root, "agree_mmcur", mm = true)
+    val st = l.st.asInstanceOf[IngestLoop.MmStores]
+    val legs = l.legs(withMix = false, curate = true)
+    refusedBeforeAnyMove(l)(IngestLoop.runMmTick(st, batch, weights,
+      legs = legs))
+    refusedBeforeAnyMove(l)(IngestLoop.readjudicateMmTick(st, l.quar,
+      weights, legs = legs))
+  }
+
+  test("a re-judging tick refuses legs carrying a different quarantine or replay leg") {
+    val root = Files.createTempDirectory("graft_agree_req").toString
+    val l = build(root, "agree_req")
+    val st = l.st.asInstanceOf[IngestLoop.Stores]
+    val otherQuar = IngestLoop.quarantine(spark, root, "agree_req_other")
+    IngestLoop.bootstrapQuarantine(otherQuar, corpus)
+    val otherReplay = IngestLoop.replayLeg(spark, root, "agree_req_other")
+    IngestLoop.bootstrapReplay(otherReplay, corpus)
+    refusedBeforeAnyMove(l, otherQuar.rows) {
+      IngestLoop.readjudicateTick(st, l.quar, weights,
+        legs = l.legs(withMix = false).copy(quar = Some(otherQuar)))
+    }
+    refusedBeforeAnyMove(l, otherReplay.feats) {
+      IngestLoop.regateTick(st, l.quar, l.replay, weights,
+        legs = l.legs(withMix = false).copy(replay = Some(otherReplay)))
+    }
+  }
+
+  test("a folding stream refuses a mix or replay leg before it starts") {
+    val root = Files.createTempDirectory("graft_agree_stream").toString
+    val l = build(root, "agree_stream")
+    val mm = build(root, "agree_stream_mm", mm = true)
+    val hashes = Provenance.corpusHashState(corpus)
+    refusedBeforeAnyMove(l) {
+      graft.streaming.DocStream.foldingGatedAdmissionQuery(batch, hashes,
+        l.st.asInstanceOf[IngestLoop.Stores], weights, s"$root/out",
+        s"$root/ck", legs = IngestLoop.Legs(mix = Some(l.mix)))
+    }
+    refusedBeforeAnyMove(mm) {
+      graft.streaming.DocStream.foldingMmAdmissionQuery(batch, hashes,
+        mm.st.asInstanceOf[IngestLoop.MmStores], weights, s"$root/out_mm",
+        s"$root/ck_mm", legs = IngestLoop.Legs(replay = Some(mm.replay)))
+    }
+  }
+
+  test("a takedown that failed after its subtraction legs re-runs to the clean result: census and mix subtract once, stores at the clean tick") {
+    val small = docsOf("/root/testdata/sf0.001")
+    val isB = pmod(col("doc_id"), lit(Provenance.BatchMod)) === 0
+    val (corp, bat) = (small.filter(!isB), small.filter(isB))
+    val w = QualityModel.weights(corp,
+      scope = s"admission${Provenance.BatchMod}")
+    val root = Files.createTempDirectory("graft_agree_rerun").toString
+    def run(name: String)(takedown: (Loop, IngestLoop.Legs) => Unit)
+        : (Seq[String], Seq[String], Seq[Long]) = {
+      val l = build(root, name, corpus = corp)
+      val legs = l.legs(withMix = true)
+      IngestLoop.runTick(l.st.asInstanceOf[IngestLoop.Stores], bat, w,
+        legs = legs).collect()
+      takedown(l, legs)
+      def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      (sorted(l.cen.census()), sorted(l.mix.mix()), l.ticks(withMix = true))
+    }
+    val clean = run("clean") { (l, legs) =>
+      IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
+    }
+    val rerun = run("rerun") { (l, legs) =>
+      // the unlearn of a model store never bootstrapped fails the first
+      // run; the re-run goes without the model leg
+      val model = ArtifactStore.modelStore(spark, root, "never_bootstrapped")
+      intercept[IllegalArgumentException] {
+        IngestLoop.retractTick(l.st, takedownOf(l), Some(small),
+          legs.copy(model = Some(model)))
+      }
+      IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
+    }
+    assert(rerun._1 === clean._1, "the census must subtract exactly once")
+    assert(rerun._2 === clean._2, "the mix must subtract exactly once")
+    assert(rerun._3 === clean._3, "the stores must end at the clean tick")
   }
 }

@@ -243,7 +243,7 @@ class MultimodalSpec extends AnyFunSuite {
     // deployment form: corpus signatures persisted once (8 bytes/image),
     // the batch judged against the STORE — bit-equal to the live report
     val st = graft.io.ArtifactStore.ingestState(spark, root, "imgsigs")
-    st.appendTick(Multimodal.imageSigs(docs.filter(m =!= 0)))
+    st.appendTickAt(1, Multimodal.imageSigs(docs.filter(m =!= 0)))
     val batchSigs = Multimodal.imageSigs(docs.filter(m === 0)).localCheckpoint()
     val flagged = Multimodal.flaggedAgainstState(
       st.current().get, batchSigs, maxDist = 10, maxBand = 64)
@@ -261,7 +261,7 @@ class MultimodalSpec extends AnyFunSuite {
     // batch is then rejected in full (hamming 0 vs its own folded sig)
     val admitted = batchSigs.join(flagged,
       col("doc_id") === col("fid"), "left_anti")
-    st.appendTick(admitted)
+    st.appendTickAt(2, admitted)
     val flagged2 = Multimodal.flaggedAgainstState(
       st.current().get, batchSigs, maxDist = 10, maxBand = 64)
     assert(flagged2.count() === batchSigs.count(),

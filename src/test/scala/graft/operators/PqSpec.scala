@@ -114,9 +114,9 @@ class PqSpec extends AnyFunSuite {
     val base = emb.filter(m =!= 0)
     val tick = emb.filter(m === 0)
     val idx = ArtifactStore.ivfPqIncremental(spark, root, "serveV")
-    idx.appendVectors(base, cents, rcb)
+    idx.appendVectorsAt(1, base, cents, rcb)
     assert(idx.compact() > 0, "bootstrap tick must compact into a generation")
-    idx.appendVectors(tick, cents, rcb)
+    idx.appendVectorsAt(2, tick, cents, rcb)
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("vec_id", "sub").collect().map(_.toSeq).toSeq
@@ -240,10 +240,10 @@ class PqSpec extends AnyFunSuite {
 
     val idx = ArtifactStore.ivfPqIncremental(spark, root, "serveG")
     idx.bootstrap(base, cFz, rcbFz)
-    idx.appendVectors(tick, cFz, rcbFz)
+    idx.appendVectorsAt(2, tick, cFz, rcbFz)
     // takedown before the recluster: the re-encode must exclude it
     val gone = emb.select("vec_id").orderBy("vec_id").limit(1)
-    idx.retractVectors(gone)
+    idx.retractVectorsAt(3, gone)
     val goneId = gone.collect()(0).getLong(0)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("vec_id", "sub").collect().map(_.toSeq).toSeq
@@ -275,7 +275,7 @@ class PqSpec extends AnyFunSuite {
     // the post-swap index is a full citizen: appends encode into the
     // new generation's store, retraction works on it
     val n2 = idx.codes().count()
-    idx.retractVectors(emb.select("vec_id")
+    idx.retractVectorsAt(4, emb.select("vec_id")
       .filter(col("vec_id") =!= goneId).orderBy("vec_id").limit(1))
     assert(idx.codes().count() < n2,
       "retraction must keep working after the swap")

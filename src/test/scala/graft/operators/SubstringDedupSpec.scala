@@ -151,7 +151,7 @@ class SubstringDedupSpec extends AnyFunSuite {
     val idx = ArtifactStore.gramCensusIncremental(spark, root, "census1")
     val c0 = SubstringDedup.censusRuns.get()
     idx.bootstrap(corpus)
-    idx.appendDocs(batch)
+    idx.appendDocsAt(2, batch)
     assert(SubstringDedup.censusRuns.get() - c0 === 2L,
       "each append mines exactly its own batch, nothing else")
 
@@ -225,8 +225,9 @@ class SubstringDedupSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_gram_retract").toString
     val idx = ArtifactStore.gramCensusIncremental(spark, root, "census2")
     idx.bootstrap(corpus)
-    idx.appendDocs(batch)
-    val tR = idx.retractDocs(retracted)
+    idx.appendDocsAt(2, batch)
+    val tR = 3L
+    idx.retractDocsAt(tR, retracted)
 
     // maintained winners after the subtraction ≡ a full re-mine of the
     // surviving corpus — the algebra q123's oracle certifies

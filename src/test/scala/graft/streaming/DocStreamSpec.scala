@@ -472,7 +472,7 @@ class DocStreamSpec extends AnyFunSuite {
     val idx = graft.io.ArtifactStore.bm25Incremental(spark, artRoot, "foldloop")
     idx.bootstrap(documents)
     val tok0 = graft.operators.Retrieval.tokenizeRuns.get()
-    // ... and maintains curation state (the runFullTick symmetry)
+    // ... and maintains curation state (the batch tick's census leg)
     val cen = graft.io.ArtifactStore.gramCensusIncremental(
       spark, artRoot, "foldloop_cen")
     cen.bootstrap(documents)
@@ -509,9 +509,9 @@ class DocStreamSpec extends AnyFunSuite {
       // lowFrac = 0: the budget gate admits every novel doc, so this
       // test isolates the FOLD (the budget leg is the gated test above)
       DocStream.foldingGatedAdmissionQuery(raw,
-        hashes.select(col("ch").as("h")), st, w, outDir, ckpt,
-        lowFrac = 0.0, idx = Some(idx), census = Some(cen),
-        ann = Some(graft.io.IngestLoop.AnnLeg(ann, sideVecs, cents, rcb)))
+        hashes.select(col("ch").as("h")), st, w, outDir, ckpt, lowFrac = 0.0,
+        legs = graft.io.IngestLoop.Legs(idx = Some(idx), census = Some(cen),
+          ann = Some(graft.io.IngestLoop.AnnLeg(ann, sideVecs, cents, rcb))))
     }
 
     // tick 1: X admitted → folded into the stores; then KILL
@@ -845,8 +845,8 @@ class DocStreamSpec extends AnyFunSuite {
       .drop(graft.io.JsonLines.CorruptCol)
     val seed = st.hashes.currentUpTo(1).get
       .select(col("ch").as("h")).distinct()
-    val q = DocStream.foldingGatedAdmissionQuery(raw, seed, st, w,
-      out, ckpt, lowFrac = 0.0, quar = Some(quar))
+    val q = DocStream.foldingGatedAdmissionQuery(raw, seed, st, w, out, ckpt,
+      lowFrac = 0.0, legs = graft.io.IngestLoop.Legs(quar = Some(quar)))
     try {
       Files.writeString(dir.resolve("drop1.jsonl"), jline(x) + "\n")
       q.processAllAvailable()
@@ -919,9 +919,9 @@ class DocStreamSpec extends AnyFunSuite {
         DocStream.JsonlDocSchema)
         .filter(col(graft.io.JsonLines.CorruptCol).isNull)
         .drop(graft.io.JsonLines.CorruptCol)
-      DocStream.foldingMmAdmissionQuery(raw,
-        hashes.select(col("ch").as("h")), st, w, out, ckpt,
-        lowFrac = 0.0, quar = Some(quar))
+      DocStream.foldingMmAdmissionQuery(raw, hashes.select(col("ch").as("h")),
+        st, w, out, ckpt, lowFrac = 0.0,
+        legs = graft.io.IngestLoop.Legs(quar = Some(quar)))
     }
     // batch 0 admits A and C; KILL; batch 1 lands while the query is
     // down and a fresh query rejects B (image) and D (audio)
@@ -946,9 +946,9 @@ class DocStreamSpec extends AnyFunSuite {
 
     // quiesce takedown of A (image source) — C (audio source) survives;
     // roll both bundles; the mm re-adjudication re-admits B, holds D
-    graft.io.IngestLoop.retractMmTick(st,
+    graft.io.IngestLoop.retractTick(st,
       spark.range(1).select(lit(900298L).as("doc_id")),
-      quar = Some(quar))
+      legs = graft.io.IngestLoop.Legs(quar = Some(quar)))
     val st2 = graft.io.IngestLoop.rolloverMm(st, spark, artRoot, "mmsq2")
     val quar2 = graft.io.IngestLoop.rolloverQuarantine(st.text, quar,
       spark, artRoot, "mmsq2")
@@ -1009,8 +1009,9 @@ class DocStreamSpec extends AnyFunSuite {
       .drop(graft.io.JsonLines.CorruptCol)
     val seed = st.hashes.currentUpTo(1).get
       .select(col("ch").as("h")).distinct()
-    val q = DocStream.foldingGatedAdmissionQuery(raw, seed, st, w,
-      out, ckpt, lowFrac = 0.0, quar = Some(quar), sem = Some(leg))
+    val q = DocStream.foldingGatedAdmissionQuery(raw, seed, st, w, out, ckpt,
+      lowFrac = 0.0,
+      legs = graft.io.IngestLoop.Legs(quar = Some(quar), sem = Some(leg)))
     try {
       Files.writeString(dir.resolve("b0.jsonl"),
         b0.map(jline).mkString("\n") + "\n")
@@ -1078,8 +1079,9 @@ class DocStreamSpec extends AnyFunSuite {
       .drop(graft.io.JsonLines.CorruptCol)
     val seed = st.hashes.currentUpTo(1).get
       .select(col("ch").as("h")).distinct()
-    val q = DocStream.foldingGatedAdmissionQuery(raw, seed, st, w,
-      out, ckpt, lowFrac = 0.0, quar = Some(quar), eval = Some(leg))
+    val q = DocStream.foldingGatedAdmissionQuery(raw, seed, st, w, out, ckpt,
+      lowFrac = 0.0,
+      legs = graft.io.IngestLoop.Legs(quar = Some(quar), eval = Some(leg)))
     try {
       Files.writeString(dir.resolve("b0.jsonl"),
         b0.map(jline).mkString("\n") + "\n")
@@ -1102,8 +1104,8 @@ class DocStreamSpec extends AnyFunSuite {
     graft.io.IngestLoop.evalUpdateTick(st, leg,
       graft.operators.Decontam.eval2Docs(documents),
       graft.operators.Decontam.withdrawEvalIds(documents))
-    val rr = graft.io.IngestLoop.readjudicateTick(st, quar, w,
-      lowFrac = 0.0, eval = Some(leg)).collect()
+    val rr = graft.io.IngestLoop.readjudicateTick(st, quar, w, lowFrac = 0.0,
+      legs = graft.io.IngestLoop.Legs(eval = Some(leg))).collect()
     assert(rr.map(_.getLong(9)).sum === 1L,
       "exactly the withdrawn-evidence arrival re-admits")
     assert(quar.resolvedIds.current().get
@@ -1151,19 +1153,21 @@ class DocStreamSpec extends AnyFunSuite {
       (st, idx, cen, ex)
     }
 
-    // BATCH side: two runFullTick curated ticks over the same arrivals
+    // BATCH side: two curated batch ticks over the same arrivals
     import spark.implicits._
     val (stB, idxB, cenB, exB) = buildSide("scur_batch")
     val b0docs = Seq((910000L, "stream", pText))
       .toDF("doc_id", "source", "text")
     val b1docs = Seq((910001L, "stream", qText), (910002L, "stream", pText))
       .toDF("doc_id", "source", "text")
-    val rep1 = graft.io.IngestLoop.runFullTick(stB, idxB, cenB, b0docs, w,
-      lowFrac = 0.0, export = Some(graft.io.IngestLoop.ExportLeg(exB, ms)),
-      curate = Some(graft.io.IngestLoop.CurateLeg(cenB))).collect()
-    val rep2 = graft.io.IngestLoop.runFullTick(stB, idxB, cenB, b1docs, w,
-      lowFrac = 0.0, export = Some(graft.io.IngestLoop.ExportLeg(exB, ms)),
-      curate = Some(graft.io.IngestLoop.CurateLeg(cenB))).collect()
+    val rep1 = graft.io.IngestLoop.runTick(stB, b0docs, w, lowFrac = 0.0,
+      legs = graft.io.IngestLoop.Legs(idx = Some(idxB), census = Some(cenB),
+        export = Some(graft.io.IngestLoop.ExportLeg(exB, ms)),
+        curate = Some(graft.io.IngestLoop.CurateLeg(cenB)))).collect()
+    val rep2 = graft.io.IngestLoop.runTick(stB, b1docs, w, lowFrac = 0.0,
+      legs = graft.io.IngestLoop.Legs(idx = Some(idxB), census = Some(cenB),
+        export = Some(graft.io.IngestLoop.ExportLeg(exB, ms)),
+        curate = Some(graft.io.IngestLoop.CurateLeg(cenB)))).collect()
     assert(rep1.map(_.getAs[Long]("chars_redacted")).sum > 0,
       "the batch transform must redact the planted PII")
 
@@ -1181,10 +1185,10 @@ class DocStreamSpec extends AnyFunSuite {
         .filter(col(graft.io.JsonLines.CorruptCol).isNull)
         .drop(graft.io.JsonLines.CorruptCol)
       DocStream.foldingGatedAdmissionQuery(raw,
-        hashes.select(col("ch").as("h")), stS, w, out, ckpt,
-        lowFrac = 0.0, idx = Some(idxS), census = Some(cenS),
-        export = Some(graft.io.IngestLoop.ExportLeg(exS, ms)),
-        curate = Some(graft.io.IngestLoop.CurateLeg(cenS)))
+        hashes.select(col("ch").as("h")), stS, w, out, ckpt, lowFrac = 0.0,
+        legs = graft.io.IngestLoop.Legs(idx = Some(idxS), census = Some(cenS),
+          export = Some(graft.io.IngestLoop.ExportLeg(exS, ms)),
+          curate = Some(graft.io.IngestLoop.CurateLeg(cenS))))
     }
     Files.writeString(dir.resolve("b0.jsonl"), jline(p) + "\n")
     val sq1 = startQuery()
@@ -1294,9 +1298,10 @@ class DocStreamSpec extends AnyFunSuite {
       .drop(graft.io.JsonLines.CorruptCol)
     val seed = st.text.hashes.currentUpTo(1).get
       .select(col("ch").as("h")).distinct()
-    val q = DocStream.foldingMmAdmissionQuery(raw, seed, st, w,
-      out, ckpt, lowFrac = 0.0, quar = Some(quar), sem = Some(semL),
-      eval = Some(evalL))
+    val q = DocStream.foldingMmAdmissionQuery(raw, seed, st, w, out, ckpt,
+      lowFrac = 0.0,
+      legs = graft.io.IngestLoop.Legs(quar = Some(quar), sem = Some(semL),
+        eval = Some(evalL)))
     try {
       Files.writeString(dir.resolve("b0.jsonl"),
         b0.map(jline).mkString("\n") + "\n")
@@ -1330,9 +1335,10 @@ class DocStreamSpec extends AnyFunSuite {
     // (185's only contaminating item); ALL legs roll into the fresh
     // generation (rolloverSem / rolloverEval — r12 advice), then ONE mm
     // re-adjudication re-admits 238 and 185 and keeps holding 486
-    graft.io.IngestLoop.retractMmTick(st,
+    graft.io.IngestLoop.retractTick(st,
       spark.range(1).select(lit(287L).as("doc_id")),
-      quar = Some(quar), sem = Some(semL), eval = Some(evalL))
+      legs = graft.io.IngestLoop.Legs(quar = Some(quar), sem = Some(semL),
+        eval = Some(evalL)))
     graft.io.IngestLoop.evalUpdateTick(st.text, evalL,
       graft.operators.Decontam.eval2Docs(documents),
       graft.operators.Decontam.withdrawEvalIds(documents))
@@ -1346,8 +1352,9 @@ class DocStreamSpec extends AnyFunSuite {
     assert(semL2.sigs.current().get
       .filter(col("doc_id") === 287L).count() === 0L,
       "the rolled sig state physically drops the retracted doc's rows")
-    graft.io.IngestLoop.readjudicateMmTick(st2, quar2, w,
-      lowFrac = 0.0, sem = Some(semL2), eval = Some(evalL2)).collect()
+    graft.io.IngestLoop.readjudicateMmTick(st2, quar2, w, lowFrac = 0.0,
+      legs = graft.io.IngestLoop.Legs(sem = Some(semL2),
+        eval = Some(evalL2))).collect()
     val resolved = quar2.resolvedIds.current().get
       .collect().map(_.getLong(0)).toSet
     assert(resolved.contains(238L),
@@ -1389,8 +1396,8 @@ class DocStreamSpec extends AnyFunSuite {
       .filter(col(graft.io.JsonLines.CorruptCol).isNull)
       .drop(graft.io.JsonLines.CorruptCol)
     val sq = DocStream.foldingGatedAdmissionQuery(raw,
-      hashes.select(col("ch").as("h")), st, w, out, ckpt,
-      lowFrac = 0.0, export = Some(leg))
+      hashes.select(col("ch").as("h")), st, w, out, ckpt, lowFrac = 0.0,
+      legs = graft.io.IngestLoop.Legs(export = Some(leg)))
     try sq.processAllAvailable() finally sq.stop()
     assert(ex.slices().filter(col("tick") === 2).count() > 0,
       "the stream folded its batch as an export epoch")
@@ -1415,8 +1422,8 @@ class DocStreamSpec extends AnyFunSuite {
       .unionByName(Seq((920000L, "stream"), (920001L, "stream"))
         .toDF("doc_id", "source"))
     val qres = graft.io.IngestLoop.quiesce(st, spark, artRoot,
-      export = Some(leg), docSources = Some(srcs),
-      minFillMicro = 0L, mixTolMicros = 1000000L)
+      docSources = Some(srcs), minFillMicro = 0L, mixTolMicros = 1000000L,
+      legs = graft.io.IngestLoop.Legs(export = Some(leg)))
     assert(qres.cert.exists(_.filter(col("decision") === "serve")
       .count() > 0), "the bundle's seal certifies the stream epochs")
     assert(ex.servedSlices().count() === ex.slices().count(),
@@ -1470,8 +1477,8 @@ class DocStreamSpec extends AnyFunSuite {
       .drop(graft.io.JsonLines.CorruptCol)
     drop("b0.jsonl", Seq(a, e))
     val sq = DocStream.foldingMmAdmissionQuery(raw,
-      hashes.select(col("ch").as("h")), st, w, out, ckpt,
-      lowFrac = 0.0, export = Some(leg))
+      hashes.select(col("ch").as("h")), st, w, out, ckpt, lowFrac = 0.0,
+      legs = graft.io.IngestLoop.Legs(export = Some(leg)))
     try {
       sq.processAllAvailable()
       drop("b1.jsonl", Seq(b))
@@ -1497,16 +1504,16 @@ class DocStreamSpec extends AnyFunSuite {
     assert(eref.getMessage.contains("no recorded certificate"))
 
     // the MM QUIESCE BUNDLE at the stream's quiesce boundary (stream
-    // stopped — r15 item 4): quiesceMm folds the five mm stores,
+    // stopped — r15 item 4): quiesce folds the five mm stores,
     // collects, and seals on the shared TEXT tombstone lineage in one
     // call -> record -> audit. Zero mm-specific machinery.
     import spark.implicits._
     val srcs = documents.select(col("doc_id"), col("source"))
       .unionByName(Seq(907200L, 907206L, 907203L)
         .map((_, "stream")).toDF("doc_id", "source"))
-    val qres = graft.io.IngestLoop.quiesceMm(st, spark, artRoot,
-      export = Some(leg), docSources = Some(srcs),
-      minFillMicro = 0L, mixTolMicros = 1000000L)
+    val qres = graft.io.IngestLoop.quiesce(st, spark, artRoot,
+      docSources = Some(srcs), minFillMicro = 0L, mixTolMicros = 1000000L,
+      legs = graft.io.IngestLoop.Legs(export = Some(leg)))
     assert(qres.cert.exists(_.filter(col("decision") === "serve")
       .count() > 0), "the mm bundle's seal certifies the stream epochs")
     assert(ex.servedSlices().count() === ex.slices().count(),
