@@ -192,7 +192,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                         substring-dup coverage judged against the
   *                         MAINTAINED corpus gram census (the census-
   *                         merge algebra; store form io.ArtifactStore
-  *                         .GramCensusIncrementalIndex)
+  *                         .GramCensus, a SignedIndex)
   *  - q122_ann_recluster:  q120's consumer — the canary's decision
   *                         CLOSES the loop: on 'recluster' the serving
   *                         index swaps to retrained artifacts with all
@@ -206,9 +206,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                         the retracted docs' NEGATED increment is
   *                         appended; oracle re-mines with a WHERE
   *                         clause, certifying subtraction ≡ removal
-  *                         (store form: GramCensusIncrementalIndex
-  *                         .retractDocs, guarded by IngestLoop
-  *                         .retractTick's tombstone existence check)
+  *                         (store form: SignedIndex.retractDocsAt on
+  *                         the GramCensus, behind IngestLoop
+  *                         .retractTick's tombstone existence and
+  *                         liveness checks)
   *  - q124_ann_ingest_tick: the ANN SERVING leg of the deployment tick
   *                         — a q103 admission tick whose admitted docs'
   *                         embeddings encode under the FROZEN
@@ -276,7 +277,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                         rewrites only batch text; oracle = the
   *                         full strip re-mine restricted to batch
   *                         docs (store form:
-  *                         GramCensusIncrementalIndex.winners,
+  *                         winnersFromCensus over the GramCensus,
   *                         spec-pinned with zero corpus passes)
   *  - q130_budgeted_admission: the q127 mixture loop closed INTO the
   *                         gate — per-source TOKEN budgets from the

@@ -290,6 +290,163 @@ object ArtifactStore {
       spark.read.parquet(s"$base/df"))
   }
 
+  // ---- the two maintained-state shapes ---------------------------------
+
+  /** A TOMBSTONE LINEAGE: the `key` ids appended to `tombs` are retracted
+    * from every store read through it. A takedown is one tick-keyed
+    * tombstone append ([[retractAt]]); every read anti-joins the
+    * tombstones ([[resolve]]), so no data row is rewritten for a
+    * retraction to take effect, and [[fold]] bakes the tombstones into
+    * the stores' generations and clears them. The one definition of that
+    * decision for the ingest loop's corpus lineage, the eval leg's
+    * withdrawals, and the BM25 and IVF-PQ indexes' own tombstones. */
+  final case class Lineage(tombs: IngestStateStore, key: String) {
+
+    /** `df` minus the rows whose `key` is tombstoned at a tick below
+      * `below` (every tombstone by default). */
+    def resolve(df: DataFrame, below: Long = Long.MaxValue): DataFrame =
+      Lineage.minus(df, tombs.currentBelow(below), key)
+
+    /** Tombstone `ids` (a `key` column) at tick `t` — an idempotent
+      * overwrite, so a replayed takedown rewrites its own tick. */
+    def retractAt(t: Long, ids: DataFrame): Unit =
+      tombs.appendTickAt(t, ids.select(key))
+
+    /** Fold every store through [[resolve]] into its generation, then
+      * clear the tombstones — only when tombstones exist and EVERY fold
+      * ran. A skipped single-generation fold keeps them; reads resolve
+      * either way, so a crash anywhere here changes no read. Folding a
+      * subset and clearing would resurface the retracted rows of the
+      * stores left out, so `stores` must be every store read through
+      * this lineage. Returns each store's output partition count (0 =
+      * skipped). */
+    def fold(stores: Seq[IngestStateStore]): Seq[Int] = {
+      val folded = stores.map(s => s.compactWith(df => resolve(df)))
+      if (tombs.maxTick > 0 && folded.forall(_ > 0)) tombs.reset()
+      folded
+    }
+  }
+
+  object Lineage {
+    /** THE tombstone anti-join: `df` minus the rows whose `key` is in
+      * `ids`. */
+    private[io] def minus(df: DataFrame, ids: Option[DataFrame],
+                          key: String): DataFrame =
+      ids.fold(df)(tb =>
+        df.join(tb.select(key).distinct(), Seq(key), "left_anti"))
+  }
+
+  /** What an ingest loop's tick advances besides its dedup stores: an
+    * index's tick-keyed `store` (its place in the tick agreement), its
+    * compaction, its gc, and its write at a takedown tick. */
+  trait MaintainedIndex {
+    def store: IngestStateStore
+    def compact(): Int
+    def gc(): Long
+
+    /** The takedown tick's write: an empty tick — a doc-keyed index
+      * retracts through its tombstone lineage, not by a data write. */
+    private[io] def takedownAt(t: Long, docs: => DataFrame): Unit =
+      store.emptyTickAt(t)
+  }
+
+  /** A SIGNED index: per-`keys` sums of an `increment` that is additive
+    * per document (a doc is admitted in exactly one tick, so the
+    * corpus-global value is the sum of the per-tick increments). Its
+    * rows carry no doc_id for a tombstone to anti-join, so a takedown
+    * SUBTRACTS: [[retractDocsAt]] appends the docs' increment with every
+    * value (non-key) column negated, which restores the merged sums to
+    * what a recount without the docs gives. [[read]] is one `groupBy`
+    * sum; [[compact]] folds the increments to one row per key and drops
+    * the rows whose values all summed to zero (reads never need the
+    * drop, so a crash mid-fold changes no read). Callers must not
+    * retract a doc twice: [[IngestLoop.retractTick]] subtracts only docs
+    * live in the loop state. The gram census
+    * ([[graft.operators.SubstringDedup.Census]]) and the domain mix
+    * ([[MixCounts]]) are this shape. */
+  final class SignedIndex[+F <: DataFrame => DataFrame](
+      val store: IngestStateStore, keys: Seq[String], val increment: F)
+      extends MaintainedIndex {
+
+    /** Append one batch's increment at tick `t` (tick 1 is the bootstrap
+      * corpus) — an idempotent overwrite, so a replayed tick rewrites
+      * its own increment. */
+    def appendDocsAt(t: Long, docs: DataFrame): Unit =
+      store.appendTickAt(t, increment(docs))
+
+    /** IDEMPOTENT tick-1 bootstrap: a retried bootstrap overwrites
+      * tick 1. */
+    def bootstrap(corpusDocs: DataFrame): Unit = appendDocsAt(1, corpusDocs)
+
+    /** Subtract `docs` (their text/source — whatever the increment
+      * reads) at tick `t`; tick-keyed, so a replayed takedown
+      * overwrites its own negative increment. */
+    def retractDocsAt(t: Long, docs: DataFrame): Unit =
+      store.appendTickAt(t, SignedIndex.negated(increment(docs), keys))
+
+    /** The merged sums over everything appended. */
+    def read(): DataFrame = merged(store.current().getOrElse(
+      sys.error("signed index is empty: append a corpus first")))
+
+    private def merged(df: DataFrame): DataFrame = {
+      val sums = df.columns.filterNot(keys.contains).map(c => sum(c).as(c))
+      df.groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+    }
+
+    def compact(): Int = store.compactWith { df =>
+      merged(df).filter(df.columns.filterNot(keys.contains)
+        .map(c => col(c) =!= 0).reduce(_ || _))
+    }
+
+    def gc(): Long = store.gc()
+
+    override private[io] def takedownAt(t: Long, docs: => DataFrame): Unit =
+      retractDocsAt(t, docs)
+  }
+
+  object SignedIndex {
+    /** `inc` with every non-key column negated — a retraction's
+      * increment. */
+    def negated(inc: DataFrame, keys: Seq[String]): DataFrame =
+      inc.select(inc.columns.map(c =>
+        if (keys.contains(c)) col(c) else (-col(c)).as(c)): _*)
+  }
+
+  /** The domain mix's increment: per-source doc counts
+    * (source, n_docs). */
+  object MixCounts extends (DataFrame => DataFrame) {
+    def apply(docs: DataFrame): DataFrame =
+      docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
+  }
+
+  /** The corpus-global k-gram census (h, exact_df_docs, n_occ) feeding
+    * the q90 boilerplate winners
+    * ([[graft.operators.SubstringDedup.winnersFromCensus]]) and the
+    * q86/q91/q95 duplicated-gram statistics (rows with df ≥ 2) — old
+    * text is never re-mined (SubstringDedupSpec pins winners ≡ full
+    * re-mine with the census counter showing one pass per batch). Its
+    * gram size is its increment's `k`, and only there. */
+  type GramCensus = SignedIndex[graft.operators.SubstringDedup.Census]
+
+  def gramCensusIncremental(spark: SparkSession, root: String, name: String,
+                            k: Int = graft.operators.SubstringDedup.DefaultK)
+      : GramCensus =
+    new SignedIndex(ingestState(spark, root, s"$name/gram_census"), Seq("h"),
+      graft.operators.SubstringDedup.Census(k))
+
+  /** The DOMAIN-MIX state of an ingest loop — the store form behind
+    * [[graft.operators.Provenance.q127MixtureRebalance]]: per-source
+    * (source, n_docs) counts per tick, the smallest state family in the
+    * loop. The q97 temperature rates re-derive from [[SignedIndex.read]]
+    * ([[graft.operators.Curate.temperatureRates]]) without recounting
+    * old ticks. */
+  type DomainMix = SignedIndex[MixCounts.type]
+
+  def mixIncremental(spark: SparkSession, root: String,
+                     name: String): DomainMix =
+    new SignedIndex(ingestState(spark, root, s"$name/mix"), Seq("source"),
+      MixCounts)
+
   // ---- incremental BM25 index (tick-maintained postings) ---------------
 
   /** INCREMENTAL BM25 index maintenance (r9 verdict item 2):
@@ -303,11 +460,10 @@ object ArtifactStore {
     * ([[graft.operators.Retrieval.tfOf]]), and dl / df / stats
     * re-derive from the accumulated tf at query time — valid because
     * all three are per-key SUMS/COUNTS over tf rows, and a doc's rows
-    * land exactly once whichever tick carried it (df needs no
-    * decrement machinery: admitted docs are novel, nothing is ever
-    * re-added). Generational compaction bounds the tick-file count
-    * exactly as for the dedup state; crash discipline is the store's
-    * (`_SUCCESS`-gated ticks, invisible half-writes).
+    * land exactly once whichever tick carried it. Generational
+    * compaction bounds the tick-file count exactly as for the dedup
+    * state; crash discipline is the store's (`_SUCCESS`-gated ticks,
+    * invisible half-writes).
     *
     * Bm25IncrementalSpec pins: stored ranking ≡ full-rebuild ranking
     * after N ticks + a compaction, with the tokenize counter showing
@@ -319,30 +475,22 @@ object ArtifactStore {
     * df/stats re-derivation is one pass over tf PARQUET — O(postings),
     * no text; a serving deployment caches it per generation. */
   final class Bm25IncrementalIndex(spark: SparkSession, root: String,
-                                   name: String) {
-    val tfStore: IngestStateStore =
-      ingestState(spark, root, s"$name/bm25_tf")
+                                   name: String) extends MaintainedIndex {
+    val store: IngestStateStore = ingestState(spark, root, s"$name/bm25_tf")
 
     /** doc_id tombstones (r10 verdict item 1 — the retraction leg):
-      * retracted docs' postings are anti-joined out of every read, so
-      * df/dl/avgdl — re-derived from the resolved tf by [[index]] — are
-      * exact for the remaining corpus with NO decrement machinery (the
-      * `ArtifactStore` "nothing is ever removed" assumption, retired).
-      * The anti-join is idempotent; [[compact]] folds tombstones into
-      * the generation and clears them. */
-    val tombStore: IngestStateStore =
-      ingestState(spark, root, s"$name/bm25_tombs")
-
-    private def resolve(tf: DataFrame): DataFrame =
-      tombStore.current().fold(tf)(tb =>
-        tf.join(tb.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
+      * retracted docs' postings leave every read, so df/dl/avgdl —
+      * re-derived from the resolved tf by [[index]] — are exact for the
+      * remaining corpus with NO decrement machinery; [[compact]] folds
+      * the tombstones into the generation and clears them. */
+    val lineage: Lineage =
+      Lineage(ingestState(spark, root, s"$name/bm25_tombs"), "doc_id")
 
     /** Retract docs (a `doc_id` column) from the served index — a
       * takedown-sized tombstone append, tick-keyed so a replayed
-      * takedown overwrites its own tombstone tick; no posting is
-      * rewritten until the next compaction folds them. */
+      * takedown overwrites its own tombstone tick. */
     def retractDocsAt(t: Long, docIds: DataFrame): Unit =
-      tombStore.appendTickAt(t, docIds.select("doc_id"))
+      lineage.retractAt(t, docIds)
 
     /** IDEMPOTENT tick-1 bootstrap (mirrors [[IngestLoop.bootstrap]]):
       * a re-run after a crash overwrites the same tick-1 directory
@@ -355,23 +503,18 @@ object ArtifactStore {
       * an idempotent overwrite, so a crashed/replayed tick rewrites its
       * own postings instead of appending a duplicate copy. */
     def appendDocsAt(t: Long, docs: DataFrame): Unit =
-      tfStore.appendTickAt(t, graft.operators.Retrieval.tfOf(docs))
+      store.appendTickAt(t, graft.operators.Retrieval.tfOf(docs))
 
     /** The index over everything appended so far MINUS retracted docs
       * — tf from parquet, dl/df/stats derived, text untouched. */
     def index(): graft.operators.Retrieval.Bm25Index =
-      graft.operators.Retrieval.indexFromTf(resolve(tfStore.current().getOrElse(
-        sys.error("incremental BM25 index is empty: append a corpus first"))))
+      graft.operators.Retrieval.indexFromTf(lineage.resolve(
+        store.current().getOrElse(
+          sys.error("incremental BM25 index is empty: append a corpus first"))))
 
-    /** Compaction folds tombstones into the generation (retracted
-      * postings physically leave the index) and clears the tombstone
-      * store — only after the fold actually ran (a skipped single-gen
-      * fold keeps the tombstones; reads stay correct either way). */
-    def compact(targetBytes: Long = 128L * 1024 * 1024): Int = {
-      val n = tfStore.compactWith(resolve, targetBytes)
-      if (n > 0) tombStore.reset()
-      n
-    }
+    def compact(): Int = lineage.fold(Seq(store)).head
+
+    def gc(): Long = store.gc() + lineage.tombs.gc()
   }
 
   def bm25Incremental(spark: SparkSession, root: String,
@@ -395,7 +538,7 @@ object ArtifactStore {
     * search equality follows — the scan is a pure function of the
     * code rows), across a compaction, with zero training runs. */
   final class IvfPqIncrementalIndex(spark: SparkSession, root: String,
-                                    name: String) {
+                                    name: String) extends MaintainedIndex {
     // ---- generations (q122's deployment form) ------------------------
     // A RECLUSTER swaps the whole index to retrained artifacts: new
     // codes re-encoded from raw vectors land under generation g+1's
@@ -423,17 +566,18 @@ object ArtifactStore {
     private def storeName(kind: String, g: Long): String =
       if (g <= 1L) s"$name/ivfpq_$kind" else s"$name/g$g/ivfpq_$kind"
 
-    def codeStore: IngestStateStore =
+    /** The serving generation's code rows. */
+    def store: IngestStateStore =
       ingestState(spark, root, storeName("codes", generation))
 
-    /** vec_id tombstones — the [[Bm25IncrementalIndex.tombStore]]
-      * contract on the vector leg: retracted vectors' code rows leave
-      * every [[codes]] read via an idempotent anti-join; [[compact]]
-      * folds and clears. Per-generation: a recluster's re-encode
-      * excludes tombstoned vectors at build time, so the new
+    /** The serving generation's vec_id tombstones — the
+      * [[Bm25IncrementalIndex.lineage]] contract on the vector leg:
+      * retracted vectors' code rows leave every [[codes]] read;
+      * [[compact]] folds and clears. Per-generation: a recluster's
+      * re-encode excludes tombstoned vectors at build time, so the new
       * generation starts with an empty tombstone store. */
-    def tombStore: IngestStateStore =
-      ingestState(spark, root, storeName("tombs", generation))
+    def lineage: Lineage =
+      Lineage(ingestState(spark, root, storeName("tombs", generation)), "vec_id")
 
     /** The serving artifact tables (coarse centroids, residual
       * codebooks) a post-recluster generation was built under — what
@@ -458,8 +602,7 @@ object ArtifactStore {
                                            subDim: Int = Pq.DefaultSubDim,
                                            baseTick: Long = 1L): Long = {
       val g = generation + 1
-      val live = tombStore.current().fold(vectors)(tb =>
-        vectors.join(tb.select("vec_id").distinct(), Seq("vec_id"), "left_anti"))
+      val live = lineage.resolve(vectors)
       cents.write.mode("overwrite")
         .parquet(s"$root/ingest_state/${storeName("cents", g)}")
       rcb.write.mode("overwrite")
@@ -497,12 +640,8 @@ object ArtifactStore {
       g
     }
 
-    private def resolve(codes: DataFrame): DataFrame =
-      tombStore.current().fold(codes)(tb =>
-        codes.join(tb.select("vec_id").distinct(), Seq("vec_id"), "left_anti"))
-
     def retractVectorsAt(t: Long, vecIds: DataFrame): Unit =
-      tombStore.appendTickAt(t, vecIds.select("vec_id"))
+      lineage.retractAt(t, vecIds)
 
     /** Encode + append one batch of admitted vectors under the frozen
       * artifact tables at tick `t` (tick 1 is the bootstrap corpus) —
@@ -510,7 +649,7 @@ object ArtifactStore {
     def appendVectorsAt(t: Long, vectors: DataFrame, cents: DataFrame,
                         rcb: DataFrame, m: Int = Pq.DefaultM,
                         subDim: Int = Pq.DefaultSubDim): Unit =
-      codeStore.appendTickAt(t,
+      store.appendTickAt(t,
         graft.operators.Pq.residualCodes(vectors, cents, rcb, m, subDim))
 
     /** IDEMPOTENT tick-1 bootstrap (mirrors [[IngestLoop.bootstrap]]):
@@ -524,14 +663,10 @@ object ArtifactStore {
     /** Every code row appended so far MINUS retracted vectors — the
       * relation an IVF-PQ scan probes (cluster-pruned by `cid`, ADC
       * over `(sub, code)`). */
-    def codes(): DataFrame = resolve(codeStore.current().getOrElse(
+    def codes(): DataFrame = lineage.resolve(store.current().getOrElse(
       sys.error("incremental IVF-PQ index is empty: append a corpus first")))
 
-    def compact(targetBytes: Long = 128L * 1024 * 1024): Int = {
-      val n = codeStore.compactWith(resolve, targetBytes)
-      if (n > 0) tombStore.reset()
-      n
-    }
+    def compact(): Int = lineage.fold(Seq(store)).head
 
     /** GC strictly-shadowed GENERATIONS (r11 verdict item 7): once a
       * committed marker for generation g exists, every reader —
@@ -571,148 +706,6 @@ object ArtifactStore {
   def ivfPqIncremental(spark: SparkSession, root: String,
                        name: String): IvfPqIncrementalIndex =
     new IvfPqIncrementalIndex(spark, root, name)
-
-  // ---- incremental k-gram census (tick-maintained curation state) ------
-
-  /** INCREMENTAL CURATION STATE (r10 verdict item 5): the corpus-global
-    * k-gram census feeding the q90 boilerplate winners and the
-    * q86/q91/q95 duplicated-gram statistics, maintained per ingest tick
-    * — the [[Bm25IncrementalIndex]] pattern applied to curation: each
-    * tick appends ONLY its admitted docs' (h, exact_df_docs, n_occ) census
-    * increment ([[graft.operators.SubstringDedup.censusOf]] — additive
-    * because a doc is admitted in exactly one tick), and the served
-    * census/winner set is one merge aggregate over the accumulated
-    * 20-byte hash rows — old text is never re-mined
-    * (SubstringDedupSpec pins winners ≡ full re-mine with the census
-    * counter showing one pass per batch). Compaction FOLDS partials
-    * via [[graft.operators.SubstringDedup.mergeCensus]], so the
-    * generation holds one row per distinct gram. */
-  final class GramCensusIncrementalIndex(spark: SparkSession, root: String,
-                                         name: String, val k: Int) {
-    val censusStore: IngestStateStore =
-      ingestState(spark, root, s"$name/gram_census")
-
-    def appendDocsAt(t: Long, docs: DataFrame): Unit =
-      censusStore.appendTickAt(t,
-        graft.operators.SubstringDedup.censusOf(docs, k))
-
-    /** IDEMPOTENT tick-1 bootstrap (the [[Bm25IncrementalIndex]]
-      * contract): a retried bootstrap overwrites tick 1. */
-    def bootstrap(corpusDocs: DataFrame): Unit = appendDocsAt(1, corpusDocs)
-
-    /** The merged corpus-global census over everything appended. */
-    def census(): DataFrame =
-      graft.operators.SubstringDedup.mergeCensus(censusStore.current()
-        .getOrElse(sys.error(
-          "incremental gram census is empty: append a corpus first")))
-
-    /** The q90 winner hash set from the maintained census. */
-    def winners(topN: Int = 20): DataFrame =
-      graft.operators.SubstringDedup.winnersFromCensus(census(), topN)
-
-    /** The q86/q91 duplicated-gram hash set (global df ≥ 2). */
-    def dupHashes(): DataFrame =
-      census().filter(col("exact_df_docs") >= 2).select("h")
-
-    /** RETRACT docs from the maintained census (q123's store form) by
-      * appending their NEGATED increment at tick `t` — the census is the
-      * one state family an anti-join cannot retract from (no doc_id
-      * column), so the takedown leg subtracts instead: merged counts
-      * return to the re-mine-without-them values exactly
-      * ([[graft.operators.SubstringDedup.negCensusOf]]). Needs the
-      * docs' text. Tick-keyed, so a replayed takedown overwrites its
-      * own negative increment; the caller's tombstone store keeps a
-      * doc from being retracted at two ticks
-      * ([[IngestLoop.retractTick]]). */
-    def retractDocsAt(t: Long, docs: DataFrame): Unit =
-      censusStore.appendTickAt(t,
-        graft.operators.SubstringDedup.negCensusOf(docs, k))
-
-    /** Compaction folds increments (positive and negative) to one row
-      * per gram and DROPS fully-retracted grams (both counts zeroed) —
-      * reads don't need the drop (df 0 never passes a ≥ 2 gate), so a
-      * crash mid-fold leaves every verdict unchanged (the
-      * [[IngestStateStore.compactWith]] idempotence contract). */
-    def compact(targetBytes: Long = 128L * 1024 * 1024): Int =
-      censusStore.compactWith(df =>
-        graft.operators.SubstringDedup.mergeCensus(df)
-          .filter(col("exact_df_docs") =!= 0 || col("n_occ") =!= 0),
-        targetBytes)
-  }
-
-  def gramCensusIncremental(spark: SparkSession, root: String, name: String,
-                            k: Int = graft.operators.SubstringDedup.DefaultK)
-      : GramCensusIncrementalIndex =
-    new GramCensusIncrementalIndex(spark, root, name, k)
-
-  // ---- maintained domain-mix state (q127) --------------------------------
-
-  /** The DOMAIN-MIX state of an ingest loop, maintained per tick — the
-    * store form behind [[graft.operators.Provenance.q127MixtureRebalance]]:
-    * each tick appends its admitted docs' per-source counts (additive —
-    * a doc is admitted in exactly one tick), the served mix is one
-    * sum-merge over (source, n_docs) rows, and the q97 temperature
-    * table re-derives from it without ever recounting old ticks. A
-    * takedown SUBTRACTS (the census pattern — mix rows carry no doc_id
-    * to anti-join): [[IngestLoop.retractTick]]'s mix leg appends the
-    * retracted docs' negated counts behind the tombstone existence
-    * check. Rows are (source, n_docs) — bytes per DOMAIN per tick, the
-    * smallest state family in the loop. */
-  final class MixIncrementalIndex(spark: SparkSession, root: String,
-                                  name: String) {
-    val mixStore: IngestStateStore = ingestState(spark, root, s"$name/mix")
-
-    private def countsOf(docs: DataFrame): DataFrame =
-      docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
-
-    def appendDocsAt(t: Long, docs: DataFrame): Unit =
-      mixStore.appendTickAt(t, countsOf(docs))
-
-    /** IDEMPOTENT tick-1 bootstrap (the incremental-index contract). */
-    def bootstrap(corpusDocs: DataFrame): Unit = appendDocsAt(1, corpusDocs)
-
-    /** Retraction subtracts — tick-keyed like the census leg. */
-    def retractDocsAt(t: Long, docs: DataFrame): Unit =
-      mixStore.appendTickAt(t,
-        countsOf(docs).select(col("source"), (-col("n_docs")).as("n_docs")))
-
-    /** The merged per-source counts over everything appended. */
-    def mix(): DataFrame =
-      mixStore.current().getOrElse(sys.error(
-          "incremental mix is empty: append a corpus first"))
-        .groupBy("source").agg(sum("n_docs").as("n_docs"))
-
-    /** The q97 temperature table over the MAINTAINED counts — what
-      * q127's rebalance branch serves, with zero recounts of old ticks
-      * (MixStatsSpec pins equality with the live q127 rate table). */
-    def temperatureTable(alpha: Double = 0.7,
-                         budgetFrac: Double = 0.5): DataFrame = {
-      val per = mix().filter(col("n_docs") > 0)
-        .withColumn("wm",
-          round(pow(col("n_docs").cast("double"), lit(alpha)) * 1e6)
-            .cast("long"))
-      val tot = per.agg(sum("wm").as("denom"), sum("n_docs").as("n_total"))
-      per.crossJoin(org.apache.spark.sql.functions.broadcast(tot))
-        .withColumn("weight", round(col("wm") / col("denom"), 6))
-        .withColumn("rate", round(least(lit(1.0),
-          lit(budgetFrac) * col("n_total") * col("wm")
-            / col("denom") / col("n_docs")), 6))
-        .select("source", "n_docs", "weight", "rate")
-        .orderBy("source")
-    }
-
-    /** Compaction folds positive and negative increments to one row per
-      * source and drops fully-retracted domains. */
-    def compact(targetBytes: Long = 128L * 1024 * 1024): Int =
-      mixStore.compactWith(df =>
-        df.groupBy("source").agg(sum("n_docs").as("n_docs"))
-          .filter(col("n_docs") =!= 0),
-        targetBytes)
-  }
-
-  def mixIncremental(spark: SparkSession, root: String,
-                     name: String): MixIncrementalIndex =
-    new MixIncrementalIndex(spark, root, name)
 
   // ---- serving quality model with unlearning (q128) ---------------------
 
@@ -1029,6 +1022,11 @@ object ArtifactStore {
       increment.write.mode("overwrite").parquet(s"$base/tick=$t")
     }
 
+    /** An empty tick `t` — the write of a store with nothing to add at
+      * a tick every store of the agreement must reach (a takedown). */
+    private[io] def emptyTickAt(t: Long): Unit =
+      appendTickAt(t, current().get.limit(0))
+
     /** IDEMPOTENT generation-base write: persist `df` as `gen=$g`, the
       * layout meaning "this covers ticks 1..g" — so a store REBUILT
       * from scratch mid-loop (an ANN recluster's re-encode,
@@ -1094,30 +1092,28 @@ object ArtifactStore {
     }.sum
 
     /** Fold base + ticks into generation `maxTick`, sized from the
-      * accumulated bytes; drop superseded dirs only after the new base
-      * commits. Returns the output partition count. */
-    def compact(targetBytes: Long = 128L * 1024 * 1024): Int =
-      compactWith(identity, targetBytes)
+      * accumulated bytes at [[Compact.TargetBytes]] per file; drop
+      * superseded dirs only after the new base commits. Returns the
+      * output partition count. */
+    def compact(): Int = compactWith(identity)
 
-    /** [[compact]] with a row transform applied while folding — the
-      * tombstone-fold hook ([[IngestLoop.compactIfNeeded]] passes the
-      * retraction anti-join so a folded generation no longer carries
-      * retracted docs' rows). The transform MUST be one whose read-path
-      * application is idempotent (anti-joins are): correctness never
-      * depends on whether a fold ran — reads keep applying it — so a
-      * crash at any point between per-store folds leaves every verdict
-      * unchanged. Returns 0 without folding when the store is already a
-      * single up-to-date generation (re-compacting would overwrite the
-      * very files being read; the unfolded transform keeps applying at
-      * read time, so skipping is safe). */
-    def compactWith(transform: DataFrame => DataFrame,
-                    targetBytes: Long = 128L * 1024 * 1024): Int = {
+    /** [[compact]] with a row transform applied while folding — a
+      * [[Lineage.fold]]'s tombstone anti-join, or a [[SignedIndex]]'s
+      * sum-and-drop-zeros. The transform MUST be one whose read-path
+      * application is idempotent: correctness never depends on whether
+      * a fold ran — reads keep applying it — so a crash at any point
+      * between per-store folds leaves every verdict unchanged. Returns 0
+      * without folding when the store is already a single up-to-date
+      * generation (re-compacting would overwrite the very files being
+      * read; the unfolded transform keeps applying at read time, so
+      * skipping is safe). */
+    private[io] def compactWith(transform: DataFrame => DataFrame): Int = {
       val upTo = maxTick
       val paths = currentPaths
       require(paths.nonEmpty, "nothing to compact")
       if (paths == Seq(s"$base/gen=$upTo")) return 0
       val bytes = paths.map(Compact.dataBytes(spark, _)).sum
-      val n = Compact.partitionsFor(bytes, targetBytes)
+      val n = Compact.partitionsFor(bytes, Compact.TargetBytes)
       transform(spark.read.parquet(paths: _*)).repartition(n)
         .write.mode("overwrite").parquet(s"$base/gen=$upTo")
       // the new generation is committed (_SUCCESS exists) — superseded

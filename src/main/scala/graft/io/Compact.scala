@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction — the table-maintenance job every long-lived
   * 100 TB dataset needs: streaming ingest and fine-grained partitioned
@@ -8,13 +8,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dies on per-file open/footer overhead long before bandwidth matters.
   *
   * The fix is mechanical: size the output partition count from the
-  * actual input bytes and a target file size, then rewrite. Uses a
+  * actual input bytes and a target file size, then rewrite
+  * ([[ArtifactStore.IngestStateStore.compact]]). Uses a
   * round-robin `repartition(n)` (even output sizes regardless of input
   * skew); callers that need co-location instead compact via
   * `repartition(n, key)` or a bucketed write (BucketingSpec) — evenness
   * and clustering are competing goals, pick per table.
   */
 object Compact {
+
+  /** The output file size every compaction aims at. */
+  val TargetBytes: Long = 128L * 1024 * 1024
 
   /** Bytes under `path` per the filesystem listing (parquet data files
     * only — skips _SUCCESS/metadata). */
@@ -36,22 +40,4 @@ object Compact {
     * open-overhead problem this solves. */
   def partitionsFor(bytes: Long, targetBytes: Long): Int =
     math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-
-  /** Rewrite `inPath` parquet as ~`targetBytes`-sized files at
-    * `outPath`. Returns the output partition count used. */
-  def parquet(spark: SparkSession, inPath: String, outPath: String,
-              targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val n = partitionsFor(dataBytes(spark, inPath), targetBytes)
-    spark.read.parquet(inPath).repartition(n)
-      .write.mode("overwrite").parquet(outPath)
-    n
-  }
-
-  /** Same, for an already-loaded frame whose source size is known. */
-  def frame(df: DataFrame, outPath: String, inputBytes: Long,
-            targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val n = partitionsFor(inputBytes, targetBytes)
-    df.repartition(n).write.mode("overwrite").parquet(outPath)
-    n
-  }
 }

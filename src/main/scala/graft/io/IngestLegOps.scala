@@ -8,7 +8,7 @@ import graft.operators.Fuzzy
 /** The semantic-leg and eval-leg operation groups of
   * [[IngestLoop]] — moved whole from IngestLoop.scala (r14 verdict
   * item 6: file hygiene, pure move). The self-type keeps every
-  * cross-reference (Stores, the leg case classes, `resolved`)
+  * cross-reference (Stores, the leg case classes, `nextTickOf`)
   * identical, and `object IngestLoop extends IngestLegOps`, so every
   * `IngestLoop.*` call site reads unchanged. */
 trait IngestLegOps { self: IngestLoop.type =>
@@ -92,7 +92,7 @@ trait IngestLegOps { self: IngestLoop.type =>
     val next = SemLeg(
       ArtifactStore.ingestState(spark, root, s"$name/sem_sigs"),
       leg.vectors, nTables, bits, leg.dim, leg.simThreshold)
-    val ingested = resolved(st, leg.sigs.current().get)
+    val ingested = st.lineage.resolve(leg.sigs.current().get)
       .select("doc_id").distinct()
     next.sigs.appendTickAt(1, graft.operators.SemanticGate.sigRowsOf(
       leg.vectors, ingested, nTables, bits, leg.dim))
@@ -116,7 +116,7 @@ trait IngestLegOps { self: IngestLoop.type =>
     * every quiesce point, where the candidate join it guards is
     * O(N²/2^bits) when drifted. */
   def semCanaryReport(st: Stores, leg: SemLeg): DataFrame = {
-    val sigs = resolved(st, leg.sigs.current().getOrElse(
+    val sigs = st.lineage.resolve(leg.sigs.current().getOrElse(
       sys.error("semantic leg not bootstrapped: no tick-1 sig base")))
     val nLive = sigs.select("doc_id").distinct().count()
     graft.operators.SemanticGate.occupancyCensus(sigs, nLive, leg.bits)
@@ -151,7 +151,7 @@ trait IngestLegOps { self: IngestLoop.type =>
   private[io] def semFlags(st: Stores, leg: SemLeg, t: Long,
                        batchIds: DataFrame): DataFrame =
     graft.operators.SemanticGate.flaggedAgainstState(
-      resolved(st, leg.sigs.currentUpTo(t - 1).getOrElse(
+      st.lineage.resolve(leg.sigs.currentUpTo(t - 1).getOrElse(
         sys.error("semantic leg not bootstrapped: no tick-1 sig base"))),
       leg.vectors, batchIds,
       leg.nTables, leg.bits, leg.dim, leg.simThreshold)
@@ -216,30 +216,24 @@ trait IngestLegOps { self: IngestLoop.type =>
     def hits(store: Option[ArtifactStore.IngestStateStore],
              sigs: DataFrame): Option[DataFrame] =
       store.map(s => graft.multimodal.Multimodal.flaggedAgainstState(
-          resolvedEval(leg, s.current().getOrElse(
+          leg.lineage.resolve(s.current().getOrElse(
             sys.error("mm eval leg not bootstrapped: no sig base"))),
           sigs.filter(col("sig").isNotNull), leg.maxDist, leg.maxBand)
         .select(col("fid").as("cid")))
     (hits(leg.imgSigs, batchISigs) ++ hits(leg.audSigs, batchASigs)).toSeq
   }
 
-  /** An eval-state frame minus withdrawn items — the eval twin of
-    * [[resolved]]. */
-  private[graft] def resolvedEval(leg: EvalLeg, df: DataFrame): DataFrame =
-    leg.tombs.current().fold(df)(tb =>
-      df.join(tb.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
-
   /** Batch ids contaminated by the LIVE eval set, both channels —
     * verbatim gram hits + verified fuzzy near-dups (the q136 rule). */
   private[graft] def contamFlags(leg: EvalLeg, batchDocs: DataFrame): DataFrame = {
     val vb = graft.operators.Contamination.grams(batchDocs, leg.n)
-      .join(resolvedEval(leg, leg.grams.current().getOrElse(
+      .join(leg.lineage.resolve(leg.grams.current().getOrElse(
           sys.error("eval leg not bootstrapped: no gram base")))
         .select("h"), Seq("h"), "left_semi")
       .select("doc_id")
     val fz = Fuzzy.lshPairsAgainstState(
-        resolvedEval(leg, leg.bands.current().get),
-        resolvedEval(leg, leg.shingles.current().get),
+        leg.lineage.resolve(leg.bands.current().get),
+        leg.lineage.resolve(leg.shingles.current().get),
         batchDocs, leg.threshold)
       .select(col("eval_id").as("doc_id"))
     vb.union(fz).distinct().select(col("doc_id").as("cid"))
@@ -260,36 +254,20 @@ trait IngestLegOps { self: IngestLoop.type =>
   def evalUpdateTick(st: Stores, leg: EvalLeg, addDocs: DataFrame,
                      withdrawIds: DataFrame,
                      updateId: Long = -1L): DataFrame = {
-    // Crash-stable default id (r12 advice): the four eval-side appends
-    // below share one id, and a replay WITHOUT an explicit updateId
-    // must land the laggards at the SAME id a crashed run started —
-    // deriving u from grams alone would open a SECOND id once grams had
-    // committed, leaving duplicate eval band/shingle rows that inflate
-    // lshPairsAgainstState intersection counts. So u agrees across the
-    // three bootstrapped data stores (the nextTickOf rule: unanimous →
-    // advance, disagreement → redo the max), clamped by the tombstone
-    // store's maxTick — tombs has no tick-1 bootstrap (and compactEval
-    // resets it), so it only raises the agreement when it is the one
-    // that got ahead (the appends run tombs-first).
-    val u = if (updateId > 0) updateId else {
-      val dataMax = Seq(leg.grams, leg.bands, leg.shingles).map(_.maxTick)
-      val next =
-        if (dataMax.distinct.size == 1) dataMax.head + 1 else dataMax.max
-      math.max(next, leg.tombs.maxTick)
-    }
-    leg.tombs.appendTickAt(u, withdrawIds.select("doc_id"))
+    val u = if (updateId > 0) updateId else evalTickOf(leg)
+    leg.lineage.retractAt(u, withdrawIds)
     leg.grams.appendTickAt(u,
       graft.operators.Contamination.grams(addDocs, leg.n))
     leg.bands.appendTickAt(u, Fuzzy.corpusBandState(addDocs))
     leg.shingles.appendTickAt(u, Fuzzy.corpusShingleHashes(addDocs))
-    val vb = resolved(st, leg.docGrams.current().getOrElse(
+    val vb = st.lineage.resolve(leg.docGrams.current().getOrElse(
         sys.error("eval leg not bootstrapped: no docGrams base")))
       .join(graft.operators.Contamination.grams(addDocs, leg.n)
         .select("h"), Seq("h"), "left_semi")
       .select("doc_id")
     val fz = Fuzzy.lshPairsAgainstState(
-        resolved(st, st.bands.current().get),
-        resolved(st, st.shingles.current().get),
+        st.lineage.resolve(st.bands.current().get),
+        st.lineage.resolve(st.shingles.current().get),
         addDocs, leg.threshold)
       .select(col("train_id").as("doc_id"))
     vb.union(fz).distinct().localCheckpoint()
@@ -309,21 +287,7 @@ trait IngestLegOps { self: IngestLoop.type =>
                        withdrawIds: DataFrame,
                        updateId: Long = -1L): DataFrame = {
     import graft.multimodal.Multimodal
-    val u = if (updateId > 0) updateId else {
-      // EVERY attached data store joins the unanimity set (r13 advice:
-      // the sig stores append after the text-side four, so they can
-      // only LAG — a max-clamp never sees them behind, and a crash
-      // after the text appends left the three text stores unanimous at
-      // u0, deriving u0+1 on replay and re-appending the same addDocs
-      // at a second id). Advance (+1) only when ALL attached data
-      // stores agree; otherwise redo at the max of all of them, still
-      // clamped by the tombstone store (the tombs-first rule).
-      val dataMax = (Seq(leg.grams, leg.bands, leg.shingles) ++
-        leg.imgSigs ++ leg.audSigs).map(_.maxTick)
-      val next =
-        if (dataMax.distinct.size == 1) dataMax.head + 1 else dataMax.max
-      math.max(next, leg.tombs.maxTick)
-    }
+    val u = if (updateId > 0) updateId else evalTickOf(leg)
     val textCaught = evalUpdateTick(st.text, leg, addDocs, withdrawIds, u)
     val (addISigs, addASigs) = graft.operators.Materialize.par2(
       Multimodal.imageSigs(addDocs), Multimodal.audioSigs(addDocs))
@@ -333,7 +297,7 @@ trait IngestLegOps { self: IngestLoop.type =>
                addSigs: DataFrame,
                docSigs: ArtifactStore.IngestStateStore): Option[DataFrame] =
       store.map(_ => Multimodal.flaggedAgainstState(
-          addSigs, resolved(st.text, docSigs.current().get),
+          addSigs, st.text.lineage.resolve(docSigs.current().get),
           leg.maxDist, leg.maxBand)
         .select(col("fid").as("doc_id")))
     (Seq(textCaught) ++ caught(leg.imgSigs, addISigs, st.imgSigs) ++
@@ -341,33 +305,36 @@ trait IngestLegOps { self: IngestLoop.type =>
       .reduce(_ union _).distinct().localCheckpoint()
   }
 
+  /** The id an eval update without an explicit `updateId` runs at,
+    * crash-stable: the eval-side appends share one id, and a replay must
+    * land the laggards at the SAME id a crashed run started — deriving
+    * it from one store would open a SECOND id once that store had
+    * committed, leaving duplicate eval rows that inflate
+    * lshPairsAgainstState intersection counts. So the id is
+    * [[nextTickOf]] over EVERY attached data store (the modality sig
+    * stores append last, so they can only lag), clamped by the
+    * tombstone store's maxTick — tombs has no tick-1 bootstrap (and
+    * [[compactEval]] resets it), so it only raises the agreement when
+    * it is the one that got ahead (the appends run tombs-first). */
+  private def evalTickOf(leg: EvalLeg): Long =
+    math.max(nextTickOf(leg.data.map(_.maxTick)), leg.tombs.maxTick)
+
   /** [[compactEval]] under the [[compactIfNeeded]] file-count trigger
     * — the quiesce bundle's eval-lineage step (r15 advice: the bundle
     * folded only eval.docGrams via the loop-lineage pass, so eval
     * withdrawals never folded for a deployment relying solely on the
     * bundle; now they fold under the same production trigger).
     * Returns whether the fold ran. */
-  def compactEvalIfNeeded(leg: EvalLeg, maxDataFiles: Long = 64,
-                          targetBytes: Long = 128L * 1024 * 1024)
-      : Boolean = {
-    val need = (Seq(leg.grams, leg.bands, leg.shingles) ++
-      leg.imgSigs ++ leg.audSigs).exists(_.dataFileCount > maxDataFiles)
-    if (need) compactEval(leg, targetBytes)
+  def compactEvalIfNeeded(leg: EvalLeg, maxDataFiles: Long = 64): Boolean = {
+    val need = leg.data.exists(_.dataFileCount > maxDataFiles)
+    if (need) compactEval(leg)
     need
   }
 
   /** Fold the eval-side stores' withdrawals into their generations and
     * clear the eval tombstones — the [[compactIfNeeded]] discipline on
-    * the eval lineage (run at quiesce points). */
-  def compactEval(leg: EvalLeg,
-                  targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    // the q140 modality sig stores resolve through the same eval
-    // tombstones, so they MUST fold in the same pass (the
-    // compactIfNeeded argument)
-    val folded = (Seq(leg.grams, leg.bands, leg.shingles) ++
-        leg.imgSigs ++ leg.audSigs)
-      .map(_.compactWith(df => resolvedEval(leg, df), targetBytes))
-    if (leg.tombs.current().isDefined && folded.forall(_ > 0))
-      leg.tombs.reset()
-  }
+    * the eval lineage (run at quiesce points; the q140 modality sig
+    * stores resolve through the same eval tombstones, so they fold in
+    * the same pass). */
+  def compactEval(leg: EvalLeg): Unit = leg.lineage.fold(leg.data)
 }

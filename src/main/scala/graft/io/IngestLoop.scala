@@ -67,7 +67,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * ([[Provenance.corpusDocHashes]]): retracting one of two ingested
     * docs that share a hash must keep the hash, which a bare distinct-ch
     * store cannot express. `tombs` holds (doc_id) rows of retracted
-    * docs; EVERY state read anti-joins them ([[resolved]]), so
+    * docs; EVERY state read resolves through their [[lineage]], so
     * correctness never depends on whether a compaction has folded
     * tombstones into the generations — the anti-join is idempotent, and
     * a crash at any point of the fold sequence leaves verdicts
@@ -78,6 +78,11 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                           tombs: ArtifactStore.IngestStateStore)
       extends StoreSet {
     def text: Stores = this
+    /** The corpus tombstone lineage every state read resolves through
+      * (the streaming folds resolve their state reads through it too,
+      * so a quiesce-point takedown between stream runs reaches the
+      * stream's fuzzy/signature judgement as well). */
+    def lineage: ArtifactStore.Lineage = ArtifactStore.Lineage(tombs, "doc_id")
     private[io] def all: Seq[ArtifactStore.IngestStateStore] =
       Seq(hashes, bands, shingles)
     private[io] def sigCols: Seq[(ArtifactStore.IngestStateStore, String)] =
@@ -115,15 +120,6 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       ArtifactStore.ingestState(spark, root, s"$name/bands"),
       ArtifactStore.ingestState(spark, root, s"$name/shingles"),
       ArtifactStore.ingestState(spark, root, s"$name/tombs"))
-
-  /** A state frame minus the retracted docs — the ONE tombstone
-    * application every read goes through (package-visible: the
-    * streaming folds resolve their state reads through it too, so a
-    * quiesce-point takedown between stream runs reaches the stream's
-    * fuzzy/signature judgement as well). */
-  private[graft] def resolved(st: Stores, df: DataFrame): DataFrame =
-    st.tombs.current().fold(df)(tb =>
-      df.join(tb.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
 
   /** Seed the loop's state from the existing corpus — tick 1 in each
     * store, written IDEMPOTENTLY (`appendTickAt(1)`): a bootstrap that
@@ -163,7 +159,13 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * losing the takedown. `docs` is the retracted documents' table
     * (text and source): census and mix rows carry no doc_id to
     * anti-join, so it is required exactly when a census (the census
-    * leg, else the curate leg's) or mix leg is attached.
+    * leg, else the curate leg's) or mix leg is attached. They subtract
+    * only the docs live in the loop state below `k` — the docs their
+    * increments counted: a quarantined or never-admitted doc, or one a
+    * compaction already folded out (a takedown repeated after
+    * [[compactIfNeeded]] cleared the tombstones), subtracts nothing.
+    * [[compactIfNeeded]] refuses while a takedown is in flight, so a
+    * doc leaves that state only after its takedown subtracted it.
     *
     * Replay rule, TOMBS FIRST: the takedown's ids are the ones not
     * tombstoned by an EARLIER tick; they are tombstoned at `k` before
@@ -183,19 +185,16 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
   def retractTick(st: StoreSet, docIds: DataFrame,
                   docs: Option[DataFrame] = None,
                   legs: Legs = Legs()): Long = {
-    require(docs.isDefined == (legs.rawCensus.isDefined || legs.mix.isDefined),
+    require(docs.isDefined == legs.subtracts,
       "retractTick takes the retracted documents (`docs`) exactly when " +
         "a census or mix leg is attached: those legs subtract by text " +
         "and source, not by doc_id")
-    val tombs = st.text.tombs
+    val lineage = st.text.lineage
     val k = legs.tick(st.all)
-    val ids = docIds.select("doc_id")
-    val fresh = tombs.currentBelow(k)
-      .fold(ids)(tb =>
-        ids.join(tb.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
+    val fresh = lineage.resolve(docIds.select("doc_id"), below = k)
       .localCheckpoint()
-    if (fresh.isEmpty) return tombs.maxTick // complete-replay no-op
-    tombs.appendTickAt(k, fresh)
+    if (fresh.isEmpty) return lineage.tombs.maxTick // complete-replay no-op
+    lineage.retractAt(k, fresh)
     // MODEL leg (q128): unlearn — retrain from the persisted reservoir
     // when the takedown reaches the serving model's training sample (a
     // generation swap; a second call with the same ids finds none of
@@ -209,14 +208,16 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     legs.export.foreach(_.store.retractDocs(fresh))
     // the tick-keyed writes, last. The sem sig rows and the decontam
     // docGrams carry doc_id, so the shared tombstone anti-join IS their
-    // retraction — every lineage store only needs the empty tick.
-    def emptyTick(s: ArtifactStore.IngestStateStore): Unit =
-      s.appendTickAt(k, s.current().get.limit(0))
-    (legs.lineage(st.all) ++ legs.idx.map(_.tfStore) ++
-      legs.ann.map(_.idx.codeStore)).foreach(emptyTick)
-    val gone = docs.map(_.join(fresh, Seq("doc_id"), "left_semi"))
-    legs.rawCensus.foreach(_.retractDocsAt(k, gone.get))
-    legs.mix.foreach(_.retractDocsAt(k, gone.get))
+    // retraction — every lineage store only needs the empty tick. The
+    // signed indexes (census, mix) subtract the fresh docs live in the
+    // state below k: tombstones read below k, since on a redo tick k's
+    // own tombstones already hold them
+    legs.lineage(st.all).foreach(_.emptyTickAt(k))
+    lazy val gone = docs.get.join(fresh, Seq("doc_id"), "left_semi")
+      .join(lineage.resolve(st.text.hashes.currentBelow(k).get, below = k)
+        .select("doc_id"), Seq("doc_id"), "left_semi")
+      .localCheckpoint()
+    legs.consumers.foreach(_.takedownAt(k, gone))
     legs.export.foreach(_.store.appendEmptyEpochAt(k))
     k
   }
@@ -241,7 +242,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                name: String): Stores = {
     val next = stores(spark, root, name)
     next.all.zip(st.all).foreach { case (n, s) =>
-      n.appendTickAt(1, resolved(st, s.current().get)) }
+      n.appendTickAt(1, st.lineage.resolve(s.current().get)) }
     next
   }
 
@@ -254,7 +255,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                  name: String): MmStores = {
     val next = mmStores(spark, root, name)
     next.all.zip(st.all).foreach { case (n, s) =>
-      n.appendTickAt(1, resolved(st.text, s.current().get)) }
+      n.appendTickAt(1, st.text.lineage.resolve(s.current().get)) }
     next
   }
 
@@ -285,7 +286,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     val next = SemLeg(
       ArtifactStore.ingestState(spark, root, s"$name/sem_sigs"),
       leg.vectors, leg.nTables, leg.bits, leg.dim, leg.simThreshold)
-    next.sigs.appendTickAt(1, resolved(st, leg.sigs.current().get))
+    next.sigs.appendTickAt(1, st.lineage.resolve(leg.sigs.current().get))
     import spark.implicits._
     Seq((leg.nTables, leg.bits, leg.dim)).toDF("tables", "bits", "dim")
       .coalesce(1).write.mode("overwrite").parquet(pPath)
@@ -308,15 +309,10 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       audSigs = leg.audSigs.map(_ =>
         ArtifactStore.ingestState(spark, root, s"$name/eval_aud_sigs")),
       maxDist = leg.maxDist, maxBand = leg.maxBand)
-    next.docGrams.appendTickAt(1, resolved(st, leg.docGrams.current().get))
-    next.grams.appendTickAt(1, resolvedEval(leg, leg.grams.current().get))
-    next.bands.appendTickAt(1, resolvedEval(leg, leg.bands.current().get))
-    next.shingles.appendTickAt(1,
-      resolvedEval(leg, leg.shingles.current().get))
-    next.imgSigs.foreach(_.appendTickAt(1,
-      resolvedEval(leg, leg.imgSigs.get.current().get)))
-    next.audSigs.foreach(_.appendTickAt(1,
-      resolvedEval(leg, leg.audSigs.get.current().get)))
+    next.docGrams.appendTickAt(1,
+      st.lineage.resolve(leg.docGrams.current().get))
+    next.data.zip(leg.data).foreach { case (n, s) =>
+      n.appendTickAt(1, leg.lineage.resolve(s.current().get)) }
     next
   }
 
@@ -346,9 +342,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                                Option[DataFrame]): (DataFrame, DataFrame) = {
     val rows = read(quar.rows).getOrElse(
       sys.error("quarantine not bootstrapped: no tick-1 base"))
-    (rows, resolved(st, read(quar.resolvedIds)
-      .fold(rows)(r => rows.join(r.select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti"))))
+    (rows, st.lineage.resolve(
+      ArtifactStore.Lineage.minus(rows, read(quar.resolvedIds), "doc_id")))
   }
 
   /** The live quarantine's RE-JUDGEABLE rows as of tick `t − 1`: rows
@@ -375,7 +370,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * postings append would otherwise leave the three dedup stores
     * agreeing at tick T, the replay would judge the batch against its
     * own tick-T admissions, and the index would miss tick T for good. */
-  private def nextTickOf(done: Seq[Long]): Long = {
+  private[io] def nextTickOf(done: Seq[Long]): Long = {
     require(done.min >= 1,
       "ingest loop not bootstrapped (every store — including the BM25 " +
         "index / census / ANN / export legs when attached — needs its " +
@@ -390,10 +385,10 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * would mishandle is refused before anything moves. */
   final case class Legs(
       idx: Option[ArtifactStore.Bm25IncrementalIndex] = None,
-      census: Option[ArtifactStore.GramCensusIncrementalIndex] = None,
+      census: Option[ArtifactStore.GramCensus] = None,
       ann: Option[AnnLeg] = None,
       export: Option[ExportLeg] = None,
-      mix: Option[ArtifactStore.MixIncrementalIndex] = None,
+      mix: Option[ArtifactStore.DomainMix] = None,
       quar: Option[Quarantine] = None,
       replay: Option[ReplayLeg] = None,
       sem: Option[SemLeg] = None,
@@ -409,59 +404,69 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
 
     /** The census fed the RAW admitted text: the census leg, else the
       * curate leg's. */
-    private[io] def rawCensus
-        : Option[ArtifactStore.GramCensusIncrementalIndex] =
+    private[io] def rawCensus: Option[ArtifactStore.GramCensus] =
       census.orElse(curate.map(_.census))
 
     /** Every store in the CORPUS tombstone lineage: the `core` dedup
       * stores plus the legs' doc-keyed stores (sem sigs, eval docGrams,
       * quarantine rows/resolvedIds, replay feats). All of them read
-      * through [[resolved]], so a takedown tick advances every one, and
-      * a compaction that resets the tombstones must fold every one in
-      * the same pass — folding a subset and resetting would resurface a
-      * retracted doc's rows (and a re-adjudication could then RE-ADMIT
-      * a doc the takedown named). */
+      * through [[Stores.lineage]], so a takedown tick advances every
+      * one, and a compaction that resets the tombstones must fold every
+      * one in the same pass — folding a subset and resetting would
+      * resurface a retracted doc's rows (and a re-adjudication could
+      * then RE-ADMIT a doc the takedown named). */
     private[io] def lineage(core: Seq[ArtifactStore.IngestStateStore])
         : Seq[ArtifactStore.IngestStateStore] =
       core ++ sem.map(_.sigs) ++ eval.map(_.docGrams) ++
         quar.toSeq.flatMap(q => Seq(q.rows, q.resolvedIds)) ++
         replay.map(_.feats)
 
-    /** The consumer indexes' tick-keyed stores (BM25 postings, raw
-      * census, ANN codes, domain mix), each with its own compaction —
-      * every index folds its OWN retraction lineage (BM25 and ANN their
-      * private tombstones; census and mix subtract). */
-    private def consumers
-        : Seq[(ArtifactStore.IngestStateStore, () => Int)] =
-      idx.map(i => i.tfStore -> (() => i.compact())).toSeq ++
-        rawCensus.map(c => c.censusStore -> (() => c.compact())) ++
-        ann.map(a => a.idx.codeStore -> (() => a.idx.compact())) ++
-        mix.map(m => m.mixStore -> (() => m.compact()))
+    /** The consumer indexes (BM25 postings, raw census, ANN codes,
+      * domain mix), each with its own compaction and gc — every index
+      * folds its OWN retraction lineage (BM25 and ANN their private
+      * tombstones; census and mix subtract). */
+    private[io] def consumers: Seq[ArtifactStore.MaintainedIndex] =
+      idx.toSeq ++ rawCensus ++ ann.map(_.idx) ++ mix
+
+    /** The maxTick of every store in the tick agreement: the lineage
+      * over `core`, every consumer store and the export. */
+    private def ticks(core: Seq[ArtifactStore.IngestStateStore]): Seq[Long] =
+      (lineage(core) ++ consumers.map(_.store)).map(_.maxTick) ++
+        export.map(_.store.maxTick)
 
     /** THE TICK AGREEMENT — the tick a run over `core` plus these legs
-      * produces: [[nextTickOf]] over the lineage, every consumer store
-      * and the export. */
+      * produces: [[nextTickOf]] over [[ticks]]. */
     private[io] def tick(core: Seq[ArtifactStore.IngestStateStore]): Long =
-      nextTickOf((lineage(core) ++ consumers.map(_._1)).map(_.maxTick) ++
-        export.map(_.store.maxTick))
+      nextTickOf(ticks(core))
+
+    /** Whether a takedown subtracts: a census or mix leg is attached
+      * (the signed indexes, which carry no doc_id to tombstone). */
+    private[io] def subtracts: Boolean = rawCensus.isDefined || mix.isDefined
+
+    /** Whether a SUBTRACTING takedown is IN FLIGHT: its tombstones
+      * (`tombs`) landed at a tick some agreement store has not reached
+      * — it failed before its tick-keyed writes, and only a re-run
+      * finishes it. Only the subtraction reads the live state a fold
+      * changes; a doc-keyed store's re-run after a fold repeats an
+      * idempotent tombstone. */
+    private[io] def takedownPending(core: Seq[ArtifactStore.IngestStateStore],
+                                    tombs: ArtifactStore.IngestStateStore)
+        : Boolean =
+      subtracts && tombs.maxTick > ticks(core).min
 
     /** Compact each consumer index whose store crossed `maxDataFiles`. */
     private[io] def compactConsumers(maxDataFiles: Long): Unit =
-      consumers.filter(_._1.dataFileCount > maxDataFiles).foreach(_._2())
+      consumers.filter(_.store.dataFileCount > maxDataFiles)
+        .foreach(_.compact())
 
     /** gc every attached store — the lineage over `core` and `tombs`,
-      * the eval-side stores, the consumer indexes (BM25 with its
-      * tombstones), the ANN index, the export and the model. Returns
-      * the bytes freed. */
+      * the eval-side stores, the consumer indexes, the export and the
+      * model. Returns the bytes freed. */
     private[io] def gc(core: Seq[ArtifactStore.IngestStateStore],
                        tombs: ArtifactStore.IngestStateStore): Long =
-      (lineage(core :+ tombs) ++
-        eval.toSeq.flatMap(l => Seq(l.grams, l.bands, l.shingles, l.tombs) ++
-          l.imgSigs ++ l.audSigs) ++
-        idx.toSeq.flatMap(i => Seq(i.tfStore, i.tombStore)) ++
-        rawCensus.map(_.censusStore) ++ mix.map(_.mixStore))
+      (lineage(core :+ tombs) ++ eval.toSeq.flatMap(l => l.data :+ l.tombs))
         .map(_.gc()).sum +
-        ann.map(_.idx.gc()).getOrElse(0L) +
+        consumers.map(_.gc()).sum +
         export.map(_.store.gc()).getOrElse(0L) +
         model.map(_.gc()).getOrElse(0L)
   }
@@ -522,12 +527,12 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * tombstones. */
   private[io] def textEvidence(st: Stores, t: Long, docs: DataFrame,
                                threshold: Double): (DataFrame, DataFrame) = {
-    val state = resolved(st, st.hashes.currentUpTo(t - 1).getOrElse(
+    val state = st.lineage.resolve(st.hashes.currentUpTo(t - 1).getOrElse(
         sys.error("ingest loop not bootstrapped: hash state is empty")))
       .select("ch").distinct()
     val fuzzy = Fuzzy.lshPairsAgainstState(
-        resolved(st, st.bands.currentUpTo(t - 1).get),
-        resolved(st, st.shingles.currentUpTo(t - 1).get),
+        st.lineage.resolve(st.bands.currentUpTo(t - 1).get),
+        st.lineage.resolve(st.shingles.currentUpTo(t - 1).get),
         docs, threshold)
       .select(col("eval_id").as("fid")).distinct()
     (state, fuzzy)
@@ -556,9 +561,9 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
   private[graft] def curatedRows(cl: CurateLeg, t: Long, adm: DataFrame,
                                  batch: DataFrame): DataFrame =
     graft.operators.CurateTick.curatedDocs(adm,
-      cl.census.censusStore.currentUpTo(t - 1).getOrElse(
+      cl.census.store.currentUpTo(t - 1).getOrElse(
         sys.error("curate leg not bootstrapped: no census base")),
-      batch, cl.census.k, cl.topN).localCheckpoint()
+      batch, cl.census.increment.k, cl.topN).localCheckpoint()
 
   /** The text the serving consumers receive: the curated (doc_id,
     * source, text) rows with a curate leg, `adm` itself without. */
@@ -582,7 +587,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
   /** The QUOTA leg of a budgeted deployment tick (q130,
     * [[Provenance.q130BudgetedAdmission]]): per-source token budgets
     * derived from the MAINTAINED mixture counts ([[ArtifactStore
-    * .MixIncrementalIndex.mix]] — zero recounts; bootstrap the mix
+    * .DomainMix]] — zero recounts; bootstrap the mix
     * store from the corpus and usually ALSO attach it as the [[Legs]]'
     * `mix` leg so the budgets track admissions and takedowns).
     * Within each source, the tick's novel docs admit in quality-rank
@@ -592,7 +597,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * still admittable (it was never ingested; IngestLoopSpec pins it).
     * Over-budget docs are NOT quarantined: they are rate-limited, not
     * rejected on evidence — a deployment re-enqueues them upstream. */
-  final case class QuotaLeg(mix: ArtifactStore.MixIncrementalIndex,
+  final case class QuotaLeg(mix: ArtifactStore.DomainMix,
                             budgetFrac: Double =
                               Provenance.DefaultBudgetFrac)
 
@@ -742,7 +747,15 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                              = None,
                            audSigs: Option[ArtifactStore.IngestStateStore]
                              = None,
-                           maxDist: Int = 10, maxBand: Int = 64)
+                           maxDist: Int = 10, maxBand: Int = 64) {
+    /** The eval-side data stores — everything the eval tombstones
+      * retract from, and the stores an eval update advances. */
+    def data: Seq[ArtifactStore.IngestStateStore] =
+      Seq(grams, bands, shingles) ++ imgSigs ++ audSigs
+
+    /** The eval withdrawal lineage (eval ids — a lineage of its own). */
+    def lineage: ArtifactStore.Lineage = ArtifactStore.Lineage(tombs, "doc_id")
+  }
 
 
   /** The CURATED FOLD-BACK leg of a deployment tick (q137,
@@ -762,7 +775,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * store report ≡ live q137, the physical export slices carrying the
     * curated hashes, and raw dedup behavior unchanged by the
     * transform. */
-  final case class CurateLeg(census: ArtifactStore.GramCensusIncrementalIndex,
+  final case class CurateLeg(census: ArtifactStore.GramCensus,
                              topN: Int =
                                graft.operators.CurateTick.DefaultTopN)
 
@@ -915,7 +928,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
         (v.filter(col("lq") === false).select("doc_id"),
           Provenance.gatedTickReport(v, ladder))
       case Some(q) =>
-        val srcCounts = q.mix.mix()
+        val srcCounts = q.mix.read()
           .select(col("source"), col("n_docs").as("n_src"))
         val bf = Provenance.budgetedFrame(v, batchDocs, srcCounts,
           q.budgetFrac)
@@ -973,16 +986,21 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * which is also why any crash ordering here is safe — spec-pinned).
     * Returns whether compaction ran. Run at quiesce points only (see
     * `IngestStateStore.currentUpTo`). The eval-SIDE stores fold via
-    * compactEval — their tombstones are eval ids, a separate lineage. */
+    * compactEval — their tombstones are eval ids, a separate lineage.
+    *
+    * Refused while a takedown with a census or mix leg is in flight
+    * ([[Legs]]`.takedownPending`): the fold would drop its docs from
+    * the state before the census and mix subtracted them, and its
+    * re-run — which subtracts only docs live in that state — would then
+    * never subtract them. */
   def compactIfNeeded(st: StoreSet, maxDataFiles: Long = 64,
                       legs: Legs = Legs()): Boolean = {
+    require(!legs.takedownPending(st.all, st.text.tombs),
+      "a takedown is in flight (its tombstones are ahead of the stores): " +
+        "re-run retractTick with the same ids before compacting")
     val all = legs.lineage(st.all)
     val need = all.exists(_.dataFileCount > maxDataFiles)
-    if (need) {
-      val folded = all.map(_.compactWith(df => resolved(st.text, df)))
-      if (st.text.tombs.current().isDefined && folded.forall(_ > 0))
-        st.text.tombs.reset()
-    }
+    if (need) st.text.lineage.fold(all)
     need
   }
 
@@ -1237,7 +1255,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     val l = withRequired(legs, Legs(quar = Some(quar), replay = Some(replay)))
     val t = l.tick(st.all)
     val sigCols = st.sigCols
-    val feats = resolved(st.text, replay.feats.currentUpTo(t - 1).getOrElse(
+    val feats = st.text.lineage.resolve(replay.feats.currentUpTo(t - 1).getOrElse(
       sys.error("replay leg not bootstrapped: no tick-1 base")))
     val rescored = QualityModel.withScoreFromFeatures(
       feats.withColumnRenamed("lq", "was_lowq"), wNew)

@@ -9,7 +9,7 @@ import graft.operators.Provenance.Evidence
 /** The unified MULTIMODAL admission section of [[IngestLoop]] (q118's
   * deployment form and its re-adjudication), in its own file like
   * IngestLegOps. The self-type reaches the loop's shared
-  * pieces ([[IngestLoop.MmStores]], the leg case classes, `resolved`,
+  * pieces ([[IngestLoop.MmStores]], the leg case classes,
   * [[IngestLoop.Legs]], `foldAdmitted`, the leg-ops flags), and
   * `object IngestLoop extends ... with IngestMmOps`, so every
   * `IngestLoop.*` call site reads unchanged. The takedown, re-gate,
@@ -62,11 +62,11 @@ trait IngestMmOps { self: IngestLoop.type =>
     val (batchISigs, batchASigs) = graft.operators.Materialize.par2(
       Multimodal.imageSigs(batchDocs), Multimodal.audioSigs(batchDocs))
     val imFlag = Multimodal.flaggedAgainstState(
-        resolved(st.text, st.imgSigs.currentUpTo(t - 1).get),
+        st.text.lineage.resolve(st.imgSigs.currentUpTo(t - 1).get),
         batchISigs, maxDist, maxBand)
       .select(col("fid").as("ifid"))
     val auFlag = Multimodal.flaggedAgainstState(
-        resolved(st.text, st.audSigs.currentUpTo(t - 1).get),
+        st.text.lineage.resolve(st.audSigs.currentUpTo(t - 1).get),
         batchASigs, maxDist, maxBand)
       .select(col("fid").as("afid"))
     // the q118 rungs plus the classes of the attached legs
@@ -153,12 +153,12 @@ trait IngestMmOps { self: IngestLoop.type =>
     val dupRows = rejudgeable(st.text, quar, t, ladder)
     val (state, fuzzy) = textEvidence(st.text, t, dupRows, threshold)
     val imFlag = Multimodal.flaggedAgainstState(
-        resolved(st.text, st.imgSigs.currentUpTo(t - 1).get),
+        st.text.lineage.resolve(st.imgSigs.currentUpTo(t - 1).get),
         dupRows.select(col("doc_id"), col("img_sig").as("sig")),
         maxDist, maxBand)
       .select(col("fid").as("ifid"))
     val auFlag = Multimodal.flaggedAgainstState(
-        resolved(st.text, st.audSigs.currentUpTo(t - 1).get),
+        st.text.lineage.resolve(st.audSigs.currentUpTo(t - 1).get),
         dupRows.select(col("doc_id"), col("aud_sig").as("sig")),
         maxDist, maxBand)
       .select(col("fid").as("afid"))

@@ -255,13 +255,7 @@ object Curate {
   def q97TemperatureMix(documents: DataFrame, alpha: Double = 0.7,
                         budgetFrac: Double = 0.5): DataFrame = {
     val per = documents.groupBy("source").agg(count(lit(1)).as("n_docs"))
-      .withColumn("wm",
-        round(pow(col("n_docs").cast("double"), lit(alpha)) * 1e6).cast("long"))
-    val tot = per.agg(sum("wm").as("denom"), sum("n_docs").as("n_total"))
-    val rates = per.crossJoin(broadcast(tot))
-      .withColumn("weight", round(col("wm") / col("denom"), 6))
-      .withColumn("rate", round(least(lit(1.0),
-        lit(budgetFrac) * col("n_total") * col("wm") / col("denom") / col("n_docs")), 6))
+    val rates = temperatureRates(per, "n_docs", alpha, budgetFrac)
       .withColumn("thr", round(col("rate") * 1e6).cast("long"))
     val hm = (conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
       .cast("long") % 1000000L)
@@ -271,6 +265,24 @@ object Curate {
       .agg(sum(when(col("hm") < col("thr"), 1L).otherwise(0L)).as("n_sampled"))
       .select("source", "n_docs", "weight", "rate", "n_sampled")
       .orderBy("source")
+  }
+
+  /** The q97 temperature rates of the per-source counts in column `n`
+    * of `per` (one row per source), as added columns: `wm` = n^α in
+    * micro-units (rounded once), `denom` = Σ wm and `n_total` = Σ n
+    * (exact long sums), `weight` = wm / denom and `rate` = min(1,
+    * budgetFrac · n_total · wm / denom / n), both to 6 places. The one
+    * definition behind q97, q127's rebalance and the rates over a
+    * maintained [[graft.io.ArtifactStore.DomainMix]]. */
+  def temperatureRates(per: DataFrame, n: String, alpha: Double,
+                       budgetFrac: Double): DataFrame = {
+    val wm = per.withColumn("wm",
+      round(pow(col(n).cast("double"), lit(alpha)) * 1e6).cast("long"))
+    val tot = wm.agg(sum("wm").as("denom"), sum(n).as("n_total"))
+    wm.crossJoin(broadcast(tot))
+      .withColumn("weight", round(col("wm") / col("denom"), 6))
+      .withColumn("rate", round(least(lit(1.0),
+        lit(budgetFrac) * col("n_total") * col("wm") / col("denom") / col(n)), 6))
   }
 
   def q97Sql(alpha: Double = 0.7, budgetFrac: Double = 0.5): String =

@@ -855,14 +855,7 @@ trait ProvenanceGateOps { self: Provenance.type =>
       .withColumn("n_sel",
         when(col("decision") === "rebalance", col("n_ingested"))
           .otherwise(col("n_corpus")))
-      .withColumn("wm",
-        round(pow(col("n_sel").cast("double"), lit(alpha)) * 1e6).cast("long"))
-    val tot2 = sel.agg(sum("wm").as("denom"), sum("n_sel").as("n_total"))
-    val rates = sel.crossJoin(broadcast(tot2))
-      .withColumn("weight", round(col("wm") / col("denom"), 6))
-      .withColumn("rate", round(least(lit(1.0),
-        lit(budgetFrac) * col("n_total") * col("wm")
-          / col("denom") / col("n_sel")), 6))
+    val rates = Curate.temperatureRates(sel, "n_sel", alpha, budgetFrac)
       .withColumn("thr", round(col("rate") * 1e6).cast("long"))
       .select("source", "n_corpus", "n_ingested", "drift", "decision",
         "weight", "rate", "thr")
@@ -951,7 +944,7 @@ trait ProvenanceGateOps { self: Provenance.type =>
     *      `budgetFrac × (tick's total novel tokens) × (source's target
     *      share)` — target shares here are the bootstrap corpus mix
     *      (the deployment form reads the maintained
-    *      [[graft.io.ArtifactStore.MixIncrementalIndex]] counts, so the
+    *      [[graft.io.ArtifactStore.DomainMix]] counts, so the
     *      budget tracks the SERVED mixture with zero recounts);
     *   3. within each source, novel docs admit in QUALITY-RANK order
     *      (model score desc, doc_id tie-break) while the running token

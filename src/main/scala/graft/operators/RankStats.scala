@@ -117,9 +117,11 @@ object RankStats {
         (if (s == slotOf(c)) col(c) else lit(null).cast(t)).as(s)
       }: _*)
     }: _*))
-    val dist = Materialize.sever(
-      df.select(melt.as("m")).select("m.*")
-        .groupBy("k", slots: _*).agg(count(lit(1)).as("n")))
+    // a plain checkpoint: the table is only aggregated and windowed,
+    // never joined, so a broadcast hint would never apply
+    val dist = df.select(melt.as("m")).select("m.*")
+      .groupBy("k", slots: _*).agg(count(lit(1)).as("n"))
+      .localCheckpoint()
     val probs = (1 until Buckets).map(_.toDouble / Buckets).toArray
     val sliced = dist.select(cols.zipWithIndex.map { case (c, i) =>
       when(col("k") === i, col(slotOf(c))).as(s"s$i")

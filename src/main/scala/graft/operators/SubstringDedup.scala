@@ -129,8 +129,8 @@ object SubstringDedup {
   val censusRuns = new java.util.concurrent.atomic.AtomicLong
 
   /** One batch's k-gram census increment: (h, exact_df_docs, n_occ) —
-    * the unit [[graft.io.ArtifactStore.GramCensusIncrementalIndex]]
-    * appends per ingest tick. ADDITIVE across ticks because a document
+    * the unit [[graft.io.ArtifactStore.GramCensus]] appends per ingest
+    * tick. ADDITIVE across ticks because a document
     * is admitted in exactly one tick: global df(h) = Σ per-tick
     * distinct-doc counts (no doc straddles ticks), n_occ likewise — so
     * the corpus-global census q90/q91/q95 feed on is maintainable
@@ -155,25 +155,13 @@ object SubstringDedup {
     parts.groupBy("h")
       .agg(sum("exact_df_docs").as("exact_df_docs"), sum("n_occ").as("n_occ"))
 
-  /** A retraction's census increment: [[censusOf]] NEGATED. The census
-    * has no doc_id column to anti-join a tombstone against — it is the
-    * one state family where retraction must SUBTRACT rather than
-    * filter — and because a doc's contribution is exactly
-    * censusOf(that doc), appending its negation restores the merged
-    * census to what a full re-mine without the doc would produce
-    * (grams it alone duplicated drop below the df ≥ 2 gate; fully-
-    * retracted grams zero out and compaction drops them). Requires the
-    * retracted docs' TEXT (a takedown carries its document, or the
-    * loop re-reads it from the raw store) — tick-sized, like every
-    * other retraction leg. Callers must not retract the same doc
-    * twice (double subtraction); [[graft.io.IngestLoop]]'s tombstone
-    * store is the existence check, and replay safety comes from
-    * tick-keyed writes ([[graft.io.ArtifactStore
-    * .GramCensusIncrementalIndex.retractDocsAt]]). */
-  def negCensusOf(docs: DataFrame, k: Int = DefaultK): DataFrame =
-    censusOf(docs, k).select(col("h"),
-      (-col("exact_df_docs")).as("exact_df_docs"),
-      (-col("n_occ")).as("n_occ"))
+  /** The census increment at gram size `k` — what a
+    * [[graft.io.ArtifactStore.GramCensus]] appends per tick and, negated,
+    * per takedown. `k` is recorded here only, so the curate leg strips
+    * at the census's own granularity. */
+  final case class Census(k: Int) extends (DataFrame => DataFrame) {
+    def apply(docs: DataFrame): DataFrame = censusOf(docs, k)
+  }
 
   /** The q90 winner selection over a MERGED census — bit-equal to
     * [[winnerHashes]]'s full re-mine because merged exact_df_docs is
@@ -190,7 +178,7 @@ object SubstringDedup {
     * census-merge algebra — corpus census increment ∪ batch census
     * increment, merged, df ≥ 2 — so only the batch's text is mined at
     * tick time while the corpus side is maintained 20-byte hash rows
-    * ([[graft.io.ArtifactStore.GramCensusIncrementalIndex]] is the
+    * ([[graft.io.ArtifactStore.GramCensus]] is the
     * store-backed form; SubstringDedupSpec pins it ≡ this live form ≡
     * the q86 full re-mine restricted to batch docs — the equality that
     * certifies the increment algebra). Output: the q86 columns for the
@@ -218,7 +206,8 @@ object SubstringDedup {
     * doc_id): a corpus slice (doc_id % 17 == 6 — a class that SHARES
     * covering grams with the batch, so the takedown is DECISIVE: at
     * least one batch doc's coverage drops) is retracted by
-    * appending its NEGATED census increment ([[negCensusOf]]), and the
+    * appending its NEGATED census increment
+    * ([[graft.io.ArtifactStore.SignedIndex.negated]]), and the
     * batch (doc_id % 17 == 0) is then judged against the subtracted
     * census — corpus + batch − retracted, merged, df ≥ 2. The oracle
     * re-mines documents WITH THE RETRACTED DOCS REMOVED BY A WHERE
@@ -226,8 +215,9 @@ object SubstringDedup {
     * the retracted docs alone made duplicated stop covering batch
     * spans. Output: the q86 columns for the batch docs.
     *
-    * Store form: [[graft.io.ArtifactStore.GramCensusIncrementalIndex
-    * .retractDocsAt]] (SubstringDedupSpec pins store ≡ live ≡ re-mine).
+    * Store form: [[graft.io.ArtifactStore.SignedIndex.retractDocsAt]]
+    * on a [[graft.io.ArtifactStore.GramCensus]] (SubstringDedupSpec pins
+    * store ≡ live ≡ re-mine).
     *
     * Scale shape: q121's tick cost + one tick-sized census pass over
     * the retracted docs (their text only — the corpus is still never
@@ -239,7 +229,8 @@ object SubstringDedup {
     val batch = documents.filter(m === 0)
     val retracted = documents.filter(m === 6)
     val merged = mergeCensus(censusOf(corpus, k).union(censusOf(batch, k))
-      .union(negCensusOf(retracted, k)))
+      .union(graft.io.ArtifactStore.SignedIndex.negated(
+        censusOf(retracted, k), Seq("h"))))
     val dup = merged.filter(col("exact_df_docs") >= 2).select("h")
     coverageAgainstDup(batch,
       postings(batch, k).select("doc_id", "n_tokens", "i", "h"), dup, k)
@@ -251,7 +242,7 @@ object SubstringDedup {
     * batch (doc_id % 17 == 0) is stripped against the q90 winner set
     * derived from the MERGED census — corpus-maintained 20-byte hash
     * rows plus the batch's own increment, exactly what
-    * [[graft.io.ArtifactStore.GramCensusIncrementalIndex]] serves
+    * [[graft.io.ArtifactStore.GramCensus]] serves
     * after the tick's append — so at tick time the only text MINED is
     * the batch's and the only text REWRITTEN is the batch's; the
     * corpus contributes statistics, never tokens. This is the

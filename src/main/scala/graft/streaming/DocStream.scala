@@ -349,8 +349,7 @@ object DocStream {
         // the retracted docs' near-dups here too (the exact-hash layer
         // lives in the streaming checkpoint — see the takedown caveat
         // in the method scaladoc)
-        val rs = (df: DataFrame) =>
-          graft.io.IngestLoop.resolved(stores, df)
+        val rs = (df: DataFrame) => stores.lineage.resolve(df)
         val fuzzed = refineFuzzy(b.toDF(),
           rs(stores.bands.currentUpTo(stateTick).get),
           rs(stores.shingles.currentUpTo(stateTick).get), threshold)
@@ -401,7 +400,7 @@ object DocStream {
     case None => batch
     case Some(leg) =>
       val flags = graft.operators.SemanticGate.flaggedAgainstState(
-        graft.io.IngestLoop.resolved(stores,
+        stores.lineage.resolve(
           leg.sigs.currentUpTo(stateTick).getOrElse(
             sys.error("semantic leg not bootstrapped"))),
         leg.vectors,
@@ -455,7 +454,7 @@ object DocStream {
       def hits(store: Option[graft.io.ArtifactStore.IngestStateStore],
                sigs: DataFrame): Option[DataFrame] =
         store.map(s => Multimodal.flaggedAgainstState(
-            graft.io.IngestLoop.resolvedEval(leg, s.current().getOrElse(
+            leg.lineage.resolve(s.current().getOrElse(
               sys.error("mm eval leg not bootstrapped: no sig base"))),
             sigs.join(newIds, Seq("doc_id"), "left_semi")
               .filter(col("sig").isNotNull),
@@ -580,8 +579,7 @@ object DocStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (b: Dataset[AdmissionDoc], batchId: Long) =>
         val stateTick = batchId + 1
-        val rs = (df: DataFrame) =>
-          graft.io.IngestLoop.resolved(stores.text, df)
+        val rs = (df: DataFrame) => stores.text.lineage.resolve(df)
         val fuzzed = refineFuzzy(b.toDF(),
           rs(stores.text.bands.currentUpTo(stateTick).get),
           rs(stores.text.shingles.currentUpTo(stateTick).get), threshold)

@@ -71,7 +71,7 @@ class AnnIngestSpec extends AnyFunSuite {
       legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
         ann = Some(leg))))
     assert(rep.nonEmpty)
-    assert(ann.codeStore.maxTick === 2L,
+    assert(ann.store.maxTick === 2L,
       "the code append rides the same tick as the dedup folds")
 
     val adm = admittedAt(st, 2)
@@ -121,7 +121,7 @@ class AnnIngestSpec extends AnyFunSuite {
     annB.bootstrap(corpusEmb, cents, rcb)
     IngestLoop.runTick(stB, batch, w,
       legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB)))
-    assert(stB.shingles.maxTick === 2L && annB.codeStore.maxTick === 1L,
+    assert(stB.shingles.maxTick === 2L && annB.store.maxTick === 1L,
       "precondition: five stores agree at tick 2, the code store lags")
 
     val replay = rows(IngestLoop.runTick(stB, batch, w,
@@ -129,7 +129,7 @@ class AnnIngestSpec extends AnyFunSuite {
         ann = Some(IngestLoop.AnnLeg(annB, emb, cents, rcb)))))
     assert(replay === cleanRep,
       "six-store replay must reproduce the uncrashed verdicts")
-    assert(annB.codeStore.maxTick === 2L, "the code append must be repaired")
+    assert(annB.store.maxTick === 2L, "the code append must be repaired")
     assert(codeSet(annB.codes()) === codeSet(annA.codes()),
       "repaired codes must equal the uncrashed index")
   }
@@ -162,7 +162,7 @@ class AnnIngestSpec extends AnyFunSuite {
     val rcb2 = Pq.residualCodebookTable(emb)
     ann.recluster(served(admA), cents2, rcb2, baseTick = 2)
     assert(ann.generation === 2L)
-    assert(ann.codeStore.maxTick === 2L,
+    assert(ann.store.maxTick === 2L,
       "the rebuilt generation must re-enter the agreement at the loop tick")
     assert(codeSet(ann.codes()) ===
       codeSet(Pq.residualCodes(served(admA), cents2, rcb2)),
@@ -175,7 +175,7 @@ class AnnIngestSpec extends AnyFunSuite {
     IngestLoop.runTick(st, batchB, w,
       legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
         ann = Some(leg)))
-    assert(ann.codeStore.maxTick === 3L)
+    assert(ann.store.maxTick === 3L)
     val admB = admittedAt(st, 3)
     assert(admB.count() > 0)
     val admAll = admA.union(admB)
@@ -225,7 +225,7 @@ class AnnIngestSpec extends AnyFunSuite {
     val resRc = IngestLoop.quiesce(st, spark, root, annBaseTick = Some(2L),
       annMinGainHits = Long.MinValue, legs = IngestLoop.Legs(ann = Some(leg)))
     assert(resRc.annReclustered, "the bundle itself ran the canary")
-    assert(ann.generation === 2L && ann.codeStore.maxTick === 2L,
+    assert(ann.generation === 2L && ann.store.maxTick === 2L,
       "the recluster re-enters the tick agreement at the loop tick")
     val (_, cFr, rcbFr) = Pq.annRecallDecision(live,
       minGainHits = Long.MinValue)

@@ -55,7 +55,32 @@ class Bm25IncrementalSpec extends AnyFunSuite {
 
     // the df re-derivation is decrement-free only because appends are
     // novel docs; the tf row count must equal the union's tf row count
-    val tfRows = inc.tfStore.current().get.count()
+    val tfRows = inc.store.current().get.count()
     assert(tfRows === Retrieval.tfOf(union).count())
+  }
+
+  test("retract then fold: ranking ≡ a rebuild without the docs, before and after the fold; the fold clears the tombstones") {
+    val root = Files.createTempDirectory("graft_bm25_retract").toString
+    val m = pmod(col("doc_id"), lit(17L))
+    val queries = docs.filter(pmod(col("doc_id"), lit(50L)) === 7)
+    val gone = docs.filter(m === 6).select("doc_id")
+    def topk(idx: Retrieval.Bm25Index) =
+      rows(Retrieval.topkFromIndex(idx, queries))
+    val rebuilt = topk(Retrieval.index(docs.filter(m =!= 6)))
+    assert(rebuilt !== topk(Retrieval.index(docs)),
+      "precondition: the retracted docs rank for some query")
+
+    val inc = ArtifactStore.bm25Incremental(spark, root, "serveR")
+    inc.bootstrap(docs.filter(m =!= 0))
+    inc.appendDocsAt(2L, docs.filter(m === 0))
+    inc.retractDocsAt(3L, gone)
+    assert(topk(inc.index()) === rebuilt,
+      "the tombstones must rank like a rebuild without the docs")
+    assert(inc.compact() > 0)
+    assert(inc.lineage.tombs.current().isEmpty,
+      "the fold clears the tombstones")
+    assert(inc.store.current().get.join(gone, Seq("doc_id"), "left_semi")
+      .isEmpty, "the retracted postings leave the folded generation")
+    assert(topk(inc.index()) === rebuilt)
   }
 }

@@ -1,43 +1,11 @@
 package graft.io
 
-import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
-
-/** Compaction: many small files in, few near-target files out, rows
-  * preserved — the maintenance pass that keeps scan throughput from
-  * dying on per-file open overhead. */
+/** Compaction sizing: the output file count a compaction
+  * ([[ArtifactStore.IngestStateStore.compact]]) writes for its input
+  * bytes. */
 class CompactSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  test("compaction collapses a fragmented write to the computed file count") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact")
-    val fragmented = s"$dir/frag"
-    val compacted = s"$dir/compact"
-    // 64 tiny files
-    (1 to 10000).map(i => (i.toLong, s"row $i payload"))
-      .toDF("id", "s").repartition(64).write.parquet(fragmented)
-
-    val inBytes = Compact.dataBytes(spark, fragmented)
-    assert(inBytes > 0)
-    // pick a target that yields a small >1 count, exercising the math
-    val target = inBytes / 3
-    val n = Compact.parquet(spark, fragmented, compacted, target)
-    assert(n === Compact.partitionsFor(inBytes, target))
-    assert(n >= 3 && n <= 4)
-
-    val outFiles = new java.io.File(compacted).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(outFiles === n, s"expected $n output files, got $outFiles")
-    // rows preserved exactly
-    assert(spark.read.parquet(compacted).count() === 10000L)
-    assert(spark.read.parquet(compacted).agg(
-      org.apache.spark.sql.functions.sum("id")).head().getLong(0)
-      === (1 to 10000).map(_.toLong).sum)
-  }
-
   test("partitionsFor: floors at 1, ceils fractional file counts") {
     assert(Compact.partitionsFor(0, 128) === 1)
     assert(Compact.partitionsFor(1, 128) === 1)

@@ -102,11 +102,11 @@ class CurateTickSpec extends AnyFunSuite {
     val (stB, legB) = build(root, "crash")
     IngestLoop.runTick(stB, batch, weights)
     assert(stB.shingles.maxTick === 2L &&
-      legB.census.censusStore.maxTick === 1L,
+      legB.census.store.maxTick === 1L,
       "precondition: dedup stores at tick 2, the census lags")
     assert(rows(IngestLoop.runTick(stB, batch, weights,
       legs = IngestLoop.Legs(curate = Some(legB)))) === repClean,
       "the redone tick must reproduce the curated report")
-    assert(legB.census.censusStore.maxTick === 2L)
+    assert(legB.census.store.maxTick === 2L)
   }
 }

@@ -141,12 +141,12 @@ class DecontamIngestSpec extends AnyFunSuite {
         Provenance.RetractRem)
     IngestLoop.retractTick(stA, retracted,
       legs = IngestLoop.Legs(eval = Some(legA)))
-    val liveGrams = IngestLoop.resolved(stA, legA.docGrams.current().get)
+    val liveGrams = stA.lineage.resolve(legA.docGrams.current().get)
       .collect().map(_.toSeq).toSet
     assert(IngestLoop.compactIfNeeded(stA, maxDataFiles = 1,
       legs = IngestLoop.Legs(eval = Some(legA))))
     assert(stA.tombs.current().isEmpty)
-    assert(IngestLoop.resolved(stA, legA.docGrams.current().get)
+    assert(stA.lineage.resolve(legA.docGrams.current().get)
       .collect().map(_.toSeq).toSet === liveGrams)
 
     // compactEval folds eval-side withdrawals and clears the eval tombs

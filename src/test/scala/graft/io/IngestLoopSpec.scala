@@ -234,7 +234,7 @@ class IngestLoopSpec extends AnyFunSuite {
     // bootstrap is idempotent: a crashed-then-retried bootstrap
     // overwrites tick 1, never appends a duplicate posting copy
     idx.bootstrap(corpus)
-    assert(idx.tfStore.maxTick === 1L,
+    assert(idx.store.maxTick === 1L,
       "re-run index bootstrap must overwrite tick 1, not append tick 2")
 
     val tok0 = Retrieval.tokenizeRuns.get()
@@ -248,13 +248,13 @@ class IngestLoopSpec extends AnyFunSuite {
     // the index's doc population ≡ base ∪ the two ticks' admissions —
     // dedup state and retrieval postings agree by construction
     val admitted = rep1.map(_.getLong(5)).sum + rep2.map(_.getLong(5)).sum
-    val indexed = idx.tfStore.current().get.select("doc_id").distinct().count()
+    val indexed = idx.store.current().get.select("doc_id").distinct().count()
     assert(indexed === corpus.count() + admitted,
       "index population must equal base + admitted (never dups/rejects)")
 
     // served ranking ≡ a from-scratch rebuild over exactly those docs
     val queries = docs.filter(pmod(col("doc_id"), lit(50L)) === 7)
-    val admittedIds = idx.tfStore.current().get.select("doc_id").distinct()
+    val admittedIds = idx.store.current().get.select("doc_id").distinct()
     val rebuildCorpus = docs.join(admittedIds, Seq("doc_id"), "left_semi")
     val served = Retrieval.topkFromIndex(idx.index(), queries).collect().map(_.toSeq)
     val rebuilt = Retrieval.topkFromIndex(Retrieval.index(rebuildCorpus), queries)
@@ -290,7 +290,7 @@ class IngestLoopSpec extends AnyFunSuite {
     val idxB = ArtifactStore.bm25Incremental(spark, root, "retr_crash")
     idxB.bootstrap(corpus)
     IngestLoop.runTick(stB, t1, w)
-    assert(stB.shingles.maxTick === 2L && idxB.tfStore.maxTick === 1L,
+    assert(stB.shingles.maxTick === 2L && idxB.store.maxTick === 1L,
       "precondition: dedup stores agree at tick 2, the tf store lags")
 
     // replay: nextTick must see the FOUR-store disagreement and redo
@@ -300,7 +300,7 @@ class IngestLoopSpec extends AnyFunSuite {
       legs = IngestLoop.Legs(idx = Some(idxB))))
     assert(replayRep === cleanRep,
       "replayed verdicts must be identical to the uncrashed run")
-    assert(idxB.tfStore.maxTick === 2L,
+    assert(idxB.store.maxTick === 2L,
       "the postings append must be repaired")
 
     // and the repaired index serves the same ranking as the clean one
@@ -340,7 +340,8 @@ class IngestLoopSpec extends AnyFunSuite {
     // the two-tick twin of the q121 additivity pin, driven by the loop
     val admitted = docs.join(
       stA.hashes.current().get.select("doc_id"), Seq("doc_id"), "left_semi")
-    assert(cenA.winners().collect().map(_.getLong(0)).toSeq ===
+    assert(SubstringDedup.winnersFromCensus(cenA.read())
+      .collect().map(_.getLong(0)).toSeq ===
       SubstringDedup.winnersFromCensus(SubstringDedup.censusOf(admitted))
         .collect().map(_.getLong(0)).toSeq,
       "tick-maintained census must equal a re-mine of the ingested corpus")
@@ -350,13 +351,13 @@ class IngestLoopSpec extends AnyFunSuite {
     // REDO of the whole tick, reproducing identical verdicts
     val (stB, idxB, cenB) = build("full_crash")
     IngestLoop.runTick(stB, t1, w, legs = IngestLoop.Legs(idx = Some(idxB)))
-    assert(stB.shingles.maxTick === 2L && cenB.censusStore.maxTick === 1L,
+    assert(stB.shingles.maxTick === 2L && cenB.store.maxTick === 1L,
       "precondition: dedup+postings at tick 2, census lags")
     val replay = rows(IngestLoop.runTick(stB, t1, w,
       legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB))))
     assert(replay === rep1,
       "five-store replay must reproduce the uncrashed verdicts")
-    assert(cenB.censusStore.maxTick === 2L, "census append repaired")
+    assert(cenB.store.maxTick === 2L, "census append repaired")
 
     // retraction closes over the tick: retract tick 1's admissions
     // (census leg included) — the census returns to base ∪ tick-2
@@ -366,7 +367,8 @@ class IngestLoopSpec extends AnyFunSuite {
     IngestLoop.retractTick(stA, t1Adm, docs = Some(docs),
       legs = IngestLoop.Legs(idx = Some(idxA), census = Some(cenA)))
     val surviving = admitted.join(t1Adm, Seq("doc_id"), "left_anti")
-    assert(cenA.winners().collect().map(_.getLong(0)).toSeq ===
+    assert(SubstringDedup.winnersFromCensus(cenA.read())
+      .collect().map(_.getLong(0)).toSeq ===
       SubstringDedup.winnersFromCensus(SubstringDedup.censusOf(surviving))
         .collect().map(_.getLong(0)).toSeq,
       "retraction must subtract exactly what the tick's census added")
@@ -413,8 +415,8 @@ class IngestLoopSpec extends AnyFunSuite {
       legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
         mix = Some(mixIdx)))
     assert(Seq(st.hashes.maxTick, st.bands.maxTick, st.shingles.maxTick,
-      idx.tfStore.maxTick, cen.censusStore.maxTick,
-      mixIdx.mixStore.maxTick).distinct === Seq(3L),
+      idx.store.maxTick, cen.store.maxTick,
+      mixIdx.store.maxTick).distinct === Seq(3L),
       "the takedown tick must advance every attached store together")
 
     // the regression this test exists for: the NEXT tick used to land
@@ -423,13 +425,14 @@ class IngestLoopSpec extends AnyFunSuite {
       legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
         mix = Some(mixIdx)))
     val ingested = docs.join(
-      IngestLoop.resolved(st, st.hashes.current().get).select("doc_id"),
+      st.lineage.resolve(st.hashes.current().get).select("doc_id"),
       Seq("doc_id"), "left_semi")
-    assert(cen.winners().collect().map(_.getLong(0)).toSeq ===
+    assert(SubstringDedup.winnersFromCensus(cen.read())
+      .collect().map(_.getLong(0)).toSeq ===
       SubstringDedup.winnersFromCensus(SubstringDedup.censusOf(ingested))
         .collect().map(_.getLong(0)).toSeq,
       "the census subtraction must survive the post-takedown tick")
-    assert(mixIdx.mix().collect().map(r => r.getString(0) -> r.getLong(1))
+    assert(mixIdx.read().collect().map(r => r.getString(0) -> r.getLong(1))
       .toMap ===
       ingested.groupBy("source").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap,
@@ -495,10 +498,14 @@ class IngestLoopSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val ingested = docs.join(stA.hashes.current().get.select("doc_id"),
       Seq("doc_id"), "left_semi")
-    assert(mixA.mix().collect()
+    assert(mixA.read().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap === mixOf(ingested),
       "the maintained mix must equal a recount of the ingested snapshot")
-    assert(mixA.temperatureTable().collect().map(_.toSeq).toSeq ===
+    assert(graft.operators.Curate.temperatureRates(
+        mixA.read().filter(col("n_docs") > 0), "n_docs", alpha = 0.7,
+        budgetFrac = 0.5)
+      .select("source", "n_docs", "weight", "rate").orderBy("source")
+      .collect().map(_.toSeq).toSeq ===
       graft.operators.Curate.q97TemperatureMix(ingested).collect()
         .map(r => Seq(r.get(0), r.get(1), r.get(2), r.get(3))).toSeq,
       "the served temperature table must equal the recount-derived q97 " +
@@ -536,7 +543,7 @@ class IngestLoopSpec extends AnyFunSuite {
       "the bootstrap epoch must be untouched")
     // ... and the mix leg subtracted exactly the takedown's counts
     val surviving2 = ingested.join(takedown, Seq("doc_id"), "left_anti")
-    assert(mixA.mix().collect()
+    assert(mixA.read().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap === mixOf(surviving2),
       "the takedown must subtract exactly its docs' per-source counts")
   }

@@ -176,7 +176,8 @@ class MmIngestSpec extends AnyFunSuite {
       Retrieval.topkFromIndex(Retrieval.index(admitted), queries)
         .collect().map(_.toSeq).toSeq,
       "BM25 must rank like a rebuild over base ∪ mm admissions")
-    assert(cen.winners().collect().map(_.getLong(0)).toSeq ===
+    assert(SubstringDedup.winnersFromCensus(cen.read())
+      .collect().map(_.getLong(0)).toSeq ===
       SubstringDedup.winnersFromCensus(SubstringDedup.censusOf(admitted))
         .collect().map(_.getLong(0)).toSeq,
       "census must equal a re-mine of the mm-ingested corpus")
@@ -187,7 +188,7 @@ class MmIngestSpec extends AnyFunSuite {
       Packing.tickSlices(admOnly, 2048, ms)
         .select("doc_id", "seq_id", "toks", "h").collect().map(_.toSeq).toSet,
       "the export epoch must pack the mm tick's admissions")
-    assert(mx.mix().collect().map(r => (r.getString(0), r.getLong(1))).toMap ===
+    assert(mx.read().collect().map(r => (r.getString(0), r.getLong(1))).toMap ===
       admitted.groupBy("source").count()
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap,
       "the mix table must count base ∪ the mm tick's admissions")
@@ -477,13 +478,13 @@ class MmIngestSpec extends AnyFunSuite {
       .localCheckpoint()
     IngestLoop.retractTick(st, retracted,
       legs = IngestLoop.Legs(eval = Some(leg)))
-    val liveGrams = IngestLoop.resolved(st.text,
-      leg.docGrams.current().get).collect().map(_.toSeq).toSet
+    val liveGrams = st.text.lineage.resolve(leg.docGrams.current().get)
+      .collect().map(_.toSeq).toSet
     assert(IngestLoop.compactIfNeeded(st, maxDataFiles = 1,
       legs = IngestLoop.Legs(eval = Some(leg))))
     assert(st.text.tombs.current().isEmpty,
       "tombstones cleared after every sharing store folded")
-    assert(IngestLoop.resolved(st.text, leg.docGrams.current().get)
+    assert(st.text.lineage.resolve(leg.docGrams.current().get)
       .collect().map(_.toSeq).toSet === liveGrams,
       "the resolved docGrams relation is bit-identical across the fold")
     assert(leg.docGrams.current().get

@@ -132,8 +132,7 @@ class QuiesceBundleSpec extends AnyFunSuite {
       Decontam.withdrawEvalIds(docs))
     assert(leg.tombs.current().isDefined,
       "precondition: the update left live eval withdrawals")
-    val liveBands = IngestLoop.resolvedEval(
-      leg, leg.bands.current().get).count()
+    val liveBands = leg.lineage.resolve(leg.bands.current().get).count()
     assert(liveBands < leg.bands.current().get.count(),
       "precondition: withdrawn rows still physically present")
 
@@ -283,17 +282,17 @@ class QuiesceBundleSpec extends AnyFunSuite {
       .collect().head.getLong(0)
     IngestLoop.retractTick(st, Seq(victim).toDF("doc_id"),
       legs = IngestLoop.Legs(idx = Some(idx)))
-    assert(idx.tombStore.current().isDefined &&
-      idx.tfStore.current().get.filter(col("doc_id") === victim)
+    assert(idx.lineage.tombs.current().isDefined &&
+      idx.store.current().get.filter(col("doc_id") === victim)
         .count() > 0L,
       "precondition: postings physically present behind the tombstone")
 
     val res = IngestLoop.quiesce(st, spark, root, maxDataFiles = 0L,
       legs = IngestLoop.Legs(idx = Some(idx)))
     assert(res.compacted)
-    assert(idx.tombStore.current().isEmpty,
+    assert(idx.lineage.tombs.current().isEmpty,
       "the bundle folded the index's OWN tombstone lineage")
-    assert(idx.tfStore.current().get.filter(col("doc_id") === victim)
+    assert(idx.store.current().get.filter(col("doc_id") === victim)
       .count() === 0L,
       "retracted postings physically left the folded generation")
     assert(idx.index().tf.count() > 0L, "the index still serves")

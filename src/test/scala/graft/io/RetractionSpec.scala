@@ -3,7 +3,8 @@ package graft.io
 import java.nio.file.Files
 
 import graft.TestSpark
-import graft.operators.{Kmeans, Pq, Provenance, QualityModel, Retrieval}
+import graft.operators.{Kmeans, Pq, Provenance, QualityModel, Retrieval,
+  SubstringDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -157,8 +158,9 @@ class RetractionSpec extends AnyFunSuite {
     assert(before !== served, "retraction must change at least one ranking")
 
     assert(idx.compact() > 0)
-    assert(idx.tombStore.current().isEmpty, "compaction clears BM25 tombstones")
-    assert(idx.tfStore.current().get.join(retracted.select("doc_id"),
+    assert(idx.lineage.tombs.current().isEmpty,
+      "compaction clears BM25 tombstones")
+    assert(idx.store.current().get.join(retracted.select("doc_id"),
       Seq("doc_id"), "left_semi").count() === 0L,
       "folded postings must not carry retracted docs")
     assert(Retrieval.topkFromIndex(idx.index(), queries)
@@ -189,7 +191,7 @@ class RetractionSpec extends AnyFunSuite {
     assert(codeRows(idx.codes()) === expected,
       "post-retraction codes must equal a re-encode of the remaining vectors")
     assert(idx.compact() > 0)
-    assert(idx.tombStore.current().isEmpty)
+    assert(idx.lineage.tombs.current().isEmpty)
     assert(codeRows(idx.codes()) === expected, "invariant across the fold")
     assert(Pq.trainRuns.get() === t0, "retraction must never retrain")
   }
@@ -250,7 +252,8 @@ class RetractionSpec extends AnyFunSuite {
     val expect = graft.operators.SubstringDedup
       .winnersFromCensus(graft.operators.SubstringDedup.censusOf(survivors))
       .collect().map(_.getLong(0)).toSeq
-    assert(cidx.winners().collect().map(_.getLong(0)).toSeq === expect,
+    assert(SubstringDedup.winnersFromCensus(cidx.read())
+      .collect().map(_.getLong(0)).toSeq === expect,
       "the census leg must subtract the retracted docs' contribution")
 
     // the SAME takedown arrives again (an at-least-once upstream): the
@@ -258,7 +261,8 @@ class RetractionSpec extends AnyFunSuite {
     // an empty fresh set — no second subtraction
     IngestLoop.retractTick(st, retracted.select("doc_id"), docs = Some(docs),
       legs = IngestLoop.Legs(census = Some(cidx)))
-    assert(cidx.winners().collect().map(_.getLong(0)).toSeq === expect,
+    assert(SubstringDedup.winnersFromCensus(cidx.read())
+      .collect().map(_.getLong(0)).toSeq === expect,
       "a replayed takedown must not subtract twice")
   }
 }

@@ -187,12 +187,12 @@ class SemIngestSpec extends AnyFunSuite {
     // every semantic flag probes — is bit-identical across the fold,
     // and the fold leaves no retracted doc's rows behind to resurface
     // after the tombstone clear
-    val liveSigs = IngestLoop.resolved(st, leg.sigs.current().get)
+    val liveSigs = st.lineage.resolve(leg.sigs.current().get)
       .collect().map(_.toSeq).toSet
     assert(IngestLoop.compactIfNeeded(st, maxDataFiles = 1,
       legs = IngestLoop.Legs(sem = Some(leg))))
     assert(st.tombs.current().isEmpty, "tombstones cleared after the fold")
-    assert(IngestLoop.resolved(st, leg.sigs.current().get)
+    assert(st.lineage.resolve(leg.sigs.current().get)
       .collect().map(_.toSeq).toSet === liveSigs,
       "the resolved sig state must be identical across the fold")
     assert(leg.sigs.current().get.join(
@@ -239,7 +239,7 @@ class SemIngestSpec extends AnyFunSuite {
     val fresh = IngestLoop.semLegSized(spark, root, "ssz_v2", emb)
     assert(fresh.nTables === 4 && fresh.bits === leg.bits + 2,
       "the re-size records the new knob under the new name")
-    val ingested = IngestLoop.resolved(st, st.hashes.current().get)
+    val ingested = st.lineage.resolve(st.hashes.current().get)
       .select("doc_id").distinct()
     assert(leg3.sigs.current().get.collect().map(_.toSeq).toSet ===
       SemanticGate.sigRowsOf(emb, ingested, 4, leg.bits + 2, leg3.dim)
@@ -266,7 +266,7 @@ class SemIngestSpec extends AnyFunSuite {
     // KILL WINDOW: the resize's first half — tick-1 sigs at the new
     // width landed under the new name — but the process died before
     // the params commit point
-    val ingested = IngestLoop.resolved(st, st.hashes.current().get)
+    val ingested = st.lineage.resolve(st.hashes.current().get)
       .select("doc_id").distinct()
     ArtifactStore.ingestState(spark, root, "rcd_v2/sem_sigs")
       .appendTickAt(1, SemanticGate.sigRowsOf(
@@ -346,7 +346,7 @@ class SemIngestSpec extends AnyFunSuite {
     // (287, ingested) still flags against the resized state
     import spark.implicits._
     val flags = SemanticGate.flaggedAgainstState(
-      IngestLoop.resolved(st, next.sigs.current().get), emb,
+      st.lineage.resolve(next.sigs.current().get), emb,
       Seq(238L).toDF("doc_id"),
       next.nTables, next.bits, next.dim, next.simThreshold)
     assert(flags.collect().map(_.getLong(0)).toSet === Set(238L),

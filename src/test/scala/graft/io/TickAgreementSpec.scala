@@ -15,8 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * re-adjudication and re-gate advances EVERY attached store's maxTick
   * together, by exactly one, on a text and on a multimodal loop. Also
   * the refusals the entry points make before any store moves, and the
-  * takedown's replay rule. sf0.01 (the BudgetedTickSpec split); the
-  * takedown re-run on sf0.001. */
+  * takedown's replay rule and its subtraction of live docs only. sf0.01
+  * (the BudgetedTickSpec split); the takedown re-runs (one after a
+  * refused compaction) on sf0.001. */
 class TickAgreementSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.01"
@@ -32,8 +33,8 @@ class TickAgreementSpec extends AnyFunSuite {
   private final class Loop(val st: IngestLoop.StoreSet,
                            val quar: IngestLoop.Quarantine,
                            val replay: IngestLoop.ReplayLeg,
-                           val cen: ArtifactStore.GramCensusIncrementalIndex,
-                           val mix: ArtifactStore.MixIncrementalIndex) {
+                           val cen: ArtifactStore.GramCensus,
+                           val mix: ArtifactStore.DomainMix) {
     /** The deployment's one legs value. */
     def legs(withMix: Boolean,
              curate: Boolean = false): IngestLoop.Legs =
@@ -43,8 +44,8 @@ class TickAgreementSpec extends AnyFunSuite {
         curate = if (curate) Some(IngestLoop.CurateLeg(cen)) else None)
     def ticks(withMix: Boolean): Seq[Long] =
       (st.all ++ Seq(quar.rows, quar.resolvedIds, replay.feats,
-        cen.censusStore) ++
-        (if (withMix) Seq(mix.mixStore) else Nil)).map(_.maxTick)
+        cen.store) ++
+        (if (withMix) Seq(mix.store) else Nil)).map(_.maxTick)
   }
 
   private def build(root: String, name: String, mm: Boolean = false,
@@ -145,8 +146,8 @@ class TickAgreementSpec extends AnyFunSuite {
                                    extra: ArtifactStore.IngestStateStore*)(
       refused: => Any): Unit = {
     val stores = l.st.all ++ Seq(l.st.text.tombs, l.quar.rows,
-      l.quar.resolvedIds, l.replay.feats, l.cen.censusStore,
-      l.mix.mixStore) ++ extra
+      l.quar.resolvedIds, l.replay.feats, l.cen.store,
+      l.mix.store) ++ extra
     val before = stores.map(_.maxTick)
     intercept[IllegalArgumentException](refused)
     assert(stores.map(_.maxTick) === before,
@@ -161,7 +162,7 @@ class TickAgreementSpec extends AnyFunSuite {
     val other = ArtifactStore.gramCensusIncremental(spark, root,
       "agree_cur_other", k = CurateTick.DefaultStripK)
     other.bootstrap(corpus)
-    refusedBeforeAnyMove(l, idx.tfStore, other.censusStore) {
+    refusedBeforeAnyMove(l, idx.store, other.store) {
       IngestLoop.runTick(l.st.asInstanceOf[IngestLoop.Stores], batch,
         weights, legs = IngestLoop.Legs(idx = Some(idx),
           census = Some(l.cen), mix = Some(l.mix),
@@ -227,6 +228,36 @@ class TickAgreementSpec extends AnyFunSuite {
     }
   }
 
+  test("a takedown repeated after a compaction, or naming a quarantined doc, leaves census and mix as one takedown left them") {
+    val root = Files.createTempDirectory("graft_agree_repeat").toString
+    val l = build(root, "repeat")
+    val legs = l.legs(withMix = true)
+    IngestLoop.runTick(l.st.asInstanceOf[IngestLoop.Stores], batch, weights,
+      legs = legs).collect()
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def counts = (sorted(l.cen.read()), sorted(l.mix.read()))
+    // the ids outlive the compaction, which folds them out of the state
+    val ids = takedownOf(l).localCheckpoint()
+    IngestLoop.retractTick(l.st, ids, Some(docs), legs)
+    val once = counts
+    assert(IngestLoop.compactIfNeeded(l.st, 0L, legs) &&
+      l.st.text.tombs.current().isEmpty,
+      "precondition: the compaction folded and cleared the tombstones")
+    IngestLoop.retractTick(l.st, ids, Some(docs), legs)
+    assert(counts === once,
+      "a takedown repeated after a compaction must not subtract again")
+    // a quarantined doc was never counted; its takedown still tombstones
+    val quarantined = l.quar.rows.current().get.select("doc_id").limit(1)
+      .localCheckpoint()
+    assert(quarantined.count() === 1L, "precondition: a doc was quarantined")
+    IngestLoop.retractTick(l.st, quarantined, Some(docs), legs)
+    assert(counts === once,
+      "a takedown of a quarantined doc must not subtract from census or mix")
+    assert(l.st.text.tombs.current().get
+      .join(quarantined, Seq("doc_id"), "left_semi").count() === 1L,
+      "the quarantined doc is tombstoned all the same")
+  }
+
   test("a takedown that failed after its subtraction legs re-runs to the clean result: census and mix subtract once, stores at the clean tick") {
     val small = docsOf("/root/testdata/sf0.001")
     val isB = pmod(col("doc_id"), lit(Provenance.BatchMod)) === 0
@@ -242,23 +273,45 @@ class TickAgreementSpec extends AnyFunSuite {
         legs = legs).collect()
       takedown(l, legs)
       def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-      (sorted(l.cen.census()), sorted(l.mix.mix()), l.ticks(withMix = true))
+      (sorted(l.cen.read()), sorted(l.mix.read()), l.ticks(withMix = true))
     }
     val clean = run("clean") { (l, legs) =>
       IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
     }
-    val rerun = run("rerun") { (l, legs) =>
-      // the unlearn of a model store never bootstrapped fails the first
-      // run; the re-run goes without the model leg
+    // the unlearn of a model store never bootstrapped fails the first
+    // run after its tombstones landed; the re-run goes without the
+    // model leg
+    def failed(l: Loop, legs: IngestLoop.Legs): Unit = {
       val model = ArtifactStore.modelStore(spark, root, "never_bootstrapped")
       intercept[IllegalArgumentException] {
         IngestLoop.retractTick(l.st, takedownOf(l), Some(small),
           legs.copy(model = Some(model)))
       }
+    }
+    val rerun = run("rerun") { (l, legs) =>
+      failed(l, legs)
       IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
     }
-    assert(rerun._1 === clean._1, "the census must subtract exactly once")
-    assert(rerun._2 === clean._2, "the mix must subtract exactly once")
-    assert(rerun._3 === clean._3, "the stores must end at the clean tick")
+    // a compaction between the failure and the re-run is refused: its
+    // fold would drop the docs from the state before the census and mix
+    // subtracted them
+    val refused = run("refused") { (l, legs) =>
+      failed(l, legs)
+      val before = (l.ticks(withMix = true), l.st.text.tombs.maxTick)
+      intercept[IllegalArgumentException](
+        IngestLoop.compactIfNeeded(l.st, 0L, legs))
+      assert((l.ticks(withMix = true), l.st.text.tombs.maxTick) === before,
+        "the refused compaction must move no store")
+      IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
+      assert(IngestLoop.compactIfNeeded(l.st, 0L, legs) &&
+        l.st.text.tombs.current().isEmpty,
+        "once the takedown finished, the compaction folds and clears")
+    }
+    for ((what, r) <- Seq("re-run" -> rerun, "re-run after a refused " +
+        "compaction" -> refused)) {
+      assert(r._1 === clean._1, s"$what: the census must subtract exactly once")
+      assert(r._2 === clean._2, s"$what: the mix must subtract exactly once")
+      assert(r._3 === clean._3, s"$what: the stores must end at the clean tick")
+    }
   }
 }

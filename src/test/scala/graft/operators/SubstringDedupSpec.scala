@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.TestSpark
-import graft.io.Tables
+import graft.io.{ArtifactStore, Tables}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q86 repeated-substring coverage: hand-computed fixtures (shared span,
@@ -156,7 +158,8 @@ class SubstringDedupSpec extends AnyFunSuite {
       "each append mines exactly its own batch, nothing else")
 
     // tick-maintained winner set ≡ the q90 full re-mine over the union
-    val maintained = idx.winners().collect().map(_.getLong(0)).toSeq
+    val maintained = SubstringDedup.winnersFromCensus(idx.read())
+      .collect().map(_.getLong(0)).toSeq
     val remined = SubstringDedup.winnerHashes(docs, SubstringDedup.DefaultK, 20)
       .collect().map(_.getLong(0)).toSeq
     assert(maintained.nonEmpty)
@@ -165,11 +168,12 @@ class SubstringDedupSpec extends AnyFunSuite {
         "additivity of per-tick distinct-doc counts is the whole point")
 
     // compaction folds partials into one row per gram, winners invariant
-    val before = idx.censusStore.dataFileCount
+    val before = idx.store.dataFileCount
     assert(idx.compact() > 0)
-    assert(idx.censusStore.dataFileCount < before)
-    assert(idx.winners().collect().map(_.getLong(0)).toSeq === maintained)
-    val folded = idx.censusStore.current().get
+    assert(idx.store.dataFileCount < before)
+    assert(SubstringDedup.winnersFromCensus(idx.read())
+      .collect().map(_.getLong(0)).toSeq === maintained)
+    val folded = idx.store.current().get
     assert(folded.groupBy("h").count().filter(col("count") > 1).count() === 0L,
       "a folded generation holds one row per distinct gram")
 
@@ -183,7 +187,8 @@ class SubstringDedupSpec extends AnyFunSuite {
         "the whole-corpus re-mine restricted to the batch")
 
     // and the store-backed dup set drives the same q121 coverage
-    val dupFromStore = idx.dupHashes()
+    val dupFromStore = idx.read().filter(col("exact_df_docs") >= 2)
+      .select("h")
     val viaStore = SubstringDedup.coverageAgainstDupForSpec(batch, dupFromStore)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(viaStore === q121,
@@ -195,7 +200,8 @@ class SubstringDedupSpec extends AnyFunSuite {
     // passes in the store form (winners() reads maintained rows; strip
     // mines only batch postings)
     val s0 = SubstringDedup.censusRuns.get()
-    val viaStoreStrip = SubstringDedup.strip(batch, idx.winners(150))
+    val viaStoreStrip = SubstringDedup.strip(batch,
+        SubstringDedup.winnersFromCensus(idx.read(), 150))
       .filter(col("n_removed") > 0).orderBy("doc_id")
       .collect().map(_.toSeq).toSeq
     assert(SubstringDedup.censusRuns.get() === s0,
@@ -211,69 +217,107 @@ class SubstringDedupSpec extends AnyFunSuite {
         "restricted to the batch")
   }
 
-  test("census retraction (q123): negated increment ≡ re-mine without the docs; replay-idempotent; compaction drops zeroed grams") {
+  private def signedRetraction(c: SignedCase): Unit = {
     import java.nio.file.Files
-    import graft.io.{ArtifactStore, Tables}
-    import org.apache.spark.sql.functions.{col, lit, pmod}
     val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
-    val m = pmod(col("doc_id"), lit(Provenance.BatchMod))
-    val corpus = docs.filter(m =!= 0)
-    val batch = docs.filter(m === 0)
-    val retracted = docs.filter(m === 6)
-    val survivors = docs.filter(m =!= 6)
-
-    val root = Files.createTempDirectory("graft_gram_retract").toString
-    val idx = ArtifactStore.gramCensusIncremental(spark, root, "census2")
-    idx.bootstrap(corpus)
-    idx.appendDocsAt(2, batch)
+    val retracted = c.retracted(docs)
+    val survivors = docs.join(retracted.select("doc_id"), Seq("doc_id"),
+      "left_anti")
+    val root = Files.createTempDirectory("graft_signed_retract").toString
+    val idx = c.make(root)
+    idx.bootstrap(docs.filter(mod17 =!= 0))
+    idx.appendDocsAt(2, docs.filter(mod17 === 0))
     val tR = 3L
     idx.retractDocsAt(tR, retracted)
 
-    // maintained winners after the subtraction ≡ a full re-mine of the
-    // surviving corpus — the algebra q123's oracle certifies
-    val maintained = idx.winners().collect().map(_.getLong(0)).toSeq
-    val remined = SubstringDedup
-      .winnerHashes(survivors, SubstringDedup.DefaultK, 20)
-      .collect().map(_.getLong(0)).toSeq
-    assert(maintained === remined,
-      "subtracting a doc's census must equal never having mined it")
-
-    // q123 live form ≡ the q86 re-mine without the retracted docs,
-    // restricted to batch rows
-    val q123 = SubstringDedup.q123CensusRetraction(docs)
-      .collect().map(_.toSeq).toSeq
-    val q86b = SubstringDedup.q86SubstringDups(survivors)
-      .filter(m === 0).collect().map(_.toSeq).toSeq
-    assert(q123.nonEmpty && q123 === q86b)
-
-    // DECISIVE: the retracted class shares covering grams with the
-    // batch, so at least one batch doc's coverage actually drops vs the
-    // no-retraction judgement (q121) — the takedown is observable, not
-    // a no-op certified by construction
-    val q121 = SubstringDedup.q121IncrementalCuration(docs)
-      .collect().map(_.toSeq).toSeq
-    assert(q123 !== q121,
-      "retraction must change at least one batch doc's coverage")
-
-    // store-served dup set judges the batch identically to the live form
-    val viaStore = SubstringDedup
-      .coverageAgainstDupForSpec(batch, idx.dupHashes())
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(viaStore === q123)
+    // rows are (key, values…); a fully-retracted key sums to zeros
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    def zeroed(r: Seq[Any]) = r.tail.forall(_ == 0L)
+    val recounted = rows(c.recount(survivors))
+    val merged = rows(idx.read())
+    assert(merged.exists(zeroed),
+      "precondition: the takedown zeroes at least one row")
+    assert(merged.filterNot(zeroed) === recounted,
+      "subtracting the docs' increment must equal a recount without them")
+    c.extra(idx, docs)
 
     // a REPLAYED takedown (same tick key) must not subtract twice
     idx.retractDocsAt(tR, retracted)
-    assert(idx.winners().collect().map(_.getLong(0)).toSeq === maintained)
+    assert(rows(idx.read()) === merged)
 
-    // compaction folds positives and negatives to one row per gram,
-    // drops fully-zeroed grams, and changes no verdict
+    // compaction folds positives and negatives to one row per key,
+    // drops the zeroed rows, and changes no nonzero sum
     assert(idx.compact() > 0)
-    assert(idx.winners().collect().map(_.getLong(0)).toSeq === maintained)
-    val folded = idx.censusStore.current().get
-    assert(folded.filter(col("exact_df_docs") === 0 && col("n_occ") === 0)
-      .count() === 0L, "fully-retracted grams must leave the folded store")
-    assert(folded.groupBy("h").count().filter(col("count") > 1).count() === 0L)
+    assert(rows(idx.read()) === recounted)
+    val folded = idx.store.current().get
+    assert(!rows(folded).exists(zeroed),
+      "fully-retracted rows must leave the folded store")
+    assert(folded.groupBy(folded.columns.head).count()
+      .filter(col("count") > 1).count() === 0L,
+      "a folded generation holds one row per key")
   }
+
+  /** One SIGNED index under the retraction check: its store, the
+    * recount its merged read must equal, the docs a takedown retracts
+    * (zeroing at least one row, so the fold's drop is exercised), and
+    * the checks particular to it. */
+  private final case class SignedCase(
+      name: String,
+      make: String => ArtifactStore.SignedIndex[DataFrame => DataFrame],
+      recount: DataFrame => DataFrame,
+      retracted: DataFrame => DataFrame,
+      extra: (ArtifactStore.SignedIndex[DataFrame => DataFrame],
+              DataFrame) => Unit = (_, _) => ())
+
+  private def mod17 = pmod(col("doc_id"), lit(Provenance.BatchMod))
+
+  private val signedCases = Seq(
+    SignedCase(
+      "census retraction (q123): negated increment ≡ re-mine without the docs; replay-idempotent; compaction drops zeroed grams",
+      root => ArtifactStore.gramCensusIncremental(spark, root, "census2"),
+      SubstringDedup.censusOf(_),
+      docs => docs.filter(mod17 === 6),
+      (idx, docs) => {
+        val survivors = docs.filter(mod17 =!= 6)
+        // maintained winners after the subtraction ≡ a full re-mine of
+        // the surviving corpus — the algebra q123's oracle certifies
+        val maintained = SubstringDedup.winnersFromCensus(idx.read())
+          .collect().map(_.getLong(0)).toSeq
+        val remined = SubstringDedup
+          .winnerHashes(survivors, SubstringDedup.DefaultK, 20)
+          .collect().map(_.getLong(0)).toSeq
+        assert(maintained === remined,
+          "subtracting a doc's census must equal never having mined it")
+        // q123 live form ≡ the q86 re-mine without the retracted docs,
+        // restricted to batch rows
+        val q123 = SubstringDedup.q123CensusRetraction(docs)
+          .collect().map(_.toSeq).toSeq
+        val q86b = SubstringDedup.q86SubstringDups(survivors)
+          .filter(mod17 === 0).collect().map(_.toSeq).toSeq
+        assert(q123.nonEmpty && q123 === q86b)
+        // DECISIVE: the retracted class shares covering grams with the
+        // batch, so at least one batch doc's coverage actually drops vs
+        // the no-retraction judgement (q121) — the takedown is
+        // observable, not a no-op certified by construction
+        val q121 = SubstringDedup.q121IncrementalCuration(docs)
+          .collect().map(_.toSeq).toSeq
+        assert(q123 !== q121,
+          "retraction must change at least one batch doc's coverage")
+        // the store-served dup set judges the batch like the live form
+        val viaStore = SubstringDedup.coverageAgainstDupForSpec(
+            docs.filter(mod17 === 0),
+            idx.read().filter(col("exact_df_docs") >= 2).select("h"))
+          .orderBy("doc_id").collect().map(_.toSeq).toSeq
+        assert(viaStore === q123)
+      }),
+    SignedCase(
+      "mix retraction: negated increment ≡ recount without the docs; replay-idempotent; compaction drops zeroed sources",
+      root => ArtifactStore.mixIncremental(spark, root, "mix2"),
+      ArtifactStore.MixCounts,
+      // one whole source (its row zeroes) plus the q123 slice
+      docs => docs.filter(col("source") === "src7" || mod17 === 6)))
+
+  signedCases.foreach(c => test(c.name)(signedRetraction(c)))
 
   test("real corpus: bounds hold and exact-dup docs are fully covered") {
     val docs = Tables.load(spark, sf, "documents")

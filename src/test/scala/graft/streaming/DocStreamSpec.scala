@@ -550,7 +550,7 @@ class DocStreamSpec extends AnyFunSuite {
     // stream's admissions, across the kill/restart, with each batch
     // tokenized exactly once (bootstrap + 2 batches)
     import graft.operators.Retrieval
-    assert(idx.tfStore.maxTick === 3L,
+    assert(idx.store.maxTick === 3L,
       "postings fold batch-id-keyed alongside the dedup stores")
     assert(Retrieval.tokenizeRuns.get() - tok0 <= 3L,
       "no batch may be re-tokenized (bootstrap + one pass per batch)")
@@ -574,11 +574,12 @@ class DocStreamSpec extends AnyFunSuite {
     // maintained winner set must equal a re-mine of base ∪ admissions,
     // with each batch census-mined exactly once (no old tick re-mined)
     import graft.operators.SubstringDedup
-    assert(cen.censusStore.maxTick === 3L,
+    assert(cen.store.maxTick === 3L,
       "census increments fold batch-id-keyed alongside the dedup stores")
     assert(SubstringDedup.censusRuns.get() - cenRuns0 <= 2L,
       "each micro-batch's admissions are census-mined exactly once")
-    assert(cen.winners().collect().map(_.getLong(0)).toSeq ===
+    assert(SubstringDedup.winnersFromCensus(cen.read())
+      .collect().map(_.getLong(0)).toSeq ===
       SubstringDedup.winnersFromCensus(SubstringDedup.censusOf(rebuildCorpus))
         .collect().map(_.getLong(0)).toSeq,
       "stream-folded census must equal a re-mine over base ∪ admissions")
@@ -587,7 +588,7 @@ class DocStreamSpec extends AnyFunSuite {
     // admitted docs' vectors (and ONLY those) encode under the frozen
     // serving artifacts, bit-equal to a batch re-encode over base ∪
     // the stream's admissions, across the kill/restart
-    assert(ann.codeStore.maxTick === 3L,
+    assert(ann.store.maxTick === 3L,
       "ANN codes fold batch-id-keyed alongside the dedup stores")
     val rebuildVecs = embBase.unionByName(
       sideVecs.filter(col("vec_id").isin(admittedIds.toSeq: _*)))
