@@ -17,9 +17,13 @@ import org.apache.spark.sql.types.StructType
   * Each report profiles its output AS WRITTEN, read back with the
   * declared schema — as the reference re-reads its CSVs to profile them
   * (P269, P280) — so the profile's queries scan one small file instead
-  * of each re-running the cleaning lineage. Publish copies the same
-  * files. `run` returns after every branch finished, rethrowing the
-  * first failure.
+  * of each re-running the cleaning lineage. The profile computes its
+  * per-column statistics, histograms and correlations in long form
+  * ([[Profiler]]): each query holds one copy of its aggregates whatever
+  * the column count, so planning and codegen, the reports' largest
+  * cost, do not grow with the columns. Publish copies the same files.
+  * `run` returns after every branch finished, rethrowing the first
+  * failure.
   *
   * Exact vs approximate is not a pipeline setting: the medians and IQR
   * bounds are exact `percentile` aggregates, and the session's

@@ -53,8 +53,9 @@ import graft.operators.Provenance.Evidence
   * a text and a multimodal loop.
   *
   * One tick = agreement → judge → [[foldAdmitted]]: fix the tick from
-  * the one store list every attached store shares ([[Legs]]`.tick`, a
-  * takedown included), judge the cohort against the state as of the
+  * the one store list every attached store shares ([[Legs]]`.tick`,
+  * which refuses while a takedown is in flight; a takedown takes
+  * `agreedTick`), judge the cohort against the state as of the
   * previous tick, then append the admitted docs' increments through
   * the one fold-back. Compaction, quiesce and takedowns walk the one
   * tombstone lineage ([[Legs]]`.lineage`).
@@ -152,7 +153,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * A TAKEDOWN IS A TICK, run with the deployment's one `legs` value:
     * the subtraction legs (census, mix) land their negative increments
     * as tick-keyed writes, so every attached store advances to the
-    * takedown tick `k` TOGETHER ([[Legs]]`.tick`) — stores with
+    * takedown tick `k` TOGETHER ([[Legs]]`.agreedTick`) — stores with
     * nothing to subtract get an empty tick. Otherwise the census/mix
     * stores would sit one tick ahead, the next ingest tick would
     * resolve to `k` and OVERWRITE the negative increment, silently
@@ -190,7 +191,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
         "a census or mix leg is attached: those legs subtract by text " +
         "and source, not by doc_id")
     val lineage = st.text.lineage
-    val k = legs.tick(st.all)
+    val k = legs.agreedTick(st)
     val fresh = lineage.resolve(docIds.select("doc_id"), below = k)
       .localCheckpoint()
     if (fresh.isEmpty) return lineage.tombs.maxTick // complete-replay no-op
@@ -428,31 +429,61 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     private[io] def consumers: Seq[ArtifactStore.MaintainedIndex] =
       idx.toSeq ++ rawCensus ++ ann.map(_.idx) ++ mix
 
-    /** The maxTick of every store in the tick agreement: the lineage
-      * over `core`, every consumer store and the export. */
-    private def ticks(core: Seq[ArtifactStore.IngestStateStore]): Seq[Long] =
-      (lineage(core) ++ consumers.map(_.store)).map(_.maxTick) ++
+    /** The maxTick of the stores every takedown over `st` moves and the
+      * tombstones do not stand in for: the text core stores (moved
+      * after the takedown's non-tick-keyed effects), every consumer
+      * store and the export (moved last, the census and mix
+      * subtraction among them). */
+    private def takedownTicks(st: StoreSet): Seq[Long] =
+      (st.text.all ++ consumers.map(_.store)).map(_.maxTick) ++
         export.map(_.store.maxTick)
 
-    /** THE TICK AGREEMENT — the tick a run over `core` plus these legs
-      * produces: [[nextTickOf]] over [[ticks]]. */
-    private[io] def tick(core: Seq[ArtifactStore.IngestStateStore]): Long =
-      nextTickOf(ticks(core))
+    /** The maxTick of the rest of the tick agreement: the doc-keyed
+      * stores of the lineage over `st.all` beyond the text core (the mm
+      * sig stores, the legs' lineage stores), whose rows the tombstones
+      * retract. A takedown over fewer of them (`retractTick(st.text, …)`,
+      * or without the quarantine leg) is complete. */
+    private def docKeyedTicks(st: StoreSet): Seq[Long] =
+      lineage(st.all).filterNot(st.text.all.contains).map(_.maxTick)
 
-    /** Whether a takedown subtracts: a census or mix leg is attached
-      * (the signed indexes, which carry no doc_id to tombstone). */
+    /** THE TICK AGREEMENT — the tick a takedown over `st` plus these
+      * legs produces: [[nextTickOf]] over every store's maxTick. Only
+      * [[retractTick]] takes it directly; every other run takes [[tick]]. */
+    private[io] def agreedTick(st: StoreSet): Long =
+      nextTickOf(takedownTicks(st) ++ docKeyedTicks(st))
+
+    /** Whether a takedown over `st` is IN FLIGHT, given its
+      * [[takedownTicks]] `moved`: its tombstones landed at a tick one of
+      * those stores has not reached — it failed before its tick-keyed
+      * writes, and only a re-run finishes it. A lagging doc-keyed store
+      * alone is no takedown in flight: the next tick redoes its tick. */
+    private def inFlight(st: StoreSet, moved: Seq[Long]): Boolean =
+      st.text.tombs.maxTick > moved.min
+
+    /** The tick agreement of an ingest, re-adjudication or re-gate run
+      * over `st`, refused while a takedown is [[inFlight]]: the run
+      * would take the takedown's tick, and the takedown's re-run would
+      * then find its ids tombstoned below the next tick and return as a
+      * complete replay — its subtraction, model unlearn, BM25/ANN
+      * tombstones and export re-pack would never run. */
+    private[io] def tick(st: StoreSet): Long = {
+      val moved = takedownTicks(st)
+      require(!inFlight(st, moved),
+        "a takedown is in flight (its tombstones are ahead of the stores): " +
+          "re-run retractTick with the same ids before the next tick")
+      nextTickOf(moved ++ docKeyedTicks(st))
+    }
+
+    /** Whether a takedown is subtracting: a census or mix leg is
+      * attached (the signed indexes, which carry no doc_id to
+      * tombstone). */
     private[io] def subtracts: Boolean = rawCensus.isDefined || mix.isDefined
 
-    /** Whether a SUBTRACTING takedown is IN FLIGHT: its tombstones
-      * (`tombs`) landed at a tick some agreement store has not reached
-      * — it failed before its tick-keyed writes, and only a re-run
-      * finishes it. Only the subtraction reads the live state a fold
-      * changes; a doc-keyed store's re-run after a fold repeats an
-      * idempotent tombstone. */
-    private[io] def takedownPending(core: Seq[ArtifactStore.IngestStateStore],
-                                    tombs: ArtifactStore.IngestStateStore)
-        : Boolean =
-      subtracts && tombs.maxTick > ticks(core).min
+    /** Whether a SUBTRACTING takedown is [[inFlight]]. Only the
+      * subtraction reads the live state a fold changes; a doc-keyed
+      * store's re-run after a fold repeats an idempotent tombstone. */
+    private[io] def takedownPending(st: StoreSet): Boolean =
+      subtracts && inFlight(st, takedownTicks(st))
 
     /** Compact each consumer index whose store crossed `maxDataFiles`. */
     private[io] def compactConsumers(maxDataFiles: Long): Unit =
@@ -906,7 +937,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
   private def runTickImpl(st: Stores, batchDocs: DataFrame, w: Seq[Double],
                           threshold: Double, lowFrac: Double,
                           quota: Option[QuotaLeg], legs: Legs): DataFrame = {
-    val t = legs.tick(st.all)
+    val t = legs.tick(st)
     // every state read resolves through the tombstone store: retracted
     // docs' rows are invisible whether or not a compaction folded them
     val (state, fuzzy) = textEvidence(st, t, batchDocs, threshold)
@@ -995,7 +1026,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * never subtract them. */
   def compactIfNeeded(st: StoreSet, maxDataFiles: Long = 64,
                       legs: Legs = Legs()): Boolean = {
-    require(!legs.takedownPending(st.all, st.text.tombs),
+    require(!legs.takedownPending(st),
       "a takedown is in flight (its tombstones are ahead of the stores): " +
         "re-run retractTick with the same ids before compacting")
     val all = legs.lineage(st.all)
@@ -1173,7 +1204,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                        threshold: Double = 0.2, lowFrac: Double = 0.25,
                        legs: Legs = Legs()): DataFrame = {
     val l = withRequired(legs, Legs(quar = Some(quar)))
-    val t = l.tick(st.all)
+    val t = l.tick(st)
     // the ladder of the attached legs: semantic / contaminated rows
     // re-judge ONLY when their leg is attached — without its state the
     // re-judgment would silently skip that gate and wrongly re-admit them
@@ -1253,7 +1284,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                  wNew: Seq[Double], lowFrac: Double = 0.25,
                  legs: Legs = Legs()): DataFrame = {
     val l = withRequired(legs, Legs(quar = Some(quar), replay = Some(replay)))
-    val t = l.tick(st.all)
+    val t = l.tick(st)
     val sigCols = st.sigCols
     val feats = st.text.lineage.resolve(replay.feats.currentUpTo(t - 1).getOrElse(
       sys.error("replay leg not bootstrapped: no tick-1 base")))

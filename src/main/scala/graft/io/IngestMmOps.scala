@@ -55,7 +55,7 @@ trait IngestMmOps { self: IngestLoop.type =>
                 legs: Legs = Legs()): DataFrame = {
     import graft.multimodal.Multimodal
     refuseCurate(legs)
-    val t = legs.tick(st.all)
+    val t = legs.tick(st)
     val (state, fuzzy) = textEvidence(st.text, t, batchDocs, threshold)
     // batch signatures derive map-side at the codec seam; severed — the
     // flag chain reads each twice and the fold-back a third time
@@ -144,7 +144,7 @@ trait IngestMmOps { self: IngestLoop.type =>
     import graft.multimodal.Multimodal
     refuseCurate(legs)
     val l = withRequired(legs, Legs(quar = Some(quar)))
-    val t = l.tick(st.all)
+    val t = l.tick(st)
     // semantic / contaminated rows re-judge only with their leg
     // attached (its state is the gate)
     val ladder = Provenance.ladder(Seq(Evidence.Image, Evidence.Audio) ++

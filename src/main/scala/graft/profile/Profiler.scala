@@ -1,6 +1,6 @@
 package graft.profile
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -53,39 +53,49 @@ case class TableProfile(
     headRows: Seq[Seq[String]] = Seq.empty,
     tailRows: Seq[Seq[String]] = Seq.empty)
 
-/** One-pass-per-concern profiler:
-  *   pass 1 — one wide aggregate: the row count, every numeric stat
-  *            (including exact quantiles) + string lengths + pairwise
-  *            correlations + all null/zero/negative censuses, for every
-  *            column at once — a plain global aggregate with no
-  *            distinct counts in it;
+/** One-pass-per-concern profiler. Every per-column statistic is
+  * computed in LONG FORM: the frame is melted to one entry per (row,
+  * column) — `explode(array(struct(k, v…)))` — and aggregated by the
+  * column index `k`, so each query holds one copy of its aggregates
+  * whatever the column count (query planning and codegen grow with the
+  * expressions in a query, not with its rows):
+  *   pass 1 — the row count and the string columns' lengths in one
+  *            small global aggregate; every numeric column's census
+  *            (count, missing, zeros, negatives, infinities), moments
+  *            (mean, min, max, std, skew, kurt) and ONE exact
+  *            `percentile` buffer for all five quantiles in one
+  *            `groupBy(k)`; the Pearson matrix from [[pearson]];
   *   pass 1b — every column's exact distinct count in one aggregate of
   *            its own. Several distinct aggregates in one `agg` plan as
   *            an Expand (every row copied once per distinct column)
-  *            grouped by (gid, value); in pass 1 that would also keep
-  *            every exact percentile buffer once per group, in a
-  *            single-task stage. Kept apart, the Expand carries only
-  *            counts. The counts are report values, so they stay
-  *            eligible for [[graft.catalyst.ApproxDistinctAboveThreshold]];
-  *   pass 2 — histograms for all numeric columns in ONE aggregate
-  *            (bins need pass-1 min/max — a data-dependent barrier,
-  *            same shape as the reference's quantile→fill dataflow);
+  *            grouped by (gid, value); beside the percentiles that
+  *            would keep every exact percentile buffer once per group.
+  *            Kept apart, the Expand carries only counts. The counts
+  *            are report values, so they stay eligible for
+  *            [[graft.catalyst.ApproxDistinctAboveThreshold]];
+  *   pass 2 — histograms: one `groupBy(k, bin).count()` over the
+  *            columns with a range (bins need pass-1 min/max — a
+  *            data-dependent barrier, same shape as the reference's
+  *            quantile→fill dataflow);
   *   pass 3 — duplicate-row count (groupBy all columns);
   *   pass 4 — per-string-column top-k (k small; TakeOrdered per column);
   *   pass 5 — Spearman over ONE rank table for every numeric column
-  *            ([[spearmanMatrix]]), its severed table released after.
+  *            ([[spearmanMatrix]]), its Pearson over ranks from the same
+  *            [[pearson]] kernel, its severed table released after.
   *
   * Exact vs approximate is decided by input size alone, never by the
   * caller: the session's [[graft.catalyst.ApproxAboveThreshold]] valve
-  * rewrites pass 1's exact percentiles to mergeable sketches above its
-  * byte threshold (making the whole pass map-combinable), and
-  * [[TopkSketchThresholdKey]] sends high-cardinality string columns to
-  * the heavy-hitter sketch. Histograms stay one scan regardless.
+  * rewrites pass 1's exact percentile to a mergeable sketch per column
+  * above its byte threshold, and [[TopkSketchThresholdKey]] sends
+  * high-cardinality string columns to the heavy-hitter sketch.
+  * Histograms stay one scan regardless.
   */
 object Profiler {
 
   val DefaultBins = 10
   val DefaultTopK = 10
+  /** q05, q25, median, q75, q95: one `percentile` buffer per column. */
+  private val Quantiles = Seq(0.05, 0.25, 0.5, 0.75, 0.95)
 
   /** Valve for the string top-k path: a column whose exact distinct
     * count (pass 1) exceeds this many values takes the heavy-hitter
@@ -150,20 +160,55 @@ object Profiler {
     }
   }
 
+  /** `df` melted to long form: one row per (row, entry), holding the
+    * entry's index `k` and its fields. */
+  private def melt(df: DataFrame, entries: Seq[Seq[Column]]): DataFrame =
+    df.select(explode(array(entries.zipWithIndex.map { case (fs, k) =>
+      struct(lit(k).as("k") +: fs: _*)
+    }: _*)).as("m")).select("m.*")
+
+  /** One aggregate row per entry index `k` of a long-form query. */
+  private def byK(rows: Array[Row]): Map[Int, Row] =
+    rows.map(r => r.getInt(0) -> r).toMap
+
+  /** Field `i` of an aggregate row; None when the row is absent (no
+    * entry had its `k`) or the field is null. */
+  private def opt[T](r: Option[Row], i: Int): Option[T] =
+    r.filterNot(_.isNullAt(i)).map(_.getAs[T](i))
+
+  /** Every pair (a, b) of `xs`, a before b. */
+  private def pairsOf[T](xs: Seq[T]): Seq[(T, T)] =
+    for { (a, i) <- xs.zipWithIndex; b <- xs.drop(i + 1) } yield (a, b)
+
+  /** The Pearson kernel: `corr` of every pair of `cols` (in [[pairsOf]]
+    * order) in ONE aggregate. Each row melts to one `(pair, x, y)` entry
+    * per pair, and `corr(x, y)` is aggregated by pair, so every row
+    * updates each pair's `corr` once, as a wide aggregate of one `corr`
+    * per pair would. None where `corr` is null (fewer than two rows
+    * with both values). Pass 1's Pearson matrix and Spearman's Pearson
+    * over ranks both run it. */
+  private def pearson(df: DataFrame, cols: Seq[Column]): Seq[Option[Double]] = {
+    val pairs = pairsOf(cols)
+    if (pairs.isEmpty) return Seq.empty
+    val r = byK(melt(df, pairs.map { case (a, b) =>
+      Seq(a.cast("double").as("x"), b.cast("double").as("y"))
+    }).groupBy("k").agg(corr("x", "y")).collect())
+    pairs.indices.map(k => opt[Double](r.get(k), 1))
+  }
+
   /** Spearman rank-correlation matrix (the profiling suite's second
     * correlation method, SURVEY A10): every column's average ranks in
     * ONE rank table ([[graft.operators.RankStats.rankTable]] — grouped
     * CDF, no global row window). Each row is melted once to one entry
     * per column, all entries are ranked by one join with that table,
-    * regrouped by a row id, and ONE wide Pearson pass runs over the rank
-    * columns. Cost: the rank table's shared barriers (one sever, one
-    * sketch, one totals query, one window) + one join and one regroup,
-    * whatever the column count; the join's table is bounded by the
-    * columns' cardinality. The severed distinct table is released once
-    * the matrix is computed. */
+    * regrouped by a row id, and the [[pearson]] kernel runs over the
+    * rank columns. Cost: the rank table's shared barriers (one sever,
+    * one sketch, one totals query, one window) + one join, one regroup
+    * and the kernel, whatever the column count; the join's table is
+    * bounded by the columns' cardinality. The severed distinct table is
+    * released once the matrix is computed. */
   def spearmanMatrix(df: DataFrame, cols: Seq[String]): Seq[(String, String, Double)] = {
-    val pairs = for { (a, i) <- cols.zipWithIndex; b <- cols.drop(i + 1) } yield (a, b)
-    if (pairs.isEmpty) return Seq.empty
+    if (cols.size < 2) return Seq.empty
     // Listwise semantics for real: rank AFTER dropping rows with a null
     // in any profiled column (= pandas df[cols].dropna().corr("spearman")).
     // Ranking the full per-column population first would hand tie-averaged
@@ -172,19 +217,12 @@ object Profiler {
     val base = df.select(cols.map(col): _*).na.drop(cols)
     val ranks = graft.operators.RankStats.rankTable(base, cols)
     try {
-      val rankCols = cols.zipWithIndex.map { case (c, i) =>
-        max(when(col("k") === i, col("r"))).as(s"$c!rank")
-      }
+      val rankCols = cols.indices.map(i => max(when(col("k") === i, col("r"))).as(s"r$i"))
       val rowRanks = ranks.rank(ranks.melted(
           base.withColumn("row!", monotonically_increasing_id()), "row!"))
         .groupBy("row!").agg(rankCols.head, rankCols.tail: _*)
-      val aggs = pairs.map { case (a, b) =>
-        corr(col(s"$a!rank"), col(s"$b!rank")).as(s"$a!$b")
-      }
-      val row = rowRanks.agg(aggs.head, aggs.tail: _*).head()
-      pairs.zipWithIndex.map { case ((a, b), i) =>
-        (a, b, if (row.isNullAt(i)) Double.NaN else row.getDouble(i))
-      }
+      pairsOf(cols).zip(pearson(rowRanks, cols.indices.map(i => col(s"r$i"))))
+        .map { case ((a, b), r) => (a, b, r.getOrElse(Double.NaN)) }
     } finally ranks.release()
   }
 
@@ -198,48 +236,52 @@ object Profiler {
     val numCols = df.schema.fields.filter(isNumeric).map(_.name).toSeq
     val strCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
 
-    // ---- pass 1: one wide aggregate ----------------------------------
-    def pct(c: String, q: Double): Column = expr(s"percentile(`$c`, $q)")
-    val numAggs = numCols.flatMap { c =>
-      val d = col(c).cast("double")
-      Seq(
-        count(col(c)).as(s"$c!n"),
-        sum(col(c).isNull.cast("long")).as(s"$c!miss"),
-        sum((d === 0.0).cast("long")).as(s"$c!zeros"),
-        sum((d < 0.0).cast("long")).as(s"$c!neg"),
-        sum((isnan(d) || d === Double.PositiveInfinity || d === Double.NegativeInfinity)
-          .cast("long")).as(s"$c!inf"),
-        avg(d).as(s"$c!mean"), min(d).as(s"$c!min"), max(d).as(s"$c!max"),
-        // Fisher-adjusted G1/G2 (pandas/ydata parity), not population g1/g2
-        stddev_samp(d).as(s"$c!std"),
-        graft.functions.Moments.skewG1(d).as(s"$c!skew"),
-        graft.functions.Moments.kurtG2(d).as(s"$c!kurt"),
-        pct(c, 0.05).as(s"$c!q05"), pct(c, 0.25).as(s"$c!q25"),
-        pct(c, 0.5).as(s"$c!q50"), pct(c, 0.75).as(s"$c!q75"),
-        pct(c, 0.95).as(s"$c!q95"))
-    }
+    // ---- pass 1: row count and string lengths, one small aggregate --
     val strAggs = strCols.flatMap { c =>
       Seq(
-        count(col(c)).as(s"$c!n"),
-        sum(col(c).isNull.cast("long")).as(s"$c!miss"),
-        min(length(col(c)).cast("long")).as(s"$c!minlen"),
-        max(length(col(c)).cast("long")).as(s"$c!maxlen"),
-        avg(length(col(c))).as(s"$c!avglen"))
+        count(col(c)),
+        sum(col(c).isNull.cast("long")),
+        min(length(col(c)).cast("long")),
+        max(length(col(c)).cast("long")),
+        avg(length(col(c))))
     }
-    val corrPairs = for {
-      (a, i) <- numCols.zipWithIndex; b <- numCols.drop(i + 1)
-    } yield (a, b)
-    val corrAggs = corrPairs.map { case (a, b) =>
-      corr(col(a).cast("double"), col(b).cast("double")).as(s"$a!corr!$b")
+    val head = df.agg(count(lit(1)), strAggs: _*).head()
+    val nRows = head.getLong(0)
+
+    // ---- pass 1: numeric statistics in long form ---------------------
+    // one row per column index k: k, then the NumericProfile fields in
+    // order (nDistinct and the histogram come from passes 1b and 2)
+    val stats =
+      if (numCols.isEmpty) Map.empty[Int, Row]
+      else {
+        val v = col("v")
+        byK(melt(df, numCols.map(c => Seq(col(c).cast("double").as("v"))))
+          .groupBy("k").agg(
+            count(v),
+            sum(v.isNull.cast("long")),
+            sum((v === 0.0).cast("long")),
+            sum((v < 0.0).cast("long")),
+            sum((isnan(v) || v === Double.PositiveInfinity || v === Double.NegativeInfinity)
+              .cast("long")),
+            avg(v), min(v), max(v),
+            // Fisher-adjusted G1/G2 (pandas/ydata parity), not population g1/g2
+            stddev_samp(v),
+            graft.functions.Moments.skewG1(v),
+            graft.functions.Moments.kurtG2(v),
+            percentile(v, typedLit(Quantiles)).as("q"))
+          .collect())
+      }
+    val numStats = numCols.zipWithIndex.map { case (c, k) =>
+      val r = stats.get(k)
+      def n(i: Int): Long = opt[Long](r, i).getOrElse(0L)
+      def d(i: Int): Option[Double] = opt[Double](r, i)
+      val Seq(q05, q25, q50, q75, q95) = opt[collection.Seq[Double]](r, 12)
+        .fold(Quantiles.map(_ => Option.empty[Double]))(_.map(Some(_)).toSeq)
+      NumericProfile(c, df.schema(c).dataType.simpleString,
+        n(1), n(2), 0L, n(3), n(4), n(5),
+        d(6), d(7), d(8), d(9), d(10), d(11),
+        q05, q25, q50, q75, q95, Seq.empty)
     }
-    val aggs = numAggs ++ strAggs ++ corrAggs
-    val row = df.agg(count(lit(1)).as("!rows"), aggs: _*).head()
-    def g[T](k: String): Option[T] = {
-      val i = row.fieldIndex(k)
-      if (row.isNullAt(i)) None else Some(row.getAs[T](i))
-    }
-    def gl(k: String): Long = g[Long](k).getOrElse(0L)
-    val nRows = gl("!rows")
 
     // ---- pass 1b: all distinct counts in their own aggregate ---------
     val distAggs = (numCols ++ strCols).map(c => countDistinct(col(c)).as(c))
@@ -248,32 +290,27 @@ object Profiler {
       else None
     def dist(c: String): Long = distRow.fold(0L)(_.getAs[Long](c))
 
-    // ---- pass 2: all histograms in one aggregate ---------------------
-    val bounds = numCols.map(c => c -> (g[Double](s"$c!min"), g[Double](s"$c!max"))).toMap
-    val histAggs = numCols.flatMap { c =>
-      bounds(c) match {
-        case (Some(lo), Some(hi)) if hi > lo =>
-          val width = (hi - lo) / bins
-          val bucket = least(floor((col(c).cast("double") - lo) / width), lit(bins - 1))
-          (0 until bins).map(b => sum((bucket === b).cast("long")).as(s"$c!h$b"))
-        case _ => Seq.empty
+    // ---- pass 2: all histograms in one long-form count ---------------
+    val ranged = numStats.flatMap { p =>
+      (p.min, p.max) match {
+        case (Some(lo), Some(hi)) if hi > lo => Some((p.name, lo, (hi - lo) / bins))
+        case _ => None
       }
     }
-    val histRow =
-      if (histAggs.nonEmpty) Some(df.agg(histAggs.head, histAggs.tail: _*).head())
-      else None
-    def hist(c: String): Seq[(Double, Double, Long)] = bounds(c) match {
-      case (Some(lo), Some(hi)) if hi > lo =>
-        val width = (hi - lo) / bins
-        (0 until bins).map { b =>
-          val n = histRow.map { r =>
-            val i = r.fieldIndex(s"$c!h$b")
-            if (r.isNullAt(i)) 0L else r.getLong(i)
-          }.getOrElse(0L)
-          (lo + b * width, lo + (b + 1) * width, n)
-        }
-      case _ => Seq.empty
-    }
+    val binCounts: Map[(String, Long), Long] =
+      if (ranged.isEmpty) Map.empty
+      else melt(df, ranged.map { case (c, lo, width) =>
+          // least() skips a null: without the guard a null value would
+          // land in the last bin
+          Seq(when(col(c).isNotNull,
+            least(floor((col(c).cast("double") - lo) / width), lit(bins - 1))).as("bin"))
+        }).filter(col("bin").isNotNull).groupBy("k", "bin").count().collect()
+        .map(r => (ranged(r.getInt(0))._1, r.getLong(1)) -> r.getLong(2)).toMap
+    val hist = ranged.map { case (c, lo, width) =>
+      c -> (0 until bins).map { b =>
+        (lo + b * width, lo + (b + 1) * width, binCounts.getOrElse((c, b.toLong), 0L))
+      }
+    }.toMap
 
     // ---- pass 3: duplicate rows --------------------------------------
     val nDup = nRows - df.dropDuplicates().count()
@@ -312,28 +349,20 @@ object Profiler {
             else topKExact(df, c, topK))
     }.toMap
 
-    val numeric = numCols.map { c =>
-      NumericProfile(c, df.schema(c).dataType.simpleString,
-        gl(s"$c!n"), gl(s"$c!miss"), dist(c), gl(s"$c!zeros"),
-        gl(s"$c!neg"), gl(s"$c!inf"),
-        g[Double](s"$c!mean"), g[Double](s"$c!min"), g[Double](s"$c!max"),
-        g[Double](s"$c!std"), g[Double](s"$c!skew"), g[Double](s"$c!kurt"),
-        g[Double](s"$c!q05"), g[Double](s"$c!q25"), g[Double](s"$c!q50"),
-        g[Double](s"$c!q75"), g[Double](s"$c!q95"), hist(c))
+    val numeric = numStats.map(p =>
+      p.copy(nDistinct = dist(p.name), histogram = hist.getOrElse(p.name, Seq.empty)))
+    val strings = strCols.zipWithIndex.map { case (c, j) =>
+      val i = 1 + 5 * j
+      def h[T](o: Int): Option[T] = opt[T](Some(head), i + o)
+      StringProfile(c, h[Long](0).getOrElse(0L), h[Long](1).getOrElse(0L), dist(c),
+        h[Long](2), h[Long](3), h[Double](4), tops(c))
     }
-    val strings = strCols.map { c =>
-      StringProfile(c, gl(s"$c!n"), gl(s"$c!miss"), dist(c),
-        g[Long](s"$c!minlen"), g[Long](s"$c!maxlen"), g[Double](s"$c!avglen"),
-        tops(c))
-    }
-    val correlations = corrPairs.flatMap { case (a, b) =>
-      g[Double](s"$a!corr!$b").map(r => (a, b, r))
-    }
+    val correlations = pairsOf(numCols).zip(pearson(df, numCols.map(col)))
+      .flatMap { case ((a, b), r) => r.map(x => (a, b, x)) }
 
     // ---- pass 5: Spearman matrix (A10's second method) ---------------
     val spearman =
-      if (withSpearman && numCols.size >= 2) spearmanMatrix(df, numCols)
-      else Seq.empty
+      if (withSpearman) spearmanMatrix(df, numCols) else Seq.empty
     TableProfile(nRows, df.columns.length, nDup, numeric, strings,
       correlations, alerts(nRows, numeric, strings, correlations),
       spearman, df.columns.toSeq, missingPatterns, headRows, tailRows)

@@ -153,6 +153,11 @@ class PipelineSpec extends AnyFunSuite {
       assert(r.published.map(_.cols) === Seq(12, 8))
       r.published.foreach(f => assert(Files.exists(Paths.get(f.target)), f.target))
     }
+    // both reports profile the written CSVs: the mode must not reach a byte
+    parity.reportPaths.zip(scaled.reportPaths).foreach { case (a, b) =>
+      assert(Files.readAllBytes(Paths.get(a)).sameElements(Files.readAllBytes(Paths.get(b))),
+        s"$a and $b differ")
+    }
   }
 
   /** Field by field. Doubles agree to 1e-12 relative (NaN equals NaN):

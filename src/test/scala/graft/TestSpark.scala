@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -20,11 +21,11 @@ object TestSpark {
     * queries it ran on `s`. Query listeners are called from Spark's
     * asynchronous listener bus, so a marker query runs after `body` and
     * is awaited: once it arrives, every earlier query has been seen. */
-  def withOptimizedPlans[T](s: SparkSession)(body: => T): (T, Seq[String]) = {
-    val plans = new LinkedBlockingQueue[String]
+  def withOptimizedPlanTrees[T](s: SparkSession)(body: => T): (T, Seq[LogicalPlan]) = {
+    val plans = new LinkedBlockingQueue[LogicalPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        plans.add(qe.optimizedPlan.toString)
+        plans.add(qe.optimizedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val marker = "plan_capture_marker"
@@ -32,15 +33,21 @@ object TestSpark {
     try {
       val out = body
       s.sql(s"SELECT 1 AS $marker").collect()
-      val seen = Seq.newBuilder[String]
-      var last = ""
-      while (!last.contains(marker)) {
+      val seen = Seq.newBuilder[LogicalPlan]
+      var last: LogicalPlan = null
+      while (last == null || !last.output.exists(_.name == marker)) {
         last = plans.poll(60, TimeUnit.SECONDS)
         if (last == null) throw new IllegalStateException("query listener timed out")
         seen += last
       }
       (out, seen.result())
     } finally s.listenerManager.unregister(listener)
+  }
+
+  /** [[withOptimizedPlanTrees]] with each plan printed. */
+  def withOptimizedPlans[T](s: SparkSession)(body: => T): (T, Seq[String]) = {
+    val (out, plans) = withOptimizedPlanTrees(s)(body)
+    (out, plans.map(_.toString))
   }
 
   /** Runs `body` and returns its result with the number of queries it

@@ -16,8 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * together, by exactly one, on a text and on a multimodal loop. Also
   * the refusals the entry points make before any store moves, and the
   * takedown's replay rule and its subtraction of live docs only. sf0.01
-  * (the BudgetedTickSpec split); the takedown re-runs (one after a
-  * refused compaction) on sf0.001. */
+  * (the BudgetedTickSpec split); the takedown re-runs (after a refused
+  * compaction, after refused ticks) on sf0.001. */
 class TickAgreementSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.01"
@@ -295,23 +295,53 @@ class TickAgreementSpec extends AnyFunSuite {
     // a compaction between the failure and the re-run is refused: its
     // fold would drop the docs from the state before the census and mix
     // subtracted them
+    def refusedRun(l: Loop)(run: => Any): Unit = {
+      val before = (l.ticks(withMix = true), l.st.text.tombs.maxTick)
+      intercept[IllegalArgumentException](run)
+      assert((l.ticks(withMix = true), l.st.text.tombs.maxTick) === before,
+        "a refused run must move no store")
+    }
     val refused = run("refused") { (l, legs) =>
       failed(l, legs)
-      val before = (l.ticks(withMix = true), l.st.text.tombs.maxTick)
-      intercept[IllegalArgumentException](
-        IngestLoop.compactIfNeeded(l.st, 0L, legs))
-      assert((l.ticks(withMix = true), l.st.text.tombs.maxTick) === before,
-        "the refused compaction must move no store")
+      refusedRun(l)(IngestLoop.compactIfNeeded(l.st, 0L, legs))
       IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
       assert(IngestLoop.compactIfNeeded(l.st, 0L, legs) &&
         l.st.text.tombs.current().isEmpty,
         "once the takedown finished, the compaction folds and clears")
     }
+    // so is an ingest or re-judging tick: taking the takedown's tick, it
+    // would turn the re-run into a complete-replay no-op that never
+    // subtracts
+    val refusedTicks = run("refused_ticks") { (l, legs) =>
+      val st = l.st.asInstanceOf[IngestLoop.Stores]
+      failed(l, legs)
+      refusedRun(l)(IngestLoop.runTick(st, bat, w, legs = legs))
+      refusedRun(l)(IngestLoop.readjudicateTick(st, l.quar, w, legs = legs))
+      IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
+    }
     for ((what, r) <- Seq("re-run" -> rerun, "re-run after a refused " +
-        "compaction" -> refused)) {
+        "compaction" -> refused, "re-run after refused ticks" -> refusedTicks)) {
       assert(r._1 === clean._1, s"$what: the census must subtract exactly once")
       assert(r._2 === clean._2, s"$what: the mix must subtract exactly once")
       assert(r._3 === clean._3, s"$what: the stores must end at the clean tick")
     }
+  }
+
+  test("a takedown over fewer stores than the next tick is complete: the next tick redoes its tick") {
+    val root = Files.createTempDirectory("graft_agree_narrow").toString
+    val l = build(root, "narrow")
+    val w = weights
+    val st = l.st.asInstanceOf[IngestLoop.Stores]
+    val legs = IngestLoop.Legs(quar = Some(l.quar))
+    def ticks = (st.all ++ Seq(l.quar.rows, l.quar.resolvedIds)).map(_.maxTick)
+    IngestLoop.runTick(st, batch, w, legs = legs).collect()
+    // the takedown leaves the quarantine out: its stores stay a tick
+    // behind, and the tombstones retract their rows all the same
+    val k = IngestLoop.retractTick(st, takedownOf(l))
+    assert(ticks === Seq(3L, 3L, 3L, 2L, 2L) && st.tombs.maxTick === k,
+      s"precondition: the takedown moved only the text stores: $ticks")
+    IngestLoop.readjudicateTick(st, l.quar, w, legs = legs).collect()
+    assert(ticks.distinct === Seq(k),
+      s"the re-adjudication must redo the takedown's tick: $ticks")
   }
 }

@@ -71,6 +71,14 @@ class ProfilerSpec extends AnyFunSuite {
       finally spark.conf.unset(ApproxAboveThreshold.ThresholdKey)
     assert(approxPlans.exists(_.contains("percentile_approx")),
       "the forced valve must rewrite the profiler's percentiles")
+    val exactPct = """(^|[^_a-z])percentile\(""".r
+    approxPlans.foreach(p => assert(exactPct.findFirstIn(p).isEmpty,
+      "above the valve threshold no profile query may keep an exact percentile:\n" + p))
+    // the sketch's quantiles still come back as doubles
+    approx.numeric.foreach { n =>
+      val qs = Seq(n.q05, n.q25, n.median, n.q75, n.q95)
+      assert(qs.forall(_.exists(q => !q.isNaN)), s"${n.name}: $qs")
+    }
     val e = exact.numeric.find(_.name === "l_quantity").get
     val a = approx.numeric.find(_.name === "l_quantity").get
     assert(math.abs(e.median.get - a.median.get) <= 1.0) // quantities 1..50
@@ -213,6 +221,117 @@ class ProfilerSpec extends AnyFunSuite {
     assert(cRanks.size === 2 && cRanks((1L << 53) + 1) === cRanks(1L << 53) + 1.0, cRanks)
   }
 
+  test("long-form passes match a brute-force computation: NaN, ±Inf, constant and all-null columns") {
+    import spark.implicits._
+    val (tied, _) = tiedFrame(600)
+    val rnd = new scala.util.Random(11)
+    val rows = tied.zipWithIndex.map { case ((a, b, c, d), i) =>
+      (a, b, c, d,
+       if (i % 13 == 4) Double.NaN else rnd.nextInt(7) * 1.5,
+       if (i % 17 == 2) Double.PositiveInfinity
+       else if (i % 19 == 6) Double.NegativeInfinity else rnd.nextGaussian(),
+       2.5, Option.empty[Double])
+    }
+    val names = Seq("a", "b", "c", "d", "e", "f", "const", "nulls")
+    val bins = 10
+    val p = Profiler.profile(rows.toDF(names: _*), bins = bins)
+    val vals: Map[String, Seq[Option[Double]]] = names.zip(Seq(
+      rows.map(_._1), rows.map(_._2.map(_.toDouble)), rows.map(r => Some(r._3.toDouble)),
+      rows.map(r => Some(r._4)), rows.map(r => Some(r._5)), rows.map(r => Some(r._6)),
+      rows.map(r => Some(r._7)), rows.map(_._8))).toMap
+    // Spark orders doubles with NaN above everything
+    val ord = Ordering.Double.TotalOrdering
+    def same(g: Option[Double], w: Option[Double]): Boolean = (g, w) match {
+      case (Some(x), Some(y)) => x == y || (x.isNaN && y.isNaN) ||
+        math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(y))
+      case _ => g == w
+    }
+    // Spark's exact percentile: interpolate between the sorted values at
+    // floor/ceil of (n - 1) p unless those are equal
+    def quantile(s: Seq[Double], q: Double): Option[Double] =
+      if (s.isEmpty) None
+      else {
+        val pos = (s.size - 1) * q
+        val (lo, hi) = (pos.floor.toInt, pos.ceil.toInt)
+        if (lo == hi || s(lo).equals(s(hi))) Some(s(lo))
+        else Some((hi - pos) * s(lo) + (pos - lo) * s(hi))
+      }
+    def pearson(x: Seq[Option[Double]], y: Seq[Option[Double]]): Option[Double] = {
+      val xy = x.zip(y).collect { case (Some(u), Some(v)) => (u, v) }
+      if (xy.size < 2) None
+      else {
+        val (mx, my) = (xy.map(_._1).sum / xy.size, xy.map(_._2).sum / xy.size)
+        val sxy = xy.map { case (u, v) => (u - mx) * (v - my) }.sum
+        val sxx = xy.map { case (u, _) => (u - mx) * (u - mx) }.sum
+        val syy = xy.map { case (_, v) => (v - my) * (v - my) }.sum
+        // corr divides as SQL does: a zero denominator (a constant
+        // column) is null, not NaN
+        val den = math.sqrt(sxx * syy)
+        if (den == 0.0) None else Some(sxy / den)
+      }
+    }
+    assert(p.numeric.map(_.name) === names)
+    p.numeric.foreach { n =>
+      val xs = vals(n.name).flatten
+      val s = xs.sorted(ord)
+      val mean = if (xs.isEmpty) None else Some(xs.sum / xs.size)
+      val std = mean.filter(_ => xs.size > 1).map(m =>
+        math.sqrt(xs.map(x => (x - m) * (x - m)).sum / (xs.size - 1)))
+      def check[T](what: String, got: T, want: T): Unit =
+        assert(got === want, s"${n.name} $what")
+      def checkD(what: String, got: Option[Double], want: Option[Double]): Unit =
+        assert(same(got, want), s"${n.name} $what: got $got want $want")
+      check("count", n.nNonNull, xs.size.toLong)
+      check("missing", n.nMissing, (rows.size - xs.size).toLong)
+      check("zeros", n.nZeros, xs.count(_ == 0.0).toLong)
+      check("negatives", n.nNegative, xs.count(_ < 0.0).toLong)
+      check("infinities", n.nInfinite, xs.count(x => x.isNaN || x.isInfinite).toLong)
+      checkD("mean", n.mean, mean)
+      checkD("min", n.min, s.headOption)
+      checkD("max", n.max, s.lastOption)
+      checkD("std", n.std, std)
+      Seq(0.05 -> n.q05, 0.25 -> n.q25, 0.5 -> n.median, 0.75 -> n.q75, 0.95 -> n.q95)
+        .foreach { case (q, got) => checkD(s"q$q", got, quantile(s, q)) }
+      // bins over [min, max] when max > min; NaN never compares above
+      val want = (s.headOption, s.lastOption) match {
+        case (Some(lo), Some(hi)) if hi > lo =>
+          val w = (hi - lo) / bins
+          val at = xs.map(x => math.min(math.floor((x - lo) / w).toLong, bins - 1L))
+          (0 until bins).map(b => (lo + b * w, lo + (b + 1) * w, at.count(_ == b).toLong))
+        case _ => Seq.empty
+      }
+      check("histogram size", n.histogram.size, want.size)
+      n.histogram.zip(want).foreach { case ((l, h, k), (wl, wh, wk)) =>
+        checkD("bin low", Some(l), Some(wl))
+        checkD("bin high", Some(h), Some(wh))
+        assert(k === wk, s"${n.name} bin count: ${n.histogram} != $want")
+      }
+    }
+    // the NaN column and the constant one lose their histograms
+    assert(p.numeric.filter(_.histogram.isEmpty).map(_.name) === Seq("e", "const", "nulls"))
+    val pairs = for { (x, i) <- names.zipWithIndex; y <- names.drop(i + 1) } yield (x, y)
+    val want = pairs.flatMap { case (x, y) => pearson(vals(x), vals(y)).map(r => (x, y, r)) }
+    assert(p.correlations.map(c => (c._1, c._2)) === want.map(c => (c._1, c._2)),
+      "every pair but the all-null and constant column's with finite columns")
+    p.correlations.zip(want).foreach { case ((x, y, r), (_, _, w)) =>
+      assert(same(Some(r), Some(w)), s"$x~$y: got $r want $w")
+    }
+  }
+
+  test("a 0-row frame with numeric and string columns profiles to the empty profile") {
+    import spark.implicits._
+    val df = Seq.empty[(Option[Double], Option[Long], Option[String])].toDF("x", "n", "s")
+    val p = Profiler.profile(df)
+    def num(name: String, dtype: String) = NumericProfile(name, dtype, 0L, 0L, 0L,
+      0L, 0L, 0L, None, None, None, None, None, None, None, None, None, None, None, Seq.empty)
+    assert(p.copy(spearman = Seq.empty) === TableProfile(0L, 3, 0L,
+      Seq(num("x", "double"), num("n", "bigint")),
+      Seq(StringProfile("s", 0L, 0L, 0L, None, None, None, Seq.empty)),
+      Seq.empty, Seq.empty, Seq.empty, Seq("x", "n", "s"), Seq.empty, Seq.empty, Seq.empty))
+    assert(p.spearman.map(c => (c._1, c._2)) === Seq(("x", "n")) && p.spearman.head._3.isNaN,
+      p.spearman)
+  }
+
   /** The tied frame with 9 numeric columns, and with 3 of them. */
   private def nineAndThree = {
     import org.apache.spark.sql.functions.col
@@ -231,6 +350,30 @@ class ProfilerSpec extends AnyFunSuite {
     val (_, n3) = TestSpark.withQueryCount(spark)(Profiler.profile(three))
     val (_, n9) = TestSpark.withQueryCount(spark)(Profiler.profile(nine))
     assert(n9 === n3, "profile queries grew with the numeric column count")
+  }
+
+  test("every percentile and corr sits in a long-form aggregate, and each long-form aggregate is as wide for 9 numeric columns as for 3") {
+    // the long-form aggregates (pass 1's statistics, pass 2's histograms,
+    // the Pearson kernel, the rank table) group by the melt index `k` and
+    // hold their aggregates once. Two aggregates still grow with the
+    // numeric columns and are not pinned here: pass 1b (one distinct
+    // count per column) and Spearman's regroup (one rank per column).
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    def aggs(plans: Seq[LogicalPlan]): Seq[Aggregate] =
+      plans.flatMap(_.collect { case a: Aggregate => a })
+    def longForm(a: Aggregate): Boolean = a.output.exists(_.name == "k")
+    def fns(a: Aggregate): Seq[String] = a.aggregateExpressions.flatMap(
+      _.collect { case e: AggregateExpression => e.aggregateFunction.prettyName })
+    def widths(plans: Seq[LogicalPlan]): Seq[Int] =
+      aggs(plans).filter(longForm).map(fns(_).size).sorted
+    val (nine, three) = nineAndThree
+    val (_, p3) = TestSpark.withOptimizedPlanTrees(spark)(Profiler.profile(three))
+    val (_, p9) = TestSpark.withOptimizedPlanTrees(spark)(Profiler.profile(nine))
+    for (a <- aggs(p9) if fns(a).exists(Set("percentile", "corr")))
+      assert(longForm(a), "a percentile or corr outside the long form:\n" + a)
+    assert(widths(p9) === widths(p3),
+      "a long-form profile aggregate grew with the numeric column count")
   }
 
   test("Spearman's Spark job count for 9 numeric columns equals that for 3") {
