@@ -178,7 +178,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - q118_multimodal_admission: the UNIFIED multimodal tick — one
   *                         verdict per text+image+audio doc, precedence
   *                         exact → fuzzy → image → audio → low_quality
-  *                         → new (deployment form: io.IngestLoop.runMmTick)
+  *                         → new (deployment form:
+  *                         io.IngestLoop.runTick on MmStores)
   *  - q119_tokenizer_retrain: q115's consumer — retrain BPE merges on
   *                         the post-tick snapshot, canary-gate the
   *                         choice (token savings), re-tokenize tick 2
@@ -240,7 +241,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                         filtered to survivors — including the sig
   *                         chains' hot-bucket censuses — in one WITH
   *                         clause (store form: retractTick on the
-  *                         shared tombstone store + runMmTick)
+  *                         shared tombstone store + runTick)
   *  - q127_mixture_rebalance: the MIXTURE maintenance loop — the
   *                         q109/q113 measurement→choice→consequence
   *                         discipline for the domain mix: per-source
@@ -321,7 +322,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                         filtering is not equivalent — a gated
   *                         bucket can open); original class ×
   *                         re-adjudicated verdict per source (store
-  *                         form: IngestLoop.readjudicateMmTick — mm
+  *                         form: IngestLoop.readjudicateTick on
+  *                         MmStores — mm
   *                         quarantine rows carry the 8-byte
   *                         signatures, so re-judgment reads no
   *                         payloads)

@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.multimodal.Multimodal
 import graft.operators.Fuzzy
 
 /** The semantic-leg and eval-leg operation groups of
@@ -182,10 +183,8 @@ trait IngestLegOps { self: IngestLoop.type =>
       graft.operators.Contamination.grams(evalDocs, leg.n))
     leg.bands.appendTickAt(1, Fuzzy.corpusBandState(evalDocs))
     leg.shingles.appendTickAt(1, Fuzzy.corpusShingleHashes(evalDocs))
-    leg.imgSigs.foreach(_.appendTickAt(1,
-      graft.multimodal.Multimodal.imageSigs(evalDocs)))
-    leg.audSigs.foreach(_.appendTickAt(1,
-      graft.multimodal.Multimodal.audioSigs(evalDocs)))
+    leg.imgSigs.foreach(_.appendTickAt(1, Multimodal.imageSigs(evalDocs)))
+    leg.audSigs.foreach(_.appendTickAt(1, Multimodal.audioSigs(evalDocs)))
   }
 
   /** An [[EvalLeg]] with the q140 MODALITY channels attached — for a
@@ -196,36 +195,23 @@ trait IngestLegOps { self: IngestLoop.type =>
     * leaks the eval set"). */
   def mmEvalLeg(spark: SparkSession, root: String, name: String,
                 n: Int = graft.operators.Decontam.DefaultN,
-                threshold: Double = 0.2,
-                maxDist: Int = 10, maxBand: Int = 64): EvalLeg =
+                threshold: Double = 0.2): EvalLeg =
     evalLeg(spark, root, name, n, threshold).copy(
       imgSigs = Some(
         ArtifactStore.ingestState(spark, root, s"$name/eval_img_sigs")),
       audSigs = Some(
-        ArtifactStore.ingestState(spark, root, s"$name/eval_aud_sigs")),
-      maxDist = maxDist, maxBand = maxBand)
+        ArtifactStore.ingestState(spark, root, s"$name/eval_aud_sigs")))
 
-  /** Batch ids contaminated by the LIVE eval set's MEDIA — the q140
-    * channels: a batch doc's perceptual signature popcount-matches a
-    * live eval item's (withdrawals resolve through the shared eval
-    * tombstones; the sig rows are eval-id keyed). `batchISigs` /
-    * `batchASigs` are the batch's (doc_id, sig) relations, derived
-    * once at the tick's codec seam. */
-  private[io] def mmContamFlags(leg: EvalLeg, batchISigs: DataFrame,
-                            batchASigs: DataFrame): Seq[DataFrame] = {
-    def hits(store: Option[ArtifactStore.IngestStateStore],
-             sigs: DataFrame): Option[DataFrame] =
-      store.map(s => graft.multimodal.Multimodal.flaggedAgainstState(
-          leg.lineage.resolve(s.current().getOrElse(
-            sys.error("mm eval leg not bootstrapped: no sig base"))),
-          sigs.filter(col("sig").isNotNull), leg.maxDist, leg.maxBand)
-        .select(col("fid").as("cid")))
-    (hits(leg.imgSigs, batchISigs) ++ hits(leg.audSigs, batchASigs)).toSeq
-  }
-
-  /** Batch ids contaminated by the LIVE eval set, both channels —
-    * verbatim gram hits + verified fuzzy near-dups (the q136 rule). */
-  private[graft] def contamFlags(leg: EvalLeg, batchDocs: DataFrame): DataFrame = {
+  /** Batch ids contaminated by the LIVE eval set — the q136 rule's two
+    * text channels (verbatim gram hits + verified fuzzy near-dups) and,
+    * per modality of `sigs` (with the docs' (doc_id, sig) relation)
+    * whose rung the leg holds eval media for, the q140 channel: a
+    * signature popcount-matching a live eval item's. Withdrawals
+    * resolve through the eval tombstones (the sig rows are eval-id
+    * keyed). */
+  private[graft] def contamFlags(leg: EvalLeg, batchDocs: DataFrame,
+                                 sigs: Seq[(Modality, DataFrame)])
+      : DataFrame = {
     val vb = graft.operators.Contamination.grams(batchDocs, leg.n)
       .join(leg.lineage.resolve(leg.grams.current().getOrElse(
           sys.error("eval leg not bootstrapped: no gram base")))
@@ -236,7 +222,16 @@ trait IngestLegOps { self: IngestLoop.type =>
         leg.lineage.resolve(leg.shingles.current().get),
         batchDocs, leg.threshold)
       .select(col("eval_id").as("doc_id"))
-    vb.union(fz).distinct().select(col("doc_id").as("cid"))
+    val media = sigs.flatMap { case (m, s) =>
+      leg.sigsOf(m.rung).map(store => Multimodal.flaggedAgainstState(
+          leg.lineage.resolve(store.current().getOrElse(
+            sys.error("mm eval leg not bootstrapped: no sig base"))),
+          s.filter(col("sig").isNotNull), Multimodal.MaxDist,
+          Multimodal.MaxBand)
+        .select(col("fid").as("doc_id")))
+    }
+    (vb +: fz +: media).reduce(_ union _).distinct()
+      .select(col("doc_id").as("cid"))
   }
 
   /** EVAL-SET UPDATE — a quiesce-point operation (like a takedown or a
@@ -250,8 +245,16 @@ trait IngestLegOps { self: IngestLoop.type =>
     * caught doc ids (severed): the deployment passes them to
     * [[retractTick]] (the measured choice) and then re-adjudicates the
     * quarantine with the leg attached (withdrawals re-open past
-    * contamination verdicts — the other direction). */
-  def evalUpdateTick(st: Stores, leg: EvalLeg, addDocs: DataFrame,
+    * contamination verdicts — the other direction).
+    *
+    * Per modality of `st` whose rung the leg holds eval media for (the
+    * q140 leg on a multimodal loop), the eval-side signature store
+    * advances with the same update id (appended last, so it can only
+    * lag), and the retro-catch also probes the loop's MAINTAINED doc
+    * signature store against the added items' signatures — an
+    * already-ingested doc whose image renders a newly-held-out eval
+    * image is caught with zero payload re-reads. */
+  def evalUpdateTick(st: StoreSet, leg: EvalLeg, addDocs: DataFrame,
                      withdrawIds: DataFrame,
                      updateId: Long = -1L): DataFrame = {
     val u = if (updateId > 0) updateId else evalTickOf(leg)
@@ -260,49 +263,28 @@ trait IngestLegOps { self: IngestLoop.type =>
       graft.operators.Contamination.grams(addDocs, leg.n))
     leg.bands.appendTickAt(u, Fuzzy.corpusBandState(addDocs))
     leg.shingles.appendTickAt(u, Fuzzy.corpusShingleHashes(addDocs))
-    val vb = st.lineage.resolve(leg.docGrams.current().getOrElse(
+    val media = st.modalities.flatMap(m => leg.sigsOf(m.rung).map(m -> _))
+    val addSigs = media.zip(graft.operators.Materialize.par(
+      media.map(_._1.derive(addDocs))))
+    addSigs.foreach { case ((_, store), a) => store.appendTickAt(u, a) }
+    val lineage = st.text.lineage
+    val vb = lineage.resolve(leg.docGrams.current().getOrElse(
         sys.error("eval leg not bootstrapped: no docGrams base")))
       .join(graft.operators.Contamination.grams(addDocs, leg.n)
         .select("h"), Seq("h"), "left_semi")
       .select("doc_id")
     val fz = Fuzzy.lshPairsAgainstState(
-        st.lineage.resolve(st.bands.current().get),
-        st.lineage.resolve(st.shingles.current().get),
+        lineage.resolve(st.text.bands.current().get),
+        lineage.resolve(st.text.shingles.current().get),
         addDocs, leg.threshold)
       .select(col("train_id").as("doc_id"))
-    vb.union(fz).distinct().localCheckpoint()
-  }
-
-  /** [[evalUpdateTick]] for a MULTIMODAL loop with a q140 leg: the
-    * eval-side MEDIA signature stores advance with the same update id
-    * (added items' image/audio signatures append; withdrawals ride the
-    * shared eval tombstones — sig rows are eval-id keyed), and the
-    * retro-catch additionally probes the loop's MAINTAINED doc
-    * signature stores against the added items' signatures — an
-    * already-ingested doc whose image renders a newly-held-out eval
-    * image is caught with zero payload re-reads, exactly like the gram
-    * channel. Returns the union of all channels' caught doc ids
-    * (severed), for [[retractTick]]. */
-  def evalUpdateMmTick(st: MmStores, leg: EvalLeg, addDocs: DataFrame,
-                       withdrawIds: DataFrame,
-                       updateId: Long = -1L): DataFrame = {
-    import graft.multimodal.Multimodal
-    val u = if (updateId > 0) updateId else evalTickOf(leg)
-    val textCaught = evalUpdateTick(st.text, leg, addDocs, withdrawIds, u)
-    val (addISigs, addASigs) = graft.operators.Materialize.par2(
-      Multimodal.imageSigs(addDocs), Multimodal.audioSigs(addDocs))
-    leg.imgSigs.foreach(_.appendTickAt(u, addISigs))
-    leg.audSigs.foreach(_.appendTickAt(u, addASigs))
-    def caught(store: Option[ArtifactStore.IngestStateStore],
-               addSigs: DataFrame,
-               docSigs: ArtifactStore.IngestStateStore): Option[DataFrame] =
-      store.map(_ => Multimodal.flaggedAgainstState(
-          addSigs, st.text.lineage.resolve(docSigs.current().get),
-          leg.maxDist, leg.maxBand)
-        .select(col("fid").as("doc_id")))
-    (Seq(textCaught) ++ caught(leg.imgSigs, addISigs, st.imgSigs) ++
-      caught(leg.audSigs, addASigs, st.audSigs))
-      .reduce(_ union _).distinct().localCheckpoint()
+    val caught = addSigs.map { case ((m, _), a) =>
+      Multimodal.flaggedAgainstState(a,
+          lineage.resolve(m.sigs.current().get),
+          Multimodal.MaxDist, Multimodal.MaxBand)
+        .select(col("fid").as("doc_id"))
+    }
+    (vb +: fz +: caught).reduce(_ union _).distinct().localCheckpoint()
   }
 
   /** The id an eval update without an explicit `updateId` runs at,

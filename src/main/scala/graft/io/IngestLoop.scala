@@ -3,7 +3,8 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Fuzzy, Provenance, QualityModel}
+import graft.multimodal.Multimodal
+import graft.operators.{Fuzzy, Materialize, Provenance, QualityModel}
 import graft.operators.Provenance.Evidence
 
 /** The DEPLOYMENT form of the multi-tick ingest loop (q106,
@@ -45,12 +46,16 @@ import graft.operators.Provenance.Evidence
   * ONE [[Legs]] VALUE PER DEPLOYMENT: a deployment builds the legs it
   * attaches beyond the dedup stores once and passes that same value as
   * `legs` to every entry point — each tick kind (ingest, budgeted,
-  * re-adjudication, re-gate, their multimodal forms), the takedown
-  * ([[retractTick]]), maintenance ([[compactIfNeeded]], [[quiesce]])
-  * and the streaming folds. No entry point takes a leg of its own, so
-  * no step can run with a subset of the stores its neighbours advance.
-  * The text entry points take a [[StoreSet]], so one entry point serves
-  * a text and a multimodal loop.
+  * re-adjudication, re-gate), the takedown ([[retractTick]]),
+  * maintenance ([[compactIfNeeded]], [[quiesce]]) and the streaming
+  * folds. No entry point takes a leg of its own, so no step can run
+  * with a subset of the stores its neighbours advance.
+  *
+  * ONE [[StoreSet]] SHAPE FOR BOTH LOOPS: a multimodal loop is a text
+  * loop with two [[Modality]]s (image, audio). Every entry point takes
+  * a [[StoreSet]] and walks its modality list — each modality adds its
+  * ladder rung, its signature fold-back and its quarantine column — so
+  * one body serves a text loop (`Nil`) and a multimodal one.
   *
   * One tick = agreement → judge → [[foldAdmitted]]: fix the tick from
   * the one store list every attached store shares ([[Legs]]`.tick`,
@@ -60,7 +65,7 @@ import graft.operators.Provenance.Evidence
   * the one fold-back. Compaction, quiesce and takedowns walk the one
   * tombstone lineage ([[Legs]]`.lineage`).
   */
-object IngestLoop extends IngestLegOps with IngestMmOps {
+object IngestLoop extends IngestLegOps {
 
   /** The state stores of one named ingest loop: three doc-keyed data
     * stores plus the RETRACTION tombstone store (r10 verdict item 1 —
@@ -86,8 +91,10 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     def lineage: ArtifactStore.Lineage = ArtifactStore.Lineage(tombs, "doc_id")
     private[io] def all: Seq[ArtifactStore.IngestStateStore] =
       Seq(hashes, bands, shingles)
-    private[io] def sigCols: Seq[(ArtifactStore.IngestStateStore, String)] =
-      Nil
+    private[graft] def modalities: Seq[Modality] = Nil
+    type Self = Stores
+    private[io] def under(spark: SparkSession, root: String,
+                          name: String): Stores = stores(spark, root, name)
   }
 
   /** The store bundle of a multimodal ingest loop: the text [[Stores]]
@@ -99,20 +106,45 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                             audSigs: ArtifactStore.IngestStateStore)
       extends StoreSet {
     private[io] def all: Seq[ArtifactStore.IngestStateStore] =
-      text.all ++ Seq(imgSigs, audSigs)
-    private[io] def sigCols: Seq[(ArtifactStore.IngestStateStore, String)] =
-      Seq(imgSigs -> "img_sig", audSigs -> "aud_sig")
+      text.all ++ modalities.map(_.sigs)
+    private[graft] def modalities: Seq[Modality] = Seq(
+      Modality(imgSigs, Evidence.Image, "img_sig", Multimodal.imageSigs),
+      Modality(audSigs, Evidence.Audio, "aud_sig", Multimodal.audioSigs))
+    type Self = MmStores
+    private[io] def under(spark: SparkSession, root: String,
+                          name: String): MmStores = mmStores(spark, root, name)
   }
 
-  /** The one store shape the shared entry points take: `text` (the
-    * dedup stores and the tombstones every read resolves through), the
-    * `all` core stores a tick advances, and each modality sig store
-    * paired with the mm quarantine column carrying the doc's STORED
-    * signature (`Nil` for a text loop). */
+  /** One modality of a loop: its doc signature store (doc_id, sig), its
+    * ladder rung, the quarantine column that carries a rejected doc's
+    * STORED signature (so a re-judgment never re-reads payloads), and
+    * the codec-seam derivation of a doc frame's signatures. */
+  private[graft] final case class Modality(
+      sigs: ArtifactStore.IngestStateStore, rung: Evidence, quarCol: String,
+      derive: DataFrame => DataFrame) {
+    /** The ids of `batchSigs` whose signature matches a doc in this
+      * modality's state as of tick `upTo`, read through `lineage`, as
+      * the rung's flag column. */
+    private[graft] def flagged(lineage: ArtifactStore.Lineage, upTo: Long,
+                               batchSigs: DataFrame): DataFrame =
+      Multimodal.flaggedAgainstState(
+          lineage.resolve(sigs.currentUpTo(upTo).get), batchSigs,
+          Multimodal.MaxDist, Multimodal.MaxBand)
+        .select(col("fid").as(rung.flag))
+  }
+
+  /** The one store shape every entry point takes: `text` (the dedup
+    * stores and the tombstones every read resolves through), the `all`
+    * core stores a tick advances, and the loop's `modalities` (`Nil`
+    * for a text loop, image and audio for a multimodal one). `under`
+    * names a fresh bundle of the same shape. */
   sealed trait StoreSet {
+    type Self <: StoreSet
     def text: Stores
     private[io] def all: Seq[ArtifactStore.IngestStateStore]
-    private[io] def sigCols: Seq[(ArtifactStore.IngestStateStore, String)]
+    private[graft] def modalities: Seq[Modality]
+    private[io] def under(spark: SparkSession, root: String,
+                          name: String): Self
   }
 
   def stores(spark: SparkSession, root: String, name: String): Stores =
@@ -122,6 +154,11 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       ArtifactStore.ingestState(spark, root, s"$name/shingles"),
       ArtifactStore.ingestState(spark, root, s"$name/tombs"))
 
+  def mmStores(spark: SparkSession, root: String, name: String): MmStores =
+    MmStores(stores(spark, root, name),
+      ArtifactStore.ingestState(spark, root, s"$name/img_sigs"),
+      ArtifactStore.ingestState(spark, root, s"$name/aud_sigs"))
+
   /** Seed the loop's state from the existing corpus — tick 1 in each
     * store, written IDEMPOTENTLY (`appendTickAt(1)`): a bootstrap that
     * crashed between the per-store writes is simply re-run and
@@ -129,11 +166,13 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * here would instead add a SECOND copy of the corpus state, whose
     * duplicate rows break the ≤1-match state join and inflate fuzzy
     * intersection counts (the review-found hazard). The only
-    * corpus-text scan the loop ever performs. */
-  def bootstrap(st: Stores, corpusDocs: DataFrame): Unit = {
-    st.hashes.appendTickAt(1, Provenance.corpusDocHashes(corpusDocs))
-    st.bands.appendTickAt(1, Fuzzy.corpusBandState(corpusDocs))
-    st.shingles.appendTickAt(1, Fuzzy.corpusShingleHashes(corpusDocs))
+    * corpus-text scan the loop ever performs; each modality's payloads
+    * are decoded once at the codec seam. */
+  def bootstrap(st: StoreSet, corpusDocs: DataFrame): Unit = {
+    st.text.hashes.appendTickAt(1, Provenance.corpusDocHashes(corpusDocs))
+    st.text.bands.appendTickAt(1, Fuzzy.corpusBandState(corpusDocs))
+    st.text.shingles.appendTickAt(1, Fuzzy.corpusShingleHashes(corpusDocs))
+    st.modalities.foreach(m => m.sigs.appendTickAt(1, m.derive(corpusDocs)))
   }
 
   /** RETRACT ingested documents (takedowns: copyright, post-admission
@@ -225,36 +264,25 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
 
   /** Roll the loop into a FRESH store generation at a stream restart
     * boundary — the executable form of the streaming takedown
-    * discipline ([[graft.streaming.DocStream.foldingMmAdmissionQuery]]'s
+    * discipline ([[graft.streaming.DocStream.foldingGatedAdmissionQuery]]'s
     * scaladoc): a Structured Streaming query restarted with a fresh
     * checkpoint resets micro-batch ids to 0, so its batch-id-keyed fold
     * ticks would COLLIDE with the previous run's; and the exact-hash
     * layer seeds from `corpusHashes` only at first start, so a takedown
     * of exact content needs a re-seed anyway. `rollover` snapshots the
     * old stores' RESOLVED state (tombstones baked in — one read per
-    * store, no text) as tick 1 of a new store generation: the new run
-    * folds from tick 2 up with no collisions, seeds its exact layer
-    * from the new `hashes` tick-1 state, and every retracted doc's rows
-    * are physically absent from the rolled state. DocStreamSpec pins
-    * the full boundary flow: run → quiesce takedown → rollover → run,
-    * with the retracted doc's exact copy and near-dup both re-admitted
-    * and a surviving doc's duplicate still rejected. */
-  def rollover(st: Stores, spark: SparkSession, root: String,
-               name: String): Stores = {
-    val next = stores(spark, root, name)
-    next.all.zip(st.all).foreach { case (n, s) =>
-      n.appendTickAt(1, st.lineage.resolve(s.current().get)) }
-    next
-  }
-
-  /** [[rollover]] for a MULTIMODAL bundle: all five stores' RESOLVED
-    * state (shared tombstones baked in) re-seeds as tick 1 of a fresh
-    * generation — the restart boundary the mm stream's takedown
-    * discipline runs at (DocStreamSpec pins the full mm boundary flow
-    * including the quarantine recovery). */
-  def rolloverMm(st: MmStores, spark: SparkSession, root: String,
-                 name: String): MmStores = {
-    val next = mmStores(spark, root, name)
+    * store, no text; on a multimodal loop the sig stores too) as tick 1
+    * of a new store generation of the same shape: the new run folds
+    * from tick 2 up with no collisions, seeds its exact layer from the
+    * new `hashes` tick-1 state, and every retracted doc's rows are
+    * physically absent from the rolled state. DocStreamSpec pins the
+    * full boundary flow: run → quiesce takedown → rollover → run, with
+    * the retracted doc's exact copy and near-dup both re-admitted and a
+    * surviving doc's duplicate still rejected (and, multimodal, the
+    * quarantine recovery). */
+  def rollover(st: StoreSet, spark: SparkSession, root: String,
+               name: String): st.Self = {
+    val next = st.under(spark, root, name)
     next.all.zip(st.all).foreach { case (n, s) =>
       n.appendTickAt(1, st.text.lineage.resolve(s.current().get)) }
     next
@@ -308,8 +336,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
       imgSigs = leg.imgSigs.map(_ =>
         ArtifactStore.ingestState(spark, root, s"$name/eval_img_sigs")),
       audSigs = leg.audSigs.map(_ =>
-        ArtifactStore.ingestState(spark, root, s"$name/eval_aud_sigs")),
-      maxDist = leg.maxDist, maxBand = leg.maxBand)
+        ArtifactStore.ingestState(spark, root, s"$name/eval_aud_sigs")))
     next.docGrams.appendTickAt(1,
       st.lineage.resolve(leg.docGrams.current().get))
     next.data.zip(leg.data).foreach { case (n, s) =>
@@ -693,8 +720,8 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
 
   /** The MULTIMODAL quarantine's tick-1 base — the mm row layout
     * additionally carries the doc's 8-byte image/audio signatures
-    * ([[runMmTick]]'s quarantine leg), and every tick of one store
-    * must share a schema. */
+    * ([[runTick]]'s quarantine leg on [[MmStores]]), and every tick of
+    * one store must share a schema. */
   def bootstrapMmQuarantine(quar: Quarantine, corpusDocs: DataFrame): Unit = {
     quar.rows.appendTickAt(1, corpusDocs
       .select(col("doc_id"), col("source"), col("text"),
@@ -777,12 +804,18 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                            imgSigs: Option[ArtifactStore.IngestStateStore]
                              = None,
                            audSigs: Option[ArtifactStore.IngestStateStore]
-                             = None,
-                           maxDist: Int = 10, maxBand: Int = 64) {
+                             = None) {
     /** The eval-side data stores — everything the eval tombstones
       * retract from, and the stores an eval update advances. */
     def data: Seq[ArtifactStore.IngestStateStore] =
       Seq(grams, bands, shingles) ++ imgSigs ++ audSigs
+
+    /** The eval media signature store of a loop modality's rung. */
+    private[graft] def sigsOf(rung: Evidence)
+        : Option[ArtifactStore.IngestStateStore] =
+      if (rung == Evidence.Image) imgSigs
+      else if (rung == Evidence.Audio) audSigs
+      else None
 
     /** The eval withdrawal lineage (eval ids — a lineage of its own). */
     def lineage: ArtifactStore.Lineage = ArtifactStore.Lineage(tombs, "doc_id")
@@ -928,27 +961,47 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * the gram census, the served IVF-PQ codes, the packed export epoch
     * and the domain mix — so no store can disagree about what was
     * ingested, and every one of them takes part in the tick agreement
-    * (IngestLoopSpec pins the consumer legs and the replay). */
-  def runTick(st: Stores, batchDocs: DataFrame, w: Seq[Double],
+    * (IngestLoopSpec pins the consumer legs and the replay).
+    *
+    * On a MULTIMODAL loop ([[MmStores]]) this is the deployment form of
+    * [[graft.multimodal.Multimodal.q118MultimodalAdmission]]: the batch
+    * is judged once across all modalities (precedence exact text →
+    * fuzzy text → image sig → audio sig → low_quality → new) against
+    * the accumulated five-store state, and ONLY admitted docs fold back
+    * into every store — so tick N+1 rejects an image/audio near-dup of
+    * what tick N admitted (MmIngestSpec pins the fold-back per modality
+    * and the replay across a crash between any per-store writes). The
+    * batch signatures derive once at the codec seam; an mm quarantine
+    * row carries them, so a re-adjudication re-judges the modality
+    * rungs without re-reading payloads, and an attached eval leg's
+    * media stores (q140) add their channels to `contaminated`. A curate
+    * leg is refused: the modality folds serve the raw admitted text. */
+  def runTick(st: StoreSet, batchDocs: DataFrame, w: Seq[Double],
               threshold: Double = 0.2, lowFrac: Double = 0.25,
               legs: Legs = Legs()): DataFrame =
     runTickImpl(st, batchDocs, w, threshold, lowFrac, None, legs)
 
-  private def runTickImpl(st: Stores, batchDocs: DataFrame, w: Seq[Double],
+  private def runTickImpl(st: StoreSet, batchDocs: DataFrame, w: Seq[Double],
                           threshold: Double, lowFrac: Double,
                           quota: Option[QuotaLeg], legs: Legs): DataFrame = {
+    refuseCurate(st, legs)
     val t = legs.tick(st)
     // every state read resolves through the tombstone store: retracted
     // docs' rows are invisible whether or not a compaction folded them
-    val (state, fuzzy) = textEvidence(st, t, batchDocs, threshold)
+    val (state, fuzzy) = textEvidence(st.text, t, batchDocs, threshold)
+    // batch signatures derive map-side at the codec seam; severed — the
+    // flag chain reads each twice and the fold-back a third time
+    val sigs = batchSigs(st, batchDocs)
     // the q103/q106 kernel over the ladder of the attached legs (q135
-    // semantic, q136 contamination); the returned frame is
-    // checkpointed, so the fold-back writes and the report never re-run
-    // the chain
+    // semantic, q136 contamination) and the loop's modalities; the
+    // returned frame is checkpointed, so the fold-back writes and the
+    // report never re-run the chain
     val flags = Seq(Evidence.Fuzzy -> fuzzy) ++
       legs.sem.map(leg => Evidence.Semantic ->
-        semFlags(st, leg, t, batchDocs.select("doc_id"))) ++
-      legs.eval.map(leg => Evidence.Contaminated -> contamFlags(leg, batchDocs))
+        semFlags(st.text, leg, t, batchDocs.select("doc_id"))) ++
+      legs.eval.map(leg => Evidence.Contaminated ->
+        contamFlags(leg, batchDocs, sigs)) ++
+      sigs.map { case (m, s) => m.rung -> m.flagged(st.text.lineage, t - 1, s) }
     val ladder = Provenance.ladder(flags.map(_._1): _*)
     val v = Provenance.gatedTickFrame(batchDocs, state, flags, w, lowFrac)
     // the admitted set: every novel doc — or, on a BUDGETED tick
@@ -972,20 +1025,22 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     // transformed text; the dedup stores keep folding RAW evidence
     // (two-column provenance)
     val curRows = legs.curate.map(curatedRows(_, t, admDocs, batchDocs))
-    foldAdmitted(t, st, v.join(admIds, Seq("doc_id"), "left_semi")
+    foldAdmitted(t, st.text, v.join(admIds, Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("h").as("ch")), admIds, admDocs,
       curRows.map(_.select("doc_id", "source", "text")).getOrElse(admDocs),
-      Nil, legs)
+      sigs.map { case (m, s) =>
+        m.sigs -> s.join(admIds, Seq("doc_id"), "left_semi") },
+      legs)
     // QUARANTINE leg (q131): evidence/quality rejections are held
-    // re-judgeable; over-budget docs are NOT quarantined (rate-limited,
-    // not rejected on evidence — see QuotaLeg). resolvedIds appends an
-    // empty frame so both quarantine stores stay in the tick agreement.
+    // re-judgeable, with their batch signatures on a multimodal loop;
+    // over-budget docs are NOT quarantined (rate-limited, not rejected
+    // on evidence — see QuotaLeg). resolvedIds appends an empty frame
+    // so both quarantine stores stay in the tick agreement.
     legs.quar.foreach { qs =>
       val rej = v.filter(!Provenance.novel(ladder) || col("lq") === true)
         .withColumn("verdict", Provenance.verdictOf(ladder))
         .join(batchDocs.select("doc_id", "text"), "doc_id")
-        .select("doc_id", "source", "text", "verdict")
-      qs.rows.appendTickAt(t, rej)
+      qs.rows.appendTickAt(t, quarantineLayout(rej, sigs))
       qs.resolvedIds.appendTickAt(t, admIds.limit(0))
     }
     appendReplay(legs, t, v, batchDocs)
@@ -1004,6 +1059,32 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
           .orderBy("source")
     }
   }
+
+  /** A multimodal fold serves the raw admitted text: a curate leg would
+    * be silently skipped, so a loop with modalities refuses it. */
+  private def refuseCurate(st: StoreSet, legs: Legs): Unit =
+    require(st.modalities.isEmpty || legs.curate.isEmpty,
+      "a multimodal tick has no curated fold-back: detach the curate leg")
+
+  /** Each modality of `st` with the (doc_id, sig) signatures of `docs`,
+    * derived at the codec seam and severed concurrently (`Nil` on a text
+    * loop: nothing runs). */
+  private[graft] def batchSigs(st: StoreSet, docs: DataFrame)
+      : Seq[(Modality, DataFrame)] =
+    st.modalities.zip(Materialize.par(st.modalities.map(_.derive(docs))))
+
+  /** Rejected rows (doc_id, source, text, verdict) in the quarantine row
+    * layout of the loop: each modality's batch signature joins in as
+    * its quarantine column, before `verdict`. */
+  private[graft] def quarantineLayout(rej: DataFrame,
+                                      sigs: Seq[(Modality, DataFrame)])
+      : DataFrame =
+    sigs.foldLeft(rej) { case (acc, (m, s)) =>
+        acc.join(s.select(col("doc_id"), col("sig").as(m.quarCol)),
+          Seq("doc_id"), "left")
+      }
+      .select((Seq("doc_id", "source", "text") ++ sigs.map(_._1.quarCol) :+
+        "verdict").map(col): _*)
 
   /** File-count-triggered compaction (the production trigger the r9
     * verdict names): when any store's backing data-file count crosses
@@ -1199,46 +1280,65 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * RE-QUARANTINED under verdict 'low_quality' (its dup rows become
     * historical: a low_quality row supersedes a doc's dup-class rows in
     * the live-dup selection), so a later model swap can still flip it
-    * and its text is still at hand. Only RE-ADMITTED docs resolve. */
-  def readjudicateTick(st: Stores, quar: Quarantine, w: Seq[Double],
+    * and its text is still at hand. Only RE-ADMITTED docs resolve.
+    *
+    * On a MULTIMODAL loop ([[MmStores]]) this is the deployment form of
+    * [[graft.multimodal.Multimodal.q133MmReadjudication]]: the image and
+    * audio rows re-judge too, from the sig stores via the quarantine
+    * rows' STORED 8-byte signatures (no payload reads; a doc's
+    * signature is a function of the doc, not of the state), and the
+    * re-admitted docs' signatures fold into the sig stores. MmIngestSpec
+    * pins store ≡ the live q133 and the image-leg decisive contrast. */
+  def readjudicateTick(st: StoreSet, quar: Quarantine, w: Seq[Double],
                        threshold: Double = 0.2, lowFrac: Double = 0.25,
                        legs: Legs = Legs()): DataFrame = {
+    refuseCurate(st, legs)
     val l = withRequired(legs, Legs(quar = Some(quar)))
     val t = l.tick(st)
-    // the ladder of the attached legs: semantic / contaminated rows
-    // re-judge ONLY when their leg is attached — without its state the
-    // re-judgment would silently skip that gate and wrongly re-admit them
+    // the ladder of the attached legs and the loop's modalities:
+    // semantic / contaminated rows re-judge ONLY when their leg is
+    // attached — without its state the re-judgment would silently skip
+    // that gate and wrongly re-admit them
+    val mods = st.modalities
     val ladder = Provenance.ladder(l.sem.map(_ => Evidence.Semantic).toSeq ++
-      l.eval.map(_ => Evidence.Contaminated): _*)
-    val dupRows = rejudgeable(st, quar, t, ladder)
-    val (state, fuzzy) = textEvidence(st, t, dupRows, threshold)
+      l.eval.map(_ => Evidence.Contaminated) ++ mods.map(_.rung): _*)
+    val dupRows = rejudgeable(st.text, quar, t, ladder)
+    val (state, fuzzy) = textEvidence(st.text, t, dupRows, threshold)
+    // the stored signatures, per modality
+    val sigs = mods.map(m =>
+      m -> dupRows.select(col("doc_id"), col(m.quarCol).as("sig")))
     val v = Provenance.gatedTickFrame(
       dupRows.select("doc_id", "source", "text"), state,
       Seq(Evidence.Fuzzy -> fuzzy) ++
         l.sem.map(leg => Evidence.Semantic ->
-          semFlags(st, leg, t, dupRows.select("doc_id"))) ++
+          semFlags(st.text, leg, t, dupRows.select("doc_id"))) ++
         l.eval.map(leg => Evidence.Contaminated ->
-          contamFlags(leg, dupRows.select("doc_id", "text"))),
+          contamFlags(leg, dupRows.select("doc_id", "text"), sigs)) ++
+        sigs.map { case (m, s) =>
+          m.rung -> m.flagged(st.text.lineage, t - 1, s) },
       w, lowFrac)
     val admIds = v.filter(col("lq") === false).select("doc_id")
     val admDocs = dupRows.join(admIds, Seq("doc_id"), "left_semi")
     // the re-judged cohort is the batch for the curate winner rule
-    foldAdmitted(t, st, v.filter(col("lq") === false)
+    foldAdmitted(t, st.text, v.filter(col("lq") === false)
         .select(col("doc_id"), col("h").as("ch")), admIds, admDocs,
       servedOf(l, t, admDocs.select("doc_id", "source", "text"),
-        dupRows.select("doc_id", "source", "text")), Nil, l)
+        dupRows.select("doc_id", "source", "text")),
+      mods.map(m => m.sigs -> storedSigs(admDocs, m.quarCol)), l)
     // docs that escaped the dup gates but landed in the quality window
     // RE-QUARANTINE under their NEW evidence class: their dup verdicts
     // are gone, and a low_quality row is what regateTick's model loop
     // re-opens — dropping them would make re-adjudication-time quality
     // rejections terminal, contradicting the q134 symmetry. The new row
-    // supersedes the doc's dup rows in [[rejudgeable]]; tick-keyed, so
-    // a replay overwrites it.
+    // supersedes the doc's dup rows in [[rejudgeable]] and keeps the
+    // stored signatures (a later re-adjudication of a regate-readmitted
+    // partner still has them); tick-keyed, so a replay overwrites it.
+    val keep = (Seq("doc_id", "source", "text") ++ mods.map(_.quarCol))
+      .map(col)
     quar.rows.appendTickAt(t, v.filter(col("lq") === true)
       .select("doc_id")
-      .join(dupRows.select("doc_id", "source", "text"), "doc_id")
-      .select(col("doc_id"), col("source"), col("text"),
-        lit("low_quality").as("verdict")))
+      .join(dupRows.select(keep: _*), "doc_id")
+      .select(keep :+ lit("low_quality").as("verdict"): _*))
     // RESOLVED = re-admitted (folded into the state above): still-dup
     // docs stay re-judgeable under their dup rows; quality-rejected
     // docs stay re-judgeable under their new low_quality rows.
@@ -1274,7 +1374,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     * decision column — the CHOICE happened upstream in the q113/q128
     * machinery that produced `wNew`).
     *
-    * On a MULTIMODAL loop ([[MmStores]]: [[runMmTick]] persists gate
+    * On a MULTIMODAL loop ([[MmStores]]: its [[runTick]] persists gate
     * features too) the five mm stores advance together, and the
     * re-admitted docs' STORED 8-byte signatures (the mm quarantine rows
     * carry them) fold into the modality sig stores — a later mm tick
@@ -1285,7 +1385,6 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
                  legs: Legs = Legs()): DataFrame = {
     val l = withRequired(legs, Legs(quar = Some(quar), replay = Some(replay)))
     val t = l.tick(st)
-    val sigCols = st.sigCols
     val feats = st.text.lineage.resolve(replay.feats.currentUpTo(t - 1).getOrElse(
       sys.error("replay leg not bootstrapped: no tick-1 base")))
     val rescored = QualityModel.withScoreFromFeatures(
@@ -1304,7 +1403,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     val admRows = live.filter(col("verdict") === "low_quality")
       .join(flipped.filter(col("was_lowq") && !col("lq2"))
         .select("doc_id"), Seq("doc_id"), "left_semi")
-      .select((Seq("doc_id", "source", "text") ++ sigCols.map(_._2))
+      .select((Seq("doc_id", "source", "text") ++ st.modalities.map(_.quarCol))
         .map(col): _*)
       .localCheckpoint()
     val admDocs = admRows.select("doc_id", "source", "text")
@@ -1312,7 +1411,7 @@ object IngestLoop extends IngestLegOps with IngestMmOps {
     foldAdmitted(t, st.text, admDocs.select(col("doc_id"),
         Provenance.contentHash60(col("text")).as("ch")), admIds, admDocs,
       servedOf(l, t, admDocs, admDocs),
-      sigCols.map { case (s, c) => s -> storedSigs(admRows, c) }, l)
+      st.modalities.map(m => m.sigs -> storedSigs(admRows, m.quarCol)), l)
     quar.rows.appendTickAt(t, rows.limit(0))
     quar.resolvedIds.appendTickAt(t, admIds)
     replay.feats.appendTickAt(t, feats.limit(0))

@@ -388,10 +388,6 @@ final class PackedExportStore(spark: SparkSession, root: String,
   def servedSlices(): DataFrame =
     readSlicesAt(certifiedServing("serve").map(_.path))
 
-  /** One training shard off the CERTIFIED read path. */
-  def readServedShard(s: Long): DataFrame =
-    servedSlices().filter(col("shard") === s)
-
   /** The TAKEDOWN: re-pack every tick containing a retracted doc from
     * its own stored per-doc reduction (no text), as that tick's next
     * revision; untouched ticks' revisions are not rewritten. Returns

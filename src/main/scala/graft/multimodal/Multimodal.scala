@@ -220,6 +220,14 @@ object Multimodal {
     * near-dup documents. Everything derives from doc_id, so the DuckDB
     * oracle re-plants identically. */
   private val DedupStride = 97
+
+  /** The signature match bounds every deployment form judges with (the
+    * ingest tick, its re-adjudication, the eval leg's media channels
+    * and the folding stream) and the live forms default to: a
+    * candidate verifies at popcount distance ≤ `MaxDist`, and
+    * state-side band buckets larger than `MaxBand` are skipped. */
+  val MaxDist = 10
+  val MaxBand = 64
   private val DedupDelta = 64
   private def q110Spec(docId: Long): (Long, Boolean) =
     if (docId >= 3 && docId % 7 == 3) (docId - 3, true) else (docId, false)
@@ -280,8 +288,8 @@ object Multimodal {
           .stripMargin)).as("z"))
       .select(col("doc_id"), col("z.band").as("band"), col("z.x").as("x"))
 
-  def q110ImageDedup(docs: DataFrame, maxDist: Int = 10,
-                     maxBand: Int = 64): DataFrame = {
+  def q110ImageDedup(docs: DataFrame, maxDist: Int = MaxDist,
+                     maxBand: Int = MaxBand): DataFrame = {
     // severed (review finding): the RDD-backed signature frame is read
     // by the band explode AND both verify sides — un-checkpointed, each
     // plan reference would re-synthesize and re-decode every image
@@ -437,7 +445,7 @@ object Multimodal {
        |       JOIN ${srcP}sig sb ON sb.doc_id = c.sid
        |       WHERE bit_count(xor(sa.sig, sb.sig)) <= $maxDist)""".stripMargin
 
-  def q110Sql(maxDist: Int = 10, maxBand: Int = 64): String =
+  def q110Sql(maxDist: Int = MaxDist, maxBand: Int = MaxBand): String =
     s"""WITH ${sigSqlCtes()},
        |keep AS (SELECT band, x FROM bands GROUP BY band, x
        |         HAVING count(*) > 1 AND count(*) <= $maxBand),
@@ -473,8 +481,8 @@ object Multimodal {
     * the q110 cap); verification is one popcount per candidate. The
     * live form computes both sides from the one table so the DuckDB
     * oracle re-derives every signature arithmetically. */
-  def q114ImageAdmission(docs: DataFrame, maxDist: Int = 10,
-                         maxBand: Int = 64): DataFrame = {
+  def q114ImageAdmission(docs: DataFrame, maxDist: Int = MaxDist,
+                         maxBand: Int = MaxBand): DataFrame = {
     val m = pmod(col("doc_id"), lit(graft.operators.Provenance.BatchMod))
     val sigs = imageSigs(docs).localCheckpoint() // bands + both verify sides
     val corpusSigs = sigs.join(
@@ -515,7 +523,7 @@ object Multimodal {
       .select(col("doc_id").as("fid")).distinct()
   }
 
-  def q114Sql(maxDist: Int = 10, maxBand: Int = 64): String = {
+  def q114Sql(maxDist: Int = MaxDist, maxBand: Int = MaxBand): String = {
     val bm = graft.operators.Provenance.BatchMod
     s"""WITH ${sigSqlCtes()},
        |${sigFlagSqlCtes("", bm, maxDist, maxBand)}
@@ -567,8 +575,8 @@ object Multimodal {
     * the q71/q110 convention on a second modality, certifying the
     * whole decode→window→compare path. Scale shape identical to q110:
     * 8-byte signatures map-side, banded equi-join, popcount verify. */
-  def q116AudioDedup(docs: DataFrame, maxDist: Int = 10,
-                     maxBand: Int = 64): DataFrame = {
+  def q116AudioDedup(docs: DataFrame, maxDist: Int = MaxDist,
+                     maxBand: Int = MaxBand): DataFrame = {
     // severed: same multi-reference argument as q110 (review finding)
     val sigs = audioSigs(docs).localCheckpoint()
     val bands = sigBands(sigs)
@@ -589,7 +597,7 @@ object Multimodal {
       .orderBy("ida", "idb")
   }
 
-  def q116Sql(maxDist: Int = 10, maxBand: Int = 64): String =
+  def q116Sql(maxDist: Int = MaxDist, maxBand: Int = MaxBand): String =
     s"""WITH ${audioSigSqlCtes()},
        |keep AS (SELECT band, x FROM bands GROUP BY band, x
        |         HAVING count(*) > 1 AND count(*) <= $maxBand),
@@ -642,12 +650,13 @@ object Multimodal {
     * modality adds 8-byte signatures computed map-side at the codec
     * seam, a banded cross-side equi-join with corpus hot buckets gated
     * (`maxBand`), and one popcount per candidate. Payloads never enter
-    * a shuffle. The deployment form is [[graft.io.IngestLoop.runMmTick]]
-    * (signature state in IngestStateStores, fold-back per tick,
-    * retraction-aware) — MmIngestSpec pins the two equal. */
+    * a shuffle. The deployment form is [[graft.io.IngestLoop.runTick]]
+    * on [[graft.io.IngestLoop.MmStores]] (signature state in
+    * IngestStateStores, fold-back per tick, retraction-aware) —
+    * MmIngestSpec pins the two equal. */
   def q118MultimodalAdmission(docs: DataFrame, threshold: Double = 0.2,
-                              lowFrac: Double = 0.25, maxDist: Int = 10,
-                              maxBand: Int = 64): DataFrame = {
+                              lowFrac: Double = 0.25, maxDist: Int = MaxDist,
+                              maxBand: Int = MaxBand): DataFrame = {
     import graft.operators.{Fuzzy, Provenance, QualityModel}
     val bm = graft.operators.Provenance.BatchMod
     val m = pmod(col("doc_id"), lit(bm))
@@ -660,8 +669,8 @@ object Multimodal {
     // severed: each signature frame is RDD-backed and read by bands +
     // both verify sides (the q110/q114 review finding); the two
     // modalities are independent — materialize concurrently
-    val (sigsI, sigsA) = graft.operators.Materialize.par2(
-      imageSigs(docs), audioSigs(docs))
+    val Seq(sigsI, sigsA) = graft.operators.Materialize.par(
+      Seq(imageSigs(docs), audioSigs(docs)))
     val imFlag = flaggedAgainstState(sigsI.filter(m =!= 0),
       sigsI.filter(m === 0), maxDist, maxBand).select(col("fid").as("ifid"))
     val auFlag = flaggedAgainstState(sigsA.filter(m =!= 0),
@@ -672,7 +681,7 @@ object Multimodal {
   }
 
   def q118Sql(threshold: Double = 0.2, lowFrac: Double = 0.25,
-              maxDist: Int = 10, maxBand: Int = 64,
+              maxDist: Int = MaxDist, maxBand: Int = MaxBand,
               iters: Int = graft.operators.QualityModel.DefaultIters,
               trainN: Int = graft.operators.QualityModel.DefaultTrainN): String =
     mmAdmissionSql(threshold, lowFrac, maxDist, maxBand, iters, trainN,
@@ -755,7 +764,7 @@ object Multimodal {
     * whole precedence ladder — MmIngestSpec pins the decisive contrast
     * vs q118 on the image and audio legs specifically, and that the
     * store form (retractTick on the shared tombstone store, then
-    * runMmTick) reproduces this live form tick for tick.
+    * runTick on the mm stores) reproduces this live form tick for tick.
     *
     * The quality model stays FROZEN (trained on the full pre-takedown
     * corpus): a takedown is not a retrain — the q104/q109/q113 loop
@@ -770,8 +779,8 @@ object Multimodal {
     * corpus rescan; here expressed as the id-modulus the oracle can
     * share). */
   def q126MultimodalRetraction(docs: DataFrame, threshold: Double = 0.2,
-                               lowFrac: Double = 0.25, maxDist: Int = 10,
-                               maxBand: Int = 64): DataFrame = {
+                               lowFrac: Double = 0.25, maxDist: Int = MaxDist,
+                               maxBand: Int = MaxBand): DataFrame = {
     import graft.operators.{Fuzzy, Provenance, QualityModel}
     val bm = Provenance.BatchMod
     val m = pmod(col("doc_id"), lit(bm))
@@ -785,8 +794,8 @@ object Multimodal {
     val fuzzy = Fuzzy.lshCrossPairs(docs.filter(m === 0 || keep),
         (c: org.apache.spark.sql.Column) => pmod(c, lit(bm)) === 0, threshold)
       .select(col("eval_id").as("fid")).distinct()
-    val (sigsI, sigsA) = graft.operators.Materialize.par2(
-      imageSigs(docs), audioSigs(docs))
+    val Seq(sigsI, sigsA) = graft.operators.Materialize.par(
+      Seq(imageSigs(docs), audioSigs(docs)))
     val imFlag = flaggedAgainstState(sigsI.filter(m =!= 0 && keep),
       sigsI.filter(m === 0), maxDist, maxBand).select(col("fid").as("ifid"))
     val auFlag = flaggedAgainstState(sigsA.filter(m =!= 0 && keep),
@@ -797,7 +806,7 @@ object Multimodal {
   }
 
   def q126Sql(threshold: Double = 0.2, lowFrac: Double = 0.25,
-              maxDist: Int = 10, maxBand: Int = 64,
+              maxDist: Int = MaxDist, maxBand: Int = MaxBand,
               iters: Int = graft.operators.QualityModel.DefaultIters,
               trainN: Int = graft.operators.QualityModel.DefaultTrainN): String =
     mmAdmissionSql(threshold, lowFrac, maxDist, maxBand, iters, trainN,
@@ -830,8 +839,8 @@ object Multimodal {
     * class × RE-ADJUDICATED verdict. GenData's planted cross-modality
     * partners make the contrast decisive on each leg (the q126
     * MmIngestSpec classes). Deployment form:
-    * [[graft.io.IngestLoop.readjudicateMmTick]] over the same
-    * [[graft.io.IngestLoop.Quarantine]] pair — mm quarantine rows
+    * [[graft.io.IngestLoop.readjudicateTick]] on the mm stores, over
+    * the same [[graft.io.IngestLoop.Quarantine]] pair — mm quarantine rows
     * additionally carry the doc's 8-byte image/audio signatures, so
     * the re-judgment reads no payloads (signatures are deterministic
     * functions of the doc, not of the state).
@@ -841,8 +850,8 @@ object Multimodal {
     * frames, the takedown filters are id-modulus predicates on
     * 8-byte rows, and payloads never enter a shuffle. */
   def q133MmReadjudication(docs: DataFrame, threshold: Double = 0.2,
-                           lowFrac: Double = 0.25, maxDist: Int = 10,
-                           maxBand: Int = 64): DataFrame = {
+                           lowFrac: Double = 0.25, maxDist: Int = MaxDist,
+                           maxBand: Int = MaxBand): DataFrame = {
     import graft.operators.{Fuzzy, Provenance, QualityModel}
     val bm = Provenance.BatchMod
     val m = pmod(col("doc_id"), lit(bm))
@@ -855,9 +864,9 @@ object Multimodal {
     // pairs IS equivalent — unlike the gated signature chains)
     // pr / sigsI / sigsA are mutually independent severed relations —
     // materialize concurrently (guide §2.6 overlap)
-    val (pr, sigsI, sigsA) = graft.operators.Materialize.par3(
+    val Seq(pr, sigsI, sigsA) = graft.operators.Materialize.par(Seq(
       Fuzzy.lshVerifiedPairs(docs, threshold).select("ida", "idb"),
-      imageSigs(docs), audioSigs(docs))
+      imageSigs(docs), audioSigs(docs)))
     val adj = pr.union(pr.select(col("idb"), col("ida"))).toDF("a", "b")
     val fzFull = adj.filter(pmod(col("b"), lit(bm)) === 0 &&
         pmod(col("a"), lit(bm)) =!= 0)
@@ -900,7 +909,7 @@ object Multimodal {
   }
 
   def q133Sql(threshold: Double = 0.2, lowFrac: Double = 0.25,
-              maxDist: Int = 10, maxBand: Int = 64,
+              maxDist: Int = MaxDist, maxBand: Int = MaxBand,
               iters: Int = graft.operators.QualityModel.DefaultIters,
               trainN: Int = graft.operators.QualityModel.DefaultTrainN)
       : String = {
@@ -1052,8 +1061,8 @@ object Multimodal {
     * with eval hot buckets gated; verification is one popcount per
     * candidate. Payloads are decoded once at the codec seam and never
     * re-read by the update loops. */
-  def q140MmEvalContamination(docs: DataFrame, maxDist: Int = 10,
-                              maxBand: Int = 64, threshold: Double = 0.2,
+  def q140MmEvalContamination(docs: DataFrame, maxDist: Int = MaxDist,
+                              maxBand: Int = MaxBand, threshold: Double = 0.2,
                               lowFrac: Double = 0.25): DataFrame = {
     import graft.operators.{Decontam, Fuzzy, Provenance, QualityModel}
     val m = pmod(col("doc_id"), lit(Provenance.BatchMod))
@@ -1068,10 +1077,10 @@ object Multimodal {
     // phases' flag joins (the q136 sever discipline on the sig legs);
     // the two sig relations and the text pair relation below are
     // mutually independent, so they materialize concurrently
-    // (Materialize.par3 — guide §2.6 overlap)
-    val (iSigs, aSigs, pr) = graft.operators.Materialize.par3(
+    // (Materialize.par — guide §2.6 overlap)
+    val Seq(iSigs, aSigs, pr) = graft.operators.Materialize.par(Seq(
       imageSigs(docs), audioSigs(docs),
-      Fuzzy.lshVerifiedPairs(docs, threshold).select("ida", "idb"))
+      Fuzzy.lshVerifiedPairs(docs, threshold).select("ida", "idb")))
     def contamIds(memberIds: DataFrame, evalIds: DataFrame): DataFrame = {
       def hits(sigs: DataFrame) = flaggedAgainstState(
         sigs.join(evalIds, Seq("doc_id"), "left_semi"),
@@ -1146,7 +1155,7 @@ object Multimodal {
     * never decoding), SIX eval-flag chains (image/audio × tick 1 /
     * re-adjudication / catch), the text LSH dup gates, the training
     * pass, and all three phases — one WITH clause. */
-  def q140Sql(maxDist: Int = 10, maxBand: Int = 64,
+  def q140Sql(maxDist: Int = MaxDist, maxBand: Int = MaxBand,
               threshold: Double = 0.2, lowFrac: Double = 0.25,
               iters: Int = graft.operators.QualityModel.DefaultIters,
               trainN: Int = graft.operators.QualityModel.DefaultTrainN)

@@ -97,15 +97,10 @@ trait StageStore {
   * the probe side of an outer join and in aggregates. */
 object LocalStageStore extends StageStore {
   override def materialize(name: String, df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    CurateV2.hintIfCompact(df.localCheckpoint())
+    Materialize.sever(df)
 }
 
 object CurateV2 {
-
-  /** See [[Materialize.hintIfCompact]] — kept as the store's local
-    * name so the scaladoc above reads against one definition. */
-  private[operators] def hintIfCompact(out: DataFrame): DataFrame =
-    Materialize.hintIfCompact(out)
 
   /** Stages 1–6 as ONE labeled frame (d2…d6 drop markers + n_bpe) —
     * the shared core of q84 (7-stage report) and q91 (v3: two more

@@ -130,10 +130,10 @@ object Decontam {
     // ONE verified pair relation (dup gates + the fuzzy contamination
     // channel) and ONE gram relation, both severed — each is read by
     // tick 1, the re-adjudication, AND the catch census. The two are
-    // independent, so they materialize concurrently (Materialize.par2).
-    val (pr, gr) = Materialize.par2(
+    // independent, so they materialize concurrently (Materialize.par).
+    val Seq(pr, gr) = Materialize.par(Seq(
       Fuzzy.lshVerifiedPairs(documents, threshold).select("ida", "idb"),
-      Contamination.grams(documents, n))
+      Contamination.grams(documents, n)))
     val adj = pr.union(pr.select(col("idb"), col("ida"))).toDF("a", "b")
     val w = QualityModel.weights(corpus,
       scope = s"decontam${Provenance.BatchMod}")

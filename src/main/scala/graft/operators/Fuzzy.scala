@@ -112,10 +112,17 @@ object Fuzzy {
     * oracle — which verifies on strings — would flag it). At 100 TB the
     * severed relation is executor-local storage proportional to corpus
     * tokens — the in-memory twin of the `corpus_shingle_hashes`
-    * artifact a production admission loop persists anyway. */
-  private def hashedShingles(documents: DataFrame): DataFrame =
-    Materialize.sever(shingles(documents).select(col("doc_id"),
-      conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long").as("h")))
+    * artifact a production admission loop persists anyway.
+    *
+    * Returned twice: plain, for the signature aggregate, and with
+    * [[Materialize.hintIfCompact]]'s broadcast hint, for the verify
+    * joins — Spark drops a hint that reaches no join, with a warning. */
+  private def hashedShingles(documents: DataFrame): (DataFrame, DataFrame) = {
+    val shh = shingles(documents).select(col("doc_id"),
+      conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long").as("h"))
+      .localCheckpoint()
+    (shh, Materialize.hintIfCompact(shh))
+  }
 
   /** The signature aggregate with the per-doc distinct-shingle count
     * fused in — ONE groupBy(doc_id) pass over the hashed-shingle
@@ -150,7 +157,7 @@ object Fuzzy {
   private[graft] def lshCrossPairs(documents: DataFrame,
       isEval: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       threshold: Double): DataFrame = {
-    val shh = hashedShingles(documents)
+    val (shh, shhJ) = hashedShingles(documents)
     val sigN = sigWithSizes(shh)
     val b = bands(sigN)
     val evalBands = b.filter(isEval(col("doc_id")))
@@ -161,8 +168,8 @@ object Fuzzy {
       .select("train_id", "eval_id").distinct()
     val sizes = sigN.select(col("doc_id"), col("n"))
     val inter = cand
-      .join(shh.as("a"), col("train_id") === col("a.doc_id"))
-      .join(shh.as("b"), col("eval_id") === col("b.doc_id") && col("a.h") === col("b.h"))
+      .join(shhJ.as("a"), col("train_id") === col("a.doc_id"))
+      .join(shhJ.as("b"), col("eval_id") === col("b.doc_id") && col("a.h") === col("b.h"))
       .groupBy(col("train_id").as("ti"), col("eval_id").as("ei"))
       .agg(count(lit(1)).as("ninter"))
     inter
@@ -200,7 +207,7 @@ object Fuzzy {
     * with train = corpus, eval = batch, like the live path. */
   def lshPairsAgainstState(corpusBands: DataFrame, corpusShingles: DataFrame,
                            batchDocs: DataFrame, threshold: Double): DataFrame = {
-    val hB = hashedShingles(batchDocs)
+    val (hB, hBJ) = hashedShingles(batchDocs)
     val sigB = sigWithSizes(hB)
     val bB = bands(sigB)
       .select(col("doc_id").as("eval_id"), col("band"), col("x"), col("y"))
@@ -212,7 +219,7 @@ object Fuzzy {
     val sizesB = sigB.select(col("doc_id"), col("n"))
     val inter = cand
       .join(corpusShingles.as("a"), col("train_id") === col("a.doc_id"))
-      .join(hB.as("b"), col("eval_id") === col("b.doc_id") && col("a.h") === col("b.h"))
+      .join(hBJ.as("b"), col("eval_id") === col("b.doc_id") && col("a.h") === col("b.h"))
       .groupBy(col("train_id").as("ti"), col("eval_id").as("ei"))
       .agg(count(lit(1)).as("ninter"))
     inter
@@ -229,7 +236,7 @@ object Fuzzy {
     * composition (q106 reads it twice through a checkpoint; a sort
     * there would be paid and discarded). */
   def lshVerifiedPairs(documents: DataFrame, threshold: Double): DataFrame = {
-    val shh = hashedShingles(documents)
+    val (shh, shhJ) = hashedShingles(documents)
     val sigN = sigWithSizes(shh)
     val cand = candidatesOfSig(sigN)
     val sizes = sigN.select(col("doc_id"), col("n"))
@@ -239,8 +246,8 @@ object Fuzzy {
     // all-pairs intersection followed by a candidate semi-join would
     // redo exactly the O(n²) join LSH exists to avoid.)
     val inter = cand
-      .join(shh.as("a"), col("ida") === col("a.doc_id"))
-      .join(shh.as("b"), col("idb") === col("b.doc_id") && col("a.h") === col("b.h"))
+      .join(shhJ.as("a"), col("ida") === col("a.doc_id"))
+      .join(shhJ.as("b"), col("idb") === col("b.doc_id") && col("a.h") === col("b.h"))
       .groupBy(col("ida").as("ia"), col("idb").as("ib"))
       .agg(count(lit(1)).as("ninter"))
     inter

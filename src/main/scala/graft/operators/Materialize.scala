@@ -97,27 +97,7 @@ private[graft] object Materialize {
   /** Drop a severed frame's cached blocks now, instead of when Spark's
     * context cleaner next collects them — for a checkpoint whose owner
     * is done with it. A frame that is not a checkpoint is left alone. */
-  def release(df: DataFrame): Unit =
-    ExecBridge.checkpointRdd(df).foreach(_.unpersist(blocking = true))
-
-  def par2(a: DataFrame, b: DataFrame): (DataFrame, DataFrame) = {
-    val r = par(Seq(a, b)); (r(0), r(1))
-  }
-
-  def par3(a: DataFrame, b: DataFrame, c: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val r = par(Seq(a, b, c)); (r(0), r(1), r(2))
-  }
-
-  /** Run two independent frame CONSTRUCTIONS concurrently — for
-    * builders that execute their own barrier jobs at construction time
-    * (the Packing offsets sketch/totals, eager checkpoints inside).
-    * Same §2.6 overlap as [[par2]], one level earlier. */
-  def par2t(a: => DataFrame, b: => DataFrame): (DataFrame, DataFrame) = {
-    val fb = submit(SparkSession.active)(b)
-    val ra = a
-    (ra, await(fb))
-  }
+  def release(df: DataFrame): Unit = ExecBridge.releaseCheckpoint(df)
 
   /** Submit an INDEPENDENT severing now, collect at the use site —
     * §2.6 for a relation whose consumer sits several stages downstream

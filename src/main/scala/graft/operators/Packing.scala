@@ -321,9 +321,10 @@ object Packing {
       pmod(c, lit(Provenance.BatchMod))
     // the two tick packs are independent — build them concurrently
     // (each runs its own construction-time offsets barriers)
-    val (s1, s2t) = Materialize.par2t(
-      tickSlices(documents.filter(m(col("doc_id")).between(1, 9)), seqLen, ms),
-      tickSlices(documents.filter(m(col("doc_id")) === 0), seqLen, ms))
+    val Seq(s1, s2t) = Materialize.branches(documents.sparkSession, Seq(
+      () => tickSlices(documents.filter(m(col("doc_id")).between(1, 9)),
+        seqLen, ms),
+      () => tickSlices(documents.filter(m(col("doc_id")) === 0), seqLen, ms)))
     // the takedown: re-pack tick 1 from its own per-doc reduction —
     // exactly what the store form derives from its rows, no text;
     // severed: repackSlices reads it from its construction barriers,
@@ -759,9 +760,10 @@ object Packing {
       pmod(c, lit(Provenance.BatchMod))
     // independent tick packs built concurrently; the per-doc reduction
     // severed before repack (the q125 discipline)
-    val (s1, s2) = Materialize.par2t(
-      tickSlices(documents.filter(m(col("doc_id")).between(1, 9)), seqLen, ms),
-      tickSlices(documents.filter(m(col("doc_id")) === 0), seqLen, ms))
+    val Seq(s1, s2) = Materialize.branches(documents.sparkSession, Seq(
+      () => tickSlices(documents.filter(m(col("doc_id")).between(1, 9)),
+        seqLen, ms),
+      () => tickSlices(documents.filter(m(col("doc_id")) === 0), seqLen, ms)))
     val docRows1 = s1.groupBy("doc_id")
       .agg(sum("toks").as("n_tokens"), max("h").as("h"))
       .filter(pmod(col("doc_id"), lit(Provenance.RetractMod))

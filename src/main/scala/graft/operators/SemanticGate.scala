@@ -205,9 +205,9 @@ object SemanticGate {
     // ONE verified relation per modality, severed (each is read by both
     // ticks' flags — the q106 marker discipline); text and vector legs
     // are independent, so they materialize concurrently (guide §2.6)
-    val (pr, sp) = Materialize.par2(
+    val Seq(pr, sp) = Materialize.par(Seq(
       Fuzzy.lshVerifiedPairs(documents, threshold).select("ida", "idb"),
-      semVerifiedPairs(embeddings, nTables, bits, dim, simThreshold))
+      semVerifiedPairs(embeddings, nTables, bits, dim, simThreshold)))
     val adj = pr.union(pr.select(col("idb"), col("ida"))).toDF("a", "b")
     val sadj = sp.union(sp.select(col("idb"), col("ida"))).toDF("a", "b")
     val w = QualityModel.weights(corpus,

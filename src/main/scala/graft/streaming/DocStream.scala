@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.io.IngestLoop
+import graft.operators.Provenance.Evidence
 
 /** Streaming deduplication over a document stream — the incremental
   * form of the batch exact-dedup operator (q21): emit each distinct
@@ -186,17 +189,53 @@ object DocStream {
     * ticks (the q73 state-maintenance loop), which also upgrades
     * stream-vs-stream near-dups to corpus ones at the next tick. */
   def refineFuzzy(batch: DataFrame, corpusBands: DataFrame,
-                  corpusShingles: DataFrame, threshold: Double): DataFrame = {
-    val newDocs = batch.filter(col("verdict") === "new").select("doc_id", "text")
-    val fuzzy = graft.operators.Fuzzy
+                  corpusShingles: DataFrame, threshold: Double): DataFrame =
+    refineBy(batch, Evidence.Fuzzy,
+      fuzzyFlags(corpusBands, corpusShingles, threshold))
+
+  /** The fuzzy rung's flags: the `newDocs` whose shingles band-collide
+    * with the corpus LSH state and verify at Jaccard ≥ `threshold`. */
+  private def fuzzyFlags(corpusBands: DataFrame, corpusShingles: DataFrame,
+                         threshold: Double)(newDocs: DataFrame): DataFrame =
+    graft.operators.Fuzzy
       .lshPairsAgainstState(corpusBands, corpusShingles, newDocs, threshold)
       .select(col("eval_id").as("fid")).distinct()
-    batch
-      .join(fuzzy, col("doc_id") === col("fid"), "left")
+
+  /** One rung's refinement — the stream's form of a ladder rung, applied
+    * per rung in ladder order: `flagsOf` maps the docs every earlier
+    * rung left 'new' (doc_id, text) to the rung's flag ids, and each
+    * flagged doc takes the rung's [[streamVerdict]]. */
+  private def refineBy(batch: DataFrame, rung: Evidence,
+                       flagsOf: DataFrame => DataFrame): DataFrame = {
+    val isNew = col("verdict") === "new"
+    batch.join(flagsOf(batch.filter(isNew).select("doc_id", "text")),
+        col("doc_id") === col(rung.flag), "left")
       .withColumn("verdict",
-        when(col("fid").isNotNull, lit("dup_corpus_fuzzy"))
+        when(isNew && col(rung.flag).isNotNull, lit(streamVerdict(rung)))
           .otherwise(col("verdict")))
       .select("doc_id", "h", "verdict", "text")
+  }
+
+  /** The stream verdict of a rung the stream refines by flags: evidence
+    * `dup_x` against the folded corpus state is `dup_corpus_x`;
+    * contamination keeps its class. */
+  private def streamVerdict(rung: Evidence): String =
+    if (rung.verdict.startsWith("dup_"))
+      "dup_corpus_" + rung.verdict.stripPrefix("dup_")
+    else rung.verdict
+
+  /** THE stream → ladder verdict map, which the quarantine fold applies:
+    * `dup_corpus`/`dup_stream` → dup_exact (both are hash-state
+    * evidence after the fold-back), each rung's [[streamVerdict]] → its
+    * ladder verdict, and `low_quality` kept as is. */
+  private[graft] def ladderVerdict(v: Column): Column = {
+    val labels = Seq("dup_corpus" -> Evidence.Exact,
+      "dup_stream" -> Evidence.Exact) ++
+      Evidence.Ladder.tail.map(e => streamVerdict(e) -> e)
+    labels.tail.foldLeft(when(v === labels.head._1,
+        lit(labels.head._2.verdict))) { case (c, (label, e)) =>
+      c.when(v === label, lit(e.verdict))
+    }.otherwise(v)
   }
 
   /** Per-micro-batch learned quality gate — q103's BUDGET verdict in
@@ -291,11 +330,28 @@ object DocStream {
     * state loop (r9 verdict item 1, stream form): like
     * [[gatedAdmissionQuery]], but between micro-batches the ADMITTED
     * docs' band/shingle/hash increments are folded into the
-    * [[graft.io.IngestLoop.Stores]], so batch N+1's fuzzy refinement
+    * [[graft.io.IngestLoop.StoreSet]], so batch N+1's fuzzy refinement
     * judges against base corpus ∪ everything admitted through batch N.
     * This upgrades the documented [[refineFuzzy]] stream-vs-stream
     * near-dup miss into caught-at-next-tick, exactly as that scaladoc
     * promises.
+    *
+    * Per micro-batch, the docs the exact pass called 'new' refine once
+    * per ladder rung, in ladder order ([[refineBy]]): fuzzy text
+    * against the folded LSH state, then each attached leg's rung — the
+    * SEMANTIC leg against the folded RP-LSH signature state (q135), the
+    * DECONTAM leg against the LIVE eval set (q136; withdrawals resolve
+    * through the eval tombstones at every batch, and an mm eval leg's
+    * media channels, q140, join the class) — then, on a MULTIMODAL loop
+    * ([[graft.io.IngestLoop.MmStores]]), image and audio perceptual
+    * signatures against the folded sig stores. The verdict precedence
+    * is q118's with the stream's exact layer spliced in: dup_corpus /
+    * dup_stream → dup_corpus_fuzzy → dup_corpus_semantic → contaminated
+    * → dup_corpus_image → dup_corpus_audio → low_quality → new. The
+    * batch signatures derive once at the codec seam for the WHOLE
+    * micro-batch; ONLY admitted docs fold back into every store — so
+    * batch N+1 rejects an image/audio near-dup of what batch N
+    * admitted, without waiting for a batch tick.
     *
     * Replay discipline (exactly-once under at-least-once foreachBatch):
     * fold ticks are keyed BY MICRO-BATCH ID
@@ -311,7 +367,7 @@ object DocStream {
     * — `corpusHashes` (the persisted ArtifactStore artifact, per the
     * other admission queries) only SEEDS it at first start, which is
     * also why it is a parameter rather than a read of
-    * `stores.hashes`: the seed must survive compaction of the fold
+    * `stores.text.hashes`: the seed must survive compaction of the fold
     * stores. Compact the stores only while the query is stopped and
     * committed (`IngestStateStore.currentUpTo` throws if a replay
     * would need increments a compaction folded away).
@@ -328,46 +384,78 @@ object DocStream {
     * the deployment's one [[graft.io.IngestLoop.Legs]] value; a mix or
     * replay leg is refused. Streaming export epochs are
     * micro-batch-sized; a deployment with small batches compacts by
-    * re-exporting at quiesce points. */
+    * re-exporting at quiesce points.
+    *
+    * Takedown caveat: the fuzzy/signature state resolves through the
+    * shared tombstone store at every batch, so a quiesce-point
+    * [[graft.io.IngestLoop.retractTick]] between stream runs reaches
+    * it; the EXACT-hash layer, however, lives in the streaming
+    * checkpoint (seeded once from `corpusHashes`), so a takedown of
+    * exact content requires restarting the query with a fresh
+    * checkpoint re-seeded from the post-retraction hash state — run
+    * takedowns at stream restart boundaries
+    * ([[graft.io.IngestLoop.rollover]]). The same boundary governs the
+    * quality `weights`: they are frozen for the run (a literal folded
+    * into every micro-batch's scoring projection), so a takedown that
+    * unlearns the serving model ([[graft.io.ArtifactStore.ModelStore]])
+    * or a q113 refresh takes effect at the next start — pass
+    * `modelStore.servingWeights()` there, never a stale copy. */
   def foldingGatedAdmissionQuery(docs: DataFrame, corpusHashes: DataFrame,
-                                 stores: graft.io.IngestLoop.Stores,
+                                 stores: IngestLoop.StoreSet,
                                  weights: Seq[Double],
                                  outPath: String, checkpoint: String,
                                  threshold: Double = 0.2,
                                  lowFrac: Double = 0.25,
-                                 legs: graft.io.IngestLoop.Legs =
-                                   graft.io.IngestLoop.Legs())
+                                 legs: IngestLoop.Legs = IngestLoop.Legs())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     streamLegs(legs)
+    val st = stores.text
     admissionStreamWithText(docs, corpusHashes)
       .writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (b: Dataset[AdmissionDoc], batchId: Long) =>
         val stateTick = batchId + 1 // bootstrap=1, batch k folds at k+2
+        val batch = b.toDF()
         // state reads resolve through the shared tombstone store: a
         // quiesce-point takedown between stream runs stops rejecting
-        // the retracted docs' near-dups here too (the exact-hash layer
-        // lives in the streaming checkpoint — see the takedown caveat
-        // in the method scaladoc)
-        val rs = (df: DataFrame) => stores.lineage.resolve(df)
-        val fuzzed = refineFuzzy(b.toDF(),
-          rs(stores.bands.currentUpTo(stateTick).get),
-          rs(stores.shingles.currentUpTo(stateTick).get), threshold)
-        val evaled = refineContamLeg(
-          refineSemanticLeg(fuzzed, stores, legs, stateTick), legs)
-        val refined = refineQuality(evaled, weights, lowFrac)
+        // the retracted docs' near-dups here too
+        val rs = (df: DataFrame) => st.lineage.resolve(df)
+        // severed: read by the flag joins, the fold-back AND the
+        // quarantine (its rows carry every rejected doc's signatures)
+        val sigs = IngestLoop.batchSigs(stores, batch.select("doc_id"))
+        val rungs: Seq[(Evidence, DataFrame => DataFrame)] =
+          Seq(Evidence.Fuzzy -> fuzzyFlags(
+            rs(st.bands.currentUpTo(stateTick).get),
+            rs(st.shingles.currentUpTo(stateTick).get), threshold) _) ++
+          legs.sem.map(leg => Evidence.Semantic -> ((newDocs: DataFrame) =>
+            graft.operators.SemanticGate.flaggedAgainstState(
+              rs(leg.sigs.currentUpTo(stateTick).getOrElse(
+                sys.error("semantic leg not bootstrapped"))),
+              leg.vectors, newDocs.select("doc_id"),
+              leg.nTables, leg.bits, leg.dim, leg.simThreshold))) ++
+          legs.eval.map(leg => Evidence.Contaminated -> ((newDocs: DataFrame) =>
+            IngestLoop.contamFlags(leg, newDocs, sigs))) ++
+          sigs.map { case (m, s) => m.rung -> ((_: DataFrame) =>
+            m.flagged(st.lineage, stateTick, s)) }
+        val refined = refineQuality(
+            rungs.foldLeft(batch) { case (acc, (rung, flagsOf)) =>
+              refineBy(acc, rung, flagsOf) },
+            weights, lowFrac)
           // severed: read by the sink write AND the fold increments
           .localCheckpoint()
         refined.drop("text")
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
         val adm = refined.filter(col("verdict") === "new")
           .select("doc_id", "text")
-        val served = curatedServed(refined, b.toDF().select("doc_id", "text"),
+        val served = curatedServed(refined, batch.select("doc_id", "text"),
           stateTick, outPath, batchId, legs, adm)
-        graft.io.IngestLoop.foldAdmitted(stateTick + 1, stores,
+        IngestLoop.foldAdmitted(stateTick + 1, st,
           graft.operators.Provenance.corpusDocHashes(adm),
-          adm.select("doc_id"), adm, served, Nil, legs)
-        foldQuarantine(refined, stateTick + 1, legs)
+          adm.select("doc_id"), adm, served,
+          sigs.map { case (m, s) => m.sigs ->
+            s.join(adm.select("doc_id"), Seq("doc_id"), "left_semi") },
+          legs)
+        foldQuarantine(refined, stateTick + 1, legs, sigs)
       }
       .start()
   }
@@ -376,99 +464,13 @@ object DocStream {
     * wire schema carries no `source` column to count by) and a replay
     * leg (the stream's quality gate persists no features, so the feats
     * store would lag every fold tick). */
-  private def streamLegs(legs: graft.io.IngestLoop.Legs): Unit = {
+  private def streamLegs(legs: IngestLoop.Legs): Unit = {
     require(legs.mix.isEmpty,
       "a folding stream cannot maintain a mix leg: the wire schema has " +
         "no source column")
     require(legs.replay.isEmpty,
       "a folding stream cannot maintain a replay leg: it persists no " +
         "gate features")
-  }
-
-  /** SEMANTIC leg refinement (the q135 symmetry in streaming): docs the
-    * text gates called 'new' judge against the folded RP-LSH signature
-    * state — an embedding near-dup of an earlier micro-batch's
-    * admission is caught at the next batch, like every other evidence
-    * class. Signature reads resolve through the shared tombstones, so
-    * quiesce-point takedowns reach this leg too; at a rollover boundary
-    * the sig store re-seeds like the band state
-    * ([[graft.io.IngestLoop.rolloverSem]]). */
-  private def refineSemanticLeg(batch: DataFrame,
-                                stores: graft.io.IngestLoop.Stores,
-                                legs: graft.io.IngestLoop.Legs,
-                                stateTick: Long): DataFrame = legs.sem match {
-    case None => batch
-    case Some(leg) =>
-      val flags = graft.operators.SemanticGate.flaggedAgainstState(
-        stores.lineage.resolve(
-          leg.sigs.currentUpTo(stateTick).getOrElse(
-            sys.error("semantic leg not bootstrapped"))),
-        leg.vectors,
-        batch.filter(col("verdict") === "new").select("doc_id"),
-        leg.nTables, leg.bits, leg.dim, leg.simThreshold)
-      batch.join(flags, col("doc_id") === col("sid"), "left")
-        .withColumn("verdict",
-          when(col("verdict") =!= "new", col("verdict"))
-            .when(col("sid").isNotNull, lit("dup_corpus_semantic"))
-            .otherwise(col("verdict")))
-        .drop("sid")
-  }
-
-  /** DECONTAM leg refinement (the q136 symmetry in streaming):
-    * surviving 'new' docs judge against the LIVE eval-set state
-    * (withdrawals resolve through the eval tombstones at every batch);
-    * the stream verdict is the batch evidence class itself. An eval-set
-    * UPDATE stays a quiesce-point operation — evalUpdateTick between
-    * runs retro-catches from the docGrams the fold maintains, and
-    * readjudicateTick recovers withdrawn-evidence rejections from the
-    * quarantine. */
-  private def refineContamLeg(batch: DataFrame,
-                              legs: graft.io.IngestLoop.Legs)
-      : DataFrame = legs.eval match {
-    case None => batch
-    case Some(leg) =>
-      val flags = graft.io.IngestLoop.contamFlags(leg,
-        batch.filter(col("verdict") === "new").select("doc_id", "text"))
-      batch.join(flags, col("doc_id") === col("cid"), "left")
-        .withColumn("verdict",
-          when(col("verdict") =!= "new", col("verdict"))
-            .when(col("cid").isNotNull, lit("contaminated"))
-            .otherwise(col("verdict")))
-        .drop("cid")
-  }
-
-  /** MODALITY eval channels in the mm stream (the q140 symmetry):
-    * surviving 'new' docs whose image/audio signature popcount-matches
-    * a LIVE eval item's signature verdict `contaminated` — withdrawals
-    * resolve through the shared eval tombstones at every batch, and
-    * quiesce-point updates ([[graft.io.IngestLoop.evalUpdateMmTick]])
-    * retro-catch from the loop's maintained doc sig stores. No-op for
-    * a text-only eval leg. */
-  private def refineMmEvalLeg(batch: DataFrame,
-                              legs: graft.io.IngestLoop.Legs,
-                              bISigs: DataFrame, bASigs: DataFrame)
-      : DataFrame = legs.eval match {
-    case Some(leg) if leg.imgSigs.isDefined || leg.audSigs.isDefined =>
-      import graft.multimodal.Multimodal
-      val newIds = batch.filter(col("verdict") === "new").select("doc_id")
-      def hits(store: Option[graft.io.ArtifactStore.IngestStateStore],
-               sigs: DataFrame): Option[DataFrame] =
-        store.map(s => Multimodal.flaggedAgainstState(
-            leg.lineage.resolve(s.current().getOrElse(
-              sys.error("mm eval leg not bootstrapped: no sig base"))),
-            sigs.join(newIds, Seq("doc_id"), "left_semi")
-              .filter(col("sig").isNotNull),
-            leg.maxDist, leg.maxBand)
-          .select(col("fid").as("mcid")))
-      val flags = (hits(leg.imgSigs, bISigs) ++ hits(leg.audSigs, bASigs))
-        .reduce(_ union _).distinct()
-      batch.join(flags, col("doc_id") === col("mcid"), "left")
-        .withColumn("verdict",
-          when(col("verdict") =!= "new", col("verdict"))
-            .when(col("mcid").isNotNull, lit("contaminated"))
-            .otherwise(col("verdict")))
-        .drop("mcid")
-    case _ => batch
   }
 
   /** CURATE leg (the q137 symmetry in streaming): the stream serves
@@ -493,15 +495,15 @@ object DocStream {
     * unchanged when no leg is attached). */
   private def curatedServed(refined: DataFrame, rawBatch: DataFrame,
                             stateTick: Long, outPath: String, batchId: Long,
-                            legs: graft.io.IngestLoop.Legs,
+                            legs: IngestLoop.Legs,
                             adm: DataFrame): DataFrame = legs.curate match {
     case None => adm
     case Some(cl) =>
-      val cur = graft.io.IngestLoop.curatedRows(cl, stateTick + 1,
+      val cur = IngestLoop.curatedRows(cl, stateTick + 1,
         refined.filter(col("verdict") === "new")
           .select(col("doc_id"), lit("stream").as("source"), col("text")),
         rawBatch)
-      graft.io.IngestLoop.curateAudit(cur)
+      IngestLoop.curateAudit(cur)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId/_audit")
       cur.select("doc_id", "text")
   }
@@ -510,166 +512,29 @@ object DocStream {
     * discarded holds for stream arrivals too): each micro-batch's
     * rejected docs land in the quarantine store under the same
     * batch-id-keyed tick, with the stream verdicts mapped to the batch
-    * evidence classes (`dup_corpus`/`dup_stream` → dup_exact — both are
-    * hash-state evidence after the fold-back; `dup_corpus_fuzzy` →
-    * dup_fuzzy; `low_quality` kept as is). The wire schema carries no
-    * `source` column, so quarantine rows carry the literal 'stream'.
-    * A quiesce-point takedown then recovers stream rejections through
-    * the SAME batch-side [[graft.io.IngestLoop.readjudicateTick]] —
-    * after [[graft.io.IngestLoop.rollover]] +
+    * evidence classes ([[ladderVerdict]]) and, on a multimodal loop,
+    * the docs' batch signatures — so a quiesce-point re-adjudication
+    * re-judges every evidence class without re-reading payloads. The
+    * wire schema carries no `source` column, so quarantine rows carry
+    * the literal 'stream'. A quiesce-point takedown then recovers
+    * stream rejections through the SAME batch-side
+    * [[graft.io.IngestLoop.readjudicateTick]] — after
+    * [[graft.io.IngestLoop.rollover]] +
     * [[graft.io.IngestLoop.rolloverQuarantine]], whose tick-1 re-seed
     * keeps the two bundles' tick agreements aligned (DocStreamSpec pins
     * the full boundary flow). */
   private def foldQuarantine(refined: DataFrame, tick: Long,
-                             legs: graft.io.IngestLoop.Legs): Unit =
+                             legs: IngestLoop.Legs,
+                             sigs: Seq[(IngestLoop.Modality, DataFrame)])
+      : Unit =
     legs.quar.foreach { qs =>
       val rej = refined.filter(col("verdict") =!= "new")
         .select(col("doc_id"), lit("stream").as("source"), col("text"),
-          when(col("verdict").isin("dup_corpus", "dup_stream"),
-            lit("dup_exact"))
-            .when(col("verdict") === "dup_corpus_fuzzy", lit("dup_fuzzy"))
-            .when(col("verdict") === "dup_corpus_semantic",
-              lit("dup_semantic"))
-            .otherwise(col("verdict")).as("verdict"))
-      qs.rows.appendTickAt(tick, rej)
+          ladderVerdict(col("verdict")).as("verdict"))
+      qs.rows.appendTickAt(tick, IngestLoop.quarantineLayout(rej, sigs))
       qs.resolvedIds.appendTickAt(tick,
         refined.select("doc_id").limit(0))
     }
-
-  /** MULTIMODAL folding admission — the [[graft.io.IngestLoop
-    * .runMmTick]] twin in streaming: per micro-batch, docs the exact
-    * pass called 'new' refine through fuzzy text (persisted LSH state),
-    * then image and audio perceptual signatures against the persisted
-    * sig stores (verdict precedence dup_corpus/dup_stream →
-    * dup_corpus_fuzzy → dup_image → dup_audio → low_quality → new —
-    * q118's precedence with the stream's exact layer spliced in), and
-    * ONLY admitted docs fold back into all five stores — so batch N+1
-    * rejects an image/audio near-dup of what batch N admitted, without
-    * waiting for a batch tick. Same batch-id-keyed replay discipline
-    * as [[foldingGatedAdmissionQuery]], and the same consumer legs.
-    *
-    * Takedown caveat (both folding queries): the fuzzy/signature state
-    * resolves through the shared tombstone store at every batch, so a
-    * quiesce-point [[graft.io.IngestLoop.retractTick]] between stream
-    * runs reaches them; the EXACT-hash layer, however, lives in the
-    * streaming checkpoint (seeded once from `corpusHashes`), so a
-    * takedown of exact content requires restarting the query with a
-    * fresh checkpoint re-seeded from the post-retraction hash state —
-    * run takedowns at stream restart boundaries. The same boundary
-    * governs the quality `weights`: they are frozen for the run (a
-    * literal folded into every micro-batch's scoring projection), so
-    * a takedown that unlearns the serving model
-    * ([[graft.io.ArtifactStore.ModelStore]]) or a q113 refresh takes
-    * effect at the next start — pass `modelStore.servingWeights()`
-    * there, never a stale copy. */
-  def foldingMmAdmissionQuery(docs: DataFrame, corpusHashes: DataFrame,
-                              stores: graft.io.IngestLoop.MmStores,
-                              weights: Seq[Double],
-                              outPath: String, checkpoint: String,
-                              threshold: Double = 0.2,
-                              lowFrac: Double = 0.25,
-                              maxDist: Int = 10, maxBand: Int = 64,
-                              legs: graft.io.IngestLoop.Legs =
-                                graft.io.IngestLoop.Legs())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.multimodal.Multimodal
-    streamLegs(legs)
-    admissionStreamWithText(docs, corpusHashes)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[AdmissionDoc], batchId: Long) =>
-        val stateTick = batchId + 1
-        val rs = (df: DataFrame) => stores.text.lineage.resolve(df)
-        val fuzzed = refineFuzzy(b.toDF(),
-          rs(stores.text.bands.currentUpTo(stateTick).get),
-          rs(stores.text.shingles.currentUpTo(stateTick).get), threshold)
-        // batch signatures derive once at the codec seam for the WHOLE
-        // micro-batch (the runMmTick convention — the quarantine leg
-        // needs every rejected doc's sigs as its mm evidence); severed —
-        // read by the flag joins, the fold-back, AND the quarantine
-        val bISigs = Multimodal.imageSigs(b.toDF().select("doc_id"))
-          .localCheckpoint()
-        val bASigs = Multimodal.audioSigs(b.toDF().select("doc_id"))
-          .localCheckpoint()
-        // the r12-verdict symmetry: the mm BATCH tick gates seven
-        // classes; the stream applies the same extra evidence legs
-        // here, BEFORE the dedup modality signatures — eval/text
-        // evidence outranks modality DEDUP signatures (the q133
-        // cross-evidence discipline, the Provenance.Evidence ladder's
-        // precedence), and an mm eval leg's q140 channels
-        // judge the batch sigs against the LIVE eval media
-        val evaled = refineMmEvalLeg(
-          refineContamLeg(
-            refineSemanticLeg(fuzzed, stores.text, legs, stateTick), legs),
-          legs, bISigs, bASigs)
-        val imFlag = Multimodal.flaggedAgainstState(
-            rs(stores.imgSigs.currentUpTo(stateTick).get),
-            bISigs, maxDist, maxBand)
-          .select(col("fid").as("ifid"))
-        val auFlag = Multimodal.flaggedAgainstState(
-            rs(stores.audSigs.currentUpTo(stateTick).get),
-            bASigs, maxDist, maxBand)
-          .select(col("fid").as("afid"))
-        val mmRefined = evaled
-          .join(imFlag, col("doc_id") === col("ifid"), "left")
-          .join(auFlag, col("doc_id") === col("afid"), "left")
-          .withColumn("verdict",
-            when(col("verdict") =!= "new", col("verdict"))
-              .when(col("ifid").isNotNull, lit("dup_corpus_image"))
-              .when(col("afid").isNotNull, lit("dup_corpus_audio"))
-              .otherwise(col("verdict")))
-          .select("doc_id", "h", "verdict", "text")
-        val refined = refineQuality(mmRefined, weights, lowFrac)
-          .localCheckpoint()
-        refined.drop("text")
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        val adm = refined.filter(col("verdict") === "new")
-          .select("doc_id", "text")
-        val served = curatedServed(refined, b.toDF().select("doc_id", "text"),
-          stateTick, outPath, batchId, legs, adm)
-        graft.io.IngestLoop.foldAdmitted(stateTick + 1, stores.text,
-          graft.operators.Provenance.corpusDocHashes(adm),
-          adm.select("doc_id"), adm, served,
-          Seq(stores.imgSigs ->
-              bISigs.join(adm.select("doc_id"), Seq("doc_id"), "left_semi"),
-            stores.audSigs ->
-              bASigs.join(adm.select("doc_id"), Seq("doc_id"), "left_semi")),
-          legs)
-        // the mm QUARANTINE fold (rejected ≠ discarded for stream
-        // arrivals of every modality — the text twin's q131 symmetry):
-        // rejected docs land with their 8-byte signatures so a
-        // quiesce-point readjudicateMmTick re-judges all evidence
-        // classes without re-reading payloads, after rollover +
-        // rolloverQuarantine re-seed the bundle (the restart-boundary
-        // contract). Verdicts map to the batch evidence classes as in
-        // the text fold.
-        legs.quar.foreach { qs =>
-          val rej = refined.filter(col("verdict") =!= "new")
-            .select(col("doc_id"), lit("stream").as("source"), col("text"),
-              when(col("verdict").isin("dup_corpus", "dup_stream"),
-                lit("dup_exact"))
-                .when(col("verdict") === "dup_corpus_fuzzy",
-                  lit("dup_fuzzy"))
-                .when(col("verdict") === "dup_corpus_semantic",
-                  lit("dup_semantic"))
-                .when(col("verdict") === "dup_corpus_image",
-                  lit("dup_image"))
-                .when(col("verdict") === "dup_corpus_audio",
-                  lit("dup_audio"))
-                .otherwise(col("verdict")).as("verdict"))
-            .join(bISigs.select(col("doc_id"), col("sig").as("img_sig")),
-              Seq("doc_id"), "left")
-            .join(bASigs.select(col("doc_id"), col("sig").as("aud_sig")),
-              Seq("doc_id"), "left")
-            .select("doc_id", "source", "text", "img_sig", "aud_sig",
-              "verdict")
-          qs.rows.appendTickAt(stateTick + 1, rej)
-          qs.resolvedIds.appendTickAt(stateTick + 1,
-            refined.select("doc_id").limit(0))
-        }
-      }
-      .start()
-  }
 
   /** JSONL wire schema for a document drop directory. */
   val JsonlDocSchema: StructType = StructType(Seq(

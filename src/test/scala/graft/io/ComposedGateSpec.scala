@@ -117,13 +117,13 @@ class ComposedGateSpec extends AnyFunSuite {
   test("contamination leg in the unified mm loop: text evidence outranks a modality signature; a withdrawal-released doc stays held by its independent image evidence") {
     val root = Files.createTempDirectory("graft_mm_eval").toString
     val st = IngestLoop.mmStores(spark, root, "mmev")
-    IngestLoop.bootstrapMm(st, corpus)
+    IngestLoop.bootstrap(st, corpus)
     val eleg = IngestLoop.evalLeg(spark, root, "mmev")
     IngestLoop.bootstrapEval(eleg, corpus, Decontam.eval1Docs(docs))
     val quar = IngestLoop.quarantine(spark, root, "mmev")
     IngestLoop.bootstrapMmQuarantine(quar, corpus)
 
-    val rep = IngestLoop.runMmTick(st, t1, weights,
+    val rep = IngestLoop.runTick(st, t1, weights,
       legs = IngestLoop.Legs(quar = Some(quar), eval = Some(eleg))).collect()
     // columns: source, n_batch, exact, fuzzy, CONTAMINATED, image,
     // audio, lowq, new
@@ -150,7 +150,7 @@ class ComposedGateSpec extends AnyFunSuite {
     // still holds, and the doc stays re-judgeable, not resolved.
     IngestLoop.evalUpdateTick(st.text, eleg, Decontam.eval2Docs(docs),
       Decontam.withdrawEvalIds(docs))
-    val rr = IngestLoop.readjudicateMmTick(st, quar, weights,
+    val rr = IngestLoop.readjudicateTick(st, quar, weights,
       legs = IngestLoop.Legs(eval = Some(eleg))).collect()
     // extras=[cid] columns: source, n_quarantined, n_exact_t1,
     // n_fuzzy_t1, n_contam_t1, n_image_t1, n_audio_t1, n_still_exact,

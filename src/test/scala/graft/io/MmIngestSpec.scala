@@ -40,8 +40,8 @@ class MmIngestSpec extends AnyFunSuite {
     assert(live.map(_(4).asInstanceOf[Long]).sum > 0, "audio leg idle")
 
     val st = IngestLoop.mmStores(spark, root, "mm1")
-    IngestLoop.bootstrapMm(st, corpus)
-    assert(rows(IngestLoop.runMmTick(st, batch, w)) === live,
+    IngestLoop.bootstrap(st, corpus)
+    assert(rows(IngestLoop.runTick(st, batch, w)) === live,
       "store-backed multimodal tick must equal the oracle-checked live q118")
   }
 
@@ -56,15 +56,15 @@ class MmIngestSpec extends AnyFunSuite {
 
     // folded loop: two ticks
     val st = IngestLoop.mmStores(spark, root, "fold")
-    IngestLoop.bootstrapMm(st, corpus)
-    val rep1 = IngestLoop.runMmTick(st, t1, w).collect()
+    IngestLoop.bootstrap(st, corpus)
+    val rep1 = IngestLoop.runTick(st, t1, w).collect()
     assert(rep1.map(_.getLong(6)).sum > 0, "tick 1 must admit something")
-    val rep2 = rows(IngestLoop.runMmTick(st, t2, w))
+    val rep2 = rows(IngestLoop.runTick(st, t2, w))
 
     // fold-free control: tick 2 against bootstrap-only state
     val ctrl = IngestLoop.mmStores(spark, root, "nofold")
-    IngestLoop.bootstrapMm(ctrl, corpus)
-    val rep2NoFold = rows(IngestLoop.runMmTick(ctrl, t2, w))
+    IngestLoop.bootstrap(ctrl, corpus)
+    val rep2NoFold = rows(IngestLoop.runTick(ctrl, t2, w))
 
     // decisive per MODALITY: tick-2 docs whose only image/audio
     // partners are tick-1 admissions (id%7==3 → partner id-3 is class
@@ -79,10 +79,10 @@ class MmIngestSpec extends AnyFunSuite {
     // content) but the other stores' never did — the five-store
     // agreement must redo the tick, not compound it
     val stC = IngestLoop.mmStores(spark, root, "crash")
-    IngestLoop.bootstrapMm(stC, corpus)
+    IngestLoop.bootstrap(stC, corpus)
     stC.imgSigs.appendTickAt(2, Multimodal.imageSigs(t1))
     assert(stC.imgSigs.maxTick === 2L && stC.audSigs.maxTick === 1L)
-    val replay = rows(IngestLoop.runMmTick(stC, t1, w))
+    val replay = rows(IngestLoop.runTick(stC, t1, w))
     assert(replay === rep1.toSeq.map(r =>
       (0 until r.length).map(i => if (r.isNullAt(i)) null else r.get(i))),
       "replayed multimodal tick must reproduce the clean verdicts")
@@ -94,13 +94,13 @@ class MmIngestSpec extends AnyFunSuite {
     // fold-free control (as if tick 1 never folded). Fresh loop so the
     // earlier tick-2 fold doesn't interfere.
     val stR = IngestLoop.mmStores(spark, root, "retr")
-    IngestLoop.bootstrapMm(stR, corpus)
-    IngestLoop.runMmTick(stR, t1, w)
+    IngestLoop.bootstrap(stR, corpus)
+    IngestLoop.runTick(stR, t1, w)
     val adm1Ids = stR.text.hashes.current().get
       .join(corpus.select("doc_id"), Seq("doc_id"), "left_anti")
       .select("doc_id")
     IngestLoop.retractTick(stR.text, adm1Ids)
-    assert(rows(IngestLoop.runMmTick(stR, t2, w)) === rep2NoFold,
+    assert(rows(IngestLoop.runTick(stR, t2, w)) === rep2NoFold,
       "retracting every tick-1 admission must restore the fold-free verdicts on every modality")
   }
 
@@ -130,11 +130,11 @@ class MmIngestSpec extends AnyFunSuite {
     // store form: bootstrap the five stores, retract via the SHARED
     // tombstone store (one takedown, every modality), judge the batch
     val st = IngestLoop.mmStores(spark, root, "retr126")
-    IngestLoop.bootstrapMm(st, corpus)
+    IngestLoop.bootstrap(st, corpus)
     val retracted = corpus.select("doc_id").filter(
       pmod(col("doc_id"), lit(Provenance.RetractMod)) === Provenance.RetractRem)
     IngestLoop.retractTick(st.text, retracted)
-    assert(rows(IngestLoop.runMmTick(st, batch, w)) === live,
+    assert(rows(IngestLoop.runTick(st, batch, w)) === live,
       "store-backed post-takedown mm tick must equal the live q126")
   }
 
@@ -150,7 +150,7 @@ class MmIngestSpec extends AnyFunSuite {
 
     def build(name: String) = {
       val st = IngestLoop.mmStores(spark, root, name)
-      IngestLoop.bootstrapMm(st, corpus)
+      IngestLoop.bootstrap(st, corpus)
       val idx = ArtifactStore.bm25Incremental(spark, root, name)
       idx.bootstrap(corpus)
       val cen = ArtifactStore.gramCensusIncremental(spark, root, s"${name}_cen")
@@ -162,7 +162,7 @@ class MmIngestSpec extends AnyFunSuite {
     val (st, idx, cen, ex) = build("legs")
     val mx = ArtifactStore.mixIncremental(spark, root, "legs_mx")
     mx.bootstrap(corpus)
-    val rep1 = rows(IngestLoop.runMmTick(st, t1, w,
+    val rep1 = rows(IngestLoop.runTick(st, t1, w,
       legs = IngestLoop.Legs(idx = Some(idx), census = Some(cen),
         export = Some(IngestLoop.ExportLeg(ex, ms)), mix = Some(mx))))
     assert(rep1.nonEmpty)
@@ -195,10 +195,10 @@ class MmIngestSpec extends AnyFunSuite {
 
     // a lagging consumer leg forces the whole-tick redo
     val (stB, idxB, cenB, exB) = build("legs_crash")
-    IngestLoop.runMmTick(stB, t1, w,
+    IngestLoop.runTick(stB, t1, w,
       legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB)))
     assert(exB.maxTick === 1L && stB.audSigs.maxTick === 2L)
-    val replay = rows(IngestLoop.runMmTick(stB, t1, w,
+    val replay = rows(IngestLoop.runTick(stB, t1, w,
       legs = IngestLoop.Legs(idx = Some(idxB), census = Some(cenB),
         export = Some(IngestLoop.ExportLeg(exB, ms)))))
     assert(replay === rep1, "the redone mm tick must reproduce the verdicts")
@@ -216,12 +216,12 @@ class MmIngestSpec extends AnyFunSuite {
       scope = s"multitick${Provenance.BatchMod}")
 
     val st = IngestLoop.mmStores(spark, root, "mmsem")
-    IngestLoop.bootstrapMm(st, corpus)
+    IngestLoop.bootstrap(st, corpus)
     val leg = IngestLoop.semLeg(spark, root, "mmsem", emb)
     IngestLoop.bootstrapSem(leg, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmsem")
     IngestLoop.bootstrapMmQuarantine(quar, corpus)
-    val rep1 = IngestLoop.runMmTick(st, t1, w,
+    val rep1 = IngestLoop.runTick(st, t1, w,
       legs = IngestLoop.Legs(sem = Some(leg), quar = Some(quar))).collect()
     // sem report: src, n_batch, exact, fuzzy, SEMANTIC, image, audio,
     // lowq, new
@@ -229,7 +229,7 @@ class MmIngestSpec extends AnyFunSuite {
       "tick 1's semantic leg must fire in the unified loop")
     assert(rep1.map(_.getLong(5)).sum > 0 && rep1.map(_.getLong(6)).sum > 0,
       "the image/audio legs must keep firing next to the semantic one")
-    IngestLoop.runMmTick(st, t2, w,
+    IngestLoop.runTick(st, t2, w,
       legs = IngestLoop.Legs(sem = Some(leg), quar = Some(quar)))
     assert(quar.rows.current().get.filter(col("doc_id") === 425L)
       .select("verdict").collect().map(_.getString(0)).toSeq
@@ -245,7 +245,7 @@ class MmIngestSpec extends AnyFunSuite {
       legs = IngestLoop.Legs(quar = Some(quar), sem = Some(leg)))
     assert((st.all.map(_.maxTick) :+ leg.sigs.maxTick).distinct.size === 1,
       "the sem sig store advances with the mm takedown tick")
-    val rep = IngestLoop.readjudicateMmTick(st, quar, w,
+    val rep = IngestLoop.readjudicateTick(st, quar, w,
       legs = IngestLoop.Legs(sem = Some(leg)))
       .collect()
     // sem readj report: src, n_quarantined, exact_t1, fuzzy_t1, sem_t1,
@@ -275,10 +275,10 @@ class MmIngestSpec extends AnyFunSuite {
         "signature-evidence rejections to re-judge")
 
     val st = IngestLoop.mmStores(spark, root, "mmreadj")
-    IngestLoop.bootstrapMm(st, corpus)
+    IngestLoop.bootstrap(st, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmreadj")
     IngestLoop.bootstrapMmQuarantine(quar, corpus)
-    IngestLoop.runMmTick(st, batch, w,
+    IngestLoop.runTick(st, batch, w,
       legs = IngestLoop.Legs(quar = Some(quar)))
     val retracted = st.text.hashes.current().get.select("doc_id").filter(
       pmod(col("doc_id"), lit(Provenance.RetractMod)) ===
@@ -294,7 +294,7 @@ class MmIngestSpec extends AnyFunSuite {
       === Seq(3L),
       "all five mm stores AND both quarantine stores advance to the " +
         "takedown tick together")
-    val rep = rows(IngestLoop.readjudicateMmTick(st, quar, w))
+    val rep = rows(IngestLoop.readjudicateTick(st, quar, w))
     assert(rep === live,
       "the store-backed mm re-adjudication must equal the live q133")
 
@@ -305,7 +305,7 @@ class MmIngestSpec extends AnyFunSuite {
         Seq("doc_id"), "left_semi")
     val nReadm = readm.count()
     assert(nReadm === leg(11))
-    val resub = IngestLoop.runMmTick(st,
+    val resub = IngestLoop.runTick(st,
       docs.join(readm, Seq("doc_id"), "left_semi"), w).collect()
     assert(resub.map(_.getLong(2)).sum === nReadm,
       "every resubmitted re-admitted doc must be dup_exact")
@@ -320,13 +320,13 @@ class MmIngestSpec extends AnyFunSuite {
       scope = s"multitick${Provenance.BatchMod}")
 
     val st = IngestLoop.mmStores(spark, root, "mmrp")
-    IngestLoop.bootstrapMm(st, corpus)
+    IngestLoop.bootstrap(st, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmrp")
     IngestLoop.bootstrapMmQuarantine(quar, corpus)
     val replay = IngestLoop.replayLeg(spark, root, "mmrp")
     IngestLoop.bootstrapReplay(replay, corpus)
 
-    val rep = IngestLoop.runMmTick(st, t1, w,
+    val rep = IngestLoop.runTick(st, t1, w,
       legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay)))
       .collect()
     val novel = rep.map(r => r.getAs[Long]("n_low_quality") +
@@ -339,11 +339,11 @@ class MmIngestSpec extends AnyFunSuite {
     assert(t2Feats === novel,
       "the mm tick's novel cohort persists its gate features")
 
-    // before the fix: runMmTick had no replay param, feats lagged at
+    // before the fix: the mm tick had no replay param, feats lagged at
     // tick 1, and this replay-attached re-adjudication's agreement
     // resolved to tick 2 — silently overwriting the ingest tick's
     // five-store increments
-    IngestLoop.readjudicateMmTick(st, quar, w,
+    IngestLoop.readjudicateTick(st, quar, w,
       legs = IngestLoop.Legs(replay = Some(replay)))
     assert(st.text.hashes.maxTick === 3L && replay.feats.maxTick === 3L,
       "the re-adjudication lands at tick 3, never ON the ingest tick")
@@ -368,7 +368,7 @@ class MmIngestSpec extends AnyFunSuite {
       scope = s"decontam${Provenance.BatchMod}")
 
     val st = IngestLoop.mmStores(spark, root, "mmq140")
-    IngestLoop.bootstrapMm(st, corpus)
+    IngestLoop.bootstrap(st, corpus)
     val leg = IngestLoop.mmEvalLeg(spark, root, "mmq140")
     IngestLoop.bootstrapEval(leg, corpus, Decontam.eval1Docs(docs))
     val quar = IngestLoop.quarantine(spark, root, "mmq140")
@@ -379,7 +379,7 @@ class MmIngestSpec extends AnyFunSuite {
     // 437 renders eval item 435's AUDIO (435 survives: the hold
     // direction) — neither eval item is in the corpus, so the only
     // evidence is the eval channel
-    IngestLoop.runMmTick(st, t1, w,
+    IngestLoop.runTick(st, t1, w,
       legs = IngestLoop.Legs(quar = Some(quar), eval = Some(leg)))
     val qv = quar.rows.current().get
       .select("doc_id", "verdict").collect()
@@ -392,7 +392,7 @@ class MmIngestSpec extends AnyFunSuite {
     // the update: item 7 withdraws, set 2 adds; the retro-catch probes
     // the loop's MAINTAINED doc sig stores — corpus doc 262 renders
     // added item 259's image and 247 renders 245's audio
-    val caught = IngestLoop.evalUpdateMmTick(st, leg,
+    val caught = IngestLoop.evalUpdateTick(st, leg,
       Decontam.eval2Docs(docs), Decontam.withdrawEvalIds(docs))
     val caughtIds = caught.collect().map(_.getLong(0)).toSet
     assert(caughtIds.contains(262L),
@@ -402,7 +402,7 @@ class MmIngestSpec extends AnyFunSuite {
 
     // re-adjudication with the leg: 10 re-admits (withdrawn evidence),
     // 437 stays held by the surviving item's signature
-    IngestLoop.readjudicateMmTick(st, quar, w,
+    IngestLoop.readjudicateTick(st, quar, w,
       legs = IngestLoop.Legs(eval = Some(leg)))
     val resolved = quar.resolvedIds.current().get
       .collect().map(_.getLong(0)).toSet
@@ -421,12 +421,12 @@ class MmIngestSpec extends AnyFunSuite {
       scope = s"multitick${Provenance.BatchMod}")
 
     val st = IngestLoop.mmStores(spark, root, "mmrg")
-    IngestLoop.bootstrapMm(st, corpus)
+    IngestLoop.bootstrap(st, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmrg")
     IngestLoop.bootstrapMmQuarantine(quar, corpus)
     val replay = IngestLoop.replayLeg(spark, root, "mmrg")
     IngestLoop.bootstrapReplay(replay, corpus)
-    IngestLoop.runMmTick(st, t1, w,
+    IngestLoop.runTick(st, t1, w,
       legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay)))
     assert(quar.rows.current().get
       .filter(col("verdict") === "low_quality").count() > 0)
@@ -449,7 +449,7 @@ class MmIngestSpec extends AnyFunSuite {
       "re-admitted docs' stored image signatures fold into the state")
     // fold-back pin: a resubmitted exact copy of every re-admitted doc
     // rejects at the next mm tick
-    val resub = IngestLoop.runMmTick(st,
+    val resub = IngestLoop.runTick(st,
       docs.join(readm, Seq("doc_id"), "left_semi"), w).collect()
     assert(resub.map(_.getLong(2)).sum === nReadm,
       "every re-admitted doc's resubmitted copy must be dup_exact")
@@ -465,10 +465,10 @@ class MmIngestSpec extends AnyFunSuite {
       scope = s"decontam${Provenance.BatchMod}")
 
     val st = IngestLoop.mmStores(spark, root, "mmce")
-    IngestLoop.bootstrapMm(st, corpus)
+    IngestLoop.bootstrap(st, corpus)
     val leg = IngestLoop.evalLeg(spark, root, "mmce")
     IngestLoop.bootstrapEval(leg, corpus, Decontam.eval1Docs(docs))
-    IngestLoop.runMmTick(st, t1, w, legs = IngestLoop.Legs(eval = Some(leg)))
+    IngestLoop.runTick(st, t1, w, legs = IngestLoop.Legs(eval = Some(leg)))
 
     // severed: re-read after the compaction deletes the folded tick
     // files it was derived from
@@ -500,14 +500,14 @@ class MmIngestSpec extends AnyFunSuite {
 
     def build(name: String) = {
       val st = IngestLoop.mmStores(spark, root, name)
-      IngestLoop.bootstrapMm(st, corpus)
+      IngestLoop.bootstrap(st, corpus)
       val leg = IngestLoop.mmEvalLeg(spark, root, name)
       IngestLoop.bootstrapEval(leg, corpus, Decontam.eval1Docs(docs))
       (st, leg)
     }
 
     val (stA, legA) = build("uid_clean")
-    val caughtClean = IngestLoop.evalUpdateMmTick(stA, legA,
+    val caughtClean = IngestLoop.evalUpdateTick(stA, legA,
       Decontam.eval2Docs(docs), Decontam.withdrawEvalIds(docs))
       .collect().map(_.getLong(0)).toSet
     val cleanBands = legA.bands.current().get.count()
@@ -528,7 +528,7 @@ class MmIngestSpec extends AnyFunSuite {
     legB.bands.appendTickAt(2, graft.operators.Fuzzy.corpusBandState(add))
     legB.shingles.appendTickAt(2,
       graft.operators.Fuzzy.corpusShingleHashes(add))
-    val caughtB = IngestLoop.evalUpdateMmTick(stB, legB,
+    val caughtB = IngestLoop.evalUpdateTick(stB, legB,
       add, Decontam.withdrawEvalIds(docs))
       .collect().map(_.getLong(0)).toSet
     assert((Seq(legB.grams, legB.bands, legB.shingles, legB.tombs) ++
@@ -546,7 +546,7 @@ class MmIngestSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_mm_quiesce").toString
     val emb = Tables.load(spark, sf, "embeddings")
     val st = IngestLoop.mmStores(spark, root, "mmq")
-    IngestLoop.bootstrapMm(st, docs)
+    IngestLoop.bootstrap(st, docs)
     // the q141 drift fixture on the mm loop's text lineage
     val sized = IngestLoop.semLegSized(spark, root, "mmq",
       emb.orderBy("vec_id").limit(100))

@@ -249,7 +249,7 @@ class QuiesceBundleSpec extends AnyFunSuite {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_q_mmquar").toString
     val st = IngestLoop.mmStores(spark, root, "mmq16")
-    IngestLoop.bootstrapMm(st, corpus)
+    IngestLoop.bootstrap(st, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmq16")
     IngestLoop.bootstrapQuarantine(quar, corpus)
     val rleg = IngestLoop.replayLeg(spark, root, "mmq16")

@@ -53,7 +53,7 @@ class TickAgreementSpec extends AnyFunSuite {
     val st: IngestLoop.StoreSet =
       if (mm) {
         val s = IngestLoop.mmStores(spark, root, name)
-        IngestLoop.bootstrapMm(s, corpus)
+        IngestLoop.bootstrap(s, corpus)
         s
       } else {
         val s = IngestLoop.stores(spark, root, name)
@@ -132,9 +132,9 @@ class TickAgreementSpec extends AnyFunSuite {
     val st = l.st.asInstanceOf[IngestLoop.MmStores]
     val legs = l.legs(withMix = true)
     chain(l, legs) {
-      IngestLoop.runMmTick(st, batch, weights, legs = legs).collect()
+      IngestLoop.runTick(st, batch, weights, legs = legs).collect()
     } {
-      IngestLoop.readjudicateMmTick(st, l.quar, weights, legs = legs)
+      IngestLoop.readjudicateTick(st, l.quar, weights, legs = legs)
         .collect()
     }
     assert(st.all.size === 5)
@@ -187,9 +187,9 @@ class TickAgreementSpec extends AnyFunSuite {
     val l = build(root, "agree_mmcur", mm = true)
     val st = l.st.asInstanceOf[IngestLoop.MmStores]
     val legs = l.legs(withMix = false, curate = true)
-    refusedBeforeAnyMove(l)(IngestLoop.runMmTick(st, batch, weights,
+    refusedBeforeAnyMove(l)(IngestLoop.runTick(st, batch, weights,
       legs = legs))
-    refusedBeforeAnyMove(l)(IngestLoop.readjudicateMmTick(st, l.quar,
+    refusedBeforeAnyMove(l)(IngestLoop.readjudicateTick(st, l.quar,
       weights, legs = legs))
   }
 
@@ -222,7 +222,7 @@ class TickAgreementSpec extends AnyFunSuite {
         s"$root/ck", legs = IngestLoop.Legs(mix = Some(l.mix)))
     }
     refusedBeforeAnyMove(mm) {
-      graft.streaming.DocStream.foldingMmAdmissionQuery(batch, hashes,
+      graft.streaming.DocStream.foldingGatedAdmissionQuery(batch, hashes,
         mm.st.asInstanceOf[IngestLoop.MmStores], weights, s"$root/out_mm",
         s"$root/ck_mm", legs = IngestLoop.Legs(replay = Some(mm.replay)))
     }

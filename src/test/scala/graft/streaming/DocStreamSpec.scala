@@ -620,7 +620,7 @@ class DocStreamSpec extends AnyFunSuite {
     val e = DocStream.Doc(900120L, 2 * HourNs, toks("nov"))
 
     val st = graft.io.IngestLoop.mmStores(spark, artRoot, "mmfold")
-    graft.io.IngestLoop.bootstrapMm(st, documents)
+    graft.io.IngestLoop.bootstrap(st, documents)
 
     val dir = Files.createTempDirectory("graft_mmfold_jsonl")
     val ckpt = Files.createTempDirectory("graft_mmfold_ckpt").toString
@@ -634,7 +634,7 @@ class DocStreamSpec extends AnyFunSuite {
         DocStream.JsonlDocSchema)
         .filter(col(graft.io.JsonLines.CorruptCol).isNull)
         .drop(graft.io.JsonLines.CorruptCol)
-      DocStream.foldingMmAdmissionQuery(raw,
+      DocStream.foldingGatedAdmissionQuery(raw,
         hashes.select(col("ch").as("h")), st, w, outDir, ckpt,
         lowFrac = 0.0)
     }
@@ -906,7 +906,7 @@ class DocStreamSpec extends AnyFunSuite {
     val d = DocStream.Doc(900217L, 2 * HourNs, toks("qab"))
 
     val st = graft.io.IngestLoop.mmStores(spark, artRoot, "mmsq")
-    graft.io.IngestLoop.bootstrapMm(st, documents)
+    graft.io.IngestLoop.bootstrap(st, documents)
     val quar = graft.io.IngestLoop.quarantine(spark, artRoot, "mmsq")
     graft.io.IngestLoop.bootstrapMmQuarantine(quar, documents)
 
@@ -920,7 +920,7 @@ class DocStreamSpec extends AnyFunSuite {
         DocStream.JsonlDocSchema)
         .filter(col(graft.io.JsonLines.CorruptCol).isNull)
         .drop(graft.io.JsonLines.CorruptCol)
-      DocStream.foldingMmAdmissionQuery(raw, hashes.select(col("ch").as("h")),
+      DocStream.foldingGatedAdmissionQuery(raw, hashes.select(col("ch").as("h")),
         st, w, out, ckpt, lowFrac = 0.0,
         legs = graft.io.IngestLoop.Legs(quar = Some(quar)))
     }
@@ -950,10 +950,10 @@ class DocStreamSpec extends AnyFunSuite {
     graft.io.IngestLoop.retractTick(st,
       spark.range(1).select(lit(900298L).as("doc_id")),
       legs = graft.io.IngestLoop.Legs(quar = Some(quar)))
-    val st2 = graft.io.IngestLoop.rolloverMm(st, spark, artRoot, "mmsq2")
+    val st2 = graft.io.IngestLoop.rollover(st, spark, artRoot, "mmsq2")
     val quar2 = graft.io.IngestLoop.rolloverQuarantine(st.text, quar,
       spark, artRoot, "mmsq2")
-    val rep = graft.io.IngestLoop.readjudicateMmTick(st2, quar2, w,
+    val rep = graft.io.IngestLoop.readjudicateTick(st2, quar2, w,
       lowFrac = 0.0).collect()
     assert(rep.length === 1 && rep.head.getString(0) === "stream")
     assert(rep.head.getLong(4) === 1L && rep.head.getLong(5) === 1L,
@@ -1279,7 +1279,7 @@ class DocStreamSpec extends AnyFunSuite {
       DocStream.Doc(204L, 2 * HourNs, docText(204L)))
 
     val st = graft.io.IngestLoop.mmStores(spark, artRoot, "smm")
-    graft.io.IngestLoop.bootstrapMm(st, corpus)
+    graft.io.IngestLoop.bootstrap(st, corpus)
     val semL = graft.io.IngestLoop.semLeg(spark, artRoot, "smm", emb)
     graft.io.IngestLoop.bootstrapSem(semL, corpus)
     val evalL = graft.io.IngestLoop.evalLeg(spark, artRoot, "smm")
@@ -1299,7 +1299,7 @@ class DocStreamSpec extends AnyFunSuite {
       .drop(graft.io.JsonLines.CorruptCol)
     val seed = st.text.hashes.currentUpTo(1).get
       .select(col("ch").as("h")).distinct()
-    val q = DocStream.foldingMmAdmissionQuery(raw, seed, st, w, out, ckpt,
+    val q = DocStream.foldingGatedAdmissionQuery(raw, seed, st, w, out, ckpt,
       lowFrac = 0.0,
       legs = graft.io.IngestLoop.Legs(quar = Some(quar), sem = Some(semL),
         eval = Some(evalL)))
@@ -1343,7 +1343,7 @@ class DocStreamSpec extends AnyFunSuite {
     graft.io.IngestLoop.evalUpdateTick(st.text, evalL,
       graft.operators.Decontam.eval2Docs(documents),
       graft.operators.Decontam.withdrawEvalIds(documents))
-    val st2 = graft.io.IngestLoop.rolloverMm(st, spark, artRoot, "smm2")
+    val st2 = graft.io.IngestLoop.rollover(st, spark, artRoot, "smm2")
     val semL2 = graft.io.IngestLoop.rolloverSem(st.text, semL,
       spark, artRoot, "smm2")
     val evalL2 = graft.io.IngestLoop.rolloverEval(st.text, evalL,
@@ -1353,7 +1353,7 @@ class DocStreamSpec extends AnyFunSuite {
     assert(semL2.sigs.current().get
       .filter(col("doc_id") === 287L).count() === 0L,
       "the rolled sig state physically drops the retracted doc's rows")
-    graft.io.IngestLoop.readjudicateMmTick(st2, quar2, w, lowFrac = 0.0,
+    graft.io.IngestLoop.readjudicateTick(st2, quar2, w, lowFrac = 0.0,
       legs = graft.io.IngestLoop.Legs(sem = Some(semL2),
         eval = Some(evalL2))).collect()
     val resolved = quar2.resolvedIds.current().get
@@ -1450,7 +1450,7 @@ class DocStreamSpec extends AnyFunSuite {
       scope = "mmconsspec")
     val ms = graft.operators.Bpe.merges(documents)
     val st = graft.io.IngestLoop.mmStores(spark, artRoot, "mmcons")
-    graft.io.IngestLoop.bootstrapMm(st, documents)
+    graft.io.IngestLoop.bootstrap(st, documents)
     val ex = graft.io.ArtifactStore.packedExport(
       spark, artRoot, "mmcons_ex", 128)
     ex.bootstrap(documents, ms)
@@ -1477,7 +1477,7 @@ class DocStreamSpec extends AnyFunSuite {
       .filter(col(graft.io.JsonLines.CorruptCol).isNull)
       .drop(graft.io.JsonLines.CorruptCol)
     drop("b0.jsonl", Seq(a, e))
-    val sq = DocStream.foldingMmAdmissionQuery(raw,
+    val sq = DocStream.foldingGatedAdmissionQuery(raw,
       hashes.select(col("ch").as("h")), st, w, out, ckpt, lowFrac = 0.0,
       legs = graft.io.IngestLoop.Legs(export = Some(leg)))
     try {
