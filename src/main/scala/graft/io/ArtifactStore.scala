@@ -1,6 +1,8 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,7 +27,8 @@ import graft.operators.{Bpe, Fuzzy, Kmeans, Pq, Provenance, QualityModel, StageS
   *
   * All filesystem access goes through Hadoop's FileSystem API — the
   * store works unchanged against HDFS/S3A object stores, not just
-  * local disk. Loads read O(artifact) rows (20 merges, k×dim
+  * local disk. Every store here and in PackedExport.scala commits by
+  * the one rule this object's filesystem plumbing defines. Loads read O(artifact) rows (20 merges, k×dim
   * centroids); only the corpus-hash state stays a DataFrame (it is
   * ~N rows of 8-byte hashes and must never be collected).
   *
@@ -67,30 +70,94 @@ object ArtifactStore {
     fingerprint(embeddings, "vec_id",
       concat_ws(",", col("embedding").cast("array<string>")))
 
-  // ---- filesystem plumbing ---------------------------------------------
+  // ---- filesystem plumbing: the commit rule ---------------------------
+  //
+  // The one definition of what a store's directory means on disk:
+  //  - a directory counts only once its `_SUCCESS` marker exists —
+  //    Spark's writer creates it after the data, and [[commit]] writes
+  //    it last for a directory a store assembles itself — so a killed
+  //    half-write is invisible and its producer simply re-runs;
+  //  - among `prefix=N` children the newest committed one serves;
+  //  - whatever it shadows no read can pick, so it is collectable in
+  //    any order ([[drop]]).
+  // A store call lists its directory once ([[listing]]) and derives
+  // every set it needs from that listing; nothing is cached across
+  // calls.
 
-  private[io] def fs(spark: SparkSession, path: String) =
+  private[io] def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** An artifact exists iff its directory holds Spark's _SUCCESS marker
-    * — a killed half-written save is invisible and gets re-trained. */
+  private val Marker = "_SUCCESS"
+
+  private def hasMarker(f: FileSystem, dir: Path): Boolean =
+    f.exists(new Path(dir, Marker))
+
+  /** Whether the directory at `path` is committed. */
   private[io] def exists(spark: SparkSession, path: String): Boolean =
-    fs(spark, path).exists(new Path(path, "_SUCCESS"))
+    hasMarker(fs(spark, path), new Path(path))
+
+  /** Commit the directory at `path`: its marker, written after
+    * everything it covers. */
+  private[io] def commit(spark: SparkSession, path: String): Unit =
+    fs(spark, path).create(new Path(path, Marker), true).close()
+
+  /** One listing of the child directories of `dir`; a missing `dir`
+    * lists as empty. */
+  private[io] def listing(spark: SparkSession, dir: String): Listing = {
+    val f = fs(spark, dir)
+    val dirs =
+      try f.listStatus(new Path(dir)).toSeq.filter(_.isDirectory).map(_.getPath)
+      catch { case _: FileNotFoundException => Seq.empty }
+    new Listing(f, dir, dirs)
+  }
+
+  /** The child directories of one [[listing]]. A child's marker is
+    * probed only when a caller asks whether it is committed. */
+  private[io] final class Listing private[ArtifactStore] (
+      f: FileSystem, dir: String, val dirs: Seq[Path]) {
+    def committed(d: Path): Boolean = hasMarker(f, d)
+
+    /** (N, path) of each `prefix=N` child, ascending by N; only the
+      * committed ones when `committedOnly`. */
+    def numbered(prefix: String, committedOnly: Boolean): Seq[(Long, String)] =
+      dirs.filter(d => d.getName.startsWith(prefix) &&
+          (!committedOnly || committed(d)))
+        .map(d => (d.getName.stripPrefix(prefix).toLong, s"$dir/${d.getName}"))
+        .sortBy(_._1)
+  }
+
+  /** The data files under `path` — every file whose name does not start
+    * with `_` — listed lazily, recursing into subdirectories when
+    * `recursive`. */
+  private[io] def dataFiles(spark: SparkSession, path: String,
+                            recursive: Boolean): Iterator[LocatedFileStatus] = {
+    val it = fs(spark, path).listFiles(new Path(path), recursive)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filterNot(_.getPath.getName.startsWith("_"))
+  }
+
+  /** Delete each of `paths` with everything under it, skipping missing
+    * ones; returns the bytes they held. */
+  private[io] def drop(spark: SparkSession, paths: Seq[String]): Long =
+    paths.map { p =>
+      val f = fs(spark, p)
+      val hp = new Path(p)
+      try {
+        val bytes = f.getContentSummary(hp).getLength
+        f.delete(hp, true)
+        bytes
+      } catch { case _: FileNotFoundException => 0L }
+    }.sum
 
   private def artifactPath(root: String, kind: String, key: String): String =
     s"$root/$kind/$key"
 
   /** Store listing as a table: (kind, key) per persisted artifact. */
-  def listArtifacts(spark: SparkSession, root: String): Seq[(String, String)] = {
-    val rootPath = new Path(root)
-    val f = fs(spark, root)
-    if (!f.exists(rootPath)) Seq.empty
-    else f.listStatus(rootPath).filter(_.isDirectory).toSeq.flatMap { kindDir =>
-      f.listStatus(kindDir.getPath).filter(_.isDirectory).toSeq
-        .filter(d => f.exists(new Path(d.getPath, "_SUCCESS")))
-        .map(d => (kindDir.getPath.getName, d.getPath.getName))
+  def listArtifacts(spark: SparkSession, root: String): Seq[(String, String)] =
+    listing(spark, root).dirs.flatMap { kind =>
+      val keys = listing(spark, kind.toString)
+      keys.dirs.filter(keys.committed).map(k => (kind.getName, k.getName))
     }.sorted
-  }
 
   // ---- BPE merge tables ------------------------------------------------
 
@@ -283,7 +350,7 @@ object ArtifactStore {
         .write.mode("overwrite").parquet(s"$base/df")
       // key-level marker LAST: the artifact (and its listing entry)
       // exists only once all three sub-relations committed
-      fs(spark, base).create(new Path(base, "_SUCCESS"), true).close()
+      commit(spark, base)
     }
     graft.operators.Retrieval.Bm25Index(
       spark.read.parquet(s"$base/tf"), spark.read.parquet(s"$base/dl"),
@@ -462,8 +529,7 @@ object ArtifactStore {
     * all three are per-key SUMS/COUNTS over tf rows, and a doc's rows
     * land exactly once whichever tick carried it. Generational
     * compaction bounds the tick-file count exactly as for the dedup
-    * state; crash discipline is the store's (`_SUCCESS`-gated ticks,
-    * invisible half-writes).
+    * state; crash discipline is the store's.
     *
     * Bm25IncrementalSpec pins: stored ranking ≡ full-rebuild ranking
     * after N ticks + a compaction, with the tokenize counter showing
@@ -550,18 +616,12 @@ object ArtifactStore {
     // Generation 1 is the legacy layout (no marker, no g-dir) so the
     // pre-recluster behavior and on-disk shape are unchanged.
     private val genMarkBase = s"$root/ingest_state/$name/ivfpq_generation"
-    private def f = fs(spark, genMarkBase)
+
+    private def generationIn(marks: Listing): Long =
+      marks.numbered("g=", committedOnly = true).lastOption.fold(1L)(_._1)
 
     /** Max committed generation marker; 1 before any recluster. */
-    def generation: Long = {
-      val p = new Path(genMarkBase)
-      if (!f.exists(p)) 1L
-      else f.listStatus(p).toSeq
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("g="))
-        .filter(d => f.exists(new Path(d.getPath, "_SUCCESS")))
-        .map(_.getPath.getName.stripPrefix("g=").toLong)
-        .maxOption.getOrElse(1L)
-    }
+    def generation: Long = generationIn(listing(spark, genMarkBase))
 
     private def storeName(kind: String, g: Long): String =
       if (g <= 1L) s"$name/ivfpq_$kind" else s"$name/g$g/ivfpq_$kind"
@@ -620,10 +680,8 @@ object ArtifactStore {
       g
     }
 
-    private[graft] def commitGeneration(g: Long): Unit = {
-      f.mkdirs(new Path(s"$genMarkBase/g=$g"))
-      f.create(new Path(s"$genMarkBase/g=$g/_SUCCESS"), true).close()
-    }
+    private[graft] def commitGeneration(g: Long): Unit =
+      commit(spark, s"$genMarkBase/g=$g")
 
     /** The q122 deployment form: swap the index to retrained artifacts.
       * Marker-last crash discipline — until [[commitGeneration]] runs,
@@ -678,28 +736,15 @@ object ArtifactStore {
       * committed marker survives). Quiesce points only. Returns bytes
       * freed. */
     def gc(): Long = {
-      val g = generation
+      val marks = listing(spark, genMarkBase)
+      val g = generationIn(marks)
       if (g <= 1L) return 0L
-      def drop(p: Path): Long =
-        if (!f.exists(p)) 0L
-        else {
-          val bytes = f.getContentSummary(p).getLength
-          f.delete(p, true)
-          bytes
-        }
-      val genTrees = (2L until g)
-        .map(og => new Path(s"$root/ingest_state/$name/g$og"))
+      val genTrees = (2L until g).map(og => s"$root/ingest_state/$name/g$og")
       val legacy = Seq("codes", "tombs")
-        .map(kind => new Path(s"$root/ingest_state/$name/ivfpq_$kind"))
-      val markers = {
-        val p = new Path(genMarkBase)
-        if (!f.exists(p)) Seq.empty
-        else f.listStatus(p).toSeq
-          .filter(d => d.isDirectory && d.getPath.getName.startsWith("g="))
-          .filter(_.getPath.getName.stripPrefix("g=").toLong < g)
-          .map(_.getPath)
-      }
-      (genTrees ++ legacy ++ markers).map(drop).sum
+        .map(kind => s"$root/ingest_state/$name/ivfpq_$kind")
+      val markers = marks.numbered("g=", committedOnly = false)
+        .filter(_._1 < g).map(_._2)
+      drop(spark, genTrees ++ legacy ++ markers)
     }
   }
 
@@ -754,19 +799,13 @@ object ArtifactStore {
                          trainN: Int = QualityModel.DefaultTrainN,
                          slack: Int = 2) {
     private val base = s"$root/model_store/$name"
-    private def f = fs(spark, base)
     private def genDir(g: Long) = s"$base/g=$g"
 
+    private def generationIn(gens: Listing): Long =
+      gens.numbered("g=", committedOnly = true).lastOption.fold(0L)(_._1)
+
     /** Max committed generation; 0 before [[bootstrap]]. */
-    def generation: Long = {
-      val p = new Path(base)
-      if (!f.exists(p)) 0L
-      else f.listStatus(p).toSeq
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("g="))
-        .filter(d => f.exists(new Path(d.getPath, "_SUCCESS")))
-        .map(_.getPath.getName.stripPrefix("g=").toLong)
-        .maxOption.getOrElse(0L)
-    }
+    def generation: Long = generationIn(listing(spark, base))
 
     def reservoir(g: Long = generation): DataFrame = {
       require(g >= 1, s"model store '$name' not bootstrapped")
@@ -792,7 +831,7 @@ object ArtifactStore {
     }
 
     private[graft] def commitGeneration(g: Long): Unit =
-      f.create(new Path(s"${genDir(g)}/_SUCCESS"), true).close()
+      commit(spark, genDir(g))
 
     /** IDEMPOTENT generation-1 bootstrap: featurize the corpus once,
       * persist the reservoir, train from its prefix. Returns the
@@ -855,17 +894,11 @@ object ArtifactStore {
       * g, never into a deleted slot. Quiesce points only. Returns
       * bytes freed. */
     def gc(): Long = {
-      val g = generation
-      if (g <= 1L) return 0L
-      val p = new Path(base)
-      f.listStatus(p).toSeq
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("g="))
-        .filter(_.getPath.getName.stripPrefix("g=").toLong < g)
-        .map { d =>
-          val bytes = f.getContentSummary(d.getPath).getLength
-          f.delete(d.getPath, true)
-          bytes
-        }.sum
+      val gens = listing(spark, base)
+      val g = generationIn(gens)
+      if (g <= 1L) 0L
+      else drop(spark,
+        gens.numbered("g=", committedOnly = false).filter(_._1 < g).map(_._2))
     }
   }
 
@@ -956,45 +989,52 @@ object ArtifactStore {
     * parquet write per tick, growing FOREVER (the r8 verdict's Missing
     * #5). Layout under `root/ingest_state/<name>/`:
     *
-    *   gen=G/   — a compacted base covering ticks 1..G (`_SUCCESS`-gated)
-    *   tick=T/  — one increment per ingest tick (`_SUCCESS`-gated)
+    *   gen=G/   — a compacted base covering ticks 1..G
+    *   tick=T/  — one increment per ingest tick
     *
-    * `current()` reads the newest complete generation plus every tick
+    * Both follow the commit rule of this object's filesystem plumbing,
+    * and every call lists the store once ([[Layout]]). `current()`
+    * reads the newest committed generation plus every committed tick
     * past it; [[compact]] folds base + ticks into the next generation —
     * sized via [[Compact.partitionsFor]] from the actual accumulated
-    * bytes — then drops the superseded files, so the tick-file count
-    * (the scan-throughput killer at 100 TB: thousands of KB-scale
-    * files) resets to O(state bytes / target), not O(ticks). Crash
-    * discipline throughout: a generation without `_SUCCESS` is
-    * invisible (reads fall back to the previous base + ticks, which
-    * are deleted only AFTER the new base commits), so a killed
-    * compaction loses nothing and retries cleanly. */
+    * bytes — then drops what the new generation shadows, so the
+    * tick-file count (the scan-throughput killer at 100 TB: thousands
+    * of KB-scale files) resets to O(state bytes / target), not
+    * O(ticks). The superseded base and ticks are deleted only AFTER the
+    * new base commits, so a killed compaction loses nothing and retries
+    * cleanly. */
   final class IngestStateStore(spark: SparkSession, root: String,
                                name: String) {
     private val base = s"$root/ingest_state/$name"
     private def f = fs(spark, base)
 
-    private def listNums(prefix: String, sucOnly: Boolean): Seq[Long] = {
-      val p = new Path(base)
-      if (!f.exists(p)) Seq.empty
-      else f.listStatus(p).toSeq
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith(prefix))
-        .filter(d => !sucOnly || f.exists(new Path(d.getPath, "_SUCCESS")))
-        .map(_.getPath.getName.stripPrefix(prefix).toLong).sorted
+    /** The store as one listing shows it: its committed generations and
+      * ticks (ascending), and what a committed generation shadows. */
+    private final class Layout(l: Listing) {
+      lazy val gens: Seq[(Long, String)] = l.numbered("gen=", committedOnly = true)
+      lazy val ticks: Seq[(Long, String)] = l.numbered("tick=", committedOnly = true)
+
+      def maxTick: Long = (ticks ++ gens).map(_._1).maxOption.getOrElse(0L)
+
+      /** The newest committed generation plus the committed ticks past
+        * it and below `maxT`. */
+      def pathsBelow(maxT: Long): Seq[String] = {
+        val gen = gens.lastOption
+        gen.map(_._2).toSeq ++ ticks.collect {
+          case (t, p) if t < maxT && gen.forall(t > _._1) => p
+        }
+      }
+
+      /** Every generation dir below `g` and tick dir at or below it,
+        * committed or not. */
+      def shadowedBy(g: Long): Seq[String] =
+        l.numbered("gen=", committedOnly = false).filter(_._1 < g).map(_._2) ++
+          l.numbered("tick=", committedOnly = false).filter(_._1 <= g).map(_._2)
     }
 
-    def maxTick: Long =
-      (listNums("tick=", sucOnly = true) ++ listNums("gen=", sucOnly = true))
-        .maxOption.getOrElse(0L)
+    private def layout: Layout = new Layout(listing(spark, base))
 
-    private def currentPaths: Seq[String] = pathsBelow(Long.MaxValue)
-
-    private def pathsBelow(maxT: Long): Seq[String] = {
-      val gen = listNums("gen=", sucOnly = true).maxOption
-      val ticks = listNums("tick=", sucOnly = true)
-        .filter(t => t < maxT && gen.forall(t > _))
-      gen.map(g => s"$base/gen=$g").toSeq ++ ticks.map(t => s"$base/tick=$t")
-    }
+    def maxTick: Long = layout.maxTick
 
     /** The accumulated state (None before the first tick). */
     def current(): Option[DataFrame] = currentBelow(Long.MaxValue)
@@ -1004,7 +1044,7 @@ object ArtifactStore {
       * tombstones are keyed at takedown ticks), where [[currentUpTo]]'s
       * coverage guard does not apply. */
     def currentBelow(t: Long): Option[DataFrame] = {
-      val paths = pathsBelow(t)
+      val paths = layout.pathsBelow(t)
       if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
     }
 
@@ -1049,10 +1089,10 @@ object ArtifactStore {
       * producers committed) makes older snapshots unreadable, and this
       * throws rather than serving a partial state. */
     def currentUpTo(maxT: Long): Option[DataFrame] = {
-      val gens = listNums("gen=", sucOnly = true)
+      val lay = layout
+      val gens = lay.gens.map(_._1)
       val gen = gens.filter(_ <= maxT).maxOption
-      val ticks = listNums("tick=", sucOnly = true)
-        .filter(t => t <= maxT && gen.forall(t > _))
+      val ticks = lay.ticks.map(_._1).filter(t => t <= maxT && gen.forall(t > _))
       val paths = gen.map(g => s"$base/gen=$g").toSeq ++
         ticks.map(t => s"$base/tick=$t")
       if (paths.isEmpty) {
@@ -1084,12 +1124,8 @@ object ArtifactStore {
 
     /** Parquet data files currently backing `current()` — the quantity
       * compaction exists to bound. */
-    def dataFileCount: Long = currentPaths.map { p =>
-      val it = f.listFiles(new Path(p), false)
-      var n = 0L
-      while (it.hasNext) { if (!it.next().getPath.getName.startsWith("_")) n += 1 }
-      n
-    }.sum
+    def dataFileCount: Long = layout.pathsBelow(Long.MaxValue)
+      .map(p => dataFiles(spark, p, recursive = false).size.toLong).sum
 
     /** Fold base + ticks into generation `maxTick`, sized from the
       * accumulated bytes at [[Compact.TargetBytes]] per file; drop
@@ -1108,20 +1144,20 @@ object ArtifactStore {
       * read; the unfolded transform keeps applying at read time, so
       * skipping is safe). */
     private[io] def compactWith(transform: DataFrame => DataFrame): Int = {
-      val upTo = maxTick
-      val paths = currentPaths
+      val lay = layout
+      val upTo = lay.maxTick
+      val paths = lay.pathsBelow(Long.MaxValue)
       require(paths.nonEmpty, "nothing to compact")
       if (paths == Seq(s"$base/gen=$upTo")) return 0
       val bytes = paths.map(Compact.dataBytes(spark, _)).sum
       val n = Compact.partitionsFor(bytes, Compact.TargetBytes)
       transform(spark.read.parquet(paths: _*)).repartition(n)
         .write.mode("overwrite").parquet(s"$base/gen=$upTo")
-      // the new generation is committed (_SUCCESS exists) — superseded
-      // state can go; a crash between these deletes only leaves ignored
-      // duplicates behind (reads pick the newest complete generation)
-      (listNums("gen=", sucOnly = false).filter(_ < upTo).map(g => s"$base/gen=$g") ++
-       listNums("tick=", sucOnly = false).filter(_ <= upTo).map(t => s"$base/tick=$t"))
-        .foreach(p => f.delete(new Path(p), true))
+      // the new generation is committed — what it shadows can go; the
+      // write added only gen=upTo, so the listing above still names
+      // every victim. Unmeasured: no caller wants the bytes, and a
+      // measure lists each victim once more
+      lay.shadowedBy(upTo).foreach(p => f.delete(new Path(p), true))
       n
     }
 
@@ -1130,37 +1166,17 @@ object ArtifactStore {
       * to crash around: a half-cleared tombstone store only re-subtracts
       * already-removed doc_ids (the anti-join is idempotent). NOT for
       * data stores — their content is the corpus state. */
-    def reset(): Unit = {
-      val p = new Path(base)
-      if (f.exists(p)) f.listStatus(p).filter(_.isDirectory)
-        .foreach(d => f.delete(d.getPath, true))
-    }
+    def reset(): Unit = listing(spark, base).dirs.foreach(f.delete(_, true))
 
-    /** GC strictly-shadowed state (r11 verdict item 7): generation dirs
-      * older than the newest COMMITTED generation and tick dirs at or
-      * below it — exactly what a crashed compaction's interrupted
-      * delete phase leaves behind. No read can pick a victim
-      * ([[currentPaths]] resolves the newest committed generation
-      * first and ignores ticks at or below it), so deletion order is
-      * irrelevant and a gc interrupted anywhere is simply re-run —
-      * reads are identical before, during, and after (GcSpec pins it).
+    /** GC what the newest committed generation shadows — exactly what
+      * a crashed compaction's interrupted delete phase leaves behind. Reads are identical before, during, and
+      * after (GcSpec pins it), and an interrupted gc simply re-runs.
       * Run at quiesce points, like compaction (`currentUpTo` snapshots
       * below the generation become unreadable — they already did when
       * the compaction committed). Returns bytes freed. */
     def gc(): Long = {
-      val gen = listNums("gen=", sucOnly = true).maxOption
-      gen.fold(0L) { g =>
-        val victims =
-          listNums("gen=", sucOnly = false).filter(_ < g)
-            .map(x => s"$base/gen=$x") ++
-          listNums("tick=", sucOnly = false).filter(_ <= g)
-            .map(t => s"$base/tick=$t")
-        victims.map { p =>
-          val bytes = f.getContentSummary(new Path(p)).getLength
-          f.delete(new Path(p), true)
-          bytes
-        }.sum
-      }
+      val lay = layout
+      lay.gens.lastOption.fold(0L) { case (g, _) => drop(spark, lay.shadowedBy(g)) }
     }
   }
 
@@ -1172,17 +1188,16 @@ object ArtifactStore {
 
   /** Durable [[graft.operators.StageStore]]: each materialized stage
     * (the stage-1 scrubbed base, every gate's marker set) lands as
-    * `_SUCCESS`-gated parquet under
-    * `root/curate_<pipelineKey>/<stage>`. A stage whose artifact
+    * parquet under `root/curate_<pipelineKey>/<stage>`. A stage whose artifact
     * already exists is READ, not recomputed — and because the returned
     * frame is a parquet scan, the upstream gates' plans are never even
     * constructed into the resumed job: crash after stage k, rerun,
     * and stages 1..k cost one file listing each (CurateV2DurableSpec
     * pins exactly this with a crash-injecting wrapper).
     *
-    * A killed half-written stage has no `_SUCCESS` and is recomputed
-    * (the store-wide invariant). Stage state is manifest-diffable with
-    * [[listArtifacts]] like every other artifact kind. */
+    * A killed half-written stage is uncommitted and recomputed. Stage
+    * state is manifest-diffable with [[listArtifacts]] like every other
+    * artifact kind. */
   final class DurableStageStore private[ArtifactStore] (
       spark: SparkSession, root: String, val pipelineKey: String)
     extends StageStore {

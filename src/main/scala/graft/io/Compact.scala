@@ -20,19 +20,10 @@ object Compact {
   /** The output file size every compaction aims at. */
   val TargetBytes: Long = 128L * 1024 * 1024
 
-  /** Bytes under `path` per the filesystem listing (parquet data files
-    * only — skips _SUCCESS/metadata). */
-  def dataBytes(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var total = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (!f.getPath.getName.startsWith("_")) total += f.getLen
-    }
-    total
-  }
+  /** Bytes of the data files under `path` ([[ArtifactStore.dataFiles]]:
+    * the commit marker and metadata are skipped). */
+  def dataBytes(spark: SparkSession, path: String): Long =
+    ArtifactStore.dataFiles(spark, path, recursive = true).map(_.getLen).sum
 
   /** Partition count for `bytes` of input at `targetBytes` per output
     * file (≥ 1). Parquet re-encodes, so actual output files track the

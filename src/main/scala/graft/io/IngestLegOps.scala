@@ -18,11 +18,6 @@ trait IngestLegOps { self: IngestLoop.type =>
              vectors: DataFrame): SemLeg =
     SemLeg(ArtifactStore.ingestState(spark, root, s"$name/sem_sigs"), vectors)
 
-  private[io] def pathExists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Build-or-load a SELF-SIZED semantic leg (q139, r12 verdict item
     * 3): at FIRST bootstrap the bits knob derives from the corpus
     * vector count ([[graft.operators.SemanticGate.sizedBits]] — the
@@ -33,9 +28,9 @@ trait IngestLegOps { self: IngestLoop.type =>
     * width, so verdicts stay re-derivable as the corpus grows past the
     * sizing count, and re-sizing is an explicit new generation
     * ([[resizeSemLeg]]), never a silent drift. Crash-safe: the params
-    * write is an idempotent overwrite gated on its `_SUCCESS` marker —
-    * a crash mid-write falls through to the sizing path and rewrites;
-    * a replay after the commit always reads the recorded values. */
+    * write is an idempotent overwrite, read only once committed — a
+    * crash mid-write falls through to the sizing path and rewrites; a
+    * replay after the commit always reads the recorded values. */
   def semLegSized(spark: SparkSession, root: String, name: String,
                   vectors: DataFrame,
                   nTables: Int =
@@ -45,12 +40,12 @@ trait IngestLegOps { self: IngestLoop.type =>
                     graft.operators.SemanticGate.DefaultSimThreshold)
       : SemLeg = {
     val pPath = s"$root/ingest_state/$name/sem_params"
-    // the read branch gates on the COMMIT MARKER, not bare existence
-    // (r13 advice): a crash mid-write of sem_params leaves a dir
-    // without _SUCCESS; reading it would throw forever, where falling
-    // through re-derives and overwrites — the repo-wide _SUCCESS rule
+    // the read branch gates on the commit, not bare existence: a crash
+    // mid-write of sem_params leaves an uncommitted dir; reading it
+    // would throw forever, where falling through re-derives and
+    // overwrites
     val (t, b, d) =
-      if (pathExists(spark, s"$pPath/_SUCCESS")) {
+      if (ArtifactStore.exists(spark, pPath)) {
         val r = spark.read.parquet(pPath).head()
         (r.getAs[Int]("tables"), r.getAs[Int]("bits"), r.getAs[Int]("dim"))
       } else {
@@ -86,7 +81,7 @@ trait IngestLegOps { self: IngestLoop.type =>
                    root: String, name: String,
                    nTables: Int, bits: Int): SemLeg = {
     val pPath = s"$root/ingest_state/$name/sem_params"
-    require(!pathExists(spark, s"$pPath/_SUCCESS"),
+    require(!ArtifactStore.exists(spark, pPath),
       s"resizeSemLeg requires a FRESH generation name: '$name' already " +
         "carries committed sem_params — a resize is a new store " +
         "generation, never an in-place rewrite")
@@ -97,7 +92,7 @@ trait IngestLegOps { self: IngestLoop.type =>
       .select("doc_id").distinct()
     next.sigs.appendTickAt(1, graft.operators.SemanticGate.sigRowsOf(
       leg.vectors, ingested, nTables, bits, leg.dim))
-    // params LAST — the commit point: once this _SUCCESS lands, the
+    // params LAST — the commit point: once this write commits, the
     // generation is fully bootstrapped and loadable by semLegSized
     import spark.implicits._
     Seq((nTables, bits, leg.dim)).toDF("tables", "bits", "dim")

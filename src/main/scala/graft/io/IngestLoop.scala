@@ -309,7 +309,7 @@ object IngestLoop extends IngestLegOps {
   def rolloverSem(st: Stores, leg: SemLeg, spark: SparkSession,
                   root: String, name: String): SemLeg = {
     val pPath = s"$root/ingest_state/$name/sem_params"
-    require(!pathExists(spark, s"$pPath/_SUCCESS"),
+    require(!ArtifactStore.exists(spark, pPath),
       s"rolloverSem requires a FRESH generation name: '$name' already " +
         "carries committed sem_params")
     val next = SemLeg(
@@ -687,11 +687,16 @@ object IngestLoop extends IngestLegOps {
   /** Seed an attached quarantine's tick-1 base (idempotent, the
     * [[bootstrap]] contract): both stores start EMPTY — the corpus was
     * ingested, not rejected — but need their tick-1 directories so the
-    * tick agreement's min-tick check holds. */
-  def bootstrapQuarantine(quar: Quarantine, corpusDocs: DataFrame): Unit = {
+    * tick agreement's min-tick check holds. The rows take the loop's
+    * [[quarantineLayout]]: each modality's signature column, a typed
+    * null `long`, before `verdict` — every tick of one store must share
+    * a schema. */
+  def bootstrapQuarantine(st: StoreSet, quar: Quarantine,
+                          corpusDocs: DataFrame): Unit = {
     quar.rows.appendTickAt(1, corpusDocs
-      .select(col("doc_id"), col("source"), col("text"),
-        lit("").as("verdict")).limit(0))
+      .select((Seq(col("doc_id"), col("source"), col("text")) ++
+        st.modalities.map(m => lit(null).cast("long").as(m.quarCol)) :+
+        lit("").as("verdict")): _*).limit(0))
     quar.resolvedIds.appendTickAt(1, corpusDocs.select("doc_id").limit(0))
   }
 
@@ -717,19 +722,6 @@ object IngestLoop extends IngestLegOps {
         .withColumn("tick", lit(1L)).withColumn("lq", lit(false))
         .select(replayCols: _*)
         .limit(0))
-
-  /** The MULTIMODAL quarantine's tick-1 base — the mm row layout
-    * additionally carries the doc's 8-byte image/audio signatures
-    * ([[runTick]]'s quarantine leg on [[MmStores]]), and every tick of
-    * one store must share a schema. */
-  def bootstrapMmQuarantine(quar: Quarantine, corpusDocs: DataFrame): Unit = {
-    quar.rows.appendTickAt(1, corpusDocs
-      .select(col("doc_id"), col("source"), col("text"),
-        lit(null).cast("long").as("img_sig"),
-        lit(null).cast("long").as("aud_sig"),
-        lit("").as("verdict")).limit(0))
-    quar.resolvedIds.appendTickAt(1, corpusDocs.select("doc_id").limit(0))
-  }
 
   /** The SEMANTIC-DEDUP leg of a deployment tick (q135,
     * [[graft.operators.SemanticGate.q135SemanticAdmission]]) — the

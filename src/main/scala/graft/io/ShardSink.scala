@@ -102,10 +102,8 @@ object ShardSink {
     * the root `_SUCCESS` marker: a tree interrupted between delete and
     * rename — or any half-written directory — is refused, not read. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(path, "_SUCCESS")),
-      s"no complete shard export at $path (missing _SUCCESS)")
+    require(ArtifactStore.exists(spark, path),
+      s"no complete shard export at $path (missing its commit marker)")
     spark.read.parquet(path)
   }
 }

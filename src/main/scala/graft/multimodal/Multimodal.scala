@@ -863,10 +863,14 @@ object Multimodal {
     // band collisions are per-doc, so post-hoc state filtering of TEXT
     // pairs IS equivalent — unlike the gated signature chains)
     // pr / sigsI / sigsA are mutually independent severed relations —
-    // materialize concurrently (guide §2.6 overlap)
-    val Seq(pr, sigsI, sigsA) = graft.operators.Materialize.par(Seq(
-      Fuzzy.lshVerifiedPairs(docs, threshold).select("ida", "idb"),
-      imageSigs(docs), audioSigs(docs)))
+    // materialize concurrently (guide §2.6 overlap); pr feeds only a
+    // union, which drops a broadcast hint, so it is checkpointed plain
+    import graft.operators.Materialize
+    val Seq(pr, sigsI, sigsA) = Materialize.branches(docs.sparkSession, Seq(
+      () => Fuzzy.lshVerifiedPairs(docs, threshold).select("ida", "idb")
+        .localCheckpoint(),
+      () => Materialize.sever(imageSigs(docs)),
+      () => Materialize.sever(audioSigs(docs))))
     val adj = pr.union(pr.select(col("idb"), col("ida"))).toDF("a", "b")
     val fzFull = adj.filter(pmod(col("b"), lit(bm)) === 0 &&
         pmod(col("a"), lit(bm)) =!= 0)
@@ -1077,10 +1081,14 @@ object Multimodal {
     // phases' flag joins (the q136 sever discipline on the sig legs);
     // the two sig relations and the text pair relation below are
     // mutually independent, so they materialize concurrently
-    // (Materialize.par — guide §2.6 overlap)
-    val Seq(iSigs, aSigs, pr) = graft.operators.Materialize.par(Seq(
-      imageSigs(docs), audioSigs(docs),
-      Fuzzy.lshVerifiedPairs(docs, threshold).select("ida", "idb")))
+    // (Materialize.branches — guide §2.6 overlap); pr feeds only a
+    // union, which drops a broadcast hint, so it is checkpointed plain
+    import graft.operators.Materialize
+    val Seq(iSigs, aSigs, pr) = Materialize.branches(docs.sparkSession, Seq(
+      () => Materialize.sever(imageSigs(docs)),
+      () => Materialize.sever(audioSigs(docs)),
+      () => Fuzzy.lshVerifiedPairs(docs, threshold).select("ida", "idb")
+        .localCheckpoint()))
     def contamIds(memberIds: DataFrame, evalIds: DataFrame): DataFrame = {
       def hits(sigs: DataFrame) = flaggedAgainstState(
         sigs.join(evalIds, Seq("doc_id"), "left_semi"),

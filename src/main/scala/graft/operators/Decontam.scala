@@ -130,10 +130,13 @@ object Decontam {
     // ONE verified pair relation (dup gates + the fuzzy contamination
     // channel) and ONE gram relation, both severed — each is read by
     // tick 1, the re-adjudication, AND the catch census. The two are
-    // independent, so they materialize concurrently (Materialize.par).
-    val Seq(pr, gr) = Materialize.par(Seq(
-      Fuzzy.lshVerifiedPairs(documents, threshold).select("ida", "idb"),
-      Contamination.grams(documents, n)))
+    // independent, so they materialize concurrently
+    // (Materialize.branches); pr feeds only a union, which drops a
+    // broadcast hint, so it is checkpointed plain.
+    val Seq(pr, gr) = Materialize.branches(documents.sparkSession, Seq(
+      () => Fuzzy.lshVerifiedPairs(documents, threshold).select("ida", "idb")
+        .localCheckpoint(),
+      () => Materialize.sever(Contamination.grams(documents, n))))
     val adj = pr.union(pr.select(col("idb"), col("ida"))).toDF("a", "b")
     val w = QualityModel.weights(corpus,
       scope = s"decontam${Provenance.BatchMod}")

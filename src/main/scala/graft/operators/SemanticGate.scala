@@ -202,12 +202,16 @@ object SemanticGate {
     val corpus = documents.filter(m(col("doc_id")).between(1, 9))
     val t1 = documents.filter(m(col("doc_id")) >= 10)
     val t2 = documents.filter(m(col("doc_id")) === 0)
-    // ONE verified relation per modality, severed (each is read by both
-    // ticks' flags — the q106 marker discipline); text and vector legs
-    // are independent, so they materialize concurrently (guide §2.6)
-    val Seq(pr, sp) = Materialize.par(Seq(
-      Fuzzy.lshVerifiedPairs(documents, threshold).select("ida", "idb"),
-      semVerifiedPairs(embeddings, nTables, bits, dim, simThreshold)))
+    // ONE verified relation per modality, checkpointed (each is read by
+    // both ticks' flags — the q106 marker discipline) without a
+    // broadcast hint: each feeds only a union, which drops it. Text and
+    // vector legs are independent, so they materialize concurrently
+    // (guide §2.6)
+    val Seq(pr, sp) = Materialize.branches(documents.sparkSession, Seq(
+      () => Fuzzy.lshVerifiedPairs(documents, threshold).select("ida", "idb")
+        .localCheckpoint(),
+      () => semVerifiedPairs(embeddings, nTables, bits, dim, simThreshold)
+        .localCheckpoint()))
     val adj = pr.union(pr.select(col("idb"), col("ida"))).toDF("a", "b")
     val sadj = sp.union(sp.select(col("idb"), col("ida"))).toDF("a", "b")
     val w = QualityModel.weights(corpus,

@@ -2,8 +2,13 @@ package graft.io
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
 import graft.TestSpark
 import graft.operators.{Bpe, Kmeans, Pq, Provenance}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -183,5 +188,193 @@ class ArtifactStoreSpec extends AnyFunSuite {
       assert(r.getDouble(5) >= r.getDouble(3),
         s"recall_rr < recall_adc for qid ${r.getLong(0)}")
     }
+  }
+
+  // ---- the commit rule, store by store ---------------------------------
+
+  /** One store under the commit rule. `build` commits state under a root
+    * and re-creates the leftovers a crash would leave (`shadowed`, what
+    * gc must collect); `uncommitted` children are written without a
+    * marker, numbered above the newest committed ones; `kept` must
+    * survive gc; `reads` is every read the store serves. Paths are
+    * relative to the root. */
+  private case class RuleCase(store: String,
+                              empty: Seq[Any],
+                              build: String => Unit,
+                              uncommitted: Seq[String],
+                              shadowed: Seq[String],
+                              kept: Seq[String],
+                              reads: String => Seq[Any],
+                              gc: String => Long)
+
+  private def ids(from: Long, to: Long): DataFrame =
+    spark.range(from, to + 1).toDF("doc_id")
+
+  private def rows(df: Option[DataFrame]): Option[Set[Long]] =
+    df.map(_.collect().map(_.getLong(0)).toSet)
+
+  private def hfs(p: String) =
+    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A child as a crash leaves it: data written, marker never. */
+  private def writeUncommitted(p: String): Unit = {
+    ids(1, 1).write.mode("overwrite").parquet(p)
+    hfs(p).delete(new Path(p, "_SUCCESS"), false)
+  }
+
+  private val ruleCases: Seq[RuleCase] = Seq(
+    RuleCase("IngestStateStore",
+      empty = Seq(0L, None, None, None, 0L),
+      build = { root =>
+        val st = ArtifactStore.ingestState(spark, root, "s")
+        st.appendTickAt(1, ids(1, 3))
+        st.appendTickAt(2, ids(4, 5))
+        st.compact()
+        st.appendTickAt(3, ids(6, 6))
+        // an interrupted compaction's delete phase: a committed tick and
+        // a half-written generation, both below the committed gen=2
+        st.appendTickAt(1, ids(1, 3))
+        writeUncommitted(s"$root/ingest_state/s/gen=1")
+      },
+      uncommitted = Seq("ingest_state/s/tick=4", "ingest_state/s/gen=5"),
+      shadowed = Seq("ingest_state/s/tick=1", "ingest_state/s/gen=1"),
+      kept = Seq("ingest_state/s/gen=2", "ingest_state/s/tick=3",
+        "ingest_state/s/tick=4", "ingest_state/s/gen=5"),
+      reads = { root =>
+        val st = ArtifactStore.ingestState(spark, root, "s")
+        Seq(st.maxTick, rows(st.current()), rows(st.currentUpTo(3)),
+          rows(st.currentBelow(3)), st.dataFileCount)
+      },
+      gc = root => ArtifactStore.ingestState(spark, root, "s").gc()),
+    RuleCase("ModelStore",
+      empty = Seq(0L, None),
+      build = { root =>
+        val m = ArtifactStore.modelStore(spark, root, "m")
+        Seq(1L, 2L).foreach { g =>
+          m.writeGenData(g, ids(1, 3), Seq.fill(7)(g.toDouble))
+          m.commitGeneration(g)
+        }
+      },
+      uncommitted = Seq("model_store/m/g=3"),
+      shadowed = Seq("model_store/m/g=1"),
+      kept = Seq("model_store/m/g=2", "model_store/m/g=3"),
+      reads = { root =>
+        val m = ArtifactStore.modelStore(spark, root, "m")
+        Seq(m.generation, Try(m.servingWeights()).toOption)
+      },
+      gc = root => ArtifactStore.modelStore(spark, root, "m").gc()),
+    RuleCase("IvfPqIncrementalIndex generations",
+      empty = Seq(1L, 0L),
+      build = { root =>
+        val idx = ArtifactStore.ivfPqIncremental(spark, root, "ann")
+        Seq("ann/ivfpq_codes", "ann/g2/ivfpq_codes", "ann/g3/ivfpq_codes")
+          .foreach(n => ArtifactStore.ingestState(spark, root, n)
+            .appendTickAt(1, ids(1, 2)))
+        idx.commitGeneration(2)
+        idx.commitGeneration(3)
+      },
+      uncommitted = Seq("ingest_state/ann/ivfpq_generation/g=4"),
+      shadowed = Seq("ingest_state/ann/ivfpq_codes", "ingest_state/ann/g2",
+        "ingest_state/ann/ivfpq_generation/g=2"),
+      kept = Seq("ingest_state/ann/g3", "ingest_state/ann/ivfpq_generation/g=3",
+        "ingest_state/ann/ivfpq_generation/g=4"),
+      reads = { root =>
+        val idx = ArtifactStore.ivfPqIncremental(spark, root, "ann")
+        Seq(idx.generation, idx.store.maxTick)
+      },
+      gc = root => ArtifactStore.ivfPqIncremental(spark, root, "ann").gc()),
+    // a served epoch's gc also takes its uncommitted revisions: a
+    // revision is never resumed, the next write numbers past it
+    RuleCase("PackedExportStore revisions",
+      empty = Seq(Nil, 0L, Nil),
+      build = { root =>
+        val ex = ArtifactStore.packedExport(spark, root, "ex")
+        ex.appendEmptyEpochAt(1)
+        ex.appendEmptyEpochAt(2)
+        ex.appendEmptyEpochAt(2)
+        // the superseded committed rev whose delete a crash interrupted
+        ids(1, 1).write.mode("overwrite")
+          .parquet(s"$root/export_state/ex/tick=2/rev=1")
+      },
+      uncommitted = Seq("export_state/ex/tick=1/rev=5",
+        "export_state/ex/tick=3/rev=1"),
+      shadowed = Seq("export_state/ex/tick=2/rev=1",
+        "export_state/ex/tick=1/rev=5"),
+      kept = Seq("export_state/ex/tick=1/rev=1", "export_state/ex/tick=2/rev=2",
+        "export_state/ex/tick=3/rev=1"),
+      reads = { root =>
+        val ex = ArtifactStore.packedExport(spark, root, "ex")
+        Seq(ex.ticks, ex.maxTick, ex.servingRevisions)
+      },
+      gc = root => ArtifactStore.packedExport(spark, root, "ex").gc()),
+    RuleCase("ConsumptionStore manifest",
+      empty = Seq(None),
+      build = { root =>
+        val s = spark
+        import s.implicits._
+        Seq("j1", "j2").zipWithIndex.foreach { case (j, i) =>
+          Seq(("jobrow", j, 1L, 1L)).toDF("kind", "job_id", "tick", "rev")
+            .write.mode("overwrite")
+            .parquet(s"$root/consumption/c/manifest_v/rev=${i + 1}")
+        }
+      },
+      uncommitted = Seq("consumption/c/manifest_v/rev=3"),
+      shadowed = Seq("consumption/c/manifest_v/rev=1",
+        "consumption/c/manifest_v/rev=3"),
+      kept = Seq("consumption/c/manifest_v/rev=2"),
+      reads = { root =>
+        val c = ArtifactStore.consumption(spark, root, "c")
+        Seq(Try(c.jobs().collect().map(_.getAs[String]("job_id")).toSet).toOption)
+      },
+      gc = root => ArtifactStore.consumption(spark, root, "c").gc()))
+
+  test("commit rule, every store: a missing root reads as empty; an uncommitted child above the newest committed one is invisible; gc collects exactly the shadowed dirs") {
+    ruleCases.foreach { c =>
+      val root = tmpDir("graft_commit_rule")
+      def there(rel: String) = hfs(root).exists(new Path(s"$root/$rel"))
+      assert(c.reads(root) === c.empty, s"${c.store}: a missing root reads as empty")
+      assert(c.gc(root) === 0L, s"${c.store}: a missing root collects nothing")
+      c.build(root)
+      val committed = c.reads(root)
+      c.uncommitted.foreach(p => writeUncommitted(s"$root/$p"))
+      assert(c.reads(root) === committed,
+        s"${c.store}: an uncommitted child changed a read")
+      assert(c.gc(root) > 0L, s"${c.store}: gc freed nothing")
+      assert(c.shadowed.filter(there).isEmpty, s"${c.store}: shadowed dirs survived gc")
+      assert(c.kept.filterNot(there).isEmpty, s"${c.store}: gc took a live or uncommitted dir")
+      assert(c.reads(root) === committed, s"${c.store}: gc changed a read")
+      assert(c.gc(root) === 0L, s"${c.store}: a second gc found more")
+    }
+  }
+
+  test("the commit rule lives in ArtifactStore's filesystem plumbing: no other main source names the marker, measures a tree or lists a directory") {
+    val src = Paths.get("src/main/scala")
+    assert(Files.isDirectory(src), s"run from the project root: $src")
+    val banned = Seq("_SUCCESS", "getContentSummary", "listStatus")
+    // code only: comment lines and trailing comments are dropped
+    def code(f: java.nio.file.Path): Seq[(String, Int)] =
+      Files.readAllLines(f).asScala.toSeq.zipWithIndex.map { case (l, i) =>
+        val t = l.trim
+        if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) ("", i + 1)
+        else (l.split(" // ").head, i + 1)
+      }
+    val home = src.resolve("graft/io/ArtifactStore.scala")
+    val files = Files.walk(src).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val outside = for {
+      f <- files if f != home
+      (l, n) <- code(f)
+      b <- banned if l.contains(b)
+    } yield s"$f:$n names $b"
+    assert(outside.isEmpty, outside.mkString("\n"))
+    // inside its file, each one sits in the plumbing section only
+    val raw = Files.readAllLines(home).asScala.toSeq
+    val from = raw.indexWhere(_.contains("// ---- filesystem plumbing"))
+    val until = raw.indexWhere(_.contains("// ---- BPE merge tables"))
+    val lines = code(home)
+    assert(from >= 0 && until > from)
+    val stray = lines.zipWithIndex.collect {
+      case ((l, n), i) if (i < from || i > until) && banned.exists(l.contains) => n
+    }
+    assert(stray.isEmpty, s"ArtifactStore.scala lines $stray outside the plumbing")
   }
 }

@@ -55,7 +55,7 @@ class ComposedGateSpec extends AnyFunSuite {
 
     val st = build("both")
     val quar = IngestLoop.quarantine(spark, root, "both")
-    IngestLoop.bootstrapQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     val rep = IngestLoop.runTick(st, t1, weights,
       legs = IngestLoop.Legs(quar = Some(quar), sem = Some(semLeg("both")),
         eval = Some(evalLeg("both")))).collect()
@@ -121,7 +121,7 @@ class ComposedGateSpec extends AnyFunSuite {
     val eleg = IngestLoop.evalLeg(spark, root, "mmev")
     IngestLoop.bootstrapEval(eleg, corpus, Decontam.eval1Docs(docs))
     val quar = IngestLoop.quarantine(spark, root, "mmev")
-    IngestLoop.bootstrapMmQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
 
     val rep = IngestLoop.runTick(st, t1, weights,
       legs = IngestLoop.Legs(quar = Some(quar), eval = Some(eleg))).collect()

@@ -40,7 +40,7 @@ class DecontamIngestSpec extends AnyFunSuite {
     val quar = IngestLoop.quarantine(spark, root, name)
     IngestLoop.bootstrap(st, corpus)
     IngestLoop.bootstrapEval(leg, corpus, Decontam.eval1Docs(docs))
-    IngestLoop.bootstrapQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     (st, leg, quar)
   }
 

@@ -220,7 +220,7 @@ class MmIngestSpec extends AnyFunSuite {
     val leg = IngestLoop.semLeg(spark, root, "mmsem", emb)
     IngestLoop.bootstrapSem(leg, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmsem")
-    IngestLoop.bootstrapMmQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     val rep1 = IngestLoop.runTick(st, t1, w,
       legs = IngestLoop.Legs(sem = Some(leg), quar = Some(quar))).collect()
     // sem report: src, n_batch, exact, fuzzy, SEMANTIC, image, audio,
@@ -277,7 +277,7 @@ class MmIngestSpec extends AnyFunSuite {
     val st = IngestLoop.mmStores(spark, root, "mmreadj")
     IngestLoop.bootstrap(st, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmreadj")
-    IngestLoop.bootstrapMmQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     IngestLoop.runTick(st, batch, w,
       legs = IngestLoop.Legs(quar = Some(quar)))
     val retracted = st.text.hashes.current().get.select("doc_id").filter(
@@ -322,7 +322,7 @@ class MmIngestSpec extends AnyFunSuite {
     val st = IngestLoop.mmStores(spark, root, "mmrp")
     IngestLoop.bootstrap(st, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmrp")
-    IngestLoop.bootstrapMmQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     val replay = IngestLoop.replayLeg(spark, root, "mmrp")
     IngestLoop.bootstrapReplay(replay, corpus)
 
@@ -372,7 +372,7 @@ class MmIngestSpec extends AnyFunSuite {
     val leg = IngestLoop.mmEvalLeg(spark, root, "mmq140")
     IngestLoop.bootstrapEval(leg, corpus, Decontam.eval1Docs(docs))
     val quar = IngestLoop.quarantine(spark, root, "mmq140")
-    IngestLoop.bootstrapMmQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
 
     // the q140 planted pairs: batch doc 10 renders eval item 7's IMAGE
     // (7 withdraws at the update: the re-admit direction); batch doc
@@ -423,7 +423,7 @@ class MmIngestSpec extends AnyFunSuite {
     val st = IngestLoop.mmStores(spark, root, "mmrg")
     IngestLoop.bootstrap(st, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmrg")
-    IngestLoop.bootstrapMmQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     val replay = IngestLoop.replayLeg(spark, root, "mmrg")
     IngestLoop.bootstrapReplay(replay, corpus)
     IngestLoop.runTick(st, t1, w,

@@ -192,7 +192,7 @@ class QuiesceBundleSpec extends AnyFunSuite {
     val st = IngestLoop.stores(spark, root, "qqr")
     IngestLoop.bootstrap(st, corpus)
     val quar = IngestLoop.quarantine(spark, root, "qqr")
-    IngestLoop.bootstrapQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     val rleg = IngestLoop.replayLeg(spark, root, "qqr")
     IngestLoop.bootstrapReplay(rleg, corpus)
     val w = QualityModel.weights(corpus, scope = "qbundle16")
@@ -251,7 +251,7 @@ class QuiesceBundleSpec extends AnyFunSuite {
     val st = IngestLoop.mmStores(spark, root, "mmq16")
     IngestLoop.bootstrap(st, corpus)
     val quar = IngestLoop.quarantine(spark, root, "mmq16")
-    IngestLoop.bootstrapQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     val rleg = IngestLoop.replayLeg(spark, root, "mmq16")
     IngestLoop.bootstrapReplay(rleg, corpus)
     val xid = 990077L

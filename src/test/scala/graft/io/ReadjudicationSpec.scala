@@ -34,7 +34,7 @@ class ReadjudicationSpec extends AnyFunSuite {
     val st = IngestLoop.stores(spark, root, name)
     val quar = IngestLoop.quarantine(spark, root, name)
     IngestLoop.bootstrap(st, corpus)
-    IngestLoop.bootstrapQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     IngestLoop.runTick(st, t1, weights,
       legs = IngestLoop.Legs(quar = Some(quar)))
     (st, quar)
@@ -129,7 +129,7 @@ class ReadjudicationSpec extends AnyFunSuite {
     val stB = IngestLoop.stores(spark, root, "readj_crash")
     val quarB = IngestLoop.quarantine(spark, root, "readj_crash")
     IngestLoop.bootstrap(stB, corpus)
-    IngestLoop.bootstrapQuarantine(quarB, corpus)
+    IngestLoop.bootstrapQuarantine(stB, quarB, corpus)
     IngestLoop.runTick(stB, t1, weights)
     assert(stB.shingles.maxTick === 2L && quarB.rows.maxTick === 1L,
       "precondition: dedup stores agree at tick 2, the quarantine lags")
@@ -158,7 +158,7 @@ class ReadjudicationSpec extends AnyFunSuite {
     val quar = IngestLoop.quarantine(spark, root, "rj_rp")
     val replay = IngestLoop.replayLeg(spark, root, "rj_rp")
     IngestLoop.bootstrap(st, corpus)
-    IngestLoop.bootstrapQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     IngestLoop.bootstrapReplay(replay, corpus)
     IngestLoop.runTick(st, t1, weights, lowFrac = lf,
       legs = IngestLoop.Legs(quar = Some(quar), replay = Some(replay)))
@@ -233,7 +233,7 @@ class ReadjudicationSpec extends AnyFunSuite {
       val st = IngestLoop.stores(spark, root, name)
       IngestLoop.bootstrap(st, corpus)
       val quar = IngestLoop.quarantine(spark, root, name)
-      IngestLoop.bootstrapQuarantine(quar, corpus)
+      IngestLoop.bootstrapQuarantine(st, quar, corpus)
       val replay = IngestLoop.replayLeg(spark, root, name)
       IngestLoop.bootstrapReplay(replay, corpus)
       IngestLoop.runTick(st, t1, weights,

@@ -109,7 +109,7 @@ class SemIngestSpec extends AnyFunSuite {
     // no-takedown world: 425 is semantically rejected
     val (stN, legN) = build(root, "td_no")
     val quarN = IngestLoop.quarantine(spark, root, "td_no")
-    IngestLoop.bootstrapQuarantine(quarN, corpus)
+    IngestLoop.bootstrapQuarantine(stN, quarN, corpus)
     IngestLoop.runTick(stN, t1, weights,
       legs = IngestLoop.Legs(sem = Some(legN), quar = Some(quarN)))
     IngestLoop.runTick(stN, t2, weights,
@@ -154,7 +154,7 @@ class SemIngestSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_sem_quar").toString
     val (st, leg) = build(root, "quar")
     val quar = IngestLoop.quarantine(spark, root, "quar")
-    IngestLoop.bootstrapQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     IngestLoop.runTick(st, t1, weights,
       legs = IngestLoop.Legs(sem = Some(leg), quar = Some(quar)))
     IngestLoop.runTick(st, t2, weights,

@@ -61,8 +61,7 @@ class TickAgreementSpec extends AnyFunSuite {
         s
       }
     val quar = IngestLoop.quarantine(spark, root, name)
-    if (mm) IngestLoop.bootstrapMmQuarantine(quar, corpus)
-    else IngestLoop.bootstrapQuarantine(quar, corpus)
+    IngestLoop.bootstrapQuarantine(st, quar, corpus)
     val replay = IngestLoop.replayLeg(spark, root, name)
     IngestLoop.bootstrapReplay(replay, corpus)
     val cen = ArtifactStore.gramCensusIncremental(spark, root, s"${name}_cen",
@@ -198,7 +197,7 @@ class TickAgreementSpec extends AnyFunSuite {
     val l = build(root, "agree_req")
     val st = l.st.asInstanceOf[IngestLoop.Stores]
     val otherQuar = IngestLoop.quarantine(spark, root, "agree_req_other")
-    IngestLoop.bootstrapQuarantine(otherQuar, corpus)
+    IngestLoop.bootstrapQuarantine(st, otherQuar, corpus)
     val otherReplay = IngestLoop.replayLeg(spark, root, "agree_req_other")
     IngestLoop.bootstrapReplay(otherReplay, corpus)
     refusedBeforeAnyMove(l, otherQuar.rows) {

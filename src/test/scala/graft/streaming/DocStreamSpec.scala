@@ -833,7 +833,7 @@ class DocStreamSpec extends AnyFunSuite {
     val st = graft.io.IngestLoop.stores(spark, artRoot, "sq1")
     graft.io.IngestLoop.bootstrap(st, documents)
     val quar = graft.io.IngestLoop.quarantine(spark, artRoot, "sq1")
-    graft.io.IngestLoop.bootstrapQuarantine(quar, documents)
+    graft.io.IngestLoop.bootstrapQuarantine(st, quar, documents)
 
     def jline(d: DocStream.Doc): String =
       s"""{"doc_id": ${d.doc_id}, "ts": ${d.ts}, "text": "${d.text}"}"""
@@ -908,7 +908,7 @@ class DocStreamSpec extends AnyFunSuite {
     val st = graft.io.IngestLoop.mmStores(spark, artRoot, "mmsq")
     graft.io.IngestLoop.bootstrap(st, documents)
     val quar = graft.io.IngestLoop.quarantine(spark, artRoot, "mmsq")
-    graft.io.IngestLoop.bootstrapMmQuarantine(quar, documents)
+    graft.io.IngestLoop.bootstrapQuarantine(st, quar, documents)
 
     def jline(dc: DocStream.Doc): String =
       s"""{"doc_id": ${dc.doc_id}, "ts": ${dc.ts}, "text": "${dc.text}"}"""
@@ -997,7 +997,7 @@ class DocStreamSpec extends AnyFunSuite {
     val leg = graft.io.IngestLoop.semLeg(spark, artRoot, "ssem", emb)
     graft.io.IngestLoop.bootstrapSem(leg, corpus)
     val quar = graft.io.IngestLoop.quarantine(spark, artRoot, "ssem")
-    graft.io.IngestLoop.bootstrapQuarantine(quar, corpus)
+    graft.io.IngestLoop.bootstrapQuarantine(st, quar, corpus)
 
     def jline(d: DocStream.Doc): String =
       s"""{"doc_id": ${d.doc_id}, "ts": ${d.ts}, "text": "${d.text}"}"""
@@ -1067,7 +1067,7 @@ class DocStreamSpec extends AnyFunSuite {
     graft.io.IngestLoop.bootstrapEval(leg, corpus,
       graft.operators.Decontam.eval1Docs(documents))
     val quar = graft.io.IngestLoop.quarantine(spark, artRoot, "seval")
-    graft.io.IngestLoop.bootstrapQuarantine(quar, corpus)
+    graft.io.IngestLoop.bootstrapQuarantine(st, quar, corpus)
 
     def jline(d: DocStream.Doc): String =
       s"""{"doc_id": ${d.doc_id}, "ts": ${d.ts}, "text": "${d.text}"}"""
@@ -1286,7 +1286,7 @@ class DocStreamSpec extends AnyFunSuite {
     graft.io.IngestLoop.bootstrapEval(evalL, corpus,
       graft.operators.Decontam.eval1Docs(documents))
     val quar = graft.io.IngestLoop.quarantine(spark, artRoot, "smm")
-    graft.io.IngestLoop.bootstrapMmQuarantine(quar, corpus)
+    graft.io.IngestLoop.bootstrapQuarantine(st, quar, corpus)
 
     def jline(d: DocStream.Doc): String =
       s"""{"doc_id": ${d.doc_id}, "ts": ${d.ts}, "text": "${d.text}"}"""
