@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.{CompletableFuture, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.{ExecutionException, Executors, FutureTask, TimeUnit}
 
 import scala.util.Try
 
@@ -24,15 +24,23 @@ import org.apache.spark.sql.graftbridge.ExecBridge
   * returned frame is the same severed checkpoint the sequential form
   * produced.
   *
-  * Pool work runs with the SUBMITTING thread's active session and local
-  * properties (job group, description, scheduler pool), captured per
-  * task; a pool thread would otherwise keep the snapshot it inherited
-  * when it was created.
+  * Every piece of pool work is a claimable task: it is queued on a
+  * fixed pool of 4 daemon threads, and whichever thread claims it first
+  * runs it — a pool thread, or a thread that needs its result. A thread
+  * that waits first runs, itself, every task of its own that no thread
+  * has started, then waits only for tasks already running. So work on
+  * the pool may submit and wait for more pool work (a pipeline chain
+  * runs its report and publish as branches; a report runs its profile
+  * passes as branches): every wait is for a task some thread is
+  * running, and that task waits, if at all, only for tasks of its own,
+  * so no thread waits on itself and the pool bounds only how many
+  * threads help.
   *
-  * Pool sizing: checkpoint fan-out in any one query is 2–4; a fixed
-  * pool of 4 daemon threads bounds driver-side concurrency no matter
-  * how many queries share the JVM (the bench runs 143 in sequence).
-  * Pool work never waits on other pool work.
+  * A task run by a pool thread runs with the SUBMITTING thread's active
+  * session and local properties (job group, description, scheduler
+  * pool), captured per task; a pool thread would otherwise keep the
+  * snapshot it inherited when it was created. A task the waiting
+  * thread runs itself runs with that thread's own.
   */
 private[graft] object Materialize {
 
@@ -42,25 +50,31 @@ private[graft] object Materialize {
     t
   })
 
-  /** `body` on the pool, with the caller's thread-local state. */
-  private def submit[T](spark: SparkSession)(body: => T): CompletableFuture[T] =
-    ExecBridge.withThreadLocalCaptured(spark, pool)(body)
-
-  /** The result of pool work; a failure rethrows the work's own
-    * exception. The generous ceiling makes a wedged job surface as a
-    * TimeoutException instead of hanging forever with no diagnostic —
-    * an hour is far above any legitimate checkpoint on any target (the
-    * 100 TB sizing puts the fattest severed marker minutes away). */
-  private def await[T](f: CompletableFuture[T]): T =
-    try f.get(1, TimeUnit.HOURS)
-    catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
-
-  /** `dfs.map(_.localCheckpoint())`, submitted concurrently; each
-    * result carries the size-gated broadcast hint ([[hintIfCompact]]). */
-  def par(dfs: Seq[DataFrame]): Seq[DataFrame] = {
-    val fs = dfs.map(df => submit(df.sparkSession)(df.localCheckpoint()))
-    fs.map(f => hintIfCompact(await(f)))
+  /** `body` as a task queued on the pool, with the caller's thread-local
+    * state. A `FutureTask` runs once: `run()` on a task some thread has
+    * started or finished returns at once. */
+  private def fork[T](spark: SparkSession)(body: => T): FutureTask[T] = {
+    val task = new FutureTask[T](() => body)
+    ExecBridge.withThreadLocalCaptured(spark, pool)(task.run())
+    task
   }
+
+  /** The task's result, run here if no thread has started it; a failure
+    * rethrows the task's own exception. The generous ceiling makes a
+    * wedged job surface as a TimeoutException instead of hanging forever
+    * with no diagnostic — an hour is far above any legitimate checkpoint
+    * on any target (the 100 TB sizing puts the fattest severed marker
+    * minutes away). */
+  private def join[T](task: FutureTask[T]): T = {
+    task.run()
+    try task.get(1, TimeUnit.HOURS)
+    catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
+  }
+
+  /** `dfs.map(sever)`, submitted concurrently ([[branches]]). */
+  def par(dfs: Seq[DataFrame]): Seq[DataFrame] =
+    dfs.headOption.fold(Seq.empty[DataFrame])(df =>
+      branches(df.sparkSession, dfs.map(d => () => sever(d))))
 
   /** `localCheckpoint` + size-gated broadcast hint — the severing the
     * operators should default to. A checkpoint scans as ExistingRDD
@@ -105,20 +119,21 @@ private[graft] object Materialize {
     * first joined at stage 6): its jobs overlap the intervening
     * stages instead of serializing inside the consumer's job. */
   def defer(df: => DataFrame): () => DataFrame = {
-    val f = submit(SparkSession.active)(hintIfCompact(df.localCheckpoint()))
-    () => await(f)
+    val task = fork(SparkSession.active)(sever(df))
+    () => join(task)
   }
 
   /** Run independent branches of driver work concurrently — whole DAG
-    * branches, each submitting its own jobs (the pipeline's writes, its
-    * reports and its publishes). The first branch runs on the calling
-    * thread, the others on the pool. Every branch is waited for; only
-    * then is the first failure (in branch order) rethrown, so no
-    * sibling is still running jobs when the caller sees it. A branch
-    * must not itself wait on pool work. */
+    * branches, each submitting its own jobs (the pipeline's chains, a
+    * chain's report and publish, a report's profile passes). Each
+    * branch is a pool task; the caller then runs every branch no thread
+    * has started and waits for the rest. A branch may itself call
+    * `branches`. Every branch is waited for; only then is the first
+    * failure (in branch order) rethrown, so no sibling is still running
+    * jobs when the caller sees it. Results come in branch order. */
   def branches[T](spark: SparkSession, work: Seq[() => T]): Seq[T] = {
-    val rest = work.drop(1).map(w => submit(spark)(w()))
-    val first = work.headOption.map(w => Try(w()))
-    (first.toSeq ++ rest.map(f => Try(await(f)))).map(_.get)
+    val tasks = work.map(w => fork(spark)(w()))
+    tasks.foreach(_.run())
+    tasks.map(t => Try(join(t))).map(_.get)
   }
 }

@@ -1,6 +1,8 @@
 package graft.profile
 
+import graft.operators.Materialize
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -58,30 +60,41 @@ case class TableProfile(
   * column) — `explode(array(struct(k, v…)))` — and aggregated by the
   * column index `k`, so each query holds one copy of its aggregates
   * whatever the column count (query planning and codegen grow with the
-  * expressions in a query, not with its rows):
-  *   pass 1 — the row count and the string columns' lengths in one
-  *            small global aggregate; every numeric column's census
-  *            (count, missing, zeros, negatives, infinities), moments
-  *            (mean, min, max, std, skew, kurt) and ONE exact
-  *            `percentile` buffer for all five quantiles in one
-  *            `groupBy(k)`; the Pearson matrix from [[pearson]];
-  *   pass 1b — every column's exact distinct count in one aggregate of
+  * expressions in a query, not with its rows).
+  *
+  * The passes are independent queries, so [[Profiler.profile]] runs
+  * them as concurrent branches ([[graft.operators.Materialize.branches]]);
+  * a pass that needs another's result runs after it, in its branch:
+  *   - pass 5, Spearman over ONE rank table for every numeric column
+  *            ([[spearmanMatrix]]), its Pearson over ranks from the same
+  *            [[pearson]] kernel, its severed table released after —
+  *            the longest branch, so it is submitted first;
+  *   - pass 1, the row count and the string columns' lengths in one
+  *            small global aggregate;
+  *   - pass 1, every numeric column's census (count, missing, zeros,
+  *            negatives, infinities), moments (mean, min, max, std,
+  *            skew, kurt) and ONE exact `percentile` buffer for all five
+  *            quantiles in one `groupBy(k)`; THEN pass 2, histograms:
+  *            one `groupBy(k, bin).count()` over the columns with a
+  *            range (bins need pass-1 min/max — a data-dependent
+  *            barrier, same shape as the reference's quantile→fill
+  *            dataflow);
+  *   - pass 1b, every column's exact distinct count in one aggregate of
   *            its own. Several distinct aggregates in one `agg` plan as
   *            an Expand (every row copied once per distinct column)
   *            grouped by (gid, value); beside the percentiles that
   *            would keep every exact percentile buffer once per group.
   *            Kept apart, the Expand carries only counts. The counts
   *            are report values, so they stay eligible for
-  *            [[graft.catalyst.ApproxDistinctAboveThreshold]];
-  *   pass 2 — histograms: one `groupBy(k, bin).count()` over the
-  *            columns with a range (bins need pass-1 min/max — a
-  *            data-dependent barrier, same shape as the reference's
-  *            quantile→fill dataflow);
-  *   pass 3 — duplicate-row count (groupBy all columns);
-  *   pass 4 — per-string-column top-k (k small; TakeOrdered per column);
-  *   pass 5 — Spearman over ONE rank table for every numeric column
-  *            ([[spearmanMatrix]]), its Pearson over ranks from the same
-  *            [[pearson]] kernel, its severed table released after.
+  *            [[graft.catalyst.ApproxDistinctAboveThreshold]]; THEN
+  *            pass 4, string top-k: every exact-path column in one
+  *            long-form query ([[topKExact]]), each sketch-path column
+  *            in its own ([[topKNative]]) — the valve reads pass 1b's
+  *            counts;
+  *   - pass 3, duplicate rows and missing patterns from ONE
+  *            `groupBy(all columns)`, regrouped by its null-flag pattern;
+  *   - pass 3c, the head and tail samples;
+  *   - the Pearson matrix from [[pearson]].
   *
   * Exact vs approximate is decided by input size alone, never by the
   * caller: the session's [[graft.catalyst.ApproxAboveThreshold]] valve
@@ -112,14 +125,27 @@ object Profiler {
   val nativeTopKRuns = new java.util.concurrent.atomic.AtomicLong
   val nativeRecountRuns = new java.util.concurrent.atomic.AtomicLong
 
-  /** Exact top-k: full groupBy — one shuffle row per distinct value
-    * per partition (map-side partials). The right path while distinct
-    * counts are bounded; the scale problem is the shuffle growing with
-    * column cardinality, not k. */
-  def topKExact(df: DataFrame, c: String, topK: Int): Seq[(String, Long)] =
-    df.filter(col(c).isNotNull).groupBy(c).count()
-      .orderBy(desc("count"), asc(c)).limit(topK).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
+  /** Exact top-k of every column in `cols` in ONE query: the columns
+    * melt to `(k, s)` entries, one `groupBy(k, s).count()` counts every
+    * value (map-side partials: one shuffle row per distinct value per
+    * partition), and `row_number()` over `partitionBy(k)`, ordered by
+    * count descending then value ascending, keeps each column's first
+    * `topK`. The right path while distinct counts are bounded (the
+    * valve caps a column here at [[DefaultTopkSketchThreshold]]
+    * distinct values, so each `k` partition stays bounded); the scale
+    * problem is the shuffle growing with column cardinality, not k. */
+  def topKExact(df: DataFrame, cols: Seq[String], topK: Int): Map[String, Seq[(String, Long)]] = {
+    if (cols.isEmpty) return Map.empty
+    val order = Window.partitionBy("k").orderBy(desc("count"), asc("s"))
+    val ranked = melt(df, cols.map(c => Seq(col(c).as("s"))))
+      .filter(col("s").isNotNull).groupBy("k", "s").count()
+      .withColumn("rank", row_number().over(order)).filter(col("rank") <= topK)
+      .collect().groupBy(_.getInt(0))
+    cols.zipWithIndex.map { case (c, k) =>
+      c -> ranked.getOrElse(k, Array.empty[Row]).sortBy(_.getInt(3)).toSeq
+        .map(r => (r.getString(1), r.getLong(2)))
+    }.toMap
+  }
 
   /** Heavy-hitter top-k for HIGH-cardinality columns — the sketch side
     * of the valve. ONE ObjectHashAggregate pass with the
@@ -235,6 +261,9 @@ object Profiler {
               withSpearman: Boolean = true): TableProfile = {
     val numCols = df.schema.fields.filter(isNumeric).map(_.name).toSeq
     val strCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
+    // Each pass is a lazy val; the branches at the end force them
+    // concurrently, and a pass reading another's result (the histograms,
+    // the top-k) is forced in the same branch, after it.
 
     // ---- pass 1: row count and string lengths, one small aggregate --
     val strAggs = strCols.flatMap { c =>
@@ -245,13 +274,12 @@ object Profiler {
         max(length(col(c)).cast("long")),
         avg(length(col(c))))
     }
-    val head = df.agg(count(lit(1)), strAggs: _*).head()
-    val nRows = head.getLong(0)
+    lazy val head = df.agg(count(lit(1)), strAggs: _*).head()
 
     // ---- pass 1: numeric statistics in long form ---------------------
     // one row per column index k: k, then the NumericProfile fields in
     // order (nDistinct and the histogram come from passes 1b and 2)
-    val stats =
+    lazy val stats =
       if (numCols.isEmpty) Map.empty[Int, Row]
       else {
         val v = col("v")
@@ -271,7 +299,7 @@ object Profiler {
             percentile(v, typedLit(Quantiles)).as("q"))
           .collect())
       }
-    val numStats = numCols.zipWithIndex.map { case (c, k) =>
+    lazy val numStats = numCols.zipWithIndex.map { case (c, k) =>
       val r = stats.get(k)
       def n(i: Int): Long = opt[Long](r, i).getOrElse(0L)
       def d(i: Int): Option[Double] = opt[Double](r, i)
@@ -284,20 +312,21 @@ object Profiler {
     }
 
     // ---- pass 1b: all distinct counts in their own aggregate ---------
-    val distAggs = (numCols ++ strCols).map(c => countDistinct(col(c)).as(c))
-    val distRow =
+    lazy val distRow = {
+      val distAggs = (numCols ++ strCols).map(c => countDistinct(col(c)).as(c))
       if (distAggs.nonEmpty) Some(df.agg(distAggs.head, distAggs.tail: _*).head())
       else None
+    }
     def dist(c: String): Long = distRow.fold(0L)(_.getAs[Long](c))
 
     // ---- pass 2: all histograms in one long-form count ---------------
-    val ranged = numStats.flatMap { p =>
+    lazy val ranged = numStats.flatMap { p =>
       (p.min, p.max) match {
         case (Some(lo), Some(hi)) if hi > lo => Some((p.name, lo, (hi - lo) / bins))
         case _ => None
       }
     }
-    val binCounts: Map[(String, Long), Long] =
+    lazy val binCounts: Map[(String, Long), Long] =
       if (ranged.isEmpty) Map.empty
       else melt(df, ranged.map { case (c, lo, width) =>
           // least() skips a null: without the guard a null value would
@@ -306,24 +335,28 @@ object Profiler {
             least(floor((col(c).cast("double") - lo) / width), lit(bins - 1))).as("bin"))
         }).filter(col("bin").isNotNull).groupBy("k", "bin").count().collect()
         .map(r => (ranged(r.getInt(0))._1, r.getLong(1)) -> r.getLong(2)).toMap
-    val hist = ranged.map { case (c, lo, width) =>
+    lazy val hist = ranged.map { case (c, lo, width) =>
       c -> (0 until bins).map { b =>
         (lo + b * width, lo + (b + 1) * width, binCounts.getOrElse((c, b.toLong), 0L))
       }
     }.toMap
 
-    // ---- pass 3: duplicate rows --------------------------------------
-    val nDup = nRows - df.dropDuplicates().count()
-
-    // ---- pass 3b: A11 per-row missing-pattern matrix -----------------
-    // one groupBy over the null-flag bitstring (cardinality ≤ 2^nCols,
-    // in practice a handful; partial-aggregates map-side), top patterns
-    // by frequency — the reference report's missing-matrix condensed to
-    // its distinct rows
-    val patternCol = concat(df.columns.map(c => col(c).isNull.cast("int").cast("string")): _*)
-    val missingPatterns = df.groupBy(patternCol.as("pattern")).count()
-      .orderBy(desc("count"), asc("pattern")).limit(topK).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    // ---- pass 3: duplicate rows and A11 missing patterns -------------
+    // one groupBy over all columns (one group per distinct row),
+    // regrouped by its null-flag bitstring: per pattern, the distinct
+    // rows and the rows. Σ distinct rows gives the duplicate count; the
+    // patterns are the reference report's missing-matrix condensed to
+    // its distinct rows, most frequent first. The collect is the
+    // pattern table, ≤ 2^nCols rows (in practice a handful).
+    lazy val dupsAndPatterns = {
+      val flags = df.columns.toSeq.map(c => col(c).isNull.cast("int").cast("string"))
+      val patterns = df.groupBy(df.columns.toSeq.map(col): _*).agg(count(lit(1)).as("rows!"))
+        .groupBy(concat(flags: _*)).agg(count(lit(1)), sum("rows!")).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      (patterns.map(_._3).sum - patterns.map(_._2).sum,
+        patterns.sortBy { case (p, _, n) => (-n, p) }.take(topK)
+          .map { case (p, _, n) => (p, n) }.toSeq)
+    }
 
     // ---- pass 3c: A12 head/tail sample -------------------------------
     // limit() reads only leading partitions; tail() only trailing ones —
@@ -332,23 +365,33 @@ object Profiler {
     def fmtRows(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[String]] =
       rows.toSeq.map(r => (0 until r.length).map(i =>
         if (r.isNullAt(i)) "null" else r.get(i).toString))
-    val headRows = fmtRows(df.limit(sampleN).collect())
-    val tailRows = fmtRows(df.tail(sampleN))
+    lazy val samples = (fmtRows(df.limit(sampleN).collect()), fmtRows(df.tail(sampleN)))
 
     // ---- pass 4: string top-k (valve-selected path) ------------------
     // Same discipline as the percentile valve (ApproxAboveThreshold):
     // exact below the threshold, sketch above — keyed here on the exact
     // per-column distinct count pass 1b already computed, so the valve
     // decision is free.
-    val topkThresh = df.sparkSession.conf
-      .getOption(TopkSketchThresholdKey).map(_.toLong)
-      .getOrElse(DefaultTopkSketchThreshold)
-    val tops = strCols.map { c =>
-      c -> (if (topkThresh >= 0 && dist(c) > topkThresh)
-              topKNative(df, c, topK)
-            else topKExact(df, c, topK))
-    }.toMap
+    lazy val tops = {
+      val topkThresh = df.sparkSession.conf
+        .getOption(TopkSketchThresholdKey).map(_.toLong)
+        .getOrElse(DefaultTopkSketchThreshold)
+      val (sketched, exact) = strCols.partition(c => topkThresh >= 0 && dist(c) > topkThresh)
+      topKExact(df, exact, topK) ++ sketched.map(c => c -> topKNative(df, c, topK))
+    }
 
+    lazy val correlations = pairsOf(numCols).zip(pearson(df, numCols.map(col)))
+      .flatMap { case ((a, b), r) => r.map(x => (a, b, x)) }
+
+    // ---- pass 5: Spearman matrix (A10's second method) ---------------
+    lazy val spearman =
+      if (withSpearman) spearmanMatrix(df, numCols) else Seq.empty
+
+    Materialize.branches(df.sparkSession, Seq[() => Any](
+      () => spearman, () => head, () => hist, () => tops,
+      () => dupsAndPatterns, () => samples, () => correlations))
+
+    val nRows = head.getLong(0)
     val numeric = numStats.map(p =>
       p.copy(nDistinct = dist(p.name), histogram = hist.getOrElse(p.name, Seq.empty)))
     val strings = strCols.zipWithIndex.map { case (c, j) =>
@@ -357,12 +400,8 @@ object Profiler {
       StringProfile(c, h[Long](0).getOrElse(0L), h[Long](1).getOrElse(0L), dist(c),
         h[Long](2), h[Long](3), h[Double](4), tops(c))
     }
-    val correlations = pairsOf(numCols).zip(pearson(df, numCols.map(col)))
-      .flatMap { case ((a, b), r) => r.map(x => (a, b, x)) }
-
-    // ---- pass 5: Spearman matrix (A10's second method) ---------------
-    val spearman =
-      if (withSpearman) spearmanMatrix(df, numCols) else Seq.empty
+    val (nDup, missingPatterns) = dupsAndPatterns
+    val (headRows, tailRows) = samples
     TableProfile(nRows, df.columns.length, nDup, numeric, strings,
       correlations, alerts(nRows, numeric, strings, correlations),
       spearman, df.columns.toSeq, missingPatterns, headRows, tailRows)

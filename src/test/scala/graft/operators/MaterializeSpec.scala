@@ -2,7 +2,12 @@ package graft.operators
 
 import graft.TestSpark
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** Pins the load-bearing mechanics of [[Materialize]]:
   *
@@ -14,9 +19,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *    unhinted.
   *  - pool work runs with the caller's local properties, whatever the
   *    pool thread inherited when it was created.
+  *  - branches nest: a branch may run branches of its own, more than
+  *    the pool has threads, and still finish, with results in branch
+  *    order and a failure rethrown only after every sibling finished.
   */
-class MaterializeSpec extends AnyFunSuite {
+class MaterializeSpec extends AnyFunSuite with TimeLimits {
   private lazy val spark = TestSpark.spark
+  // a wedged wait is interrupted, so the test fails instead of hanging
+  private implicit val signaler: Signaler = ThreadSignaler
 
   test("sever broadcast-hints a small checkpointed frame (reflection intact)") {
     import spark.implicits._
@@ -66,5 +76,40 @@ class MaterializeSpec extends AnyFunSuite {
     out.get
     assert(jobs.nonEmpty)
     jobs.foreach(j => assert(j.props.getProperty("spark.jobGroup.id") === "b"))
+  }
+
+  test("nested branches finish, with results in branch order") {
+    // 6 outer branches of 6 inner branches each: 36 jobs run from
+    // inside pool work, far more waits than the pool has threads
+    val out = failAfter(120.seconds) {
+      Materialize.branches(spark, (0 until 6).map { i => () =>
+        Materialize.branches(spark, (0 until 6).map { j => () =>
+          spark.range(6 * i + j + 1).count()
+        })
+      })
+    }
+    assert(out === (0 until 6).map(i => (0 until 6).map(j => 6L * i + j + 1)))
+  }
+
+  test("a failed inner branch is rethrown only after every sibling finished") {
+    // the first failure in branch order is outer 1's inner 1
+    val failing = Set((1, 1), (1, 3), (2, 0))
+    val finished = new ConcurrentLinkedQueue[(Int, Int)]
+    val e = failAfter(120.seconds) {
+      intercept[IllegalStateException] {
+        Materialize.branches(spark, (0 until 3).map { i => () =>
+          Materialize.branches(spark, (0 until 4).map { j => () =>
+            if (failing((i, j))) throw new IllegalStateException(s"inner $i.$j")
+            Thread.sleep(100)
+            spark.range(1000).selectExpr("sum(id)").collect()
+            finished.add((i, j))
+          })
+        })
+      }
+    }
+    assert(e.getMessage === "inner 1.1")
+    // every sibling's job had finished when the failure was rethrown
+    assert(finished.asScala.toSet ===
+      (for (i <- 0 until 3; j <- 0 until 4) yield (i, j)).toSet -- failing)
   }
 }

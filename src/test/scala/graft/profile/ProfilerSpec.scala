@@ -376,6 +376,41 @@ class ProfilerSpec extends AnyFunSuite {
       "a long-form profile aggregate grew with the numeric column count")
   }
 
+  test("duplicates, missing patterns and top-k match a brute-force computation") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val rows = (0 until 400).map { i =>
+      (if (i % 9 == 2) None else Some(rnd.nextInt(3)),
+       if (i % 5 == 1) None else Some(s"v${rnd.nextInt(4)}"),
+       if (i % 7 == 3) None else Some(s"w${rnd.nextInt(30)}"))
+    }
+    val topK = 3
+    val p = Profiler.profile(rows.toDF("x", "s", "t"), topK = topK)
+    // most frequent first, ties by key ascending; the first topK
+    def top(keys: Seq[String]): Seq[(String, Long)] =
+      keys.groupBy(identity).map { case (k, v) => (k, v.size.toLong) }.toSeq
+        .sortBy { case (k, n) => (-n, k) }.take(topK)
+    assert(p.nDuplicateRows === rows.size - rows.distinct.size)
+    assert(p.missingPatterns === top(rows.map(_.productIterator
+      .map(v => if (v == None) "1" else "0").mkString)))
+    assert(p.strings.map(s => s.name -> s.topValues) ===
+      Seq("s" -> top(rows.flatMap(_._2)), "t" -> top(rows.flatMap(_._3))))
+  }
+
+  test("profile queries for 6 string columns equal those for 2") {
+    // every exact-path top-k in one query: no query per string column
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val (_, df) = tiedFrame(300)
+    val strs = df.select(df.columns.map(col) ++ (0 until 6).map(i =>
+      concat(lit(s"s$i-"), (col("a") % (i + 2)).cast("string")).as(s"s$i")): _*)
+    val two = strs.drop("s2", "s3", "s4", "s5")
+    val (p2, n2) = TestSpark.withQueryCount(spark)(Profiler.profile(two))
+    val (p6, n6) = TestSpark.withQueryCount(spark)(Profiler.profile(strs))
+    assert(p2.strings.size === 2 && p6.strings.size === 6)
+    assert(p6.strings.forall(_.topValues.nonEmpty))
+    assert(n6 === n2, "profile queries grew with the string column count")
+  }
+
   test("Spearman's Spark job count for 9 numeric columns equals that for 3") {
     // one rank table, one join and one regroup for any column count: no
     // job per column
@@ -468,7 +503,7 @@ class ProfilerSpec extends AnyFunSuite {
     // real low-cardinality skew: every value fits in capacity, no eviction
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     assert(Profiler.topKNative(docs, "source", 10) ===
-      Profiler.topKExact(docs, "source", 10))
+      Profiler.topKExact(docs, Seq("source"), 10)("source"))
     // high-cardinality skew: ~16k unique cold values (count 1) + 10 hot
     // values at ~400 each. Per 4-partition split each hot value's
     // in-partition count (~100) far exceeds rows/capacity (~20), so the
@@ -479,7 +514,7 @@ class ProfilerSpec extends AnyFunSuite {
           concat(lit("hot"), org.apache.spark.sql.functions.expr("(id div 5) % 10")))
         .otherwise(concat(lit("cold"), col("id"))).as("v"))
       .repartition(4)
-    val exact = Profiler.topKExact(skewed, "v", 10)
+    val exact = Profiler.topKExact(skewed, Seq("v"), 10)("v")
     assert(exact.forall(_._2 === 400L), "expected the 10 hot values on top")
     assert(Profiler.topKNative(skewed, "v", 10) === exact,
       "native top-k diverged from exact on skewed high-cardinality data")
