@@ -380,16 +380,28 @@ object ArtifactStore {
       tombs.appendTickAt(t, ids.select(key))
 
     /** Fold every store through [[resolve]] into its generation, then
-      * clear the tombstones — only when tombstones exist and EVERY fold
-      * ran. A skipped single-generation fold keeps them; reads resolve
-      * either way, so a crash anywhere here changes no read. Folding a
-      * subset and clearing would resurface the retracted rows of the
-      * stores left out, so `stores` must be every store read through
-      * this lineage. Returns each store's output partition count (0 =
-      * skipped). */
+      * clear the tombstones — only when tombstones exist and EVERY store
+      * is folded through them. The folds run as concurrent branches
+      * ([[graft.operators.Materialize.branches]]): each rewrites its own
+      * store, and the tombstones are cleared only after every branch
+      * returned its count, so a failed fold leaves any subset of the
+      * stores folded and the tombstones in place. A skipped fold (the
+      * store is already one generation) counts only when that
+      * generation covers the newest tombstone tick: at a quiesce point a
+      * later takedown tombstones at a later tick, so such a generation
+      * was folded through every tombstone — the re-run of a failed fold
+      * finds the stores that did fold this way. Otherwise it keeps them;
+      * reads resolve either way, so a crash anywhere here changes no
+      * read. Folding a subset and clearing would resurface the retracted
+      * rows of the stores left out, so `stores` must be every store read
+      * through this lineage. Returns each store's output partition count
+      * (0 = skipped). */
     def fold(stores: Seq[IngestStateStore]): Seq[Int] = {
-      val folded = stores.map(s => s.compactWith(df => resolve(df)))
-      if (tombs.maxTick > 0 && folded.forall(_ > 0)) tombs.reset()
+      val upTo = tombs.maxTick
+      val folded = graft.operators.Materialize.branches(tombs.spark,
+        stores.map(s => () => s.compactWith(df => resolve(df))))
+      if (upTo > 0 && stores.zip(folded).forall { case (s, n) =>
+          n > 0 || s.maxTick >= upTo }) tombs.reset()
       folded
     }
   }
@@ -1003,8 +1015,8 @@ object ArtifactStore {
     * O(ticks). The superseded base and ticks are deleted only AFTER the
     * new base commits, so a killed compaction loses nothing and retries
     * cleanly. */
-  final class IngestStateStore(spark: SparkSession, root: String,
-                               name: String) {
+  final class IngestStateStore(private[io] val spark: SparkSession,
+                               root: String, name: String) {
     private val base = s"$root/ingest_state/$name"
     private def f = fs(spark, base)
 

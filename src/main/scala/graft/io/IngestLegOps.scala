@@ -244,9 +244,10 @@ trait IngestLegOps { self: IngestLoop.type =>
     *
     * Per modality of `st` whose rung the leg holds eval media for (the
     * q140 leg on a multimodal loop), the eval-side signature store
-    * advances with the same update id (appended last, so it can only
-    * lag), and the retro-catch also probes the loop's MAINTAINED doc
-    * signature store against the added items' signatures — an
+    * advances with the same update id (appended concurrently with the
+    * gram/band/shingle stores), and the retro-catch also probes the
+    * loop's MAINTAINED doc signature store against the added items'
+    * signatures — an
     * already-ingested doc whose image renders a newly-held-out eval
     * image is caught with zero payload re-reads. */
   def evalUpdateTick(st: StoreSet, leg: EvalLeg, addDocs: DataFrame,
@@ -254,14 +255,18 @@ trait IngestLegOps { self: IngestLoop.type =>
                      updateId: Long = -1L): DataFrame = {
     val u = if (updateId > 0) updateId else evalTickOf(leg)
     leg.lineage.retractAt(u, withdrawIds)
-    leg.grams.appendTickAt(u,
-      graft.operators.Contamination.grams(addDocs, leg.n))
-    leg.bands.appendTickAt(u, Fuzzy.corpusBandState(addDocs))
-    leg.shingles.appendTickAt(u, Fuzzy.corpusShingleHashes(addDocs))
     val media = st.modalities.flatMap(m => leg.sigsOf(m.rung).map(m -> _))
     val addSigs = media.zip(graft.operators.Materialize.par(
       media.map(_._1.derive(addDocs))))
-    addSigs.foreach { case ((_, store), a) => store.appendTickAt(u, a) }
+    // the eval-side appends, as concurrent branches: each to its own
+    // store, each a tick-keyed overwrite
+    graft.operators.Materialize.branches(addDocs.sparkSession, Seq(
+        () => leg.grams.appendTickAt(u,
+          graft.operators.Contamination.grams(addDocs, leg.n)),
+        () => leg.bands.appendTickAt(u, Fuzzy.corpusBandState(addDocs)),
+        () => leg.shingles.appendTickAt(u,
+          Fuzzy.corpusShingleHashes(addDocs))) ++
+      addSigs.map { case ((_, store), a) => () => store.appendTickAt(u, a) })
     val lineage = st.text.lineage
     val vb = lineage.resolve(leg.docGrams.current().getOrElse(
         sys.error("eval leg not bootstrapped: no docGrams base")))
@@ -288,11 +293,12 @@ trait IngestLegOps { self: IngestLoop.type =>
     * it from one store would open a SECOND id once that store had
     * committed, leaving duplicate eval rows that inflate
     * lshPairsAgainstState intersection counts. So the id is
-    * [[nextTickOf]] over EVERY attached data store (the modality sig
-    * stores append last, so they can only lag), clamped by the
-    * tombstone store's maxTick — tombs has no tick-1 bootstrap (and
-    * [[compactEval]] resets it), so it only raises the agreement when
-    * it is the one that got ahead (the appends run tombs-first). */
+    * [[nextTickOf]] over EVERY attached data store (a crash lands any
+    * subset of their concurrent appends, and the max is redone),
+    * clamped by the tombstone store's maxTick — tombs has no tick-1
+    * bootstrap (and [[compactEval]] resets it), so it only raises the
+    * agreement when it is the one that got ahead (the appends run
+    * tombs-first). */
   private def evalTickOf(leg: EvalLeg): Long =
     math.max(nextTickOf(leg.data.map(_.maxTick)), leg.tombs.maxTick)
 

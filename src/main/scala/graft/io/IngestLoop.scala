@@ -389,15 +389,17 @@ object IngestLoop extends IngestLegOps {
 
   /** The tick this run should PRODUCE, with crash recovery: normally
     * every store agrees on maxTick T and the next tick is T+1; after a
-    * crash between the per-store writes the stores disagree, and the
+    * crash that landed any subset of the per-store writes (the
+    * fold-back runs them concurrently) the stores disagree, and the
     * incomplete tick (the max) must be REDONE — judged against
     * `currentUpTo(t−1)` and rewritten idempotently, so a partial fold
     * can neither self-dup the replayed batch nor leave a store behind
-    * (IngestLoopSpec pins the replay). Every attached consumer store
-    * takes part: a crash AFTER the shingles append but BEFORE the
-    * postings append would otherwise leave the three dedup stores
-    * agreeing at tick T, the replay would judge the batch against its
-    * own tick-T admissions, and the index would miss tick T for good. */
+    * (IngestLoopSpec pins the replay; TickAgreementSpec every subset).
+    * Every attached consumer store takes part: a crash that landed the
+    * dedup stores' appends but not the postings append would otherwise
+    * leave the three dedup stores agreeing at tick T, the replay would
+    * judge the batch against its own tick-T admissions, and the index
+    * would miss tick T for good. */
   private[io] def nextTickOf(done: Seq[Long]): Long = {
     require(done.min >= 1,
       "ingest loop not bootstrapped (every store — including the BM25 " +
@@ -512,10 +514,13 @@ object IngestLoop extends IngestLegOps {
     private[io] def takedownPending(st: StoreSet): Boolean =
       subtracts && inFlight(st, takedownTicks(st))
 
-    /** Compact each consumer index whose store crossed `maxDataFiles`. */
-    private[io] def compactConsumers(maxDataFiles: Long): Unit =
-      consumers.filter(_.store.dataFileCount > maxDataFiles)
-        .foreach(_.compact())
+    /** Compact each consumer index whose store crossed `maxDataFiles`,
+      * as concurrent branches: each index folds its own store. */
+    private[io] def compactConsumers(spark: SparkSession,
+                                     maxDataFiles: Long): Unit =
+      Materialize.branches(spark, consumers
+        .filter(_.store.dataFileCount > maxDataFiles)
+        .map(c => () => c.compact()))
 
     /** gc every attached store — the lineage over `core` and `tombs`,
       * the eval-side stores, the consumer indexes, the export and the
@@ -542,42 +547,52 @@ object IngestLoop extends IngestLegOps {
       replay = req.replay.orElse(legs.replay))
   }
 
-  /** THE FOLD-BACK — every tick kind's admitted docs append their
-    * increments at tick `t` through here, so dedup state and every
-    * consumer can never disagree about what was ingested: `hashes` (the
-    * caller's (doc_id, ch) frame), the admitted docs' bands and
-    * shingles, the modality `sigs` increments, and each attached leg —
-    * sem signature rows, eval docGrams (the retro-catch reverse index),
-    * BM25 postings and the packed export (from `served`: the curated
-    * text when a curate leg is attached), the RAW census increment, ANN
-    * codes under the index's CURRENT serving artifacts, and the mix
-    * counts. Every append is a tick-keyed overwrite, so a redone tick
-    * rewrites identical increments. */
+  /** THE FOLD-BACK — every tick kind's writes at tick `t` go through
+    * here, so dedup state and every consumer can never disagree about
+    * what was ingested: `hashes` (the caller's (doc_id, ch) frame), the
+    * admitted docs' bands and shingles, the caller's `more` appends
+    * (the modality sig increments, the quarantine rows and resolvedIds,
+    * the replay feats), and each attached leg — sem signature rows, eval
+    * docGrams (the retro-catch reverse index), BM25 postings and the
+    * packed export (from `served`: the curated text when a curate leg is
+    * attached), the RAW census increment, ANN codes under the index's
+    * CURRENT serving artifacts, and the mix counts.
+    *
+    * The writes run as CONCURRENT branches ([[Materialize.branches]]):
+    * each goes to its own store, from inputs fixed before the tick's
+    * first write (severed frames and state read below `t`), and is a
+    * tick-keyed overwrite. Every branch is waited for before the first
+    * failure is rethrown, so a failed tick leaves every write but the
+    * failing ones landed — any subset of the stores at `t`, which the
+    * tick agreement ([[nextTickOf]]) redoes, rewriting identical
+    * increments. */
   private[graft] def foldAdmitted(t: Long, st: Stores, hashes: DataFrame,
                                   admIds: DataFrame, admDocs: DataFrame,
                                   served: DataFrame,
-                                  sigs: Seq[(ArtifactStore.IngestStateStore,
+                                  more: Seq[(ArtifactStore.IngestStateStore,
                                              DataFrame)],
                                   legs: Legs): Unit = {
-    st.hashes.appendTickAt(t, hashes)
-    st.bands.appendTickAt(t, Fuzzy.corpusBandState(admDocs))
-    st.shingles.appendTickAt(t, Fuzzy.corpusShingleHashes(admDocs))
-    sigs.foreach { case (s, df) => s.appendTickAt(t, df) }
-    legs.sem.foreach(leg => leg.sigs.appendTickAt(t,
-      graft.operators.SemanticGate.sigRowsOf(leg.vectors, admIds,
-        leg.nTables, leg.bits, leg.dim)))
-    legs.eval.foreach(leg => leg.docGrams.appendTickAt(t,
-      graft.operators.Contamination.grams(admDocs, leg.n)))
-    legs.idx.foreach(_.appendDocsAt(t, served))
-    legs.rawCensus.foreach(_.appendDocsAt(t, admDocs))
-    legs.ann.foreach { leg =>
-      val (c, r) = leg.idx.servingArtifacts().getOrElse((leg.cents, leg.rcb))
-      leg.idx.appendVectorsAt(t, leg.vectors.join(
-        admIds.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
-        c, r)
-    }
-    legs.export.foreach(leg => leg.store.appendDocsAt(t, served, leg.ms))
-    legs.mix.foreach(_.appendDocsAt(t, admDocs))
+    def append(s: ArtifactStore.IngestStateStore)(df: => DataFrame) =
+      () => s.appendTickAt(t, df)
+    Materialize.branches(admIds.sparkSession,
+      Seq(append(st.hashes)(hashes),
+        append(st.bands)(Fuzzy.corpusBandState(admDocs)),
+        append(st.shingles)(Fuzzy.corpusShingleHashes(admDocs))) ++
+      more.map { case (s, df) => append(s)(df) } ++
+      legs.sem.map(leg => append(leg.sigs)(
+        graft.operators.SemanticGate.sigRowsOf(leg.vectors, admIds,
+          leg.nTables, leg.bits, leg.dim))) ++
+      legs.eval.map(leg => append(leg.docGrams)(
+        graft.operators.Contamination.grams(admDocs, leg.n))) ++
+      legs.idx.map(i => () => i.appendDocsAt(t, served)) ++
+      legs.rawCensus.map(c => () => c.appendDocsAt(t, admDocs)) ++
+      legs.ann.map(leg => () => {
+        val (c, r) = leg.idx.servingArtifacts().getOrElse((leg.cents, leg.rcb))
+        leg.idx.appendVectorsAt(t, leg.vectors.join(admIds.select(
+          col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"), c, r)
+      }) ++
+      legs.export.map(leg => () => leg.store.appendDocsAt(t, served, leg.ms)) ++
+      legs.mix.map(m => () => m.appendDocsAt(t, admDocs)))
   }
 
   /** The exact-gate state and the fuzzy flags of `docs` against the
@@ -596,17 +611,17 @@ object IngestLoop extends IngestLegOps {
     (state, fuzzy)
   }
 
-  /** The REPLAY leg's append (q134): the cohort that reached the quality
-    * gate (`lq` non-null — no evidence of ANY dup class) with its gate
-    * features from `texts` and its tick-time verdict, so a later model
-    * re-gates it with zero text reads. */
-  private[io] def appendReplay(legs: Legs, t: Long,
-                               v: DataFrame, texts: DataFrame): Unit =
-    legs.replay.foreach(_.feats.appendTickAt(t, v.filter(col("lq").isNotNull)
+  /** The REPLAY leg's append (q134), for [[foldAdmitted]]: the cohort
+    * that reached the quality gate (`lq` non-null — no evidence of ANY
+    * dup class) with its gate features from `texts` and its tick-time
+    * verdict, so a later model re-gates it with zero text reads. */
+  private def replayRows(legs: Legs, t: Long, v: DataFrame, texts: DataFrame)
+      : Option[(ArtifactStore.IngestStateStore, DataFrame)] =
+    legs.replay.map(_.feats -> v.filter(col("lq").isNotNull)
       .select(col("doc_id"), col("source"), col("lq"))
       .join(QualityModel.gateFeatures(texts), "doc_id")
       .withColumn("tick", lit(t))
-      .select(replayCols: _*)))
+      .select(replayCols: _*))
 
   private def replayCols =
     Seq(col("doc_id"), col("source"), col("tick"), col("lq")) ++
@@ -1017,25 +1032,25 @@ object IngestLoop extends IngestLegOps {
     // transformed text; the dedup stores keep folding RAW evidence
     // (two-column provenance)
     val curRows = legs.curate.map(curatedRows(_, t, admDocs, batchDocs))
-    foldAdmitted(t, st.text, v.join(admIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("h").as("ch")), admIds, admDocs,
-      curRows.map(_.select("doc_id", "source", "text")).getOrElse(admDocs),
-      sigs.map { case (m, s) =>
-        m.sigs -> s.join(admIds, Seq("doc_id"), "left_semi") },
-      legs)
     // QUARANTINE leg (q131): evidence/quality rejections are held
     // re-judgeable, with their batch signatures on a multimodal loop;
     // over-budget docs are NOT quarantined (rate-limited, not rejected
     // on evidence — see QuotaLeg). resolvedIds appends an empty frame
     // so both quarantine stores stay in the tick agreement.
-    legs.quar.foreach { qs =>
+    val quarRows = legs.quar.toSeq.flatMap { qs =>
       val rej = v.filter(!Provenance.novel(ladder) || col("lq") === true)
         .withColumn("verdict", Provenance.verdictOf(ladder))
         .join(batchDocs.select("doc_id", "text"), "doc_id")
-      qs.rows.appendTickAt(t, quarantineLayout(rej, sigs))
-      qs.resolvedIds.appendTickAt(t, admIds.limit(0))
+      Seq(qs.rows -> quarantineLayout(rej, sigs),
+        qs.resolvedIds -> admIds.limit(0))
     }
-    appendReplay(legs, t, v, batchDocs)
+    foldAdmitted(t, st.text, v.join(admIds, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("h").as("ch")), admIds, admDocs,
+      curRows.map(_.select("doc_id", "source", "text")).getOrElse(admDocs),
+      sigs.map { case (m, s) =>
+        m.sigs -> s.join(admIds, Seq("doc_id"), "left_semi") } ++
+        quarRows ++ replayRows(legs, t, v, batchDocs),
+      legs)
     // with a curate leg the report carries the q137 rewrite audit
     curRows match {
       case None => report
@@ -1084,10 +1099,12 @@ object IngestLoop extends IngestLegOps {
     * ([[Legs]]`.lineage` over `st.all` — on a multimodal loop the sig
     * stores too) into its current generation —
     * applying the tombstone anti-join while folding, so retracted docs'
-    * rows physically leave the state. The tombstone store is cleared
-    * only once every data store folded (a skipped single-gen fold keeps
-    * it; the read-path anti-join makes either outcome verdict-invariant,
-    * which is also why any crash ordering here is safe — spec-pinned).
+    * rows physically leave the state. The stores fold concurrently,
+    * and the tombstone store is cleared only once every data store is
+    * folded through it ([[ArtifactStore.Lineage.fold]]: a failed fold
+    * keeps it, and its re-run clears it; the read-path anti-join makes
+    * either outcome verdict-invariant, which is also why a crash that
+    * folded any subset of the stores is safe — spec-pinned).
     * Returns whether compaction ran. Run at quiesce points only (see
     * `IngestStateStore.currentUpTo`). The eval-SIDE stores fold via
     * compactEval — their tombstones are eval ids, a separate lineage.
@@ -1204,7 +1221,7 @@ object IngestLoop extends IngestLegOps {
     val compacted = compactIfNeeded(st, maxDataFiles, legs)
     val evalCompacted = legs.eval.exists(l =>
       compactEvalIfNeeded(l, maxDataFiles))
-    legs.compactConsumers(maxDataFiles)
+    legs.compactConsumers(spark, maxDataFiles)
     val semServed = legs.sem.map(l =>
       semCanaryTick(st.text, l, spark, root, semNextName.get))
     val semResized = legs.sem.zip(semServed).exists { case (a, b) => a ne b }
@@ -1311,12 +1328,6 @@ object IngestLoop extends IngestLegOps {
       w, lowFrac)
     val admIds = v.filter(col("lq") === false).select("doc_id")
     val admDocs = dupRows.join(admIds, Seq("doc_id"), "left_semi")
-    // the re-judged cohort is the batch for the curate winner rule
-    foldAdmitted(t, st.text, v.filter(col("lq") === false)
-        .select(col("doc_id"), col("h").as("ch")), admIds, admDocs,
-      servedOf(l, t, admDocs.select("doc_id", "source", "text"),
-        dupRows.select("doc_id", "source", "text")),
-      mods.map(m => m.sigs -> storedSigs(admDocs, m.quarCol)), l)
     // docs that escaped the dup gates but landed in the quality window
     // RE-QUARANTINE under their NEW evidence class: their dup verdicts
     // are gone, and a low_quality row is what regateTick's model loop
@@ -1325,20 +1336,24 @@ object IngestLoop extends IngestLegOps {
     // supersedes the doc's dup rows in [[rejudgeable]] and keeps the
     // stored signatures (a later re-adjudication of a regate-readmitted
     // partner still has them); tick-keyed, so a replay overwrites it.
+    // RESOLVED = re-admitted (folded into the state): still-dup docs
+    // stay re-judgeable under their dup rows; quality-rejected docs stay
+    // re-judgeable under their new low_quality rows.
     val keep = (Seq("doc_id", "source", "text") ++ mods.map(_.quarCol))
       .map(col)
-    quar.rows.appendTickAt(t, v.filter(col("lq") === true)
-      .select("doc_id")
-      .join(dupRows.select(keep: _*), "doc_id")
-      .select(keep :+ lit("low_quality").as("verdict"): _*))
-    // RESOLVED = re-admitted (folded into the state above): still-dup
-    // docs stay re-judgeable under their dup rows; quality-rejected
-    // docs stay re-judgeable under their new low_quality rows.
-    quar.resolvedIds.appendTickAt(t,
-      v.filter(col("lq") === false).select("doc_id"))
-    // the re-adjudication's quality-windowed cohort is this tick's
-    // novel cohort
-    appendReplay(l, t, v, dupRows.select("doc_id", "text"))
+    val quarRows = Seq(
+      quar.rows -> v.filter(col("lq") === true).select("doc_id")
+        .join(dupRows.select(keep: _*), "doc_id")
+        .select(keep :+ lit("low_quality").as("verdict"): _*),
+      quar.resolvedIds -> admIds)
+    // the re-judged cohort is the batch for the curate winner rule, and
+    // its quality-windowed cohort is this tick's replay cohort
+    foldAdmitted(t, st.text, v.filter(col("lq") === false)
+        .select(col("doc_id"), col("h").as("ch")), admIds, admDocs,
+      servedOf(l, t, admDocs.select("doc_id", "source", "text"),
+        dupRows.select("doc_id", "source", "text")),
+      mods.map(m => m.sigs -> storedSigs(admDocs, m.quarCol)) ++ quarRows ++
+        replayRows(l, t, v, dupRows.select("doc_id", "text")), l)
     Provenance.readjReport(v,
       dupRows.select(col("doc_id"), col("verdict").as("verdict_t1")), ladder)
   }
@@ -1403,10 +1418,9 @@ object IngestLoop extends IngestLegOps {
     foldAdmitted(t, st.text, admDocs.select(col("doc_id"),
         Provenance.contentHash60(col("text")).as("ch")), admIds, admDocs,
       servedOf(l, t, admDocs, admDocs),
-      st.modalities.map(m => m.sigs -> storedSigs(admRows, m.quarCol)), l)
-    quar.rows.appendTickAt(t, rows.limit(0))
-    quar.resolvedIds.appendTickAt(t, admIds)
-    replay.feats.appendTickAt(t, feats.limit(0))
+      st.modalities.map(m => m.sigs -> storedSigs(admRows, m.quarCol)) ++
+        Seq(quar.rows -> rows.limit(0), quar.resolvedIds -> admIds,
+          replay.feats -> feats.limit(0)), l)
     val admSet = admIds.withColumnRenamed("doc_id", "aid")
     flipped
       .join(admSet, col("doc_id") === col("aid"), "left")

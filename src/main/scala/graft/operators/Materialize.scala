@@ -31,10 +31,12 @@ import org.apache.spark.sql.graftbridge.ExecBridge
   * has started, then waits only for tasks already running. So work on
   * the pool may submit and wait for more pool work (a pipeline chain
   * runs its report and publish as branches; a report runs its profile
-  * passes as branches): every wait is for a task some thread is
-  * running, and that task waits, if at all, only for tasks of its own,
-  * so no thread waits on itself and the pool bounds only how many
-  * threads help.
+  * passes as branches; an ingest tick runs its fold-back appends as
+  * branches, and a lineage fold its store compactions — a consumer
+  * index's fold among the branches of a quiesce): every wait is for a
+  * task some thread is running, and that task waits, if at all, only
+  * for tasks of its own, so no thread waits on itself and the pool
+  * bounds only how many threads help.
   *
   * A task run by a pool thread runs with the SUBMITTING thread's active
   * session and local properties (job group, description, scheduler
@@ -125,7 +127,8 @@ private[graft] object Materialize {
 
   /** Run independent branches of driver work concurrently — whole DAG
     * branches, each submitting its own jobs (the pipeline's chains, a
-    * chain's report and publish, a report's profile passes). Each
+    * chain's report and publish, a report's profile passes, a tick's
+    * fold-back appends, a lineage fold's compactions). Each
     * branch is a pool task; the caller then runs every branch no thread
     * has started and waits for the rest. A branch may itself call
     * `branches`. Every branch is waited for; only then is the first

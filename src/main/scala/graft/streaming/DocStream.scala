@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.io.IngestLoop
+import graft.io.{ArtifactStore, IngestLoop}
 import graft.operators.Provenance.Evidence
 
 /** Streaming deduplication over a document stream — the incremental
@@ -453,9 +453,9 @@ object DocStream {
           graft.operators.Provenance.corpusDocHashes(adm),
           adm.select("doc_id"), adm, served,
           sigs.map { case (m, s) => m.sigs ->
-            s.join(adm.select("doc_id"), Seq("doc_id"), "left_semi") },
+            s.join(adm.select("doc_id"), Seq("doc_id"), "left_semi") } ++
+            quarantineAppends(refined, legs, sigs),
           legs)
-        foldQuarantine(refined, stateTick + 1, legs, sigs)
       }
       .start()
   }
@@ -508,12 +508,13 @@ object DocStream {
       cur.select("doc_id", "text")
   }
 
-  /** The QUARANTINE fold (the q131 symmetry in streaming — rejected ≠
-    * discarded holds for stream arrivals too): each micro-batch's
-    * rejected docs land in the quarantine store under the same
-    * batch-id-keyed tick, with the stream verdicts mapped to the batch
-    * evidence classes ([[ladderVerdict]]) and, on a multimodal loop,
-    * the docs' batch signatures — so a quiesce-point re-adjudication
+  /** The QUARANTINE fold's appends, for the batch's one fold-back (the
+    * q131 symmetry in streaming — rejected ≠ discarded holds for stream
+    * arrivals too): each micro-batch's rejected docs land in the
+    * quarantine store under the same batch-id-keyed tick, with the
+    * stream verdicts mapped to the batch evidence classes
+    * ([[ladderVerdict]]) and, on a multimodal loop, the docs' batch
+    * signatures — so a quiesce-point re-adjudication
     * re-judges every evidence class without re-reading payloads. The
     * wire schema carries no `source` column, so quarantine rows carry
     * the literal 'stream'. A quiesce-point takedown then recovers
@@ -523,17 +524,15 @@ object DocStream {
     * [[graft.io.IngestLoop.rolloverQuarantine]], whose tick-1 re-seed
     * keeps the two bundles' tick agreements aligned (DocStreamSpec pins
     * the full boundary flow). */
-  private def foldQuarantine(refined: DataFrame, tick: Long,
-                             legs: IngestLoop.Legs,
-                             sigs: Seq[(IngestLoop.Modality, DataFrame)])
-      : Unit =
-    legs.quar.foreach { qs =>
+  private def quarantineAppends(refined: DataFrame, legs: IngestLoop.Legs,
+                                sigs: Seq[(IngestLoop.Modality, DataFrame)])
+      : Seq[(ArtifactStore.IngestStateStore, DataFrame)] =
+    legs.quar.toSeq.flatMap { qs =>
       val rej = refined.filter(col("verdict") =!= "new")
         .select(col("doc_id"), lit("stream").as("source"), col("text"),
           ladderVerdict(col("verdict")).as("verdict"))
-      qs.rows.appendTickAt(tick, IngestLoop.quarantineLayout(rej, sigs))
-      qs.resolvedIds.appendTickAt(tick,
-        refined.select("doc_id").limit(0))
+      Seq(qs.rows -> IngestLoop.quarantineLayout(rej, sigs),
+        qs.resolvedIds -> refined.select("doc_id").limit(0))
     }
 
   /** JSONL wire schema for a document drop directory. */

@@ -1,6 +1,11 @@
 package graft.io
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
 
 import graft.TestSpark
 import graft.operators.{CurateTick, Provenance, QualityModel}
@@ -46,31 +51,59 @@ class TickAgreementSpec extends AnyFunSuite {
       (st.all ++ Seq(quar.rows, quar.resolvedIds, replay.feats,
         cen.store) ++
         (if (withMix) Seq(mix.store) else Nil)).map(_.maxTick)
+    /** Every store of the loop, the tombstones included. */
+    def stores: Seq[ArtifactStore.IngestStateStore] =
+      st.all ++ Seq(st.text.tombs, quar.rows, quar.resolvedIds,
+        replay.feats, cen.store, mix.store)
+    /** Every store's rows, sorted. */
+    def state: Seq[Seq[String]] =
+      stores.map(_.current().fold(Seq.empty[String])(sorted))
   }
+
+  private def sorted(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** The stores and legs of loop `name` under `root`, as they are. */
+  private def open(root: String, name: String, mm: Boolean = false): Loop =
+    new Loop(
+      if (mm) IngestLoop.mmStores(spark, root, name)
+      else IngestLoop.stores(spark, root, name),
+      IngestLoop.quarantine(spark, root, name),
+      IngestLoop.replayLeg(spark, root, name),
+      ArtifactStore.gramCensusIncremental(spark, root, s"${name}_cen",
+        k = CurateTick.DefaultStripK),
+      ArtifactStore.mixIncremental(spark, root, name))
 
   private def build(root: String, name: String, mm: Boolean = false,
                     corpus: DataFrame = corpus): Loop = {
-    val st: IngestLoop.StoreSet =
-      if (mm) {
-        val s = IngestLoop.mmStores(spark, root, name)
-        IngestLoop.bootstrap(s, corpus)
-        s
-      } else {
-        val s = IngestLoop.stores(spark, root, name)
-        IngestLoop.bootstrap(s, corpus)
-        s
-      }
-    val quar = IngestLoop.quarantine(spark, root, name)
-    IngestLoop.bootstrapQuarantine(st, quar, corpus)
-    val replay = IngestLoop.replayLeg(spark, root, name)
-    IngestLoop.bootstrapReplay(replay, corpus)
-    val cen = ArtifactStore.gramCensusIncremental(spark, root, s"${name}_cen",
-      k = CurateTick.DefaultStripK)
-    cen.bootstrap(corpus)
-    val mix = ArtifactStore.mixIncremental(spark, root, name)
-    mix.bootstrap(corpus)
-    new Loop(st, quar, replay, cen, mix)
+    val l = open(root, name, mm)
+    IngestLoop.bootstrap(l.st, corpus)
+    IngestLoop.bootstrapQuarantine(l.st, l.quar, corpus)
+    IngestLoop.bootstrapReplay(l.replay, corpus)
+    l.cen.bootstrap(corpus)
+    l.mix.bootstrap(corpus)
+    l
   }
+
+  /** sf0.001's corpus, batch and weights, for the crash tests. */
+  private lazy val small = {
+    val d = docsOf("/root/testdata/sf0.001")
+    val isB = pmod(col("doc_id"), lit(Provenance.BatchMod)) === 0
+    val corp = d.filter(!isB)
+    (corp, d.filter(isB),
+      QualityModel.weights(corp, scope = s"admission${Provenance.BatchMod}"))
+  }
+
+  /** One ingest tick of `l` with the census, mix, quarantine and replay
+    * legs attached; its report's rows, sorted. */
+  private def tickOf(l: Loop): Seq[String] = {
+    val (_, bat, w) = small
+    sorted(IngestLoop.runTick(l.st.asInstanceOf[IngestLoop.Stores], bat, w,
+      legs = l.legs(withMix = true)))
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(20).toSeq
 
   private def takedownOf(l: Loop): DataFrame =
     l.st.text.hashes.current().get.select("doc_id")
@@ -144,9 +177,7 @@ class TickAgreementSpec extends AnyFunSuite {
   private def refusedBeforeAnyMove(l: Loop,
                                    extra: ArtifactStore.IngestStateStore*)(
       refused: => Any): Unit = {
-    val stores = l.st.all ++ Seq(l.st.text.tombs, l.quar.rows,
-      l.quar.resolvedIds, l.replay.feats, l.cen.store,
-      l.mix.store) ++ extra
+    val stores = l.stores ++ extra
     val before = stores.map(_.maxTick)
     intercept[IllegalArgumentException](refused)
     assert(stores.map(_.maxTick) === before,
@@ -233,7 +264,6 @@ class TickAgreementSpec extends AnyFunSuite {
     val legs = l.legs(withMix = true)
     IngestLoop.runTick(l.st.asInstanceOf[IngestLoop.Stores], batch, weights,
       legs = legs).collect()
-    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     def counts = (sorted(l.cen.read()), sorted(l.mix.read()))
     // the ids outlive the compaction, which folds them out of the state
     val ids = takedownOf(l).localCheckpoint()
@@ -258,11 +288,8 @@ class TickAgreementSpec extends AnyFunSuite {
   }
 
   test("a takedown that failed after its subtraction legs re-runs to the clean result: census and mix subtract once, stores at the clean tick") {
-    val small = docsOf("/root/testdata/sf0.001")
-    val isB = pmod(col("doc_id"), lit(Provenance.BatchMod)) === 0
-    val (corp, bat) = (small.filter(!isB), small.filter(isB))
-    val w = QualityModel.weights(corp,
-      scope = s"admission${Provenance.BatchMod}")
+    val (corp, bat, w) = small
+    val all = corp.union(bat)
     val root = Files.createTempDirectory("graft_agree_rerun").toString
     def run(name: String)(takedown: (Loop, IngestLoop.Legs) => Unit)
         : (Seq[String], Seq[String], Seq[Long]) = {
@@ -271,11 +298,10 @@ class TickAgreementSpec extends AnyFunSuite {
       IngestLoop.runTick(l.st.asInstanceOf[IngestLoop.Stores], bat, w,
         legs = legs).collect()
       takedown(l, legs)
-      def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
       (sorted(l.cen.read()), sorted(l.mix.read()), l.ticks(withMix = true))
     }
     val clean = run("clean") { (l, legs) =>
-      IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
+      IngestLoop.retractTick(l.st, takedownOf(l), Some(all), legs)
     }
     // the unlearn of a model store never bootstrapped fails the first
     // run after its tombstones landed; the re-run goes without the
@@ -283,13 +309,13 @@ class TickAgreementSpec extends AnyFunSuite {
     def failed(l: Loop, legs: IngestLoop.Legs): Unit = {
       val model = ArtifactStore.modelStore(spark, root, "never_bootstrapped")
       intercept[IllegalArgumentException] {
-        IngestLoop.retractTick(l.st, takedownOf(l), Some(small),
+        IngestLoop.retractTick(l.st, takedownOf(l), Some(all),
           legs.copy(model = Some(model)))
       }
     }
     val rerun = run("rerun") { (l, legs) =>
       failed(l, legs)
-      IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
+      IngestLoop.retractTick(l.st, takedownOf(l), Some(all), legs)
     }
     // a compaction between the failure and the re-run is refused: its
     // fold would drop the docs from the state before the census and mix
@@ -303,7 +329,7 @@ class TickAgreementSpec extends AnyFunSuite {
     val refused = run("refused") { (l, legs) =>
       failed(l, legs)
       refusedRun(l)(IngestLoop.compactIfNeeded(l.st, 0L, legs))
-      IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
+      IngestLoop.retractTick(l.st, takedownOf(l), Some(all), legs)
       assert(IngestLoop.compactIfNeeded(l.st, 0L, legs) &&
         l.st.text.tombs.current().isEmpty,
         "once the takedown finished, the compaction folds and clears")
@@ -316,7 +342,7 @@ class TickAgreementSpec extends AnyFunSuite {
       failed(l, legs)
       refusedRun(l)(IngestLoop.runTick(st, bat, w, legs = legs))
       refusedRun(l)(IngestLoop.readjudicateTick(st, l.quar, w, legs = legs))
-      IngestLoop.retractTick(l.st, takedownOf(l), Some(small), legs)
+      IngestLoop.retractTick(l.st, takedownOf(l), Some(all), legs)
     }
     for ((what, r) <- Seq("re-run" -> rerun, "re-run after a refused " +
         "compaction" -> refused, "re-run after refused ticks" -> refusedTicks)) {
@@ -342,5 +368,99 @@ class TickAgreementSpec extends AnyFunSuite {
     IngestLoop.readjudicateTick(st, l.quar, w, legs = legs).collect()
     assert(ticks.distinct === Seq(k),
       s"the re-adjudication must redo the takedown's tick: $ticks")
+  }
+
+  test("a failed fold-back append is rethrown only after its sibling appends landed, and the re-run tick reaches the clean state") {
+    val (corp, bat, _) = small
+    val root = Files.createTempDirectory("graft_agree_failed").toString
+    val clean = build(s"$root/clean", "failed", corpus = corp)
+    val report = tickOf(clean)
+    val l = build(s"$root/failed", "failed", corpus = corp)
+    val st = l.st.asInstanceOf[IngestLoop.Stores]
+    // a hashes frame whose write fails when it executes
+    val boom = udf { (ch: Long) =>
+      if (ch != Long.MinValue) throw new IllegalStateException("append failed")
+      ch
+    }
+    val hashes = Provenance.corpusDocHashes(bat)
+      .withColumn("ch", boom(col("ch")))
+    val e = intercept[Exception] {
+      IngestLoop.foldAdmitted(2L, st, hashes, bat.select("doc_id"), bat, bat,
+        Nil, l.legs(withMix = true))
+    }
+    assert(causes(e).exists(c => String.valueOf(c.getMessage)
+      .contains("append failed")), s"the append's own failure surfaces: $e")
+    assert(st.hashes.maxTick === 1L, "the failed append did not land")
+    assert(Seq(st.bands, st.shingles, l.cen.store, l.mix.store)
+      .map(_.maxTick) === Seq(2L, 2L, 2L, 2L),
+      "every sibling append landed before the failure was rethrown")
+    assert(tickOf(l) === report, "the re-run tick reports as a clean one")
+    assert(l.state === clean.state,
+      "the re-run tick leaves every store as a clean one")
+  }
+
+  test("a tick whose fold-back landed any subset of its writes re-runs to the clean state: every store but one, or only one") {
+    val (corp, _, _) = small
+    val root = Files.createTempDirectory("graft_agree_subset").toString
+    val clean = build(s"$root/clean", "subset", corpus = corp)
+    val report = tickOf(clean)
+    val want = clean.state
+    // the tick's writes: each store's tick=2 directory
+    val base = Paths.get(s"$root/clean")
+    val written = {
+      val w = Files.walk(base)
+      try w.iterator().asScala.filter(_.getFileName.toString == "tick=2")
+        .map(base.relativize(_).toString).toVector.sorted
+      finally w.close()
+    }
+    assert(written.size === 8, s"precondition: one write per store: $written")
+    for (k <- written; onlyK <- Seq(false, true)) {
+      val dir = s"$root/${written.indexOf(k)}_$onlyK"
+      FileUtils.copyDirectory(base.toFile, new File(dir))
+      (if (onlyK) written.filterNot(_ == k) else Seq(k))
+        .foreach(d => FileUtils.deleteDirectory(new File(dir, d)))
+      val l = open(dir, "subset")
+      val what = if (onlyK) s"only $k landed" else s"every write but $k landed"
+      assert(tickOf(l) === report, s"$what: the re-run reports as a clean tick")
+      assert(l.state === want, s"$what: the re-run leaves every store clean")
+    }
+  }
+
+  test("a failed lineage fold commits the other stores' generations and keeps the tombstones; its re-run completes and clears them") {
+    val (corp, bat, _) = small
+    val root = Files.createTempDirectory("graft_agree_fold").toString
+    val l = build(root, "fold", corpus = corp)
+    val legs = l.legs(withMix = true)
+    tickOf(l)
+    val k = IngestLoop.retractTick(l.st, takedownOf(l),
+      Some(corp.union(bat)), legs)
+    val lineage = l.st.text.lineage
+    val folded = legs.lineage(l.st.all)
+    def reads(ss: Seq[ArtifactStore.IngestStateStore]) =
+      ss.map(s => sorted(lineage.resolve(s.current().get)))
+    val before = reads(folded)
+    // a corrupt data file in the hashes store's newest tick fails its fold
+    val dir = s"$root/ingest_state/fold"
+    val bad = new File(s"$dir/hashes/tick=$k", "part-99999-corrupt.parquet")
+    Files.write(bad.toPath, "not parquet".getBytes)
+    intercept[Exception](IngestLoop.compactIfNeeded(l.st, 0L, legs))
+    def committed(n: String) = new File(s"$dir/$n/gen=$k/_SUCCESS").exists
+    assert(!committed("hashes"), "the failed fold committed nothing")
+    for (n <- Seq("bands", "shingles", "quar_rows", "quar_resolved",
+        "gate_feats"))
+      assert(committed(n), s"$n committed its generation gen=$k")
+    assert(reads(folded.tail) === before.tail,
+      "the folded stores read as before")
+    assert(l.st.text.tombs.maxTick === k &&
+      l.st.text.tombs.current().exists(!_.isEmpty),
+      "a failed fold keeps the tombstones")
+    Files.delete(bad.toPath)
+    assert(IngestLoop.compactIfNeeded(l.st, 0L, legs),
+      "the re-run fold runs")
+    assert(l.st.text.tombs.current().isEmpty,
+      "once every store folded, the tombstones are cleared")
+    assert(reads(folded) === before, "every store reads as before the fold")
+    assert(folded.map(s => sorted(s.current().get)) === before,
+      "the tombstones are baked into every store")
   }
 }
